@@ -1,8 +1,7 @@
-"""Band-math functions (C9/C10/C11) — element-wise column algebra.
+"""Band-math functions (C9/C11) — element-wise column algebra.
 
 The reference operates on NumPy band arrays behind GDAL; here a "band" is a
-numeric column (cell-level long format) or an ``array<double>`` column
-(row-per-scene packed format); both forms are provided.
+numeric column (cell-level long format).
 """
 
 from __future__ import annotations
@@ -12,15 +11,6 @@ from pyspark.sql import functions as F
 
 # C11 — destination nodata by output type (/root/reference/lib/ortho_functions.py:308-313)
 DST_NODATA = {"Byte": 0.0, "UInt16": 65535.0, "Float32": -9999.0}
-
-# C10 — int widening for median-subtract (/root/reference/pgc_mosaic_build_tile.py:234-319)
-SUBTRACT_WIDEN = {
-    "Byte": ("Int16", -32768.0),
-    "UInt16": ("Int16", -32768.0),
-    "Int16": ("Int16", -32768.0),
-    "UInt32": ("Int32", -2147483648.0),
-    "Int32": ("Int32", -2147483648.0),
-}
 
 
 def ndvi_col(nir: Column, red: Column, nodata: Column | float | None = None,
@@ -33,34 +23,3 @@ def ndvi_col(nir: Column, red: Column, nodata: Column | float | None = None,
         nd = nodata if isinstance(nodata, Column) else F.lit(float(nodata))
         masked = masked | (nir == nd) | (red == nd)
     return F.when(~masked, (nir - red) / s)
-
-
-def ndvi_int16_col(nir: Column, red: Column, **kw) -> Column:
-    """Int16 output mode scales x1000 (/root/reference/pgc_ndvi.py:441-448);
-    masked cells get the Int16 nodata -32768."""
-    v = ndvi_col(nir, red, **kw)
-    return F.coalesce(F.round(v * 1000).cast("smallint"),
-                      F.lit(-32768).cast("smallint"))
-
-
-def ndvi_array_col(nir: Column, red: Column) -> Column:
-    """Packed form: element-wise over two array<double> band columns."""
-    return F.zip_with(
-        nir, red,
-        lambda n, r: F.when(F.abs(n + r) >= 1e-5, (n - r) / (n + r)),
-    )
-
-
-def band_subtract_median_col(value: Column, median: Column, src_type: str) -> Column:
-    """C10 — value - median with int widening + nodata, faithful to
-    BandSubtractMedian: output dtype and nodata depend on the source type;
-    out-of-range results clamp to the widened type's nodata."""
-    widened, nodata = SUBTRACT_WIDEN[src_type]
-    out = value - median
-    lo, hi = (-32768.0, 32767.0) if widened == "Int16" else (-2147483648.0, 2147483647.0)
-    t = "smallint" if widened == "Int16" else "int"
-    return (
-        F.when(value.isNull(), F.lit(nodata))
-        .when((out < lo) | (out > hi), F.lit(nodata))
-        .otherwise(out)
-    ).cast(t)

@@ -50,13 +50,6 @@ def punct_ratio_col(text: Column) -> Column:
     return F.when(nonspace > 0, punct / nonspace).otherwise(F.lit(0.0))
 
 
-def stopword_ratio_col(text: Column, lang: str = "en") -> Column:
-    toks = tokens_col(F.lower(text))
-    hits = F.size(F.array_intersect(F.array_distinct(toks),
-                                    F.array(*[F.lit(w) for w in STOPWORDS[lang]])))
-    return F.when(F.size(toks) > 0, hits / F.lit(float(len(STOPWORDS[lang])))).otherwise(F.lit(0.0))
-
-
 def quality_score_col(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + punctuation sanity +
     mean-word-length band. Deterministic closed-form (oracle-friendly)."""

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_col, tokens_col
+from ..functions.text import tokens_col
 from ..sources.tables import spread_small_input
 
 # Deterministic hash family h_i(x) = (a_i * x + b_i) mod p over a Mersenne-31
@@ -132,15 +132,6 @@ def exact_dedup(df: DataFrame, content: str = "text", key: str = "doc_id") -> Da
     )
 
 
-def fingerprint_dedup(df: DataFrame, content: str = "text", key: str = "doc_id") -> DataFrame:
-    return (
-        df.withColumn("_fp", fingerprint_col(F.col(content)))
-        .groupBy("_fp")
-        .agg(F.min(key).alias(key), F.count("*").alias("n_members"))
-        .withColumnRenamed("_fp", "fingerprint")
-    )
-
-
 # ---------------------------------------------------------------- shingles / minhash
 
 
@@ -213,29 +204,6 @@ def _min_sigs(hset: set[int], a: np.ndarray, b: np.ndarray) -> list[int]:
     one (k x n) matrix op (a, b pre-shaped (k, 1))."""
     h = np.fromiter(hset, dtype=np.int64, count=len(hset))
     return ((a * h[None, :] + b) % _P).min(axis=1).tolist()
-
-
-def minhash_signature_udf(k: int = 64, seed: int = 42, n_gram: int = 3):
-    """Arrow-batched numpy minhash straight from text: crc32 shingle hashes,
-    then min over (a_i*h+b_i) mod p as one (k x n) matrix op per row.
-
-    ~20x faster than the column-expression form: Spark's higher-order array
-    functions execute interpreted (no whole-stage codegen), so per-element
-    lambda costs dominate there; here the inner loops are C.
-    """
-    a, b = _hash_family(k, seed)
-    a = a[:, None]
-    b = b[:, None]
-
-    @F.pandas_udf("array<long>")
-    def _sig(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            hset = _shingle_hash_set(t, n_gram)
-            out.append(None if hset is None else _min_sigs(hset, a, b))
-        return pd.Series(out)
-
-    return _sig
 
 
 def jaccard_col(a: Column, b: Column) -> Column:
@@ -366,20 +334,6 @@ def minhash_lsh_pairs(
         .select("key_a", "key_b",
                 jaccard_np_udf()(F.col("_sh_a"), F.col("_sh_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, pair_on: Column, content: str = "text", key: str = "doc_id",
-    n_gram: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit pairing (no LSH) — used by the
-    oracle-checked near-dup query (pairs = consecutive keys)."""
-    a = df.select(F.col(key).alias("key_a"), shingles_col(F.col(content), n_gram).alias("_a"))
-    b = df.select(F.col(key).alias("key_b"), shingles_col(F.col(content), n_gram).alias("_b"))
-    return (
-        a.join(b, pair_on)
-        .select("key_a", "key_b", jaccard_col(F.col("_a"), F.col("_b")).alias("jaccard"))
     )
 
 

@@ -1,5 +1,5 @@
 """R1 — raster->vector exact trimmed footprint (``GetExactTrimmedGeom``,
-/root/reference/lib/mosaic.py:911-981) as a grouped-map operator.
+reference ``lib/mosaic.py:911-981``) over a cell-occupancy grid.
 
 Reference semantics, faithfully reproduced over a cell-occupancy grid instead
 of raster scanlines:
@@ -14,6 +14,14 @@ of raster scanlines:
 * Douglas-Peucker simplification with ``tolerance`` (OGR ``Simplify``) —
   reimplemented here (pure numpy) since footprints are open staircase rings.
 
+The ring depends only on the first and last occupied column of each grid row,
+so the Spark operator never ships points to Python: the JVM tags every point
+with its grid cell and reduces the points to one ``(row, first col, last col)``
+extent per occupied row, collected into one array per group; a single
+``mapInPandas`` pass then builds the ring of every group in a batch.
+``trimmed_footprint_from_grid`` feeds the same ring code (``_ring``) from a
+NumPy occupancy matrix.
+
 In the webtext graft a "scene" is a page strip and "pixels with data" are the
 grid cells the strip's pages occupy — the raster->vector semantics carry over
 unchanged (footprint-of-occupancy).
@@ -27,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import pl2xy
+from .spatial_join import cell_xy
 
 
 def _dp_simplify(pts: np.ndarray, tol: float) -> np.ndarray:
@@ -55,21 +64,34 @@ def _dp_simplify(pts: np.ndarray, tol: float) -> np.ndarray:
     return pts[keep]
 
 
+def _ring(lines: np.ndarray, first: np.ndarray, last: np.ndarray, gtf,
+          step: int, tolerance: float) -> np.ndarray:
+    """Ring vertices (N, 2) from per-row extents: ``lines`` are the ascending
+    line indices of the rows with data, ``first``/``last`` their first and
+    last occupied column, all in the pixel frame of ``gtf``."""
+    if step < 1:
+        raise ValueError(f"step must be >= 1, got {step}")
+    keep = lines % step == 0
+    lines, first, last = lines[keep], first[keep], last[keep]
+    if lines.size == 0:
+        return np.empty((0, 2))
+    p = np.concatenate((last + 1, first[::-1])).astype(np.float64)
+    line = np.concatenate((lines, lines[::-1])).astype(np.float64)
+    x, y = pl2xy(gtf, p, line)
+    return _dp_simplify(np.column_stack((x, y)), tolerance)
+
+
 def trimmed_footprint_from_grid(occ: np.ndarray, gtf, step: int = 4,
                                 tolerance: float = 1.0) -> np.ndarray:
     """occ: 2-D bool occupancy (rows = lines). Returns ring vertices (N,2)."""
-    pixelst, pixelsb = [], []
-    for line in range(0, occ.shape[0], step):
-        nz = np.flatnonzero(occ[line])
-        if nz.size > 0:
-            pixelst.append((int(nz[-1]) + 1, line))
-            pixelsb.append((int(nz[0]), line))
-    pixelsb.reverse()
-    pixels = pixelst + pixelsb
-    if not pixels:
+    occ = np.asarray(occ, dtype=bool)
+    lines = np.flatnonzero(occ.any(axis=1))
+    if lines.size == 0:
         return np.empty((0, 2))
-    pts = np.asarray([pl2xy(gtf, p, l) for p, l in pixels], dtype=np.float64)
-    return _dp_simplify(pts, tolerance)
+    rows = occ[lines]
+    first = rows.argmax(axis=1)
+    last = occ.shape[1] - 1 - rows[:, ::-1].argmax(axis=1)
+    return _ring(lines, first, last, gtf, step, tolerance)
 
 
 TRIMMED_SCHEMA = "group_id string, footprint_wkt string, n_vertices int"
@@ -85,37 +107,58 @@ def trimmed_footprints(
     lat: str = "lat",
 ) -> DataFrame:
     """Per-group staircase footprint polygon from occupied grid cells.
-    groupBy(group).applyInPandas — parallel across groups like the
-    reference's per-image fan-out."""
+
+    Rows whose ``lon`` or ``lat`` is null or NaN are dropped (a NaN
+    would otherwise clip to the cell at -180/-90 and add a vertex there); a
+    group with no valid point yields no row. The JVM does all per-point work:
+    ``groupBy(group, row) -> min/max col``, then ``groupBy(group)`` collects
+    the row extents north to south (at most ``2^res`` per group). One
+    ``mapInPandas`` pass builds the rings of a whole batch of groups —
+    parallel across groups like the reference's per-image fan-out."""
     n = 1 << res
     cw, ch = 360.0 / n, 180.0 / n
+    lon_c, lat_c = F.col(lon), F.col(lat)
+    gx, gy = cell_xy(lon_c, lat_c, res)
+    valid = lon_c.isNotNull() & lat_c.isNotNull() & ~F.isnan(lon_c) & ~F.isnan(lat_c)
+    # an invalid point gets a null column, which min/max skip, and a row with
+    # no valid point is dropped after the reduction. A filter on ``valid``
+    # would be pushed below the caller's projections and re-evaluate the
+    # expressions behind lon/lat once per predicate.
+    extents = (
+        points.select(F.col(group_col), gy.cast("int").alias("_gy"),
+                      F.when(valid, gx).cast("int").alias("_gx"))
+        .groupBy(group_col, "_gy")
+        .agg(F.min("_gx").alias("_lo"), F.max("_gx").alias("_hi"))
+        .filter(F.col("_lo").isNotNull())
+        .groupBy(group_col)
+        .agg(F.sort_array(F.collect_list(F.struct("_gy", "_lo", "_hi")), asc=False)
+             .alias("_rows"))
+        .select(F.col(group_col).alias("group_id"), F.col("_rows._gy").alias("gy"),
+                F.col("_rows._lo").alias("lo"), F.col("_rows._hi").alias("hi"))
+    )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = str(pdf[group_col].iloc[0])
-        x = np.clip(((pdf[lon].values + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-        y = np.clip(((pdf[lat].values + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
-        x0, x1 = int(x.min()), int(x.max())
-        y0, y1 = int(y.min()), int(y.max())
-        occ = np.zeros((y1 - y0 + 1, x1 - x0 + 1), dtype=bool)
-        occ[y.astype(int) - y0, x.astype(int) - x0] = True
-        # gdal-style geotransform anchored at the occupancy window's top-left
-        # (lines run north->south, so row 0 = max lat edge)
-        gtf = (
-            -180.0 + x0 * cw,  # origin x
-            cw,                # pixel width
-            0.0,
-            -90.0 + (y1 + 1) * ch,  # origin y (top edge)
-            0.0,
-            -ch,               # pixel height (negative, north-up)
-        )
-        ring = trimmed_footprint_from_grid(occ[::-1], gtf, step=step, tolerance=tolerance)
-        if len(ring) == 0:
-            wkt = None
-        else:
-            pts = ", ".join(f"{a:.16f} {b:.16f}" for a, b in ring)
-            first = f"{ring[0][0]:.16f} {ring[0][1]:.16f}"
-            wkt = f"POLYGON (( {pts}, {first} ))"
-        return pd.DataFrame({"group_id": [gid], "footprint_wkt": [wkt],
-                             "n_vertices": [len(ring)]})
+    def run(batches):
+        for pdf in batches:
+            wkts, counts = [], []
+            for ys, lo, hi in zip(pdf["gy"], pdf["lo"], pdf["hi"]):
+                y1, x0 = int(ys[0]), int(lo.min())
+                # gdal-style geotransform anchored at the occupancy window's
+                # top-left (lines run north->south, so line 0 = max lat edge)
+                gtf = (
+                    -180.0 + x0 * cw,  # origin x
+                    cw,                # pixel width
+                    0.0,
+                    -90.0 + (y1 + 1) * ch,  # origin y (top edge)
+                    0.0,
+                    -ch,               # pixel height (negative, north-up)
+                )
+                # line 0 always has data, so the ring is never empty
+                ring = _ring(y1 - ys, lo - x0, hi - x0, gtf, step, tolerance).tolist()
+                pts = ", ".join(f"{a:.16f} {b:.16f}" for a, b in ring)
+                first = f"{ring[0][0]:.16f} {ring[0][1]:.16f}"
+                wkts.append(f"POLYGON (( {pts}, {first} ))")
+                counts.append(len(ring))
+            yield pd.DataFrame({"group_id": [str(g) for g in pdf["group_id"]],
+                                "footprint_wkt": wkts, "n_vertices": counts})
 
-    return points.groupBy(group_col).applyInPandas(run, schema=TRIMMED_SCHEMA)
+    return extents.mapInPandas(run, schema=TRIMMED_SCHEMA)

@@ -89,12 +89,12 @@ class LineageStore:
         local = (self.lineage_path.split("://", 1)[1]
                  if scheme == "file" else self.lineage_path)
         os.makedirs(local, exist_ok=True)
-        final = os.path.join(local,
-                             f"commit-{int(now * 1000)}-{run_id}.parquet")
+        # the uuid keeps two commits of one run_id in one millisecond apart
+        name = f"commit-{int(now * 1000)}-{run_id}-{uuid.uuid4().hex}"
+        final = os.path.join(local, f"{name}.parquet")
         # dot-prefix: Spark's file index skips hidden files, so a crashed
         # half-written temp can never be read as a commit
-        tmp = os.path.join(local,
-                           f".commit-{int(now * 1000)}-{run_id}.inprogress")
+        tmp = os.path.join(local, f".{name}.inprogress")
         pq.write_table(table, tmp)
         os.replace(tmp, final)  # readers never see a partial commit
         return run_id

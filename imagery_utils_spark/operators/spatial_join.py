@@ -33,14 +33,20 @@ from ..core import geom as G
 # ---------------------------------------------------------------- cell tagging
 
 
+def cell_xy(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """Grid column and row ``clip(floor(...), 0, 2^res - 1)`` of a point."""
+    n = 1 << res
+    x = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((lon + 180.0) / 360.0 * n)))
+    y = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((lat + 90.0) / 180.0 * n)))
+    return x, y
+
+
 def cell_col(lon: Column, lat: Column, res: int) -> Column:
     """Linear cell id ``y * 2^res + x`` — identical to
     core.cells.lonlat_to_linear, but closed-form column arithmetic
     (SQL-expressible, oracle-checkable, codegen-friendly)."""
-    n = 1 << res
-    x = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((lon + 180.0) / 360.0 * n)))
-    y = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((lat + 90.0) / 180.0 * n)))
-    return (y * n + x).cast("long")
+    x, y = cell_xy(lon, lat, res)
+    return (y * (1 << res) + x).cast("long")
 
 
 def cell_sql(lon: str, lat: str, res: int) -> str:

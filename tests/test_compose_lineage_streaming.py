@@ -1,4 +1,5 @@
 import os
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +93,20 @@ def test_resumable_stage(spark, tmp_path):
     assert processed[-1] == ["u1", "u2", "u3"]
     stats = store.runtime_stats().collect()
     assert any(r.stage == "stage_a" for r in stats)
+
+
+def test_commit_units_same_run_same_millisecond(spark, tmp_path, monkeypatch):
+    # two commits with one run_id inside one (frozen) millisecond must both
+    # stay visible: neither may overwrite the other's file
+    from imagery_utils_spark.operators import lineage as LN
+
+    monkeypatch.setattr(LN, "time", types.SimpleNamespace(time=lambda: 1_700_000_000.0))
+    store = LineageStore(spark, str(tmp_path / "ice"))
+    store.commit_units("stage_a", [("u1", 3)], run_id="r1")
+    store.commit_units("stage_a", [("u2", 5)], run_id="r1")
+    done = sorted((r.unit_id, r.n_rows) for r in store.completed_units("stage_a").collect())
+    assert done == [("u1", 3), ("u2", 5)]
+    assert not [f for f in os.listdir(store.lineage_path) if f.endswith(".inprogress")]
 
 
 # --------------------------------------------------------------- streaming

@@ -60,3 +60,76 @@ def test_spark_trimmed_footprints_contains_points(spark):
         assert inside.mean() > 0.95  # boundary cells may clip edge points
         # area sane: within the jitter bbox (6 x 4 deg) + one cell padding
         assert polygon_area(coords, offsets) < 6.5 * 4.5 * 1.6
+
+
+def test_null_nan_coordinates_dropped(spark):
+    # a NaN cast to a grid cell clips to cell 0, which would add a vertex at
+    # -180/-90; null/NaN rows are dropped, and an all-invalid group is gone
+    nan = float("nan")
+    rows = [("a", 1.0, 1.0), ("a", None, 1.0), ("a", nan, 2.0), ("a", 3.0, nan),
+            ("a", 2.0, None), ("b", None, None), ("c", nan, nan)]
+    df = spark.createDataFrame(rows, "g string, lon double, lat double")
+    got = {r.group_id: (r.footprint_wkt, r.n_vertices)
+           for r in trimmed_footprints(df, "g", res=11).collect()}
+    clean = spark.createDataFrame([("a", 1.0, 1.0)], "g string, lon double, lat double")
+    want = {r.group_id: (r.footprint_wkt, r.n_vertices)
+            for r in trimmed_footprints(clean, "g", res=11).collect()}
+    assert got == want
+    assert "-180" not in got["a"][0] and "-90" not in got["a"][0]
+
+
+def _strip_points():
+    rng = np.random.default_rng(17)
+    rows = []
+    for g in range(40):
+        clon, clat = rng.uniform(-170, 170), rng.uniform(-80, 80)
+        w, h = rng.uniform(0.05, 6), rng.uniform(0.05, 4)
+        for _ in range(int(rng.integers(2, 120))):
+            rows.append((f"s{g:02d}", float(clon + rng.uniform(-w, w)),
+                         float(clat + rng.uniform(-h, h))))
+    # clip edges: the world's corners and points beyond them
+    rows += [("edge", 180.0, 90.0), ("edge", -180.0, -90.0), ("edge", 179.99, -89.99),
+             ("edge", 200.0, 95.0), ("edge", -181.0, 0.0)]
+    rows.append(("single", 12.345, -6.789))
+    return rows
+
+
+def _footprints_from_grid(rows, res, step, tolerance):
+    """Expected operator output: per group, the NumPy occupancy matrix of
+    its points (north-up) through trimmed_footprint_from_grid."""
+    n = 1 << res
+    cw, ch = 360.0 / n, 180.0 / n
+    groups = {}
+    for g, lon, lat in rows:
+        groups.setdefault(g, []).append((lon, lat))
+    out = {}
+    for g, pts in groups.items():
+        lon, lat = np.asarray(pts).T
+        x = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+        y = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
+        x0, x1, y0, y1 = int(x.min()), int(x.max()), int(y.min()), int(y.max())
+        occ = np.zeros((y1 - y0 + 1, x1 - x0 + 1), dtype=bool)
+        occ[y1 - y, x - x0] = True
+        gtf = (-180.0 + x0 * cw, cw, 0.0, -90.0 + (y1 + 1) * ch, 0.0, -ch)
+        ring = trimmed_footprint_from_grid(occ, gtf, step=step, tolerance=tolerance)
+        pts_txt = ", ".join(f"{a:.16f} {b:.16f}" for a, b in ring)
+        out[g] = (f"POLYGON (( {pts_txt}, {ring[0][0]:.16f} {ring[0][1]:.16f} ))", len(ring))
+    return out
+
+
+@pytest.fixture(scope="module")
+def strip_points(spark):
+    rows = _strip_points()
+    df = spark.createDataFrame(rows, "sid string, lon double, lat double").cache()
+    yield rows, df
+    df.unpersist()
+
+
+@pytest.mark.parametrize("res", [6, 8, 11])
+@pytest.mark.parametrize("step,tolerance", [(1, 0.0), (3, 0.0), (1, 0.3), (4, 1.0)])
+def test_trimmed_footprints_match_grid(strip_points, res, step, tolerance):
+    rows, df = strip_points
+    got = {r.group_id: (r.footprint_wkt, r.n_vertices)
+           for r in trimmed_footprints(df, "sid", res=res, step=step,
+                                       tolerance=tolerance).collect()}
+    assert got == _footprints_from_grid(rows, res, step, tolerance)
