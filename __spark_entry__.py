@@ -7753,6854 +7753,6 @@ def q_haar_wavelet(spark, sf_dir) -> DataFrame:
             .orderBy("event_type", "level", "j"))
 
 
-def q_symspell_pairs(spark, sf_dir) -> DataFrame:
-    """SymSpell-style fuzzy vocabulary pairing — deletion-neighborhood
-    blocking (each token joins on itself + every single-character
-    deletion, generated as PURE JVM array algebra) followed by an
-    exact levenshtein ≤ 1 filter: the spell-correction/dedup candidate
-    pipeline whose COMPLETENESS (no lev≤1 pair escapes the blocking)
-    is the theorem under test. Oracle: brute-force all-pairs
-    levenshtein over the same vocabulary — DuckDB's independent edit-
-    distance implementation."""
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.filter(
-        F.split(F.lower("text"), " "), lambda x: x != "")).alias("tok"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    wv = Window.orderBy(F.desc("c"), "tok")
-    vocab = (freq.withColumn("r", F.row_number().over(wv))
-             .filter(F.col("r") <= 300).select("tok"))
-    variants = vocab.select(
-        "tok",
-        F.explode(F.array_union(
-            F.array(F.col("tok")),
-            F.expr("transform(sequence(1, length(tok)), i -> "
-                   "concat(substr(tok, 1, i - 1), "
-                   "substr(tok, i + 1, length(tok))))")))
-        .alias("v"))
-    a = variants.select(F.col("tok").alias("ta"), "v")
-    b = variants.select(F.col("tok").alias("tb"), "v")
-    cand = (a.join(b, "v").filter(F.col("ta") < F.col("tb"))
-            .select("ta", "tb").distinct())
-    pairs = cand.filter(F.levenshtein("ta", "tb") <= 1)
-    return (pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.coalesce(F.sum(F.length("ta") + F.length("tb")),
-                   F.lit(0).cast("long")).alias("len_sum"),
-        F.sha2(F.concat_ws("\n", F.array_sort(F.collect_list(
-            F.concat("ta", F.lit("|"), "tb")))), 256).alias("pairs_sha")))
-
-
-def q_hodges_lehmann(spark, sf_dir) -> DataFrame:
-    """Hodges–Lehmann robust location estimator per series — the
-    median of all pairwise Walsh averages (xᵢ+xⱼ)/2, i≤j, kept EXACT
-    by carrying 2·HL (the pairwise SUM) and selecting the discrete
-    lower-median by row_number = floor((m+1)/2) — a definition both
-    engines implement identically with zero interpolation. The
-    pairwise self-join is the O(n²) battery profile; at scale this
-    runs per-group after one shuffle."""
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    w = Window.partitionBy("event_type").orderBy("day")
-    idx = daily.withColumn("i", F.row_number().over(w)) \
-        .filter(F.col("i") <= 60)
-    a = idx.select("event_type", F.col("i").alias("ia"),
-                   F.col("y").alias("ya"))
-    b = idx.select("event_type", F.col("i").alias("ib"),
-                   F.col("y").alias("yb"))
-    pairs = (a.join(b, "event_type")
-             .filter(F.col("ia") <= F.col("ib"))
-             .select("event_type",
-                     (F.col("ya") + F.col("yb")).alias("s")))
-    ws = Window.partitionBy("event_type").orderBy("s")
-    r = pairs.withColumn("rn", F.row_number().over(ws))
-    m = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("m"))
-    med = (r.join(F.broadcast(m), "event_type")
-           .filter(F.col("rn") == F.floor((F.col("m") + 1) / 2)))
-    return (med.select("event_type", "m",
-                       F.col("s").alias("two_hl"))
-            .orderBy("event_type"))
-
-
-def q_runs_test(spark, sf_dir) -> DataFrame:
-    """Wald–Wolfowitz runs test over each series' above/below-median
-    daily sign sequence — the randomness screen: the discrete median
-    (lower median, exact), sign classification (ties to the median
-    excluded, documented), run count via ONE lag window (a run starts
-    where the sign changes), and n₊/n₋ — all exact integers."""
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    wv = Window.partitionBy("event_type").orderBy("y", "day")
-    cnt = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    med = (daily.withColumn("rv", F.row_number().over(wv))
-           .join(F.broadcast(cnt), "event_type")
-           .filter(F.col("rv") == F.floor((F.col("n") + 1) / 2))
-           .select("event_type", F.col("y").alias("median")))
-    t = (daily.join(F.broadcast(med), "event_type")
-         .filter(F.col("y") != F.col("median"))
-         .select("event_type", "day",
-                 F.when(F.col("y") > F.col("median"), 1).otherwise(-1)
-                 .alias("sgn")))
-    wd = Window.partitionBy("event_type").orderBy("day")
-    t = t.withColumn("prev", F.lag("sgn").over(wd))
-    return (t.groupBy("event_type")
-            .agg(F.sum(F.when(F.col("prev").isNull()
-                              | (F.col("sgn") != F.col("prev")), 1)
-                       .otherwise(0)).alias("n_runs"),
-                 F.sum(F.when(F.col("sgn") == 1, 1).otherwise(0))
-                 .alias("n_plus"),
-                 F.sum(F.when(F.col("sgn") == -1, 1).otherwise(0))
-                 .alias("n_minus"))
-            .orderBy("event_type"))
-
-
-def q_benjamini_hochberg(spark, sf_dir) -> DataFrame:
-    """Benjamini–Hochberg FDR control (1995) — the multiple-testing
-    gate a metrics platform runs over thousands of simultaneous
-    hypotheses: p-values live as EXACT ten-thousandths (hash-derived
-    integers x ∈ [0,10000)), the step-up rule 'largest k with p₍ₖ₎ ≤
-    k·α/m' is decided purely by cross-multiplied integers
-    (x₍ₖ₎·m·20 ≤ k·10000 at α = 0.05), and every p below the cutoff
-    rank is rejected — zero floats in the decision path. One sort
-    window + one max + one count per family."""
-    d = F.col("doc_id")
-    x = (F.conv(F.substring(F.sha2(F.concat(F.lit("pv:"),
-                                            d.cast("string")), 256),
-                            1, 8), 16, 10).cast("long") % 10000)
-    fam = (d % 4).alias("family")
-    t = load(spark, sf_dir, "documents").select(fam, x.alias("x"))
-    # row_number over x alone: ties reorder freely but x-at-rank-k is
-    # the sorted multiset, so every output is tie-order-invariant
-    wk = Window.partitionBy("family").orderBy("x")
-    r = t.withColumn("k", F.row_number().over(wk))
-    m = t.groupBy("family").agg(F.count(F.lit(1)).alias("m"))
-    j = r.join(F.broadcast(m), "family")
-    ok = j.filter(F.col("x") * F.col("m") * 20
-                  <= F.col("k") * 10000)
-    kmax = ok.groupBy("family").agg(F.max("k").alias("k_reject"))
-    out = (m.join(kmax, "family", "left")
-           .select("family", "m",
-                   F.coalesce("k_reject", F.lit(0)).alias("k_reject")))
-    thr = (r.join(out.select("family", "k_reject"), "family")
-           .filter(F.col("k") == F.col("k_reject"))
-           .select("family", F.col("x").alias("x_threshold")))
-    return (out.join(thr, "family", "left")
-            .select("family", "m", "k_reject",
-                    F.coalesce("x_threshold", F.lit(-1))
-                    .alias("x_threshold"))
-            .orderBy("family"))
-
-
-NOT_IN_NULL_TEXT = (
-    "WITH sub_with_null AS (SELECT o_custkey AS k FROM orders "
-    "WHERE o_orderkey % 3 = 0 UNION ALL SELECT NULL), "
-    "sub_clean AS (SELECT o_custkey AS k FROM orders "
-    "WHERE o_orderkey % 3 = 0 AND o_custkey IS NOT NULL) "
-    "SELECT "
-    "(SELECT count(*) FROM customer WHERE c_custkey NOT IN "
-    "(SELECT k FROM sub_with_null)) AS n_not_in_with_null, "
-    "(SELECT count(*) FROM customer WHERE c_custkey NOT IN "
-    "(SELECT k FROM sub_clean)) AS n_not_in_clean, "
-    "(SELECT count(*) FROM customer c WHERE NOT EXISTS "
-    "(SELECT 1 FROM sub_clean s WHERE s.k = c.c_custkey)) "
-    "AS n_not_exists"
-)
-
-
-def q_not_in_null_trap(spark, sf_dir) -> DataFrame:
-    """The NOT IN three-valued-logic trap, pinned as VERBATIM shared
-    ANSI text (sql_surface family): against a subquery containing a
-    NULL, NOT IN returns ZERO rows (x <> NULL is UNKNOWN, so no row
-    ever satisfies the predicate) while the NULL-filtered NOT IN and
-    NOT EXISTS agree on the real anti-join count — the single most
-    common silent-wrong-answer bug in migration SQL, demonstrated by
-    both engines producing the same three counts."""
-    for t in ("orders", "customer"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(NOT_IN_NULL_TEXT)
-
-
-def q_ignore_nulls_window(spark, sf_dir) -> DataFrame:
-    """IGNORE NULLS window semantics — forward-fill (last non-null so
-    far) over a sparse series, the gap-carry idiom of sensor/metric
-    tables: Spark's last(col, ignorenulls=True) vs DuckDB's
-    last_value(col IGNORE NULLS), both over the identical frame.
-    Output pins the filled series whole (sha per group) plus the
-    null-bookkeeping counts."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.unix_timestamp("ts").cast("long").alias("ep"), "event_id",
-        F.when(F.col("event_id") % 3 == 0,
-               F.floor(F.col("value") * 100).cast("long"))
-        .alias("v"))
-    w = (Window.partitionBy("event_type").orderBy("ep", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    t = ev.withColumn("filled", F.last("v", ignorenulls=True).over(w))
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.col("v").isNull().cast("int")).alias("n_null"),
-                 F.sum(F.col("filled").isNull().cast("int"))
-                 .alias("n_still_null"),
-                 F.sum("filled").alias("sum_filled"),
-                 F.sha2(F.concat_ws(",", F.transform(
-                     F.array_sort(F.collect_list(F.struct(
-                         "ep", "event_id",
-                         F.coalesce(F.col("filled").cast("string"),
-                                    F.lit("x")).alias("fv")))),
-                     lambda r: r["fv"])), 256).alias("series_sha"))
-            # checkpoint before the sort (r6): range sampling would
-            # re-run the fill window + collect_list rollup
-            .localCheckpoint()
-            .orderBy("event_type"))
-
-
-def _daily_series(spark, sf_dir):
-    """Shared daily integer series per event_type: summed cents/day."""
-    return (load(spark, sf_dir, "events")
-            .select("event_type",
-                    (F.unix_timestamp("ts") / 86400).cast("long")
-                    .alias("day"),
-                    F.floor(F.col("value") * 100).cast("long")
-                    .alias("cents"))
-            .groupBy("event_type", "day")
-            .agg(F.sum("cents").alias("y")))
-
-
-_DAILY_SQL = (
-    "SELECT event_type, cast(floor(epoch(ts)) as bigint) // 86400 "
-    "AS day, sum(cast(floor(value * 100) as bigint)) AS y "
-    "FROM events GROUP BY 1, 2")
-
-
-def q_theil_sen(spark, sf_dir) -> DataFrame:
-    """Theil–Sen robust slope per series — the median of all pairwise
-    slopes (yⱼ−yᵢ)/(j−i), i<j over the day-indexed series. The engine
-    never sorts a float: the k-th smallest slope is selected by EXACT
-    cross-multiplied integer rank counting (slope_q < slope_p ⇔
-    dy_q·dx_p < dy_p·dx_q, both dx > 0), so the pick is decided purely
-    in int64 and only the final division runs in IEEE doubles. The
-    oracle instead sorts double slopes and indexes the lower median —
-    two mechanically different selection procedures that must agree
-    because equal rationals round to identical doubles."""
-    w = Window.partitionBy("event_type").orderBy("day")
-    idx = (_daily_series(spark, sf_dir)
-           .withColumn("i", F.row_number().over(w))
-           .filter(F.col("i") <= 60))
-    a = idx.select("event_type", F.col("i").alias("ia"),
-                   F.col("y").alias("ya"))
-    b = idx.select("event_type", F.col("i").alias("ib"),
-                   F.col("y").alias("yb"))
-    pairs = (a.join(b, "event_type")
-             .filter(F.col("ia") < F.col("ib"))
-             .select("event_type",
-                     ((F.col("ia") * F.lit(1000)) + F.col("ib"))
-                     .alias("pid"),
-                     (F.col("yb") - F.col("ya")).alias("dy"),
-                     (F.col("ib") - F.col("ia")).alias("dx")))
-    p = pairs.select("event_type", "pid",
-                     F.col("dy").alias("dyp"), F.col("dx").alias("dxp"))
-    q = pairs.select("event_type",
-                     F.col("dy").alias("dyq"), F.col("dx").alias("dxq"))
-    ranks = (p.join(q, "event_type")
-             .groupBy("event_type", "pid", "dyp", "dxp")
-             .agg(F.sum((F.col("dyq") * F.col("dxp")
-                         < F.col("dyp") * F.col("dxq")).cast("long"))
-                  .alias("cnt_lt"),
-                  F.sum((F.col("dyq") * F.col("dxp")
-                         <= F.col("dyp") * F.col("dxq")).cast("long"))
-                  .alias("cnt_le")))
-    m = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("m_pairs"))
-    k = F.floor((F.col("m_pairs") + 1) / 2)
-    med = (ranks.join(F.broadcast(m), "event_type")
-           .filter((F.col("cnt_lt") <= k - 1) & (F.col("cnt_le") >= k)))
-    return (med.groupBy("event_type", "m_pairs")
-            .agg(F.count(F.lit(1)).alias("n_at_median"),
-                 F.min(F.col("dyp").cast("double") / F.col("dxp"))
-                 .alias("slope"))
-            .select("event_type", "m_pairs", "n_at_median", "slope")
-            .orderBy("event_type"))
-
-
-def q_mann_kendall(spark, sf_dir) -> DataFrame:
-    """Mann–Kendall trend test per series, S and the tie-corrected
-    18·Var(S), all exact integers. The engine never sums signs: it
-    counts ONLY the concordant pairs P (yⱼ > yᵢ, j later), takes the
-    tie census per value (T = Σ C(t,2)), and derives S = P − M with
-    M = C(n,2) − P − T — pure combinatorics. The oracle computes S the
-    definitional way, Σ_{i<j} sign(yⱼ−yᵢ), so agreement pins the
-    identity P + M + T = C(n,2) on real data."""
-    daily = _daily_series(spark, sf_dir)
-    n = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    a = daily.select("event_type", F.col("day").alias("da"),
-                     F.col("y").alias("ya"))
-    b = daily.select("event_type", F.col("day").alias("db"),
-                     F.col("y").alias("yb"))
-    p = (a.join(b, "event_type")
-         .filter(F.col("da") < F.col("db"))
-         .groupBy("event_type")
-         .agg(F.sum((F.col("yb") > F.col("ya")).cast("long"))
-              .alias("p_up")))
-    ties = (daily.groupBy("event_type", "y")
-            .agg(F.count(F.lit(1)).alias("t"))
-            .groupBy("event_type")
-            .agg(F.sum(F.col("t") * (F.col("t") - 1) / 2).cast("long")
-                 .alias("t_pairs"),
-                 F.sum(F.col("t") * (F.col("t") - 1)
-                       * (2 * F.col("t") + 5)).alias("tie_var")))
-    j = (n.join(p, "event_type").join(ties, "event_type"))
-    total = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-    m_dn = total - F.col("p_up") - F.col("t_pairs")
-    return (j.select(
-        "event_type", "n",
-        (F.col("p_up") - m_dn).alias("s"),
-        (F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-         - F.col("tie_var")).alias("var18"))
-        .orderBy("event_type"))
-
-
-def q_max_drawdown(spark, sf_dir) -> DataFrame:
-    """Maximum drawdown of each series' cumulative daily total — the
-    risk metric: ddⱼ = max_{i≤j} cumᵢ − cumⱼ, reported as max and sum
-    over j, exact integers. The engine is the O(n) single-pass form
-    (running-max window over the running-sum window); the oracle is
-    the O(n²) definition (per-j max over an i≤j self-join) — the
-    classic quadratic-to-linear rewrite, proven equivalent on data.
-    The daily series is SIGNED (even event_ids credit, odd ones debit)
-    so the cumulative walk actually draws down — an all-positive
-    series would pin nothing but zeros."""
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     (F.when(F.col("event_id") % 2 == 0, 1)
-                      .otherwise(-1)
-                      * F.floor(F.col("value") * 100).cast("long"))
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg(F.sum("cents").alias("y")))
-    w = (Window.partitionBy("event_type").orderBy("day")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    t = (daily.withColumn("cum", F.sum("y").over(w))
-         .withColumn("peak", F.max("cum").over(w))
-         .withColumn("dd", F.col("peak") - F.col("cum")))
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_days"),
-                 F.max("dd").alias("max_dd"),
-                 F.sum("dd").alias("sum_dd"))
-            .orderBy("event_type"))
-
-
-def _mst_hash(col):
-    return F.conv(F.substring(F.sha2(col, 256), 1, 8), 16, 10) \
-        .cast("long")
-
-
-def q_mst_edges(spark, sf_dir) -> DataFrame:
-    """Minimum spanning tree of a deterministic 48-node weighted graph
-    (hash-derived extra edges over a connectivity spine; weights
-    carry the edge id in their low bits so they are pairwise DISTINCT
-    — the MST is therefore UNIQUE and both engines must produce the
-    identical edge set, pinned by sha). Engine: distributed Borůvka —
-    per-round min-edge-per-component window + component-graph
-    contraction via large-star/small-star, O(log n) rounds, nothing
-    collected. Oracle: sequential Prim inside a DuckDB recursive CTE
-    growing a visited list. Two classical algorithms from opposite
-    ends of the parallelism spectrum, agreeing edge-for-edge."""
-    from imagery_utils_spark.operators.graph import \
-        minimum_spanning_forest
-    V = 48
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 400).select("doc_id"))
-    d = F.col("doc_id").cast("string")
-    ex = (docs.select(
-        (_mst_hash(F.concat(F.lit("mu:"), d)) % V).alias("a"),
-        (_mst_hash(F.concat(F.lit("mv:"), d)) % V).alias("b"))
-        .filter(F.col("a") != F.col("b")))
-    spine = spark.range(V - 1).select(
-        F.col("id").alias("u"), (F.col("id") + 1).alias("v"))
-    pairs = (ex.select(F.least("a", "b").alias("u"),
-                       F.greatest("a", "b").alias("v"))
-             .unionByName(spine).distinct())
-    w = (_mst_hash(F.concat(F.lit("mw:"), F.col("u").cast("string"),
-                            F.lit(":"), F.col("v").cast("string")))
-         % 100000) * 4096 + F.col("u") * 64 + F.col("v")
-    mst = minimum_spanning_forest(pairs.withColumn("w", w))
-    tag = F.concat_ws("-", "u", "v", "w")
-    return mst.agg(
-        F.count(F.lit(1)).alias("n_edges"),
-        F.sum("w").alias("total_w"),
-        F.sha2(F.concat_ws(",", F.array_sort(
-            F.collect_list(tag))), 256).alias("edges_sha"))
-
-
-def q_lis_length(spark, sf_dir) -> DataFrame:
-    """Longest strictly-increasing subsequence of each daily series —
-    engine: patience sorting (O(n log n), one bisect per element) as a
-    per-group kernel behind ONE groupBy shuffle; oracle: the O(n²)
-    textbook DP (f_i = 1 + max f_j, j < i, a_j < a_i) replayed inside
-    a DuckDB recursive CTE that carries the value and DP arrays as
-    lists. Different algorithm, same theorem."""
-    w = Window.partitionBy("event_type").orderBy("day")
-    idx = (_daily_series(spark, sf_dir)
-           .withColumn("i", F.row_number().over(w))
-           .filter(F.col("i") <= 60))
-
-    def fn(pdf):
-        import pandas as pd
-
-        from imagery_utils_spark.operators.dp import lis_length_patience
-
-        pdf = pdf.sort_values("i")
-        seq = [int(x) for x in pdf["y"]]
-        return pd.DataFrame([{
-            "event_type": pdf["event_type"].iloc[0],
-            "n": len(seq),
-            "lis": lis_length_patience(seq)}])
-
-    return (idx.groupBy("event_type")
-            .applyInPandas(fn, "event_type string, n long, lis long")
-            .orderBy("event_type"))
-
-
-def q_interval_schedule(spark, sf_dir) -> DataFrame:
-    """Activity selection per series — the maximum number of pairwise
-    non-overlapping [s, e) intervals. Engine: the earliest-finish
-    GREEDY (optimal by the exchange argument) as a per-group kernel.
-    Oracle: the weighted-interval-scheduling DP at unit weights
-    (f_i = max(f_{i−1}, 1 + f_{p(i)}), p(i) = last interval ending ≤
-    sᵢ) in a DuckDB recursive CTE. Greedy optimality is the theorem
-    the parity check proves on data."""
-    ev = (load(spark, sf_dir, "events")
-          .select("event_type", "event_id",
-                  F.unix_timestamp("ts").cast("long").alias("s"),
-                  ((F.floor(F.col("value") * 100).cast("long") % 7200)
-                   + 60).alias("dur")))
-    w = Window.partitionBy("event_type").orderBy("s", "event_id")
-    iv = (ev.withColumn("rn", F.row_number().over(w))
-          .filter(F.col("rn") <= 40)
-          .select("event_type", "s", (F.col("s") + F.col("dur"))
-                  .alias("e")))
-
-    def fn(pdf):
-        import pandas as pd
-
-        from imagery_utils_spark.operators.dp import \
-            max_nonoverlap_intervals
-
-        ivs = list(zip((int(x) for x in pdf["s"]),
-                       (int(x) for x in pdf["e"])))
-        return pd.DataFrame([{
-            "event_type": pdf["event_type"].iloc[0],
-            "n_iv": len(ivs),
-            "best": max_nonoverlap_intervals(ivs)}])
-
-    return (iv.groupBy("event_type")
-            .applyInPandas(fn, "event_type string, n_iv long, best long")
-            .orderBy("event_type"))
-
-
-def q_suffix_array(spark, sf_dir) -> DataFrame:
-    """Per-document suffix arrays by DISTRIBUTED PREFIX DOUBLING
-    (Manber–Myers 1990): ⌈log₂ n⌉ rounds, each one equi-join + one
-    dense_rank window — the Spark-native O(log n)-shuffle-sorts
-    construction. The oracle materialises every suffix as a string and
-    comparison-sorts them (the O(n²·log n) definition) — agreement
-    byte-for-byte (sha over the SA order) across eight documents.
-    Byte order: both engines compare ASCII text binarily."""
-    from imagery_utils_spark.operators.suffix import suffix_array
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 8)
-            .select("doc_id", F.substring("text", 1, 256).alias("t")))
-    chars = (docs.select(
-        "doc_id", "t",
-        F.explode(F.sequence(F.lit(0), F.length("t") - 1)).alias("i"))
-        .select("doc_id", "i",
-                F.expr("substring(t, i + 1, 1)").alias("c")))
-    sa = suffix_array(chars, doc="doc_id", pos="i", ch="c",
-                      max_len=256)
-    return (sa.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sha2(F.concat_ws(",", F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("rank", "i"))),
-                     lambda r: r["i"].cast("string"))), 256)
-                 .alias("sa_sha"))
-            .orderBy("doc_id"))
-
-
-def q_merkle_root(spark, sf_dir) -> DataFrame:
-    """Merkle tree root over the first 50 document hashes (Merkle
-    1987; the Bitcoin odd-node rule — duplicate the last hash — is
-    exercised on purpose: 50 → 25 → 13 → 7 → 4 → 2 → 1). Engine: a
-    log-depth loop of groupBy-pair reductions, each level ONE shuffle
-    on pair index (how a 10⁹-leaf commitment tree actually reduces on
-    a cluster). Oracle: a DuckDB recursive CTE folding the hex-string
-    list level by level. Hashing is sha256 over concatenated hex
-    strings in both engines."""
-    # doc_id is dense 0..49 here, so it IS the leaf index — no global
-    # row_number window (which would single-partition 10⁹ leaves).
-    leaves = (load(spark, sf_dir, "documents")
-              .filter(F.col("doc_id") < 50)
-              .select(F.col("doc_id").alias("idx"),
-                      F.sha2("text", 256).alias("h")))
-    lvl = leaves.localCheckpoint(eager=True)
-    n_leaves = lvl.count()
-    n = n_leaves
-    levels = 0
-    while n > 1:
-        lvl = (lvl.groupBy(F.floor(F.col("idx") / 2).alias("j"))
-               .agg(F.max(F.when(F.col("idx") % 2 == 0, F.col("h")))
-                    .alias("l"),
-                    F.max(F.when(F.col("idx") % 2 == 1, F.col("h")))
-                    .alias("r"))
-               .select(F.col("j").alias("idx"), F.sha2(F.concat(
-                   "l", F.coalesce("r", "l")), 256).alias("h"))
-               .localCheckpoint(eager=True))
-        n = (n + 1) // 2
-        levels += 1
-    return lvl.select(F.lit(n_leaves).alias("n_leaves"),
-                      F.lit(levels).alias("n_levels"),
-                      F.col("h").alias("root"))
-
-
-def q_adler32(spark, sf_dir) -> DataFrame:
-    """Adler-32 (RFC 1950 §8.2) of each document prefix — but computed
-    ORDER-FREE: A = (1 + Σcᵢ) and B = (n + Σ(n−i+1)·cᵢ) mod 65521 are
-    position-weighted plain aggregates, so the engine needs no
-    sequential fold at all (explode + groupBy, partition-order
-    immune). The oracle replays the RFC's stepwise byte fold in a
-    recursive CTE. The closed form ≡ the fold is the identity under
-    test; pytest additionally pins the closed form to CPython's
-    zlib.adler32."""
-    d = (load(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") < 50)
-         .select("doc_id", F.substring("text", 1, 400).alias("t")))
-    d = d.withColumn("n", F.length("t"))
-    c = (d.select("doc_id", "n",
-                  F.explode(F.sequence(F.lit(1), F.col("n")))
-                  .alias("i"))
-         .join(d.select("doc_id", "t"), "doc_id")
-         .select("doc_id", "n", "i",
-                 F.ascii(F.expr("substring(t, i, 1)")).alias("ch")))
-    agg = (c.groupBy("doc_id", "n")
-           .agg(((F.lit(1) + F.sum("ch")) % 65521).alias("a"),
-                ((F.col("n").cast("long") + F.sum(
-                    (F.col("n") - F.col("i") + 1) * F.col("ch")))
-                 % 65521).alias("b")))
-    return (agg.select("doc_id", "n",
-                       (F.col("b") * 65536 + F.col("a")).alias("adler"))
-            .orderBy("doc_id"))
-
-
-def q_bwt_inverse(spark, sf_dir) -> DataFrame:
-    """Fully DISTRIBUTED BWT round-trip: forward transform via the
-    prefix-doubling suffix array (bwt[rank-1] = t[(i-1) mod n]), then
-    inversion WITHOUT the sequential LF walk — the walk index of every
-    row is recovered by Wyllie pointer doubling over the LF
-    permutation (list ranking, O(log n) equi-join rounds). The oracle
-    runs the textbook pipeline: rotation sort, then the O(n)
-    recursive-CTE LF walk. Both must reproduce the original text."""
-    from imagery_utils_spark.operators.bwt import SENTINEL, invert_bwt_df
-    from imagery_utils_spark.operators.suffix import suffix_array
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 6)
-            .select("doc_id",
-                    F.concat(F.substring("text", 1, 180),
-                             F.lit(SENTINEL)).alias("t")))
-    chars = (docs.select(
-        "doc_id", "t", F.length("t").alias("n"),
-        F.explode(F.sequence(F.lit(0), F.length("t") - 1)).alias("i"))
-        .select("doc_id", "i", "n",
-                F.expr("substring(t, i + 1, 1)").alias("c"),
-                F.expr("substring(t, ((i - 1 + n) % n) + 1, 1)")
-                .alias("cp")))
-    sa = suffix_array(chars, doc="doc_id", pos="i", ch="c",
-                      max_len=256)
-    bwt = (sa.join(chars.select("doc_id", "i", "cp"), ["doc_id", "i"])
-           .select("doc_id", (F.col("rank") - 1).alias("j"),
-                   F.col("cp").alias("c")))
-    inv = invert_bwt_df(bwt, doc="doc_id", pos="j", ch="c",
-                        max_len=256)
-    return (inv.groupBy("doc")
-            .agg(F.count(F.lit(1)).alias("n_chars"),
-                 F.concat_ws("", F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("i", "out_c"))),
-                     lambda r: r["out_c"])).alias("recovered"))
-            .select(F.col("doc").alias("doc_id"), "n_chars",
-                    "recovered")
-            .orderBy("doc_id"))
-
-
-def q_discrete_log(spark, sf_dir) -> DataFrame:
-    """Discrete logarithm g^x ≡ h (mod p) for 24 hash-derived
-    instances over small primes — engine: baby-step/giant-step
-    (Shanks 1971) where the collision search is ONE equi-join on the
-    group element and h itself comes from JVM square-and-multiply
-    (O(√p) rows, O(log p) projections). Oracle: the O(p) brute walk —
-    a recursive CTE enumerating the whole power sequence, reading h
-    at k = x_true and taking the minimal matching k. Minimality
-    agrees because BSGS's i·m+j covers every x in [0, m²) uniquely."""
-    from imagery_utils_spark.operators.modmath import (
-        bsgs_discrete_log, with_modpow)
-    primes = [1997, 1999, 2003, 2011, 2017, 2027, 2029, 2039]
-    d = F.col("doc_id").cast("string")
-    inst = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 24)
-            .select("doc_id",
-                    F.element_at(
-                        F.array(*[F.lit(x) for x in primes]),
-                        (F.col("doc_id") % 8 + 1).cast("int"))
-                    .cast("long").alias("p")))
-    inst = inst.withColumn(
-        "g", F.lit(2) + _mst_hash(F.concat(F.lit("dlg:"), d))
-        % (F.col("p") - 3))
-    inst = inst.withColumn(
-        "xt", _mst_hash(F.concat(F.lit("dlx:"), d)) % (F.col("p") - 1))
-    inst = with_modpow(inst, "h", "g", "xt", "p", 11)
-    ans = bsgs_discrete_log(inst, key="doc_id", max_m=46)
-    return (inst.join(ans, "doc_id")
-            .select("doc_id", "p", "g", "h", "dlog")
-            .orderBy("doc_id"))
-
-
-def q_fib_matrix_power(spark, sf_dir) -> DataFrame:
-    """F(n) mod 1e9+7 for 24 hash-derived n in [1000, 9000) — engine:
-    fast matrix exponentiation of [[1,1],[1,0]] (14 square-and-multiply
-    rounds as pure column projections; symmetric matrices tracked as
-    (a,b,d) triples since powers of a symmetric matrix commute).
-    Oracle: the O(n) additive recurrence stepped one term at a time in
-    a recursive CTE. O(log n) vs O(n) for the same exact residues."""
-    M = 1_000_000_007
-    d = F.col("doc_id").cast("string")
-    df = (load(spark, sf_dir, "documents")
-          .filter(F.col("doc_id") < 24)
-          .select("doc_id",
-                  (F.lit(1000) + _mst_hash(F.concat(F.lit("fib:"), d))
-                   % 8000).alias("n"),
-                  F.lit(1).cast("long").alias("ra"),
-                  F.lit(0).cast("long").alias("rb"),
-                  F.lit(1).cast("long").alias("rd"),
-                  F.lit(1).cast("long").alias("ba"),
-                  F.lit(1).cast("long").alias("bb"),
-                  F.lit(0).cast("long").alias("bd")))
-    for b in range(14):
-        bit = (F.shiftright(F.col("n"), b) % 2) == 1
-        ra, rb, rd = F.col("ra"), F.col("rb"), F.col("rd")
-        ba, bb, bd = F.col("ba"), F.col("bb"), F.col("bd")
-        df = df.select(
-            "doc_id", "n",
-            F.when(bit, (ra * ba + rb * bb) % M).otherwise(ra)
-             .alias("ra"),
-            F.when(bit, (ra * bb + rb * bd) % M).otherwise(rb)
-             .alias("rb"),
-            F.when(bit, (rb * bb + rd * bd) % M).otherwise(rd)
-             .alias("rd"),
-            ((ba * ba + bb * bb) % M).alias("ba"),
-            ((ba * bb + bb * bd) % M).alias("bb"),
-            ((bb * bb + bd * bd) % M).alias("bd"))
-    return (df.select("doc_id", "n", F.col("rb").alias("fib_mod"))
-            .orderBy("doc_id"))
-
-
-def q_subset_sum_mitm(spark, sf_dir) -> DataFrame:
-    """Best subset sum ≤ target over 26 hash-weighted items, five
-    targets — engine: MEET IN THE MIDDLE (Horowitz–Sahni 1974). Each
-    half's 2^13 subset sums are generated by 13 union-doubling rounds
-    (S ∪ S+w, data-driven weights, nothing collected), and the
-    half-matching is the scalable as-of shape: union both sides and
-    take a running max over ONE window ordered by value — no
-    8192×8192 theta join. Oracle: level-wise 0/1 DP in a recursive
-    CTE (achievable-sum set after k items, deduped per level)."""
-    d = F.col("doc_id").cast("string")
-    items = (load(spark, sf_dir, "documents")
-             .filter(F.col("doc_id") < 26)
-             .select((F.col("doc_id") + 1).alias("idx"),
-                     (F.lit(1) + _mst_hash(F.concat(F.lit("ss:"), d))
-                      % 2000).alias("w")))
-    items = items.localCheckpoint(eager=True)
-    targets = (items.agg(F.sum("w").alias("tot"))
-               .crossJoin(spark.range(1, 6).select(
-                   F.col("id").alias("j")))
-               .select("j", F.expr("(j * tot) div 6").alias("target")))
-
-    def half_sums(lo: int, hi: int) -> DataFrame:
-        s = spark.range(1).select(F.lit(0).cast("long").alias("s"))
-        for k in range(lo, hi + 1):
-            it = items.filter(F.col("idx") == k).select("w")
-            # coalesce(1): the union would otherwise double the
-            # PARTITION count every round (2^13 empty-ish tasks by the
-            # end); 8192 longs belong in one partition.
-            s = s.unionByName(
-                s.crossJoin(F.broadcast(it))
-                 .select((F.col("s") + F.col("w")).alias("s"))
-            ).coalesce(1)
-            if k % 5 == 0:
-                s = s.localCheckpoint(eager=True)
-        return s.localCheckpoint(eager=True)
-
-    a = half_sums(1, 13)
-    b = half_sums(14, 26)
-    t_b = F.broadcast(targets)
-    arows = (a.crossJoin(t_b)
-             .filter(F.col("s") <= F.col("target"))
-             .select("j", (F.col("target") - F.col("s")).alias("v"),
-                     F.col("s").alias("a_s"), F.lit(1).alias("isq")))
-    brows = (b.crossJoin(t_b.select("j"))
-             .select("j", F.col("s").alias("v"),
-                     F.lit(None).cast("long").alias("a_s"),
-                     F.lit(0).alias("isq")))
-    w = (Window.partitionBy("j").orderBy("v", "isq")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    u = (arows.unionByName(brows)
-         .withColumn("best_b", F.max(F.when(F.col("isq") == 0,
-                                            F.col("v"))).over(w)))
-    ans = (u.filter(F.col("isq") == 1)
-           .groupBy("j")
-           .agg(F.max(F.col("a_s") + F.col("best_b")).alias("best")))
-    return (targets.join(ans, "j")
-            .select("j", "target", "best").orderBy("j"))
-
-
-def q_crt_reconstruct(spark, sf_dir) -> DataFrame:
-    """Chinese-remainder reconstruction mod 45045 = 5·7·9·11·13 for 30
-    hash-derived residue tuples — engine: the Garner/CRT linear
-    recombination x = Σ rⱼ·Mⱼ·Mⱼ⁻¹ mod M as one JVM column expression
-    (the per-modulus inverses are fixed by the coprime basis). Oracle:
-    direct brute search — join range(45045) and keep the unique x
-    satisfying all five congruences. Agreement pins both existence
-    and uniqueness of the CRT solution."""
-    mods = [5, 7, 9, 11, 13]
-    big = 1
-    for m in mods:
-        big *= m
-    mi = [big // m for m in mods]
-    inv = [pow(mi[j], -1, mods[j]) for j in range(len(mods))]
-    d = F.col("doc_id").cast("string")
-    df = (load(spark, sf_dir, "documents")
-          .filter(F.col("doc_id") < 30).select("doc_id"))
-    for j, m in enumerate(mods):
-        df = df.withColumn(
-            f"r{j}", _mst_hash(F.concat(F.lit(f"crt{j}:"), d)) % m)
-    x = sum((F.col(f"r{j}") * (mi[j] * inv[j]) for j in
-             range(len(mods))), F.lit(0)) % big
-    return (df.withColumn("crt_x", x.cast("long"))
-            .orderBy("doc_id"))
-
-
-def q_nim_grundy(spark, sf_dir) -> DataFrame:
-    """Sprague–Grundy numbers for 3-pile Nim, piles 0..7 (512 states)
-    — engine: EXPLICIT backward induction over the game DAG: 21
-    pile-sum levels, each one join to already-solved successors plus a
-    candidate⟕successor anti-join computing mex, never touching XOR.
-    Oracle: Bouton's theorem (1901) — grundy = a⊕b⊕c, a one-line SQL
-    closed form. A structural theorem checking a brute game search."""
-    r8 = spark.range(8)
-    states = (r8.select(F.col("id").alias("a"))
-              .crossJoin(r8.select(F.col("id").alias("b")))
-              .crossJoin(r8.select(F.col("id").alias("c")))
-              .localCheckpoint(eager=True))
-
-    def lower(col_name):
-        keep = [c for c in ("a", "b", "c") if c != col_name]
-        return (states.filter(F.col(col_name) > 0)
-                .select("a", "b", "c",
-                        F.explode(F.sequence(
-                            F.lit(0), F.col(col_name) - 1))
-                        .alias(f"{col_name}2"),
-                        *[F.col(c).alias(f"{c}2") for c in keep]))
-
-    mv = (lower("a").select("a", "b", "c", "a2", "b2", "c2")
-          .unionByName(lower("b").select("a", "b", "c",
-                                         "a2", "b2", "c2"))
-          .unionByName(lower("c").select("a", "b", "c",
-                                         "a2", "b2", "c2"))
-          .localCheckpoint(eager=True))
-    cand = spark.range(22).select(F.col("id").alias("t"))
-    g = (states.filter(F.col("a") + F.col("b") + F.col("c") == 0)
-         .select("a", "b", "c", F.lit(0).cast("long").alias("g"))
-         .localCheckpoint(eager=True))
-    for s in range(1, 22):
-        # every frame here is <= ~5k rows: broadcast joins keep each of
-        # the 21 rounds to one-ish stage instead of ~5 shuffle stages —
-        # the wall here is scheduler latency, not bytes (r6, guide §3.1)
-        cur = states.filter(F.col("a") + F.col("b") + F.col("c") == s)
-        succ = (cur.join(F.broadcast(mv), ["a", "b", "c"])
-                .join(F.broadcast(g.select(F.col("a").alias("a2"),
-                                           F.col("b").alias("b2"),
-                                           F.col("c").alias("c2"),
-                                           F.col("g").alias("t"))),
-                      ["a2", "b2", "c2"])
-                .select("a", "b", "c", "t"))
-        mex = (cur.crossJoin(cand)
-               .join(F.broadcast(succ), ["a", "b", "c", "t"], "left_anti")
-               .groupBy("a", "b", "c")
-               .agg(F.min("t").alias("g")))
-        # coalesce: the union accumulates 32 shuffle partitions per
-        # level; 512 rows belong in one partition
-        g = g.unionByName(mex).coalesce(1).localCheckpoint(eager=True)
-    return g.orderBy("a", "b", "c")
-
-
-def q_max_flow(spark, sf_dir) -> DataFrame:
-    """Max flow on 12 hash-derived 8-node DAGs — engine computes FLOW
-    (Edmonds–Karp augmenting paths, one applyInPandas kernel per
-    graph: millions of independent flow problems is the cluster
-    shape). Oracle computes the dual CUT: exhaustive minimum s-t cut
-    over all 2^6 interior bipartitions in SQL. Agreement is the
-    max-flow/min-cut theorem (Ford–Fulkerson 1956) checked end to
-    end — the two sides never run the same algorithm."""
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 12).select("doc_id"))
-    r8 = spark.range(8)
-    pairs = (r8.select(F.col("id").alias("u"))
-             .crossJoin(r8.select(F.col("id").alias("v")))
-             .filter(F.col("u") < F.col("v")))
-
-    def tag(p):
-        return F.concat(F.lit(p), F.col("doc_id").cast("string"),
-                        F.lit(":"), F.col("u").cast("string"),
-                        F.lit(":"), F.col("v").cast("string"))
-
-    edges = (docs.crossJoin(pairs)
-             .filter((F.col("v") == F.col("u") + 1)
-                     | (_mst_hash(tag("mf:")) % 3 == 0))
-             .withColumn("cap", F.lit(1) + _mst_hash(tag("mc:")) % 30)
-             .select("doc_id", "u", "v", "cap"))
-
-    def ek(pdf):
-        import collections
-
-        import pandas as pd
-        cap = collections.defaultdict(int)
-        adj = collections.defaultdict(set)
-        for u, v, c in zip(pdf["u"], pdf["v"], pdf["cap"]):
-            u, v = int(u), int(v)
-            cap[(u, v)] += int(c)
-            adj[u].add(v)
-            adj[v].add(u)
-        flow = 0
-        while True:
-            par = {0: -1}
-            q = [0]
-            while q and 7 not in par:
-                x = q.pop(0)
-                for y in sorted(adj[x]):
-                    if y not in par and cap[(x, y)] > 0:
-                        par[y] = x
-                        q.append(y)
-            if 7 not in par:
-                break
-            path, y = [], 7
-            while par[y] != -1:
-                path.append((par[y], y))
-                y = par[y]
-            b = min(cap[e] for e in path)
-            for x, y in path:
-                cap[(x, y)] -= b
-                cap[(y, x)] += b
-            flow += b
-        return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])],
-                             "max_flow": [flow]})
-
-    return (edges.groupBy("doc_id")
-            .applyInPandas(ek, "doc_id long, max_flow long")
-            .orderBy("doc_id"))
-
-
-def q_scc_reach(spark, sf_dir) -> DataFrame:
-    """Strongly connected components of a 36-node, 2-out-degree
-    hash-derived digraph — engine: transitive closure by SQUARING
-    (R ← R∘R, 6 join+distinct rounds for paths up to 2^6), SCC id =
-    min mutually-reachable node. Oracle: the same closure grown ONE
-    edge per recursive-CTE step. O(log V) vs O(V) closure rounds
-    agreeing on every component id and size."""
-    V = 36
-    nodes = spark.range(V).select(F.col("id").alias("v"))
-    s = F.col("v").cast("string")
-    edges = (nodes.select(
-        "v", (_mst_hash(F.concat(F.lit("sc1:"), s)) % V).alias("t"))
-        .unionByName(nodes.select(
-            "v", (_mst_hash(F.concat(F.lit("sc2:"), s)) % V)
-            .alias("t")))
-        .distinct())
-    r = (edges.unionByName(nodes.select("v", F.col("v").alias("t")))
-         .distinct().localCheckpoint(eager=True))
-    for _ in range(6):
-        mid = r.select(F.col("v").alias("t"), F.col("t").alias("t2"))
-        r = (r.join(mid, "t").select("v", F.col("t2").alias("t"))
-             .distinct().localCheckpoint(eager=True))
-    rev = r.select(F.col("t").alias("v"), F.col("v").alias("t"))
-    scc = (r.join(rev, ["v", "t"])
-           .groupBy("v").agg(F.min("t").alias("scc_id")))
-    sizes = scc.groupBy("scc_id").agg(F.count(F.lit(1))
-                                      .alias("scc_size"))
-    return (scc.join(sizes, "scc_id")
-            .select("v", "scc_id", "scc_size").orderBy("v"))
-
-
-def q_rho_cycle(spark, sf_dir) -> DataFrame:
-    """Tail length, cycle minimum, and cycle length for every node of
-    a 64-node random functional graph f(v) = h(v) mod 64 — engine:
-    pure pointer doubling (6 rounds): f^64 lands every node on its
-    terminal cycle, a min-propagating doubling labels each cycle by
-    its minimum, and a cut-at-cycle distance doubling yields tails —
-    O(log n) joins, the parallel replacement for Floyd/Brent cycle
-    walking. Oracle: literal per-node walk in a recursive CTE
-    accumulating the visited list until the first repeat."""
-    V = 64
-    nodes = spark.range(V).select(F.col("id").alias("v"))
-    f = (nodes.select("v", (_mst_hash(F.concat(
-        F.lit("rho:"), F.col("v").cast("string"))) % V).alias("t"))
-        .localCheckpoint(eager=True))
-    p = f.select("v", F.col("t").alias("p"))
-    for _ in range(6):
-        nxt = p.select(F.col("v").alias("p"), F.col("p").alias("p2"))
-        p = (p.join(nxt, "p").select("v", F.col("p2").alias("p"))
-             .localCheckpoint(eager=True))
-    cyc = p.select(F.col("p").alias("v")).distinct()
-    cm = (cyc.join(f, "v")
-          .select("v", F.col("t").alias("p"), F.col("v").alias("m")))
-    for _ in range(6):
-        nxt = cm.select(F.col("v").alias("p"),
-                        F.col("p").alias("p2"), F.col("m").alias("m2"))
-        cm = (cm.join(nxt, "p")
-              .select("v", F.col("p2").alias("p"),
-                      F.least("m", "m2").alias("m"))
-              .localCheckpoint(eager=True))
-    cyc_info = cm.select("v", F.col("m").alias("cyc_min"))
-    sizes = cyc_info.groupBy("cyc_min").agg(F.count(F.lit(1))
-                                            .alias("cycle_len"))
-    iscyc = cyc_info.select("v", F.lit(1).alias("isc"))
-    t0 = (f.join(iscyc, "v", "left")
-          .select("v",
-                  F.when(F.col("isc") == 1, F.col("v"))
-                   .otherwise(F.col("t")).alias("p"),
-                  F.when(F.col("isc") == 1, F.lit(0)).otherwise(F.lit(1))
-                   .cast("long").alias("d")))
-    for _ in range(6):
-        nxt = t0.select(F.col("v").alias("p"),
-                        F.col("p").alias("p2"), F.col("d").alias("d2"))
-        t0 = (t0.join(nxt, "p")
-              .select("v", F.col("p2").alias("p"),
-                      (F.col("d") + F.col("d2")).alias("d"))
-              .localCheckpoint(eager=True))
-    return (t0.select("v", F.col("d").alias("tail"))
-            .join(p.select("v", F.col("p").alias("rep")), "v")
-            .join(cyc_info.select(F.col("v").alias("rep"), "cyc_min"),
-                  "rep")
-            .join(sizes, "cyc_min")
-            .select("v", "tail", "cyc_min", "cycle_len")
-            .orderBy("v"))
-
-
-def q_manacher_palindrome(spark, sf_dir) -> DataFrame:
-    """Longest palindromic substring length + total palindromic
-    substring count per document — engine: Manacher's O(n) algorithm
-    (1975) as a mapInPandas kernel, one linear pass per doc (per-doc
-    local work, embarrassingly parallel at corpus scale). Oracle: the
-    O(n²) definition — every substring materialized and tested
-    against its reverse in SQL. Counts are occurrence counts
-    (Σ d1 + Σ d2 = number of palindromic (start,len) pairs)."""
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 40)
-            .select("doc_id", F.substring("text", 1, 120).alias("t"))
-            .filter(F.length("t") > 0))
-
-    def kern(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = []
-            for doc, s in zip(pdf["doc_id"], pdf["t"]):
-                n = len(s)
-                d1 = [0] * n
-                lo, hi = 0, -1
-                for i in range(n):
-                    k = 1 if i > hi else min(d1[lo + hi - i],
-                                             hi - i + 1)
-                    while i - k >= 0 and i + k < n \
-                            and s[i - k] == s[i + k]:
-                        k += 1
-                    d1[i] = k
-                    if i + k - 1 > hi:
-                        lo, hi = i - k + 1, i + k - 1
-                d2 = [0] * n
-                lo, hi = 0, -1
-                for i in range(n):
-                    k = 0 if i > hi else min(d2[lo + hi - i + 1],
-                                             hi - i + 1)
-                    while i - k - 1 >= 0 and i + k < n \
-                            and s[i - k - 1] == s[i + k]:
-                        k += 1
-                    d2[i] = k
-                    if i + k - 1 > hi:
-                        lo, hi = i - k, i + k - 1
-                mx = max(max(2 * x - 1 for x in d1),
-                         max((2 * x for x in d2), default=0))
-                out.append((int(doc), mx, sum(d1) + sum(d2)))
-            yield pd.DataFrame(out, columns=["doc_id", "max_pal",
-                                             "n_pal"])
-
-    return (docs.mapInPandas(
-        kern, "doc_id long, max_pal long, n_pal long")
-        .orderBy("doc_id"))
-
-
-_LCM30 = 2329089562800  # lcm(1..30): makes every block mean integral
-
-
-def q_isotonic_pav(spark, sf_dir) -> DataFrame:
-    """Isotonic (monotone nondecreasing) L2 regression over 10 series
-    of 30 hash-derived points, EXACT arithmetic: fits are reported as
-    mean·lcm(1..30), an integer for every possible block size. Engine:
-    pool-adjacent-violators (Ayer et al. 1955), the O(n) stack merge,
-    per series in applyInPandas. Oracle: the independent minimax
-    characterization fit_i = max_{l≤i} min_{u≥i} avg(y[l..u])
-    evaluated by brute segment enumeration in SQL. Two published
-    characterizations of the same unique minimizer."""
-    g10 = spark.range(10).select(F.col("id").alias("g"))
-    p30 = spark.range(30).select(F.col("id").alias("i"))
-    pts = (g10.crossJoin(p30)
-           .withColumn("y", _mst_hash(F.concat(
-               F.lit("iso:"), F.col("g").cast("string"), F.lit(":"),
-               F.col("i").cast("string"))) % 1000))
-
-    def pav(pdf):
-        import pandas as pd
-        pdf = pdf.sort_values("i")
-        blocks = []  # (sum, cnt)
-        for y in pdf["y"]:
-            blocks.append((int(y), 1))
-            while len(blocks) >= 2 and (
-                    blocks[-2][0] * blocks[-1][1]
-                    >= blocks[-1][0] * blocks[-2][1]):
-                s2, c2 = blocks.pop()
-                s1, c1 = blocks.pop()
-                blocks.append((s1 + s2, c1 + c2))
-        fits = []
-        for s, c in blocks:
-            fits.extend([s * (_LCM30 // c)] * c)
-        return pd.DataFrame({"g": pdf["g"], "i": pdf["i"],
-                             "fit_key": fits})
-
-    return (pts.groupBy("g")
-            .applyInPandas(pav, "g long, i long, fit_key long")
-            .orderBy("g", "i"))
-
-
-def q_bresenham_line(spark, sf_dir) -> DataFrame:
-    """First-octant Bresenham line rasterization for 40 hash-derived
-    (dx, dy) lines — engine: the ORDER-FREE closed form
-    y(x) = ⌊(2x·dy + dx − 1) / 2dx⌋ (midpoint rounding, half toward
-    zero), one explode + pure column arithmetic, no sequential state.
-    Oracle: the textbook stepwise error accumulator (D += 2dy or
-    2(dy−dx)) replayed in a recursive CTE. The closed form ≡ the
-    incremental loop is the identity under test (pinned point-wise in
-    pytest as well)."""
-    d = F.col("doc_id").cast("string")
-    inst = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 40)
-            .select("doc_id",
-                    (F.lit(20) + _mst_hash(F.concat(F.lit("bx:"), d))
-                     % 180).alias("dx")))
-    inst = inst.withColumn(
-        "dy", F.lit(1) + _mst_hash(F.concat(F.lit("by:"), d))
-        % F.col("dx"))
-    pts = (inst.select(
-        "doc_id", "dx", "dy",
-        F.explode(F.sequence(F.lit(0), F.col("dx"))).alias("x"))
-        .withColumn("y", F.expr(
-            "(2 * x * dy + dx - 1) div (2 * dx)")))
-    return (pts.groupBy("doc_id", "dx", "dy")
-            .agg(F.sum("y").alias("sum_y"),
-                 F.sha2(F.concat_ws(",", F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("x", "y"))),
-                     lambda r: r["y"].cast("string"))), 256)
-                 .alias("y_sha"))
-            .orderBy("doc_id"))
-
-
-_RS_GEN = [255, 11, 81, 54, 239, 173, 200, 24]  # g1..g8 of
-# Π_{i=0..7}(x − α^i) over GF(256)/0x11D (QR code generator, deg 8);
-# re-derived from first principles in tests/test_rs_hamming_zeck.py
-
-
-def q_reed_solomon_parity(spark, sf_dir) -> DataFrame:
-    """RS(24,16)-style Reed–Solomon parity over GF(256)/0x11D for the
-    first 16 bytes of each document — engine: log/antilog-table
-    polynomial long division in a mapInPandas kernel (per-message
-    local work). Oracle: the SAME division replayed in SQL, but its
-    field multiply is built independently — a 256×256 product table
-    generated by Russian-peasant carry-less doubling (8 recursive
-    xtime levels + bit_xor fold), no log tables anywhere. Two
-    implementations of GF(256) arithmetic agreeing byte-for-byte."""
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 12)
-            .select("doc_id",
-                    F.rpad(F.substring("text", 1, 16), 16, " ")
-                    .alias("m")))
-
-    def kern(batches):
-        import pandas as pd
-        exp = [0] * 512
-        log = [0] * 256
-        x = 1
-        for i in range(255):
-            exp[i] = x
-            log[x] = i
-            x <<= 1
-            if x & 0x100:
-                x ^= 0x11D
-        for i in range(255, 512):
-            exp[i] = exp[i - 255]
-
-        def mul(a, b):
-            if a == 0 or b == 0:
-                return 0
-            return exp[log[a] + log[b]]
-
-        for pdf in batches:
-            out = []
-            for doc, m in zip(pdf["doc_id"], pdf["m"]):
-                rem = [0] * 8
-                for ch in m:
-                    f = rem[0] ^ (ord(ch) % 256)
-                    rem = rem[1:] + [0]
-                    for j in range(8):
-                        rem[j] ^= mul(_RS_GEN[j], f)
-                out.append((int(doc),
-                            "".join(f"{b:02x}" for b in rem)))
-            yield pd.DataFrame(out, columns=["doc_id", "ecc_hex"])
-
-    return (docs.mapInPandas(kern, "doc_id long, ecc_hex string")
-            .orderBy("doc_id"))
-
-
-def q_hamming74(spark, sf_dir) -> DataFrame:
-    """Hamming(7,4) single-error round-trip for 50 hash-derived
-    nibbles with a hash-chosen flipped bit — engine decodes by
-    MINIMUM DISTANCE: broadcast all 16 codewords, bit_count(xor)
-    and argmin (unique because d_min = 3). Oracle decodes
-    ALGEBRAICALLY: the 3-bit syndrome IS the error position, flip and
-    re-extract. The two decoders share only the encoder."""
-    d = F.col("doc_id").cast("string")
-    inst = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 50)
-            .select("doc_id",
-                    (_mst_hash(F.concat(F.lit("hd:"), d)) % 16)
-                    .alias("data"),
-                    (F.lit(1) + _mst_hash(F.concat(F.lit("he:"), d))
-                     % 7).alias("epos")))
-
-    def encode(col):
-        d1, d2 = col % 2, F.shiftright(col, 1) % 2
-        d3, d4 = F.shiftright(col, 2) % 2, F.shiftright(col, 3) % 2
-        p1 = (d1 + d2 + d4) % 2
-        p2 = (d1 + d3 + d4) % 2
-        p3 = (d2 + d3 + d4) % 2
-        return (p1 + p2 * 2 + d1 * 4 + p3 * 8 + d2 * 16 + d3 * 32
-                + d4 * 64)
-
-    recv = (inst.withColumn("cw0", encode(F.col("data")))
-            .withColumn("received", F.expr(
-                "cw0 ^ shiftleft(1, cast(epos - 1 as int))"))
-            .drop("cw0"))
-    book = (spark.range(16).select(F.col("id").alias("nib"))
-            .withColumn("cw", encode(F.col("nib"))))
-    joined = (recv.crossJoin(F.broadcast(book))
-              .withColumn("dist", F.bit_count(
-                  F.col("received").bitwiseXOR(F.col("cw")))))
-    w = Window.partitionBy("doc_id").orderBy("dist", "nib")
-    return (joined.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("doc_id", "data", "epos", "received",
-                    F.col("nib").alias("decoded"))
-            .orderBy("doc_id"))
-
-
-def q_zeckendorf(spark, sf_dir) -> DataFrame:
-    """Zeckendorf representation (unique sum of non-consecutive
-    Fibonacci numbers) of 40 hash-derived x < 100001 — engine: the
-    greedy algorithm as 24 pure column rewrites (largest Fibonacci
-    first; greedy is provably non-adjacent). Oracle: EXHAUSTIVE — a
-    recursive CTE generating all 121393 non-adjacent index subsets of
-    F2..F25 with their sums, joined on x; Zeckendorf's theorem says
-    exactly one matches, and it must be the greedy one."""
-    fibs = []
-    a, b = 1, 2
-    for i in range(2, 26):
-        fibs.append((i, a))
-        a, b = b, a + b
-    d = F.col("doc_id").cast("string")
-    df = (load(spark, sf_dir, "documents")
-          .filter(F.col("doc_id") < 40)
-          .select("doc_id",
-                  (F.lit(1) + _mst_hash(F.concat(F.lit("zk:"), d))
-                   % 100000).alias("x"))
-          .withColumn("rem", F.col("x"))
-          .withColumn("zmask", F.lit(0).cast("long")))
-    for i, v in sorted(fibs, key=lambda t: -t[1]):
-        take = F.col("rem") >= v
-        df = (df.withColumn("zmask",
-                            F.when(take, F.col("zmask")
-                                   + (1 << (i - 2)))
-                            .otherwise(F.col("zmask")))
-              .withColumn("rem", F.when(take, F.col("rem") - v)
-                          .otherwise(F.col("rem"))))
-    return (df.select("doc_id", "x", "zmask",
-                      F.bit_count("zmask").cast("long")
-                      .alias("n_terms"))
-            .orderBy("doc_id"))
-
-
-def q_fisher_exact(spark, sf_dir) -> DataFrame:
-    """Two-sided Fisher exact test as an EXACT RATIONAL (p_num/p_den,
-    both integers) for 25 hash-derived 2×2 tables with N = 40 —
-    engine: hypergeometric weights C(K,k)·C(N−K,n−k) via the
-    multiplicative binomial formula folded with F.aggregate (prefix
-    products are themselves binomials, so every intermediate division
-    is exact), denominator = Σ weights (Vandermonde). Oracle:
-    binomials built by the ADDITIVE Pascal recurrence in a recursive
-    CTE. Two classical binomial constructions, one exact p-value."""
-    d = F.col("doc_id").cast("string")
-    inst = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 25)
-            .select("doc_id", F.lit(40).alias("nn"),
-                    (F.lit(10) + _mst_hash(F.concat(F.lit("fk:"), d))
-                     % 21).alias("kk"),
-                    (F.lit(10) + _mst_hash(F.concat(F.lit("fn:"), d))
-                     % 21).alias("n")))
-    lo = F.greatest(F.lit(0), F.col("kk") + F.col("n") - F.col("nn"))
-    hi = F.least(F.col("kk"), F.col("n"))
-    inst = (inst.withColumn("lo", lo).withColumn("hi", hi)
-            .withColumn("k_obs", F.col("lo") + _mst_hash(
-                F.concat(F.lit("fo:"), d))
-                % (F.col("hi") - F.col("lo") + 1)))
-
-    def choose(n_col, k_col):
-        # Π_{i=1..k} (n-i+1)/i — every prefix product is itself a
-        # binomial, so each stepwise division is exact (and the
-        # double-precision quotient of exact ints < 2^53 is exact).
-        # Guard k=0: Spark's sequence(1, 0) would count DOWN.
-        return F.when(k_col <= 0, F.lit(1).cast("long")).otherwise(
-            F.aggregate(
-                F.sequence(F.lit(1), k_col),
-                F.lit(1).cast("long"),
-                lambda acc, i: ((acc * (n_col - i + 1)) / i)
-                .cast("long")))
-
-    sup = inst.withColumn(
-        "k", F.explode(F.sequence(F.col("lo"), F.col("hi"))))
-    sup = sup.withColumn(
-        "w", choose(F.col("kk"), F.col("k"))
-        * choose(F.col("nn") - F.col("kk"), F.col("n") - F.col("k")))
-    obs = sup.filter(F.col("k") == F.col("k_obs")).select(
-        "doc_id", F.col("w").alias("w_obs"))
-    return (sup.join(obs, "doc_id")
-            .groupBy("doc_id", "kk", "n", "k_obs")
-            .agg(F.sum(F.when(F.col("w") <= F.col("w_obs"),
-                              F.col("w")).otherwise(F.lit(0)))
-                 .alias("p_num"),
-                 F.sum("w").alias("p_den"))
-            .orderBy("doc_id"))
-
-
-def q_inversion_count(spark, sf_dir) -> DataFrame:
-    """Inversion count of each event-type's value sequence (ordered
-    by event_id) — engine: the O(n log n) merge-sort divide-and-
-    conquer count as a per-group applyInPandas kernel. Oracle: the
-    O(n²) definition — a self-join over all index pairs i < j with
-    vᵢ > vⱼ. Pure comparisons on the stored doubles, no float
-    arithmetic, so both engines decide identically."""
-    ev = (load(spark, sf_dir, "events")
-          .filter(F.col("event_id") < 2000)
-          .select("event_type", "event_id", "value"))
-
-    def kern(pdf):
-        import pandas as pd
-        vals = list(pdf.sort_values("event_id")["value"])
-
-        def rec(a):
-            if len(a) <= 1:
-                return a, 0
-            m = len(a) // 2
-            left, il = rec(a[:m])
-            right, ir = rec(a[m:])
-            merged, i, j, inv = [], 0, 0, il + ir
-            while i < len(left) and j < len(right):
-                if right[j] < left[i]:
-                    merged.append(right[j])
-                    j += 1
-                    inv += len(left) - i
-                else:
-                    merged.append(left[i])
-                    i += 1
-            merged.extend(left[i:])
-            merged.extend(right[j:])
-            return merged, inv
-        _, inv = rec(vals)
-        return pd.DataFrame({"event_type": [pdf["event_type"].iloc[0]],
-                             "n": [len(vals)], "inversions": [inv]})
-
-    return (ev.groupBy("event_type")
-            .applyInPandas(kern,
-                           "event_type string, n long, inversions long")
-            .orderBy("event_type"))
-
-
-def q_josephus(spark, sf_dir) -> DataFrame:
-    """Josephus survivor (k = 2) for 40 hash-derived circle sizes —
-    engine: the bitwise CLOSED FORM J(n) = 2L where n = 2^m + L,
-    highest power of two found by the shift-or fill trick (pure
-    column bit math, O(1) per row). Oracle: the textbook recurrence
-    J(1) = 0, J(m) = (J(m−1) + 2) mod m stepped m→n in a recursive
-    CTE. The classic 'cyclic left shift of n' identity, checked."""
-    d = F.col("doc_id").cast("string")
-    df = (load(spark, sf_dir, "documents")
-          .filter(F.col("doc_id") < 40)
-          .select("doc_id",
-                  (F.lit(1) + _mst_hash(F.concat(F.lit("jo:"), d))
-                   % 4000).alias("n")))
-    p = F.col("n")
-    for sh in (1, 2, 4, 8):
-        p = p.bitwiseOR(F.shiftright(p, sh))
-    hp = F.shiftright(p + 1, 1)  # highest power of two <= n
-    return (df.withColumn("survivor", 2 * (F.col("n") - hp))
-            .orderBy("doc_id"))
-
-
-def q_apsp_minplus(spark, sf_dir) -> DataFrame:
-    """All-pairs shortest paths on a 24-node weighted digraph —
-    engine: MIN-PLUS MATRIX SQUARING, D ← min(D, D⊗D), 5 join+min
-    rounds for paths up to 2^5 hops (the semiring view of APSP; the
-    diagonal zeros make each squaring monotone). Oracle: FLOYD–
-    WARSHALL, the pivot recurrence, replayed in a recursive CTE whose
-    state is the whole 24×24 matrix as one list. Two classical APSP
-    algorithms from different decompositions (path length vs pivot
-    set), agreeing on every finite distance."""
-    V = 24
-    inf = 10 ** 9
-    nodes = spark.range(V).select(F.col("id").alias("u"))
-    s = F.col("u").cast("string")
-    edges = (nodes.select(
-        "u", ((F.col("u") + 1) % V).alias("v"),
-        (F.lit(1) + _mst_hash(F.concat(F.lit("aw:"), s)) % 100)
-        .alias("d"))
-        .unionByName(nodes.select(
-            "u", (_mst_hash(F.concat(F.lit("at:"), s)) % V).alias("v"),
-            (F.lit(1) + _mst_hash(F.concat(F.lit("ax:"), s)) % 100)
-            .alias("d")))
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.min("d").alias("d")))
-    dist = (edges.unionByName(
-        nodes.select("u", F.col("u").alias("v"),
-                     F.lit(0).cast("long").alias("d")))
-        .groupBy("u", "v").agg(F.min("d").alias("d"))
-        .localCheckpoint(eager=True))
-    for _ in range(5):
-        right = dist.select(F.col("u").alias("m"),
-                            F.col("v").alias("v2"),
-                            F.col("d").alias("d2"))
-        dist = (dist.withColumnRenamed("v", "m")
-                .join(right, "m")
-                .groupBy(F.col("u"), F.col("v2").alias("v"))
-                .agg(F.min(F.col("d") + F.col("d2")).alias("d"))
-                .localCheckpoint(eager=True))
-    return dist.filter(F.col("d") < inf).orderBy("u", "v")
-
-
-def q_determinant_bareiss(spark, sf_dir) -> DataFrame:
-    """Exact integer determinant of 20 hash-derived 6×6 matrices —
-    engine: Bareiss fraction-free Gaussian elimination (1968; every
-    intermediate division is exact, partial pivoting with sign
-    tracking) in an applyInPandas kernel. Oracle: the LEIBNIZ
-    definition — all 720 permutations enumerated by a recursive CTE,
-    sign from the inversion count, Σ sgn(σ)·Πaᵢσ(ᵢ). Definition vs
-    elimination, exact integers both ways."""
-    r6 = spark.range(6)
-    mat = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20).select("doc_id")
-           .crossJoin(r6.select((F.col("id") + 1).alias("r")))
-           .crossJoin(r6.select((F.col("id") + 1).alias("c"))))
-    mat = mat.withColumn(
-        "val", _mst_hash(F.concat(
-            F.lit("dt:"), F.col("doc_id").cast("string"), F.lit(":"),
-            F.col("r").cast("string"), F.lit(":"),
-            F.col("c").cast("string"))) % 19 - 9)
-
-    def bareiss(pdf):
-        import pandas as pd
-        a = [[0] * 6 for _ in range(6)]
-        for r, c, v in zip(pdf["r"], pdf["c"], pdf["val"]):
-            a[int(r) - 1][int(c) - 1] = int(v)
-        sign, prev = 1, 1
-        for k in range(5):
-            if a[k][k] == 0:
-                for i in range(k + 1, 6):
-                    if a[i][k] != 0:
-                        a[k], a[i] = a[i], a[k]
-                        sign = -sign
-                        break
-                else:
-                    return pd.DataFrame(
-                        {"doc_id": [int(pdf["doc_id"].iloc[0])],
-                         "det": [0]})
-            for i in range(k + 1, 6):
-                for j in range(k + 1, 6):
-                    num = a[i][j] * a[k][k] - a[i][k] * a[k][j]
-                    assert num % prev == 0
-                    a[i][j] = num // prev
-                a[i][k] = 0
-            prev = a[k][k]
-        return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])],
-                             "det": [sign * a[5][5]]})
-
-    return (mat.groupBy("doc_id")
-            .applyInPandas(bareiss, "doc_id long, det long")
-            .orderBy("doc_id"))
-
-
-def q_easter_date(spark, sf_dir) -> DataFrame:
-    """Gregorian Easter for 1900–2299 — engine: GAUSS's algorithm
-    (1800, with both exception rules d=29/e=6 → Apr 19 and d=28/e=6/
-    (11M+11)%30<19 → Apr 18) as pure column arithmetic. Oracle: the
-    ANONYMOUS GREGORIAN algorithm (Meeus/Jones/Butcher 1876) — a
-    different published closed form with no exception cases. 400
-    years, two computus derivations, identical dates."""
-    yr = spark.range(1900, 2300).select(F.col("id").alias("year"))
-    a = F.col("year") % 19
-    b = F.col("year") % 4
-    c = F.col("year") % 7
-    k = F.floor(F.col("year") / 100).cast("long")
-    p = F.floor((13 + 8 * k) / 25).cast("long")
-    q = F.floor(k / 4).cast("long")
-    m = (15 - p + k - q) % 30
-    n = (4 + k - q) % 7
-    d = (19 * a + m) % 30
-    e = (2 * b + 4 * c + 6 * d + n) % 7
-    off = d + e  # days after March 22
-    day = F.when((d == 29) & (e == 6), F.lit(50 - 31)) \
-        .when((d == 28) & (e == 6) & ((11 * m + 11) % 30 < 19),
-              F.lit(49 - 31)) \
-        .otherwise(F.when(off <= 9, off + 22).otherwise(off - 9))
-    month = F.when((d == 29) & (e == 6), F.lit(4)) \
-        .when((d == 28) & (e == 6) & ((11 * m + 11) % 30 < 19),
-              F.lit(4)) \
-        .otherwise(F.when(off <= 9, F.lit(3)).otherwise(F.lit(4)))
-    return (yr.select("year", month.cast("long").alias("em"),
-                      day.cast("long").alias("ed"))
-            .orderBy("year"))
-
-
-def q_catalan_numbers(spark, sf_dir) -> DataFrame:
-    """Catalan numbers C_0..C_25 — engine: the CLOSED FORM
-    C_n = C(2n,n)/(n+1), the central binomial built as an exact
-    integer multiplicative fold Π(n+k)/k with stepwise-exact `div`
-    (each partial product is itself a binomial, so every division is
-    exact), one JVM higher-order aggregate per row. Oracle: the
-    CONVOLUTION RECURRENCE C_{n+1} = Σ C_i·C_{n−i} carried as a list
-    through a recursive CTE. Segner's recurrence vs the binomial
-    quotient — two classical derivations, exact integers both ways."""
-    return (spark.range(0, 26).select(F.col("id").alias("n"))
-            .select("n", F.expr(
-                "case when n = 0 then cast(1 as bigint) else "
-                "aggregate(sequence(1, n), cast(1 as bigint), "
-                "(acc, k) -> (acc * (n + k)) div k) div (n + 1) "
-                "end").alias("cat"))
-            .orderBy("n"))
-
-
-def q_gray_code(spark, sf_dir) -> DataFrame:
-    """Reflected binary Gray code for n = 0..1023 — engine: the
-    BITWISE CLOSED FORM g(n) = n XOR (n >> 1), one codegen
-    expression. Oracle: the REFLECTION CONSTRUCTION G(k+1) =
-    G(k) ++ reverse(G(k)) + 2^k grown as a list through 10 levels of
-    a recursive CTE. Construction-by-mirroring vs the xor identity —
-    the standard proof equivalence, checked value by value."""
-    return (spark.range(0, 1024).select(F.col("id").alias("n"))
-            .select("n", F.col("n").bitwiseXOR(
-                F.shiftright(F.col("n"), 1)).alias("gray"))
-            .orderBy("n"))
-
-
-def q_euler_totient(spark, sf_dir) -> DataFrame:
-    """Euler's totient φ(n) for n = 1..2000 — engine: TRIAL-DIVISION
-    FACTORIZATION in an Arrow mapInPandas kernel, φ = Π p^(k−1)(p−1)
-    over the prime-power decomposition. Oracle: the DEFINITION —
-    count of k ≤ n with gcd(n,k) = 1, a 4M-pair join over DuckDB's
-    builtin gcd. Multiplicative formula vs direct coprime census."""
-
-    def phi_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            ns, out = pdf["n"], []
-            for n0 in ns:
-                m, phi = int(n0), 1
-                d = 2
-                while d * d <= m:
-                    if m % d == 0:
-                        pk = 1
-                        while m % d == 0:
-                            m //= d
-                            pk *= d
-                        phi *= (pk // d) * (d - 1)
-                    d += 1
-                if m > 1:
-                    phi *= m - 1
-                out.append(phi)
-            yield pd.DataFrame({"n": ns, "phi": out})
-
-    return (spark.range(1, 2001).select(F.col("id").alias("n"))
-            .repartition(8)
-            .mapInPandas(phi_kernel, "n long, phi long")
-            .orderBy("n"))
-
-
-def q_mobius_function(spark, sf_dir) -> DataFrame:
-    """Möbius μ(n) for n = 1..1000 — engine: FACTORIZATION VIEW in
-    pure column algebra: primes sieved by a divisor anti-join, ω(n)
-    = count of prime divisors by a non-equi join, squarefree test
-    n mod p² — μ = 0 if not squarefree else (−1)^ω. Oracle: the
-    DIRICHLET-INVERSE RECURRENCE μ(1)=1, μ(n) = −Σ_{d|n, d<n} μ(d)
-    (from Σ_{d|n} μ(d) = [n=1]) stepped 1000 levels in a recursive
-    CTE. Local factor structure vs the global summatory identity."""
-    N = 1000
-    d = spark.range(2, N + 1).select(F.col("id").alias("p"))
-    e = spark.range(2, 33).select(F.col("id").alias("e"))
-    composite = d.join(
-        F.broadcast(e),
-        (F.col("e") < F.col("p")) & (F.col("p") % F.col("e") == 0),
-        "left_semi")
-    primes = d.join(composite, "p", "left_anti")
-    n_df = spark.range(1, N + 1).select(F.col("id").alias("n"))
-    fac = (n_df.join(F.broadcast(primes),
-                     F.col("n") % F.col("p") == 0, "left")
-           .groupBy("n")
-           .agg(F.count("p").alias("omega"),
-                F.max(F.when(
-                    F.col("n") % (F.col("p") * F.col("p")) == 0, 1)
-                    .otherwise(0)).alias("sq")))
-    mu = (F.when(F.col("sq") == 1, F.lit(0))
-          .otherwise(F.when(F.col("omega") % 2 == 0, 1)
-                     .otherwise(-1)))
-    return (fac.select("n", mu.cast("long").alias("mu"))
-            .orderBy("n"))
-
-
-def q_simpson_integrate(spark, sf_dir) -> DataFrame:
-    """Composite Simpson's rule on 30 hash-derived integer cubics
-    over [0,12], h=1 — engine: the QUADRATURE NODE SUM Σ wₖ·f(k)
-    with weights 1,4,2,…,4,1, distributed as a node explode +
-    groupBy (returns 3∫ so everything stays integer). Oracle: the
-    ANTIDERIVATIVE — 3∫ = 15552a + 1728b + 216c + 36d from
-    F(x) = ax⁴/4 + bx³/3 + cx²/2 + dx evaluated at 12. Simpson is
-    EXACT on cubics (its degree-3 exactness), so the two agree to
-    the integer."""
-    d = F.col("doc_id").cast("string")
-    coef = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 30)
-            .select(
-                "doc_id",
-                (_mst_hash(F.concat(F.lit("sa:"), d)) % 21 - 10)
-                .alias("a"),
-                (_mst_hash(F.concat(F.lit("sb:"), d)) % 21 - 10)
-                .alias("b"),
-                (_mst_hash(F.concat(F.lit("sc:"), d)) % 21 - 10)
-                .alias("c"),
-                (_mst_hash(F.concat(F.lit("sd:"), d)) % 21 - 10)
-                .alias("dd")))
-    nodes = spark.range(0, 13).select(F.col("id").alias("k"))
-    w = (F.when((F.col("k") == 0) | (F.col("k") == 12), 1)
-         .otherwise(F.when(F.col("k") % 2 == 1, 4).otherwise(2)))
-    x = F.col("k")
-    fx = (F.col("a") * x * x * x + F.col("b") * x * x
-          + F.col("c") * x + F.col("dd"))
-    return (coef.crossJoin(F.broadcast(nodes))
-            .groupBy("doc_id").agg(F.sum(w * fx).alias("i3"))
-            .orderBy("doc_id"))
-
-
-def q_farey_neighbors(spark, sf_dir) -> DataFrame:
-    """Successor pairs of the Farey sequence F_30 — engine: the
-    UNIMODULARITY THEOREM — a/b and c/d are F_n-adjacent iff
-    bc − ad = 1 and b + d > n — as a non-equi join over the reduced
-    fractions (reduced = divisor anti-join, no gcd needed). Oracle:
-    the DEFINITION — sort all reduced fractions by value and take
-    LEAD. The join discovers the ordering without ever sorting;
-    Cauchy's adjacency criterion vs the sorted walk."""
-    N = 30
-    fr = (spark.range(1, N + 1).select(F.col("id").alias("b"))
-          .crossJoin(spark.range(0, N + 1)
-                     .select(F.col("id").alias("a")))
-          .filter(F.col("a") <= F.col("b")))
-    g = spark.range(2, N + 1).select(F.col("id").alias("g"))
-    common = fr.join(
-        F.broadcast(g),
-        (F.col("a") % F.col("g") == 0)
-        & (F.col("b") % F.col("g") == 0), "left_semi")
-    red = fr.join(common, ["a", "b"], "left_anti")
-    right = red.select(F.col("a").alias("c"), F.col("b").alias("d2"))
-    adj = red.join(
-        F.broadcast(right),
-        (F.col("b") * F.col("c") - F.col("a") * F.col("d2") == 1)
-        & (F.col("b") + F.col("d2") > N))
-    return (adj.select("a", "b", "c", F.col("d2").alias("d"))
-            .orderBy("a", "b"))
-
-
-def q_stern_brocot(spark, sf_dir) -> DataFrame:
-    """Stern–Brocot tree paths for 40 hash-derived rationals —
-    engine: the CONTINUED-FRACTION rule — Euclid's quotients
-    [a₀;a₁,…,aₖ] become alternating R/L runs with the last run
-    shortened by one (the CF↔SB correspondence), an Arrow
-    mapInPandas kernel. Oracle: MEDIANT DESCENT — the binary-search
-    walk from (0/1, 1/0) through mediants replayed step by step in
-    a recursive CTE with exact cross-multiplied comparisons. Two
-    faces of the same tree: arithmetic of quotients vs navigation."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("sp:"), d)) % 99)
-               .alias("p0"),
-               (1 + _mst_hash(F.concat(F.lit("sq:"), d)) % 99)
-               .alias("q0")))
-
-    def sb_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            ps, qs, paths = [], [], []
-            for p0, q0 in zip(pdf["p0"], pdf["q0"]):
-                gg = math.gcd(int(p0), int(q0))
-                p, q = int(p0) // gg, int(q0) // gg
-                cf, a, b = [], p, q
-                while b:
-                    cf.append(a // b)
-                    a, b = b, a % b
-                cf[-1] -= 1
-                paths.append("".join(
-                    ("R" if i % 2 == 0 else "L") * c
-                    for i, c in enumerate(cf)))
-                ps.append(p)
-                qs.append(q)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": ps,
-                                "q": qs, "path": paths})
-
-    return (raw.repartition(4)
-            .mapInPandas(sb_kernel,
-                         "doc_id long, p long, q long, path string")
-            .orderBy("doc_id"))
-
-
-def q_stirling2(spark, sf_dir) -> DataFrame:
-    """Stirling numbers of the second kind S(n,k), 1<=k<=n<=12 —
-    engine: the INCLUSION-EXCLUSION closed form — k!*S(n,k) =
-    sum_j (-1)^j C(k,j) (k-j)^n (the surjection count), evaluated
-    as a j-explode + groupBy with binomials from a factorial
-    lookup literal; everything stays in exact longs (12^12 < 2^53
-    so the pow round-trip is exact). Oracle: the TRIANGLE
-    RECURRENCE S(n,k) = k*S(n-1,k) + S(n-1,k-1) grown level by
-    level in a recursive CTE carrying the whole row as a list.
-    Multiplicative sieve vs additive recurrence."""
-    fact = [1] * 13
-    for i in range(1, 13):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    nk = (spark.range(1, 13).select(F.col("id").alias("n"))
-          .join(spark.range(1, 13).select(F.col("id").alias("k")),
-                F.col("k") <= F.col("n")))
-    j = spark.range(0, 13).select(F.col("id").alias("j"))
-    t = nk.join(F.broadcast(j), F.col("j") <= F.col("k"))
-    binom = (F.element_at(fl, F.col("k").cast("int") + 1)
-             / (F.element_at(fl, F.col("j").cast("int") + 1)
-                * F.element_at(fl, (F.col("k") - F.col("j"))
-                               .cast("int") + 1))).cast("long")
-    sign = F.when(F.col("j") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    powkj = F.pow((F.col("k") - F.col("j")).cast("double"),
-                  F.col("n").cast("double")).cast("long")
-    return (t.groupBy("n", "k")
-            .agg(((F.sum(sign * binom * powkj))
-                  / F.element_at(fl, F.col("k").cast("int") + 1))
-                 .cast("long").alias("s"))
-            .orderBy("n", "k"))
-
-
-def q_derangements(spark, sf_dir) -> DataFrame:
-    """Subfactorials !n for n=0..20 — engine: the ALTERNATING-SUM
-    closed form !n = sum_k (-1)^k n!/k!, an explode over k with
-    exact long partial quotients n!/k! built from a factorial
-    literal (20! = 2.43e18 fits int64). Oracle: the two-term
-    RECURRENCE D(n) = (n-1)(D(n-1) + D(n-2)) in a linear recursive
-    CTE. Inclusion-exclusion vs recurrence."""
-    fact = [1] * 21
-    for i in range(1, 21):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(0, 21).select(F.col("id").alias("n"))
-    k = spark.range(0, 21).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
-    quot = (F.element_at(fl, F.col("n").cast("int") + 1)
-            / F.element_at(fl, F.col("k").cast("int") + 1)) \
-        .cast("long")
-    sign = F.when(F.col("k") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    return (t.groupBy("n").agg(F.sum(sign * quot).alias("d"))
-            .orderBy("n"))
-
-
-def q_lucas_binomial(spark, sf_dir) -> DataFrame:
-    """C(n,k) mod 13 for 40 hash-derived pairs with n < 500 —
-    engine: LUCAS' THEOREM — write n,k in base 13 and multiply the
-    per-digit small binomials C(n_i,k_i) mod 13 from a 13x13 table
-    literal (a digit pair with k_i > n_i zeroes the product), all
-    as one column expression over three base-13 digits. Oracle:
-    PASCAL'S RECURRENCE mod 13 — the triangle grown row by row in
-    a recursive CTE (list state), then the (n,k) pairs joined
-    against row n. Digit-product theorem vs additive triangle."""
-    P = 13
-    tab = [0] * (P * P)
-    for ni in range(P):
-        c = 1
-        for ki in range(ni + 1):
-            tab[ni * P + ki] = c % P
-            c = c * (ni - ki) // (ki + 1)
-    tl = F.array(*[F.lit(v) for v in tab])
-    d = F.col("doc_id").cast("string")
-    pairs = (load(spark, sf_dir, "documents")
-             .filter(F.col("doc_id") < 40)
-             .select(
-                 "doc_id",
-                 (_mst_hash(F.concat(F.lit("lb:"), d)) % 500)
-                 .alias("n")))
-    pairs = pairs.withColumn(
-        "k", _mst_hash(F.concat(F.lit("lk:"), d)) % (F.col("n") + 1))
-    prod = F.lit(1)
-    for i in range(3):
-        ni = (F.col("n") / (P ** i)).cast("long") % P
-        ki = (F.col("k") / (P ** i)).cast("long") % P
-        prod = prod * F.element_at(tl, (ni * P + ki).cast("int") + 1)
-    return (pairs.select("doc_id", "n", "k",
-                         (prod % P).alias("c_mod"))
-            .orderBy("doc_id"))
-
-
-def q_wythoff_cold(spark, sf_dir) -> DataFrame:
-    """The first 60 cold (P-)positions of Wythoff's game — engine:
-    the BEATTY closed form a_n = floor(n*phi), b_n = a_n + n, with
-    floor(n*phi) computed exactly as (n + isqrt(5n^2)) div 2 using
-    an integer-corrected sqrt (5n^2 is never a perfect square, and
-    two CASE correction steps pin the double sqrt to the true
-    isqrt). Oracle: the GREEDY MEX construction — a_n is the
-    smallest positive integer in no earlier pair and b_n = a_n + n,
-    replayed in a recursive CTE carrying the used-set as a list.
-    Closed form from the golden ratio vs the game-theoretic
-    definition."""
-    n = spark.range(1, 61).select(F.col("id").alias("n"))
-    x = F.col("n") * F.col("n") * 5
-    s0 = F.sqrt(x.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= x, s0 + 1).otherwise(s0)
-    s = F.when(s1 * s1 > x, s1 - 1).otherwise(s1)
-    a = ((F.col("n") + s) / 2).cast("long")
-    return (n.select("n", a.alias("a"), (a + F.col("n")).alias("b"))
-            .orderBy("n"))
-
-
-def q_r2_lattice(spark, sf_dir) -> DataFrame:
-    """r2(n) — number of representations of n as an ordered pair of
-    squares (signs included) for n=1..400 — engine: JACOBI'S
-    FORMULA r2(n) = 4*(d1(n) - d3(n)) where d1/d3 count divisors
-    congruent to 1/3 mod 4, computed as a divisor census join.
-    Oracle: the DEFINITION — count lattice points (a,b) with
-    a^2+b^2 = n over the full signed grid. A divisor-class theorem
-    vs brute lattice enumeration."""
-    n = spark.range(1, 401).select(F.col("id").alias("n"))
-    d = spark.range(1, 401).select(F.col("id").alias("d"))
-    divs = n.join(F.broadcast(d),
-                  (F.col("d") <= F.col("n"))
-                  & (F.col("n") % F.col("d") == 0))
-    return (divs.groupBy("n")
-            .agg((4 * (F.sum(F.when(F.col("d") % 4 == 1, 1)
-                             .otherwise(0))
-                       - F.sum(F.when(F.col("d") % 4 == 3, 1)
-                               .otherwise(0)))).alias("r2"))
-            .orderBy("n"))
-
-
-def q_sigma_classify(spark, sf_dir) -> DataFrame:
-    """sigma(n) and the perfect/abundant/deficient class for
-    n=1..600 — engine: the DIVISOR CENSUS — sigma = sum of divisors
-    found by an explicit divisibility join. Oracle: the
-    MULTIPLICATIVE closed form — factor each n into prime powers
-    (primes by non-existence of a smaller divisor, exponents by
-    maximal p^k | n) and take the product of geometric sums
-    (p^(e+1)-1)/(p-1). Census vs multiplicativity."""
-    n = spark.range(1, 601).select(F.col("id").alias("n"))
-    d = spark.range(1, 601).select(F.col("id").alias("d"))
-    divs = n.join(F.broadcast(d),
-                  (F.col("d") <= F.col("n"))
-                  & (F.col("n") % F.col("d") == 0))
-    sig = divs.groupBy("n").agg(F.sum("d").alias("sigma"))
-    cls = (F.when(F.col("sigma") == 2 * F.col("n"), "perfect")
-           .when(F.col("sigma") > 2 * F.col("n"), "abundant")
-           .otherwise("deficient"))
-    return sig.select("n", "sigma", cls.alias("cls")).orderBy("n")
-
-
-def q_pell_fundamental(spark, sf_dir) -> DataFrame:
-    """Fundamental solutions of Pell's equation x^2 - n*y^2 = 1 for
-    non-square n in 2..31 — engine: the CONTINUED-FRACTION method —
-    the standard (m,d,a) iteration for the CF of sqrt(n) with
-    convergent recurrences, stopping at the first convergent that
-    solves the equation (Lagrange's theorem guarantees it), as an
-    Arrow kernel in exact Python ints. Oracle: EXHAUSTIVE SEARCH —
-    the least x in 2..10^4+1 for which (x^2-1)/n is a perfect
-    square (all fundamental x for n<=31 are <=9801). Algebraic
-    number theory vs brute force."""
-    ns = (spark.range(2, 32).select(F.col("id").alias("n"))
-          .filter(F.sqrt(F.col("id").cast("double")).cast("long")
-                  * F.sqrt(F.col("id").cast("double")).cast("long")
-                  != F.col("id")))
-
-    def pell_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            xs, ys = [], []
-            for n in pdf["n"]:
-                n = int(n)
-                a0 = math.isqrt(n)
-                m, dd, a = 0, 1, a0
-                pm1, p = 1, a0
-                qm1, q = 0, 1
-                while p * p - n * q * q != 1:
-                    m = dd * a - m
-                    dd = (n - m * m) // dd
-                    a = (a0 + m) // dd
-                    pm1, p = p, a * p + pm1
-                    qm1, q = q, a * q + qm1
-                xs.append(p)
-                ys.append(q)
-            yield pd.DataFrame({"n": pdf["n"], "x": xs, "y": ys})
-
-    return (ns.repartition(4)
-            .mapInPandas(pell_kernel, "n long, x long, y long")
-            .orderBy("n"))
-
-
-def q_miller_rabin(spark, sf_dir) -> DataFrame:
-    """Primality of 60 hash-derived odd numbers below 10^6 —
-    engine: deterministic MILLER-RABIN with witness set {2,3,5,7}
-    (provably exact below 3,215,031,751), the strong-pseudoprime
-    test run as an Arrow kernel with exact modular exponentiation.
-    Oracle: the DEFINITION — a composite below 10^6 has a divisor
-    in 2..1000, so primality is the non-existence of one. Fermat
-    witnesses vs trial division."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select(
-               "doc_id",
-               (5 + 2 * (_mst_hash(F.concat(F.lit("mr:"), d))
-                         % 500000)).alias("n")))
-
-    def mr_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            flags = []
-            for n in pdf["n"]:
-                n = int(n)
-                if n < 2:
-                    flags.append(0)
-                    continue
-                for p in (2, 3, 5, 7):
-                    if n % p == 0:
-                        flags.append(1 if n == p else 0)
-                        break
-                else:
-                    dd, s = n - 1, 0
-                    while dd % 2 == 0:
-                        dd //= 2
-                        s += 1
-                    ok = True
-                    for a in (2, 3, 5, 7):
-                        x = pow(a, dd, n)
-                        if x in (1, n - 1):
-                            continue
-                        for _ in range(s - 1):
-                            x = x * x % n
-                            if x == n - 1:
-                                break
-                        else:
-                            ok = False
-                            break
-                    flags.append(1 if ok else 0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n": pdf["n"], "is_prime": flags})
-
-    return (raw.repartition(4)
-            .mapInPandas(mr_kernel,
-                         "doc_id long, n long, is_prime int")
-            .orderBy("doc_id"))
-
-
-def _hash_series(prefix: str, n_groups: int, length: int, mod: int,
-                 shift: int = 0):
-    """(g, pos, v) grid with v = sha-hash(prefix:g:pos) % mod - shift,
-    shared by the sequence-shaped battery rows."""
-    return (
-        "SELECT g.i AS g, p.j AS pos, "
-        f"cast('0x' || substr(sha256('{prefix}:' || "
-        "cast(g.i as varchar) || ':' || cast(p.j as varchar)), "
-        f"1, 8) as bigint) % {mod} - {shift} AS v "
-        f"FROM range(0, {n_groups}) g(i), range(0, {length}) p(j)")
-
-
-def q_kadane_max_subarray(spark, sf_dir) -> DataFrame:
-    """Maximum non-empty contiguous subarray sum over 16 hash-derived
-    64-long integer sequences — engine: the PREFIX-MIN identity —
-    best = max_i (prefix_i - min(0, min_{j<i} prefix_j)), two
-    window functions and a groupBy (Kadane linearized for a
-    distributed engine: no sequential carry, just running
-    extremes). Oracle: the DEFINITION — enumerate every (i,j)
-    span, sum its elements through a range join, take the max.
-    O(n) windows vs O(n^3) enumeration."""
-    g = spark.range(0, 16).select(F.col("id").alias("g"))
-    p = spark.range(0, 64).select(F.col("id").alias("pos"))
-    gs = F.col("g").cast("string")
-    ps = F.col("pos").cast("string")
-    t = g.crossJoin(F.broadcast(p)).select(
-        "g", "pos",
-        (_mst_hash(F.concat(F.lit("ka:"), gs, F.lit(":"), ps))
-         % 41 - 20).alias("v"))
-    w = Window.partitionBy("g").orderBy("pos")
-    wprev = (Window.partitionBy("g").orderBy("pos")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    t = t.withColumn("prefix", F.sum("v").over(w))
-    t = t.withColumn(
-        "base", F.least(F.lit(0), F.coalesce(
-            F.min("prefix").over(wprev), F.lit(0))))
-    return (t.groupBy("g")
-            .agg(F.max(F.col("prefix") - F.col("base")).alias("best"))
-            .orderBy("g"))
-
-
-def q_water_trapping(spark, sf_dir) -> DataFrame:
-    """Trapped rain water over 16 hash-derived 64-long elevation
-    profiles — engine: the PER-CELL formulation — water_i =
-    max(0, min(runmax_left_i, runmax_right_i) - h_i) via two
-    opposing running-max windows, summed per group. Oracle: the
-    HORIZONTAL SLAB decomposition — for each water level l, count
-    the cells with h < l lying strictly between the first and last
-    columns reaching l; sum over levels. Vertical columns vs
-    horizontal slabs — same volume by Fubini."""
-    g = spark.range(0, 16).select(F.col("id").alias("g"))
-    p = spark.range(0, 64).select(F.col("id").alias("pos"))
-    gs = F.col("g").cast("string")
-    ps = F.col("pos").cast("string")
-    t = g.crossJoin(F.broadcast(p)).select(
-        "g", "pos",
-        (_mst_hash(F.concat(F.lit("wt:"), gs, F.lit(":"), ps))
-         % 16).alias("h"))
-    wl = (Window.partitionBy("g").orderBy("pos")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wr = (Window.partitionBy("g").orderBy(F.col("pos").desc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    t = (t.withColumn("ml", F.max("h").over(wl))
-         .withColumn("mr", F.max("h").over(wr)))
-    water = F.greatest(
-        F.lit(0), F.least(F.col("ml"), F.col("mr")) - F.col("h"))
-    return (t.groupBy("g").agg(F.sum(water).alias("water"))
-            .orderBy("g"))
-
-
-def q_string_period(spark, sf_dir) -> DataFrame:
-    """Smallest weak period of 40 constructed near-periodic strings
-    (a 4-char stem repeated 6x plus a partial tail) — engine:
-    KMP's PREFIX FUNCTION — the smallest period is n - fail[n],
-    the failure chain computed as an Arrow kernel. Oracle: the
-    BORDER characterization — the least p for which the string
-    equals its own p-shift, i.e. substr(s, p+1) = substr(s, 1,
-    n-p), found by direct comparison over all p. Failure links vs
-    the definition of a border."""
-    base = F.lower(F.substring(
-        F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""), 1, 4))
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   F.concat(
-                       F.repeat(base, 6),
-                       F.substring(base, 1,
-                                   (F.col("doc_id") % 4).cast("int")))
-                   .alias("s"))
-           .filter(F.length("s") >= 8))
-
-    def kmp_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            periods = []
-            for s in pdf["s"]:
-                n = len(s)
-                fail = [0] * (n + 1)
-                k = 0
-                for i in range(1, n):
-                    while k and s[i] != s[k]:
-                        k = fail[k]
-                    if s[i] == s[k]:
-                        k += 1
-                    fail[i + 1] = k
-                periods.append(n - fail[n])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "s": pdf["s"], "period": periods})
-
-    return (raw.repartition(4)
-            .mapInPandas(kmp_kernel,
-                         "doc_id long, s string, period int")
-            .orderBy("doc_id"))
-
-
-def q_gauss_circle(spark, sf_dir) -> DataFrame:
-    """Gauss circle problem N(r) — lattice points inside x^2+y^2 <=
-    r^2 for r=1..60 — engine: the 1-D REDUCTION — N(r) = sum_x
-    (2*isqrt(r^2-x^2) + 1) over x=-r..r, with the double sqrt
-    pinned to the true integer root by two CASE corrections.
-    Oracle: the 2-D CENSUS — count the (x,y) grid directly.
-    Dimension reduction vs brute enumeration."""
-    r = spark.range(1, 61).select(F.col("id").alias("r"))
-    x = spark.range(-60, 61).select(F.col("id").alias("x"))
-    t = r.join(F.broadcast(x),
-               F.col("x") * F.col("x") <= F.col("r") * F.col("r"))
-    v = F.col("r") * F.col("r") - F.col("x") * F.col("x")
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    s = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    return (t.groupBy("r").agg(F.sum(2 * s + 1).alias("npoints"))
-            .orderBy("r"))
-
-
-def q_assignment_min(spark, sf_dir) -> DataFrame:
-    """Minimum-cost perfect assignment of 6 workers to 6 tasks for
-    8 hash-derived cost matrices — engine: SUBSET DP (Held-Karp
-    shape) — states (mask, cost) grown one worker per round by a
-    join against the cost rows of the next worker (worker index =
-    popcount of the mask), min per new mask; 6 rounds of joins,
-    the frontier never exceeds C(6,k) masks. Oracle: BRUTE FORCE —
-    every one of the 720 assignment prefixes enumerated in a
-    recursive CTE, min total at depth 6. Memoized subsets vs the
-    full factorial tree."""
-    g = spark.range(0, 8).select(F.col("id").alias("g"))
-    w = spark.range(0, 6).select(F.col("id").alias("wk"))
-    tsk = spark.range(0, 6).select(F.col("id").alias("tk"))
-    gs = F.col("g").cast("string")
-    cost = (g.crossJoin(F.broadcast(w)).crossJoin(F.broadcast(tsk))
-            .select("g", "wk", "tk",
-                    (_mst_hash(F.concat(
-                        F.lit("as:"), gs, F.lit(":"),
-                        F.col("wk").cast("string"), F.lit(":"),
-                        F.col("tk").cast("string"))) % 50)
-                    .alias("c")))
-    cost.cache()
-    state = g.select("g", F.lit(0).alias("mask"),
-                     F.lit(0).cast("long").alias("cost"))
-    for step in range(6):
-        nxt = (state.join(cost.filter(F.col("wk") == step), ["g"])
-               .filter(F.col("mask")
-                       .bitwiseAND(F.pow(F.lit(2.0),
-                                         F.col("tk").cast("double"))
-                                   .cast("long")) == 0)
-               .select("g",
-                       (F.col("mask")
-                        + F.pow(F.lit(2.0), F.col("tk").cast("double"))
-                        .cast("long")).alias("mask"),
-                       (F.col("cost") + F.col("c")).alias("cost")))
-        state = nxt.groupBy("g", "mask").agg(F.min("cost").alias("cost"))
-    out = state.groupBy("g").agg(F.min("cost").alias("best"))
-    res = out.orderBy("g")
-    cost.unpersist()
-    return res
-
-
-def q_perm_rank(spark, sf_dir) -> DataFrame:
-    """Lexicographic rank of 30 hash-derived permutations of
-    {0..6} — engine: the LEHMER CODE — rank = sum over positions
-    of (#later elements smaller than this one) * (remaining)!,
-    computed as a self-join inversion census against a factorial
-    literal. Oracle: ENUMERATION — all 5040 permutations of S_7
-    generated by a recursive CTE, ordered as strings, rank =
-    dense_rank - 1, joined by the permutation string. Factoradic
-    arithmetic vs the definition of lexicographic order."""
-    fact = [1] * 8
-    for i in range(1, 8):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    g = spark.range(0, 30).select(F.col("id").alias("doc_id"))
-    p = spark.range(0, 7).select(F.col("id").alias("elem"))
-    keyed = (g.crossJoin(F.broadcast(p))
-             .select("doc_id", "elem",
-                     _mst_hash(F.concat(
-                         F.lit("pr:"), F.col("doc_id").cast("string"),
-                         F.lit(":"), F.col("elem").cast("string")))
-                     .alias("key")))
-    wno = Window.partitionBy("doc_id").orderBy("key", "elem")
-    perm = keyed.select(
-        "doc_id", "elem",
-        (F.row_number().over(wno) - 1).alias("pos"))
-    right = perm.select(F.col("doc_id").alias("doc_id2"),
-                        F.col("elem").alias("elem2"),
-                        F.col("pos").alias("pos2"))
-    inv = (perm.join(right,
-                     (F.col("doc_id") == F.col("doc_id2"))
-                     & (F.col("pos2") > F.col("pos"))
-                     & (F.col("elem2") < F.col("elem")), "left")
-           .groupBy("doc_id", "pos", "elem")
-           .agg(F.count("elem2").alias("smaller_after")))
-    term = (F.col("smaller_after")
-            * F.element_at(fl, (6 - F.col("pos")).cast("int") + 1))
-    ranks = inv.groupBy("doc_id").agg(F.sum(term).alias("rank"))
-    pstr = (perm.groupBy("doc_id")
-            .agg(F.concat_ws(
-                "", F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("pos", "elem"))),
-                    lambda s: s["elem"].cast("string"))).alias("perm")))
-    return (ranks.join(pstr, "doc_id")
-            .select("doc_id", "perm", "rank").orderBy("doc_id"))
-
-
-def q_game_of_life(spark, sf_dir) -> DataFrame:
-    """Conway's Game of Life, 4 generations on a 16x16 torus, 12
-    hash-seeded boards — engine: the VECTORIZED STENCIL — each
-    board as a numpy array inside applyInPandas, neighbor counts
-    by eight np.roll shifts (toroidal by construction). Oracle:
-    the WEIGHTED-OFFSET relational trick — one recursive CTE pass
-    per generation expands each live cell over the 9 offsets with
-    weight 1 for neighbors and 10 for self, so a cell is alive
-    next generation iff its weighted sum is 3, 12, or 13 (B3/S23
-    in a single aggregate, one reference to the recursive table).
-    Array arithmetic vs relational algebra."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-    x = spark.range(0, 16).select(F.col("id").alias("x"))
-    y = spark.range(0, 16).select(F.col("id").alias("y"))
-    cells = (g.crossJoin(F.broadcast(x)).crossJoin(F.broadcast(y))
-             .filter(_mst_hash(F.concat(
-                 F.lit("gl:"), F.col("g").cast("string"), F.lit(":"),
-                 F.col("x").cast("string"), F.lit(":"),
-                 F.col("y").cast("string"))) % 5 == 0)
-             .select("g", "x", "y"))
-
-    def life_kernel(pdf):
-        import numpy as np
-        import pandas as pd
-        gval = int(pdf["g"].iloc[0])
-        b = np.zeros((16, 16), dtype=np.int64)
-        b[pdf["x"].to_numpy(), pdf["y"].to_numpy()] = 1
-        for _ in range(4):
-            n = sum(np.roll(np.roll(b, dx, 0), dy, 1)
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                    if (dx, dy) != (0, 0))
-            b = ((n == 3) | ((b == 1) & (n == 2))).astype(np.int64)
-        xs, ys = np.nonzero(b)
-        return pd.DataFrame({
-            "g": [gval], "pop": [int(b.sum())],
-            "checksum": [int((xs * 31 + ys).sum())]})
-
-    return (cells.groupBy("g")
-            .applyInPandas(life_kernel, "g long, pop long, checksum long")
-            .orderBy("g"))
-
-
-def q_bezier_eval(spark, sf_dir) -> DataFrame:
-    """Cubic Bezier curves with integer control points evaluated at
-    t = k/8, all in exact integers scaled by 8^3 — engine:
-    DE CASTELJAU'S ladder — three levels of lerps, each scaled by
-    8: L_i' = (8-k)L_i + k L_{i+1}. Oracle: the BERNSTEIN closed
-    form — 512*B(t) = sum_i C(3,i) k^i (8-k)^(3-i) P_i. Recursive
-    interpolation vs the expanded polynomial — equal by the
-    binomial theorem."""
-    g = spark.range(0, 20).select(F.col("id").alias("g"))
-    gs = F.col("g").cast("string")
-    pts = g.select("g", *[
-        (_mst_hash(F.concat(F.lit(f"bz{i}:"), gs)) % 101)
-        .alias(f"p{i}") for i in range(4)])
-    k = spark.range(0, 9).select(F.col("id").alias("k"))
-    t = pts.crossJoin(F.broadcast(k))
-    a, b = F.col("k"), 8 - F.col("k")
-    l0 = [F.col(f"p{i}") for i in range(4)]
-    l1 = [b * l0[i] + a * l0[i + 1] for i in range(3)]
-    l2 = [b * l1[i] + a * l1[i + 1] for i in range(2)]
-    val = b * l2[0] + a * l2[1]
-    return (t.select("g", "k", val.alias("v512"))
-            .orderBy("g", "k"))
-
-
-def q_collatz_steps(spark, sf_dir) -> DataFrame:
-    """Collatz total stopping time and trajectory peak for 50
-    hash-derived starts below 10^5 — engine: the hailstone loop as
-    an Arrow kernel in exact Python ints. Oracle: the same
-    dynamical system replayed step by step in a recursive CTE.
-    Imperative iteration vs relational fixpoint — both must walk
-    the identical orbit."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 50)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("cz:"), d))
-                    % 99998).alias("n0")))
-
-    def collatz_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            steps, peaks = [], []
-            for n0 in pdf["n0"]:
-                n, st, pk = int(n0), 0, int(n0)
-                while n != 1:
-                    n = n // 2 if n % 2 == 0 else 3 * n + 1
-                    st += 1
-                    pk = max(pk, n)
-                steps.append(st)
-                peaks.append(pk)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n0": pdf["n0"], "steps": steps,
-                                "peak": peaks})
-
-    return (raw.repartition(4)
-            .mapInPandas(collatz_kernel,
-                         "doc_id long, n0 long, steps int, peak long")
-            .orderBy("doc_id"))
-
-
-def q_happy_numbers(spark, sf_dir) -> DataFrame:
-    """Happy-number classification for n=1..500 — engine: CYCLE
-    DETECTION — iterate the digit-square-sum map with a visited
-    set in an Arrow kernel; happy iff the orbit hits 1 before
-    revisiting any value (no number theory assumed). Oracle: the
-    REACHES-4 theorem — every unhappy orbit passes through 4, so
-    the recursive CTE just iterates until n is 1 or 4. The
-    definition vs the classified-cycle characterization."""
-    n = spark.range(1, 501).select(F.col("id").alias("n"))
-
-    def happy_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            flags = []
-            for n0 in pdf["n"]:
-                seen, v = set(), int(n0)
-                while v != 1 and v not in seen:
-                    seen.add(v)
-                    v = sum(int(c) ** 2 for c in str(v))
-                flags.append(1 if v == 1 else 0)
-            yield pd.DataFrame({"n": pdf["n"], "happy": flags})
-
-    return (n.repartition(4)
-            .mapInPandas(happy_kernel, "n long, happy int")
-            .orderBy("n"))
-
-
-def q_ulam_spiral(spark, sf_dir) -> DataFrame:
-    """Square-spiral coordinates of n=1..400 (n=1 at the origin,
-    first step right, turns counter-clockwise) — engine: the RING
-    CLOSED FORM — ring k = floor((isqrt(n-1)+1)/2), offset j =
-    n - (2k-1)^2 placed on one of four sides by pure CASE algebra.
-    Oracle: the WALK — a recursive CTE stepping n=1..400 with
-    direction rotation and the 1,1,2,2,3,3,... run-length pattern.
-    O(1) arithmetic vs the generative definition."""
-    n = spark.range(1, 401).select(F.col("id").alias("n"))
-    v = F.col("n") - 1
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    isq = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    # the exchange is a projection-collapse barrier: without it the
-    # isqrt-correction tree is textually inlined into every CASE arm
-    # below and codegen blows the 64 KB method limit
-    kj = (n.select("n", ((isq + 1) / 2).cast("long").alias("k"))
-          .repartition(4)
-          .withColumn("j", F.col("n")
-                      - (2 * F.col("k") - 1) * (2 * F.col("k") - 1)))
-    k, j = F.col("k"), F.col("j")
-    x = (F.when(F.col("n") == 1, 0)
-         .when(j <= 2 * k, k)
-         .when(j <= 4 * k, k - (j - 2 * k))
-         .when(j <= 6 * k, -k)
-         .otherwise(-k + (j - 6 * k)))
-    y = (F.when(F.col("n") == 1, 0)
-         .when(j <= 2 * k, -k + j)
-         .when(j <= 4 * k, k)
-         .when(j <= 6 * k, k - (j - 4 * k))
-         .otherwise(-k))
-    return kj.select("n", x.alias("x"), y.alias("y")).orderBy("n")
-
-
-def q_zeller_dow(spark, sf_dir) -> DataFrame:
-    """ISO day-of-week for 80 hash-derived Gregorian dates
-    (1900-2099) — engine: ZELLER'S CONGRUENCE — pure integer
-    arithmetic on (y, m, d) with the Jan/Feb year shift, no date
-    type anywhere. Oracle: DuckDB's ICU-backed civil calendar
-    (isodow over make_date). A closed-form congruence vs a
-    calendar library."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 80)
-           .select(
-               "doc_id",
-               (1900 + _mst_hash(F.concat(F.lit("zy:"), d)) % 200)
-               .alias("y"),
-               (1 + _mst_hash(F.concat(F.lit("zm:"), d)) % 12)
-               .alias("m"),
-               (1 + _mst_hash(F.concat(F.lit("zd:"), d)) % 28)
-               .alias("dd")))
-    # Jan/Feb count as months 13/14 of the previous year
-    mm = F.when(F.col("m") <= 2, F.col("m") + 12).otherwise(F.col("m"))
-    yy = F.when(F.col("m") <= 2, F.col("y") - 1).otherwise(F.col("y"))
-    kk = yy % 100
-    jj = (yy / 100).cast("long")
-    h = (F.col("dd") + ((13 * (mm + 1)) / 5).cast("long")
-         + kk + (kk / 4).cast("long") + (jj / 4).cast("long")
-         + 5 * jj) % 7
-    # Zeller: h=0 Saturday ... -> ISO Mon=1..Sun=7
-    iso = (h + 5) % 7 + 1
-    return (raw.select("doc_id", "y", "m", "dd",
-                       iso.cast("int").alias("isodow"))
-            .orderBy("doc_id"))
-
-
-def q_wilson_primality(spark, sf_dir) -> DataFrame:
-    """Primality of n=2..250 by WILSON'S THEOREM — engine: (n-1)!
-    mod n computed as a JVM-side F.aggregate fold over
-    sequence(1, n-1) with a mod after every multiply (accumulator
-    < n^2, never leaves long range); n is prime iff the fold lands
-    on n-1. Oracle: trial division. A factorial congruence
-    characterization vs the definition by divisors."""
-    n = spark.range(2, 251).select(F.col("id").alias("n"))
-    fold = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), F.col("n") - 1),
-        F.lit(1).cast("long"),
-        lambda acc, x: (acc * x) % F.col("n"))
-    return (n.select(
-        "n",
-        F.when(fold == F.col("n") - 1, 1).otherwise(0)
-        .cast("int").alias("is_prime"))
-        .orderBy("n"))
-
-
-def q_faulhaber_sums(spark, sf_dir) -> DataFrame:
-    """Power sums S_k(m) = 1^k + ... + m^k for k=1..6 at 20
-    hash-derived m <= 300 — engine: the DEFINITION — explode
-    sequence(1, m), sum exact pow terms (300^6 < 2^53 so the
-    double pow round-trips losslessly). Oracle: FAULHABER'S closed
-    forms — the six classical polynomials in m, exact integer
-    division throughout. Brute summation vs Bernoulli-polynomial
-    algebra."""
-    d = F.col("doc_id").cast("string")
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 20)
-            .select("doc_id",
-                    (10 + _mst_hash(F.concat(F.lit("fh:"), d)) % 291)
-                    .alias("m")))
-    k = spark.range(1, 7).select(F.col("id").alias("k"))
-    t = (docs.crossJoin(F.broadcast(k))
-         .select("doc_id", "m", "k",
-                 F.explode(F.sequence(F.lit(1).cast("long"),
-                                      F.col("m"))).alias("i")))
-    term = F.pow(F.col("i").cast("double"),
-                 F.col("k").cast("double")).cast("long")
-    return (t.groupBy("doc_id", "m", "k")
-            .agg(F.sum(term).alias("s"))
-            .orderBy("doc_id", "k"))
-
-
-def q_sundaram_sieve(spark, sf_dir) -> DataFrame:
-    """Primes below 2002 — engine: the SIEVE OF SUNDARAM — from
-    k=1..1000 remove every k = i + j + 2ij (an anti-join against
-    the generated exclusion grid), keep 2k+1, prepend 2. Oracle:
-    trial division. Sundaram's index arithmetic — which never
-    mentions divisibility — vs the definition."""
-    N2 = 1000
-    k = spark.range(1, N2 + 1).select(F.col("id").alias("k"))
-    i = spark.range(1, 23).select(F.col("id").alias("i"))
-    j = spark.range(1, N2 + 1).select(F.col("id").alias("j"))
-    ex = (i.crossJoin(j)
-          .filter((F.col("i") <= F.col("j"))
-                  & (F.col("i") + F.col("j")
-                     + 2 * F.col("i") * F.col("j") <= N2))
-          .select((F.col("i") + F.col("j")
-                   + 2 * F.col("i") * F.col("j")).alias("k"))
-          .distinct())
-    odd = (k.join(ex, "k", "left_anti")
-           .select((2 * F.col("k") + 1).alias("p")))
-    two = spark.range(2, 3).select(F.col("id").alias("p"))
-    return two.unionAll(odd).orderBy("p")
-
-
-def q_reverse_add_palindrome(spark, sf_dir) -> DataFrame:
-    """Reverse-and-add palindrome convergence for n=1..180 (all
-    below the first Lychrel candidate 196): step count and the
-    palindrome reached — engine: exact Python int arithmetic in an
-    Arrow kernel (reverse by slicing digits of the integer).
-    Oracle: a recursive CTE reversing the DECIMAL STRING with
-    DuckDB's reverse() and casting back. Integer arithmetic vs
-    string manipulation — the same orbit through two
-    representations."""
-    n = spark.range(1, 181).select(F.col("id").alias("n"))
-
-    def ra_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            steps, finals = [], []
-            for n0 in pdf["n"]:
-                v, st = int(n0), 0
-                while str(v) != str(v)[::-1]:
-                    v += int(str(v)[::-1])
-                    st += 1
-                steps.append(st)
-                finals.append(v)
-            yield pd.DataFrame({"n": pdf["n"], "steps": steps,
-                                "pal": finals})
-
-    return (n.repartition(4)
-            .mapInPandas(ra_kernel, "n long, steps int, pal long")
-            .orderBy("n"))
-
-
-_FF_PRIMES = (101, 103, 107, 109, 113, 127, 131, 137, 139, 149, 151,
-              157, 163, 167, 173, 179, 181, 191, 193, 197, 199)
-
-
-def q_fermat_factorization(spark, sf_dir) -> DataFrame:
-    """Factor 30 semiprimes with close prime factors (both drawn
-    from the primes in [101,199]) — engine: FERMAT'S METHOD — scan
-    a = ceil(sqrt(n)) + t for the first t with a^2 - n a perfect
-    square (t <= 16 suffices for this factor gap), all integer
-    column algebra with corrected isqrt, then (p,q) = (a-y, a+y).
-    Oracle: TRIAL DIVISION — the least divisor >= 2. Difference of
-    squares vs divisor search."""
-    pl = F.array(*[F.lit(v) for v in _FF_PRIMES])
-    d = F.col("doc_id").cast("string")
-    base = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 30)
-            .select(
-                "doc_id",
-                F.element_at(pl, (_mst_hash(F.concat(F.lit("fp:"), d))
-                                  % 21).cast("int") + 1).alias("p0"),
-                F.element_at(pl, (_mst_hash(F.concat(F.lit("fq:"), d))
-                                  % 21).cast("int") + 1).alias("q0")))
-    base = base.select(
-        "doc_id", (F.col("p0") * F.col("q0")).cast("long").alias("n"))
-    nv = F.col("n") - 1
-    r0 = F.sqrt(nv.cast("double")).cast("long")
-    r1 = F.when((r0 + 1) * (r0 + 1) <= nv, r0 + 1).otherwise(r0)
-    isq_nm1 = F.when(r1 * r1 > nv, r1 - 1).otherwise(r1)
-    base = (base.withColumn("a0", isq_nm1 + 1).repartition(4))
-    t = spark.range(0, 17).select(F.col("id").alias("t"))
-    cand = base.join(F.broadcast(t))
-    a = F.col("a0") + F.col("t")
-    y2 = a * a - F.col("n")
-    s0 = F.sqrt(y2.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= y2, s0 + 1).otherwise(s0)
-    y = F.when(s1 * s1 > y2, s1 - 1).otherwise(s1)
-    hits = (cand.filter(y * y == y2)
-            .select("doc_id", "n", "t", (a - y).alias("p"),
-                    (a + y).alias("q")))
-    w = Window.partitionBy("doc_id").orderBy("t")
-    return (hits.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("doc_id", "n", "p", "q").orderBy("doc_id"))
-
-
-def q_binary_gcd(spark, sf_dir) -> DataFrame:
-    """gcd of 60 hash-derived pairs below 10^9 — engine: STEIN'S
-    BINARY ALGORITHM — shifts, subtractions, and a common power of
-    two, no division anywhere, as an Arrow kernel. Oracle: DuckDB's
-    gcd() builtin, an independent C++ Euclid. Two algorithms, two
-    engines."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("ga:"), d)) % 999999999)
-               .alias("a"),
-               (1 + _mst_hash(F.concat(F.lit("gb:"), d)) % 999999999)
-               .alias("b")))
-
-    def stein_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            gs = []
-            for a, b in zip(pdf["a"], pdf["b"]):
-                a, b = int(a), int(b)
-                shift = 0
-                while a % 2 == 0 and b % 2 == 0:
-                    a //= 2
-                    b //= 2
-                    shift += 1
-                while a % 2 == 0:
-                    a //= 2
-                while b:
-                    while b % 2 == 0:
-                        b //= 2
-                    if a > b:
-                        a, b = b, a
-                    b -= a
-                gs.append(a << shift)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "a": pdf["a"],
-                                "b": pdf["b"], "g": gs})
-
-    return (raw.repartition(4)
-            .mapInPandas(stein_kernel,
-                         "doc_id long, a long, b long, g long")
-            .orderBy("doc_id"))
-
-
-def q_ballot_paths(spark, sf_dir) -> DataFrame:
-    """Bertrand's ballot problem — for 20 hash-derived (a,b) with
-    a > b and a+b <= 24, the number of monotone lattice paths from
-    (0,0) to (a,b) keeping a strictly ahead at every prefix —
-    engine: the REFLECTION closed form (a-b)/(a+b) * C(a+b,a),
-    with the binomial built by a JVM F.aggregate multiplicative
-    fold (each prefix is itself a binomial, so the division is
-    exact at every step). Oracle: DP — grow the path-count table
-    one step per recursive-CTE iteration, states filtered to
-    x > y, counts merged by an aggregate in the recursive term.
-    A bijection-counting identity vs explicit dynamic programming."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("ba:"), d)) % 12)
-               .alias("b")))
-    raw = raw.withColumn(
-        "a", F.col("b") + 1
-        + _mst_hash(F.concat(F.lit("bb:"), d)) % 12)
-    n, k = F.col("a") + F.col("b"), F.col("a")
-    binom = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), k),
-        F.lit(1).cast("long"),
-        lambda acc, i: F.floor(acc * (n - k + i) / i).cast("long"))
-    return (raw.select(
-        "doc_id", "a", "b",
-        ((F.col("a") - F.col("b")) * binom
-         / (F.col("a") + F.col("b"))).cast("long").alias("npaths"))
-        .orderBy("doc_id"))
-
-
-def q_dragon_turns(spark, sf_dir) -> DataFrame:
-    """Turn direction at fold n of the Heighway dragon curve,
-    n=1..512 — engine: the BIT CLOSED FORM — the turn is left iff
-    the bit above the lowest set bit of n is 0, i.e.
-    ((n & -n) << 1) & n == 0, pure JVM bit algebra. Oracle: the
-    L-SYSTEM — fold the strip: s' = s || 'L' || reverse(swap(s)),
-    grown in a recursive CTE, then read position n. Bit arithmetic
-    vs the paper-folding definition."""
-    nn = spark.range(1, 513).select(F.col("id").alias("n"))
-    low = F.col("n").bitwiseAND(-F.col("n"))
-    above = F.shiftleft(low, 1).bitwiseAND(F.col("n"))
-    return (nn.select(
-        "n", F.when(above == 0, "L").otherwise("R").alias("turn"))
-        .orderBy("n"))
-
-
-def q_nqueens(spark, sf_dir) -> DataFrame:
-    """8-queens solution census grouped by first-row column —
-    engine: PREFIX-SPLIT backtracking — the search tree is split
-    on the first queen's column into 8 independent branches, one
-    Arrow kernel invocation each (how a cluster would shard an
-    exhaustive search), each branch returning its count and a
-    base-8 checksum of its solutions. Oracle: RELATIONAL GROWTH —
-    a recursive CTE extends placement strings one row at a time,
-    conflicts filtered by a correlated EXISTS over earlier rows.
-    Imperative backtracking vs declarative generate-and-test."""
-    c0 = spark.range(0, 8).select(F.col("id").alias("col0"))
-
-    def queens_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for col0 in pdf["col0"]:
-                col0 = int(col0)
-                count, checksum = 0, 0
-                stack = [(col0,)]
-                while stack:
-                    pos = stack.pop()
-                    k = len(pos)
-                    if k == 8:
-                        count += 1
-                        v = 0
-                        for c in pos:
-                            v = v * 8 + c
-                        checksum += v
-                        continue
-                    for c in range(8):
-                        if all(c != pc and abs(c - pc) != k - i
-                               for i, pc in enumerate(pos)):
-                            stack.append(pos + (c,))
-                outs.append((col0, count, checksum))
-            yield pd.DataFrame(
-                {"col0": [o[0] for o in outs],
-                 "n_solutions": [o[1] for o in outs],
-                 "checksum": [o[2] for o in outs]})
-
-    return (c0.repartition(8)
-            .mapInPandas(queens_kernel,
-                         "col0 long, n_solutions long, checksum long")
-            .orderBy("col0"))
-
-
-def q_josephus_k3(spark, sf_dir) -> DataFrame:
-    """Josephus survivor for k=3, circles n=1..60 — engine: the
-    O(n) RECURRENCE J(1)=0, J(n)=(J(n-1)+3) mod n in an Arrow
-    kernel. Oracle: the SIMULATION — the circle as a list in a
-    recursive CTE, removing every third person by slice
-    concatenation until one remains. Recurrence algebra vs acting
-    out the story."""
-    n = spark.range(1, 61).select(F.col("id").alias("n"))
-
-    def jos_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            out = []
-            for n0 in pdf["n"]:
-                j = 0
-                for m in range(2, int(n0) + 1):
-                    j = (j + 3) % m
-                out.append(j + 1)
-            yield pd.DataFrame({"n": pdf["n"], "survivor": out})
-
-    return (n.repartition(4)
-            .mapInPandas(jos_kernel, "n long, survivor long")
-            .orderBy("n"))
-
-
-def q_stern_fusc(spark, sf_dir) -> DataFrame:
-    """Stern's diatomic sequence fusc(n), n=1..200 — engine:
-    DIJKSTRA'S BIT LOOP — scan the bits of n from the low end
-    keeping the pair (a,b); set bits do b+=a, clear bits a+=b; the
-    answer is b (O(log n) per value). Oracle: the HYPERBINARY
-    characterization — fusc(n) counts representations of n-1 as a
-    sum of powers of two each used at most twice, enumerated
-    digit-by-digit in a recursive CTE. Bit dynamics vs a counting
-    theorem."""
-    n = spark.range(1, 201).select(F.col("id").alias("n"))
-
-    def fusc_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            out = []
-            for n0 in pdf["n"]:
-                v, a, b = int(n0), 1, 0
-                while v:
-                    if v & 1:
-                        b += a
-                    else:
-                        a += b
-                    v >>= 1
-                out.append(b)
-            yield pd.DataFrame({"n": pdf["n"], "fusc": out})
-
-    return (n.repartition(4)
-            .mapInPandas(fusc_kernel, "n long, fusc long")
-            .orderBy("n"))
-
-
-def q_triangular_square(spark, sf_dir) -> DataFrame:
-    """The first seven square-triangular numbers — engine: the
-    PELL-DERIVED RECURRENCE N_{k+1} = 34*N_k - N_{k-1} + 2 from
-    (0, 1), an exact kernel. Oracle: INTERSECTION BY JOIN — all
-    triangular numbers m(m+1)/2 and all squares j^2 below 1.7e9
-    equi-joined, ranked by value. Recurrence from the Pell
-    structure vs the definition as a set intersection."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def st_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            vals, a, b = [], 0, 1
-            for _ in range(7):
-                a, b = b, 34 * b - a + 2
-                vals.append(a)
-            yield pd.DataFrame({"k": list(range(1, 8)), "v": vals})
-
-    return (one.mapInPandas(st_kernel, "k long, v long")
-            .orderBy("k"))
-
-
-def q_partition_pentagonal(spark, sf_dir) -> DataFrame:
-    """Integer partition counts p(0..40) — engine: EULER'S
-    PENTAGONAL NUMBER THEOREM — p(n) = sum_k (-1)^(k-1)
-    [p(n-k(3k-1)/2) + p(n-k(3k+1)/2)], the sparse O(n*sqrt(n))
-    recurrence in an exact kernel. Oracle: the BOUNDED-PARTS coin
-    DP — one part size per recursive iteration, the whole
-    p(*, parts<=k) row carried as a list and convolved by nested
-    list lambdas. A generating-function identity vs textbook DP."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def pent_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            N = 40
-            p = [0] * (N + 1)
-            p[0] = 1
-            for n in range(1, N + 1):
-                total, k = 0, 1
-                while True:
-                    g1 = k * (3 * k - 1) // 2
-                    g2 = k * (3 * k + 1) // 2
-                    if g1 > n and g2 > n:
-                        break
-                    sign = 1 if k % 2 == 1 else -1
-                    if g1 <= n:
-                        total += sign * p[n - g1]
-                    if g2 <= n:
-                        total += sign * p[n - g2]
-                    k += 1
-                p[n] = total
-            yield pd.DataFrame({"n": list(range(N + 1)), "p": p})
-
-    return (one.mapInPandas(pent_kernel, "n long, p long")
-            .orderBy("n"))
-
-
-def q_frobenius_coin(spark, sf_dir) -> DataFrame:
-    """Frobenius number and non-representable count for 24 coprime
-    coin pairs (consecutive and (a, 2a-1) families) — engine:
-    SYLVESTER'S closed forms — g = ab - a - b and
-    N = (a-1)(b-1)/2, pure column algebra. Oracle: the CENSUS —
-    build the representable set {xa + yb} by a bounded grid join
-    and count/max the gaps directly. The 1882 theorem vs brute
-    enumeration."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 24)
-           .select("doc_id",
-                   (3 + _mst_hash(F.concat(F.lit("fr:"), d)) % 18)
-                   .alias("a")))
-    b = (F.when(F.col("doc_id") % 2 == 0, F.col("a") + 1)
-         .otherwise(2 * F.col("a") - 1))
-    raw = raw.withColumn("b", b)
-    return (raw.select(
-        "doc_id", "a", "b",
-        (F.col("a") * F.col("b") - F.col("a") - F.col("b"))
-        .alias("frob"),
-        (((F.col("a") - 1) * (F.col("b") - 1)) / 2).cast("long")
-        .alias("n_nonrep"))
-        .orderBy("doc_id"))
-
-
-def q_mod_inverse(spark, sf_dir) -> DataFrame:
-    """Modular inverses mod the prime 1000003 for 40 hash-derived
-    residues — engine: the EXTENDED EUCLIDEAN algorithm (Bezout
-    coefficients) in an exact kernel. Oracle: FERMAT'S LITTLE
-    THEOREM — a^(p-2) mod p by square-and-multiply, one bit per
-    recursive-CTE iteration. Bezout identity vs the group-order
-    argument."""
-    P = 1000003
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("mi:"), d))
-                    % (P - 3)).alias("a")))
-
-    def ext_euclid_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            invs = []
-            for a in pdf["a"]:
-                old_r, r = int(a), P
-                old_s, s = 1, 0
-                while r:
-                    q = old_r // r
-                    old_r, r = r, old_r - q * r
-                    old_s, s = s, old_s - q * s
-                invs.append(old_s % P)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "a": pdf["a"], "inv": invs})
-
-    return (raw.repartition(4)
-            .mapInPandas(ext_euclid_kernel,
-                         "doc_id long, a long, inv long")
-            .orderBy("doc_id"))
-
-
-def q_look_and_say(spark, sf_dir) -> DataFrame:
-    """The look-and-say sequence from '1', steps 1..12 — engine:
-    imperative run-length description in an exact kernel. Oracle:
-    RELATIONAL RLE — inside each recursive-CTE iteration a
-    correlated subquery explodes the string, groups runs with the
-    gaps-and-islands rank trick, and string_aggs the description
-    back together. A five-line loop vs window-function algebra."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def las_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            s = "1"
-            steps, lens, strs = [], [], []
-            for st in range(1, 13):
-                out, i = [], 0
-                while i < len(s):
-                    j = i
-                    while j < len(s) and s[j] == s[i]:
-                        j += 1
-                    out.append(str(j - i) + s[i])
-                    i = j
-                s = "".join(out)
-                steps.append(st)
-                lens.append(len(s))
-                strs.append(s)
-            yield pd.DataFrame({"step": steps, "len": lens, "s": strs})
-
-    return (one.mapInPandas(las_kernel, "step long, len long, s string")
-            .orderBy("step"))
-
-
-def q_machin_pi(spark, sf_dir) -> DataFrame:
-    """Pi to 25 digits by MACHIN'S FORMULA pi = 16*atan(1/5) -
-    4*atan(1/239), all arithmetic on integers scaled by 10^30 with
-    identical floor-division truncation on both sides — engine:
-    Python bignums in a kernel. Oracle: DuckDB HUGEINT (128-bit)
-    — the power ladders grown in recursive CTEs. Two bignum
-    implementations, one Gregory series."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-    SCALE = 10 ** 30
-
-    def machin_kernel(it):
-        import pandas as pd
-
-        def atan_inv(x):
-            total, k, p = 0, 0, x
-            while p <= SCALE:
-                term = SCALE // ((2 * k + 1) * p)
-                total += -term if k % 2 else term
-                k += 1
-                p *= x * x
-            return total
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pi = 16 * atan_inv(5) - 4 * atan_inv(239)
-            yield pd.DataFrame({"pi_str": [str(pi)],
-                                "d25": [str(pi)[:25]]})
-
-    return one.mapInPandas(machin_kernel, "pi_str string, d25 string")
-
-
-def q_egyptian_fractions(spark, sf_dir) -> DataFrame:
-    """Sylvester-Fibonacci greedy egyptian-fraction expansions of
-    24 reduced fractions p/q (p<=4, q<=31) — engine: exact
-    Fraction arithmetic in a kernel, unit = ceil(q/p) each step,
-    gcd-reduced. Oracle: the same greedy replayed in a recursive
-    CTE with DuckDB's integer ceil-division and gcd(). One greedy
-    invariant, two exact-arithmetic engines."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 24)
-           .select("doc_id",
-                   (F.col("doc_id") % 3 + 2).alias("p"),
-                   (6 + _mst_hash(F.concat(F.lit("eg:"), d)) % 26)
-                   .alias("q")))
-
-    def eg_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            ids, ks, units = [], [], []
-            for doc, p, q in zip(pdf["doc_id"], pdf["p"], pdf["q"]):
-                g = math.gcd(int(p), int(q))
-                num, den = int(p) // g, int(q) // g
-                k = 1
-                while num > 0:
-                    u = (den + num - 1) // num
-                    ids.append(doc)
-                    ks.append(k)
-                    units.append(u)
-                    num, den = num * u - den, den * u
-                    g = math.gcd(num, den) if num else 1
-                    num, den = num // g, den // g
-                    k += 1
-            yield pd.DataFrame({"doc_id": ids, "k": ks, "unit": units})
-
-    return (raw.repartition(4)
-            .mapInPandas(eg_kernel, "doc_id long, k int, unit long")
-            .orderBy("doc_id", "k"))
-
-
-def q_pick_theorem(spark, sf_dir) -> DataFrame:
-    """Interior and boundary lattice counts of 12 hash-derived
-    staircase (orthogonal, simple) polygons — engine: PICK'S
-    THEOREM — twice-area by the shoelace over the closed vertex
-    cycle, boundary = perimeter (axis-parallel unit lattice), and
-    I = (2A - B + 2)/2, built entirely from window cumsums and a
-    modular-index edge self-join (no kernel, no enumeration).
-    Oracle: the CENSUS — every bounding-box lattice point tested
-    exactly: on-boundary by segment membership, interior by
-    half-open ray casting over vertical edges. A 1899 identity vs
-    counting points one by one."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-    i = spark.range(1, 7).select(F.col("id").alias("i"))
-    gs, istr = F.col("g").cast("string"), F.col("i").cast("string")
-    steps = (g.crossJoin(F.broadcast(i))
-             .select("g", "i",
-                     (1 + _mst_hash(F.concat(F.lit("pw:"), gs,
-                                             F.lit(":"), istr)) % 5)
-                     .alias("w"),
-                     (1 + _mst_hash(F.concat(F.lit("ph:"), gs,
-                                             F.lit(":"), istr)) % 5)
-                     .alias("h")))
-    wcum = Window.partitionBy("g").orderBy("i") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    steps = (steps.withColumn("cw", F.sum("w").over(wcum))
-             .withColumn("ch", F.sum("h").over(wcum)))
-    v_lo = steps.select("g", (2 * F.col("i") - 1).alias("idx"),
-                        F.col("cw").alias("x"),
-                        (F.col("ch") - F.col("h")).alias("y"))
-    v_hi = steps.select("g", (2 * F.col("i")).alias("idx"),
-                        F.col("cw").alias("x"), F.col("ch").alias("y"))
-    v_start = g.select("g", F.lit(0).cast("long").alias("idx"),
-                       F.lit(0).cast("long").alias("x"),
-                       F.lit(0).cast("long").alias("y"))
-    v_top = (steps.groupBy("g").agg(F.sum("h").alias("y"))
-             .select("g", F.lit(13).cast("long").alias("idx"),
-                     F.lit(0).cast("long").alias("x"), "y"))
-    verts = v_start.unionAll(v_lo).unionAll(v_hi).unionAll(v_top)
-    nxt = verts.select(F.col("g").alias("g2"),
-                       F.col("idx").alias("idx2"),
-                       F.col("x").alias("x2"), F.col("y").alias("y2"))
-    edges = verts.join(
-        nxt, (F.col("g") == F.col("g2"))
-        & (F.col("idx2") == (F.col("idx") + 1) % 14))
-    agg = edges.groupBy("g").agg(
-        F.sum(F.col("x") * F.col("y2")
-              - F.col("x2") * F.col("y")).alias("a2"),
-        F.sum(F.abs(F.col("x2") - F.col("x"))
-              + F.abs(F.col("y2") - F.col("y"))).alias("b"))
-    return (agg.select(
-        "g", "b",
-        ((F.col("a2") - F.col("b") + 2) / 2).cast("long").alias("i"))
-        .orderBy("g"))
-
-
-def q_perfect_power(spark, sf_dir) -> DataFrame:
-    """Perfect-power detection for 40 candidates (half constructed
-    b^e, half random) — engine: ROOT EXTRACTION — for every
-    exponent k=2..30 take the float k-th root, test the three
-    neighboring integers by an exact JVM fold (overflow-capped
-    repeated multiplication, no float equality anywhere); report
-    the largest exponent and its base via max_by. Oracle:
-    ENUMERATION — the exact power ladder b^e <= 2e9 grown by a
-    recursive CTE and joined against the candidates. Inverse
-    search vs forward generation."""
-    d = F.col("doc_id").cast("string")
-    h1 = _mst_hash(F.concat(F.lit("pp1:"), d))
-    h2 = _mst_hash(F.concat(F.lit("pp2:"), d))
-    b, e = 2 + h1 % 60, 2 + h2 % 4
-    # constructed powers built by exact multiplication (a float pow
-    # could truncate one off on cast and desync from the oracle)
-    bpow = (F.when(e == 2, b * b).when(e == 3, b * b * b)
-            .when(e == 4, b * b * b * b).otherwise(b * b * b * b * b))
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   F.when(F.col("doc_id") % 2 == 0, bpow)
-                   .otherwise(2 + h1 % 999999999).alias("n")))
-    k = spark.range(2, 31).select(F.col("id").alias("k"))
-    dl = spark.range(-1, 2).select(F.col("id").alias("delta"))
-    cand = raw.join(F.broadcast(k)).join(F.broadcast(dl))
-    root = F.floor(F.pow(F.col("n").cast("double"),
-                         1.0 / F.col("k"))).cast("long")
-    c = root + F.col("delta")
-    fold = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), F.col("k")),
-        F.lit(1).cast("long"),
-        lambda acc, _: F.when((acc < 0) | (acc > 2000000000),
-                              F.lit(-1).cast("long"))
-        .otherwise(acc * c))
-    hits = (cand.withColumn("c", c)
-            .filter((F.col("c") >= 2) & (fold == F.col("n"))))
-    agg = (hits.groupBy("doc_id", "n")
-           .agg(F.max("k").alias("kmax"),
-                F.expr("max_by(c, k)").alias("bmin")))
-    return (raw.join(agg.select("doc_id", "kmax", "bmin"),
-                     "doc_id", "left")
-            .select("doc_id", "n",
-                    F.when(F.col("kmax").isNull(), 0).otherwise(1)
-                    .cast("int").alias("is_pp"),
-                    F.coalesce(F.col("kmax"), F.lit(0)).alias("kmax"),
-                    F.coalesce(F.col("bmin"), F.lit(0)).alias("bmin"))
-            .orderBy("doc_id"))
-
-
-def q_aliquot_sequence(spark, sf_dir) -> DataFrame:
-    """Aliquot sequences (iterated proper-divisor sums), 6 steps
-    from every n in 2..120 — engine: ITERATIVE RELATIONAL rounds —
-    each step is one divisor join (broadcast divisor range,
-    v % d = 0, d < v) plus a groupBy sum, values <= 1 pinned to 0.
-    Oracle: a recursive CTE computing the same dynamical system
-    with a correlated divisor-sum subquery per step. Driver-side
-    loop unrolling vs in-query recursion."""
-    cur = (spark.range(2, 121)
-           .select(F.col("id").alias("n"), F.lit(0).alias("step"),
-                   F.col("id").alias("v")))
-    dv = spark.range(1, 10001).select(F.col("id").alias("d"))
-    out = [cur]
-    for st in range(1, 7):
-        joined = (cur.join(F.broadcast(dv),
-                           (F.col("d") < F.col("v"))
-                           & (F.col("v") % F.col("d") == 0), "left")
-                  .groupBy("n")
-                  .agg(F.when(F.max("v") <= 1, F.lit(0))
-                       .otherwise(F.coalesce(F.sum("d"), F.lit(0)))
-                       .alias("v")))
-        cur = joined.select("n", F.lit(st).alias("step"), "v")
-        out.append(cur)
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionAll(df)
-    return res.orderBy("n", "step")
-
-
-def q_karatsuba_mul(spark, sf_dir) -> DataFrame:
-    """15x15-digit products for 30 hash-derived pairs — engine:
-    KARATSUBA on base-10 digit lists (three recursive half-size
-    products, explicit carry normalization — Python ints used only
-    digit-by-digit). Oracle: DuckDB HUGEINT native 128-bit
-    multiplication. A divide-and-conquer algorithm vs hardware
-    arithmetic."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select(
-               "doc_id",
-               (F.lit(10 ** 14)
-                + (_mst_hash(F.concat(F.lit("km1:"), d)) % 1000000000)
-                * 100000
-                + _mst_hash(F.concat(F.lit("km2:"), d)) % 100000)
-               .alias("a"),
-               (F.lit(10 ** 14)
-                + (_mst_hash(F.concat(F.lit("km3:"), d)) % 1000000000)
-                * 100000
-                + _mst_hash(F.concat(F.lit("km4:"), d)) % 100000)
-               .alias("b")))
-
-    def kara_kernel(it):
-        import pandas as pd
-
-        def to_digits(x):
-            return [int(ch) for ch in str(x)][::-1]
-
-        def add(a, b):
-            out, carry = [], 0
-            for i in range(max(len(a), len(b))):
-                s = (a[i] if i < len(a) else 0) \
-                    + (b[i] if i < len(b) else 0) + carry
-                out.append(s % 10)
-                carry = s // 10
-            if carry:
-                out.append(carry)
-            return out
-
-        def sub(a, b):
-            out, borrow = [], 0
-            for i in range(len(a)):
-                s = a[i] - (b[i] if i < len(b) else 0) - borrow
-                borrow = 1 if s < 0 else 0
-                out.append(s + 10 if s < 0 else s)
-            while len(out) > 1 and out[-1] == 0:
-                out.pop()
-            return out
-
-        def shift(a, m):
-            return ([0] * m + a) if a != [0] else [0]
-
-        def kara(a, b):
-            if len(a) <= 4 or len(b) <= 4:
-                out = [0] * (len(a) + len(b))
-                for i, da in enumerate(a):
-                    carry = 0
-                    for j, db in enumerate(b):
-                        s = out[i + j] + da * db + carry
-                        out[i + j] = s % 10
-                        carry = s // 10
-                    out[i + len(b)] += carry
-                while len(out) > 1 and out[-1] == 0:
-                    out.pop()
-                return out
-            m = min(len(a), len(b)) // 2
-            a0, a1 = a[:m], a[m:]
-            b0, b1 = b[:m], b[m:]
-            z0 = kara(a0, b0)
-            z2 = kara(a1, b1)
-            z1 = sub(sub(kara(add(a0, a1), add(b0, b1)), z0), z2)
-            return add(add(z0, shift(z1, m)), shift(z2, 2 * m))
-
-        for pdf in it:
-            prods = []
-            for a, b in zip(pdf["a"], pdf["b"]):
-                digs = kara(to_digits(int(a)), to_digits(int(b)))
-                prods.append("".join(str(x) for x in digs[::-1]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "a": pdf["a"],
-                                "b": pdf["b"], "prod": prods})
-
-    return (raw.repartition(4)
-            .mapInPandas(kara_kernel,
-                         "doc_id long, a long, b long, prod string")
-            .orderBy("doc_id"))
-
-
-def q_floyd_cycle(spark, sf_dir) -> DataFrame:
-    """Tail length mu and cycle length lambda of the orbit of
-    x -> (x^2 + c) mod 509 for 30 hash-derived (c, x0) — engine:
-    FLOYD'S TORTOISE-AND-HARE — O(1) memory, the classic
-    three-phase pointer dance in a kernel. Oracle: FULL HISTORY —
-    the orbit materialized as a list in a recursive CTE until the
-    first revisit, mu and lambda read off list_position. Constant
-    memory vs total recall."""
-    M = 509
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("fc:"), d)) % M)
-                   .alias("c"),
-                   (_mst_hash(F.concat(F.lit("fx:"), d)) % M)
-                   .alias("x0")))
-
-    def floyd_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            mus, lams = [], []
-            for c, x0 in zip(pdf["c"], pdf["x0"]):
-                c, x0 = int(c), int(x0)
-
-                def f(x):
-                    return (x * x + c) % M
-
-                tort, hare = f(x0), f(f(x0))
-                while tort != hare:
-                    tort, hare = f(tort), f(f(hare))
-                mu, tort = 0, x0
-                while tort != hare:
-                    tort, hare = f(tort), f(hare)
-                    mu += 1
-                lam, hare = 1, f(tort)
-                while tort != hare:
-                    hare = f(hare)
-                    lam += 1
-                mus.append(mu)
-                lams.append(lam)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "c": pdf["c"],
-                                "x0": pdf["x0"], "mu": mus,
-                                "lam": lams})
-
-    return (raw.repartition(4)
-            .mapInPandas(floyd_kernel,
-                         "doc_id long, c long, x0 long, mu long, "
-                         "lam long")
-            .orderBy("doc_id"))
-
-
-def q_burnside_necklaces(spark, sf_dir) -> DataFrame:
-    """Binary necklaces of length n=1..16 under rotation — engine:
-    BURNSIDE'S LEMMA — (1/n) sum over d|n of phi(d)*2^(n/d), with
-    the totient itself computed relationally (a common-divisor
-    anti-join, no gcd function). Oracle: the ORBIT CENSUS — all
-    2^n bitstrings canonicalized to their minimal rotation by bit
-    shifts, distinct canonicals counted. Group-action averaging vs
-    listing the orbits."""
-    d16 = spark.range(1, 17)
-    dk = (d16.select(F.col("id").alias("d"))
-          .join(d16.select(F.col("id").alias("k")),
-                F.col("k") <= F.col("d")))
-    j = spark.range(2, 17).select(F.col("id").alias("j"))
-    common = dk.join(
-        F.broadcast(j),
-        (F.col("d") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    phi = (dk.join(common, ["d", "k"], "left_anti")
-           .groupBy("d").agg(F.count("k").alias("phi")))
-    nd = (d16.select(F.col("id").alias("n"))
-          .join(F.broadcast(phi),
-                F.col("n") % F.col("d") == 0))
-    term = F.col("phi") * F.pow(F.lit(2.0), (F.col("n") / F.col("d"))
-                                .cast("double")).cast("long")
-    return (nd.groupBy("n")
-            .agg((F.sum(term) / F.col("n")).cast("long")
-                 .alias("necklaces"))
-            .orderBy("n"))
-
-
-_MT_SPINE = 7          # edges 0..6 form the path 0-1-...-7
-_MT_EXTRA = 5          # hash-derived extra edges, eids 7..11
-
-
-def _mt_edges_df(spark):
-    spine = [(i, i, i + 1) for i in range(_MT_SPINE)]
-    df = spark.createDataFrame(spine, "eid long, u long, v long")
-    ex = (spark.range(_MT_SPINE, _MT_SPINE + _MT_EXTRA)
-          .select(F.col("id").alias("eid"),
-                  (_mst_hash(F.concat(F.lit("mtu:"),
-                                      F.col("id").cast("string")))
-                   % 8).alias("u0"),
-                  (_mst_hash(F.concat(F.lit("mtv:"),
-                                      F.col("id").cast("string")))
-                   % 8).alias("v0")))
-    ex = ex.select(
-        "eid", F.col("u0").alias("u"),
-        F.when(F.col("v0") == F.col("u0"), (F.col("u0") + 1) % 8)
-        .otherwise(F.col("v0")).alias("v"))
-    return df.unionAll(ex)
-
-
-def q_matrix_tree(spark, sf_dir) -> DataFrame:
-    """Spanning trees of a 12-edge multigraph on 8 nodes (7-edge
-    spine + 5 hash edges) — engine: KIRCHHOFF'S MATRIX-TREE
-    THEOREM — the 7x7 Laplacian minor determinant by fraction-free
-    Bareiss elimination, exact integers. Oracle: ENUMERATION —
-    every 7-edge subset (C(12,7)=792 masks) tested for
-    connectivity by bitmask closure in a recursive CTE. A
-    determinant identity vs counting the trees one by one."""
-
-    def kirchhoff_kernel(pdf):
-        import pandas as pd
-        L = [[0] * 8 for _ in range(8)]
-        for r in pdf.itertuples():
-            u, v = int(r.u), int(r.v)
-            L[u][u] += 1
-            L[v][v] += 1
-            L[u][v] -= 1
-            L[v][u] -= 1
-        # Bareiss on the (0,0)-minor
-        m = [[L[i][j] for j in range(1, 8)] for i in range(1, 8)]
-        n = 7
-        prev = 1
-        sign = 1
-        for k in range(n - 1):
-            if m[k][k] == 0:
-                swap = next((r for r in range(k + 1, n)
-                             if m[r][k] != 0), None)
-                if swap is None:
-                    return pd.DataFrame({"n_trees": [0]})
-                m[k], m[swap] = m[swap], m[k]
-                sign = -sign
-            for i in range(k + 1, n):
-                for j in range(k + 1, n):
-                    m[i][j] = (m[i][j] * m[k][k]
-                               - m[i][k] * m[k][j]) // prev
-            prev = m[k][k]
-        return pd.DataFrame({"n_trees": [sign * m[n - 1][n - 1]]})
-
-    return (_mt_edges_df(spark).withColumn("g", F.lit(0))
-            .groupBy("g")
-            .applyInPandas(lambda pdf: kirchhoff_kernel(pdf),
-                           "n_trees long"))
-
-
-def q_hook_length(spark, sf_dir) -> DataFrame:
-    """Standard Young tableaux counts for every partition of 8 —
-    engine: the HOOK LENGTH FORMULA — f = 8! / prod(hooks), hooks
-    from arm + leg + 1 with the conjugate shape, exact integers in
-    a kernel that also enumerates the 22 shapes. Oracle: the
-    DEFINITION — f counts the corner-removal orders, enumerated as
-    paths to the empty shape in a recursive CTE over list states.
-    A product formula vs walking the Young lattice."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def hook_kernel(it):
-        import math
-
-        import pandas as pd
-
-        def partitions(n, maxp):
-            if n == 0:
-                yield ()
-                return
-            for p in range(min(n, maxp), 0, -1):
-                for rest in partitions(n - p, p):
-                    yield (p,) + rest
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            keys, fs = [], []
-            for shape in partitions(8, 8):
-                conj = [sum(1 for r in shape if r > j)
-                        for j in range(shape[0])]
-                prod = 1
-                for i, r in enumerate(shape):
-                    for j in range(r):
-                        prod *= (r - j - 1) + (conj[j] - i - 1) + 1
-                keys.append(",".join(str(x) for x in shape))
-                fs.append(math.factorial(8) // prod)
-            yield pd.DataFrame({"shape": keys, "f": fs})
-
-    return (one.mapInPandas(hook_kernel, "shape string, f long")
-            .orderBy("shape"))
-
-
-def q_debruijn_lyndon(spark, sf_dir) -> DataFrame:
-    """The lexicographically least binary de Bruijn sequence
-    B(2,n) for n=2..8 — engine: FKM — concatenate the Lyndon words
-    whose length divides n in lexicographic order (the
-    Fredricksen-Kessler-Maiorana construction) in a kernel.
-    Oracle: the PREFER-ONE GREEDY — grown bit by bit in a
-    recursive CTE with a seen-window list, then complemented and
-    canonicalized to its minimal rotation (the two constructions
-    provably meet there). Combinatorics-on-words vs a greedy walk
-    — agreeing only through the rotation quotient."""
-    n = spark.range(2, 9).select(F.col("id").alias("n"))
-
-    def fkm_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            ns, seqs = [], []
-            for n0 in pdf["n"]:
-                n0 = int(n0)
-                seq = []
-                a = [0] * (n0 + 1)
-
-                def db(t, p):
-                    if t > n0:
-                        if n0 % p == 0:
-                            seq.extend(a[1:p + 1])
-                    else:
-                        a[t] = a[t - p]
-                        db(t + 1, p)
-                        for jj in range(a[t - p] + 1, 2):
-                            a[t] = jj
-                            db(t + 1, t)
-
-                db(1, 1)
-                ns.append(n0)
-                seqs.append("".join(str(x) for x in seq))
-            yield pd.DataFrame({"n": ns, "seq": seqs})
-
-    return (n.repartition(4)
-            .mapInPandas(fkm_kernel, "n long, seq string")
-            .orderBy("n"))
-
-
-def q_tonelli_shanks(spark, sf_dir) -> DataFrame:
-    """Square roots modulo the prime 1009 (where p-1 = 16*63, so
-    the 2-Sylow descent is nontrivial) for 30 constructed
-    quadratic residues — engine: TONELLI-SHANKS in an exact
-    kernel. Oracle: brute search for the least y with y^2 = a
-    (mod p). Sylow-subgroup descent vs exhaustion."""
-    P = 1009
-    d = F.col("doc_id").cast("string")
-    r0 = 2 + _mst_hash(F.concat(F.lit("ts:"), d)) % (P - 2)
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id", ((r0 * r0) % P).alias("a")))
-
-    def ts_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            roots = []
-            for a in pdf["a"]:
-                a = int(a)
-                # find a quadratic non-residue z
-                z = 2
-                while pow(z, (P - 1) // 2, P) != P - 1:
-                    z += 1
-                q, s = P - 1, 0
-                while q % 2 == 0:
-                    q //= 2
-                    s += 1
-                m, c = s, pow(z, q, P)
-                t, r = pow(a, q, P), pow(a, (q + 1) // 2, P)
-                while t != 1:
-                    i, t2 = 0, t
-                    while t2 != 1:
-                        t2 = t2 * t2 % P
-                        i += 1
-                    b = pow(c, 1 << (m - i - 1), P)
-                    m, c = i, b * b % P
-                    t, r = t * c % P, r * b % P
-                roots.append(min(r, P - r))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "a": pdf["a"], "root": roots})
-
-    return (raw.repartition(4)
-            .mapInPandas(ts_kernel, "doc_id long, a long, root long")
-            .orderBy("doc_id"))
-
-
-def q_elliptic_count(spark, sf_dir) -> DataFrame:
-    """Point counts of 12 non-singular elliptic curves
-    y^2 = x^3 + ax + b over F_211 — engine: the CHARACTER SUM —
-    N = p + 1 + sum_x chi(x^3+ax+b) with the Legendre symbol by
-    Euler's criterion, the (p-1)/2 = 105-fold modular power run as
-    a JVM aggregate fold per x (no kernel, no enumeration of y).
-    Oracle: the CENSUS — count (x,y) solutions plus the point at
-    infinity. Character theory vs counting points."""
-    P = 211
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 12)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("ea:"), d)) % P)
-                   .alias("a"),
-                   (_mst_hash(F.concat(F.lit("eb:"), d)) % P)
-                   .alias("b")))
-    raw = raw.filter(
-        (4 * F.col("a") * F.col("a") * F.col("a")
-         + 27 * F.col("b") * F.col("b")) % P != 0)
-    x = spark.range(0, P).select(F.col("id").alias("x"))
-    t = raw.join(F.broadcast(x))
-    rhs = (F.col("x") * F.col("x") * F.col("x")
-           + F.col("a") * F.col("x") + F.col("b")) % P
-    t = t.withColumn("rhs", rhs).repartition(32)
-    eul = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), F.lit(105).cast("long")),
-        F.lit(1).cast("long"),
-        lambda acc, _: (acc * F.col("rhs")) % P)
-    chi = (F.when(F.col("rhs") == 0, 0)
-           .when(eul == 1, 1).otherwise(-1))
-    return (t.groupBy("doc_id", "a", "b")
-            .agg((F.lit(P + 1) + F.sum(chi)).alias("npoints"))
-            .orderBy("doc_id"))
-
-
-def q_newton_identities(spark, sf_dir) -> DataFrame:
-    """Elementary symmetric polynomials e_1..e_6 of 6 hash-derived
-    integer roots, 10 instances — engine: the COEFFICIENT DP —
-    absorb one root per driver-unrolled round via
-    e_k <- e_k + r*e_{k-1} (building prod(1 + r_i t) relationally).
-    Oracle: NEWTON'S IDENTITIES — power sums p_k aggregated
-    directly, then k*e_k = sum_i (-1)^(i-1) e_{k-i} p_i unwound in
-    a recursive CTE with exact division by k. Vieta vs Newton."""
-    g = spark.range(0, 10).select(F.col("id").alias("g"))
-    i = spark.range(1, 7).select(F.col("id").alias("i"))
-    gs, istr = F.col("g").cast("string"), F.col("i").cast("string")
-    roots = (g.crossJoin(F.broadcast(i))
-             .select("g", "i",
-                     (_mst_hash(F.concat(F.lit("nw:"), gs,
-                                         F.lit(":"), istr)) % 21 - 10)
-                     .alias("r")))
-    state = g.select("g", F.lit(0).alias("k"),
-                     F.lit(1).cast("long").alias("e"))
-    for step in range(1, 7):
-        ri = roots.filter(F.col("i") == step).select(
-            F.col("g").alias("g2"), "r")
-        shifted = (state.join(ri, F.col("g") == F.col("g2"))
-                   .select("g", (F.col("k") + 1).alias("k"),
-                           (F.col("r") * F.col("e")).alias("e")))
-        state = (state.unionAll(shifted)
-                 .groupBy("g", "k").agg(F.sum("e").alias("e")))
-    return (state.filter(F.col("k") >= 1)
-            .select("g", "k", "e").orderBy("g", "k"))
-
-
-def q_cubic_extrapolate(spark, sf_dir) -> DataFrame:
-    """Extrapolating 20 hash-derived integer cubics from their
-    values at 0..3 to x=4..10 — engine: LAGRANGE interpolation —
-    the four basis weights scaled by 6 so everything stays
-    integer: 6*f(x) = -f0*(x-1)(x-2)(x-3) + 3*f1*x(x-2)(x-3) -
-    3*f2*x(x-1)(x-3) + f3*x(x-1)(x-2). Oracle: the VANISHING
-    FOURTH DIFFERENCE — every cubic obeys f(n) = 4f(n-1) - 6f(n-2)
-    + 4f(n-3) - f(n-4), unwound from the seeds in a recursive CTE.
-    Basis polynomials vs the difference calculus."""
-    d = F.col("doc_id").cast("string")
-    coef = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 20)
-            .select("doc_id", *[
-                (_mst_hash(F.concat(F.lit(f"cx{j}:"), d)) % 21 - 10)
-                .alias(f"c{j}") for j in range(4)]))
-    vals = [
-        (F.col("c3") * (i ** 3) + F.col("c2") * (i ** 2)
-         + F.col("c1") * i + F.col("c0")).alias(f"f{i}")
-        for i in range(4)]
-    seeds = coef.select("doc_id", *vals).repartition(4)
-    xs = spark.range(4, 11).select(F.col("id").alias("x"))
-    t = seeds.join(F.broadcast(xs))
-    X = F.col("x")
-    w0 = -(X - 1) * (X - 2) * (X - 3)
-    w1 = 3 * X * (X - 2) * (X - 3)
-    w2 = -3 * X * (X - 1) * (X - 3)
-    w3 = X * (X - 1) * (X - 2)
-    six_f = (F.col("f0") * w0 + F.col("f1") * w1
-             + F.col("f2") * w2 + F.col("f3") * w3)
-    return (t.select("doc_id", "x", (six_f / 6).cast("long")
-                     .alias("fx"))
-            .orderBy("doc_id", "x"))
-
-
-def q_horner_mod(spark, sf_dir) -> DataFrame:
-    """Degree-15 polynomial evaluation mod the NTT prime 998244353
-    for 20 hash instances — engine: HORNER'S RULE as one JVM
-    aggregate fold over the coefficient array (acc = acc*x + c mod
-    p, high degree first). Oracle: the MONOMIAL SUM — a power
-    ladder x^i grown in a recursive CTE, each term c_i * x^i added
-    mod p. O(n) with one running value vs explicit powers."""
-    P = 998244353
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("hx:"), d)) % P)
-                   .alias("x"),
-                   F.array(*[
-                       (_mst_hash(F.concat(F.lit(f"hc{j}:"), d)) % P)
-                       for j in range(16)]).alias("cs")))
-    horner = F.aggregate(
-        F.reverse(F.col("cs")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.col("x") + c) % P)
-    return (raw.select("doc_id", "x", horner.alias("val"))
-            .orderBy("doc_id"))
-
-
-def _expr_operands(d):
-    return [(1 + _mst_hash(F.concat(F.lit(f"ex{j}:"), d)) % 99)
-            .cast("string") for j in range(4)]
-
-
-def q_expr_parser(spark, sf_dir) -> DataFrame:
-    """Integer arithmetic expressions built from four templates and
-    hash operands — engine: a GENERIC PARSER — tokenizer +
-    shunting-yard (precedence, parentheses) + RPN evaluation in a
-    kernel that never sees the template id. Oracle: the TEMPLATES
-    — each shape's value written directly as arithmetic over the
-    same operands, no parsing anywhere. The parser must rediscover
-    the structure the oracle knows by construction."""
-    d = F.col("doc_id").cast("string")
-    a, b, c, e = _expr_operands(d)
-    t0 = F.concat(a, F.lit("+"), b, F.lit("*"), c, F.lit("-"), e)
-    t1 = F.concat(F.lit("("), a, F.lit("+"), b, F.lit(")*("), c,
-                  F.lit("-"), e, F.lit(")"))
-    t2 = F.concat(a, F.lit("*("), b, F.lit("+"), c, F.lit("*"), e,
-                  F.lit(")"))
-    t3 = F.concat(a, F.lit("*"), b, F.lit("-("), c, F.lit("+"), e,
-                  F.lit(")*"), a)
-    expr = (F.when(F.col("doc_id") % 4 == 0, t0)
-            .when(F.col("doc_id") % 4 == 1, t1)
-            .when(F.col("doc_id") % 4 == 2, t2).otherwise(t3))
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select("doc_id", expr.alias("expr")))
-
-    def parse_kernel(it):
-        import pandas as pd
-
-        def tokenize(s):
-            toks, i = [], 0
-            while i < len(s):
-                if s[i].isdigit():
-                    j = i
-                    while j < len(s) and s[j].isdigit():
-                        j += 1
-                    toks.append(int(s[i:j]))
-                    i = j
-                else:
-                    toks.append(s[i])
-                    i += 1
-            return toks
-
-        PREC = {"+": 1, "-": 1, "*": 2}
-
-        def to_rpn(toks):
-            out, ops = [], []
-            for t in toks:
-                if isinstance(t, int):
-                    out.append(t)
-                elif t == "(":
-                    ops.append(t)
-                elif t == ")":
-                    while ops[-1] != "(":
-                        out.append(ops.pop())
-                    ops.pop()
-                else:
-                    while (ops and ops[-1] != "("
-                           and PREC[ops[-1]] >= PREC[t]):
-                        out.append(ops.pop())
-                    ops.append(t)
-            while ops:
-                out.append(ops.pop())
-            return out
-
-        def eval_rpn(rpn):
-            st = []
-            for t in rpn:
-                if isinstance(t, int):
-                    st.append(t)
-                else:
-                    y, x = st.pop(), st.pop()
-                    st.append(x + y if t == "+" else
-                              x - y if t == "-" else x * y)
-            return st[0]
-
-        for pdf in it:
-            vals = [eval_rpn(to_rpn(tokenize(s))) for s in pdf["expr"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "expr": pdf["expr"], "val": vals})
-
-    return (raw.repartition(4)
-            .mapInPandas(parse_kernel,
-                         "doc_id long, expr string, val long")
-            .orderBy("doc_id"))
-
-
-_BRZ_PATTERNS = ["(ab|a)*", "a*b(ab)*", "(a|b)*abb", "(aa|bb)*"]
-
-
-def q_brzozowski_regex(spark, sf_dir) -> DataFrame:
-    """Exact regex matching of 60 hash-derived 10-char {a,b}
-    strings against four patterns — engine: BRZOZOWSKI DERIVATIVES
-    — a symbolic regex AST differentiated one character at a time,
-    match = nullability of the final derivative (no automaton, no
-    backtracking). Oracle: DuckDB's RE2 engine via anchored
-    regexp_matches. Algebra of regular expressions vs a production
-    DFA engine."""
-    d = F.col("doc_id").cast("string")
-    chars = [
-        F.when(_mst_hash(F.concat(F.lit(f"bz{i}:"), d)) % 2 == 0,
-               "a").otherwise("b") for i in range(10)]
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select("doc_id", F.concat(*chars).alias("s"),
-                   (F.col("doc_id") % 4).alias("pid")))
-
-    def brz_kernel(it):
-        import pandas as pd
-
-        # regex AST: ('eps',), ('chr',c), ('cat',a,b), ('alt',a,b),
-        # ('star',a), ('nul',)
-        def parse(p):
-            pos = [0]
-
-            def atom():
-                ch = p[pos[0]]
-                if ch == "(":
-                    pos[0] += 1
-                    r = alt()
-                    pos[0] += 1  # ')'
-                else:
-                    pos[0] += 1
-                    r = ("chr", ch)
-                while pos[0] < len(p) and p[pos[0]] == "*":
-                    pos[0] += 1
-                    r = ("star", r)
-                return r
-
-            def cat():
-                r = atom()
-                while pos[0] < len(p) and p[pos[0]] not in "|)":
-                    r = ("cat", r, atom())
-                return r
-
-            def alt():
-                r = cat()
-                while pos[0] < len(p) and p[pos[0]] == "|":
-                    pos[0] += 1
-                    r = ("alt", r, cat())
-                return r
-
-            return alt()
-
-        def nullable(r):
-            k = r[0]
-            if k in ("eps", "star"):
-                return True
-            if k in ("chr", "nul"):
-                return False
-            if k == "cat":
-                return nullable(r[1]) and nullable(r[2])
-            return nullable(r[1]) or nullable(r[2])
-
-        def deriv(r, c):
-            k = r[0]
-            if k in ("eps", "nul"):
-                return ("nul",)
-            if k == "chr":
-                return ("eps",) if r[1] == c else ("nul",)
-            if k == "cat":
-                left = ("cat", deriv(r[1], c), r[2])
-                if nullable(r[1]):
-                    return ("alt", left, deriv(r[2], c))
-                return left
-            if k == "alt":
-                return ("alt", deriv(r[1], c), deriv(r[2], c))
-            return ("cat", deriv(r[1], c), r)
-
-        asts = [parse(p) for p in _BRZ_PATTERNS]
-        for pdf in it:
-            outs = []
-            for s, pid in zip(pdf["s"], pdf["pid"]):
-                r = asts[int(pid)]
-                for ch in s:
-                    r = deriv(r, ch)
-                outs.append(1 if nullable(r) else 0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "s": pdf["s"],
-                                "pid": pdf["pid"], "matched": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(brz_kernel,
-                         "doc_id long, s string, pid long, matched int")
-            .orderBy("doc_id"))
-
-
-def q_linear_extensions(spark, sf_dir) -> DataFrame:
-    """Linear extension counts of 8 hash-derived posets on 7
-    elements — engine: MEMOIZED DOWNSET DP — e(S) = sum over
-    maximal-addable elements of e(S - x), one bitmask table per
-    poset in a kernel. Oracle: PATH ENUMERATION — a recursive CTE
-    adds one admissible element per iteration, duplicate prefixes
-    kept as separate rows, extensions = rows reaching the full
-    mask. Counting with memoization vs walking every order."""
-    g = spark.range(0, 8).select(F.col("id").alias("g"))
-
-    def le_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                pred = [0] * 7
-                for i in range(7):
-                    for j in range(i + 1, 7):
-                        if h(f"le:{gv}:{i}:{j}") % 4 == 0:
-                            pred[j] |= 1 << i
-                memo = {0: 1}
-                for mask in range(1, 128):
-                    total = 0
-                    for x in range(7):
-                        # x can be placed last iff all its
-                        # predecessors were already placed
-                        if mask & (1 << x) and pred[x] & ~mask == 0:
-                            total += memo[mask ^ (1 << x)]
-                    memo[mask] = total
-                outs.append(memo[127])
-            yield pd.DataFrame({"g": pdf["g"], "n_ext": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(le_kernel, "g long, n_ext long")
-            .orderBy("g"))
-
-
-_ROMAN_H = ["", "C", "CC", "CCC", "CD", "D", "DC", "DCC", "DCCC", "CM"]
-_ROMAN_T = ["", "X", "XX", "XXX", "XL", "L", "LX", "LXX", "LXXX", "XC"]
-_ROMAN_O = ["", "I", "II", "III", "IV", "V", "VI", "VII", "VIII", "IX"]
-
-
-def q_roman_numerals(spark, sf_dir) -> DataFrame:
-    """Roman numerals for 60 hash-derived n in 1..3999 — engine:
-    PLACE-VALUE tables — thousands by repeat, then one array
-    lookup per decimal digit, a single JVM projection. Oracle: the
-    GREEDY SUBTRACTIVE definition — repeatedly take the largest of
-    the 13 value-symbol pairs in a recursive CTE. Positional
-    decomposition vs the additive-subtractive grammar."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select("doc_id",
-                   (1 + _mst_hash(F.concat(F.lit("rn:"), d)) % 3999)
-                   .alias("n")))
-    hh = F.array(*[F.lit(v) for v in _ROMAN_H])
-    tt = F.array(*[F.lit(v) for v in _ROMAN_T])
-    oo = F.array(*[F.lit(v) for v in _ROMAN_O])
-    n = F.col("n")
-    roman = F.concat(
-        F.repeat(F.lit("M"), (n / 1000).cast("int")),
-        F.element_at(hh, ((n / 100) % 10).cast("int") + 1),
-        F.element_at(tt, ((n / 10) % 10).cast("int") + 1),
-        F.element_at(oo, (n % 10).cast("int") + 1))
-    return raw.select("doc_id", "n", roman.alias("roman")) \
-        .orderBy("doc_id")
-
-
-def q_negabinary(spark, sf_dir) -> DataFrame:
-    """Base -2 representations of 60 hash-derived n < 10^6 —
-    engine: the BIT TRICK — negabinary(n) = (n + M) XOR M with the
-    alternating mask M = 0xAAAAAAAAAA, then the bits read off as a
-    binary string, all JVM column algebra (conv + bit ops).
-    Oracle: the DEFINITION — repeated division by -2 with
-    nonnegative remainders in a recursive CTE. One XOR vs a
-    division loop."""
-    MASK = 0xAAAAAAAAAA
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("nb:"), d)) % 1000000)
-                   .alias("n")))
-    v = (F.col("n") + MASK).bitwiseXOR(F.lit(MASK).cast("long"))
-    # strip leading zeros of the binary expansion; n=0 -> "0"
-    digits = F.when(v == 0, F.lit("0")).otherwise(
-        F.regexp_replace(F.conv(v.cast("string"), 10, 2), "^0+", ""))
-    return (raw.select("doc_id", "n", digits.alias("negab"))
-            .orderBy("doc_id"))
-
-
-def q_gosper_combinations(spark, sf_dir) -> DataFrame:
-    """The first 100 4-subsets of a 12-set in ascending mask order
-    — engine: GOSPER'S HACK — the constant-time successor
-    u = v | (v-1); w = (u+1) | (((~u & -~u) - 1) >> (tz(v)+1))
-    iterated in a kernel. Oracle: DECLARATIVE — filter all 4096
-    masks to bit_count 4, ORDER BY, LIMIT 100 (Gosper provably
-    enumerates in increasing numeric order). Two's-complement
-    wizardry vs a sort."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def gosper_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = 0b1111
-            masks = []
-            for _ in range(100):
-                masks.append(v)
-                u = v | (v - 1)
-                tz = (v & -v).bit_length() - 1
-                v = (u + 1) | ((((~u) & -(~u)) - 1) >> (tz + 1))
-            yield pd.DataFrame({"rk": list(range(1, 101)),
-                                "mask": masks})
-
-    return (one.mapInPandas(gosper_kernel, "rk long, mask long")
-            .orderBy("rk"))
-
-
-def q_eulerian_numbers(spark, sf_dir) -> DataFrame:
-    """Eulerian numbers <7, k> for k=0..6 — engine: the CLOSED
-    FORM sum_j (-1)^j C(8,j) (k+1-j)^7 with binomials from a
-    factorial literal, exact longs. Oracle: the CENSUS — all 5040
-    permutations of S_7 generated in a recursive CTE, descents
-    counted per permutation, histogram taken. An alternating sum
-    vs counting descents one permutation at a time."""
-    fact = [1] * 9
-    for i in range(1, 9):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    k = spark.range(0, 7).select(F.col("id").alias("k"))
-    j = spark.range(0, 8).select(F.col("id").alias("j"))
-    t = k.join(F.broadcast(j), F.col("j") <= F.col("k"))
-    binom = (F.element_at(fl, F.lit(9))
-             / (F.element_at(fl, F.col("j").cast("int") + 1)
-                * F.element_at(fl, (F.lit(8) - F.col("j"))
-                               .cast("int") + 1))).cast("long")
-    sign = F.when(F.col("j") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    base = (F.col("k") + 1 - F.col("j")).cast("double")
-    powterm = F.pow(base, F.lit(7.0)).cast("long")
-    return (t.groupBy("k")
-            .agg(F.sum(sign * binom * powterm).alias("eulerian"))
-            .orderBy("k"))
-
-
-def q_langford_pairs(spark, sf_dir) -> DataFrame:
-    """Langford sequence counts for n=4..7 (raw, reflections not
-    merged; zero for n = 5, 6 by the n mod 4 obstruction) —
-    engine: MEMOIZED DP over occupancy masks — place values
-    largest-first, the completion count depends only on the mask,
-    so states merge. Oracle: PATH ENUMERATION — every partial
-    placement kept as its own recursive-CTE row, solutions = rows
-    with a full mask. Dynamic programming vs the raw search tree."""
-    ns = spark.range(4, 8).select(F.col("id").alias("n"))
-
-    def lang_kernel(it):
-        import pandas as pd
-        from functools import lru_cache
-        for pdf in it:
-            outs = []
-            for n0 in pdf["n"]:
-                n0 = int(n0)
-                full = (1 << (2 * n0)) - 1
-
-                @lru_cache(maxsize=None)
-                def count(k, mask):
-                    if k == 0:
-                        return 1
-                    total = 0
-                    for i in range(2 * n0 - k - 1):
-                        bits = (1 << i) | (1 << (i + k + 1))
-                        if mask & bits == 0:
-                            total += count(k - 1, mask | bits)
-                    return total
-
-                outs.append(count(n0, 0))
-                count.cache_clear()
-            yield pd.DataFrame({"n": pdf["n"], "n_seq": outs})
-
-    return (ns.repartition(4)
-            .mapInPandas(lang_kernel, "n long, n_seq long")
-            .orderBy("n"))
-
-
-def q_two_sat(spark, sf_dir) -> DataFrame:
-    """Satisfiability of 12 random 2-CNF instances (8 variables,
-    12 clauses) — engine: the IMPLICATION-GRAPH criterion —
-    Kosaraju SCC over the 16-literal graph, satisfiable iff no
-    variable shares a component with its negation (Aspvall et al.
-    1979), in a kernel. Oracle: BRUTE FORCE — all 256 assignments
-    checked clause by clause. Poly-time structure vs exponential
-    truth tables."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def sat_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                clauses = []
-                for j in range(12):
-                    v1 = h(f"sa1:{gv}:{j}") % 8
-                    s1 = h(f"sb1:{gv}:{j}") % 2
-                    v2 = h(f"sa2:{gv}:{j}") % 8
-                    s2 = h(f"sb2:{gv}:{j}") % 2
-                    clauses.append((v1, s1, v2, s2))
-
-                # literal id: 2v (positive), 2v+1 (negated)
-                def lit(v, s):
-                    return 2 * v + s
-
-                def neg(x):
-                    return x ^ 1
-
-                adj = {i: [] for i in range(16)}
-                radj = {i: [] for i in range(16)}
-                for v1, s1, v2, s2 in clauses:
-                    a, b = lit(v1, s1), lit(v2, s2)
-                    for x, y in ((neg(a), b), (neg(b), a)):
-                        adj[x].append(y)
-                        radj[y].append(x)
-                order, seen = [], set()
-
-                def dfs1(u):
-                    stack = [(u, iter(adj[u]))]
-                    seen.add(u)
-                    while stack:
-                        node, itr = stack[-1]
-                        for w in itr:
-                            if w not in seen:
-                                seen.add(w)
-                                stack.append((w, iter(adj[w])))
-                                break
-                        else:
-                            order.append(node)
-                            stack.pop()
-
-                for u in range(16):
-                    if u not in seen:
-                        dfs1(u)
-                comp = {}
-                for u in reversed(order):
-                    if u in comp:
-                        continue
-                    stack, cid = [u], u
-                    comp[u] = cid
-                    while stack:
-                        node = stack.pop()
-                        for w in radj[node]:
-                            if w not in comp:
-                                comp[w] = cid
-                                stack.append(w)
-                sat = all(comp[2 * v] != comp[2 * v + 1]
-                          for v in range(8))
-                outs.append(1 if sat else 0)
-            yield pd.DataFrame({"g": pdf["g"], "sat": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(sat_kernel, "g long, sat int")
-            .orderBy("g"))
-
-
-def q_bipartite_check(spark, sf_dir) -> DataFrame:
-    """Bipartiteness of 12 hash graphs on 10 nodes — engine: BFS
-    2-COLORING per component in a kernel (constructive: a proper
-    coloring or a conflict). Oracle: the ODD-CYCLE criterion — a
-    parity-annotated reachability closure in a deduplicating
-    recursive UNION; non-bipartite iff some vertex reaches itself
-    with odd parity. Construction vs obstruction."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def bip_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                adj = {i: [] for i in range(10)}
-                for i in range(10):
-                    for j in range(i + 1, 10):
-                        if h(f"bp:{gv}:{i}:{j}") % 5 == 0:
-                            adj[i].append(j)
-                            adj[j].append(i)
-                color = {}
-                ok = True
-                for s in range(10):
-                    if s in color:
-                        continue
-                    color[s] = 0
-                    queue = [s]
-                    while queue and ok:
-                        u = queue.pop()
-                        for w in adj[u]:
-                            if w not in color:
-                                color[w] = color[u] ^ 1
-                                queue.append(w)
-                            elif color[w] == color[u]:
-                                ok = False
-                                break
-                outs.append(1 if ok else 0)
-            yield pd.DataFrame({"g": pdf["g"], "bipartite": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(bip_kernel, "g long, bipartite int")
-            .orderBy("g"))
-
-
-def q_move_to_front(spark, sf_dir) -> DataFrame:
-    """Move-to-front coding of 8 hash-derived 48-char strings over
-    a 6-letter alphabet — engine: the LIST SIMULATION in a kernel
-    (find index, pop, push front). Oracle: the WINDOW
-    characterization — after its previous occurrence a symbol's
-    index equals the number of distinct symbols seen since; before
-    its first it is the initial rank corrected by the distinct
-    prefix symbols, all window/censur algebra with no list state.
-    Simulation vs a closed-form window identity."""
-    g = spark.range(0, 8).select(F.col("id").alias("g"))
-    p = spark.range(0, 48).select(F.col("id").alias("pos"))
-    gs, ps = F.col("g").cast("string"), F.col("pos").cast("string")
-    sym = F.element_at(
-        F.array(*[F.lit(c) for c in "abcdef"]),
-        (_mst_hash(F.concat(F.lit("mt:"), gs, F.lit(":"), ps)) % 6)
-        .cast("int") + 1)
-    t = g.crossJoin(F.broadcast(p)).select("g", "pos", sym.alias("c"))
-    strs = (t.groupBy("g")
-            .agg(F.concat_ws("", F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"])).alias("s")))
-
-    def mtf_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            gs_, poss, codes = [], [], []
-            for gv, s in zip(pdf["g"], pdf["s"]):
-                lst = list("abcdef")
-                for i, ch in enumerate(s):
-                    idx = lst.index(ch)
-                    gs_.append(gv)
-                    poss.append(i)
-                    codes.append(idx)
-                    lst.pop(idx)
-                    lst.insert(0, ch)
-            yield pd.DataFrame({"g": gs_, "pos": poss, "code": codes})
-
-    return (strs.repartition(4)
-            .mapInPandas(mtf_kernel, "g long, pos long, code int")
-            .orderBy("g", "pos"))
-
-
-def q_hanoi_moves(spark, sf_dir) -> DataFrame:
-    """All 255 moves of the 8-disk Tower of Hanoi (pegs 0,1,2,
-    tower travels 0 to 2) — engine: the BIT CLOSED FORM — at move
-    k the disk is tz(k)+1, its move count so far is k >> d, and
-    its pegs come from a 3-cycle whose direction depends on the
-    parity of n-d; pure JVM columns (lowest set bit, exact log2,
-    array lookups). Oracle: the ITERATIVE ALGORITHM — odd moves
-    shift the smallest disk cyclically, even moves make the only
-    other legal move, pegs as disk BITMASKS in a recursive CTE
-    (top of a peg = lowest set bit). Arithmetic oracle-free of
-    state vs a stateful simulation that never factors k."""
-    N = 8
-    k = spark.range(1, 2 ** N).select(F.col("id").alias("k"))
-    low = F.col("k").bitwiseAND(-F.col("k"))
-    d = (F.log2(low.cast("double")) + 1).cast("long")
-    q = (F.col("k") / (2 * low)).cast("long")
-    even_cyc = F.array(F.lit(0), F.lit(1), F.lit(2))   # n-d odd
-    odd_cyc = F.array(F.lit(0), F.lit(2), F.lit(1))    # n-d even
-    use_odd = (N - d) % 2 == 0
-    src = (F.when(use_odd, F.element_at(odd_cyc,
-                                        (q % 3).cast("int") + 1))
-           .otherwise(F.element_at(even_cyc, (q % 3).cast("int") + 1)))
-    dst = (F.when(use_odd, F.element_at(odd_cyc,
-                                        ((q + 1) % 3).cast("int") + 1))
-           .otherwise(F.element_at(even_cyc,
-                                   ((q + 1) % 3).cast("int") + 1)))
-    return (k.select("k", d.alias("disk"), src.alias("src"),
-                     dst.alias("dst"))
-            .orderBy("k"))
-
-
-def _clean_text(n_chars: int):
-    return F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""),
-        1, n_chars)
-
-
-def q_z_occurrences(spark, sf_dir) -> DataFrame:
-    """Occurrences of a 3-char pattern drawn from each document in
-    its own cleaned 120-char text — engine: the Z-ALGORITHM over
-    pattern#text in a kernel (linear time, the Z-box invariant).
-    Oracle: the DECLARATIVE SCAN — count positions where
-    substr(t,i,3) equals the pattern. O(n) cleverness vs O(n*m)
-    obviousness."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id", _clean_text(120).alias("t"))
-           .filter(F.length("t") >= 20)
-           .withColumn("p", F.substring(F.col("t"), 7, 3)))
-
-    def z_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            cnts, firsts = [], []
-            for t, p in zip(pdf["t"], pdf["p"]):
-                s = p + "#" + t
-                n = len(s)
-                z = [0] * n
-                l = r = 0
-                for i in range(1, n):
-                    if i < r:
-                        z[i] = min(r - i, z[i - l])
-                    while i + z[i] < n and s[z[i]] == s[i + z[i]]:
-                        z[i] += 1
-                    if i + z[i] > r:
-                        l, r = i, i + z[i]
-                hits = [i - len(p) - 1 for i in range(len(p) + 1, n)
-                        if z[i] >= len(p)]
-                cnts.append(len(hits))
-                firsts.append(hits[0] + 1 if hits else 0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": pdf["p"],
-                                "n_occ": cnts, "first_pos": firsts})
-
-    return (raw.repartition(4)
-            .mapInPandas(z_kernel,
-                         "doc_id long, p string, n_occ int, "
-                         "first_pos int")
-            .orderBy("doc_id"))
-
-
-def q_distinct_substrings(spark, sf_dir) -> DataFrame:
-    """Distinct-substring counts of 20 cleaned 60-char document
-    prefixes — engine: a SUFFIX AUTOMATON built online in a kernel,
-    count = sum over states of len(v) - len(link(v)) (each state's
-    endpos class contributes exactly that many substrings). Oracle:
-    brute DISTINCT over every (i, l) substring. Automaton theory
-    vs enumeration."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select("doc_id", _clean_text(60).alias("s"))
-           .filter(F.length("s") >= 20))
-
-    def sam_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for s in pdf["s"]:
-                # suffix automaton
-                maxlen = [0]
-                link = [-1]
-                trans = [{}]
-                last = 0
-                for ch in s:
-                    cur = len(maxlen)
-                    maxlen.append(maxlen[last] + 1)
-                    link.append(-1)
-                    trans.append({})
-                    p = last
-                    while p != -1 and ch not in trans[p]:
-                        trans[p][ch] = cur
-                        p = link[p]
-                    if p == -1:
-                        link[cur] = 0
-                    else:
-                        q = trans[p][ch]
-                        if maxlen[p] + 1 == maxlen[q]:
-                            link[cur] = q
-                        else:
-                            clone = len(maxlen)
-                            maxlen.append(maxlen[p] + 1)
-                            link.append(link[q])
-                            trans.append(dict(trans[q]))
-                            while p != -1 and trans[p].get(ch) == q:
-                                trans[p][ch] = clone
-                                p = link[p]
-                            link[q] = clone
-                            link[cur] = clone
-                    last = cur
-                total = sum(maxlen[v] - maxlen[link[v]]
-                            for v in range(1, len(maxlen)))
-                outs.append(total)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n_distinct": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(sam_kernel, "doc_id long, n_distinct long")
-            .orderBy("doc_id"))
-
-
-def q_lyndon_factorization(spark, sf_dir) -> DataFrame:
-    """Chen-Fox-Lyndon factorization of 20 cleaned 40-char document
-    prefixes — engine: DUVAL'S streaming algorithm (three-pointer,
-    O(n), never compares suffixes). Oracle: the SMALLEST-SUFFIX
-    characterization — the last factor of the unique
-    non-increasing Lyndon factorization is the lexicographically
-    least suffix; strip it and recurse in a CTE. Streaming
-    invariant vs the order-theoretic definition."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select("doc_id", _clean_text(40).alias("s"))
-           .filter(F.length("s") >= 10))
-
-    def duval_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            ids, ks, facs = [], [], []
-            for doc, s in zip(pdf["doc_id"], pdf["s"]):
-                n, i, k = len(s), 0, 1
-                while i < n:
-                    j, m = i + 1, i
-                    while j < n and s[m] <= s[j]:
-                        m = i if s[m] < s[j] else m + 1
-                        j += 1
-                    while i <= m:
-                        ids.append(doc)
-                        ks.append(k)
-                        facs.append(s[i:i + j - m])
-                        i += j - m
-                        k += 1
-            yield pd.DataFrame({"doc_id": ids, "k": ks,
-                                "factor": facs})
-
-    return (raw.repartition(4)
-            .mapInPandas(duval_kernel,
-                         "doc_id long, k int, factor string")
-            .orderBy("doc_id", "k"))
-
-
-def q_booth_rotation(spark, sf_dir) -> DataFrame:
-    """Least rotation (string and least starting index) of 20
-    cleaned 40-char document prefixes — engine: BOOTH'S ALGORITHM
-    — the failure-function scan over the doubled string, O(n), in
-    a kernel. Oracle: generate all rotations, take the minimum
-    string and its least index. One pass vs all rotations."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select("doc_id", _clean_text(40).alias("s"))
-           .filter(F.length("s") >= 10))
-
-    def booth_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            idxs, rots = [], []
-            for s in pdf["s"]:
-                s2 = s + s
-                f = [-1] * len(s2)
-                k = 0
-                for j in range(1, len(s2)):
-                    sj = s2[j]
-                    i = f[j - k - 1]
-                    while i != -1 and sj != s2[k + i + 1]:
-                        if sj < s2[k + i + 1]:
-                            k = j - i - 1
-                        i = f[i]
-                    if sj != s2[k + i + 1]:
-                        if sj < s2[k]:
-                            k = j
-                        f[j - k] = -1
-                    else:
-                        f[j - k] = i + 1
-                idxs.append(k)
-                rots.append(s[k:] + s[:k])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "s": pdf["s"],
-                                "rot_idx": idxs, "rot": rots})
-
-    return (raw.repartition(4)
-            .mapInPandas(booth_kernel,
-                         "doc_id long, s string, rot_idx int, "
-                         "rot string")
-            .orderBy("doc_id"))
-
-
-def q_multiplicative_order(spark, sf_dir) -> DataFrame:
-    """Multiplicative order of 40 hash residues mod the prime 1013
-    — engine: the GROUP-THEORY algorithm — start from p-1 = 2^2 *
-    11 * 23 and divide out each prime factor while the power stays
-    1 (O(log) modpows, never walks the cycle). Oracle: BRUTE
-    FORCE — the power ladder a^k in a recursive CTE, order = least
-    k with a^k = 1. Lagrange's theorem vs walking the orbit."""
-    P = 1013
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("mo:"), d))
-                    % (P - 2)).alias("a")))
-
-    def order_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for a in pdf["a"]:
-                a = int(a)
-                order = P - 1
-                for q in (2, 2, 11, 23):
-                    if order % q == 0 \
-                            and pow(a, order // q, P) == 1:
-                        order //= q
-                outs.append(order)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "a": pdf["a"], "ord": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(order_kernel, "doc_id long, a long, ord long")
-            .orderBy("doc_id"))
-
-
-def q_primitive_root_orders(spark, sf_dir) -> DataFrame:
-    """The order histogram of (Z/61)* — engine: the THEOREM — a
-    cyclic group of order 60 has exactly phi(d) elements of order
-    d for each divisor d, with the totient computed relationally
-    (common-divisor anti-join). Oracle: the CENSUS — every
-    element's order found by walking its power ladder. Structure
-    theory vs exhaustive observation."""
-    n60 = spark.range(1, 61)
-    dv = (n60.select(F.col("id").alias("d"))
-          .filter(F.lit(60) % F.col("id") == 0))
-    k = n60.select(F.col("id").alias("k"))
-    dk = dv.join(F.broadcast(k), F.col("k") <= F.col("d"))
-    j = spark.range(2, 61).select(F.col("id").alias("j"))
-    common = dk.join(
-        F.broadcast(j),
-        (F.col("d") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    return (dk.join(common, ["d", "k"], "left_anti")
-            .groupBy("d").agg(F.count("k").alias("n_elems"))
-            .orderBy("d"))
-
-
-def q_carmichael_korselt(spark, sf_dir) -> DataFrame:
-    """Carmichael numbers in 500..1200 (561 and 1105) — engine:
-    KORSELT'S CRITERION — n composite, squarefree, and p-1 | n-1
-    for every prime p | n, by a factorization kernel that never
-    computes a single Fermat power. Oracle: the DEFINITION —
-    composite n with a^(n-1) = 1 (mod n) for EVERY coprime a,
-    checked by square-and-multiply over all ~840k (n, a) pairs in
-    a recursive CTE. An 1899 characterization vs the raw
-    congruence."""
-    n = spark.range(500, 1201).select(F.col("id").alias("n"))
-
-    def korselt_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for n0 in pdf["n"]:
-                n0 = int(n0)
-                m, fac = n0, []
-                p = 2
-                while p * p <= m:
-                    if m % p == 0:
-                        e = 0
-                        while m % p == 0:
-                            m //= p
-                            e += 1
-                        fac.append((p, e))
-                    p += 1
-                if m > 1:
-                    fac.append((m, 1))
-                is_car = (len(fac) > 1
-                          and all(e == 1 for _, e in fac)
-                          and all((n0 - 1) % (q - 1) == 0
-                                  for q, _ in fac))
-                outs.append(1 if is_car else 0)
-            yield pd.DataFrame({"n": pdf["n"], "carmichael": outs})
-
-    return (n.repartition(8)
-            .mapInPandas(korselt_kernel, "n long, carmichael int")
-            .filter(F.col("carmichael") == 1)
-            .select("n").orderBy("n"))
-
-
-def q_stirling_first(spark, sf_dir) -> DataFrame:
-    """Unsigned Stirling numbers of the first kind c(7,k) —
-    engine: the RISING FACTORIAL — expand x(x+1)...(x+6) one
-    factor per driver-unrolled relational round (coefficient DP:
-    c <- c*m + shift). Oracle: the CYCLE CENSUS — all 5040
-    permutations of S_7 enumerated, cycles counted as orbit
-    minima through a fixed-point closure, histogram by cycle
-    count. Generating function vs the combinatorial meaning."""
-    state = (spark.range(0, 1)
-             .select(F.lit(0).alias("k"),
-                     F.lit(1).cast("long").alias("c")))
-    for m in range(0, 7):
-        shifted = state.select((F.col("k") + 1).alias("k"),
-                               F.col("c").alias("c"))
-        scaled = state.select("k", (F.col("c") * m).alias("c"))
-        state = (shifted.unionAll(scaled)
-                 .groupBy("k").agg(F.sum("c").alias("c")))
-    return (state.filter(F.col("c") > 0)
-            .select("k", F.col("c").alias("stirling1"))
-            .orderBy("k"))
-
-
-def q_harmonic_exact(spark, sf_dir) -> DataFrame:
-    """Harmonic numbers H_1..H_20 as exact reduced fractions —
-    engine: INCREMENTAL fraction addition with a gcd reduction
-    after every step (Fraction arithmetic in a kernel). Oracle:
-    the COMMON-DENOMINATOR construction — L_n = lcm(1..n) by the
-    gcd recurrence, numerator = sum of L_n/k, one final reduction.
-    Uniqueness of the reduced form makes two different arithmetic
-    paths land on the same pair."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def harm_kernel(it):
-        from fractions import Fraction
-
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            h = Fraction(0)
-            ns, nums, dens = [], [], []
-            for n in range(1, 21):
-                h += Fraction(1, n)
-                ns.append(n)
-                nums.append(h.numerator)
-                dens.append(h.denominator)
-            yield pd.DataFrame({"n": ns, "num": nums, "den": dens})
-
-    return (one.mapInPandas(harm_kernel, "n long, num long, den long")
-            .orderBy("n"))
-
-
-def q_lcm_range(spark, sf_dir) -> DataFrame:
-    """lcm(1..n) for n=1..40 — engine: the PRIME-POWER formula —
-    lcm(1..n) = prod over primes p <= n of the largest p^e <= n,
-    with primes by a divisor anti-join, the dominant powers by a
-    max per (n,p), and the product by a JVM fold over the
-    collected factors. Oracle: the RECURRENCE l(n) =
-    l(n-1)*n/gcd(l(n-1),n). Structure of the lattice of divisors
-    vs one gcd per step."""
-    n = spark.range(1, 41).select(F.col("id").alias("n"))
-    p = spark.range(2, 41).select(F.col("id").alias("p"))
-    j = spark.range(2, 41).select(F.col("id").alias("j"))
-    primes = p.join(
-        F.broadcast(j),
-        (F.col("j") < F.col("p")) & (F.col("p") % F.col("j") == 0),
-        "left_anti")
-    e = spark.range(1, 7).select(F.col("id").alias("e"))
-    pw = (primes.join(F.broadcast(e))
-          .select("p", F.pow(F.col("p").cast("double"),
-                             F.col("e").cast("double"))
-                  .cast("long").alias("v"))
-          .filter(F.col("v") <= 40))
-    dom = (n.join(F.broadcast(pw), F.col("v") <= F.col("n"))
-           .groupBy("n", "p").agg(F.max("v").alias("pp")))
-    agg = (dom.groupBy("n")
-           .agg(F.aggregate(F.collect_list("pp"),
-                            F.lit(1).cast("long"),
-                            lambda acc, x: acc * x).alias("l")))
-    # n = 1 has no prime factors: the empty product is 1
-    return (n.join(agg, "n", "left")
-            .select("n", F.coalesce(F.col("l"), F.lit(1)).alias("l"))
-            .orderBy("n"))
-
-
-def q_pythagorean_primitive(spark, sf_dir) -> DataFrame:
-    """Primitive Pythagorean triples with hypotenuse <= 100 —
-    engine: EUCLID'S PARAMETRIZATION — (m,n) coprime of opposite
-    parity generate (m^2-n^2, 2mn, m^2+n^2), coprimality by a
-    common-divisor anti-join; the parametrization's completeness
-    theorem says nothing is missed. Oracle: the CENSUS — every
-    a < b < c <= 100 with a^2+b^2 = c^2 and gcd(a,b) = 1. A 2300-
-    year-old bijection vs brute force."""
-    m = spark.range(2, 11).select(F.col("id").alias("m"))
-    nn = spark.range(1, 11).select(F.col("id").alias("nv"))
-    pairs = m.join(F.broadcast(nn),
-                   (F.col("nv") < F.col("m"))
-                   & ((F.col("m") - F.col("nv")) % 2 == 1))
-    j = spark.range(2, 11).select(F.col("id").alias("j"))
-    common = pairs.join(
-        F.broadcast(j),
-        (F.col("m") % F.col("j") == 0) & (F.col("nv") % F.col("j") == 0),
-        "left_semi")
-    cop = pairs.join(common, ["m", "nv"], "left_anti")
-    a0 = F.col("m") * F.col("m") - F.col("nv") * F.col("nv")
-    b0 = 2 * F.col("m") * F.col("nv")
-    c = F.col("m") * F.col("m") + F.col("nv") * F.col("nv")
-    return (cop.filter(c <= 100)
-            .select(F.least(a0, b0).alias("a"),
-                    F.greatest(a0, b0).alias("b"), c.alias("c"))
-            .orderBy("c", "a"))
-
-
-def q_farey_length(spark, sf_dir) -> DataFrame:
-    """Farey sequence lengths |F_n| for n=1..30 — engine: the
-    TOTIENT-SUM theorem — |F_n| = 1 + sum of phi(k), the totients
-    by a common-divisor anti-join and the sum by a running window.
-    Oracle: the DEFINITION — count the reduced fractions directly
-    with gcd(). The Euler connection vs counting fractions."""
-    n30 = spark.range(1, 31)
-    dk = (n30.select(F.col("id").alias("d"))
-          .join(n30.select(F.col("id").alias("k")),
-                F.col("k") <= F.col("d")))
-    j = spark.range(2, 31).select(F.col("id").alias("j"))
-    common = dk.join(
-        F.broadcast(j),
-        (F.col("d") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    phi = (dk.join(common, ["d", "k"], "left_anti")
-           .groupBy("d").agg(F.count("k").alias("phi")))
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    return (phi.select(F.col("d").alias("n"),
-                       (1 + F.sum("phi").over(w)).alias("farey_len"))
-            .orderBy("n"))
-
-
-def q_binomial_transform(spark, sf_dir) -> DataFrame:
-    """Binomial transform b_n = sum_k C(n,k) a_k of a 17-term hash
-    sequence — engine: the WEIGHTED SUM — binomials from a
-    factorial literal, one explode + groupBy. Oracle: the
-    ADJACENT-SUMS TRIANGLE — T_0 = a, T_i[k] = T_{i-1}[k] +
-    T_{i-1}[k+1], b_n = the head after n foldings, list state in a
-    recursive CTE that never forms a binomial. Closed weights vs
-    Pascal dynamics."""
-    fact = [1] * 17
-    for i in range(1, 17):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(0, 17).select(F.col("id").alias("n"))
-    k = spark.range(0, 17).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
-    ak = _mst_hash(F.concat(F.lit("bt:"), F.col("k").cast("string"))) \
-        % 19 - 9
-    binom = (F.element_at(fl, F.col("n").cast("int") + 1)
-             / (F.element_at(fl, F.col("k").cast("int") + 1)
-                * F.element_at(fl, (F.col("n") - F.col("k"))
-                               .cast("int") + 1))).cast("long")
-    return (t.groupBy("n").agg(F.sum(binom * ak).alias("b"))
-            .orderBy("n"))
-
-
-def q_pisano_period(spark, sf_dir) -> DataFrame:
-    """Pisano periods pi(m) of the Fibonacci sequence mod m for
-    m=2..40 — engine: the pair iteration (F_k, F_{k+1}) mod m in a
-    kernel until (0,1) recurs. Oracle: the same dynamical system
-    replayed in a recursive CTE. One orbit, two machines."""
-    m = spark.range(2, 41).select(F.col("id").alias("m"))
-
-    def pisano_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for mv in pdf["m"]:
-                mv = int(mv)
-                a, b, k = 0, 1, 0
-                while True:
-                    a, b = b, (a + b) % mv
-                    k += 1
-                    if (a, b) == (0, 1):
-                        break
-                outs.append(k)
-            yield pd.DataFrame({"m": pdf["m"], "period": outs})
-
-    return (m.repartition(4)
-            .mapInPandas(pisano_kernel, "m long, period long")
-            .orderBy("m"))
-
-
-def q_square_by_tau(spark, sf_dir) -> DataFrame:
-    """Perfect-square detection for n=1..400 — engine: the
-    corrected integer square root (s^2 = n). Oracle: the
-    DIVISOR-PARITY theorem — n is a square iff its divisor count
-    is odd (divisors pair up except the root). Arithmetic vs a
-    pairing argument."""
-    n = spark.range(1, 401).select(F.col("id").alias("n"))
-    v = F.col("n")
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    s = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    return (n.select("n", F.when(s * s == v, 1).otherwise(0)
-                     .cast("int").alias("is_square"))
-            .orderBy("n"))
-
-
-def q_min_squares(spark, sf_dir) -> DataFrame:
-    """Minimal number of squares summing to n for n=1..300 —
-    engine: the THEOREM STACK — 1 iff square; 2 iff every prime
-    = 3 mod 4 divides to an even power (Fermat); 4 iff n =
-    4^a(8b+7) (Legendre); else 3 (Lagrange caps at 4), decided by
-    a factorization kernel that never searches. Oracle: the
-    CENSUS — brute-force least k with an explicit representation.
-    Three classical theorems vs trying every decomposition."""
-    n = spark.range(1, 301).select(F.col("id").alias("n"))
-
-    def minsq_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for n0 in pdf["n"]:
-                n0 = int(n0)
-                if math.isqrt(n0) ** 2 == n0:
-                    outs.append(1)
-                    continue
-                m = n0
-                while m % 4 == 0:
-                    m //= 4
-                if m % 8 == 7:
-                    outs.append(4)
-                    continue
-                # Fermat two-square criterion
-                m, ok2 = n0, True
-                p = 2
-                while p * p <= m:
-                    if m % p == 0:
-                        e = 0
-                        while m % p == 0:
-                            m //= p
-                            e += 1
-                        if p % 4 == 3 and e % 2 == 1:
-                            ok2 = False
-                            break
-                    p += 1
-                if ok2 and m > 1 and m % 4 == 3:
-                    ok2 = False
-                outs.append(2 if ok2 else 3)
-            yield pd.DataFrame({"n": pdf["n"], "min_squares": outs})
-
-    return (n.repartition(4)
-            .mapInPandas(minsq_kernel, "n long, min_squares int")
-            .orderBy("n"))
-
-
-def q_kasai_lcp(spark, sf_dir) -> DataFrame:
-    """Suffix array + LCP array of 15 cleaned 50-char document
-    prefixes — engine: KASAI'S ALGORITHM — the h-decrement
-    invariant (lcp of consecutive ranks computed in text order,
-    reusing h-1 of the previous position) in a kernel. Oracle:
-    DECLARATIVE — suffixes sorted by ORDER BY, the LCP probed as
-    the max equal-prefix length against the lag suffix. An O(n)
-    amortized invariant vs quadratic probing."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 15)
-           .select("doc_id", _clean_text(50).alias("s"))
-           .filter(F.length("s") >= 20))
-
-    def kasai_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            ids, rks, poss, lcps = [], [], [], []
-            for doc, s in zip(pdf["doc_id"], pdf["s"]):
-                n = len(s)
-                sa = sorted(range(n), key=lambda i: s[i:])
-                rank = [0] * n
-                for r, i in enumerate(sa):
-                    rank[i] = r
-                lcp = [0] * n
-                h = 0
-                for i in range(n):
-                    if rank[i] > 0:
-                        j = sa[rank[i] - 1]
-                        while i + h < n and j + h < n \
-                                and s[i + h] == s[j + h]:
-                            h += 1
-                        lcp[rank[i]] = h
-                        if h:
-                            h -= 1
-                    else:
-                        h = 0
-                for r, i in enumerate(sa):
-                    ids.append(doc)
-                    rks.append(r + 1)
-                    poss.append(i + 1)
-                    lcps.append(lcp[r])
-            yield pd.DataFrame({"doc_id": ids, "rank": rks,
-                                "sa_pos": poss, "lcp": lcps})
-
-    return (raw.repartition(4)
-            .mapInPandas(kasai_kernel,
-                         "doc_id long, rank int, sa_pos int, lcp int")
-            .orderBy("doc_id", "rank"))
-
-
-def q_fm_count(spark, sf_dir) -> DataFrame:
-    """Pattern occurrence counts by FM-INDEX backward search — 15
-    cleaned 80-char document prefixes, pattern = a 3-gram of each
-    text — engine: build the BWT of t+'$' from sorted rotations,
-    then count via the LF-mapping interval [lo, hi) narrowed one
-    pattern character at a time (C table + occ ranks), never
-    scanning the text. Oracle: the NAIVE SCAN — count positions
-    whose 3-gram equals the pattern. Compressed-index mechanics vs
-    looking."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 15)
-           .select("doc_id", _clean_text(80).alias("t"))
-           .filter(F.length("t") >= 30)
-           .withColumn("p", F.substring(F.col("t"), 11, 3)))
-
-    def fm_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for t, p in zip(pdf["t"], pdf["p"]):
-                s = t + "$"
-                n = len(s)
-                sa = sorted(range(n), key=lambda i: s[i:] + s[:i])
-                bwt = [s[(i - 1) % n] for i in sa]
-                chars = sorted(set(s))
-                C = {}
-                tot = 0
-                for ch in chars:
-                    C[ch] = tot
-                    tot += s.count(ch)
-
-                def occ(ch, i):
-                    return sum(1 for x in bwt[:i] if x == ch)
-
-                lo, hi = 0, n
-                for ch in reversed(p):
-                    if ch not in C:
-                        lo = hi = 0
-                        break
-                    lo = C[ch] + occ(ch, lo)
-                    hi = C[ch] + occ(ch, hi)
-                    if lo >= hi:
-                        break
-                outs.append(hi - lo)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": pdf["p"],
-                                "n_occ": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(fm_kernel, "doc_id long, p string, n_occ int")
-            .orderBy("doc_id"))
-
-
-def q_ukkonen_distance(spark, sf_dir) -> DataFrame:
-    """Edit distance between each cleaned 30-char prefix and a
-    deterministically mutated copy (one delete, one substitution,
-    one double insert) — engine: UKKONEN'S BANDED DIAGONAL method
-    — for increasing thresholds, extend furthest-reaching points
-    per diagonal (O(nd), never fills the DP table). Oracle:
-    DuckDB's levenshtein(), an independent C++ Wagner-Fischer.
-    Diagonal frontiers vs the full matrix."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id", _clean_text(30).alias("a"))
-           .filter(F.length("a") >= 15))
-    # one delete at p1 = 1 + doc%10, then 'zz' inserted at
-    # p2 = 1 + doc%7 — rebuilt identically by the oracle
-    p1 = (1 + F.col("doc_id") % 10).cast("int")
-    p2 = (1 + F.col("doc_id") % 7).cast("int")
-    b0 = F.concat(F.substring(F.col("a"), 1, p1 - 1),
-                  F.substring(F.col("a"), p1 + 1, F.lit(100)))
-    raw = raw.withColumn("b0", b0)
-    b2 = F.concat(F.substring(F.col("b0"), 1, p2), F.lit("zz"),
-                  F.substring(F.col("b0"), p2 + 1, F.lit(100)))
-    raw = raw.withColumn("b", b2).drop("b0")
-
-    def ukk_kernel(it):
-        import pandas as pd
-
-        def edist2(a, b):
-            # classic O(nd) greedy with substitutions: f[k] =
-            # furthest i on diagonal k (j = i - k) using edits <= t
-            la, lb = len(a), len(b)
-
-            def snake(i, j):
-                while i < la and j < lb and a[i] == b[j]:
-                    i += 1
-                    j += 1
-                return i
-
-            f = {0: snake(0, 0)}
-            if f[0] >= la and f[0] - 0 >= lb:
-                return 0
-            for t in range(1, la + lb + 1):
-                nf = {}
-                for k in range(-t, t + 1):
-                    best = -1
-                    # delete from a (come from k-1), insert
-                    # (k+1), substitute (k)
-                    if k - 1 in f:
-                        best = max(best, f[k - 1] + 1)
-                    if k + 1 in f:
-                        best = max(best, f[k + 1])
-                    if k in f:
-                        best = max(best, f[k] + 1)
-                    if best < 0:
-                        continue
-                    i = min(best, la)
-                    j = i - k
-                    if j < 0 or j > lb:
-                        continue
-                    nf[k] = snake(i, j) if i <= la and j <= lb \
-                        else i
-                f = nf
-                k0 = la - lb
-                if k0 in f and f[k0] >= la:
-                    return t
-            return la + lb
-
-        for pdf in it:
-            ds = [edist2(a, b)
-                  for a, b in zip(pdf["a"], pdf["b"])]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "a": pdf["a"],
-                                "b": pdf["b"], "dist": ds})
-
-    return (raw.repartition(4)
-            .mapInPandas(ukk_kernel,
-                         "doc_id long, a string, b string, dist int")
-            .orderBy("doc_id"))
-
-
-def q_ruffini_division(spark, sf_dir) -> DataFrame:
-    """Synthetic division of 20 hash-derived degree-10 integer
-    polynomials by (x - c) — engine: the CLOSED FORM — quotient
-    coefficient b_k = sum_{j>k} a_j c^(j-k-1) and remainder P(c),
-    one explode + groupBy with exact powers. Oracle: RUFFINI'S
-    RECURRENCE — b_{k-1} = a_k + c*b_k walked down in a recursive
-    CTE. Expanded power sums vs the telescoped rule."""
-    d = F.col("doc_id").cast("string")
-    coef = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 20)
-            .select("doc_id",
-                    (1 + _mst_hash(F.concat(F.lit("rc:"), d)) % 4)
-                    .alias("c"),
-                    *[(_mst_hash(F.concat(F.lit(f"ra{j}:"), d))
-                       % 21 - 10).alias(f"a{j}") for j in range(11)]))
-    aj = F.array(*[F.col(f"a{j}") for j in range(11)])
-    kk = spark.range(-1, 10).select(F.col("id").alias("k"))
-    jj = spark.range(0, 11).select(F.col("id").alias("j"))
-    t = (coef.select("doc_id", "c", aj.alias("aj"))
-         .join(F.broadcast(kk))
-         .join(F.broadcast(jj), F.col("j") >= F.col("k") + 1))
-    a_j = F.element_at(F.col("aj"), F.col("j").cast("int") + 1)
-    cpow = F.pow(F.col("c").cast("double"),
-                 (F.col("j") - F.col("k") - 1).cast("double")) \
-        .cast("long")
-    # k = -1 row accumulates sum a_j c^j = P(c), the remainder
-    term = F.when(F.col("k") == -1,
-                  a_j * F.pow(F.col("c").cast("double"),
-                              F.col("j").cast("double")).cast("long")) \
-        .otherwise(a_j * cpow)
-    return (t.groupBy("doc_id", "k").agg(F.sum(term).alias("coef"))
-            .orderBy("doc_id", "k"))
-
-
-def q_misra_gries(spark, sf_dir) -> DataFrame:
-    """Heavy hitters (frequency > n/5) in 12 skewed 200-item
-    streams — engine: MISRA-GRIES with 4 counters plus the exact
-    verification pass (the summary provably contains every heavy
-    hitter; the second pass trims false positives). Oracle: the
-    CENSUS — count everything, keep counts > 40. A streaming
-    summary with a coverage guarantee vs counting."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def mg_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            gs_, vs_, cs_ = [], [], []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                stream = []
-                for i in range(200):
-                    if h(f"mgs:{gv}:{i}") % 3 > 0:
-                        stream.append(h(f"mgh:{gv}:{i}") % 4)
-                    else:
-                        stream.append(4 + h(f"mgc:{gv}:{i}") % 36)
-                # Misra-Gries, k-1 = 4 counters
-                counters = {}
-                for v in stream:
-                    if v in counters:
-                        counters[v] += 1
-                    elif len(counters) < 4:
-                        counters[v] = 1
-                    else:
-                        for key in list(counters):
-                            counters[key] -= 1
-                            if counters[key] == 0:
-                                del counters[key]
-                # exact verification pass over the candidates only
-                for v in sorted(counters):
-                    exact = sum(1 for x in stream if x == v)
-                    if exact > 40:
-                        gs_.append(gv)
-                        vs_.append(v)
-                        cs_.append(exact)
-            yield pd.DataFrame({"g": gs_, "v": vs_, "cnt": cs_})
-
-    return (g.repartition(4)
-            .mapInPandas(mg_kernel, "g long, v long, cnt long")
-            .orderBy("g", "v"))
-
-
-def q_bitap_match(spark, sf_dir) -> DataFrame:
-    """5-char pattern occurrences by BITAP (Shift-And) — the
-    pattern compiled to per-character bitmasks, the NFA state a
-    single integer updated as state = ((state << 1) | 1) & mask[c]
-    — in a kernel; the engine never compares substrings. Oracle:
-    the substring scan. A bit-parallel NFA vs string compare."""
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id", _clean_text(80).alias("t"))
-           .filter(F.length("t") >= 30)
-           .withColumn("p", F.substring(F.col("t"), 5, 5)))
-
-    def bitap_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for t, p in zip(pdf["t"], pdf["p"]):
-                m = len(p)
-                mask = {}
-                for i, ch in enumerate(p):
-                    mask[ch] = mask.get(ch, 0) | (1 << i)
-                state, cnt = 0, 0
-                hit = 1 << (m - 1)
-                for ch in t:
-                    state = ((state << 1) | 1) & mask.get(ch, 0)
-                    if state & hit:
-                        cnt += 1
-                outs.append(cnt)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": pdf["p"],
-                                "n_occ": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(bitap_kernel,
-                         "doc_id long, p string, n_occ int")
-            .orderBy("doc_id"))
-
-
-def q_min_max_partition(spark, sf_dir) -> DataFrame:
-    """Split a 16-value array into 4 contiguous parts minimizing
-    the maximum part sum, 12 instances — engine: BINARY SEARCH ON
-    THE ANSWER — feasibility of a cap S by the greedy packer,
-    bisected in a kernel. Oracle: ENUMERATION — all C(15,3) = 455
-    cut triples scored via prefix sums, min of maxes. Parametric
-    search vs exhaustion."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def bs_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                arr = [1 + h(f"mm:{gv}:{i}") % 30 for i in range(16)]
-
-                def feasible(cap):
-                    parts, cur = 1, 0
-                    for v in arr:
-                        if v > cap:
-                            return False
-                        if cur + v > cap:
-                            parts += 1
-                            cur = v
-                        else:
-                            cur += v
-                    return parts <= 4
-
-                lo, hi = max(arr), sum(arr)
-                while lo < hi:
-                    mid = (lo + hi) // 2
-                    if feasible(mid):
-                        hi = mid
-                    else:
-                        lo = mid + 1
-                outs.append(lo)
-            yield pd.DataFrame({"g": pdf["g"], "best": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(bs_kernel, "g long, best long")
-            .orderBy("g"))
-
-
-def q_circular_tour(spark, sf_dir) -> DataFrame:
-    """Smallest feasible start of a 24-station circular gas tour,
-    12 instances — engine: the RESET GREEDY — on tank failure jump
-    past the failure point (every start in between is provably
-    infeasible, so the survivor is the minimum), one pass plus the
-    total-surplus check. Oracle: BRUTE FORCE — every start
-    simulated all the way round. An elimination argument vs trying
-    them all (-1 when the tour is impossible, on both sides)."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def tour_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                gas = [h(f"cg:{gv}:{i}") % 15 for i in range(24)]
-                cost = [h(f"cc:{gv}:{i}") % 15 for i in range(24)]
-                if sum(gas) < sum(cost):
-                    outs.append(-1)
-                    continue
-                start, tank = 0, 0
-                for i in range(24):
-                    tank += gas[i] - cost[i]
-                    if tank < 0:
-                        start, tank = i + 1, 0
-                outs.append(start if start < 24 else -1)
-            yield pd.DataFrame({"g": pdf["g"], "start": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(tour_kernel, "g long, start long")
-            .orderBy("g"))
-
-
-def q_sparse_table_rmq(spark, sf_dir) -> DataFrame:
-    """Range-minimum queries over 10 hash arrays of 64 values, 20
-    half-open ranges each — engine: a SPARSE TABLE (binary-lifting
-    doubling, O(1) per query as min of two overlapping power-of-
-    two blocks) in a kernel. Oracle: the direct min over the range
-    by a correlated subquery. Preprocessing cleverness vs just
-    looking at the range."""
-    g = spark.range(0, 10).select(F.col("id").alias("g"))
-
-    def rmq_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            gs_, qs_, ls_, rs_, ms_ = [], [], [], [], []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                arr = [h(f"rm:{gv}:{i}") % 1000 for i in range(64)]
-                st = [arr[:]]
-                j = 1
-                while (1 << j) <= 64:
-                    prev = st[-1]
-                    st.append([min(prev[i], prev[i + (1 << (j - 1))])
-                               for i in range(64 - (1 << j) + 1)])
-                    j += 1
-                for q in range(20):
-                    l = h(f"rq:{gv}:{q}") % 63
-                    r = l + 1 + h(f"rr:{gv}:{q}") % (64 - l)
-                    k = (r - l).bit_length() - 1
-                    mn = min(st[k][l], st[k][r - (1 << k)])
-                    gs_.append(gv)
-                    qs_.append(q)
-                    ls_.append(l)
-                    rs_.append(r)
-                    ms_.append(mn)
-            yield pd.DataFrame({"g": gs_, "qid": qs_, "l": ls_,
-                                "r": rs_, "mn": ms_})
-
-    return (g.repartition(4)
-            .mapInPandas(rmq_kernel,
-                         "g long, qid int, l int, r int, mn long")
-            .orderBy("g", "qid"))
-
-
-def q_knight_walks(spark, sf_dir) -> DataFrame:
-    """Knight walks of length 6 from the corner of a 5x5 board,
-    counted per end cell — engine: MATRIX POWER — six rounds of
-    relational adjacency joins with map-side combined counts (the
-    A^6 e_0 product as DataFrames). Oracle: RAW EXPANSION — every
-    walk its own recursive-CTE row, counts by final grouping.
-    Aggregated linear algebra vs the unrolled tree."""
-    cells = spark.range(0, 25).select(F.col("id").alias("c"))
-    offs = spark.createDataFrame(
-        [(1, 2), (2, 1), (-1, 2), (-2, 1),
-         (1, -2), (2, -1), (-1, -2), (-2, -1)], "dr long, dc long")
-    r, c = F.col("c") / 5, F.col("c") % 5
-    moves = (cells.join(F.broadcast(offs))
-             .withColumn("nr", (F.col("c") / 5).cast("long")
-                         + F.col("dr"))
-             .withColumn("nc", F.col("c") % 5 + F.col("dc"))
-             .filter((F.col("nr") >= 0) & (F.col("nr") < 5)
-                     & (F.col("nc") >= 0) & (F.col("nc") < 5))
-             .select(F.col("c").alias("src"),
-                     (F.col("nr") * 5 + F.col("nc")).alias("dst")))
-    state = (spark.range(0, 1)
-             .select(F.lit(0).cast("long").alias("cell"),
-                     F.lit(1).cast("long").alias("cnt")))
-    for _ in range(6):
-        state = (state.join(F.broadcast(moves),
-                            F.col("cell") == F.col("src"))
-                 .groupBy(F.col("dst").alias("newcell"))
-                 .agg(F.sum("cnt").alias("cnt"))
-                 .select(F.col("newcell").alias("cell"), "cnt"))
-    return state.select(F.col("cell"), F.col("cnt")).orderBy("cell")
-
-
-def q_menage_numbers(spark, sf_dir) -> DataFrame:
-    """Menage numbers U_n for n=3..7 — engine: TOUCHARD'S closed
-    form sum_k (-1)^k 2n/(2n-k) C(2n-k,k) (n-k)!, every term an
-    exact integer (the division is taken before the factorial
-    multiply on a provably divisible product). Oracle: the CENSUS
-    — permutations avoiding both forbidden diagonals pi(i) != i
-    and pi(i) != i+1 (mod n), enumerated per n in a recursive CTE.
-    A 1934 identity vs seating the couples."""
-    fact = [1] * 15
-    for i in range(1, 15):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(3, 8).select(F.col("id").alias("n"))
-    k = spark.range(0, 8).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
-    two_n = 2 * F.col("n")
-    # C(2n-k, k)
-    binom = (F.element_at(fl, (two_n - F.col("k")).cast("int") + 1)
-             / (F.element_at(fl, F.col("k").cast("int") + 1)
-                * F.element_at(fl, (two_n - 2 * F.col("k"))
-                               .cast("int") + 1))).cast("long")
-    sign = F.when(F.col("k") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    term = (sign * ((two_n * binom / (two_n - F.col("k")))
-                    .cast("long"))
-            * F.element_at(fl, (F.col("n") - F.col("k"))
-                           .cast("int") + 1))
-    return (t.groupBy("n").agg(F.sum(term).alias("menage"))
-            .orderBy("n"))
-
-
-def q_euler_partition_identity(spark, sf_dir) -> DataFrame:
-    """Partitions of n=0..40 into ODD parts — engine: the
-    unbounded-coin DP over odd part sizes, one relational
-    multiples-join per coin (driver-unrolled, 20 tiny shuffles).
-    Oracle: partitions into DISTINCT parts — the binary-choice DP
-    in a list-state recursive CTE. Equal for every n by EULER'S
-    IDENTITY — the two sides never compute the same object."""
-    state = (spark.range(0, 41)
-             .select(F.col("id").alias("n"),
-                     F.when(F.col("id") == 0, 1).otherwise(0)
-                     .cast("long").alias("c")))
-    jr = spark.range(0, 41).select(F.col("id").alias("j"))
-    for kpart in range(1, 41, 2):
-        contrib = (state.join(
-            F.broadcast(jr),
-            F.col("n") + F.lit(kpart) * F.col("j") <= 40)
-            .select((F.col("n") + F.lit(kpart) * F.col("j"))
-                    .alias("n"), "c"))
-        state = contrib.groupBy("n").agg(F.sum("c").alias("c"))
-    return (state.select("n", F.col("c").alias("q"))
-            .orderBy("n"))
-
-
-def q_walk2d_returns(spark, sf_dir) -> DataFrame:
-    """Returns to the origin of the 2D simple random walk after
-    2n steps, n=1..8 — engine: the DIAGONAL DECOUPLING theorem —
-    rotating 45 degrees splits the walk into two independent 1D
-    walks, so the count is C(2n,n)^2, pure column algebra. Oracle:
-    the LATTICE DP — step counts aggregated over (x,y) states in a
-    recursive CTE, read off at the origin. A bijection that
-    squares a binomial vs brute dynamics."""
-    fact = [1] * 17
-    for i in range(1, 17):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(1, 9).select(F.col("id").alias("n"))
-    binom = (F.element_at(fl, (2 * F.col("n")).cast("int") + 1)
-             / (F.element_at(fl, F.col("n").cast("int") + 1)
-                * F.element_at(fl, F.col("n").cast("int") + 1))) \
-        .cast("long")
-    return (n.select("n", (binom * binom).alias("returns"))
-            .orderBy("n"))
-
-
-def q_demoivre_chebyshev(spark, sf_dir) -> DataFrame:
-    """5^n * cos(n*theta) for the 3-4-5 angle (cos theta = 3/5),
-    n=0..20, exact integers — engine: DE MOIVRE — the real part of
-    (3+4i)^n by exact Gaussian-integer multiplication in a kernel.
-    Oracle: the CHEBYSHEV recurrence — T_n = 2x T_{n-1} - T_{n-2}
-    scaled to a_n = 6a_{n-1} - 25a_{n-2}. Complex powers vs
-    orthogonal polynomials."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def dm_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            re, im = 1, 0
-            ns, res = [0], [1]
-            for n in range(1, 21):
-                re, im = re * 3 - im * 4, re * 4 + im * 3
-                ns.append(n)
-                res.append(re)
-            yield pd.DataFrame({"n": ns, "a": res})
-
-    return (one.mapInPandas(dm_kernel, "n long, a long")
-            .orderBy("n"))
-
-
-def q_long_cycle_perms(spark, sf_dir) -> DataFrame:
-    """Permutations of S_7 whose longest cycle has length k, for
-    k=4..7 — engine: the n!/k IDENTITY — a cycle longer than n/2
-    is unique, so the count is exactly 7!/k, one projection.
-    Oracle: the CENSUS — max orbit length per permutation through
-    a 7-step closure, histogram. The 100-prisoners identity vs
-    checking every permutation."""
-    fact7 = 5040
-    k = spark.range(4, 8).select(F.col("id").alias("k"))
-    return (k.select("k", (F.lit(fact7) / F.col("k")).cast("long")
-                     .alias("n_perms"))
-            .orderBy("k"))
-
-
-def q_bracelet_count(spark, sf_dir) -> DataFrame:
-    """Binary bracelets (necklaces under the dihedral group) of
-    length n=1..14 — engine: the DIHEDRAL BURNSIDE closed form —
-    half the necklace count plus the reflection terms
-    (3/4 * 2^(n/2) even, 2^((n-1)/2) odd), the necklace half from
-    the relational-totient phi-sum. Oracle: the ORBIT CENSUS —
-    canonical form = min over all rotations of both the string and
-    its bit-reversal. Averaging over D_n vs listing its orbits."""
-    d14 = spark.range(1, 15)
-    dk = (d14.select(F.col("id").alias("d"))
-          .join(d14.select(F.col("id").alias("k")),
-                F.col("k") <= F.col("d")))
-    j = spark.range(2, 15).select(F.col("id").alias("j"))
-    common = dk.join(
-        F.broadcast(j),
-        (F.col("d") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    phi = (dk.join(common, ["d", "k"], "left_anti")
-           .groupBy("d").agg(F.count("k").alias("phi")))
-    nd = (d14.select(F.col("id").alias("n"))
-          .join(F.broadcast(phi), F.col("n") % F.col("d") == 0))
-    term = F.col("phi") * F.pow(F.lit(2.0), (F.col("n") / F.col("d"))
-                                .cast("double")).cast("long")
-    neck = nd.groupBy("n").agg((F.sum(term) / F.col("n"))
-                               .cast("long").alias("neckl"))
-    half = F.col("n") / 2
-    refl = F.when(
-        F.col("n") % 2 == 0,
-        (3 * F.pow(F.lit(2.0), half.cast("double")).cast("long"))
-        / 4).otherwise(
-        F.pow(F.lit(2.0), ((F.col("n") - 1) / 2).cast("double"))
-        .cast("long"))
-    return (neck.select(
-        "n", ((F.col("neckl") / 2) + refl).cast("long")
-        .alias("bracelets"))
-        .orderBy("n"))
-
-
-def q_narayana_numbers(spark, sf_dir) -> DataFrame:
-    """Narayana numbers N(7,k) = (1/7) C(7,k) C(7,k-1), k=1..7 —
-    engine: the CLOSED FORM from a factorial literal (the division
-    by 7 is exact on the product). Oracle: the MEANING — all 429
-    Dyck paths of semilength 7 built in a recursive CTE, peaks
-    ('UD' occurrences) counted and histogrammed. A product formula
-    vs walking every path."""
-    fact = [1] * 8
-    for i in range(1, 8):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    k = spark.range(1, 8).select(F.col("id").alias("k"))
-
-    def c7(kk):
-        return (F.element_at(fl, F.lit(8))
-                / (F.element_at(fl, kk.cast("int") + 1)
-                   * F.element_at(fl, (7 - kk).cast("int") + 1))) \
-            .cast("long")
-
-    nar = (c7(F.col("k")) * c7(F.col("k") - 1) / 7).cast("long")
-    return k.select("k", nar.alias("narayana")).orderBy("k")
-
-
-def q_balanced_ternary(spark, sf_dir) -> DataFrame:
-    """Balanced-ternary representations (digits T/0/1 for -1/0/1)
-    of 60 hash numbers below 20000 — engine: the ALL-ONES OFFSET
-    trick — bt(n) is the ordinary base-3 expansion of
-    n + (3^10-1)/2 with every digit decremented, i.e. one conv()
-    plus one translate('012' -> 'T01'), pure JVM string algebra.
-    Oracle: the DEFINITION — divmod with carry (digit =
-    ((n+1) mod 3) - 1) in a recursive CTE. A bijection trick vs
-    the carrying loop."""
-    OFFSET = (3 ** 10 - 1) // 2  # 29524
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("bt3:"), d)) % 20000)
-                   .alias("n")))
-    t3 = F.conv((F.col("n") + OFFSET).cast("string"), 10, 3)
-    bt = F.regexp_replace(
-        F.translate(t3, "012", "T01"), "^0+", "")
-    bt = F.when(F.col("n") == 0, F.lit("0")).otherwise(bt)
-    return raw.select("doc_id", "n", bt.alias("bt")).orderBy("doc_id")
-
-
-def q_fib_gcd(spark, sf_dir) -> DataFrame:
-    """gcd(F_m, F_n) = F_gcd(m,n) for 30 hash pairs with m,n <= 80
-    — engine: the IDENTITY side — compute gcd(m,n) by Euclid, then
-    F of it by fast doubling, never touching F_m or F_n. Oracle:
-    the DIRECT side — build F_m and F_n by the linear recurrence
-    (they fit int64 up to F_80) and take DuckDB's gcd. A divisor
-    lattice homomorphism vs raw computation."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id",
-                   (1 + _mst_hash(F.concat(F.lit("fg1:"), d)) % 80)
-                   .alias("m"),
-                   (1 + _mst_hash(F.concat(F.lit("fg2:"), d)) % 80)
-                   .alias("n")))
-
-    def fg_kernel(it):
-        import math
-
-        import pandas as pd
-
-        def fib_fast(k):
-            # fast doubling: returns (F(k), F(k+1))
-            if k == 0:
-                return (0, 1)
-            a, b = fib_fast(k >> 1)
-            c = a * (2 * b - a)
-            d2 = a * a + b * b
-            if k & 1:
-                return (d2, c + d2)
-            return (c, d2)
-
-        for pdf in it:
-            outs = []
-            for m, n in zip(pdf["m"], pdf["n"]):
-                g = math.gcd(int(m), int(n))
-                outs.append(fib_fast(g)[0])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "m": pdf["m"],
-                                "n": pdf["n"], "g": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(fg_kernel,
-                         "doc_id long, m long, n long, g long")
-            .orderBy("doc_id"))
-
-
-def q_kaprekar_6174(spark, sf_dir) -> DataFrame:
-    """Kaprekar's routine (desc digits minus asc digits) on 40
-    four-digit numbers with unequal digits: steps to reach 6174 —
-    engine: the imperative loop in a kernel. Oracle: the same
-    dynamical system with the digit SORT done relationally
-    (unnest + string_agg ORDER BY) inside a recursive CTE.
-    Imperative digits vs relational sorting."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   (1000 + _mst_hash(F.concat(F.lit("kp:"), d))
-                    % 9000).alias("n0")))
-    # exclude repdigits (they collapse to 0, not 6174)
-    dd = F.col("n0")
-    d1, d2 = (dd / 1000).cast("long") % 10, (dd / 100).cast("long") % 10
-    d3, d4 = (dd / 10).cast("long") % 10, dd % 10
-    raw = raw.filter(~((d1 == d2) & (d2 == d3) & (d3 == d4)))
-
-    def kap_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for n0 in pdf["n0"]:
-                v, st = int(n0), 0
-                while v != 6174:
-                    digs = sorted(f"{v:04d}")
-                    asc = int("".join(digs))
-                    desc = int("".join(reversed(digs)))
-                    v = desc - asc
-                    st += 1
-                outs.append(st)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n0": pdf["n0"], "steps": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(kap_kernel,
-                         "doc_id long, n0 long, steps int")
-            .orderBy("doc_id"))
-
-
-def q_squarefree_count(spark, sf_dir) -> DataFrame:
-    """Squarefree counts Q(n) for n = 50, 100, ..., 500 — engine:
-    MOBIUS INCLUSION-EXCLUSION — Q(n) = sum_{d <= sqrt(n)} mu(d) *
-    floor(n/d^2), with mu built relationally (squarefree check +
-    prime-divisor parity, no kernel). Oracle: the CENSUS — count
-    m <= n with no square divisor >= 4. Sieve algebra vs the
-    definition."""
-    n = (spark.range(1, 11)
-         .select((F.col("id") * 50).alias("n")))
-    dv = spark.range(1, 23).select(F.col("id").alias("d"))
-    p = spark.range(2, 23).select(F.col("id").alias("p"))
-    j = spark.range(2, 23).select(F.col("id").alias("j"))
-    primes = p.join(
-        F.broadcast(j),
-        (F.col("j") < F.col("p")) & (F.col("p") % F.col("j") == 0),
-        "left_anti")
-    # mu(d): 0 if p^2 | d for some prime, else (-1)^(#prime divisors)
-    pd_pairs = dv.join(F.broadcast(primes),
-                       F.col("d") % F.col("p") == 0, "left")
-    mu = (pd_pairs.groupBy("d")
-          .agg(F.max(F.when(F.col("d")
-                            % (F.col("p") * F.col("p")) == 0, 1)
-                     .otherwise(0)).alias("sq"),
-               F.count("p").alias("npf")))
-    mu = mu.select(
-        "d", F.when(F.col("sq") == 1, 0)
-        .otherwise(F.when(F.col("npf") % 2 == 0, 1).otherwise(-1))
-        .alias("mu"))
-    t = n.join(F.broadcast(mu),
-               F.col("d") * F.col("d") <= F.col("n"))
-    term = F.col("mu") * (F.col("n") / (F.col("d") * F.col("d"))) \
-        .cast("long")
-    return (t.groupBy("n").agg(F.sum(term).alias("q"))
-            .orderBy("n"))
-
-
-def q_legendre_pi(spark, sf_dir) -> DataFrame:
-    """pi(n) for n = 1000, 2000, ..., 10000 — engine: LEGENDRE'S
-    FORMULA — pi(n) = phi(n, a) + a - 1 with phi(x, a) = counts
-    untouched by the first a primes, the memoized two-argument
-    recursion phi(x,a) = phi(x,a-1) - phi(x/p_a, a-1) in a kernel
-    (never tests a single candidate above sqrt(n)). Oracle: the
-    CENSUS — trial-division primality for every m <= n. The first
-    nontrivial prime-counting algorithm (1808) vs the sieve-less
-    definition."""
-    n = (spark.range(1, 11)
-         .select((F.col("id") * 1000).alias("n")))
-
-    def leg_kernel(it):
-        import math
-        from functools import lru_cache
-
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for nv in pdf["n"]:
-                nv = int(nv)
-                lim = math.isqrt(nv)
-                sieve = [True] * (lim + 1)
-                primes = []
-                for i in range(2, lim + 1):
-                    if sieve[i]:
-                        primes.append(i)
-                        for k in range(i * i, lim + 1, i):
-                            sieve[k] = False
-                a = len(primes)
-
-                @lru_cache(maxsize=None)
-                def phi(x, i):
-                    if i == 0:
-                        return x
-                    return phi(x, i - 1) - phi(x // primes[i - 1],
-                                               i - 1)
-
-                outs.append(phi(nv, a) + a - 1)
-                phi.cache_clear()
-            yield pd.DataFrame({"n": pdf["n"], "pi": outs})
-
-    return (n.repartition(4)
-            .mapInPandas(leg_kernel, "n long, pi long")
-            .orderBy("n"))
-
-
-def q_rotating_calipers(spark, sf_dir) -> DataFrame:
-    """Squared diameter of 12 hash point sets (20 points in
-    [0,100]^2) — engine: ROTATING CALIPERS — monotone-chain hull,
-    then antipodal pairs swept by the calipers (O(h) after the
-    hull; only hull pairs examined). Oracle: BRUTE FORCE — max
-    squared distance over all 190 pairs. Convexity doing the
-    pruning vs no pruning at all."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def cal_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                pts = sorted({(h(f"rx:{gv}:{i}") % 101,
-                               h(f"ry:{gv}:{i}") % 101)
-                              for i in range(20)})
-
-                def cross(o, a, b):
-                    return ((a[0] - o[0]) * (b[1] - o[1])
-                            - (a[1] - o[1]) * (b[0] - o[0]))
-
-                lower, upper = [], []
-                for p in pts:
-                    while len(lower) > 1 \
-                            and cross(lower[-2], lower[-1], p) <= 0:
-                        lower.pop()
-                    lower.append(p)
-                for p in reversed(pts):
-                    while len(upper) > 1 \
-                            and cross(upper[-2], upper[-1], p) <= 0:
-                        upper.pop()
-                    upper.append(p)
-                hull = lower[:-1] + upper[:-1]
-                m = len(hull)
-                if m == 1:
-                    outs.append(0)
-                    continue
-                if m == 2:
-                    dx = hull[0][0] - hull[1][0]
-                    dy = hull[0][1] - hull[1][1]
-                    outs.append(dx * dx + dy * dy)
-                    continue
-                # rotating calipers over antipodal pairs
-                best = 0
-                k = 1
-                for i in range(m):
-                    ni = (i + 1) % m
-                    while True:
-                        nk = (k + 1) % m
-                        c1 = abs(cross(hull[i], hull[ni], hull[nk]))
-                        c0 = abs(cross(hull[i], hull[ni], hull[k]))
-                        if c1 > c0:
-                            k = nk
-                        else:
-                            break
-                    for q in (hull[k], hull[(k + 1) % m]):
-                        for p in (hull[i], hull[ni]):
-                            d2 = ((p[0] - q[0]) ** 2
-                                  + (p[1] - q[1]) ** 2)
-                            best = max(best, d2)
-                outs.append(best)
-            yield pd.DataFrame({"g": pdf["g"], "diam2": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(cal_kernel, "g long, diam2 long")
-            .orderBy("g"))
-
-
-def q_rect_union_area(spark, sf_dir) -> DataFrame:
-    """Area of the union of 6 hash rectangles on a 40x40 integer
-    grid, 12 instances — engine: INCLUSION-EXCLUSION — all 63
-    nonempty subsets (a broadcast mask table), the intersection of
-    a subset is a rectangle whose area is a product of interval
-    overlaps, signs by popcount; pure column algebra. Oracle: the
-    CENSUS — count unit cells covered by at least one rectangle.
-    The alternating-sum lattice identity vs pixel counting."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-    r = spark.range(0, 6).select(F.col("id").alias("ri"))
-    gs, rs = F.col("g").cast("string"), F.col("ri").cast("string")
-    rects = (g.crossJoin(F.broadcast(r))
-             .select("g", "ri",
-                     (_mst_hash(F.concat(F.lit("rxa:"), gs,
-                                         F.lit(":"), rs)) % 30)
-                     .alias("x1"),
-                     (_mst_hash(F.concat(F.lit("rya:"), gs,
-                                         F.lit(":"), rs)) % 30)
-                     .alias("y1")))
-    rects = (rects
-             .withColumn("x2", F.col("x1") + 2 + _mst_hash(
-                 F.concat(F.lit("rxw:"), gs, F.lit(":"), rs)) % 10)
-             .withColumn("y2", F.col("y1") + 2 + _mst_hash(
-                 F.concat(F.lit("ryw:"), gs, F.lit(":"), rs)) % 10))
-    masks = (spark.range(1, 64).select(F.col("id").alias("mask"))
-             .withColumn("sign", F.when(
-                 F.bit_count("mask") % 2 == 1, 1).otherwise(-1)))
-    sel = rects.join(
-        F.broadcast(masks),
-        F.col("mask").bitwiseAND(
-            F.pow(F.lit(2.0), F.col("ri").cast("double"))
-            .cast("long")) != 0)
-    inter = (sel.groupBy("g", "mask", "sign")
-             .agg(F.max("x1").alias("ax"), F.min("x2").alias("bx"),
-                  F.max("y1").alias("ay"), F.min("y2").alias("by")))
-    area = (F.greatest(F.lit(0), F.col("bx") - F.col("ax"))
-            * F.greatest(F.lit(0), F.col("by") - F.col("ay")))
-    return (inter.groupBy("g")
-            .agg(F.sum(F.col("sign") * area).alias("area"))
-            .orderBy("g"))
-
-
-def q_power_tower_mod(spark, sf_dir) -> DataFrame:
-    """2^^6 = 2^(2^65536) (the exponent alone has 65537 binary
-    digits) modulo 30 hash moduli below 10^6 — engine:
-    the GENERALIZED EULER descent — reduce level by level through
-    the totient chain via a^b = a^(phi + b mod phi), valid because
-    every actual exponent from height 5 up is >= 2^16 >= log2 m;
-    height 4 is the exact base case (2^^4 = 65536). Oracle: the
-    SQUARING LADDER — 2 squared 65536 times mod m is exactly
-    2^(2^65536) = 2^^6, one squaring per recursive-CTE iteration.
-    Totient descent in four steps vs sixty-five thousand
-    squarings."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("pt:"), d))
-                    % 999998).alias("m")))
-
-    def tower_kernel(it):
-        import pandas as pd
-
-        def phi(m):
-            res, p, mm = m, 2, m
-            while p * p <= mm:
-                if mm % p == 0:
-                    while mm % p == 0:
-                        mm //= p
-                    res -= res // p
-                p += 1
-            if mm > 1:
-                res -= res // mm
-            return res
-
-        def tower(height, m):
-            # exact small base case: 2^^4 = 65536
-            if m == 1:
-                return 0
-            if height == 4:
-                return 65536 % m
-            ph = phi(m)
-            e = tower(height - 1, ph) + ph
-            return pow(2, e, m)
-
-        for pdf in it:
-            outs = [tower(6, int(m)) for m in pdf["m"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "m": pdf["m"],
-                                "t": outs})
-
-    return (raw.repartition(4)
-            .mapInPandas(tower_kernel, "doc_id long, m long, t long")
-            .orderBy("doc_id"))
-
-
-def q_det_mod2(spark, sf_dir) -> DataFrame:
-    """Determinants of 12 hash 7x7 matrices over F_2 — engine:
-    BITSET GAUSSIAN ELIMINATION — rows as integers, elimination by
-    XOR, det = full rank; O(n^2) words. Oracle: the PERMUTATION
-    EXPANSION — over F_2 signs vanish, so det = permanent = the
-    parity of all-ones permutation selections, censused over S_7.
-    Row reduction vs the Leibniz sum with its signs frozen out."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def gf2_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                rows = []
-                for i in range(7):
-                    r = 0
-                    for jx in range(7):
-                        if h(f"dm:{gv}:{i}:{jx}") % 2:
-                            r |= 1 << jx
-                    rows.append(r)
-                rank = 0
-                for col in range(7):
-                    piv = next((k for k in range(rank, 7)
-                                if rows[k] >> col & 1), None)
-                    if piv is None:
-                        continue
-                    rows[rank], rows[piv] = rows[piv], rows[rank]
-                    for k in range(7):
-                        if k != rank and rows[k] >> col & 1:
-                            rows[k] ^= rows[rank]
-                    rank += 1
-                outs.append(1 if rank == 7 else 0)
-            yield pd.DataFrame({"g": pdf["g"], "det2": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(gf2_kernel, "g long, det2 int")
-            .orderBy("g"))
-
-
-def q_continuant_det(spark, sf_dir) -> DataFrame:
-    """Determinants of 12 hash 7x7 TRIDIAGONAL integer matrices —
-    engine: the CONTINUANT three-term recurrence D_k = a_k D_{k-1}
-    - b_{k-1} c_{k-1} D_{k-2} in a kernel (O(n), never touches a
-    matrix). Oracle: the full LEIBNIZ expansion over S_7 — signs
-    from relational inversion parity, products over the hash
-    entries (zero off the three diagonals kills the term).
-    A recurrence that knows the structure vs a sum that
-    rediscovers it."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def cont_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                a = [h(f"ca:{gv}:{i}") % 9 - 4 for i in range(7)]
-                b = [h(f"cb:{gv}:{i}") % 9 - 4 for i in range(6)]
-                c = [h(f"cc:{gv}:{i}") % 9 - 4 for i in range(6)]
-                d2, d1 = 1, a[0]
-                for k in range(1, 7):
-                    d2, d1 = d1, a[k] * d1 - b[k - 1] * c[k - 1] * d2
-                outs.append(d1)
-            yield pd.DataFrame({"g": pdf["g"], "det": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(cont_kernel, "g long, det long")
-            .orderBy("g"))
-
-
-def q_ryser_permanent(spark, sf_dir) -> DataFrame:
-    """Permanents of 10 hash 6x6 matrices — engine: RYSER'S
-    FORMULA — per = (-1)^n sum over column subsets S of (-1)^|S|
-    prod_i (row sums restricted to S), O(2^n n^2) in a kernel.
-    Oracle: the DEFINITION — all 720 permutation products summed
-    relationally. Inclusion-exclusion beating the factorial vs the
-    factorial."""
-    g = spark.range(0, 10).select(F.col("id").alias("g"))
-
-    def ryser_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                a = [[h(f"py:{gv}:{i}:{jx}") % 5 for jx in range(6)]
-                     for i in range(6)]
-                total = 0
-                for mask in range(1, 64):
-                    prod = 1
-                    for i in range(6):
-                        rs = sum(a[i][jx] for jx in range(6)
-                                 if mask >> jx & 1)
-                        prod *= rs
-                        if prod == 0:
-                            break
-                    bits = bin(mask).count("1")
-                    total += (-1) ** bits * prod
-                outs.append((-1) ** 6 * total)
-            yield pd.DataFrame({"g": pdf["g"], "perm": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(ryser_kernel, "g long, perm long")
-            .orderBy("g"))
-
-
-def q_bipartite_matching(spark, sf_dir) -> DataFrame:
-    """Maximum matching size in 12 hash bipartite graphs (6+6,
-    edge iff hash % 3 = 0) — engine: KUHN'S augmenting paths (the
-    Hungarian-style alternating DFS) in a kernel; Berge's theorem
-    certifies maximality when no augmenting path remains. Oracle:
-    ENUMERATION — every partial injection of the left side built
-    digit by digit in a recursive CTE (sentinel for unmatched),
-    max matched count. A certificate of optimality vs trying every
-    assignment."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def kuhn_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                adj = {i: [jx for jx in range(6)
-                           if h(f"bm:{gv}:{i}:{jx}") % 3 == 0]
-                       for i in range(6)}
-                match_r = [-1] * 6
-
-                def try_kuhn(u, seen):
-                    for v in adj[u]:
-                        if v in seen:
-                            continue
-                        seen.add(v)
-                        if match_r[v] == -1 \
-                                or try_kuhn(match_r[v], seen):
-                            match_r[v] = u
-                            return True
-                    return False
-
-                size = 0
-                for u in range(6):
-                    if try_kuhn(u, set()):
-                        size += 1
-                outs.append(size)
-            yield pd.DataFrame({"g": pdf["g"], "msize": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(kuhn_kernel, "g long, msize int")
-            .orderBy("g"))
-
-
-def q_weighted_intervals(spark, sf_dir) -> DataFrame:
-    """Maximum-weight compatible subset of 14 hash intervals, 10
-    instances — engine: the PREDECESSOR DP — sort by end, p(i) by
-    bisection, M_i = max(M_{i-1}, w_i + M_{p(i)}), O(n log n) in a
-    kernel. Oracle: SUBSET ENUMERATION — all 16384 masks checked
-    for pairwise compatibility against the precomputed conflict
-    pairs, max weight. The scheduling recurrence vs exhaustion."""
-    g = spark.range(0, 10).select(F.col("id").alias("g"))
-
-    def wi_kernel(it):
-        import bisect
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                ivs = []
-                for i in range(14):
-                    s0 = h(f"wis:{gv}:{i}") % 50
-                    e0 = s0 + 1 + h(f"wil:{gv}:{i}") % 15
-                    w0 = 1 + h(f"wiw:{gv}:{i}") % 20
-                    ivs.append((e0, s0, w0))
-                ivs.sort()
-                ends = [e for e, _, _ in ivs]
-                M = [0] * (len(ivs) + 1)
-                for i, (e0, s0, w0) in enumerate(ivs, 1):
-                    p = bisect.bisect_right(ends, s0, 0, i - 1)
-                    M[i] = max(M[i - 1], w0 + M[p])
-                outs.append(M[-1])
-            yield pd.DataFrame({"g": pdf["g"], "best": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(wi_kernel, "g long, best long")
-            .orderBy("g"))
-
-
-def q_koenig_cover(spark, sf_dir) -> DataFrame:
-    """Minimum vertex cover size of 12 bipartite hash graphs (6+6)
-    — engine: KONIG'S THEOREM — the minimum cover equals the
-    maximum matching, so run Kuhn's augmenting paths and output
-    the matching size; no cover is ever constructed. Oracle: BRUTE
-    FORCE — all 4096 vertex subsets checked to cover every edge,
-    min popcount. A min-max duality vs searching covers."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def koenig_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                adj = {i: [jx for jx in range(6)
-                           if h(f"kc:{gv}:{i}:{jx}") % 3 == 0]
-                       for i in range(6)}
-                match_r = [-1] * 6
-
-                def try_kuhn(u, seen):
-                    for v in adj[u]:
-                        if v in seen:
-                            continue
-                        seen.add(v)
-                        if match_r[v] == -1 \
-                                or try_kuhn(match_r[v], seen):
-                            match_r[v] = u
-                            return True
-                    return False
-
-                size = sum(1 for u in range(6) if try_kuhn(u, set()))
-                outs.append(size)
-            yield pd.DataFrame({"g": pdf["g"], "cover_size": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(koenig_kernel, "g long, cover_size int")
-            .orderBy("g"))
-
-
-def q_bell_numbers(spark, sf_dir) -> DataFrame:
-    """Bell numbers B_1..B_8 — engine: the AITKEN (Bell) TRIANGLE
-    — each row starts with the previous row's last entry, each
-    entry is left neighbor plus the entry above it, in a kernel.
-    Oracle: RESTRICTED GROWTH STRINGS — every canonical set-
-    partition code enumerated in a recursive CTE (digit <= running
-    max + 1), count per length. A Pascal-like triangle vs the
-    canonical-code bijection."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def bell_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows = [[1]]
-            for _ in range(8):
-                prev = rows[-1]
-                nxt = [prev[-1]]
-                for v in prev:
-                    nxt.append(nxt[-1] + v)
-                rows.append(nxt)
-            # first element of row n+1 is B_n (Aitken convention)
-            bells = [(n, rows[n][0]) for n in range(1, 9)]
-            yield pd.DataFrame({"n": [b[0] for b in bells],
-                                "bell": [b[1] for b in bells]})
-
-    return (one.mapInPandas(bell_kernel, "n long, bell long")
-            .orderBy("n"))
-
-
-def q_fubini_numbers(spark, sf_dir) -> DataFrame:
-    """Fubini (ordered Bell) numbers a(1)..a(6) — engine: the
-    BINOMIAL RECURRENCE a(n) = sum_k C(n,k) a(n-k) (choose the
-    first block, order the rest), exact kernel. Oracle: the CENSUS
-    — every function [n] -> [1..6] with a gap-free image counted
-    in a recursive CTE (ordered set partitions = surjections onto
-    initial segments). A recurrence on blocks vs counting the
-    functions themselves."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def fub_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            a = [1]
-            for n in range(1, 7):
-                a.append(sum(math.comb(n, k) * a[n - k]
-                             for k in range(1, n + 1)))
-            yield pd.DataFrame({"n": list(range(1, 7)),
-                                "fubini": a[1:]})
-
-    return (one.mapInPandas(fub_kernel, "n long, fubini long")
-            .orderBy("n"))
-
-
-def q_catalan_parity(spark, sf_dir) -> DataFrame:
-    """Parity of the Catalan numbers C_0..C_60 — engine: the
-    KUMMER/carry characterization — C_n is odd iff n = 2^k - 1,
-    i.e. the single bit test (n+1) & n = 0, one JVM projection.
-    Oracle: SEGNER'S CONVOLUTION mod 2 — the full quadratic
-    recurrence C_{k+1} = sum C_i C_{k-i} carried as a list in a
-    recursive CTE. A carries-in-binomials theorem vs grinding the
-    recurrence."""
-    n = spark.range(0, 61).select(F.col("id").alias("n"))
-    odd = F.when((F.col("n") + 1).bitwiseAND(F.col("n")) == 0, 1) \
-        .otherwise(0)
-    return n.select("n", odd.cast("int").alias("odd")).orderBy("n")
-
-
-def q_factorial_zeros(spark, sf_dir) -> DataFrame:
-    """Trailing zeros of n! for n=1..33 — engine: LEGENDRE'S
-    FORMULA — sum of floor(n/5^i), the factorial never computed.
-    Oracle: COMPUTE THE FACTORIAL — a HUGEINT running product in a
-    recursive CTE, zeros counted by divisibility against powers of
-    ten built as strings. Valuation arithmetic vs actually looking
-    at the digits."""
-    n = spark.range(1, 34).select(F.col("id").alias("n"))
-    i = spark.range(1, 4).select(F.col("id").alias("i"))
-    t = n.join(F.broadcast(i))
-    p5 = F.pow(F.lit(5.0), F.col("i").cast("double")).cast("long")
-    return (t.groupBy("n")
-            .agg(F.sum((F.col("n") / p5).cast("long")).alias("tz"))
-            .orderBy("n"))
-
-
-def q_calkin_wilf(spark, sf_dir) -> DataFrame:
-    """The first 63 entries of the Calkin-Wilf sequence (every
-    positive rational exactly once) — engine: NEWMAN'S RECURRENCE
-    — q' = 1/(2*floor(q) + 1 - q), iterated with exact Fractions
-    in a kernel; the theorem says this single recurrence walks the
-    tree in breadth-first order. Oracle: the TREE ITSELF — node k
-    has children 2k (a/(a+b)) and 2k+1 ((a+b)/b), built directly
-    by index in a recursive CTE. A one-line recurrence vs the
-    structure it secretly traverses."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def cw_kernel(it):
-        from fractions import Fraction
-
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            q = Fraction(1, 1)
-            ks, nums, dens = [], [], []
-            for k in range(1, 64):
-                ks.append(k)
-                nums.append(q.numerator)
-                dens.append(q.denominator)
-                q = 1 / (2 * Fraction(int(q)) + 1 - q)
-            yield pd.DataFrame({"k": ks, "num": nums, "den": dens})
-
-    return (one.mapInPandas(cw_kernel, "k long, num long, den long")
-            .orderBy("k"))
-
-
-def q_perrin_test(spark, sf_dir) -> DataFrame:
-    """The Perrin divisibility test for n=2..120 — P(0)=3, P(1)=0,
-    P(2)=2, P(k) = P(k-2) + P(k-3); primes always divide P(n)
-    (composites usually do not — the first Perrin pseudoprime is
-    271441). Engine: the recurrence mod n in a kernel plus
-    trial-division primality. Oracle: the same dynamical system in
-    a recursive CTE with the divisor-existence check. Both columns
-    exposed so the Lucas-family correlation is visible in the
-    data."""
-    n = spark.range(2, 121).select(F.col("id").alias("n"))
-
-    def perrin_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            pmods, primes = [], []
-            for nv in pdf["n"]:
-                nv = int(nv)
-                p0, p1, p2 = 3 % nv, 0, 2 % nv
-                for _ in range(3, nv + 1):
-                    p0, p1, p2 = p1, p2, (p0 + p1) % nv
-                pn = p2 if nv >= 2 else p0
-                pmods.append(pn)
-                primes.append(1 if nv > 1 and all(
-                    nv % d for d in range(2, int(nv ** 0.5) + 1))
-                    else 0)
-            yield pd.DataFrame({"n": pdf["n"], "pn_mod": pmods,
-                                "is_prime": primes})
-
-    return (n.repartition(4)
-            .mapInPandas(perrin_kernel,
-                         "n long, pn_mod long, is_prime int")
-            .orderBy("n"))
-
-
-def q_erdos_gallai(spark, sf_dir) -> DataFrame:
-    """Graphicality of 20 hash degree sequences on 8 vertices
-    (parity-corrected) — engine: the ERDOS-GALLAI inequalities —
-    sort descending, check sum_{i<=k} d_i <= k(k-1) +
-    sum_{i>k} min(d_i, k) for every k, all relational (windows +
-    a broadcast k-join), no graph ever built. Oracle:
-    HAVEL-HAKIMI — the constructive reduction (strip the max
-    degree, decrement the next d_1 entries, re-sort, repeat) on a
-    list state in a recursive CTE. A checkable criterion vs an
-    algorithm that builds the witness."""
-    g = spark.range(0, 20).select(F.col("id").alias("g"))
-    i = spark.range(0, 8).select(F.col("id").alias("i"))
-    gs, istr = F.col("g").cast("string"), F.col("i").cast("string")
-    degs = (g.crossJoin(F.broadcast(i))
-            .select("g", "i",
-                    (_mst_hash(F.concat(F.lit("eg:"), gs,
-                                        F.lit(":"), istr)) % 8)
-                    .alias("d0")))
-    tot = degs.groupBy("g").agg(F.sum("d0").alias("tot"))
-    degs = degs.join(tot, "g").withColumn(
-        "d", F.when((F.col("tot") % 2 == 1) & (F.col("i") == 0),
-                    F.when(F.col("d0") < 7, F.col("d0") + 1)
-                    .otherwise(F.col("d0") - 1))
-        .otherwise(F.col("d0"))).drop("d0", "tot")
-    w = Window.partitionBy("g").orderBy(F.col("d").desc(), "i")
-    ranked = degs.withColumn("r", F.row_number().over(w))
-    left = ranked.select(F.col("g").alias("g2"),
-                         F.col("r").alias("r2"),
-                         F.col("d").alias("d2"))
-    k = spark.range(1, 9).select(F.col("id").alias("k"))
-    kk = ranked.join(F.broadcast(k)).join(
-        left, (F.col("g") == F.col("g2")))
-    lhs_terms = F.when((F.col("r2") <= F.col("k"))
-                       & (F.col("r") == 1), F.col("d2")).otherwise(0)
-    rhs_terms = F.when((F.col("r2") > F.col("k"))
-                       & (F.col("r") == 1),
-                       F.least(F.col("d2"), F.col("k"))).otherwise(0)
-    ineq = (kk.groupBy("g", "k")
-            .agg(F.sum(lhs_terms).alias("lhs"),
-                 F.sum(rhs_terms).alias("rhs")))
-    ok_k = (ineq.withColumn(
-        "ok", (F.col("lhs")
-               <= F.col("k") * (F.col("k") - 1) + F.col("rhs"))
-        .cast("int"))
-        .groupBy("g").agg(F.min("ok").alias("graphical")))
-    return ok_k.select("g", "graphical").orderBy("g")
-
-
-def q_prufer_decode(spark, sf_dir) -> DataFrame:
-    """Trees on 8 nodes decoded from 12 hash Prufer sequences —
-    engine: the classic LEAF-MATCHING decoder in a kernel (degree
-    = 1 + occurrences; repeatedly join the smallest leaf to the
-    sequence head). Oracle: the SAME bijection replayed
-    relationally — list states for the sequence and the degree
-    vector in a recursive CTE. One bijection, two machines, edge
-    by edge."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-
-    def prufer_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            gs_, ks_, us_, vs_ = [], [], [], []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                seq = [h(f"pf:{gv}:{i}") % 8 for i in range(6)]
-                deg = [1] * 8
-                for v in seq:
-                    deg[v] += 1
-                edges = []
-                for v in seq:
-                    leaf = min(u for u in range(8) if deg[u] == 1)
-                    edges.append((min(leaf, v), max(leaf, v)))
-                    deg[leaf] -= 1
-                    deg[v] -= 1
-                last = [u for u in range(8) if deg[u] == 1]
-                edges.append((min(last), max(last)))
-                for kx, (u, v) in enumerate(edges, 1):
-                    gs_.append(gv)
-                    ks_.append(kx)
-                    us_.append(u)
-                    vs_.append(v)
-            yield pd.DataFrame({"g": gs_, "k": ks_, "u": us_,
-                                "v": vs_})
-
-    return (g.repartition(4)
-            .mapInPandas(prufer_kernel,
-                         "g long, k int, u int, v int")
-            .orderBy("g", "k"))
-
-
-def q_max_submatrix(spark, sf_dir) -> DataFrame:
-    """Maximum-sum submatrix of 10 hash 8x8 integer matrices —
-    engine: 2D KADANE — for every row pair, collapse to a column
-    vector and run the 1D prefix-min scan, O(n^3) in a kernel.
-    Oracle: ENUMERATION — all 1296 rectangles scored by the 2D
-    prefix-sum identity. Dimensional reduction vs four-corner
-    lookups on every rectangle."""
-    g = spark.range(0, 10).select(F.col("id").alias("g"))
-
-    def kad2_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                a = [[h(f"k2:{gv}:{i}:{jx}") % 21 - 10
-                      for jx in range(8)] for i in range(8)]
-                best = None
-                for r1 in range(8):
-                    col = [0] * 8
-                    for r2 in range(r1, 8):
-                        for jx in range(8):
-                            col[jx] += a[r2][jx]
-                        # 1D Kadane on col
-                        cur = best1 = col[0]
-                        for v in col[1:]:
-                            cur = max(v, cur + v)
-                            best1 = max(best1, cur)
-                        best = best1 if best is None \
-                            else max(best, best1)
-                outs.append(best)
-            yield pd.DataFrame({"g": pdf["g"], "best": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(kad2_kernel, "g long, best long")
-            .orderBy("g"))
-
-
-def q_shamir_reconstruct(spark, sf_dir) -> DataFrame:
-    """Shamir secret sharing over F_257 — 20 instances of a random
-    cubic with shares at x=1..4 — engine: RECONSTRUCTION — Lagrange
-    interpolation AT ZERO from the four shares only (modular
-    inverses from a precomputed F_257 table literal, all JVM
-    column algebra; the secret is never touched). Oracle: the
-    GROUND TRUTH — rebuild the hash coefficients and read f(0)
-    directly, never seeing a share. Recovery from shares vs
-    knowing the secret."""
-    P = 257
-    inv = [0] * P
-    for a in range(1, P):
-        inv[a] = pow(a, P - 2, P)
-    invl = F.array(*[F.lit(v) for v in inv])
-    d = F.col("doc_id").cast("string")
-    coef = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 20)
-            .select("doc_id", *[
-                (_mst_hash(F.concat(F.lit(f"sh{j}:"), d)) % P)
-                .alias(f"c{j}") for j in range(4)]))
-    xs = spark.range(1, 5).select(F.col("id").alias("x"))
-    shares = (coef.join(F.broadcast(xs))
-              .select("doc_id", "x",
-                      ((F.col("c0") + F.col("c1") * F.col("x")
-                        + F.col("c2") * F.col("x") * F.col("x")
-                        + F.col("c3") * F.col("x") * F.col("x")
-                        * F.col("x")) % P).alias("y")))
-    # Lagrange weight at 0 for node x among nodes 1..4:
-    # w_x = prod_{x2 != x} x2 * inv(x2 - x) mod p
-    other = xs.select(F.col("x").alias("x2"))
-    wts = (xs.join(F.broadcast(other), F.col("x2") != F.col("x"))
-           .select("x", ((F.col("x2")
-                          * F.element_at(
-                              invl,
-                              (((F.col("x2") - F.col("x")) % P + P)
-                               % P).cast("int") + 1)) % P)
-                   .alias("t")))
-    wts = (wts.groupBy("x")
-           .agg(F.aggregate(F.collect_list("t"),
-                            F.lit(1).cast("long"),
-                            lambda acc, t: (acc * t) % P)
-                .alias("w")))
-    rec = (shares.join(F.broadcast(wts), "x")
-           .groupBy("doc_id")
-           .agg((F.sum(F.col("y") * F.col("w")) % P)
-                .alias("secret")))
-    return rec.orderBy("doc_id")
-
-
-def q_vandermonde_identity(spark, sf_dir) -> DataFrame:
-    """Vandermonde's identity C(m+n, k) = sum_i C(m,i) C(n,k-i)
-    for 30 hash triples (m, n <= 12, k <= m+n) — engine: the LEFT
-    side — one binomial by the exact multiplicative JVM fold
-    (every prefix is itself a binomial so each division is exact;
-    24! would overflow int64, the fold never exceeds C(24,12)).
-    Oracle: the RIGHT side — the full convolution sum in HUGEINT
-    factorials. Counting one committee vs splitting it by
-    chamber."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id",
-                   (1 + _mst_hash(F.concat(F.lit("vm:"), d)) % 12)
-                   .alias("m"),
-                   (1 + _mst_hash(F.concat(F.lit("vn:"), d)) % 12)
-                   .alias("n")))
-    raw = raw.withColumn(
-        "k", _mst_hash(F.concat(F.lit("vk:"), d))
-        % (F.col("m") + F.col("n") + 1))
-    N, K = F.col("m") + F.col("n"), F.col("k")
-    fold = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), K),
-        F.lit(1).cast("long"),
-        lambda acc, i: F.floor(acc * (N - K + i) / i).cast("long"))
-    # sequence(1, 0) would run DESCENDING in Spark — pin k = 0
-    binom = F.when(K == 0, F.lit(1).cast("long")).otherwise(fold)
-    return (raw.select("doc_id", "m", "n", "k", binom.alias("v"))
-            .orderBy("doc_id"))
-
-
-def q_rencontres(spark, sf_dir) -> DataFrame:
-    """Rencontres numbers D(7,k) — permutations of S_7 with exactly
-    k fixed points — engine: the CLOSED FORM C(7,k) * !(7-k) with
-    the subfactorial from the alternating sum, column algebra over
-    a factorial literal. Oracle: the CENSUS — fixed points counted
-    per enumerated permutation, histogram. Choose-and-derange vs
-    looking at every permutation."""
-    fact = [1] * 8
-    for i in range(1, 8):
-        fact[i] = fact[i - 1] * i
-    subf = [1]
-    for i in range(1, 8):
-        subf.append(i * subf[-1] + (-1) ** i)
-    fl = F.array(*[F.lit(v) for v in fact])
-    sl = F.array(*[F.lit(v) for v in subf])
-    k = spark.range(0, 8).select(F.col("id").alias("k"))
-    binom = (F.element_at(fl, F.lit(8))
-             / (F.element_at(fl, F.col("k").cast("int") + 1)
-                * F.element_at(fl, (F.lit(7) - F.col("k"))
-                               .cast("int") + 1))).cast("long")
-    dk = binom * F.element_at(sl, (F.lit(7) - F.col("k"))
-                              .cast("int") + 1)
-    return (k.filter(F.col("k") != 6)  # D(7,6) = 0, censused away
-            .select("k", dk.alias("rencontres")).orderBy("k"))
-
-
-def q_perm_orders(spark, sf_dir) -> DataFrame:
-    """Permutations of S_7 grouped by ORDER (lcm of cycle lengths)
-    — engine: the CYCLE INDEX — enumerate the 15 partitions of 7,
-    count each class as 7!/z_lambda (z = prod k^m_k * m_k!), and
-    group by the partition's lcm, in a kernel that never builds a
-    permutation. Oracle: the CENSUS — every permutation's orbit
-    lengths lcm'd relationally. Polya-style class counting vs
-    checking all 5040."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def cyc_kernel(it):
-        import math
-        from collections import Counter
-
-        import pandas as pd
-
-        def partitions(n, maxp):
-            if n == 0:
-                yield ()
-                return
-            for p in range(min(n, maxp), 0, -1):
-                for rest in partitions(n - p, p):
-                    yield (p,) + rest
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            acc = Counter()
-            for lam in partitions(7, 7):
-                mult = Counter(lam)
-                z = 1
-                for ksz, mk in mult.items():
-                    z *= (ksz ** mk) * math.factorial(mk)
-                cnt = math.factorial(7) // z
-                order = 1
-                for ksz in mult:
-                    order = order * ksz // math.gcd(order, ksz)
-                acc[order] += cnt
-            orders = sorted(acc)
-            yield pd.DataFrame({"ord": orders,
-                                "n_perms": [acc[o] for o in orders]})
-
-    return (one.mapInPandas(cyc_kernel, "ord long, n_perms long")
-            .orderBy("ord"))
-
-
-def q_cayley_menger(spark, sf_dir) -> DataFrame:
-    """288 V^2 of 20 hash tetrahedra with integer vertices in
-    [0,20]^3 — engine: the CAYLEY-MENGER determinant — the 5x5
-    bordered matrix of squared edge DISTANCES, fraction-free
-    Bareiss, coordinates forgotten after the distance matrix.
-    Oracle: the SCALAR TRIPLE PRODUCT — 288 V^2 = 8 * ((b-a) .
-    ((c-a) x (d-a)))^2 straight from the coordinates. Distance
-    geometry vs vector algebra."""
-    g = spark.range(0, 20).select(F.col("id").alias("g"))
-
-    def cm_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            outs = []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                pts = [tuple(h(f"cm:{gv}:{i}:{c}") % 21
-                             for c in range(3)) for i in range(4)]
-
-                def d2(p, q):
-                    return sum((p[x] - q[x]) ** 2 for x in range(3))
-
-                m = [[0] * 5 for _ in range(5)]
-                for i in range(4):
-                    m[0][i + 1] = m[i + 1][0] = 1
-                    for jx in range(4):
-                        m[i + 1][jx + 1] = d2(pts[i], pts[jx])
-                # Bareiss determinant of the 5x5
-                n = 5
-                mat = [row[:] for row in m]
-                prev, sign = 1, 1
-                for kx in range(n - 1):
-                    if mat[kx][kx] == 0:
-                        sw = next((r for r in range(kx + 1, n)
-                                   if mat[r][kx] != 0), None)
-                        if sw is None:
-                            prev = None
-                            break
-                        mat[kx], mat[sw] = mat[sw], mat[kx]
-                        sign = -sign
-                    for i in range(kx + 1, n):
-                        for jx in range(kx + 1, n):
-                            mat[i][jx] = (mat[i][jx] * mat[kx][kx]
-                                          - mat[i][kx] * mat[kx][jx]) \
-                                // prev
-                    prev = mat[kx][kx]
-                det = 0 if prev is None else sign * mat[n - 1][n - 1]
-                outs.append(det)  # CM det = 288 V^2
-            yield pd.DataFrame({"g": pdf["g"], "v288": outs})
-
-    return (g.repartition(4)
-            .mapInPandas(cm_kernel, "g long, v288 long")
-            .orderBy("g"))
-
-
-def q_quaternion_rotation(spark, sf_dir) -> DataFrame:
-    """The quaternion-to-SO(3) homomorphism on 20 hash pairs —
-    engine: multiply the QUATERNIONS first (Hamilton product),
-    then form the integer-scaled rotation matrix |q1q2|^2 R(q1q2).
-    Oracle: form the two scaled MATRICES first and multiply them
-    (|q1|^2 R(q1))(|q2|^2 R(q2)). Equal entry-by-entry because
-    R(q1q2) = R(q1)R(q2) and the norm is multiplicative — the
-    2-to-1 covering made integer-exact."""
-    g = spark.range(0, 20).select(F.col("id").alias("g"))
-
-    def quat_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        def qmul(p, q):
-            a1, b1, c1, d1 = p
-            a2, b2, c2, d2 = q
-            return (a1*a2 - b1*b2 - c1*c2 - d1*d2,
-                    a1*b2 + b1*a2 + c1*d2 - d1*c2,
-                    a1*c2 - b1*d2 + c1*a2 + d1*b2,
-                    a1*d2 + b1*c2 - c1*b2 + d1*a2)
-
-        def rot_scaled(q):
-            a, b, c, d = q
-            n2 = a*a + b*b + c*c + d*d
-            return [
-                [n2 - 2*(c*c + d*d), 2*(b*c - a*d), 2*(b*d + a*c)],
-                [2*(b*c + a*d), n2 - 2*(b*b + d*d), 2*(c*d - a*b)],
-                [2*(b*d - a*c), 2*(c*d + a*b), n2 - 2*(b*b + c*c)],
-            ]
-
-        for pdf in it:
-            gs_, is_, js_, vs_ = [], [], [], []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                q1 = tuple(h(f"q1:{gv}:{c}") % 11 - 5
-                           for c in range(4))
-                q2 = tuple(h(f"q2:{gv}:{c}") % 11 - 5
-                           for c in range(4))
-                if all(x == 0 for x in q1):
-                    q1 = (1, 0, 0, 0)
-                if all(x == 0 for x in q2):
-                    q2 = (1, 0, 0, 0)
-                m = rot_scaled(qmul(q1, q2))
-                for i in range(3):
-                    for jx in range(3):
-                        gs_.append(gv)
-                        is_.append(i)
-                        js_.append(jx)
-                        vs_.append(m[i][jx])
-            yield pd.DataFrame({"g": gs_, "i": is_, "j": js_,
-                                "v": vs_})
-
-    return (g.repartition(4)
-            .mapInPandas(quat_kernel, "g long, i int, j int, v long")
-            .orderBy("g", "i", "j"))
-
-
-def q_dedekind_reciprocity(spark, sf_dir) -> DataFrame:
-    """12hk * s(h,k) for the coprime pairs among 40 hash draws
-    (h < k <= 60) — engine:
-    the DEFINITION — the sawtooth sum as pure integer algebra
-    (12hk*s = 3h*T/k with T = sum (2i-k)(2r_i-k) over non-zero
-    residues, one relational explode). Oracle: RECIPROCITY —
-    compute s(k,h) by ITS definition and recover s(h,k) from
-    Dedekind's 1892 law 12hk(s(h,k)+s(k,h)) = h^2+k^2+1-3hk. Each
-    side only ever sums its own sawtooth."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("dk:"), d)) % 59)
-                   .alias("k")))
-    raw = raw.withColumn(
-        "h", 1 + _mst_hash(F.concat(F.lit("dh:"), d))
-        % (F.col("k") - 1))
-    j = spark.range(2, 61).select(F.col("id").alias("j"))
-    common = raw.join(
-        F.broadcast(j),
-        (F.col("h") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    cop = raw.join(common, ["doc_id"], "left_anti")
-    i = spark.range(1, 61).select(F.col("id").alias("i"))
-    t = cop.join(F.broadcast(i), F.col("i") < F.col("k"))
-    r = (F.col("h") * F.col("i")) % F.col("k")
-    term = F.when(r == 0, 0).otherwise(
-        (2 * F.col("i") - F.col("k")) * (2 * r - F.col("k")))
-    agg = (t.groupBy("doc_id", "h", "k")
-           .agg(F.sum(term).alias("T")))
-    s12 = (3 * F.col("h") * F.col("T") / F.col("k")).cast("long")
-    return (agg.select("doc_id", "h", "k", s12.alias("s12hk"))
-            .orderBy("doc_id"))
-
-
-def q_gauss_lattice(spark, sf_dir) -> DataFrame:
-    """Shortest-vector norm^2 of 20 hash 2D lattices (basis entries
-    in [-30,30], |det| >= 100 so brute coefficients fit in a small
-    box) — engine: GAUSS REDUCTION — the 2D analogue of LLL,
-    swap-and-reduce until |u| <= |v| and the projection is half,
-    the reduced u is provably the global shortest. Oracle: BRUTE
-    FORCE — min norm over all coefficient pairs in [-25,25]^2
-    minus the origin. A descent with a termination proof vs a
-    sufficient box."""
-    g = spark.range(0, 40).select(F.col("id").alias("g"))
-
-    def gauss_kernel(it):
-        import hashlib
-
-        import pandas as pd
-
-        def h(s):
-            return int(hashlib.sha256(s.encode()).hexdigest()[:8], 16)
-
-        for pdf in it:
-            gs_, ns_ = [], []
-            for gv in pdf["g"]:
-                gv = int(gv)
-                u = (h(f"lu1:{gv}") % 61 - 30, h(f"lu2:{gv}") % 61 - 30)
-                v = (h(f"lv1:{gv}") % 61 - 30, h(f"lv2:{gv}") % 61 - 30)
-                det = u[0] * v[1] - u[1] * v[0]
-                if abs(det) < 100:
-                    continue
-
-                def n2(w):
-                    return w[0] * w[0] + w[1] * w[1]
-
-                while True:
-                    if n2(u) > n2(v):
-                        u, v = v, u
-                    # round(dot/|u|^2) with exact half-to-even-free
-                    # floor((2*dot + n2u) / (2*n2u)) = round to
-                    # nearest (ties toward +inf) — any rounding in
-                    # [dot/n2u - 1/2, +1/2] works for Gauss
-                    dot = u[0] * v[0] + u[1] * v[1]
-                    m = (2 * dot + n2(u)) // (2 * n2(u))
-                    v2 = (v[0] - m * u[0], v[1] - m * u[1])
-                    if n2(v2) >= n2(u):
-                        break
-                    v = v2
-                gs_.append(gv)
-                ns_.append(min(n2(u), n2(v)))
-            yield pd.DataFrame({"g": gs_, "short2": ns_})
-
-    return (g.repartition(4)
-            .mapInPandas(gauss_kernel, "g long, short2 long")
-            .orderBy("g"))
-
-
-def q_hockey_stick(spark, sf_dir) -> DataFrame:
-    """The hockey-stick identity sum_{i=r}^{n} C(i,r) = C(n+1,r+1)
-    for 30 hash pairs (r <= n <= 18) — engine: the RIGHT side —
-    one binomial by the exact multiplicative fold. Oracle: the
-    LEFT side — the diagonal sum, one binomial per term from
-    HUGEINT factorials. Telescoping Pascal vs adding the
-    diagonal."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 30)
-           .select("doc_id",
-                   (_mst_hash(F.concat(F.lit("hr:"), d)) % 10)
-                   .alias("r")))
-    raw = raw.withColumn(
-        "n", F.col("r")
-        + _mst_hash(F.concat(F.lit("hn:"), d)) % (19 - F.col("r")))
-    N, K = F.col("n") + 1, F.col("r") + 1
-    fold = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), K),
-        F.lit(1).cast("long"),
-        lambda acc, i: F.floor(acc * (N - K + i) / i).cast("long"))
-    return (raw.select("doc_id", "r", "n", fold.alias("v"))
-            .orderBy("doc_id"))
-
-
-def q_dirichlet_hyperbola(spark, sf_dir) -> DataFrame:
-    """Divisor summatory function D(n) = sum_{m<=n} tau(m) for
-    n = 100..1000 — engine: the DIRICHLET HYPERBOLA method —
-    D(n) = 2 * sum_{d<=sqrt(n)} floor(n/d) - floor(sqrt(n))^2,
-    O(sqrt n) terms of pure column algebra with the corrected
-    isqrt. Oracle: the CENSUS — count every (m, d) divisor pair
-    directly. Counting lattice points under the hyperbola by
-    symmetry vs one by one."""
-    n = (spark.range(1, 11)
-         .select((F.col("id") * 100).alias("n")))
-    v = F.col("n")
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    isq = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    n2 = n.withColumn("isq", isq).repartition(4)
-    dd = spark.range(1, 33).select(F.col("id").alias("d"))
-    t = n2.join(F.broadcast(dd), F.col("d") <= F.col("isq"))
-    return (t.groupBy("n", "isq")
-            .agg((2 * F.sum((F.col("n") / F.col("d")).cast("long"))
-                  - F.col("isq") * F.col("isq")).alias("dsum"))
-            .select("n", "dsum")
-            .orderBy("n"))
-
-
-def q_motzkin_numbers(spark, sf_dir) -> DataFrame:
-    """Motzkin numbers M_0..M_10 — engine: the BINOMIAL-CATALAN
-    closed form M_n = sum_k C(n,2k) Cat(k), exact column algebra
-    over factorial literals (values fit comfortably). Oracle: the
-    MEANING — all U/D/F lattice paths of length n that never dip
-    below the axis, enumerated in a recursive CTE and counted per
-    length. A convolution identity vs walking every path."""
-    fact = [1] * 12
-    for i in range(1, 12):
-        fact[i] = fact[i - 1] * i
-    cat = [fact[2 * k] // (fact[k] * fact[k + 1]) for k in range(6)]
-    fl = F.array(*[F.lit(v) for v in fact])
-    cl = F.array(*[F.lit(v) for v in cat])
-    n = spark.range(0, 11).select(F.col("id").alias("n"))
-    k = spark.range(0, 6).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), 2 * F.col("k") <= F.col("n"))
-    binom = (F.element_at(fl, F.col("n").cast("int") + 1)
-             / (F.element_at(fl, (2 * F.col("k")).cast("int") + 1)
-                * F.element_at(fl, (F.col("n") - 2 * F.col("k"))
-                               .cast("int") + 1))).cast("long")
-    term = binom * F.element_at(cl, F.col("k").cast("int") + 1)
-    return (t.groupBy("n").agg(F.sum(term).alias("motzkin"))
-            .orderBy("n"))
-
-
-def q_schroder_numbers(spark, sf_dir) -> DataFrame:
-    """Large Schroder numbers S_0..S_8 — engine: the THREE-TERM
-    recurrence (n+1) S_n = 3(2n-1) S_{n-1} - (n-2) S_{n-2} with
-    exact division, in a kernel. Oracle: the MEANING — paths with
-    steps U, D, and double-F from height 0 back to height 0 over
-    length 2n, never below the axis, censused in a recursive CTE.
-    A holonomic recurrence vs walking the royal paths."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def schroder_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            s = [1, 2]
-            for n in range(2, 9):
-                val = (3 * (2 * n - 1) * s[n - 1]
-                       - (n - 2) * s[n - 2])
-                assert val % (n + 1) == 0
-                s.append(val // (n + 1))
-            yield pd.DataFrame({"n": list(range(9)), "schroder": s})
-
-    return (one.mapInPandas(schroder_kernel, "n long, schroder long")
-            .orderBy("n"))
-
-
-def q_delannoy_numbers(spark, sf_dir) -> DataFrame:
-    """Central Delannoy numbers D(0)..D(8) — engine: the CLOSED
-    FORM D(n) = sum_k C(n,k)^2 2^k, pure column algebra over a
-    factorial literal. Oracle: the MEANING — king paths (E, N, NE)
-    from (0,0) to (n,n), the count aggregated per lattice point in
-    a recursive CTE. A hypergeometric sum vs the chessboard."""
-    fact = [1] * 9
-    for i in range(1, 9):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(0, 9).select(F.col("id").alias("n"))
-    k = spark.range(0, 9).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
-    binom = (F.element_at(fl, F.col("n").cast("int") + 1)
-             / (F.element_at(fl, F.col("k").cast("int") + 1)
-                * F.element_at(fl, (F.col("n") - F.col("k"))
-                               .cast("int") + 1))).cast("long")
-    p2 = F.pow(F.lit(2.0), F.col("k").cast("double")).cast("long")
-    return (t.groupBy("n")
-            .agg(F.sum(binom * binom * p2).alias("delannoy"))
-            .orderBy("n"))
-
-
-def q_sylvester_sequence(spark, sf_dir) -> DataFrame:
-    """Sylvester's sequence a_0..a_6 (a_7 would overflow int64) —
-    engine: the PRODUCT form
-    a_{n+1} = (prod of all earlier terms) + 1, recomputing the
-    full product each step in a kernel. Oracle: the QUADRATIC
-    recurrence a_{n+1} = a_n^2 - a_n + 1 in a recursive CTE. Equal
-    by Sylvester's identity a_{n+1} - 1 = a_n(a_n - 1) =
-    (a_n - 1) * prod — greedy Egyptian fractions in disguise."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def syl_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            seq = [2]
-            for _ in range(6):
-                prod = 1
-                for v in seq:
-                    prod *= v
-                seq.append(prod + 1)
-            yield pd.DataFrame({"n": list(range(7)), "a": seq})
-
-    return (one.mapInPandas(syl_kernel, "n long, a long")
-            .orderBy("n"))
-
-
-def q_cornacchia_two_square(spark, sf_dir) -> DataFrame:
-    """The unique a^2 + b^2 = p (a <= b) for every prime p = 1
-    (mod 4) below 600 — engine: CORNACCHIA/HERMITE-SERRET — find
-    sqrt(-1) mod p (Tonelli on a quadratic non-residue), then run
-    Euclid's descent from (p, x) and stop at the first remainder
-    below sqrt(p); the pair of consecutive remainders is the
-    answer. Oracle: BRUTE SEARCH over a <= b. A descent whose
-    correctness is Fermat's theorem vs trying every a."""
-    n = spark.range(5, 600).select(F.col("id").alias("p"))
-
-    def corn_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            ps, aa, bb = [], [], []
-            for p in pdf["p"]:
-                p = int(p)
-                if p % 4 != 1 or any(p % d == 0 for d in
-                                     range(2, math.isqrt(p) + 1)):
-                    continue
-                # sqrt(-1) mod p via Euler on a non-residue
-                z = 2
-                while pow(z, (p - 1) // 2, p) != p - 1:
-                    z += 1
-                x = pow(z, (p - 1) // 4, p)
-                a, b = p, x
-                lim = math.isqrt(p)
-                while b > lim:
-                    a, b = b, a % b
-                s = b
-                t = math.isqrt(p - s * s)
-                ps.append(p)
-                aa.append(min(s, t))
-                bb.append(max(s, t))
-            yield pd.DataFrame({"p": ps, "a": aa, "b": bb})
-
-    return (n.repartition(4)
-            .mapInPandas(corn_kernel, "p long, a long, b long")
-            .orderBy("p"))
-
-
-def q_self_conjugate_partitions(spark, sf_dir) -> DataFrame:
-    """Self-conjugate partitions of n=1..20 — engine: the
-    DEFINITION — enumerate partitions and keep those equal to
-    their own conjugate (transpose of the Young diagram), in a
-    kernel. Oracle: the HOOK BIJECTION — self-conjugate partitions
-    biject with partitions into DISTINCT ODD parts, counted by a
-    binary-choice list DP over the odd part sizes. Folding the
-    diagram along its diagonal vs a classical involution
-    theorem."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def sc_kernel(it):
-        import pandas as pd
-
-        def partitions(n, maxp):
-            if n == 0:
-                yield ()
-                return
-            for p in range(min(n, maxp), 0, -1):
-                for rest in partitions(n - p, p):
-                    yield (p,) + rest
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ns, cnts = [], []
-            for n in range(1, 21):
-                cnt = 0
-                for lam in partitions(n, n):
-                    conj = tuple(sum(1 for r in lam if r > j)
-                                 for j in range(lam[0]))
-                    if conj == lam:
-                        cnt += 1
-                ns.append(n)
-                cnts.append(cnt)
-            yield pd.DataFrame({"n": ns, "n_selfconj": cnts})
-
-    return (one.mapInPandas(sc_kernel, "n long, n_selfconj long")
-            .orderBy("n"))
-
-
-def q_gauss_divisor_phi(spark, sf_dir) -> DataFrame:
-    """Gauss's identity sum over d | n of phi(d) = n, evaluated
-    relationally for n = 1..200 — engine: the LEFT side — the
-    divisor join against a relational totient (common-divisor
-    anti-join), one groupBy sum. Oracle: the RIGHT side — n
-    itself. The cyclic-group orbit decomposition as a one-column
-    theorem; any bug anywhere in the phi/divisor machinery breaks
-    200 equalities at once."""
-    n200 = spark.range(1, 201)
-    dk = (n200.select(F.col("id").alias("d"))
-          .join(n200.select(F.col("id").alias("k")),
-                F.col("k") <= F.col("d")))
-    j = spark.range(2, 201).select(F.col("id").alias("j"))
-    common = dk.join(
-        F.broadcast(j),
-        (F.col("d") % F.col("j") == 0) & (F.col("k") % F.col("j") == 0),
-        "left_semi")
-    phi = (dk.join(common, ["d", "k"], "left_anti")
-           .groupBy("d").agg(F.count("k").alias("phi")))
-    nd = (n200.select(F.col("id").alias("n"))
-          .join(F.broadcast(phi), F.col("n") % F.col("d") == 0))
-    return (nd.groupBy("n").agg(F.sum("phi").alias("phisum"))
-            .orderBy("n"))
-
-
 def _with_worker_imports(fn):
     def wrapped(spark, sf_dir):
         from imagery_utils_spark.session import ensure_worker_imports
@@ -14893,186 +8045,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "segment_intersections": q_segment_intersections,
         "kl_divergence": q_kl_divergence,
         "haar_wavelet": q_haar_wavelet,
-        "symspell_pairs": q_symspell_pairs,
-        "not_in_null_trap": q_not_in_null_trap,
-        "ignore_nulls_window": q_ignore_nulls_window,
-        "hodges_lehmann": q_hodges_lehmann,
-        "runs_test": q_runs_test,
-        "benjamini_hochberg": q_benjamini_hochberg,
-        "theil_sen": q_theil_sen,
-        "mann_kendall": q_mann_kendall,
-        "max_drawdown": q_max_drawdown,
-        "mst_edges": q_mst_edges,
-        "lis_length": q_lis_length,
-        "interval_schedule": q_interval_schedule,
-        "suffix_array": q_suffix_array,
-        "merkle_root": q_merkle_root,
-        "adler32": q_adler32,
-        "bwt_inverse": q_bwt_inverse,
-        "discrete_log": q_discrete_log,
-        "fib_matrix_power": q_fib_matrix_power,
-        "subset_sum_mitm": q_subset_sum_mitm,
-        "crt_reconstruct": q_crt_reconstruct,
-        "nim_grundy": q_nim_grundy,
-        "max_flow": q_max_flow,
-        "scc_reach": q_scc_reach,
-        "rho_cycle": q_rho_cycle,
-        "manacher_palindrome": q_manacher_palindrome,
-        "isotonic_pav": q_isotonic_pav,
-        "bresenham_line": q_bresenham_line,
-        "reed_solomon_parity": q_reed_solomon_parity,
-        "hamming74": q_hamming74,
-        "zeckendorf": q_zeckendorf,
-        "fisher_exact": q_fisher_exact,
-        "inversion_count": q_inversion_count,
-        "josephus": q_josephus,
-        "apsp_minplus": q_apsp_minplus,
-        "determinant_bareiss": q_determinant_bareiss,
-        "easter_date": q_easter_date,
-        "catalan_numbers": q_catalan_numbers,
-        "gray_code": q_gray_code,
-        "euler_totient": q_euler_totient,
-        "mobius_function": q_mobius_function,
-        "simpson_integrate": q_simpson_integrate,
-        "farey_neighbors": q_farey_neighbors,
-        "stern_brocot": q_stern_brocot,
-        "stirling2": q_stirling2,
-        "derangements": q_derangements,
-        "lucas_binomial": q_lucas_binomial,
-        "wythoff_cold": q_wythoff_cold,
-        "r2_lattice": q_r2_lattice,
-        "sigma_classify": q_sigma_classify,
-        "pell_fundamental": q_pell_fundamental,
-        "miller_rabin": q_miller_rabin,
-        "kadane_max_subarray": q_kadane_max_subarray,
-        "water_trapping": q_water_trapping,
-        "string_period": q_string_period,
-        "gauss_circle": q_gauss_circle,
-        "assignment_min": q_assignment_min,
-        "perm_rank": q_perm_rank,
-        "game_of_life": q_game_of_life,
-        "bezier_eval": q_bezier_eval,
-        "collatz_steps": q_collatz_steps,
-        "happy_numbers": q_happy_numbers,
-        "ulam_spiral": q_ulam_spiral,
-        "zeller_dow": q_zeller_dow,
-        "wilson_primality": q_wilson_primality,
-        "faulhaber_sums": q_faulhaber_sums,
-        "sundaram_sieve": q_sundaram_sieve,
-        "reverse_add_palindrome": q_reverse_add_palindrome,
-        "fermat_factorization": q_fermat_factorization,
-        "binary_gcd": q_binary_gcd,
-        "ballot_paths": q_ballot_paths,
-        "dragon_turns": q_dragon_turns,
-        "nqueens": q_nqueens,
-        "josephus_k3": q_josephus_k3,
-        "stern_fusc": q_stern_fusc,
-        "triangular_square": q_triangular_square,
-        "partition_pentagonal": q_partition_pentagonal,
-        "frobenius_coin": q_frobenius_coin,
-        "mod_inverse": q_mod_inverse,
-        "look_and_say": q_look_and_say,
-        "machin_pi": q_machin_pi,
-        "egyptian_fractions": q_egyptian_fractions,
-        "pick_theorem": q_pick_theorem,
-        "perfect_power": q_perfect_power,
-        "aliquot_sequence": q_aliquot_sequence,
-        "karatsuba_mul": q_karatsuba_mul,
-        "floyd_cycle": q_floyd_cycle,
-        "burnside_necklaces": q_burnside_necklaces,
-        "matrix_tree": q_matrix_tree,
-        "hook_length": q_hook_length,
-        "debruijn_lyndon": q_debruijn_lyndon,
-        "tonelli_shanks": q_tonelli_shanks,
-        "elliptic_count": q_elliptic_count,
-        "newton_identities": q_newton_identities,
-        "cubic_extrapolate": q_cubic_extrapolate,
-        "horner_mod": q_horner_mod,
-        "expr_parser": q_expr_parser,
-        "brzozowski_regex": q_brzozowski_regex,
-        "linear_extensions": q_linear_extensions,
-        "roman_numerals": q_roman_numerals,
-        "negabinary": q_negabinary,
-        "gosper_combinations": q_gosper_combinations,
-        "eulerian_numbers": q_eulerian_numbers,
-        "langford_pairs": q_langford_pairs,
-        "two_sat": q_two_sat,
-        "bipartite_check": q_bipartite_check,
-        "move_to_front": q_move_to_front,
-        "hanoi_moves": q_hanoi_moves,
-        "z_occurrences": q_z_occurrences,
-        "distinct_substrings": q_distinct_substrings,
-        "lyndon_factorization": q_lyndon_factorization,
-        "booth_rotation": q_booth_rotation,
-        "multiplicative_order": q_multiplicative_order,
-        "primitive_root_orders": q_primitive_root_orders,
-        "carmichael_korselt": q_carmichael_korselt,
-        "stirling_first": q_stirling_first,
-        "harmonic_exact": q_harmonic_exact,
-        "lcm_range": q_lcm_range,
-        "pythagorean_primitive": q_pythagorean_primitive,
-        "farey_length": q_farey_length,
-        "binomial_transform": q_binomial_transform,
-        "pisano_period": q_pisano_period,
-        "square_by_tau": q_square_by_tau,
-        "min_squares": q_min_squares,
-        "kasai_lcp": q_kasai_lcp,
-        "fm_count": q_fm_count,
-        "ukkonen_distance": q_ukkonen_distance,
-        "ruffini_division": q_ruffini_division,
-        "misra_gries": q_misra_gries,
-        "bitap_match": q_bitap_match,
-        "min_max_partition": q_min_max_partition,
-        "circular_tour": q_circular_tour,
-        "sparse_table_rmq": q_sparse_table_rmq,
-        "knight_walks": q_knight_walks,
-        "menage_numbers": q_menage_numbers,
-        "euler_partition_identity": q_euler_partition_identity,
-        "walk2d_returns": q_walk2d_returns,
-        "demoivre_chebyshev": q_demoivre_chebyshev,
-        "long_cycle_perms": q_long_cycle_perms,
-        "bracelet_count": q_bracelet_count,
-        "narayana_numbers": q_narayana_numbers,
-        "balanced_ternary": q_balanced_ternary,
-        "fib_gcd": q_fib_gcd,
-        "kaprekar_6174": q_kaprekar_6174,
-        "squarefree_count": q_squarefree_count,
-        "legendre_pi": q_legendre_pi,
-        "rotating_calipers": q_rotating_calipers,
-        "rect_union_area": q_rect_union_area,
-        "power_tower_mod": q_power_tower_mod,
-        "det_mod2": q_det_mod2,
-        "continuant_det": q_continuant_det,
-        "ryser_permanent": q_ryser_permanent,
-        "bipartite_matching": q_bipartite_matching,
-        "weighted_intervals": q_weighted_intervals,
-        "koenig_cover": q_koenig_cover,
-        "bell_numbers": q_bell_numbers,
-        "fubini_numbers": q_fubini_numbers,
-        "catalan_parity": q_catalan_parity,
-        "factorial_zeros": q_factorial_zeros,
-        "calkin_wilf": q_calkin_wilf,
-        "perrin_test": q_perrin_test,
-        "erdos_gallai": q_erdos_gallai,
-        "prufer_decode": q_prufer_decode,
-        "max_submatrix": q_max_submatrix,
-        "shamir_reconstruct": q_shamir_reconstruct,
-        "vandermonde_identity": q_vandermonde_identity,
-        "rencontres": q_rencontres,
-        "perm_orders": q_perm_orders,
-        "cayley_menger": q_cayley_menger,
-        "quaternion_rotation": q_quaternion_rotation,
-        "dedekind_reciprocity": q_dedekind_reciprocity,
-        "gauss_lattice": q_gauss_lattice,
-        "hockey_stick": q_hockey_stick,
-        "dirichlet_hyperbola": q_dirichlet_hyperbola,
-        "motzkin_numbers": q_motzkin_numbers,
-        "schroder_numbers": q_schroder_numbers,
-        "delannoy_numbers": q_delannoy_numbers,
-        "sylvester_sequence": q_sylvester_sequence,
-        "cornacchia_two_square": q_cornacchia_two_square,
-        "self_conjugate_partitions": q_self_conjugate_partitions,
-        "gauss_divisor_phi": q_gauss_divisor_phi,
     }
 
 
@@ -15324,52 +8296,6 @@ def _kcore_oracle_sql(k: int = 3, iters: int = 4) -> str:
     return (", ".join(parts)
             + f" SELECT u AS node, count(*) AS degree FROM e{iters} "
             "GROUP BY u ORDER BY node")
-
-
-def _quat_oracle_sql() -> str:
-    """Matrices-first side of the quaternion homomorphism row: the
-    two integer-scaled rotation matrices built entry by entry from
-    the hash quaternions, then multiplied relationally."""
-
-    def rot_entries(a, b, c, d):
-        n2 = f"({a}*{a} + {b}*{b} + {c}*{c} + {d}*{d})"
-        return [
-            [f"{n2} - 2*({c}*{c} + {d}*{d})",
-             f"2*({b}*{c} - {a}*{d})", f"2*({b}*{d} + {a}*{c})"],
-            [f"2*({b}*{c} + {a}*{d})",
-             f"{n2} - 2*({b}*{b} + {d}*{d})",
-             f"2*({c}*{d} - {a}*{b})"],
-            [f"2*({b}*{d} - {a}*{c})", f"2*({c}*{d} + {a}*{b})",
-             f"{n2} - 2*({b}*{b} + {c}*{c})"],
-        ]
-
-    raw_cols = ", ".join(
-        f"cast('0x' || substr(sha256('q{q}:' || "
-        f"cast(g.a as varchar) || ':{idx}'), 1, 8) as bigint) "
-        f"% 11 - 5 AS {comp}{q}0"
-        for q in (1, 2) for idx, comp in enumerate("abcd"))
-    fall = ", ".join(
-        f"CASE WHEN a{q}0 = 0 AND b{q}0 = 0 AND c{q}0 = 0 "
-        f"AND d{q}0 = 0 THEN {1 if comp == 'a' else 0} "
-        f"ELSE {comp}{q}0 END AS {comp}{q}"
-        for q in (1, 2) for comp in "abcd")
-    m1e = rot_entries("a1", "b1", "c1", "d1")
-    m2e = rot_entries("a2", "b2", "c2", "d2")
-    m1 = " UNION ALL ".join(
-        f"SELECT g, {i} AS i, {j} AS j, {m1e[i][j]} AS v FROM qq"
-        for i in range(3) for j in range(3))
-    m2 = " UNION ALL ".join(
-        f"SELECT g, {i} AS i, {j} AS j, {m2e[i][j]} AS v FROM qq"
-        for i in range(3) for j in range(3))
-    return (
-        f"WITH raw AS (SELECT g.a AS g, {raw_cols} "
-        "FROM range(0, 20) g(a)), "
-        f"qq AS (SELECT g, {fall} FROM raw), "
-        f"m1 AS ({m1}), m2 AS ({m2}) "
-        "SELECT m1.g AS g, cast(m1.i as int) AS i, "
-        "cast(m2.j as int) AS j, sum(m1.v * m2.v) AS v "
-        "FROM m1 JOIN m2 ON m2.g = m1.g AND m2.i = m1.j "
-        "GROUP BY 1, 2, 3 ORDER BY g, i, j")
 
 
 def oracle_sql() -> dict[str, str]:
@@ -18075,3398 +11001,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM lin LEFT JOIN ft USING (ch) LEFT JOIN lt USING (ch) "
             "ORDER BY ch"
         ),
-        "benjamini_hochberg": (
-            "WITH t AS (SELECT doc_id % 4 AS family, "
-            "cast('0x' || substr(sha256('pv:' || cast(doc_id as "
-            "varchar)), 1, 8) as bigint) % 10000 AS x "
-            "FROM documents), "
-            "r AS (SELECT family, x, row_number() OVER (PARTITION BY "
-            "family ORDER BY x) AS k FROM t), "
-            "m AS (SELECT family, count(*) AS m FROM t "
-            "GROUP BY family), "
-            "ok AS (SELECT r.family, k FROM r JOIN m USING (family) "
-            "WHERE x * m * 20 <= k * 10000), "
-            "km AS (SELECT family, max(k) AS k_reject FROM ok "
-            "GROUP BY family), "
-            "o AS (SELECT m.family, m.m, coalesce(k_reject, 0) "
-            "AS k_reject FROM m LEFT JOIN km USING (family)), "
-            "thr AS (SELECT r.family, x AS x_threshold FROM r "
-            "JOIN o USING (family) WHERE r.k = o.k_reject) "
-            "SELECT o.family, m, k_reject, "
-            "coalesce(x_threshold, -1) AS x_threshold FROM o "
-            "LEFT JOIN thr USING (family) ORDER BY family"
-        ),
-        # Suffix-array oracle: materialise every suffix, comparison-
-        # sort the strings (the engine is prefix doubling).
-        "suffix_array": (
-            "WITH d AS (SELECT doc_id, substr(text, 1, 256) AS t "
-            "FROM documents WHERE doc_id < 8), "
-            "suf AS (SELECT doc_id, i, substr(t, "
-            "cast(i as integer) + 1) AS sfx FROM d "
-            "JOIN range(256) r(i) ON i < len(t)), "
-            "o AS (SELECT doc_id, i, row_number() OVER ("
-            "PARTITION BY doc_id ORDER BY sfx) AS rn FROM suf) "
-            "SELECT doc_id, count(*) AS n, "
-            "sha256(string_agg(cast(i as varchar), ',' ORDER BY rn)) "
-            "AS sa_sha FROM o GROUP BY doc_id ORDER BY doc_id"
-        ),
-        # Merkle oracle: recursive-CTE list fold, level by level
-        # (the engine is a log-depth groupBy-pair reduction).
-        "merkle_root": (
-            "WITH lv AS (SELECT count(*) AS n_leaves, "
-            "list(sha256(text) ORDER BY doc_id) AS hs "
-            "FROM documents WHERE doc_id < 50), "
-            "m AS (WITH RECURSIVE f(lvl, hs) AS ("
-            "SELECT 0, hs FROM lv "
-            "UNION ALL SELECT lvl + 1, "
-            "[sha256(hs[2 * j - 1] || coalesce(hs[2 * j], "
-            "hs[2 * j - 1])) for j in range(1, "
-            "cast(ceil(len(hs) / 2.0) as bigint) + 1)] "
-            "FROM f WHERE len(hs) > 1) "
-            "SELECT lvl, hs FROM f WHERE len(hs) = 1) "
-            "SELECT lv.n_leaves, m.lvl AS n_levels, "
-            "m.hs[1] AS root FROM m, lv"
-        ),
-        # Adler-32 oracle: the RFC 1950 stepwise byte fold (the
-        # engine is the order-free position-weighted closed form).
-        "adler32": (
-            "WITH d AS (SELECT doc_id, substr(text, 1, 400) AS t, "
-            "len(substr(text, 1, 400)) AS n FROM documents "
-            "WHERE doc_id < 50), "
-            "r AS (WITH RECURSIVE f(doc_id, i, a, b) AS ("
-            "SELECT doc_id, 0, 1::BIGINT, 0::BIGINT FROM d "
-            "UNION ALL SELECT f.doc_id, f.i + 1, "
-            "(f.a + ord(substr(d.t, cast(f.i as integer) + 1, 1))) "
-            "% 65521, "
-            "(f.b + f.a + ord(substr(d.t, cast(f.i as integer) + 1, "
-            "1))) % 65521 "
-            "FROM f JOIN d USING (doc_id) WHERE f.i < d.n) "
-            "SELECT doc_id, a, b FROM f JOIN d USING (doc_id) "
-            "WHERE i = n) "
-            "SELECT doc_id, n, b * 65536 + a AS adler FROM r "
-            "JOIN d USING (doc_id) ORDER BY doc_id"
-        ),
-        # BWT-inverse oracle: rotation sort + the textbook O(n)
-        # stepwise LF walk (engine: prefix-doubling SA forward +
-        # Wyllie list-ranking inverse).
-        "bwt_inverse": (
-            "WITH d AS (SELECT doc_id, substr(text, 1, 180) || chr(1) "
-            "AS t, len(substr(text, 1, 180)) + 1 AS n "
-            "FROM documents WHERE doc_id < 6), "
-            "rot AS (SELECT doc_id, n, r.i, "
-            "substr(t, cast(r.i as int) + 1) || "
-            "substr(t, 1, cast(r.i as int)) AS rt "
-            "FROM d JOIN range(256) r(i) ON r.i < n), "
-            "bw AS (SELECT doc_id, n, row_number() OVER ("
-            "PARTITION BY doc_id ORDER BY rt) - 1 AS j, "
-            "substr(rt, cast(n as int), 1) AS c FROM rot), "
-            "lf AS (SELECT b.doc_id, b.n, b.j, b.c, "
-            "(SELECT count(*) FROM bw x WHERE x.doc_id = b.doc_id "
-            "AND x.c < b.c) + row_number() OVER ("
-            "PARTITION BY b.doc_id, b.c ORDER BY b.j) - 1 AS lfv "
-            "FROM bw b), "
-            "w AS (WITH RECURSIVE wk(doc_id, n, k, rw, acc) AS ("
-            "SELECT doc_id, n, 0, j, '' FROM lf WHERE c = chr(1) "
-            "UNION ALL SELECT wk.doc_id, wk.n, wk.k + 1, l.lfv, "
-            "b.c || wk.acc "
-            "FROM wk JOIN lf l ON l.doc_id = wk.doc_id "
-            "AND l.j = wk.rw "
-            "JOIN bw b ON b.doc_id = wk.doc_id AND b.j = l.lfv "
-            "WHERE wk.k < wk.n - 1) "
-            "SELECT doc_id, n, acc FROM wk WHERE k = n - 1) "
-            "SELECT doc_id, n - 1 AS n_chars, acc AS recovered "
-            "FROM w ORDER BY doc_id"
-        ),
-        # Discrete-log oracle: brute O(p) power walk; h read at
-        # k = x_true, answer = minimal matching k (engine: BSGS join).
-        "discrete_log": (
-            "WITH i0 AS (SELECT doc_id, "
-            "([1997,1999,2003,2011,2017,2027,2029,2039])"
-            "[cast(doc_id % 8 as bigint) + 1]::BIGINT AS p "
-            "FROM documents WHERE doc_id < 24), "
-            "inst AS (SELECT doc_id, p, "
-            "2 + cast('0x' || substr(sha256('dlg:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % (p - 3) "
-            "AS g, "
-            "cast('0x' || substr(sha256('dlx:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % (p - 1) "
-            "AS xt FROM i0), "
-            "w AS (WITH RECURSIVE wk(doc_id, p, g, xt, k, y) AS ("
-            "SELECT doc_id, p, g, xt, 0, 1::BIGINT FROM inst "
-            "UNION ALL SELECT doc_id, p, g, xt, k + 1, (y * g) % p "
-            "FROM wk WHERE k < p - 2) SELECT * FROM wk), "
-            "hh AS (SELECT doc_id, y AS h FROM w WHERE k = xt), "
-            "ans AS (SELECT w.doc_id, min(w.k) AS dlog FROM w "
-            "JOIN hh USING (doc_id) WHERE w.y = hh.h "
-            "GROUP BY w.doc_id) "
-            "SELECT inst.doc_id, inst.p, inst.g, hh.h, ans.dlog "
-            "FROM inst JOIN hh USING (doc_id) "
-            "JOIN ans USING (doc_id) ORDER BY doc_id"
-        ),
-        # Fibonacci oracle: the O(n) additive recurrence, one term per
-        # recursion step (engine: O(log n) matrix squaring).
-        "fib_matrix_power": (
-            "WITH inst AS (SELECT doc_id, 1000 + "
-            "cast('0x' || substr(sha256('fib:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 8000 AS n "
-            "FROM documents WHERE doc_id < 24), "
-            "w AS (WITH RECURSIVE f(doc_id, n, k, a, b) AS ("
-            "SELECT doc_id, n, 1, 1::BIGINT, 0::BIGINT FROM inst "
-            "UNION ALL SELECT doc_id, n, k + 1, (a + b) % 1000000007, "
-            "a FROM f WHERE k < n) "
-            "SELECT doc_id, n, a FROM f WHERE k = n) "
-            "SELECT doc_id, n, a AS fib_mod FROM w ORDER BY doc_id"
-        ),
-        # Subset-sum oracle: level-wise 0/1 DP (achievable sums after
-        # k items, deduped per level by recursive UNION); engine is
-        # Horowitz–Sahni meet-in-the-middle.
-        "subset_sum_mitm": (
-            "WITH it AS (SELECT cast(doc_id + 1 as bigint) AS idx, "
-            "1 + cast('0x' || substr(sha256('ss:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 2000 AS w "
-            "FROM documents WHERE doc_id < 26), "
-            "tot AS (SELECT sum(w) AS tot FROM it), "
-            "tg AS (SELECT r.j, (r.j * tot.tot) // 6 AS target "
-            "FROM tot, range(1, 6) r(j)), "
-            "dp AS (WITH RECURSIVE f(k, s) AS ("
-            "SELECT 0::BIGINT, 0::BIGINT "
-            "UNION "
-            "SELECT f.k + 1, f.s + v.pick * it.w "
-            "FROM f JOIN it ON it.idx = f.k + 1 "
-            "CROSS JOIN (VALUES (0), (1)) v(pick)) "
-            "SELECT s FROM f WHERE k = 26) "
-            "SELECT tg.j, tg.target, max(dp.s) AS best "
-            "FROM tg JOIN dp ON dp.s <= tg.target "
-            "GROUP BY tg.j, tg.target ORDER BY tg.j"
-        ),
-        # CRT oracle: brute residue search over the full ring Z/45045
-        # (engine: Garner linear recombination).
-        "crt_reconstruct": (
-            "WITH d AS (SELECT doc_id, "
-            + ", ".join(
-                f"cast('0x' || substr(sha256('crt{j}:' || "
-                f"cast(doc_id as varchar)), 1, 8) as bigint) % {m} "
-                f"AS r{j}"
-                for j, m in enumerate([5, 7, 9, 11, 13])) +
-            " FROM documents WHERE doc_id < 30) "
-            "SELECT d.doc_id, d.r0, d.r1, d.r2, d.r3, d.r4, "
-            "x.i AS crt_x FROM d JOIN range(45045) x(i) ON "
-            "x.i % 5 = d.r0 AND x.i % 7 = d.r1 AND x.i % 9 = d.r2 "
-            "AND x.i % 11 = d.r3 AND x.i % 13 = d.r4 "
-            "ORDER BY d.doc_id"
-        ),
-        # Nim oracle: Bouton's closed form grundy = a XOR b XOR c
-        # (engine: backward-induction mex over the explicit game DAG).
-        "nim_grundy": (
-            "SELECT ra.i AS a, rb.i AS b, rc.i AS c, "
-            "xor(xor(ra.i, rb.i), rc.i) AS g "
-            "FROM range(8) ra(i), range(8) rb(i), range(8) rc(i) "
-            "ORDER BY a, b, c"
-        ),
-        # Max-flow oracle: exhaustive MINIMUM CUT over all 2^6
-        # interior bipartitions (engine: Edmonds–Karp FLOW); agreement
-        # is the max-flow/min-cut theorem.
-        "max_flow": (
-            "WITH d AS (SELECT doc_id FROM documents "
-            "WHERE doc_id < 12), "
-            "pr AS (SELECT u.i AS u, v.i AS v FROM range(8) u(i), "
-            "range(8) v(i) WHERE u.i < v.i), "
-            "e AS (SELECT d.doc_id, pr.u, pr.v, "
-            "1 + cast('0x' || substr(sha256('mc:' || "
-            "cast(d.doc_id as varchar) || ':' || "
-            "cast(pr.u as varchar) || ':' || cast(pr.v as varchar)"
-            "), 1, 8) as bigint) % 30 AS cap "
-            "FROM d, pr WHERE pr.v = pr.u + 1 OR "
-            "cast('0x' || substr(sha256('mf:' || "
-            "cast(d.doc_id as varchar) || ':' || "
-            "cast(pr.u as varchar) || ':' || cast(pr.v as varchar)"
-            "), 1, 8) as bigint) % 3 = 0), "
-            "grid AS (SELECT d.doc_id, m.i AS m FROM d, "
-            "range(64) m(i)), "
-            "crossing AS (SELECT e.doc_id, g.m, sum(e.cap) AS cut "
-            "FROM grid g JOIN e ON e.doc_id = g.doc_id "
-            "WHERE (e.u = 0 OR ((g.m >> cast(e.u - 1 as int)) & 1) "
-            "= 1) AND (e.v = 7 OR ((g.m >> cast(e.v - 1 as int)) "
-            "& 1) = 0) GROUP BY e.doc_id, g.m), "
-            "cuts AS (SELECT g.doc_id, g.m, coalesce(c.cut, 0) AS "
-            "cut FROM grid g LEFT JOIN crossing c ON "
-            "c.doc_id = g.doc_id AND c.m = g.m) "
-            "SELECT doc_id, min(cut) AS max_flow FROM cuts "
-            "GROUP BY doc_id ORDER BY doc_id"
-        ),
-        # SCC oracle: one-edge-per-step recursive closure (engine:
-        # closure by squaring), SCC id = min mutually-reachable node.
-        "scc_reach": (
-            "WITH n AS (SELECT i AS v FROM range(36) r(i)), "
-            "e AS (SELECT v, cast('0x' || substr(sha256('sc1:' || "
-            "cast(v as varchar)), 1, 8) as bigint) % 36 AS t FROM n "
-            "UNION SELECT v, cast('0x' || substr(sha256('sc2:' || "
-            "cast(v as varchar)), 1, 8) as bigint) % 36 FROM n), "
-            "tc AS (WITH RECURSIVE r(s, t) AS ("
-            "SELECT v, v FROM n "
-            "UNION SELECT r.s, e.t FROM r JOIN e ON e.v = r.t) "
-            "SELECT s, t FROM r), "
-            "sc AS (SELECT a.s AS v, min(a.t) AS scc_id FROM tc a "
-            "JOIN tc b ON b.s = a.t AND b.t = a.s GROUP BY a.s) "
-            "SELECT sc.v, sc.scc_id, z.scc_size FROM sc JOIN ("
-            "SELECT scc_id, count(*) AS scc_size FROM sc "
-            "GROUP BY scc_id) z USING (scc_id) ORDER BY sc.v"
-        ),
-        # Rho-cycle oracle: literal per-node walk with a visited list
-        # until the first repeat (engine: pointer doubling).
-        "rho_cycle": (
-            "WITH n AS (SELECT i AS v, cast('0x' || substr(sha256("
-            "'rho:' || cast(i as varchar)), 1, 8) as bigint) % 64 "
-            "AS t FROM range(64) r(i)), "
-            "w AS (WITH RECURSIVE wk(v0, cur, acc) AS ("
-            "SELECT v, v, [v] FROM n "
-            "UNION ALL SELECT wk.v0, n.t, wk.acc || [n.t] "
-            "FROM wk JOIN n ON n.v = wk.cur "
-            "WHERE NOT list_contains(wk.acc, n.t)) "
-            "SELECT v0, acc FROM wk QUALIFY row_number() OVER ("
-            "PARTITION BY v0 ORDER BY len(acc) DESC) = 1), "
-            "fin AS (SELECT w.v0, w.acc, n.t AS nxt FROM w "
-            "JOIN n ON n.v = w.acc[-1]) "
-            "SELECT v0 AS v, list_position(acc, nxt) - 1 AS tail, "
-            "list_aggregate(acc[list_position(acc, nxt):], 'min') "
-            "AS cyc_min, "
-            "len(acc) - list_position(acc, nxt) + 1 AS cycle_len "
-            "FROM fin ORDER BY v"
-        ),
-        # Manacher oracle: the O(n²) definition — every substring
-        # tested against its reverse (engine: O(n) Manacher).
-        "manacher_palindrome": (
-            "WITH d AS (SELECT doc_id, substr(text, 1, 120) AS t, "
-            "len(substr(text, 1, 120)) AS n FROM documents "
-            "WHERE doc_id < 40 AND len(substr(text, 1, 120)) > 0), "
-            "subs AS (SELECT doc_id, substr(t, cast(s0.i as int) + 1, "
-            "cast(ln.l as int)) AS ss FROM d "
-            "JOIN range(120) s0(i) ON s0.i < n "
-            "JOIN range(1, 121) ln(l) ON s0.i + ln.l <= n), "
-            "pal AS (SELECT doc_id, len(ss) AS pl FROM subs "
-            "WHERE ss = reverse(ss)) "
-            "SELECT doc_id, max(pl) AS max_pal, count(*) AS n_pal "
-            "FROM pal GROUP BY doc_id ORDER BY doc_id"
-        ),
-        # Isotonic oracle: the minimax characterization
-        # fit_i = max_{l<=i} min_{u>=i} avg(y[l..u]), brute segments,
-        # exact via the lcm(1..30) integer scaling (engine: PAV).
-        "isotonic_pav": (
-            "WITH pts AS (SELECT g.i AS g, p.i AS i, "
-            "cast('0x' || substr(sha256('iso:' || "
-            "cast(g.i as varchar) || ':' || cast(p.i as varchar)"
-            "), 1, 8) as bigint) % 1000 AS y "
-            "FROM range(10) g(i), range(30) p(i)), "
-            "pre AS (SELECT g, i, y, sum(y) OVER (PARTITION BY g "
-            "ORDER BY i) AS ps FROM pts), "
-            "seg AS (SELECT a.g, a.i AS l, b.i AS u, "
-            "(b.ps - a.ps + a.y) * (2329089562800 // "
-            "(b.i - a.i + 1)) AS v "
-            "FROM pre a JOIN pre b ON a.g = b.g AND a.i <= b.i), "
-            "mn AS (SELECT s.g, p.i, s.l, min(s.v) AS mnv "
-            "FROM seg s JOIN range(30) p(i) ON s.l <= p.i "
-            "AND s.u >= p.i GROUP BY s.g, p.i, s.l) "
-            "SELECT g, i, max(mnv) AS fit_key FROM mn "
-            "GROUP BY g, i ORDER BY g, i"
-        ),
-        # Bresenham oracle: the stepwise integer error accumulator
-        # replayed in a recursive CTE (engine: order-free closed form).
-        "bresenham_line": (
-            "WITH i0 AS (SELECT doc_id, 20 + cast('0x' || substr("
-            "sha256('bx:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 180 AS dx FROM documents WHERE doc_id < 40),"
-            " inst AS (SELECT doc_id, dx, 1 + cast('0x' || substr("
-            "sha256('by:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % dx AS dy FROM i0), "
-            "w AS (WITH RECURSIVE b(doc_id, dx, dy, x, y, err) AS ("
-            "SELECT doc_id, dx, dy, 0::BIGINT, 0::BIGINT, "
-            "2 * dy - dx FROM inst "
-            "UNION ALL SELECT doc_id, dx, dy, x + 1, "
-            "CASE WHEN err > 0 THEN y + 1 ELSE y END, "
-            "CASE WHEN err > 0 THEN err + 2 * (dy - dx) "
-            "ELSE err + 2 * dy END FROM b WHERE x < dx) "
-            "SELECT * FROM b) "
-            "SELECT doc_id, dx, dy, sum(y) AS sum_y, "
-            "sha256(string_agg(cast(y as varchar), ',' ORDER BY x)) "
-            "AS y_sha FROM w GROUP BY doc_id, dx, dy ORDER BY doc_id"
-        ),
-        # Reed–Solomon oracle: GF(256) multiply built from scratch by
-        # Russian-peasant carry-less doubling (no log tables), then
-        # the long division replayed step by step.
-        "reed_solomon_parity": (
-            "WITH xt AS (WITH RECURSIVE x(i, a, v) AS ("
-            "SELECT 0, r.a, r.a FROM range(256) r(a) "
-            "UNION ALL SELECT i + 1, a, CASE WHEN v >= 128 THEN "
-            "xor((v * 2) % 256, 29) ELSE v * 2 END "
-            "FROM x WHERE i < 7) SELECT * FROM x), "
-            "mul AS (SELECT b.b AS b, x.a AS a, bit_xor(x.v) AS m "
-            "FROM range(256) b(b) JOIN xt x ON ((b.b >> x.i) & 1) = 1 "
-            "GROUP BY b.b, x.a), "
-            "msg AS (SELECT doc_id, k.i AS k, "
-            "ord(substr(rpad(substr(text, 1, 16), 16, ' '), "
-            "cast(k.i as int) + 1, 1)) % 256 AS mb "
-            "FROM documents JOIN range(16) k(i) ON true "
-            "WHERE doc_id < 12), "
-            "dv AS (WITH RECURSIVE s(doc_id, k, r) AS ("
-            "SELECT DISTINCT doc_id, 0, "
-            "[0, 0, 0, 0, 0, 0, 0, 0]::BIGINT[] FROM msg "
-            "UNION ALL SELECT s.doc_id, s.k + 1, "
-            "[xor(s.r[2], coalesce(m1.m, 0)), "
-            "xor(s.r[3], coalesce(m2.m, 0)), "
-            "xor(s.r[4], coalesce(m3.m, 0)), "
-            "xor(s.r[5], coalesce(m4.m, 0)), "
-            "xor(s.r[6], coalesce(m5.m, 0)), "
-            "xor(s.r[7], coalesce(m6.m, 0)), "
-            "xor(s.r[8], coalesce(m7.m, 0)), "
-            "coalesce(m8.m, 0)]::BIGINT[] "
-            "FROM s JOIN msg ON msg.doc_id = s.doc_id "
-            "AND msg.k = s.k "
-            "LEFT JOIN mul m1 ON m1.a = 255 "
-            "AND m1.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m2 ON m2.a = 11 "
-            "AND m2.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m3 ON m3.a = 81 "
-            "AND m3.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m4 ON m4.a = 54 "
-            "AND m4.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m5 ON m5.a = 239 "
-            "AND m5.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m6 ON m6.a = 173 "
-            "AND m6.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m7 ON m7.a = 200 "
-            "AND m7.b = xor(s.r[1], msg.mb) "
-            "LEFT JOIN mul m8 ON m8.a = 24 "
-            "AND m8.b = xor(s.r[1], msg.mb) "
-            "WHERE s.k < 16) "
-            "SELECT doc_id, r FROM s WHERE k = 16) "
-            "SELECT doc_id, array_to_string(list_transform(r, "
-            "z -> printf('%02x', z)), '') AS ecc_hex "
-            "FROM dv ORDER BY doc_id"
-        ),
-        # Hamming(7,4) oracle: algebraic syndrome decoding — the
-        # 3-bit syndrome IS the error position (engine decodes by
-        # brute minimum distance over all 16 codewords).
-        "hamming74": (
-            "WITH inst AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('hd:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 16 AS data, "
-            "1 + cast('0x' || substr(sha256('he:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 7 AS epos "
-            "FROM documents WHERE doc_id < 50), "
-            "enc AS (SELECT doc_id, data, epos, "
-            "data % 2 AS d1, (data // 2) % 2 AS d2, "
-            "(data // 4) % 2 AS d3, (data // 8) % 2 AS d4 FROM inst), "
-            "cw AS (SELECT doc_id, data, epos, "
-            "(d1 + d2 + d4) % 2 + ((d1 + d3 + d4) % 2) * 2 + d1 * 4 "
-            "+ ((d2 + d3 + d4) % 2) * 8 + d2 * 16 + d3 * 32 + d4 * 64 "
-            "AS c FROM enc), "
-            "rc AS (SELECT doc_id, data, epos, "
-            "xor(c, 1 << cast(epos - 1 as int)) AS received FROM cw), "
-            "syn AS (SELECT doc_id, data, epos, received, "
-            "(((received >> 0) & 1) + ((received >> 2) & 1) + "
-            "((received >> 4) & 1) + ((received >> 6) & 1)) % 2 AS s1,"
-            " (((received >> 1) & 1) + ((received >> 2) & 1) + "
-            "((received >> 5) & 1) + ((received >> 6) & 1)) % 2 AS s2,"
-            " (((received >> 3) & 1) + ((received >> 4) & 1) + "
-            "((received >> 5) & 1) + ((received >> 6) & 1)) % 2 AS s4 "
-            "FROM rc), "
-            "fx AS (SELECT doc_id, data, epos, received, "
-            "CASE WHEN s1 + 2 * s2 + 4 * s4 = 0 THEN received ELSE "
-            "xor(received, 1 << cast(s1 + 2 * s2 + 4 * s4 - 1 as int))"
-            " END AS c FROM syn) "
-            "SELECT doc_id, data, epos, received, "
-            "((c >> 2) & 1) + ((c >> 4) & 1) * 2 + ((c >> 5) & 1) * 4 "
-            "+ ((c >> 6) & 1) * 8 AS decoded FROM fx ORDER BY doc_id"
-        ),
-        # Zeckendorf oracle: exhaustive enumeration of ALL 121393
-        # non-adjacent Fibonacci index subsets; the theorem guarantees
-        # a unique sum match (engine: greedy column rewrites).
-        "zeckendorf": (
-            "WITH fib(idx, v) AS (SELECT * FROM (VALUES "
-            "(2,1),(3,2),(4,3),(5,5),(6,8),(7,13),(8,21),(9,34),"
-            "(10,55),(11,89),(12,144),(13,233),(14,377),(15,610),"
-            "(16,987),(17,1597),(18,2584),(19,4181),(20,6765),"
-            "(21,10946),(22,17711),(23,28657),(24,46368),(25,75025)"
-            ") t(idx, v)), "
-            "sets AS (WITH RECURSIVE s(i, prev, mask, sm) AS ("
-            "SELECT 1, 0, 0::BIGINT, 0::BIGINT "
-            "UNION ALL SELECT f.idx, ch.t, "
-            "CASE WHEN ch.t = 1 THEN s.mask + (1::BIGINT << "
-            "cast(f.idx - 2 as int)) ELSE s.mask END, "
-            "CASE WHEN ch.t = 1 THEN s.sm + f.v ELSE s.sm END "
-            "FROM s JOIN fib f ON f.idx = s.i + 1 "
-            "CROSS JOIN (VALUES (0), (1)) ch(t) "
-            "WHERE NOT (ch.t = 1 AND s.prev = 1)) "
-            "SELECT mask, sm FROM s WHERE i = 25), "
-            "d AS (SELECT doc_id, 1 + cast('0x' || substr(sha256("
-            "'zk:' || cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 100000 AS x FROM documents WHERE doc_id < 40) "
-            "SELECT d.doc_id, d.x, sets.mask AS zmask, "
-            "bit_count(sets.mask)::BIGINT AS n_terms "
-            "FROM d JOIN sets ON sets.sm = d.x ORDER BY d.doc_id"
-        ),
-        # Fisher oracle: binomials from the ADDITIVE Pascal triangle
-        # (list-state recursion), engine uses the multiplicative
-        # product formula; p-value compared as exact integers.
-        "fisher_exact": (
-            "WITH pas AS (WITH RECURSIVE pr(n, row) AS ("
-            "SELECT 0, [1::BIGINT] "
-            "UNION ALL SELECT n + 1, [1::BIGINT] || "
-            "[row[i] + row[i + 1] for i in range(1, n + 1)] || "
-            "[1::BIGINT] FROM pr WHERE n < 40) "
-            "SELECT n, k.i AS k, row[cast(k.i as int) + 1] AS c "
-            "FROM pr JOIN range(41) k(i) ON k.i <= n), "
-            "inst AS (SELECT doc_id, "
-            "10 + cast('0x' || substr(sha256('fk:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 AS kk, "
-            "10 + cast('0x' || substr(sha256('fn:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 AS n "
-            "FROM documents WHERE doc_id < 25), "
-            "i2 AS (SELECT doc_id, kk, n, "
-            "greatest(0, kk + n - 40) AS lo, least(kk, n) AS hi "
-            "FROM inst), "
-            "i3 AS (SELECT doc_id, kk, n, lo, hi, lo + "
-            "cast('0x' || substr(sha256('fo:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% (hi - lo + 1) AS k_obs FROM i2), "
-            "sup AS (SELECT i3.doc_id, i3.kk, i3.n, i3.k_obs, "
-            "kv.i AS k, a.c * b.c AS w "
-            "FROM i3 JOIN range(41) kv(i) ON kv.i BETWEEN i3.lo "
-            "AND i3.hi "
-            "JOIN pas a ON a.n = i3.kk AND a.k = kv.i "
-            "JOIN pas b ON b.n = 40 - i3.kk AND b.k = i3.n - kv.i), "
-            "ob AS (SELECT doc_id, w AS w_obs FROM sup "
-            "WHERE k = k_obs) "
-            "SELECT sup.doc_id, sup.kk, sup.n, sup.k_obs, "
-            "sum(CASE WHEN sup.w <= ob.w_obs THEN sup.w ELSE 0 END) "
-            "AS p_num, sum(sup.w) AS p_den "
-            "FROM sup JOIN ob USING (doc_id) "
-            "GROUP BY sup.doc_id, sup.kk, sup.n, sup.k_obs "
-            "ORDER BY sup.doc_id"
-        ),
-        # Inversion oracle: the O(n²) definition — all index pairs
-        # i < j with v_i > v_j (engine: merge-sort count).
-        "inversion_count": (
-            "WITH ev AS (SELECT event_type, event_id, value "
-            "FROM events WHERE event_id < 2000), "
-            "nn AS (SELECT event_type, count(*) AS n FROM ev "
-            "GROUP BY event_type), "
-            "inv AS (SELECT a.event_type, count(*) AS inversions "
-            "FROM ev a JOIN ev b ON a.event_type = b.event_type "
-            "AND a.event_id < b.event_id AND a.value > b.value "
-            "GROUP BY a.event_type) "
-            "SELECT nn.event_type, nn.n, "
-            "coalesce(inv.inversions, 0) AS inversions "
-            "FROM nn LEFT JOIN inv USING (event_type) "
-            "ORDER BY nn.event_type"
-        ),
-        # Josephus oracle: the textbook recurrence J(m)=(J(m−1)+2)%m
-        # stepped up in a recursive CTE (engine: bitwise closed form).
-        "josephus": (
-            "WITH d AS (SELECT doc_id, 1 + cast('0x' || substr("
-            "sha256('jo:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 4000 AS n FROM documents WHERE doc_id < 40),"
-            " w AS (WITH RECURSIVE j(doc_id, n, m, s) AS ("
-            "SELECT doc_id, n, 1, 0::BIGINT FROM d "
-            "UNION ALL SELECT doc_id, n, m + 1, (s + 2) % (m + 1) "
-            "FROM j WHERE m < n) "
-            "SELECT doc_id, n, s FROM j WHERE m = n) "
-            "SELECT doc_id, n, s AS survivor FROM w ORDER BY doc_id"
-        ),
-        # APSP oracle: Floyd–Warshall pivot recurrence, the whole
-        # 24×24 matrix carried as one list through 24 recursion
-        # levels (engine: min-plus matrix squaring).
-        "apsp_minplus": (
-            "WITH n AS (SELECT i AS u FROM range(24) r(i)), "
-            "e0 AS (SELECT u, (u + 1) % 24 AS v, 1 + cast('0x' || "
-            "substr(sha256('aw:' || cast(u as varchar)), 1, 8) "
-            "as bigint) % 100 AS d FROM n "
-            "UNION ALL SELECT u, cast('0x' || substr(sha256('at:' || "
-            "cast(u as varchar)), 1, 8) as bigint) % 24, "
-            "1 + cast('0x' || substr(sha256('ax:' || "
-            "cast(u as varchar)), 1, 8) as bigint) % 100 FROM n), "
-            "e AS (SELECT u, v, min(d) AS d FROM e0 WHERE u <> v "
-            "GROUP BY u, v), "
-            "pairs AS (SELECT a.i AS u, b.i AS v "
-            "FROM range(24) a(i), range(24) b(i)), "
-            "cells AS (SELECT p.u, p.v, coalesce("
-            "CASE WHEN p.u = p.v THEN 0 END, e.d, 1000000000) AS d "
-            "FROM pairs p LEFT JOIN e ON e.u = p.u AND e.v = p.v), "
-            "init AS (SELECT list(d ORDER BY u * 24 + v) AS m "
-            "FROM cells), "
-            "fw AS (WITH RECURSIVE f(k, m) AS ("
-            "SELECT 0, m FROM init "
-            "UNION ALL SELECT k + 1, "
-            "[least(m[idx], m[((idx - 1) // 24) * 24 + k + 1] + "
-            "m[k * 24 + ((idx - 1) % 24) + 1]) "
-            "for idx in range(1, 577)] "
-            "FROM f WHERE k < 24) SELECT m FROM f WHERE k = 24), "
-            "od AS (SELECT (g.i - 1) // 24 AS u, (g.i - 1) % 24 AS v,"
-            " m[cast(g.i as int)] AS d FROM fw, range(1, 577) g(i)) "
-            "SELECT u, v, d FROM od WHERE d < 1000000000 "
-            "ORDER BY u, v"
-        ),
-        # Determinant oracle: the Leibniz definition — all 720
-        # permutations from a recursive CTE, sign by inversion count
-        # (engine: Bareiss fraction-free elimination).
-        "determinant_bareiss": (
-            "WITH mat AS (SELECT doc_id, r.i + 1 AS r, c.i + 1 AS c, "
-            "cast('0x' || substr(sha256('dt:' || "
-            "cast(doc_id as varchar) || ':' || "
-            "cast(r.i + 1 as varchar) || ':' || "
-            "cast(c.i + 1 as varchar)), 1, 8) as bigint) % 19 - 9 "
-            "AS val FROM documents, range(6) r(i), range(6) c(i) "
-            "WHERE doc_id < 20), "
-            "perms AS (WITH RECURSIVE p(k, pm) AS ("
-            "SELECT 0, []::BIGINT[] "
-            "UNION ALL SELECT k + 1, pm || [e.i] FROM p "
-            "JOIN range(1, 7) e(i) ON NOT list_contains(pm, e.i) "
-            "WHERE k < 6) SELECT pm FROM p WHERE k = 6), "
-            "sgn AS (SELECT pm, CASE WHEN ((SELECT count(*) "
-            "FROM range(1, 7) x(i), range(1, 7) y(j) "
-            "WHERE x.i < y.j AND pm[cast(x.i as int)] > "
-            "pm[cast(y.j as int)]) % 2) = 0 THEN 1 ELSE -1 END AS s "
-            "FROM perms), "
-            "terms AS (SELECT m.doc_id, s.pm, s.s, "
-            "cast(product(m.val) as bigint) AS t "
-            "FROM sgn s JOIN range(6) rr(i) ON true "
-            "JOIN mat m ON m.r = rr.i + 1 "
-            "AND m.c = s.pm[cast(rr.i as int) + 1] "
-            "GROUP BY m.doc_id, s.pm, s.s) "
-            "SELECT doc_id, sum(s * t) AS det FROM terms "
-            "GROUP BY doc_id ORDER BY doc_id"
-        ),
-        # Easter oracle: the Anonymous Gregorian (Meeus/Jones/
-        # Butcher) closed form — no exception rules (engine: Gauss's
-        # algorithm with its two exceptions).
-        "easter_date": (
-            "WITH y AS (SELECT i AS year FROM range(1900, 2300) "
-            "r(i)), "
-            "c1 AS (SELECT year, year % 19 AS a, year // 100 AS b, "
-            "year % 100 AS c0 FROM y), "
-            "c2 AS (SELECT *, b // 4 AS d, b % 4 AS e, "
-            "(b + 8) // 25 AS f FROM c1), "
-            "c3 AS (SELECT *, (b - f + 1) // 3 AS g FROM c2), "
-            "c4 AS (SELECT *, (19 * a + b - d - g + 15) % 30 AS h, "
-            "c0 // 4 AS i2, c0 % 4 AS k FROM c3), "
-            "c5 AS (SELECT *, (32 + 2 * e + 2 * i2 - h - k) % 7 AS l "
-            "FROM c4), "
-            "c6 AS (SELECT *, (a + 11 * h + 22 * l) // 451 AS m2 "
-            "FROM c5) "
-            "SELECT year, (h + l - 7 * m2 + 114) // 31 AS em, "
-            "((h + l - 7 * m2 + 114) % 31) + 1 AS ed FROM c6 "
-            "ORDER BY year"
-        ),
-        # Catalan oracle: Segner's convolution recurrence
-        # C_{n+1} = Σ C_i·C_{n-i} as a list through a recursive CTE
-        # (engine: exact closed-form binomial fold C(2n,n)/(n+1)).
-        "catalan_numbers": (
-            "WITH RECURSIVE c(n, lst) AS ("
-            "SELECT 0, [CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT n + 1, lst || [CAST(list_sum("
-            "[lst[i] * lst[n + 2 - i] for i in range(1, n + 2)]) "
-            "AS BIGINT)] FROM c WHERE n < 25) "
-            "SELECT i - 1 AS n, lst[cast(i as int)] AS cat "
-            "FROM c, range(1, 27) r(i) WHERE c.n = 25 ORDER BY n"
-        ),
-        # Gray oracle: the reflection construction G(k+1) =
-        # G(k) ++ reverse(G(k))+2^k grown 10 levels (engine:
-        # bitwise closed form n XOR n>>1).
-        "gray_code": (
-            "WITH RECURSIVE g(k, lst) AS ("
-            "SELECT 1, [CAST(0 AS BIGINT), CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT k + 1, lst || "
-            "[lst[len(lst) - i + 1] + (CAST(1 AS BIGINT) << k) "
-            "for i in range(1, len(lst) + 1)] "
-            "FROM g WHERE k < 10) "
-            "SELECT i - 1 AS n, lst[cast(i as int)] AS gray "
-            "FROM g, range(1, 1025) r(i) WHERE k = 10 ORDER BY n"
-        ),
-        # Totient oracle: the definition — coprime census via
-        # DuckDB's builtin gcd over a 4M-pair join (engine:
-        # factorization product formula).
-        "euler_totient": (
-            "SELECT a.n AS n, count(*) AS phi "
-            "FROM range(1, 2001) a(n) JOIN range(1, 2001) b(k) "
-            "ON b.k <= a.n AND gcd(a.n, b.k) = 1 "
-            "GROUP BY a.n ORDER BY n"
-        ),
-        # Möbius oracle: the Dirichlet-inverse recurrence
-        # μ(n) = -Σ_{d|n, d<n} μ(d) stepped 1000 levels (engine:
-        # squarefree/ω factor view in column algebra).
-        "mobius_function": (
-            "WITH RECURSIVE m(n, lst) AS ("
-            "SELECT 1, [CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT n + 1, lst || [CAST(-list_sum("
-            "[lst[d] for d in range(1, n + 1) if (n + 1) % d = 0]) "
-            "AS BIGINT)] FROM m WHERE n < 1000) "
-            "SELECT i AS n, lst[cast(i as int)] AS mu "
-            "FROM m, range(1, 1001) r(i) WHERE m.n = 1000 "
-            "ORDER BY n"
-        ),
-        # Simpson oracle: the antiderivative closed form — 3*integral
-        # of ax^3+bx^2+cx+d over [0,12] (engine: weighted node sum;
-        # Simpson is degree-3 exact so they agree to the integer).
-        "simpson_integrate": (
-            "WITH coef AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('sa:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS a, "
-            "cast('0x' || substr(sha256('sb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS b, "
-            "cast('0x' || substr(sha256('sc:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS c, "
-            "cast('0x' || substr(sha256('sd:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS d FROM documents WHERE doc_id < 30) "
-            "SELECT doc_id, 15552 * a + 1728 * b + 216 * c + 36 * d "
-            "AS i3 FROM coef ORDER BY doc_id"
-        ),
-        # Farey oracle: the definition — reduced fractions sorted by
-        # value, successor via LEAD (engine: Cauchy's unimodular
-        # adjacency join, no sort anywhere).
-        "farey_neighbors": (
-            "WITH fr AS (SELECT a.i AS a, b.i AS b "
-            "FROM range(0, 31) a(i), range(1, 31) b(i) "
-            "WHERE a.i <= b.i AND gcd(a.i, b.i) = 1), "
-            "ord AS (SELECT a, b, lead(a) OVER w AS c, "
-            "lead(b) OVER w AS d FROM fr "
-            "WINDOW w AS (ORDER BY a * 1.0 / b)) "
-            "SELECT a, b, c, d FROM ord WHERE c IS NOT NULL "
-            "ORDER BY a, b"
-        ),
-        # Stern-Brocot oracle: mediant descent from (0/1, 1/0)
-        # replayed in a recursive CTE with exact integer cross-
-        # multiplication (engine: Euclid CF quotients -> R/L runs).
-        "stern_brocot": (
-            "WITH f AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('sp:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS p0, "
-            "1 + cast('0x' || substr(sha256('sq:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS q0 "
-            "FROM documents WHERE doc_id < 40), "
-            "r0 AS (SELECT doc_id, p0 // gcd(p0, q0) AS p, "
-            "q0 // gcd(p0, q0) AS q FROM f), "
-            "w AS (WITH RECURSIVE d(doc_id, p, q, lp, lq, hp, hq, "
-            "path, done) AS ("
-            "SELECT doc_id, p, q, 0, 1, 1, 0, '', "
-            "(p = 1 AND q = 1) FROM r0 "
-            "UNION ALL SELECT doc_id, p, q, "
-            "CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lp+hp ELSE lp END,"
-            " CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lq+hq ELSE lq "
-            "END, "
-            "CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lp+hp ELSE hp END,"
-            " CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lq+hq ELSE hq "
-            "END, "
-            "path || CASE WHEN p*(lq+hq) > q*(lp+hp) THEN 'R' "
-            "WHEN p*(lq+hq) < q*(lp+hp) THEN 'L' ELSE '' END, "
-            "p*(lq+hq) = q*(lp+hp) FROM d WHERE NOT done) "
-            "SELECT doc_id, p, q, path FROM d WHERE done) "
-            "SELECT doc_id, p, q, path FROM w ORDER BY doc_id"
-        ),
-        # Stirling-2 oracle: the additive triangle recurrence
-        # S(n,k) = k*S(n-1,k) + S(n-1,k-1), rows carried as lists
-        # (engine: inclusion-exclusion surjection closed form).
-        "stirling2": (
-            "WITH RECURSIVE tri(n, row) AS ("
-            "SELECT 1, [cast(1 as bigint)] "
-            "UNION ALL SELECT n + 1, "
-            "list_transform(generate_series(1, n + 1), k -> "
-            "k * coalesce(row[k], 0) + "
-            "CASE WHEN k = 1 THEN 0 ELSE coalesce(row[k-1], 0) END) "
-            "FROM tri WHERE n < 12) "
-            "SELECT n, u.k, row[u.k] AS s FROM tri, "
-            "(SELECT unnest(generate_series(1, 12)) AS k) u "
-            "WHERE u.k <= n ORDER BY n, u.k"
-        ),
-        # Derangement oracle: D(n) = (n-1)(D(n-1)+D(n-2)) linear
-        # recurrence (engine: alternating-sum closed form).
-        "derangements": (
-            "WITH RECURSIVE dr(n, d, dprev) AS ("
-            "SELECT 1, cast(0 as bigint), cast(1 as bigint) "
-            "UNION ALL SELECT n + 1, n * (d + dprev), d "
-            "FROM dr WHERE n < 20) "
-            "SELECT * FROM (SELECT 0 AS n, cast(1 as bigint) AS d "
-            "UNION ALL SELECT n, d FROM dr) ORDER BY n"
-        ),
-        # Lucas oracle: Pascal's triangle mod 13 grown row by row
-        # as a list-state recursive CTE, then the hash-derived
-        # (n,k) pairs joined against their row (engine: Lucas'
-        # digit-product theorem over base-13 digits).
-        "lucas_binomial": (
-            "WITH RECURSIVE tri(n, row) AS ("
-            "SELECT 0, [cast(1 as bigint)] "
-            "UNION ALL SELECT n + 1, "
-            "list_transform(generate_series(1, n + 2), k -> "
-            "(coalesce(row[k], 0) + CASE WHEN k = 1 THEN 0 "
-            "ELSE coalesce(row[k-1], 0) END) % 13) "
-            "FROM tri WHERE n < 499), "
-            "pairs AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('lb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 500 AS n "
-            "FROM documents WHERE doc_id < 40), "
-            "pk AS (SELECT doc_id, n, "
-            "cast('0x' || substr(sha256('lk:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % (n + 1) "
-            "AS k FROM pairs) "
-            "SELECT pk.doc_id, pk.n, pk.k, "
-            "tri.row[cast(pk.k as int) + 1] AS c_mod "
-            "FROM pk JOIN tri ON tri.n = pk.n ORDER BY pk.doc_id"
-        ),
-        # Wythoff oracle: the greedy mex construction — a_n is the
-        # least positive integer not used by any earlier pair,
-        # b_n = a_n + n, used-set carried as a list (engine: Beatty
-        # closed form floor(n*phi) via exact integer sqrt).
-        "wythoff_cold": (
-            "WITH RECURSIVE w(n, a, b, used) AS ("
-            "SELECT 1, cast(1 as bigint), cast(2 as bigint), "
-            "[cast(1 as bigint), cast(2 as bigint)] "
-            "UNION ALL SELECT n + 1, na, na + n + 1, "
-            "list_append(list_append(used, na), na + n + 1) FROM ("
-            "SELECT n, used, (SELECT min(i) FROM "
-            "unnest(generate_series(1, 4 * n + 4)) AS t(i) "
-            "WHERE NOT list_contains(used, i)) AS na "
-            "FROM w WHERE n < 60) "
-            ") SELECT n, a, b FROM w ORDER BY n"
-        ),
-        # r2 oracle: the definition — signed lattice points on the
-        # circle of radius sqrt(n) counted by brute enumeration
-        # (engine: Jacobi's 4*(d1-d3) divisor-class formula).
-        "r2_lattice": (
-            "WITH grid AS (SELECT a.x * a.x + b.y * b.y AS n, "
-            "count(*) AS c FROM range(-20, 21) a(x), "
-            "range(-20, 21) b(y) "
-            "WHERE a.x * a.x + b.y * b.y BETWEEN 1 AND 400 "
-            "GROUP BY 1) "
-            "SELECT t.i AS n, coalesce(c, 0) AS r2 "
-            "FROM range(1, 401) t(i) LEFT JOIN grid ON grid.n = t.i "
-            "ORDER BY n"
-        ),
-        # sigma oracle: the multiplicative closed form — primes by
-        # non-existence of a smaller divisor, exponents by maximal
-        # p^k | n, sigma = product of geometric sums (engine:
-        # explicit divisor-census join).
-        "sigma_classify": (
-            "WITH pr AS (SELECT i AS p FROM range(2, 601) t(i) "
-            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 25) d(j) "
-            "WHERE j * j <= i AND i % j = 0)), "
-            "pw AS (SELECT p, k.e AS e, "
-            "cast(power(p, k.e) as bigint) AS pk "
-            "FROM pr, range(1, 10) k(e) "
-            "WHERE power(p, k.e) <= 600.5), "
-            "pe AS (SELECT n.i AS n, p, max(e) AS e "
-            "FROM range(2, 601) n(i), pw "
-            "WHERE n.i % pk = 0 GROUP BY 1, 2), "
-            "sg AS (SELECT n, cast(product("
-            "(power(p, e + 1) - 1) / (p - 1)) as bigint) AS sigma "
-            "FROM pe GROUP BY n), "
-            "allv AS (SELECT 1 AS n, cast(1 as bigint) AS sigma "
-            "UNION ALL SELECT n, sigma FROM sg) "
-            "SELECT n, sigma, CASE WHEN sigma = 2 * n THEN 'perfect' "
-            "WHEN sigma > 2 * n THEN 'abundant' ELSE 'deficient' END "
-            "AS cls FROM allv ORDER BY n"
-        ),
-        # Pell oracle: exhaustive search for the least x with
-        # (x^2-1)/n a perfect square — IEEE sqrt is correctly
-        # rounded so floor(sqrt(v)) of an exact square v < 2^53 is
-        # exact; the s and s+1 probes make it airtight (engine:
-        # continued-fraction convergents of sqrt(n)).
-        "pell_fundamental": (
-            "WITH ns AS (SELECT i AS n FROM range(2, 32) t(i) "
-            "WHERE cast(floor(sqrt(i)) as bigint) * "
-            "cast(floor(sqrt(i)) as bigint) <> i), "
-            "cand AS (SELECT n, x, (x * x - 1) // n AS v "
-            "FROM ns, range(2, 10002) r(x) "
-            "WHERE (x * x - 1) % n = 0), "
-            "sol AS (SELECT n, x, v, "
-            "cast(floor(sqrt(v)) as bigint) AS s FROM cand "
-            "WHERE cast(floor(sqrt(v)) as bigint) * "
-            "cast(floor(sqrt(v)) as bigint) = v OR "
-            "(cast(floor(sqrt(v)) as bigint) + 1) * "
-            "(cast(floor(sqrt(v)) as bigint) + 1) = v), "
-            "best AS (SELECT n, x, "
-            "CASE WHEN s * s = v THEN s ELSE s + 1 END AS y, "
-            "row_number() OVER (PARTITION BY n ORDER BY x) AS rn "
-            "FROM sol) "
-            "SELECT n, x, y FROM best WHERE rn = 1 ORDER BY n"
-        ),
-        # Miller-Rabin oracle: trial division — a composite below
-        # 10^6 has a divisor in 2..1000, so primality is the
-        # non-existence of one (engine: strong-pseudoprime test
-        # with the deterministic witness set {2,3,5,7}).
-        "miller_rabin": (
-            "WITH t AS (SELECT doc_id, 5 + 2 * ("
-            "cast('0x' || substr(sha256('mr:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 500000) "
-            "AS n FROM documents WHERE doc_id < 60) "
-            "SELECT doc_id, n, CASE WHEN NOT EXISTS ("
-            "SELECT 1 FROM range(2, 1001) d(i) "
-            "WHERE i < n AND n % i = 0) THEN 1 ELSE 0 END "
-            "AS is_prime FROM t ORDER BY doc_id"
-        ),
-        # Kadane oracle: the definition — enumerate every (i,j)
-        # span, sum its elements with a range join, take the max
-        # (engine: prefix-sum / running-min window identity).
-        "kadane_max_subarray": (
-            "WITH t AS (" + _hash_series("ka", 16, 64, 41, 20) + "), "
-            "spans AS (SELECT a.g, a.pos AS i, b.pos AS j "
-            "FROM t a JOIN t b ON a.g = b.g AND a.pos <= b.pos), "
-            "sums AS (SELECT s.g, s.i, s.j, sum(e.v) AS sv "
-            "FROM spans s JOIN t e ON e.g = s.g "
-            "AND e.pos BETWEEN s.i AND s.j GROUP BY 1, 2, 3) "
-            "SELECT g, max(sv) AS best FROM sums GROUP BY g "
-            "ORDER BY g"
-        ),
-        # Water-trapping oracle: horizontal slabs — per level l,
-        # cells below l strictly between the first and last columns
-        # reaching l (engine: per-cell min of two running maxima).
-        "water_trapping": (
-            "WITH t AS (SELECT g, pos, v AS h FROM ("
-            + _hash_series("wt", 16, 64, 16, 0) + ")), "
-            "lv AS (SELECT unnest(generate_series(1, 15)) AS l), "
-            "walls AS (SELECT g, l, min(pos) AS lo, max(pos) AS hi "
-            "FROM t, lv WHERE h >= l GROUP BY 1, 2), "
-            "slab AS (SELECT w.g, w.l, count(*) AS c FROM walls w "
-            "JOIN t ON t.g = w.g AND t.pos > w.lo AND t.pos < w.hi "
-            "AND t.h < w.l GROUP BY 1, 2), "
-            "tot AS (SELECT g, sum(c) AS water FROM slab GROUP BY g) "
-            "SELECT gg.i AS g, coalesce(water, 0) AS water "
-            "FROM range(0, 16) gg(i) LEFT JOIN tot ON tot.g = gg.i "
-            "ORDER BY g"
-        ),
-        # Period oracle: the border characterization — least p with
-        # substr(s, p+1) = substr(s, 1, n-p) (engine: KMP failure
-        # chain, period = n - fail[n]).
-        "string_period": (
-            "WITH raw AS (SELECT doc_id, "
-            "repeat(b, 6) || substr(b, 1, cast(doc_id % 4 as int)) "
-            "AS s FROM (SELECT doc_id, lower(substr("
-            "regexp_replace(text, '[^a-zA-Z]', '', 'g'), 1, 4)) AS b "
-            "FROM documents WHERE doc_id < 40)), "
-            "t AS (SELECT doc_id, s, length(s) AS n FROM raw "
-            "WHERE length(s) >= 8), "
-            "cand AS (SELECT doc_id, s, p.i AS p FROM t, "
-            "range(1, 29) p(i) WHERE p.i <= n "
-            "AND substr(s, p.i + 1) = substr(s, 1, n - p.i)) "
-            "SELECT doc_id, s, cast(min(p) as int) AS period "
-            "FROM cand GROUP BY doc_id, s ORDER BY doc_id"
-        ),
-        # Gauss-circle oracle: the 2-D census — count the (x,y)
-        # grid inside the disc directly (engine: 1-D isqrt
-        # reduction sum_x 2*isqrt(r^2-x^2)+1).
-        "gauss_circle": (
-            "SELECT r.i AS r, count(*) AS npoints "
-            "FROM range(1, 61) r(i), range(-60, 61) x(a), "
-            "range(-60, 61) y(b) "
-            "WHERE x.a * x.a + y.b * y.b <= r.i * r.i "
-            "GROUP BY r.i ORDER BY r"
-        ),
-        # Assignment oracle: brute force — all 720 assignment
-        # prefixes per instance enumerated in a recursive CTE, min
-        # at depth 6 (engine: subset DP by iterative joins).
-        "assignment_min": (
-            "WITH RECURSIVE cost AS (SELECT g.i AS g, w.a AS wk, "
-            "t.b AS tk, cast('0x' || substr(sha256('as:' || "
-            "cast(g.i as varchar) || ':' || cast(w.a as varchar) || "
-            "':' || cast(t.b as varchar)), 1, 8) as bigint) % 50 "
-            "AS c FROM range(0, 8) g(i), range(0, 6) w(a), "
-            "range(0, 6) t(b)), "
-            "rec(g, k, mask, total) AS ("
-            "SELECT i, 0, 0, cast(0 as bigint) FROM range(0, 8) t(i) "
-            "UNION ALL SELECT r.g, r.k + 1, "
-            "r.mask + cast(power(2, c.tk) as bigint), r.total + c.c "
-            "FROM rec r JOIN cost c ON c.g = r.g AND c.wk = r.k "
-            "AND (r.mask & cast(power(2, c.tk) as bigint)) = 0 "
-            "WHERE r.k < 6) "
-            "SELECT g, min(total) AS best FROM rec WHERE k = 6 "
-            "GROUP BY g ORDER BY g"
-        ),
-        # Permutation-rank oracle: generate all of S_7 as strings in
-        # a recursive CTE, lexicographic rank = row_number - 1, join
-        # by the permutation string (engine: Lehmer-code inversion
-        # census times factorials).
-        "perm_rank": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) d "
-            "WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "ranked AS (SELECT p, row_number() OVER (ORDER BY p) - 1 "
-            "AS rank FROM perms WHERE length(p) = 7), "
-            "keyed AS (SELECT g.i AS doc_id, e.j AS elem, "
-            "cast('0x' || substr(sha256('pr:' || "
-            "cast(g.i as varchar) || ':' || cast(e.j as varchar)), "
-            "1, 8) as bigint) AS key "
-            "FROM range(0, 30) g(i), range(0, 7) e(j)), "
-            "built AS (SELECT doc_id, string_agg("
-            "cast(elem as varchar), '' ORDER BY key, elem) AS perm "
-            "FROM keyed GROUP BY doc_id) "
-            "SELECT doc_id, perm, rank FROM built "
-            "JOIN ranked ON ranked.p = built.perm ORDER BY doc_id"
-        ),
-        # Life oracle: the weighted-offset relational step — expand
-        # each live cell over 9 toroidal offsets with weight 10 for
-        # self and 1 for neighbors; alive next iff the weighted sum
-        # is 3, 12 or 13 (B3/S23 in one aggregate). Engine: numpy
-        # roll stencil in an Arrow kernel.
-        "game_of_life": (
-            "WITH RECURSIVE cells(gen, g, x, y) AS ("
-            "SELECT 0, g.i, x.a, y.b FROM range(0, 12) g(i), "
-            "range(0, 16) x(a), range(0, 16) y(b) "
-            "WHERE cast('0x' || substr(sha256('gl:' || "
-            "cast(g.i as varchar) || ':' || cast(x.a as varchar) || "
-            "':' || cast(y.b as varchar)), 1, 8) as bigint) % 5 = 0 "
-            "UNION ALL SELECT gen + 1, g, nx, ny FROM ("
-            "SELECT gen, g, (x + dx.v + 16) % 16 AS nx, "
-            "(y + dy.v + 16) % 16 AS ny, "
-            "CASE WHEN dx.v = 0 AND dy.v = 0 THEN 10 ELSE 1 END "
-            "AS wt FROM cells, (VALUES (-1), (0), (1)) dx(v), "
-            "(VALUES (-1), (0), (1)) dy(v) WHERE gen < 4) "
-            "GROUP BY gen, g, nx, ny "
-            "HAVING sum(wt) IN (3, 12, 13)) "
-            "SELECT g, count(*) AS pop, "
-            "sum(x * 31 + y) AS checksum FROM cells WHERE gen = 4 "
-            "GROUP BY g ORDER BY g"
-        ),
-        # Bezier oracle: the Bernstein closed form 512*B(k/8) =
-        # sum_i C(3,i) k^i (8-k)^(3-i) P_i (engine: de Casteljau's
-        # scaled lerp ladder).
-        "bezier_eval": (
-            "WITH pts AS (SELECT g.i AS g, "
-            + ", ".join(
-                "cast('0x' || substr(sha256('bz" + str(i) + ":' || "
-                "cast(g.i as varchar)), 1, 8) as bigint) % 101 "
-                "AS p" + str(i) for i in range(4)) +
-            " FROM range(0, 20) g(i)) "
-            "SELECT g, k.v AS k, "
-            "(8-k.v)*(8-k.v)*(8-k.v) * p0 "
-            "+ 3 * k.v * (8-k.v)*(8-k.v) * p1 "
-            "+ 3 * k.v * k.v * (8-k.v) * p2 "
-            "+ k.v * k.v * k.v * p3 AS v512 "
-            "FROM pts, range(0, 9) k(v) ORDER BY g, k"
-        ),
-        # Collatz oracle: the orbit replayed in a recursive CTE
-        # (engine: imperative hailstone loop in an Arrow kernel).
-        "collatz_steps": (
-            "WITH RECURSIVE st AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('cz:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99998 "
-            "AS n0 FROM documents WHERE doc_id < 50), "
-            "orb(doc_id, n0, n, s, pk) AS ("
-            "SELECT doc_id, n0, n0, 0, n0 FROM st "
-            "UNION ALL SELECT doc_id, n0, "
-            "CASE WHEN n % 2 = 0 THEN n // 2 ELSE 3 * n + 1 END, "
-            "s + 1, greatest(pk, CASE WHEN n % 2 = 0 THEN n // 2 "
-            "ELSE 3 * n + 1 END) FROM orb WHERE n <> 1) "
-            "SELECT doc_id, n0, cast(s as int) AS steps, pk AS peak "
-            "FROM orb WHERE n = 1 ORDER BY doc_id"
-        ),
-        # Happy oracle: the reaches-4 theorem — iterate the digit-
-        # square-sum map until 1 or 4 (engine: visited-set cycle
-        # detection with no theorem assumed).
-        "happy_numbers": (
-            "WITH RECURSIVE orb(n, v) AS ("
-            "SELECT i, i FROM range(1, 501) t(i) "
-            "UNION ALL SELECT n, "
-            "(v // 100 % 10) * (v // 100 % 10) + "
-            "(v // 10 % 10) * (v // 10 % 10) + "
-            "(v % 10) * (v % 10) FROM orb "
-            "WHERE v NOT IN (1, 4) AND v < 1000) "
-            "SELECT n, CASE WHEN v = 1 THEN 1 ELSE 0 END AS happy "
-            "FROM orb WHERE v IN (1, 4) ORDER BY n"
-        ),
-        # Ulam oracle: the generative walk — step n=1..400 turning
-        # counter-clockwise with run lengths 1,1,2,2,3,3,...
-        # (engine: ring closed form by CASE algebra).
-        "ulam_spiral": (
-            "WITH RECURSIVE w(n, x, y, dx, dy, run, rem, legs) AS ("
-            "SELECT 1, 0, 0, 1, 0, 1, 1, 0 "
-            "UNION ALL SELECT n + 1, x + dx, y + dy, "
-            "CASE WHEN rem = 1 THEN -dy ELSE dx END, "
-            "CASE WHEN rem = 1 THEN dx ELSE dy END, "
-            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 ELSE run "
-            "END, "
-            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 "
-            "ELSE rem - 1 END, "
-            "CASE WHEN rem = 1 THEN legs + 1 ELSE legs END "
-            "FROM w WHERE n < 400) "
-            "SELECT n, x, y FROM w ORDER BY n"
-        ),
-        # Zeller oracle: the civil-calendar library — DuckDB's
-        # isodow over make_date (engine: Zeller's congruence, no
-        # date type anywhere).
-        "zeller_dow": (
-            "WITH t AS (SELECT doc_id, "
-            "1900 + cast('0x' || substr(sha256('zy:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 200 AS y, "
-            "1 + cast('0x' || substr(sha256('zm:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS m, "
-            "1 + cast('0x' || substr(sha256('zd:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 28 AS dd "
-            "FROM documents WHERE doc_id < 80) "
-            "SELECT doc_id, y, m, dd, cast(isodow(make_date("
-            "cast(y as int), cast(m as int), cast(dd as int))) "
-            "as int) AS isodow FROM t ORDER BY doc_id"
-        ),
-        # Wilson oracle: trial division (engine: the (n-1)! mod n
-        # congruence folded JVM-side).
-        "wilson_primality": (
-            "SELECT i AS n, CASE WHEN NOT EXISTS ("
-            "SELECT 1 FROM range(2, 17) d(j) "
-            "WHERE j * j <= i AND i % j = 0) THEN 1 ELSE 0 END "
-            "AS is_prime FROM range(2, 251) t(i) ORDER BY n"
-        ),
-        # Faulhaber oracle: the six classical closed-form
-        # polynomials, exact integer division (engine: explode +
-        # sum of the definition).
-        "faulhaber_sums": (
-            "WITH t AS (SELECT doc_id, 10 + "
-            "cast('0x' || substr(sha256('fh:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 291 AS m "
-            "FROM documents WHERE doc_id < 20), "
-            "g AS (SELECT doc_id, m, k.v AS k FROM t, "
-            "range(1, 7) k(v)) "
-            "SELECT doc_id, m, k, CASE k "
-            "WHEN 1 THEN m * (m + 1) // 2 "
-            "WHEN 2 THEN m * (m + 1) * (2 * m + 1) // 6 "
-            "WHEN 3 THEN (m * (m + 1) // 2) * (m * (m + 1) // 2) "
-            "WHEN 4 THEN m * (m + 1) * (2 * m + 1) * "
-            "(3 * m * m + 3 * m - 1) // 30 "
-            "WHEN 5 THEN m * m * (m + 1) * (m + 1) * "
-            "(2 * m * m + 2 * m - 1) // 12 "
-            "WHEN 6 THEN m * (m + 1) * (2 * m + 1) * "
-            "(3 * m * m * m * m + 6 * m * m * m - 3 * m + 1) // 42 "
-            "END AS s FROM g ORDER BY doc_id, k"
-        ),
-        # Sundaram oracle: trial division up to sqrt (engine:
-        # Sundaram's i+j+2ij exclusion anti-join, no divisibility).
-        "sundaram_sieve": (
-            "SELECT i AS p FROM range(2, 2002) t(i) "
-            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 46) d(j) "
-            "WHERE j * j <= i AND i % j = 0) ORDER BY p"
-        ),
-        # Reverse-and-add oracle: the orbit through the decimal
-        # STRING representation — reverse() + cast in a recursive
-        # CTE (engine: integer slicing in an Arrow kernel).
-        "reverse_add_palindrome": (
-            "WITH RECURSIVE orb(n, v, s) AS ("
-            "SELECT i, i, 0 FROM range(1, 181) t(i) "
-            "UNION ALL SELECT n, "
-            "v + cast(reverse(cast(v as varchar)) as bigint), s + 1 "
-            "FROM orb WHERE cast(v as varchar) <> "
-            "reverse(cast(v as varchar))) "
-            "SELECT n, cast(s as int) AS steps, v AS pal FROM orb "
-            "WHERE cast(v as varchar) = reverse(cast(v as varchar)) "
-            "ORDER BY n"
-        ),
-        # Fermat oracle: trial division — least divisor and its
-        # cofactor (engine: difference-of-squares scan from
-        # ceil(sqrt(n))).
-        "fermat_factorization": (
-            "WITH t AS (SELECT doc_id, "
-            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
-            "[cast(cast('0x' || substr(sha256('fp:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-            "as int) + 1] * "
-            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
-            "[cast(cast('0x' || substr(sha256('fq:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-            "as int) + 1] AS n "
-            "FROM documents WHERE doc_id < 30), "
-            "f AS (SELECT doc_id, n, (SELECT min(i) FROM "
-            "range(2, 200) d(i) WHERE n % i = 0) AS p FROM t) "
-            "SELECT doc_id, n, p, n // p AS q FROM f "
-            "ORDER BY doc_id"
-        ),
-        # Stein oracle: DuckDB's gcd() builtin — an independent
-        # C++ Euclid (engine: binary shifts-and-subtract).
-        "binary_gcd": (
-            "WITH t AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('ga:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
-            "AS a, "
-            "1 + cast('0x' || substr(sha256('gb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
-            "AS b FROM documents WHERE doc_id < 60) "
-            "SELECT doc_id, a, b, gcd(a, b) AS g FROM t "
-            "ORDER BY doc_id"
-        ),
-        # Ballot oracle: explicit DP — one lattice step per
-        # recursive iteration, states kept strictly above the
-        # diagonal, counts merged by the in-term aggregate
-        # (engine: the (a-b)/(a+b)*C(a+b,a) reflection identity).
-        "ballot_paths": (
-            "WITH RECURSIVE inst AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('ba:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS b0, "
-            "cast('0x' || substr(sha256('bb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS a_x "
-            "FROM documents WHERE doc_id < 20), "
-            "inst2 AS (SELECT doc_id, b0, b0 + 1 + a_x AS a0 "
-            "FROM inst), "
-            "walk(doc_id, x, y, c) AS ("
-            "SELECT doc_id, 1, 0, cast(1 as bigint) FROM inst2 "
-            "UNION ALL SELECT doc_id, nx, ny, sum(c) FROM ("
-            "SELECT w.doc_id, w.x + s.dx AS nx, w.y + s.dy AS ny, "
-            "w.c FROM walk w, (VALUES (1, 0), (0, 1)) s(dx, dy), "
-            "inst2 i WHERE i.doc_id = w.doc_id "
-            "AND w.x + s.dx <= i.a0 AND w.y + s.dy <= i.b0 "
-            "AND w.x + s.dx > w.y + s.dy "
-            "AND NOT (w.x = i.a0 AND w.y = i.b0)) "
-            "GROUP BY doc_id, nx, ny) "
-            "SELECT w.doc_id, i.a0 AS a, i.b0 AS b, w.c AS npaths "
-            "FROM walk w JOIN inst2 i ON i.doc_id = w.doc_id "
-            "WHERE w.x = i.a0 AND w.y = i.b0 ORDER BY w.doc_id"
-        ),
-        # Dragon oracle: the paper-folding L-system — s' = s || 'L'
-        # || reverse(swap(s)) grown to 1023 turns, read position n
-        # (engine: the lowest-set-bit closed form).
-        "dragon_turns": (
-            "WITH RECURSIVE fold(k, s) AS (SELECT 1, 'L' "
-            "UNION ALL SELECT k + 1, s || 'L' || "
-            "reverse(translate(s, 'LR', 'RL')) "
-            "FROM fold WHERE k < 10) "
-            "SELECT n.i AS n, substr(s, cast(n.i as int), 1) AS turn "
-            "FROM (SELECT s FROM fold WHERE k = 10), "
-            "range(1, 513) n(i) ORDER BY n"
-        ),
-        # N-queens oracle: relational generate-and-test — placement
-        # strings extended one row per recursive iteration, conflict
-        # = correlated EXISTS over earlier rows; checksum = base-8
-        # value of each solution (engine: prefix-split imperative
-        # backtracking).
-        "nqueens": (
-            "WITH RECURSIVE q(p) AS ("
-            "SELECT cast(i as varchar) FROM range(0, 8) t(i) "
-            "UNION ALL SELECT p || cast(c.i as varchar) "
-            "FROM q, range(0, 8) c(i) WHERE length(p) < 8 "
-            "AND NOT EXISTS (SELECT 1 FROM range(1, 9) r(j) "
-            "WHERE j <= length(p) AND ("
-            "cast(substr(p, cast(j as int), 1) as bigint) = c.i OR "
-            "abs(cast(substr(p, cast(j as int), 1) as bigint) - c.i) "
-            "= length(p) + 1 - j))), "
-            "sols AS (SELECT p, (SELECT sum("
-            "cast(substr(p, cast(j as int), 1) as bigint) * "
-            "cast(power(8, 8 - j) as bigint)) "
-            "FROM range(1, 9) r(j)) AS v "
-            "FROM q WHERE length(p) = 8) "
-            "SELECT cast(substr(p, 1, 1) as bigint) AS col0, "
-            "count(*) AS n_solutions, sum(v) AS checksum "
-            "FROM sols GROUP BY 1 ORDER BY col0"
-        ),
-        # Josephus k=3 oracle: act out the story — the circle as a
-        # list, remove every third by slice concatenation (engine:
-        # the O(n) recurrence).
-        "josephus_k3": (
-            "WITH RECURSIVE sim(n0, lst, s) AS ("
-            "SELECT i, list_transform(generate_series(1, i), "
-            "x -> cast(x as bigint)), 0 FROM range(1, 61) t(i) "
-            "UNION ALL SELECT n0, "
-            "lst[1:idx-1] || lst[idx+1:len(lst)], "
-            "(idx - 1) % (len(lst) - 1) FROM ("
-            "SELECT n0, lst, ((s + 2) % len(lst)) + 1 AS idx "
-            "FROM sim WHERE len(lst) > 1)) "
-            "SELECT n0 AS n, lst[1] AS survivor FROM sim "
-            "WHERE len(lst) = 1 ORDER BY n"
-        ),
-        # Fusc oracle: the hyperbinary theorem — fusc(n) counts
-        # ways to write n-1 as a sum of powers of two each used at
-        # most twice, enumerated digit by digit (engine: Dijkstra's
-        # (a,b) bit loop).
-        "stern_fusc": (
-            "WITH RECURSIVE h(n0, rem, p) AS ("
-            "SELECT i, i - 1, 1 FROM range(1, 201) t(i) "
-            "UNION ALL SELECT n0, rem - d.v * p, p * 2 "
-            "FROM h, (VALUES (0), (1), (2)) d(v) "
-            "WHERE p <= 256 AND rem - d.v * p >= 0) "
-            "SELECT n0 AS n, count(*) AS fusc FROM h "
-            "WHERE p = 512 AND rem = 0 GROUP BY n0 ORDER BY n"
-        ),
-        # Square-triangular oracle: the definition — intersect the
-        # triangular and square sequences by an equi-join, rank by
-        # value (engine: the 34x recurrence from the Pell
-        # structure).
-        "triangular_square": (
-            "WITH tri AS (SELECT m.i * (m.i + 1) // 2 AS v "
-            "FROM range(1, 57200) m(i)), "
-            "sq AS (SELECT j.i * j.i AS v FROM range(1, 40500) j(i)), "
-            "hit AS (SELECT tri.v AS v FROM tri "
-            "JOIN sq ON tri.v = sq.v) "
-            "SELECT row_number() OVER (ORDER BY v) AS k, v "
-            "FROM hit ORDER BY k"
-        ),
-        # Partition oracle: bounded-parts coin DP — one part size
-        # per recursive iteration, the full row carried as a list
-        # and convolved by nested lambdas (engine: Euler's
-        # pentagonal recurrence).
-        "partition_pentagonal": (
-            "WITH RECURSIVE dp(k, row) AS ("
-            "SELECT 0, list_transform(generate_series(0, 40), "
-            "n -> CASE WHEN n = 0 THEN cast(1 as bigint) "
-            "ELSE cast(0 as bigint) END) "
-            "UNION ALL SELECT k + 1, "
-            "list_transform(generate_series(0, 40), n -> "
-            "list_sum(list_transform(generate_series(0, "
-            "n // (k + 1)), j -> row[n - j * (k + 1) + 1]))) "
-            "FROM dp WHERE k < 40) "
-            "SELECT n.i AS n, row[cast(n.i as int) + 1] AS p "
-            "FROM dp, range(0, 41) n(i) WHERE k = 40 ORDER BY n"
-        ),
-        # Frobenius oracle: the census — the representable set
-        # {xa+yb} built by a bounded grid, gaps counted and maxed
-        # directly (engine: Sylvester's ab-a-b and (a-1)(b-1)/2).
-        "frobenius_coin": (
-            "WITH pairs AS (SELECT doc_id, a, CASE WHEN doc_id % 2 "
-            "= 0 THEN a + 1 ELSE 2 * a - 1 END AS b FROM ("
-            "SELECT doc_id, 3 + cast('0x' || substr(sha256('fr:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 18 AS a "
-            "FROM documents WHERE doc_id < 24)), "
-            "rep AS (SELECT DISTINCT doc_id, x.i * a + y.j * b AS v "
-            "FROM pairs, range(0, 41) x(i), range(0, 22) y(j) "
-            "WHERE x.i * a + y.j * b <= a * b), "
-            "gaps AS (SELECT p.doc_id, c.i AS v FROM pairs p, "
-            "range(1, 781) c(i) WHERE c.i < a * b "
-            "AND NOT EXISTS (SELECT 1 FROM rep r "
-            "WHERE r.doc_id = p.doc_id AND r.v = c.i)) "
-            "SELECT p.doc_id, p.a, p.b, max(g.v) AS frob, "
-            "count(*) AS n_nonrep FROM pairs p "
-            "JOIN gaps g ON g.doc_id = p.doc_id "
-            "GROUP BY 1, 2, 3 ORDER BY p.doc_id"
-        ),
-        # Inverse oracle: Fermat's little theorem — a^(p-2) mod p
-        # by square-and-multiply, one bit per iteration (engine:
-        # extended Euclid / Bezout).
-        "mod_inverse": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('mi:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 1000000 "
-            "AS a FROM documents WHERE doc_id < 40), "
-            "pw(doc_id, base, e, acc) AS ("
-            "SELECT doc_id, a, 1000001, cast(1 as bigint) FROM t "
-            "UNION ALL SELECT doc_id, base * base % 1000003, "
-            "e // 2, CASE WHEN e % 2 = 1 "
-            "THEN acc * base % 1000003 ELSE acc END "
-            "FROM pw WHERE e > 0) "
-            "SELECT pw.doc_id, t.a, pw.acc AS inv FROM pw "
-            "JOIN t ON t.doc_id = pw.doc_id "
-            "WHERE pw.e = 0 ORDER BY pw.doc_id"
-        ),
-        # Look-and-say oracle: relational RLE — explode the string,
-        # gaps-and-islands run grouping, string_agg back, one step
-        # per recursive iteration (engine: imperative RLE kernel).
-        "look_and_say": (
-            "WITH RECURSIVE las(step, s) AS (SELECT 0, '1' "
-            "UNION ALL SELECT step + 1, ("
-            "SELECT string_agg(cast("
-            "(SELECT coalesce(min(u.j), length(s) + 1) "
-            "FROM range(1, 200) u(j) WHERE u.j <= length(s) "
-            "AND u.j > t.i AND substr(s, cast(u.j as int), 1) <> "
-            "substr(s, cast(u.j as int) - 1, 1)) - t.i as varchar) "
-            "|| substr(s, cast(t.i as int), 1), '' ORDER BY t.i) "
-            "FROM range(1, 200) t(i) WHERE t.i <= length(s) "
-            "AND (t.i = 1 OR substr(s, cast(t.i as int), 1) <> "
-            "substr(s, cast(t.i as int) - 1, 1))) "
-            "FROM las WHERE step < 12) "
-            "SELECT step, length(s) AS len, s FROM las "
-            "WHERE step >= 1 ORDER BY step"
-        ),
-        # Machin oracle: the same Gregory series in DuckDB HUGEINT
-        # — power ladders in recursive CTEs, floor division
-        # identical to the engine's Python bignums.
-        "machin_pi": (
-            "WITH RECURSIVE p5(k, p) AS ("
-            "SELECT 0, cast(5 as hugeint) "
-            "UNION ALL SELECT k + 1, p * 25 FROM p5 "
-            "WHERE p * 25 <= 1000000000000000000000000000000), "
-            "p239(k, p) AS (SELECT 0, cast(239 as hugeint) "
-            "UNION ALL SELECT k + 1, p * 57121 FROM p239 "
-            "WHERE p * 57121 <= 1000000000000000000000000000000), "
-            "s5 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
-            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
-            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
-            "END) AS v FROM p5), "
-            "s239 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
-            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
-            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
-            "END) AS v FROM p239) "
-            "SELECT cast(16 * s5.v - 4 * s239.v as varchar) "
-            "AS pi_str, substr(cast(16 * s5.v - 4 * s239.v "
-            "as varchar), 1, 25) AS d25 FROM s5, s239"
-        ),
-        # Egyptian oracle: the greedy replayed with DuckDB integer
-        # ceil-division and gcd() in a recursive CTE (engine:
-        # Python Fraction arithmetic).
-        "egyptian_fractions": (
-            "WITH RECURSIVE t AS (SELECT doc_id, "
-            "doc_id % 3 + 2 AS p, 6 + cast('0x' || substr(sha256("
-            "'eg:' || cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 26 AS q FROM documents WHERE doc_id < 24), "
-            "r0 AS (SELECT doc_id, p // gcd(p, q) AS num, "
-            "q // gcd(p, q) AS den FROM t), "
-            "eg(doc_id, k, unit, num, den) AS ("
-            "SELECT doc_id, 1, u, nn // gg, nd // gg FROM ("
-            "SELECT doc_id, u, num * u - den AS nn, den * u AS nd, "
-            "CASE WHEN num * u - den = 0 THEN 1 "
-            "ELSE gcd(num * u - den, den * u) END AS gg FROM ("
-            "SELECT doc_id, num, den, (den + num - 1) // num AS u "
-            "FROM r0)) "
-            "UNION ALL SELECT doc_id, k + 1, u, nn // gg, nd // gg "
-            "FROM (SELECT doc_id, k, u, num * u - den AS nn, "
-            "den * u AS nd, CASE WHEN num * u - den = 0 THEN 1 "
-            "ELSE gcd(num * u - den, den * u) END AS gg FROM ("
-            "SELECT doc_id, k, num, den, "
-            "(den + num - 1) // num AS u FROM eg WHERE num > 0))) "
-            "SELECT doc_id, cast(k as int) AS k, unit FROM eg "
-            "ORDER BY doc_id, k"
-        ),
-        # Pick oracle: the census — boundary by exact segment
-        # membership, interior by half-open ray casting over the
-        # vertical edges, every bounding-grid point tested (engine:
-        # shoelace + perimeter + Pick's identity, no enumeration).
-        "pick_theorem": (
-            "WITH steps AS (SELECT g.a AS g, s.j AS i, "
-            "1 + cast('0x' || substr(sha256('pw:' || "
-            "cast(g.a as varchar) || ':' || cast(s.j as varchar)), "
-            "1, 8) as bigint) % 5 AS w, "
-            "1 + cast('0x' || substr(sha256('ph:' || "
-            "cast(g.a as varchar) || ':' || cast(s.j as varchar)), "
-            "1, 8) as bigint) % 5 AS h "
-            "FROM range(0, 12) g(a), range(1, 7) s(j)), "
-            "cum AS (SELECT g, i, w, h, "
-            "sum(w) OVER (PARTITION BY g ORDER BY i) AS cw, "
-            "sum(h) OVER (PARTITION BY g ORDER BY i) AS ch "
-            "FROM steps), "
-            "verts AS ("
-            "SELECT a AS g, 0 AS idx, cast(0 as bigint) AS x, "
-            "cast(0 as bigint) AS y FROM range(0, 12) t(a) "
-            "UNION ALL SELECT g, 2 * i - 1, cw, ch - h FROM cum "
-            "UNION ALL SELECT g, 2 * i, cw, ch FROM cum "
-            "UNION ALL SELECT g, 13, 0, sum(h) FROM steps GROUP BY g), "
-            "edges AS (SELECT a.g, a.x, a.y, b.x AS x2, b.y AS y2 "
-            "FROM verts a JOIN verts b ON a.g = b.g "
-            "AND b.idx = (a.idx + 1) % 14), "
-            "pts AS (SELECT g.a AS g, px.i AS px, py.j AS py "
-            "FROM range(0, 12) g(a), range(0, 31) px(i), "
-            "range(0, 31) py(j)), "
-            "onb AS (SELECT DISTINCT p.g, p.px, p.py FROM pts p "
-            "JOIN edges e ON e.g = p.g AND (("
-            "e.x = e.x2 AND p.px = e.x AND p.py BETWEEN "
-            "least(e.y, e.y2) AND greatest(e.y, e.y2)) OR ("
-            "e.y = e.y2 AND p.py = e.y AND p.px BETWEEN "
-            "least(e.x, e.x2) AND greatest(e.x, e.x2)))), "
-            "inner_pts AS (SELECT p.g, p.px, p.py FROM pts p "
-            "WHERE NOT EXISTS (SELECT 1 FROM onb o WHERE "
-            "o.g = p.g AND o.px = p.px AND o.py = p.py) "
-            "AND (SELECT count(*) FROM edges e WHERE e.g = p.g "
-            "AND e.x = e.x2 AND e.x > p.px "
-            "AND least(e.y, e.y2) <= p.py "
-            "AND p.py < greatest(e.y, e.y2)) % 2 = 1) "
-            "SELECT g.a AS g, "
-            "(SELECT count(*) FROM onb o WHERE o.g = g.a) AS b, "
-            "(SELECT count(*) FROM inner_pts q WHERE q.g = g.a) "
-            "AS i FROM range(0, 12) g(a) ORDER BY g"
-        ),
-        # Perfect-power oracle: forward generation — the exact
-        # power ladder b^e <= 2e9 in a recursive CTE, joined to the
-        # candidates, arg_max picks the base of the largest
-        # exponent (engine: k-th root extraction + exact fold).
-        "perfect_power": (
-            "WITH RECURSIVE src AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('pp1:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) AS h1, "
-            "cast('0x' || substr(sha256('pp2:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) AS h2 "
-            "FROM documents WHERE doc_id < 40), "
-            "cand AS (SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN "
-            "CASE 2 + h2 % 4 "
-            "WHEN 2 THEN (2+h1%60)*(2+h1%60) "
-            "WHEN 3 THEN (2+h1%60)*(2+h1%60)*(2+h1%60) "
-            "WHEN 4 THEN (2+h1%60)*(2+h1%60)*(2+h1%60)*(2+h1%60) "
-            "ELSE (2+h1%60)*(2+h1%60)*(2+h1%60)*(2+h1%60)*(2+h1%60) "
-            "END ELSE 2 + h1 % 999999999 END AS n FROM src), "
-            "pw(b, e, v) AS (SELECT i, 1, i "
-            "FROM range(2, 44722) t(i) "
-            "UNION ALL SELECT b, e + 1, v * b FROM pw "
-            "WHERE v * b <= 2000000000), "
-            "hit AS (SELECT c.doc_id, max(p.e) AS kmax, "
-            "arg_max(p.b, p.e) AS bmin FROM cand c "
-            "JOIN pw p ON p.v = c.n AND p.e >= 2 GROUP BY 1) "
-            "SELECT c.doc_id, c.n, CASE WHEN h.kmax IS NULL THEN 0 "
-            "ELSE 1 END AS is_pp, coalesce(h.kmax, 0) AS kmax, "
-            "coalesce(h.bmin, 0) AS bmin FROM cand c "
-            "LEFT JOIN hit h ON h.doc_id = c.doc_id "
-            "ORDER BY c.doc_id"
-        ),
-        # Aliquot oracle: the same dynamical system in a recursive
-        # CTE with a correlated divisor-sum subquery (engine:
-        # driver-unrolled divisor joins).
-        "aliquot_sequence": (
-            "WITH RECURSIVE al(n, step, v) AS ("
-            "SELECT i, 0, i FROM range(2, 121) t(i) "
-            "UNION ALL SELECT n, step + 1, "
-            "CASE WHEN v <= 1 THEN 0 ELSE ("
-            "SELECT coalesce(sum(d.i), 0) FROM range(1, 10001) d(i) "
-            "WHERE d.i < v AND v % d.i = 0) END "
-            "FROM al WHERE step < 6) "
-            "SELECT n, step, v FROM al ORDER BY n, step"
-        ),
-        # Karatsuba oracle: native 128-bit multiplication (engine:
-        # divide-and-conquer on digit lists).
-        "karatsuba_mul": (
-            "WITH t AS (SELECT doc_id, 100000000000000 + "
-            "(cast('0x' || substr(sha256('km1:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 1000000000) * 100000 + "
-            "cast('0x' || substr(sha256('km2:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 100000 "
-            "AS a, 100000000000000 + "
-            "(cast('0x' || substr(sha256('km3:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 1000000000) * 100000 + "
-            "cast('0x' || substr(sha256('km4:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 100000 "
-            "AS b FROM documents WHERE doc_id < 30) "
-            "SELECT doc_id, a, b, cast(cast(a as hugeint) * "
-            "cast(b as hugeint) as varchar) AS prod FROM t "
-            "ORDER BY doc_id"
-        ),
-        # Floyd oracle: total recall — the orbit as a growing list
-        # until the first revisit; mu and lambda read off
-        # list_position (engine: O(1)-memory tortoise and hare).
-        "floyd_cycle": (
-            "WITH RECURSIVE t AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('fc:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 509 AS c, "
-            "cast('0x' || substr(sha256('fx:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 509 "
-            "AS x0 FROM documents WHERE doc_id < 30), "
-            "orb(doc_id, c, x, lst) AS ("
-            "SELECT doc_id, c, x0, cast([] as bigint[]) FROM t "
-            "UNION ALL SELECT doc_id, c, (x * x + c) % 509, "
-            "list_append(lst, x) FROM orb "
-            "WHERE NOT list_contains(lst, x)) "
-            "SELECT o.doc_id, o.c, t.x0, "
-            "list_position(o.lst, o.x) - 1 AS mu, "
-            "len(o.lst) - list_position(o.lst, o.x) + 1 AS lam "
-            "FROM orb o JOIN t ON t.doc_id = o.doc_id "
-            "WHERE list_contains(o.lst, o.x) ORDER BY o.doc_id"
-        ),
-        # Burnside oracle: the orbit census — canonicalize all 2^n
-        # strings to their minimal rotation via bit shifts, count
-        # distinct (engine: Burnside averaging with a relational
-        # totient).
-        "burnside_necklaces": (
-            "WITH ns AS (SELECT i AS n, "
-            "cast(power(2, i) as bigint) AS sz FROM range(1, 17) "
-            "t(i)), "
-            "allx AS (SELECT n, sz, x.v AS x FROM ns, "
-            "range(0, 65536) x(v) WHERE x.v < sz), "
-            "rot AS (SELECT n, x, min(((x >> r.i) | "
-            "(x << (n - r.i))) & (sz - 1)) AS c "
-            "FROM allx, range(0, 16) r(i) WHERE r.i < n "
-            "GROUP BY n, x) "
-            "SELECT n, count(DISTINCT c) AS necklaces FROM rot "
-            "GROUP BY n ORDER BY n"
-        ),
-        # Matrix-tree oracle: enumeration — all 7-edge subsets of
-        # the 12 edges, connectivity by bitmask closure with an
-        # in-term bit_or aggregate (engine: Bareiss determinant of
-        # the Laplacian minor).
-        "matrix_tree": (
-            "WITH RECURSIVE edges AS ("
-            "SELECT i AS eid, i AS u, i + 1 AS v FROM range(0, 7) "
-            "t(i) UNION ALL SELECT i, u0, CASE WHEN v0 = u0 THEN "
-            "(u0 + 1) % 8 ELSE v0 END FROM ("
-            "SELECT i, cast('0x' || substr(sha256('mtu:' || "
-            "cast(i as varchar)), 1, 8) as bigint) % 8 AS u0, "
-            "cast('0x' || substr(sha256('mtv:' || "
-            "cast(i as varchar)), 1, 8) as bigint) % 8 AS v0 "
-            "FROM range(7, 12) t(i))), "
-            "masks AS (SELECT m.v AS mask FROM range(0, 4096) m(v) "
-            "WHERE bit_count(m.v) = 7), "
-            "conn(mask, reach, step) AS ("
-            "SELECT mask, 1, 0 FROM masks "
-            "UNION ALL SELECT mask, reach | coalesce(bit_or("
-            "CASE WHEN (mask >> eid) & 1 = 1 AND ("
-            "((reach >> u) & 1) = 1 OR ((reach >> v) & 1) = 1) "
-            "THEN (1 << u) | (1 << v) ELSE 0 END), 0), step + 1 "
-            "FROM conn, edges WHERE step < 8 "
-            "GROUP BY mask, reach, step) "
-            "SELECT count(*) AS n_trees FROM conn "
-            "WHERE step = 8 AND reach = 255"
-        ),
-        # Hook-length oracle: walk the Young lattice — every
-        # corner-removal order enumerated down to the empty shape
-        # (engine: the n!/prod(hooks) product formula).
-        "hook_length": (
-            "WITH RECURSIVE parts(rem, maxp, shape) AS ("
-            "SELECT 8, 8, cast([] as bigint[]) "
-            "UNION ALL SELECT rem - p.i, p.i, "
-            "list_append(shape, p.i) FROM parts, range(1, 9) p(i) "
-            "WHERE rem > 0 AND p.i <= least(rem, maxp)), "
-            "shapes AS (SELECT array_to_string(shape, ',') AS key, "
-            "shape FROM parts WHERE rem = 0), "
-            "walk(key, cur) AS ("
-            "SELECT key, shape FROM shapes "
-            "UNION ALL SELECT key, list_filter("
-            "cur[1:pos-1] || [cur[pos] - 1] || cur[pos+1:len(cur)], "
-            "x -> x > 0) FROM ("
-            "SELECT key, cur, cast(p.i as int) AS pos "
-            "FROM walk, range(1, 9) p(i) WHERE p.i <= len(cur) "
-            "AND (p.i = len(cur) OR cur[cast(p.i as int)] > "
-            "cur[cast(p.i as int) + 1]))) "
-            "SELECT key AS shape, count(*) AS f FROM walk "
-            "WHERE len(cur) = 0 GROUP BY key ORDER BY shape"
-        ),
-        # De Bruijn oracle: the prefer-one greedy grown bit by bit
-        # (seen-window list), complemented, canonicalized to the
-        # minimal rotation — where it provably equals the FKM
-        # Lyndon concatenation the engine builds.
-        "debruijn_lyndon": (
-            "WITH RECURSIVE ns AS (SELECT i AS n, "
-            "cast(power(2, i) as bigint) AS sz FROM range(2, 9) "
-            "t(i)), "
-            "greedy(n, sz, s, seen, cur, cnt) AS ("
-            "SELECT n, sz, repeat('0', cast(n as int)), "
-            "[cast(0 as bigint)], cast(0 as bigint), 0 FROM ns "
-            "UNION ALL SELECT n, sz, "
-            "s || CASE WHEN ok1 THEN '1' ELSE '0' END, "
-            "list_append(seen, CASE WHEN ok1 THEN cur * 2 + 1 "
-            "ELSE cur * 2 END), "
-            "(CASE WHEN ok1 THEN cur * 2 + 1 ELSE cur * 2 END) "
-            "% (sz // 2), cnt + 1 FROM ("
-            "SELECT n, sz, s, seen, cur, cnt, "
-            "NOT list_contains(seen, cur * 2 + 1) AS ok1 "
-            "FROM greedy WHERE cnt < sz - n)), "
-            "fin AS (SELECT n, sz, translate(s, '01', '10') AS c "
-            "FROM greedy WHERE cnt = sz - n) "
-            "SELECT n, min(substr(c, cast(r.i as int) + 1) || "
-            "substr(c, 1, cast(r.i as int))) AS seq "
-            "FROM fin, range(0, 256) r(i) WHERE r.i < sz "
-            "GROUP BY n ORDER BY n"
-        ),
-        # Tonelli oracle: exhaustion — the least y with y^2 = a
-        # (mod 1009) (engine: 2-Sylow descent).
-        "tonelli_shanks": (
-            "WITH t AS (SELECT doc_id, ((2 + cast('0x' || "
-            "substr(sha256('ts:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 1007) * (2 + cast('0x' || "
-            "substr(sha256('ts:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 1007)) % 1009 AS a "
-            "FROM documents WHERE doc_id < 30) "
-            "SELECT doc_id, a, (SELECT min(y.i) FROM "
-            "range(1, 1009) y(i) WHERE (y.i * y.i) % 1009 = a) "
-            "AS root FROM t ORDER BY doc_id"
-        ),
-        # Elliptic oracle: the census — count (x,y) with
-        # y^2 = x^3+ax+b over F_211 plus the point at infinity
-        # (engine: Euler-criterion character sum).
-        "elliptic_count": (
-            "WITH c AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('ea:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 211 AS a, "
-            "cast('0x' || substr(sha256('eb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 211 AS b "
-            "FROM documents WHERE doc_id < 12), "
-            "ns AS (SELECT * FROM c WHERE "
-            "(4 * a * a * a + 27 * b * b) % 211 <> 0), "
-            "pts AS (SELECT ns.doc_id, count(*) AS np FROM ns, "
-            "range(0, 211) x(i), range(0, 211) y(j) "
-            "WHERE (y.j * y.j) % 211 = "
-            "(x.i * x.i * x.i + a * x.i + b) % 211 GROUP BY 1) "
-            "SELECT ns.doc_id, a, b, 1 + coalesce(np, 0) "
-            "AS npoints FROM ns LEFT JOIN pts USING (doc_id) "
-            "ORDER BY doc_id"
-        ),
-        # Newton oracle: power sums aggregated directly, then
-        # Newton's identities unwound with exact division (engine:
-        # one-root-at-a-time coefficient DP).
-        "newton_identities": (
-            "WITH RECURSIVE r AS (SELECT g.i AS g, s.j AS i, "
-            "cast('0x' || substr(sha256('nw:' || "
-            "cast(g.i as varchar) || ':' || cast(s.j as varchar)), "
-            "1, 8) as bigint) % 21 - 10 AS r "
-            "FROM range(0, 10) g(i), range(1, 7) s(j)), "
-            "p AS (SELECT g, k.v AS k, cast(sum("
-            "cast(power(r, k.v) as bigint)) as bigint) AS p "
-            "FROM r, range(1, 7) k(v) GROUP BY 1, 2), "
-            "pv AS (SELECT g, list(p ORDER BY k) AS pl FROM p "
-            "GROUP BY g), "
-            "nc(g, k, elist) AS ("
-            "SELECT g, 0, [cast(1 as bigint)] FROM pv "
-            "UNION ALL SELECT n.g, k + 1, list_append(elist, "
-            "list_sum(list_transform(generate_series(1, k + 1), "
-            "i -> CASE WHEN i % 2 = 1 THEN 1 ELSE -1 END * "
-            "elist[k + 2 - i] * pl[i])) // (k + 1)) "
-            "FROM nc n JOIN pv ON pv.g = n.g WHERE k < 6) "
-            "SELECT g, kk.v AS k, elist[kk.v + 1] AS e "
-            "FROM nc, range(1, 7) kk(v) WHERE k = 6 "
-            "ORDER BY g, k"
-        ),
-        # Cubic oracle: the vanishing fourth difference — f(n) =
-        # 4f(n-1) - 6f(n-2) + 4f(n-3) - f(n-4) from the four seeds
-        # (engine: integer-scaled Lagrange basis weights).
-        "cubic_extrapolate": (
-            "WITH RECURSIVE c AS (SELECT doc_id, "
-            + ", ".join(
-                "cast('0x' || substr(sha256('cx" + str(j) + ":' || "
-                "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-                "- 10 AS c" + str(j) for j in range(4)) +
-            " FROM documents WHERE doc_id < 20), "
-            "seeds AS (SELECT doc_id, "
-            "c3*27 + c2*9 + c1*3 + c0 AS f3, "
-            "c3*8 + c2*4 + c1*2 + c0 AS f2, "
-            "c3 + c2 + c1 + c0 AS f1, c0 AS f0 FROM c), "
-            "rec(doc_id, x, f3, f2, f1, f0) AS ("
-            "SELECT doc_id, 3, f3, f2, f1, f0 FROM seeds "
-            "UNION ALL SELECT doc_id, x + 1, "
-            "4*f3 - 6*f2 + 4*f1 - f0, f3, f2, f1 "
-            "FROM rec WHERE x < 10) "
-            "SELECT doc_id, x, f3 AS fx FROM rec WHERE x >= 4 "
-            "ORDER BY doc_id, x"
-        ),
-        # Horner oracle: the monomial sum — power ladder x^i in a
-        # recursive CTE, terms reduced mod p before summing
-        # (engine: one JVM Horner fold).
-        "horner_mod": (
-            "WITH RECURSIVE t AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('hx:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 998244353 "
-            "AS x FROM documents WHERE doc_id < 20), "
-            "pw(doc_id, i, xp) AS ("
-            "SELECT doc_id, 0, cast(1 as bigint) FROM t "
-            "UNION ALL SELECT pw.doc_id, i + 1, "
-            "(xp * t.x) % 998244353 FROM pw "
-            "JOIN t ON t.doc_id = pw.doc_id WHERE i < 15), "
-            "terms AS (SELECT doc_id, ((cast('0x' || substr(sha256("
-            "'hc' || cast(i as varchar) || ':' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 998244353) * xp) % 998244353 AS tm FROM pw) "
-            "SELECT t.doc_id, t.x, "
-            "(SELECT sum(tm) FROM terms WHERE "
-            "terms.doc_id = t.doc_id) % 998244353 AS val "
-            "FROM t ORDER BY t.doc_id"
-        ),
-        # Parser oracle: the templates — each shape's value written
-        # directly over the same operands, never parsed (engine:
-        # generic shunting-yard + RPN).
-        "expr_parser": (
-            "WITH t AS (SELECT doc_id, "
-            + ", ".join(
-                "cast(1 + cast('0x' || substr(sha256('ex" + str(j)
-                + ":' || cast(doc_id as varchar)), 1, 8) as bigint) "
-                "% 99 as bigint) AS v" + str(j) for j in range(4)) +
-            " FROM documents WHERE doc_id < 60), "
-            "s AS (SELECT doc_id, v0, v1, v2, v3, "
-            "cast(v0 as varchar) AS a, cast(v1 as varchar) AS b, "
-            "cast(v2 as varchar) AS c, cast(v3 as varchar) AS e "
-            "FROM t) "
-            "SELECT doc_id, CASE doc_id % 4 "
-            "WHEN 0 THEN a || '+' || b || '*' || c || '-' || e "
-            "WHEN 1 THEN '(' || a || '+' || b || ')*(' || c || '-' "
-            "|| e || ')' "
-            "WHEN 2 THEN a || '*(' || b || '+' || c || '*' || e "
-            "|| ')' "
-            "ELSE a || '*' || b || '-(' || c || '+' || e || ')*' "
-            "|| a END AS expr, "
-            "CASE doc_id % 4 "
-            "WHEN 0 THEN v0 + v1 * v2 - v3 "
-            "WHEN 1 THEN (v0 + v1) * (v2 - v3) "
-            "WHEN 2 THEN v0 * (v1 + v2 * v3) "
-            "ELSE v0 * v1 - (v2 + v3) * v0 END AS val "
-            "FROM s ORDER BY doc_id"
-        ),
-        # Brzozowski oracle: RE2 via anchored full match (engine:
-        # symbolic derivatives of the regex AST).
-        "brzozowski_regex": (
-            "WITH t AS (SELECT doc_id, doc_id % 4 AS pid, "
-            + (" || ".join(
-                "CASE WHEN cast('0x' || substr(sha256('bz" + str(i)
-                + ":' || cast(doc_id as varchar)), 1, 8) as bigint) "
-                "% 2 = 0 THEN 'a' ELSE 'b' END" for i in range(10)))
-            + " AS s FROM documents WHERE doc_id < 60) "
-            "SELECT doc_id, s, pid, CASE WHEN regexp_full_match(s, "
-            "CASE pid " + " ".join(
-                f"WHEN {i} THEN '{p}'"
-                for i, p in enumerate(_BRZ_PATTERNS)) +
-            " END) THEN 1 ELSE 0 END AS matched FROM t "
-            "ORDER BY doc_id"
-        ),
-        # Linear-extension oracle: path enumeration — one
-        # admissible element per recursive iteration, duplicate
-        # prefixes kept, count rows at the full mask (engine:
-        # memoized downset DP).
-        "linear_extensions": (
-            "WITH RECURSIVE pm AS (SELECT g.a AS g, e.v AS e, "
-            "coalesce((SELECT sum(CASE WHEN cast('0x' || "
-            "substr(sha256('le:' || cast(g.a as varchar) || ':' || "
-            "cast(i.k as varchar) || ':' || cast(e.v as varchar)), "
-            "1, 8) as bigint) % 4 = 0 "
-            "THEN cast(power(2, i.k) as bigint) ELSE 0 END) "
-            "FROM range(0, 7) i(k) WHERE i.k < e.v), 0) AS pmask "
-            "FROM range(0, 8) g(a), range(0, 7) e(v)), "
-            "walk(g, mask) AS (SELECT a, 0 FROM range(0, 8) t(a) "
-            "UNION ALL SELECT w.g, "
-            "w.mask + cast(power(2, p.e) as bigint) "
-            "FROM walk w JOIN pm p ON p.g = w.g "
-            "WHERE (w.mask & cast(power(2, p.e) as bigint)) = 0 "
-            "AND (p.pmask & (127 - w.mask)) = 0) "
-            "SELECT g, count(*) AS n_ext FROM walk WHERE mask = 127 "
-            "GROUP BY g ORDER BY g"
-        ),
-        # Roman oracle: the greedy subtractive grammar — largest of
-        # the 13 value-symbol pairs per recursive step (engine:
-        # positional place-value tables).
-        "roman_numerals": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 1 + "
-            "cast('0x' || substr(sha256('rn:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 3999 "
-            "AS n FROM documents WHERE doc_id < 60), "
-            "vals(v, sym) AS (SELECT * FROM (VALUES (1000, 'M'), "
-            "(900, 'CM'), (500, 'D'), (400, 'CD'), (100, 'C'), "
-            "(90, 'XC'), (50, 'L'), (40, 'XL'), (10, 'X'), "
-            "(9, 'IX'), (5, 'V'), (4, 'IV'), (1, 'I'))), "
-            "gr(doc_id, rem, roman) AS ("
-            "SELECT doc_id, n, '' FROM t "
-            "UNION ALL SELECT doc_id, "
-            "rem - (SELECT max(v) FROM vals WHERE v <= rem), "
-            "roman || (SELECT sym FROM vals WHERE v = "
-            "(SELECT max(v2.v) FROM vals v2 WHERE v2.v <= rem)) "
-            "FROM gr WHERE rem > 0) "
-            "SELECT g.doc_id, t.n, g.roman FROM gr g "
-            "JOIN t ON t.doc_id = g.doc_id WHERE g.rem = 0 "
-            "ORDER BY g.doc_id"
-        ),
-        # Negabinary oracle: the definition — repeated division by
-        # -2 with nonnegative remainders, digits prepended in a
-        # recursive CTE (engine: the (n+M) XOR M alternating-mask
-        # trick).
-        "negabinary": (
-            "WITH RECURSIVE t AS (SELECT doc_id, cast('0x' || "
-            "substr(sha256('nb:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 1000000 AS n FROM documents "
-            "WHERE doc_id < 60), "
-            "dv(doc_id, rem, s) AS (SELECT doc_id, n, '' FROM t "
-            "UNION ALL SELECT doc_id, "
-            "-((rem - (rem & 1)) // 2), "
-            "cast(rem & 1 as varchar) || s FROM dv WHERE rem <> 0) "
-            "SELECT d.doc_id, t.n, CASE WHEN t.n = 0 THEN '0' "
-            "ELSE d.s END AS negab FROM dv d "
-            "JOIN t ON t.doc_id = d.doc_id WHERE d.rem = 0 "
-            "ORDER BY d.doc_id"
-        ),
-        # Gosper oracle: declarative — all masks with bit_count 4
-        # sorted ascending, first 100 (Gosper's hack provably
-        # enumerates in increasing numeric order).
-        "gosper_combinations": (
-            "SELECT row_number() OVER (ORDER BY m.v) AS rk, "
-            "m.v AS mask FROM range(0, 4096) m(v) "
-            "WHERE bit_count(m.v) = 4 ORDER BY rk LIMIT 100"
-        ),
-        # Eulerian oracle: the census — descents counted over all
-        # 5040 permutations of S_7 (engine: the alternating-sum
-        # closed form).
-        "eulerian_numbers": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "dc AS (SELECT p, (SELECT count(*) FROM range(1, 7) "
-            "i(v) WHERE substr(p, cast(i.v as int), 1) > "
-            "substr(p, cast(i.v as int) + 1, 1)) AS k FROM fp) "
-            "SELECT k, count(*) AS eulerian FROM dc GROUP BY k "
-            "ORDER BY k"
-        ),
-        # Langford oracle: the raw search tree — every partial
-        # placement its own recursive-CTE row, solutions = rows
-        # with all values placed (engine: memoized mask DP).
-        "langford_pairs": (
-            "WITH RECURSIVE ns AS (SELECT i AS n FROM range(4, 8) "
-            "t(i)), "
-            "walk(n, k, mask) AS (SELECT n, n, 0 FROM ns "
-            "UNION ALL SELECT w.n, w.k - 1, w.mask + "
-            "cast(power(2, p.i) as bigint) + "
-            "cast(power(2, p.i + w.k + 1) as bigint) "
-            "FROM walk w, range(0, 14) p(i) WHERE w.k > 0 "
-            "AND p.i + w.k + 1 < 2 * w.n "
-            "AND (w.mask & cast(power(2, p.i) as bigint)) = 0 "
-            "AND (w.mask & cast(power(2, p.i + w.k + 1) "
-            "as bigint)) = 0), "
-            "cnt AS (SELECT n, count(*) AS n_seq FROM walk "
-            "WHERE k = 0 GROUP BY n) "
-            "SELECT ns.n, coalesce(n_seq, 0) AS n_seq FROM ns "
-            "LEFT JOIN cnt ON cnt.n = ns.n ORDER BY ns.n"
-        ),
-        # 2-SAT oracle: truth tables — all 256 assignments checked
-        # clause by clause, a literal (v,s) is true iff the v-th
-        # bit differs from s (engine: implication-graph SCC).
-        "two_sat": (
-            "WITH cl AS (SELECT g.a AS g, j.v AS j, "
-            "cast('0x' || substr(sha256('sa1:' || "
-            "cast(g.a as varchar) || ':' || cast(j.v as varchar)), "
-            "1, 8) as bigint) % 8 AS v1, "
-            "cast('0x' || substr(sha256('sb1:' || "
-            "cast(g.a as varchar) || ':' || cast(j.v as varchar)), "
-            "1, 8) as bigint) % 2 AS s1, "
-            "cast('0x' || substr(sha256('sa2:' || "
-            "cast(g.a as varchar) || ':' || cast(j.v as varchar)), "
-            "1, 8) as bigint) % 8 AS v2, "
-            "cast('0x' || substr(sha256('sb2:' || "
-            "cast(g.a as varchar) || ':' || cast(j.v as varchar)), "
-            "1, 8) as bigint) % 2 AS s2 "
-            "FROM range(0, 12) g(a), range(0, 12) j(v)), "
-            "good AS (SELECT c.g, m.v AS m FROM range(0, 256) m(v), "
-            "cl c GROUP BY c.g, m.v HAVING count(*) FILTER ("
-            "((m.v >> v1) & 1) <> s1 OR ((m.v >> v2) & 1) <> s2) "
-            "= 12) "
-            "SELECT g.a AS g, CASE WHEN EXISTS (SELECT 1 FROM good "
-            "WHERE good.g = g.a) THEN 1 ELSE 0 END AS sat "
-            "FROM range(0, 12) g(a) ORDER BY g"
-        ),
-        # Bipartite oracle: the odd-cycle obstruction — parity
-        # reachability closure in a deduplicating recursive UNION;
-        # non-bipartite iff some vertex reaches itself oddly
-        # (engine: constructive BFS 2-coloring).
-        "bipartite_check": (
-            "WITH RECURSIVE e AS (SELECT g.a AS g, i.x AS u, "
-            "j.y AS v FROM range(0, 12) g(a), range(0, 10) i(x), "
-            "range(0, 10) j(y) WHERE i.x < j.y AND "
-            "cast('0x' || substr(sha256('bp:' || "
-            "cast(g.a as varchar) || ':' || cast(i.x as varchar) || "
-            "':' || cast(j.y as varchar)), 1, 8) as bigint) % 5 "
-            "= 0), "
-            "walk(g, s, v, par) AS ("
-            "SELECT a, n.x, n.x, 0 FROM range(0, 12) t(a), "
-            "range(0, 10) n(x) "
-            "UNION SELECT w.g, w.s, "
-            "CASE WHEN e.u = w.v THEN e.v ELSE e.u END, 1 - w.par "
-            "FROM walk w JOIN e ON e.g = w.g "
-            "AND (e.u = w.v OR e.v = w.v)) "
-            "SELECT g.a AS g, CASE WHEN EXISTS (SELECT 1 FROM walk "
-            "WHERE walk.g = g.a AND s = v AND par = 1) THEN 0 "
-            "ELSE 1 END AS bipartite FROM range(0, 12) g(a) "
-            "ORDER BY g"
-        ),
-        # MTF oracle: the window identity — after a repeat the code
-        # is the distinct count since the previous occurrence;
-        # before the first it is the initial rank shifted by the
-        # distinct prefix (engine: explicit list simulation).
-        "move_to_front": (
-            "WITH t AS (SELECT g.a AS g, p.v AS pos, "
-            "(['a','b','c','d','e','f'])[cast(cast('0x' || "
-            "substr(sha256('mt:' || cast(g.a as varchar) || ':' || "
-            "cast(p.v as varchar)), 1, 8) as bigint) % 6 as int) "
-            "+ 1] AS c FROM range(0, 8) g(a), range(0, 48) p(v)), "
-            "w AS (SELECT g, pos, c, lag(pos) OVER ("
-            "PARTITION BY g, c ORDER BY pos) AS prev FROM t) "
-            "SELECT w.g, w.pos, cast(CASE WHEN prev IS NOT NULL "
-            "THEN (SELECT count(DISTINCT t2.c) FROM t t2 "
-            "WHERE t2.g = w.g AND t2.pos > w.prev "
-            "AND t2.pos < w.pos) "
-            "ELSE (SELECT count(DISTINCT t2.c) FROM t t2 "
-            "WHERE t2.g = w.g AND t2.pos < w.pos) "
-            "+ (ascii(w.c) - ascii('a')) "
-            "- (SELECT count(DISTINCT t2.c) FROM t t2 "
-            "WHERE t2.g = w.g AND t2.pos < w.pos AND t2.c < w.c) "
-            "END as int) AS code FROM w ORDER BY g, pos"
-        ),
-        # Hanoi oracle: the iterative simulation — odd moves cycle
-        # the smallest disk, even moves make the only other legal
-        # move; pegs as disk bitmasks, top = lowest set bit
-        # (engine: the tz(k) closed form, no state).
-        "hanoi_moves": (
-            "WITH RECURSIVE sim(k, b0, b1, b2, disk, src, dst) AS ("
-            "SELECT 0, 255, 0, 0, 0, 0, 0 "
-            "UNION ALL SELECT k + 1, "
-            "b0 - CASE WHEN src = 0 THEN mv ELSE 0 END "
-            "+ CASE WHEN dst = 0 THEN mv ELSE 0 END, "
-            "b1 - CASE WHEN src = 1 THEN mv ELSE 0 END "
-            "+ CASE WHEN dst = 1 THEN mv ELSE 0 END, "
-            "b2 - CASE WHEN src = 2 THEN mv ELSE 0 END "
-            "+ CASE WHEN dst = 2 THEN mv ELSE 0 END, "
-            "cast(log2(mv) as bigint) + 1, src, dst FROM ("
-            "SELECT k, b0, b1, b2, src, dst, "
-            "CASE src WHEN 0 THEN t0 WHEN 1 THEN t1 ELSE t2 END "
-            "AS mv FROM ("
-            "SELECT k, b0, b1, b2, t0, t1, t2, "
-            "CASE WHEN (k + 1) % 2 = 1 THEN d1 "
-            "WHEN (CASE px WHEN 0 THEN t0 WHEN 1 THEN t1 ELSE t2 "
-            "END) < (CASE py WHEN 0 THEN t0 WHEN 1 THEN t1 "
-            "ELSE t2 END) THEN px ELSE py END AS src, "
-            "CASE WHEN (k + 1) % 2 = 1 THEN (d1 + 1) % 3 "
-            "WHEN (CASE px WHEN 0 THEN t0 WHEN 1 THEN t1 ELSE t2 "
-            "END) < (CASE py WHEN 0 THEN t0 WHEN 1 THEN t1 "
-            "ELSE t2 END) THEN py ELSE px END AS dst FROM ("
-            "SELECT k, b0, b1, b2, "
-            "CASE WHEN (b0 & 1) = 1 THEN 0 "
-            "WHEN (b1 & 1) = 1 THEN 1 ELSE 2 END AS d1, "
-            "CASE WHEN (b0 & 1) = 1 THEN 1 ELSE 0 END AS px, "
-            "CASE WHEN (b2 & 1) = 1 THEN 1 ELSE 2 END AS py, "
-            "CASE WHEN b0 = 0 THEN 1024 ELSE b0 & (-b0) END AS t0, "
-            "CASE WHEN b1 = 0 THEN 1024 ELSE b1 & (-b1) END AS t1, "
-            "CASE WHEN b2 = 0 THEN 1024 ELSE b2 & (-b2) END AS t2 "
-            "FROM sim WHERE k < 255))) "
-            ") SELECT k, disk, cast(src as int) AS src, "
-            "cast(dst as int) AS dst FROM sim WHERE k >= 1 "
-            "ORDER BY k"
-        ),
-        # Z oracle: the declarative scan — count positions whose
-        # 3-gram equals the pattern (engine: Z-boxes over
-        # pattern#text).
-        "z_occurrences": (
-            "WITH t0 AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 120) AS t "
-            "FROM documents WHERE doc_id < 30), "
-            "f AS (SELECT doc_id, t, substr(t, 7, 3) AS p FROM t0 "
-            "WHERE length(t) >= 20) "
-            "SELECT doc_id, p, cast((SELECT count(*) FROM "
-            "range(1, 121) i(v) WHERE i.v + 2 <= length(t) AND "
-            "substr(t, cast(i.v as int), 3) = p) as int) AS n_occ, "
-            "cast(coalesce((SELECT min(i.v) FROM range(1, 121) i(v) "
-            "WHERE i.v + 2 <= length(t) AND "
-            "substr(t, cast(i.v as int), 3) = p), 0) as int) "
-            "AS first_pos FROM f ORDER BY doc_id"
-        ),
-        # Distinct-substring oracle: enumeration — DISTINCT over
-        # every (start, length) window (engine: suffix automaton
-        # endpos-class sum).
-        "distinct_substrings": (
-            "WITH t AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 60) AS s "
-            "FROM documents WHERE doc_id < 20) "
-            "SELECT doc_id, (SELECT count(DISTINCT "
-            "substr(s, cast(i.v as int), cast(l.w as int))) "
-            "FROM range(1, 61) i(v), range(1, 61) l(w) "
-            "WHERE i.v + l.w - 1 <= length(s)) AS n_distinct "
-            "FROM t WHERE length(s) >= 20 ORDER BY doc_id"
-        ),
-        # Lyndon oracle: the smallest-suffix characterization — the
-        # last CFL factor is the lexicographically least suffix;
-        # strip and recurse (engine: Duval's streaming algorithm).
-        "lyndon_factorization": (
-            "WITH RECURSIVE t AS (SELECT doc_id, substr("
-            "regexp_replace(lower(text), '[^a-z]', '', 'g'), 1, 40) "
-            "AS s FROM documents WHERE doc_id < 20), "
-            "t2 AS (SELECT doc_id, s FROM t WHERE length(s) >= 10), "
-            "strip(doc_id, rem, rk, factor) AS ("
-            "SELECT doc_id, s, 0, '' FROM t2 "
-            "UNION ALL SELECT doc_id, "
-            "substr(rem, 1, length(rem) - length(mf)), rk + 1, mf "
-            "FROM (SELECT doc_id, rem, rk, (SELECT min(substr(rem, "
-            "cast(i.v as int))) FROM range(1, 41) i(v) "
-            "WHERE i.v <= length(rem)) AS mf FROM strip "
-            "WHERE length(rem) > 0)), "
-            "tot AS (SELECT doc_id, max(rk) AS nf FROM strip "
-            "GROUP BY doc_id) "
-            "SELECT s.doc_id, cast(tt.nf - s.rk + 1 as int) AS k, "
-            "s.factor FROM strip s JOIN tot tt "
-            "ON tt.doc_id = s.doc_id WHERE s.rk >= 1 "
-            "ORDER BY s.doc_id, k"
-        ),
-        # Booth oracle: all rotations generated, minimum string
-        # then least index (engine: Booth's doubled-string failure
-        # scan).
-        "booth_rotation": (
-            "WITH t AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 40) AS s "
-            "FROM documents WHERE doc_id < 20), "
-            "t2 AS (SELECT doc_id, s FROM t WHERE length(s) >= 10), "
-            "r AS (SELECT doc_id, s, i.v AS ri, "
-            "substr(s, cast(i.v as int) + 1) || "
-            "substr(s, 1, cast(i.v as int)) AS rot FROM t2, "
-            "range(0, 40) i(v) WHERE i.v < length(s)), "
-            "best AS (SELECT doc_id, s, rot, ri, row_number() OVER ("
-            "PARTITION BY doc_id ORDER BY rot, ri) AS rn FROM r) "
-            "SELECT doc_id, s, cast(ri as int) AS rot_idx, rot "
-            "FROM best WHERE rn = 1 ORDER BY doc_id"
-        ),
-        # Order oracle: walk the orbit — the power ladder until the
-        # first 1 (engine: divide p-1 by its prime factors while
-        # the power stays 1).
-        "multiplicative_order": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('mo:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 1011 "
-            "AS a FROM documents WHERE doc_id < 40), "
-            "pw(doc_id, a, k, v) AS ("
-            "SELECT doc_id, a, 1, a % 1013 FROM t "
-            "UNION ALL SELECT doc_id, a, k + 1, v * a % 1013 "
-            "FROM pw WHERE v <> 1 AND k < 1013) "
-            "SELECT doc_id, a, cast(k as bigint) AS ord FROM pw "
-            "WHERE v = 1 ORDER BY doc_id"
-        ),
-        # Order-histogram oracle: the census — every element's
-        # order by its power ladder (engine: phi(d) per divisor by
-        # the cyclic structure theorem).
-        "primitive_root_orders": (
-            "WITH RECURSIVE pw(g, k, v) AS ("
-            "SELECT i, 1, i % 61 FROM range(1, 61) t(i) "
-            "UNION ALL SELECT g, k + 1, v * g % 61 FROM pw "
-            "WHERE v <> 1 AND k < 61) "
-            "SELECT cast(k as bigint) AS d, count(*) AS n_elems "
-            "FROM pw WHERE v = 1 GROUP BY k ORDER BY d"
-        ),
-        # Carmichael oracle: the definition — composite n passing
-        # the Fermat congruence for every coprime base, all ~840k
-        # (n,a) pairs through square-and-multiply (engine:
-        # Korselt's squarefree + (p-1 | n-1) criterion).
-        "carmichael_korselt": (
-            "WITH RECURSIVE ns AS (SELECT i AS n FROM "
-            "range(500, 1201) t(i)), "
-            "pairs AS (SELECT n, a.v AS a FROM ns, "
-            "range(2, 1200) a(v) WHERE a.v < n "
-            "AND gcd(a.v, n) = 1), "
-            "mp(n, a, base, e, acc) AS ("
-            "SELECT n, a, a, n - 1, cast(1 as bigint) FROM pairs "
-            "UNION ALL SELECT n, a, base * base % n, e // 2, "
-            "CASE WHEN e % 2 = 1 THEN acc * base % n ELSE acc END "
-            "FROM mp WHERE e > 0), "
-            "fails AS (SELECT DISTINCT n FROM mp "
-            "WHERE e = 0 AND acc <> 1), "
-            "comp AS (SELECT n FROM ns WHERE EXISTS ("
-            "SELECT 1 FROM range(2, 40) d(j) WHERE j * j <= n "
-            "AND n % j = 0)) "
-            "SELECT n FROM comp WHERE n NOT IN "
-            "(SELECT n FROM fails) ORDER BY n"
-        ),
-        # Stirling-1 oracle: the combinatorial meaning — cycles of
-        # every S_7 permutation counted as orbit minima via a
-        # 7-step closure, histogram by cycle count (engine: rising
-        # factorial coefficient DP).
-        "stirling_first": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "reach(p, start, cur, step) AS ("
-            "SELECT p, s.i, s.i, 0 FROM fp, range(0, 7) s(i) "
-            "UNION ALL SELECT p, start, cast(substr(p, "
-            "cast(cur as int) + 1, 1) as bigint), step + 1 "
-            "FROM reach WHERE step < 7), "
-            "mins AS (SELECT p, start, min(cur) AS mn FROM reach "
-            "GROUP BY p, start), "
-            "ncyc AS (SELECT p, count(*) FILTER (mn = start) AS k "
-            "FROM mins GROUP BY p) "
-            "SELECT k, count(*) AS stirling1 FROM ncyc GROUP BY k "
-            "ORDER BY k"
-        ),
-        # Harmonic oracle: common denominator — L_n = lcm(1..n) by
-        # the gcd recurrence, numerator = sum L_n/k, one final
-        # reduction (engine: stepwise Fraction arithmetic).
-        "harmonic_exact": (
-            "WITH RECURSIVE lc(n, l) AS ("
-            "SELECT 1, cast(1 as bigint) "
-            "UNION ALL SELECT n + 1, l * (n + 1) / gcd(l, n + 1) "
-            "FROM lc WHERE n < 20), "
-            "s AS (SELECT n, l, (SELECT sum(l // k.v) FROM "
-            "range(1, 21) k(v) WHERE k.v <= n) AS sm FROM lc) "
-            "SELECT n, sm // gcd(sm, l) AS num, "
-            "l // gcd(sm, l) AS den FROM s ORDER BY n"
-        ),
-        # lcm oracle: the recurrence l(n) = l(n-1)*n/gcd (engine:
-        # product of dominant prime powers).
-        "lcm_range": (
-            "WITH RECURSIVE lc(n, l) AS ("
-            "SELECT 1, cast(1 as bigint) "
-            "UNION ALL SELECT n + 1, l * (n + 1) / gcd(l, n + 1) "
-            "FROM lc WHERE n < 40) "
-            "SELECT n, l FROM lc ORDER BY n"
-        ),
-        # Pythagorean oracle: the census — all a < b < c <= 100
-        # with a^2+b^2 = c^2 and gcd(a,b) = 1 (engine: Euclid's
-        # (m,n) parametrization).
-        "pythagorean_primitive": (
-            "SELECT a.x AS a, b.y AS b, c.z AS c "
-            "FROM range(1, 101) a(x), range(1, 101) b(y), "
-            "range(1, 101) c(z) WHERE a.x < b.y AND b.y < c.z "
-            "AND a.x * a.x + b.y * b.y = c.z * c.z "
-            "AND gcd(a.x, b.y) = 1 ORDER BY c, a"
-        ),
-        # Farey-length oracle: count reduced fractions directly
-        # with gcd() (engine: 1 + running totient sum).
-        "farey_length": (
-            "SELECT n.i AS n, 1 + (SELECT count(*) FROM "
-            "range(1, 31) a(x), range(1, 31) b(y) "
-            "WHERE a.x <= b.y AND b.y <= n.i "
-            "AND gcd(a.x, b.y) = 1) AS farey_len "
-            "FROM range(1, 31) n(i) ORDER BY n"
-        ),
-        # Binomial-transform oracle: Pascal dynamics — fold the
-        # sequence by adjacent sums n times, b_n = the head; list
-        # state, no binomial ever formed (engine: C(n,k)-weighted
-        # sum).
-        "binomial_transform": (
-            "WITH RECURSIVE a0 AS (SELECT list_transform("
-            "generate_series(0, 16), k -> cast('0x' || substr("
-            "sha256('bt:' || cast(k as varchar)), 1, 8) as bigint) "
-            "% 19 - 9) AS row), "
-            "tri(i, row) AS (SELECT 0, row FROM a0 "
-            "UNION ALL SELECT i + 1, list_transform("
-            "generate_series(1, 16 - i), k -> row[k] + row[k + 1]) "
-            "FROM tri WHERE i < 16) "
-            "SELECT i AS n, row[1] AS b FROM tri ORDER BY n"
-        ),
-        # Pisano oracle: the same pair orbit in a recursive CTE
-        # (engine: imperative iteration).
-        "pisano_period": (
-            "WITH RECURSIVE orb(m, a, b, k) AS ("
-            "SELECT i, 0, 1, 0 FROM range(2, 41) t(i) "
-            "UNION ALL SELECT m, b, (a + b) % m, k + 1 FROM orb "
-            "WHERE NOT (a = 0 AND b = 1 AND k > 0)) "
-            "SELECT m, k AS period FROM orb "
-            "WHERE a = 0 AND b = 1 AND k > 0 ORDER BY m"
-        ),
-        # Square oracle: the divisor-parity theorem — odd tau(n)
-        # iff square (engine: corrected isqrt).
-        "square_by_tau": (
-            "SELECT n.i AS n, CASE WHEN (SELECT count(*) FROM "
-            "range(1, 401) d(j) WHERE d.j <= n.i "
-            "AND n.i % d.j = 0) % 2 = 1 THEN 1 ELSE 0 END "
-            "AS is_square FROM range(1, 401) n(i) ORDER BY n"
-        ),
-        # Min-squares oracle: the census — least k in 1..4 with an
-        # explicit decomposition (engine: Legendre/Fermat
-        # closed-form classification).
-        "min_squares": (
-            "WITH sq AS (SELECT i * i AS v FROM range(1, 18) t(i)), "
-            "one AS (SELECT v AS n FROM sq), "
-            "two AS (SELECT DISTINCT a.v + b.v AS n FROM sq a, "
-            "sq b), "
-            "three AS (SELECT DISTINCT t.n + c.v AS n FROM "
-            "(SELECT n FROM two) t, sq c) "
-            "SELECT n.i AS n, CASE "
-            "WHEN EXISTS (SELECT 1 FROM one WHERE one.n = n.i) "
-            "THEN 1 "
-            "WHEN EXISTS (SELECT 1 FROM two WHERE two.n = n.i) "
-            "THEN 2 "
-            "WHEN EXISTS (SELECT 1 FROM three WHERE three.n = n.i) "
-            "THEN 3 ELSE 4 END AS min_squares "
-            "FROM range(1, 301) n(i) ORDER BY n"
-        ),
-        # Kasai oracle: declarative — suffixes sorted by ORDER BY,
-        # LCP probed as the max equal-prefix length vs the lag
-        # suffix (engine: Kasai's h-decrement invariant).
-        "kasai_lcp": (
-            "WITH t AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 50) AS s "
-            "FROM documents WHERE doc_id < 15), "
-            "t2 AS (SELECT doc_id, s FROM t WHERE length(s) >= 20), "
-            "suf AS (SELECT doc_id, i.v AS pos, "
-            "substr(s, cast(i.v as int)) AS sx FROM t2, "
-            "range(1, 51) i(v) WHERE i.v <= length(s)), "
-            "rk AS (SELECT doc_id, pos, sx, row_number() OVER ("
-            "PARTITION BY doc_id ORDER BY sx) AS rank, "
-            "lag(sx) OVER (PARTITION BY doc_id ORDER BY sx) AS prev "
-            "FROM suf) "
-            "SELECT doc_id, cast(rank as int) AS rank, "
-            "cast(pos as int) AS sa_pos, cast(coalesce(("
-            "SELECT max(l.v) FROM range(0, 51) l(v) "
-            "WHERE substr(sx, 1, cast(l.v as int)) = "
-            "substr(prev, 1, cast(l.v as int))), 0) as int) AS lcp "
-            "FROM rk ORDER BY doc_id, rank"
-        ),
-        # FM oracle: the naive scan (engine: LF-mapping interval
-        # narrowing over the BWT).
-        "fm_count": (
-            "WITH t0 AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 80) AS t "
-            "FROM documents WHERE doc_id < 15), "
-            "f AS (SELECT doc_id, t, substr(t, 11, 3) AS p FROM t0 "
-            "WHERE length(t) >= 30) "
-            "SELECT doc_id, p, cast((SELECT count(*) FROM "
-            "range(1, 81) i(v) WHERE i.v + 2 <= length(t) "
-            "AND substr(t, cast(i.v as int), 3) = p) as int) "
-            "AS n_occ FROM f ORDER BY doc_id"
-        ),
-        # Ukkonen oracle: DuckDB's C++ levenshtein() over the same
-        # deterministically mutated pair (engine: O(nd) diagonal
-        # frontiers).
-        "ukkonen_distance": (
-            "WITH t AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 30) AS a "
-            "FROM documents WHERE doc_id < 30), "
-            "t2 AS (SELECT doc_id, a FROM t WHERE length(a) >= 15), "
-            "m AS (SELECT doc_id, a, substr(a, 1, "
-            "cast(1 + doc_id % 10 as int) - 1) || substr(a, "
-            "cast(1 + doc_id % 10 as int) + 1) AS b0 FROM t2), "
-            "m2 AS (SELECT doc_id, a, substr(b0, 1, "
-            "cast(1 + doc_id % 7 as int)) || 'zz' || substr(b0, "
-            "cast(1 + doc_id % 7 as int) + 1) AS b FROM m) "
-            "SELECT doc_id, a, b, cast(levenshtein(a, b) as int) "
-            "AS dist FROM m2 ORDER BY doc_id"
-        ),
-        # Ruffini oracle: the telescoped recurrence b_{k-1} =
-        # a_k + c*b_k walked down in a recursive CTE (engine: the
-        # expanded power sums).
-        "ruffini_division": (
-            "WITH RECURSIVE cf AS (SELECT doc_id, 1 + "
-            "cast('0x' || substr(sha256('rc:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 4 AS c, ["
-            + ", ".join(
-                "cast('0x' || substr(sha256('ra" + str(j) + ":' || "
-                "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-                "- 10" for j in range(11)) +
-            "] AS aj FROM documents WHERE doc_id < 20), "
-            "rec(doc_id, k, b) AS ("
-            "SELECT doc_id, 9, aj[11] FROM cf "
-            "UNION ALL SELECT r.doc_id, r.k - 1, "
-            "cf.aj[r.k + 1] + cf.c * r.b FROM rec r "
-            "JOIN cf ON cf.doc_id = r.doc_id WHERE r.k > -1) "
-            "SELECT doc_id, cast(k as bigint) AS k, b AS coef "
-            "FROM rec ORDER BY doc_id, k"
-        ),
-        # Misra-Gries oracle: the census — count everything, keep
-        # counts > n/5 (engine: 4-counter summary + verify pass).
-        "misra_gries": (
-            "WITH st AS (SELECT g.a AS g, i.v AS i, "
-            "CASE WHEN cast('0x' || substr(sha256('mgs:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 3 > 0 THEN "
-            "cast('0x' || substr(sha256('mgh:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 4 ELSE 4 + "
-            "cast('0x' || substr(sha256('mgc:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 36 END AS v "
-            "FROM range(0, 12) g(a), range(0, 200) i(v)) "
-            "SELECT g, v, count(*) AS cnt FROM st GROUP BY g, v "
-            "HAVING count(*) > 40 ORDER BY g, v"
-        ),
-        # Bitap oracle: the substring scan (engine: Shift-And NFA
-        # in one integer).
-        "bitap_match": (
-            "WITH t0 AS (SELECT doc_id, substr(regexp_replace("
-            "lower(text), '[^a-z]', '', 'g'), 1, 80) AS t "
-            "FROM documents WHERE doc_id < 30), "
-            "f AS (SELECT doc_id, t, substr(t, 5, 5) AS p FROM t0 "
-            "WHERE length(t) >= 30) "
-            "SELECT doc_id, p, cast((SELECT count(*) FROM "
-            "range(1, 81) i(v) WHERE i.v + 4 <= length(t) "
-            "AND substr(t, cast(i.v as int), 5) = p) as int) "
-            "AS n_occ FROM f ORDER BY doc_id"
-        ),
-        # Min-max-partition oracle: enumerate all 455 cut triples
-        # over prefix sums (engine: binary search on the answer
-        # with a greedy feasibility check).
-        "min_max_partition": (
-            "WITH arr AS (SELECT g.a AS g, i.v AS i, 1 + "
-            "cast('0x' || substr(sha256('mm:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 30 AS x "
-            "FROM range(0, 12) g(a), range(0, 16) i(v)), "
-            "pre AS (SELECT g, i, sum(x) OVER (PARTITION BY g "
-            "ORDER BY i) AS p FROM arr), "
-            "tot AS (SELECT g, max(p) AS ptot FROM pre GROUP BY g) "
-            "SELECT s.g, min(greatest(s1, s2, s3, s4)) AS best "
-            "FROM (SELECT pa.g, pa.p AS s1, pb.p - pa.p AS s2, "
-            "pc.p - pb.p AS s3, t.ptot - pc.p AS s4 "
-            "FROM pre pa JOIN pre pb ON pb.g = pa.g "
-            "AND pb.i > pa.i JOIN pre pc ON pc.g = pb.g "
-            "AND pc.i > pb.i AND pc.i < 15 "
-            "JOIN tot t ON t.g = pa.g) s GROUP BY s.g ORDER BY g"
-        ),
-        # Circular-tour oracle: brute force — every start simulated
-        # all the way round with exact partial sums (engine: the
-        # reset-greedy elimination argument).
-        "circular_tour": (
-            "WITH s AS (SELECT g.a AS g, i.v AS i, "
-            "cast('0x' || substr(sha256('cg:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 15 AS gas, "
-            "cast('0x' || substr(sha256('cc:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 15 AS cost "
-            "FROM range(0, 12) g(a), range(0, 24) i(v)), "
-            "starts AS (SELECT g.a AS g, st.v AS st FROM "
-            "range(0, 12) g(a), range(0, 24) st(v)), "
-            "feas AS (SELECT st.g, st.st FROM starts st "
-            "WHERE NOT EXISTS (SELECT 1 FROM range(0, 24) k(v) "
-            "WHERE (SELECT sum(gas - cost) FROM s "
-            "WHERE s.g = st.g AND ((s.i - st.st + 24) % 24) <= k.v) "
-            "< 0)) "
-            "SELECT g.a AS g, coalesce(min(f.st), -1) AS start "
-            "FROM range(0, 12) g(a) LEFT JOIN feas f ON f.g = g.a "
-            "GROUP BY g.a ORDER BY g"
-        ),
-        # RMQ oracle: the direct min over each half-open range
-        # (engine: sparse-table doubling).
-        "sparse_table_rmq": (
-            "WITH arr AS (SELECT g.a AS g, i.v AS i, "
-            "cast('0x' || substr(sha256('rm:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 1000 AS x "
-            "FROM range(0, 10) g(a), range(0, 64) i(v)), "
-            "q AS (SELECT g.a AS g, q.v AS qid, "
-            "cast('0x' || substr(sha256('rq:' || "
-            "cast(g.a as varchar) || ':' || cast(q.v as varchar)), "
-            "1, 8) as bigint) % 63 AS l "
-            "FROM range(0, 10) g(a), range(0, 20) q(v)), "
-            "q2 AS (SELECT g, qid, l, l + 1 + "
-            "cast('0x' || substr(sha256('rr:' || "
-            "cast(g as varchar) || ':' || cast(qid as varchar)), "
-            "1, 8) as bigint) % (64 - l) AS r FROM q) "
-            "SELECT q2.g, cast(qid as int) AS qid, "
-            "cast(l as int) AS l, cast(r as int) AS r, "
-            "(SELECT min(x) FROM arr WHERE arr.g = q2.g "
-            "AND arr.i >= q2.l AND arr.i < q2.r) AS mn "
-            "FROM q2 ORDER BY g, qid"
-        ),
-        # Knight-walks oracle: raw expansion — every walk its own
-        # recursive-CTE row, grouped at the end (engine: aggregated
-        # adjacency-matrix power).
-        "knight_walks": (
-            "WITH RECURSIVE mv AS (SELECT c.v AS src, "
-            "(c.v // 5 + o.dr) * 5 + (c.v % 5 + o.dc) AS dst "
-            "FROM range(0, 25) c(v), (VALUES (1, 2), (2, 1), "
-            "(-1, 2), (-2, 1), (1, -2), (2, -1), (-1, -2), "
-            "(-2, -1)) o(dr, dc) "
-            "WHERE c.v // 5 + o.dr BETWEEN 0 AND 4 "
-            "AND c.v % 5 + o.dc BETWEEN 0 AND 4), "
-            "walk(step, cell) AS (SELECT 0, 0 "
-            "UNION ALL SELECT step + 1, mv.dst FROM walk "
-            "JOIN mv ON mv.src = walk.cell WHERE step < 6) "
-            "SELECT cell, count(*) AS cnt FROM walk WHERE step = 6 "
-            "GROUP BY cell ORDER BY cell"
-        ),
-        # Menage oracle: the census — permutations avoiding both
-        # forbidden diagonals, per n (engine: Touchard's closed
-        # form).
-        "menage_numbers": (
-            "WITH RECURSIVE perms(n, p) AS ("
-            "SELECT n.v, '' FROM range(3, 8) n(v) "
-            "UNION ALL SELECT n, p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c, i FROM range(0, 7) "
-            "t(i)) d WHERE length(p) < n AND d.i < n "
-            "AND strpos(p, d.c) = 0) "
-            "SELECT n, count(*) AS menage FROM perms "
-            "WHERE length(p) = n AND NOT EXISTS ("
-            "SELECT 1 FROM range(0, 7) i(v) WHERE i.v < n AND ("
-            "cast(substr(p, cast(i.v as int) + 1, 1) as bigint) "
-            "= i.v OR "
-            "cast(substr(p, cast(i.v as int) + 1, 1) as bigint) "
-            "= (i.v + 1) % n)) GROUP BY n ORDER BY n"
-        ),
-        # Euler-identity oracle: DISTINCT-parts binary DP in a
-        # list-state CTE (engine: ODD-parts unbounded-coin DP) —
-        # equal by Euler's partition identity.
-        "euler_partition_identity": (
-            "WITH RECURSIVE dp(k, row) AS ("
-            "SELECT 0, list_transform(generate_series(0, 40), "
-            "n -> CASE WHEN n = 0 THEN cast(1 as bigint) "
-            "ELSE cast(0 as bigint) END) "
-            "UNION ALL SELECT k + 1, "
-            "list_transform(generate_series(0, 40), n -> "
-            "row[n + 1] + CASE WHEN n - (k + 1) >= 0 "
-            "THEN row[n - (k + 1) + 1] ELSE 0 END) "
-            "FROM dp WHERE k < 40) "
-            "SELECT n.i AS n, row[cast(n.i as int) + 1] AS q "
-            "FROM dp, range(0, 41) n(i) WHERE k = 40 ORDER BY n"
-        ),
-        # 2D-walk oracle: lattice DP — step counts aggregated over
-        # (x,y) in a recursive CTE, read at the origin (engine:
-        # C(2n,n)^2 by the 45-degree decoupling).
-        "walk2d_returns": (
-            "WITH RECURSIVE w(step, x, y, c) AS ("
-            "SELECT 0, 0, 0, cast(1 as bigint) "
-            "UNION ALL SELECT step + 1, nx, ny, sum(c) FROM ("
-            "SELECT step, x + d.dx AS nx, y + d.dy AS ny, c "
-            "FROM w, (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) "
-            "d(dx, dy) WHERE step < 16) GROUP BY step, nx, ny) "
-            "SELECT step // 2 AS n, c AS returns FROM w "
-            "WHERE x = 0 AND y = 0 AND step > 0 AND step % 2 = 0 "
-            "ORDER BY n"
-        ),
-        # De Moivre oracle: the scaled Chebyshev recurrence
-        # a_n = 6a_{n-1} - 25a_{n-2} (engine: Re((3+4i)^n) by exact
-        # Gaussian-integer powers).
-        "demoivre_chebyshev": (
-            "WITH RECURSIVE ch(n, a, ap) AS ("
-            "SELECT 1, cast(3 as bigint), cast(1 as bigint) "
-            "UNION ALL SELECT n + 1, 6 * a - 25 * ap, a FROM ch "
-            "WHERE n < 20) "
-            "SELECT * FROM (SELECT 0 AS n, cast(1 as bigint) AS a "
-            "UNION ALL SELECT n, a FROM ch) ORDER BY n"
-        ),
-        # Long-cycle oracle: the census — max orbit length per
-        # permutation via the 7-step closure, histogram for k >= 4
-        # (engine: the n!/k uniqueness identity).
-        "long_cycle_perms": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "reach(p, start, cur, step) AS ("
-            "SELECT p, s.i, s.i, 0 FROM fp, range(0, 7) s(i) "
-            "UNION ALL SELECT p, start, cast(substr(p, "
-            "cast(cur as int) + 1, 1) as bigint), step + 1 "
-            "FROM reach WHERE step < 7), "
-            "orblen AS (SELECT p, start, count(DISTINCT cur) "
-            "AS olen FROM reach GROUP BY p, start), "
-            "mx AS (SELECT p, max(olen) AS k FROM orblen "
-            "GROUP BY p) "
-            "SELECT k, count(*) AS n_perms FROM mx WHERE k >= 4 "
-            "GROUP BY k ORDER BY k"
-        ),
-        # Bracelet oracle: the orbit census under the dihedral
-        # group — canonical = min over rotations of the string AND
-        # its bit-reversal (engine: dihedral Burnside closed form).
-        "bracelet_count": (
-            "WITH ns AS (SELECT i AS n, "
-            "cast(power(2, i) as bigint) AS sz FROM range(1, 15) "
-            "t(i)), "
-            "allx AS (SELECT n, sz, x.v AS x FROM ns, "
-            "range(0, 16384) x(v) WHERE x.v < sz), "
-            "rv AS (SELECT n, sz, x, (SELECT sum(((x >> i.v) & 1) "
-            "* cast(power(2, n - 1 - i.v) as bigint)) "
-            "FROM range(0, 14) i(v) WHERE i.v < n) AS xr "
-            "FROM allx), "
-            "can AS (SELECT n, x, least("
-            "(SELECT min(((x >> r.i) | (x << (n - r.i))) "
-            "& (sz - 1)) FROM range(0, 14) r(i) WHERE r.i < n), "
-            "(SELECT min(((xr >> r.i) | (xr << (n - r.i))) "
-            "& (sz - 1)) FROM range(0, 14) r(i) WHERE r.i < n)) "
-            "AS c FROM rv) "
-            "SELECT n, count(DISTINCT c) AS bracelets FROM can "
-            "GROUP BY n ORDER BY n"
-        ),
-        # Narayana oracle: the meaning — Dyck paths of semilength
-        # 7 enumerated, peaks ('UD') histogrammed (engine: the
-        # (1/7)C(7,k)C(7,k-1) product formula).
-        "narayana_numbers": (
-            "WITH RECURSIVE dyck(s, o, c) AS (SELECT '', 0, 0 "
-            "UNION ALL SELECT s || u.ch, "
-            "o + CASE WHEN u.ch = 'U' THEN 1 ELSE 0 END, "
-            "c + CASE WHEN u.ch = 'D' THEN 1 ELSE 0 END "
-            "FROM dyck, (VALUES ('U'), ('D')) u(ch) "
-            "WHERE length(s) < 14 "
-            "AND (CASE WHEN u.ch = 'U' THEN o + 1 ELSE o END) <= 7 "
-            "AND (CASE WHEN u.ch = 'D' THEN c + 1 ELSE c END) <= "
-            "(CASE WHEN u.ch = 'U' THEN o + 1 ELSE o END)), "
-            "fp AS (SELECT s FROM dyck WHERE length(s) = 14), "
-            "pk AS (SELECT s, (SELECT count(*) FROM range(1, 14) "
-            "i(v) WHERE substr(s, cast(i.v as int), 2) = 'UD') "
-            "AS k FROM fp) "
-            "SELECT cast(k as bigint) AS k, count(*) AS narayana "
-            "FROM pk GROUP BY k ORDER BY k"
-        ),
-        # Balanced-ternary oracle: divmod with carry — digit =
-        # ((n+1) mod 3) - 1, prepended in a recursive CTE (engine:
-        # the all-ones-offset conv + translate trick).
-        "balanced_ternary": (
-            "WITH RECURSIVE t AS (SELECT doc_id, cast('0x' || "
-            "substr(sha256('bt3:' || cast(doc_id as varchar)), 1, "
-            "8) as bigint) % 20000 AS n FROM documents "
-            "WHERE doc_id < 60), "
-            "dv(doc_id, rem, s) AS (SELECT doc_id, n, '' FROM t "
-            "UNION ALL SELECT doc_id, "
-            "(rem - (((rem + 1) % 3) - 1)) // 3, "
-            "CASE ((rem + 1) % 3) - 1 WHEN -1 THEN 'T' "
-            "WHEN 0 THEN '0' ELSE '1' END || s "
-            "FROM dv WHERE rem <> 0) "
-            "SELECT d.doc_id, t.n, CASE WHEN t.n = 0 THEN '0' "
-            "ELSE d.s END AS bt FROM dv d "
-            "JOIN t ON t.doc_id = d.doc_id WHERE d.rem = 0 "
-            "ORDER BY d.doc_id"
-        ),
-        # Fibonacci-gcd oracle: the direct side — F_m and F_n by
-        # the linear recurrence, then gcd() (engine: F of
-        # gcd(m,n) by fast doubling — equal by the strong
-        # divisibility identity).
-        "fib_gcd": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 1 + "
-            "cast('0x' || substr(sha256('fg1:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 80 AS m, "
-            "1 + cast('0x' || substr(sha256('fg2:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 80 AS n "
-            "FROM documents WHERE doc_id < 30), "
-            "fib(k, a, b) AS (SELECT 0, cast(0 as bigint), "
-            "cast(1 as bigint) UNION ALL SELECT k + 1, b, a + b "
-            "FROM fib WHERE k < 80) "
-            "SELECT t.doc_id, t.m, t.n, gcd(fm.a, fn.a) AS g "
-            "FROM t JOIN fib fm ON fm.k = t.m "
-            "JOIN fib fn ON fn.k = t.n ORDER BY t.doc_id"
-        ),
-        # Kaprekar oracle: the same routine with the digit sort
-        # done relationally — string_agg ORDER BY asc/desc inside
-        # the recursive step (engine: imperative digit loop).
-        "kaprekar_6174": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 1000 + "
-            "cast('0x' || substr(sha256('kp:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 9000 "
-            "AS n0 FROM documents WHERE doc_id < 40), "
-            "t2 AS (SELECT * FROM t WHERE NOT ("
-            "n0 // 1000 % 10 = n0 // 100 % 10 AND "
-            "n0 // 100 % 10 = n0 // 10 % 10 AND "
-            "n0 // 10 % 10 = n0 % 10)), "
-            "orb(doc_id, v, st) AS (SELECT doc_id, n0, 0 FROM t2 "
-            "UNION ALL SELECT doc_id, "
-            "(SELECT cast(string_agg(ch, '' ORDER BY ch DESC) "
-            "as bigint) - cast(string_agg(ch, '' ORDER BY ch ASC) "
-            "as bigint) FROM (SELECT substr(lpad("
-            "cast(v as varchar), 4, '0'), cast(i.x as int), 1) "
-            "AS ch FROM range(1, 5) i(x))), st + 1 "
-            "FROM orb WHERE v <> 6174) "
-            "SELECT o.doc_id, t2.n0, cast(o.st as int) AS steps "
-            "FROM orb o JOIN t2 ON t2.doc_id = o.doc_id "
-            "WHERE o.v = 6174 ORDER BY o.doc_id"
-        ),
-        # Squarefree oracle: the census — no square divisor >= 4
-        # (engine: Mobius inclusion-exclusion with a relational
-        # mu).
-        "squarefree_count": (
-            "SELECT n.v * 50 AS n, (SELECT count(*) FROM "
-            "range(1, 501) m(x) WHERE m.x <= n.v * 50 "
-            "AND NOT EXISTS (SELECT 1 FROM range(2, 23) d(y) "
-            "WHERE d.y * d.y <= m.x AND m.x % (d.y * d.y) = 0)) "
-            "AS q FROM range(1, 11) n(v) ORDER BY n"
-        ),
-        # Legendre-pi oracle: the census — trial-division primality
-        # for every candidate (engine: the phi(x,a) two-argument
-        # recursion).
-        "legendre_pi": (
-            "SELECT n.v * 1000 AS n, (SELECT count(*) FROM "
-            "range(2, 10001) m(x) WHERE m.x <= n.v * 1000 "
-            "AND NOT EXISTS (SELECT 1 FROM range(2, 101) d(y) "
-            "WHERE d.y * d.y <= m.x AND m.x % d.y = 0)) AS pi "
-            "FROM range(1, 11) n(v) ORDER BY n"
-        ),
-        # Calipers oracle: brute force — max squared distance over
-        # every pair (engine: hull + antipodal sweep).
-        "rotating_calipers": (
-            "WITH pts AS (SELECT DISTINCT g.a AS g, "
-            "cast('0x' || substr(sha256('rx:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 101 AS x, "
-            "cast('0x' || substr(sha256('ry:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 101 AS y "
-            "FROM range(0, 12) g(a), range(0, 20) i(v)) "
-            "SELECT a.g AS g, max((a.x - b.x) * (a.x - b.x) + "
-            "(a.y - b.y) * (a.y - b.y)) AS diam2 "
-            "FROM pts a JOIN pts b ON a.g = b.g GROUP BY a.g "
-            "ORDER BY a.g"
-        ),
-        # Rect-union oracle: pixel counting — unit cells covered by
-        # at least one rectangle (engine: inclusion-exclusion over
-        # the 63 subsets).
-        "rect_union_area": (
-            "WITH rects AS (SELECT g.a AS g, r.v AS ri, "
-            "cast('0x' || substr(sha256('rxa:' || "
-            "cast(g.a as varchar) || ':' || cast(r.v as varchar)), "
-            "1, 8) as bigint) % 30 AS x1, "
-            "cast('0x' || substr(sha256('rya:' || "
-            "cast(g.a as varchar) || ':' || cast(r.v as varchar)), "
-            "1, 8) as bigint) % 30 AS y1 "
-            "FROM range(0, 12) g(a), range(0, 6) r(v)), "
-            "r2 AS (SELECT g, ri, x1, y1, x1 + 2 + "
-            "cast('0x' || substr(sha256('rxw:' || "
-            "cast(g as varchar) || ':' || cast(ri as varchar)), "
-            "1, 8) as bigint) % 10 AS x2, y1 + 2 + "
-            "cast('0x' || substr(sha256('ryw:' || "
-            "cast(g as varchar) || ':' || cast(ri as varchar)), "
-            "1, 8) as bigint) % 10 AS y2 FROM rects) "
-            "SELECT g.a AS g, (SELECT count(*) FROM "
-            "range(0, 42) cx(i), range(0, 42) cy(j) "
-            "WHERE EXISTS (SELECT 1 FROM r2 WHERE r2.g = g.a "
-            "AND cx.i >= x1 AND cx.i < x2 AND cy.j >= y1 "
-            "AND cy.j < y2)) AS area "
-            "FROM range(0, 12) g(a) ORDER BY g"
-        ),
-        # Tower oracle: the squaring ladder — 2 squared 65536 times
-        # is exactly 2^(2^65536) = 2^^6, one squaring per
-        # recursive-CTE iteration (engine: generalized-Euler
-        # totient descent, four steps).
-        "power_tower_mod": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('pt:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 999998 "
-            "AS m FROM documents WHERE doc_id < 30), "
-            "sq(doc_id, k, x) AS ("
-            "SELECT doc_id, 0, 2 % m FROM t "
-            "UNION ALL SELECT sq.doc_id, k + 1, x * x % t.m "
-            "FROM sq JOIN t ON t.doc_id = sq.doc_id "
-            "WHERE k < 65536) "
-            "SELECT s.doc_id, t.m, s.x AS t FROM sq s "
-            "JOIN t ON t.doc_id = s.doc_id WHERE s.k = 65536 "
-            "ORDER BY s.doc_id"
-        ),
-        # det-mod-2 oracle: the sign-free Leibniz sum — parity of
-        # all-ones permutation selections over S_7 (engine: XOR
-        # Gaussian elimination on bitset rows).
-        "det_mod2": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "good AS (SELECT g.a AS g, p FROM range(0, 12) g(a), "
-            "fp WHERE NOT EXISTS (SELECT 1 FROM range(0, 7) i(v) "
-            "WHERE cast('0x' || substr(sha256('dm:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar) "
-            "|| ':' || substr(p, cast(i.v as int) + 1, 1)), 1, 8) "
-            "as bigint) % 2 = 0)) "
-            "SELECT g.a AS g, cast((SELECT count(*) FROM good "
-            "WHERE good.g = g.a) % 2 as int) AS det2 "
-            "FROM range(0, 12) g(a) ORDER BY g"
-        ),
-        # Continuant oracle: the full Leibniz expansion — inversion
-        # parity for the sign, tridiagonal entries by offset CASE
-        # (engine: the three-term continuant recurrence).
-        "continuant_det": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "sg AS (SELECT p, (SELECT count(*) FROM range(0, 7) "
-            "u(a2), range(0, 7) w(b2) WHERE u.a2 < w.b2 AND "
-            "substr(p, cast(u.a2 as int) + 1, 1) > "
-            "substr(p, cast(w.b2 as int) + 1, 1)) % 2 AS inv "
-            "FROM fp), "
-            "ev AS (SELECT g.a AS g, fp.p, i.v AS i, "
-            "cast(substr(fp.p, cast(i.v as int) + 1, 1) as bigint) "
-            "AS j FROM range(0, 12) g(a), fp, range(0, 7) i(v)), "
-            "e2 AS (SELECT g, p, CASE j - i "
-            "WHEN 0 THEN cast('0x' || substr(sha256('ca:' || "
-            "cast(g as varchar) || ':' || cast(i as varchar)), 1, "
-            "8) as bigint) % 9 - 4 "
-            "WHEN 1 THEN cast('0x' || substr(sha256('cc:' || "
-            "cast(g as varchar) || ':' || cast(i as varchar)), 1, "
-            "8) as bigint) % 9 - 4 "
-            "WHEN -1 THEN cast('0x' || substr(sha256('cb:' || "
-            "cast(g as varchar) || ':' || cast(i - 1 as varchar)), "
-            "1, 8) as bigint) % 9 - 4 "
-            "ELSE 0 END AS e FROM ev), "
-            "pr AS (SELECT g, p, cast(product(e) as bigint) "
-            "AS prod FROM e2 GROUP BY g, p) "
-            "SELECT pr.g, sum(CASE WHEN sg.inv = 0 THEN prod "
-            "ELSE -prod END) AS det FROM pr "
-            "JOIN sg ON sg.p = pr.p GROUP BY pr.g ORDER BY pr.g"
-        ),
-        # Ryser oracle: the definition — all 720 permutation
-        # products summed (engine: Ryser's subset
-        # inclusion-exclusion).
-        "ryser_permanent": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 6) t(i)) "
-            "d WHERE length(p) < 6 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 6), "
-            "ev AS (SELECT g.a AS g, fp.p, i.v AS i, "
-            "cast('0x' || substr(sha256('py:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar) "
-            "|| ':' || substr(fp.p, cast(i.v as int) + 1, 1)), 1, "
-            "8) as bigint) % 5 AS e "
-            "FROM range(0, 10) g(a), fp, range(0, 6) i(v)), "
-            "pr AS (SELECT g, p, cast(product(e) as bigint) "
-            "AS prod FROM ev GROUP BY g, p) "
-            "SELECT g, sum(prod) AS perm FROM pr GROUP BY g "
-            "ORDER BY g"
-        ),
-        # Matching oracle: enumeration — every partial injection
-        # built digit by digit with a '6' unmatched sentinel, max
-        # matched count (engine: Kuhn's augmenting paths).
-        "bipartite_matching": (
-            "WITH RECURSIVE asg(g, p) AS ("
-            "SELECT a, '' FROM range(0, 12) t(a) "
-            "UNION ALL SELECT a.g, a.p || d.c FROM asg a, "
-            "(SELECT cast(i as varchar) AS c, i FROM range(0, 7) "
-            "t(i)) d WHERE length(a.p) < 6 AND (d.i = 6 OR ("
-            "strpos(a.p, d.c) = 0 AND cast('0x' || substr(sha256("
-            "'bm:' || cast(a.g as varchar) || ':' || "
-            "cast(length(a.p) as varchar) || ':' || "
-            "cast(d.i as varchar)), 1, 8) as bigint) % 3 = 0))) "
-            "SELECT g, cast(max(6 - (length(p) - "
-            "length(replace(p, '6', '')))) as int) AS msize "
-            "FROM asg WHERE length(p) = 6 GROUP BY g ORDER BY g"
-        ),
-        # Weighted-interval oracle: all 16384 masks checked against
-        # the precomputed conflict pairs, max weight (engine:
-        # predecessor DP with bisection).
-        "weighted_intervals": (
-            "WITH iv AS (SELECT g.a AS g, i.v AS i, "
-            "cast('0x' || substr(sha256('wis:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 50 AS s, "
-            "1 + cast('0x' || substr(sha256('wil:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 15 AS len, "
-            "1 + cast('0x' || substr(sha256('wiw:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 20 AS w "
-            "FROM range(0, 10) g(a), range(0, 14) i(v)), "
-            "iv2 AS (SELECT g, i, s, s + len AS e, w FROM iv), "
-            "confl AS (SELECT a.g, a.i AS i1, b.i AS i2 "
-            "FROM iv2 a JOIN iv2 b ON a.g = b.g AND a.i < b.i "
-            "AND a.s < b.e AND b.s < a.e), "
-            "mw AS (SELECT g.a AS g, m.v AS mask FROM "
-            "range(0, 10) g(a), range(0, 16384) m(v) "
-            "WHERE NOT EXISTS (SELECT 1 FROM confl c "
-            "WHERE c.g = g.a AND (m.v >> c.i1) & 1 = 1 "
-            "AND (m.v >> c.i2) & 1 = 1)), "
-            "ws AS (SELECT mw.g, mw.mask, sum(iv2.w) AS tw "
-            "FROM mw JOIN iv2 ON iv2.g = mw.g "
-            "AND (mw.mask >> iv2.i) & 1 = 1 GROUP BY 1, 2) "
-            "SELECT g.a AS g, coalesce((SELECT max(tw) FROM ws "
-            "WHERE ws.g = g.a), 0) AS best "
-            "FROM range(0, 10) g(a) ORDER BY g"
-        ),
-        # Koenig oracle: brute minimum cover — all 4096 vertex
-        # subsets (left bits 0-5, right bits 6-11) checked to
-        # cover every edge, min popcount (engine: max matching =
-        # min cover by Koenig's theorem).
-        "koenig_cover": (
-            "WITH e AS (SELECT g.a AS g, i.v AS u, j.w AS v "
-            "FROM range(0, 12) g(a), range(0, 6) i(v), "
-            "range(0, 6) j(w) WHERE cast('0x' || substr(sha256("
-            "'kc:' || cast(g.a as varchar) || ':' || "
-            "cast(i.v as varchar) || ':' || cast(j.w as varchar)), "
-            "1, 8) as bigint) % 3 = 0) "
-            "SELECT g.a AS g, cast((SELECT min(bit_count(m.v)) "
-            "FROM range(0, 4096) m(v) WHERE NOT EXISTS ("
-            "SELECT 1 FROM e WHERE e.g = g.a "
-            "AND (m.v >> e.u) & 1 = 0 "
-            "AND (m.v >> (6 + e.v)) & 1 = 0)) as int) "
-            "AS cover_size FROM range(0, 12) g(a) ORDER BY g"
-        ),
-        # Bell oracle: restricted growth strings — digit <= running
-        # max + 1, count per length (engine: the Aitken triangle).
-        "bell_numbers": (
-            "WITH RECURSIVE rgs(s, mx) AS (SELECT '0', 0 "
-            "UNION ALL SELECT s || cast(d.v as varchar), "
-            "greatest(mx, d.v) FROM rgs, range(0, 8) d(v) "
-            "WHERE length(s) < 8 AND d.v <= mx + 1) "
-            "SELECT length(s) AS n, count(*) AS bell FROM rgs "
-            "GROUP BY length(s) ORDER BY n"
-        ),
-        # Fubini oracle: the census — functions with gap-free image
-        # (ordered set partitions), counted per length (engine: the
-        # first-block binomial recurrence).
-        "fubini_numbers": (
-            "WITH RECURSIVE fn(s, mx) AS (SELECT '', 0 "
-            "UNION ALL SELECT s || cast(d.v as varchar), "
-            "greatest(mx, d.v) FROM fn, range(1, 7) d(v) "
-            "WHERE length(s) < 6), "
-            "ok AS (SELECT s, mx FROM fn WHERE length(s) >= 1 "
-            "AND NOT EXISTS (SELECT 1 FROM range(1, 7) x(v) "
-            "WHERE x.v <= mx AND strpos(s, cast(x.v as varchar)) "
-            "= 0)) "
-            "SELECT length(s) AS n, count(*) AS fubini FROM ok "
-            "GROUP BY length(s) ORDER BY n"
-        ),
-        # Catalan-parity oracle: Segner's convolution mod 2, the
-        # row carried as a list (engine: the (n+1)&n bit test).
-        "catalan_parity": (
-            "WITH RECURSIVE seg(k, lst) AS ("
-            "SELECT 0, [cast(1 as bigint)] "
-            "UNION ALL SELECT k + 1, list_append(lst, "
-            "list_sum(list_transform(generate_series(0, k), "
-            "i -> lst[i + 1] * lst[k - i + 1])) % 2) "
-            "FROM seg WHERE k < 60) "
-            "SELECT n.i AS n, cast(lst[cast(n.i as int) + 1] "
-            "as int) AS odd FROM seg, range(0, 61) n(i) "
-            "WHERE k = 60 ORDER BY n"
-        ),
-        # Factorial-zeros oracle: compute the factorial in HUGEINT,
-        # count zeros by divisibility against string-built powers
-        # of ten (engine: Legendre's base-5 valuation).
-        "factorial_zeros": (
-            "WITH RECURSIVE fc(n, f) AS ("
-            "SELECT 1, cast(1 as hugeint) "
-            "UNION ALL SELECT n + 1, f * (n + 1) FROM fc "
-            "WHERE n < 33) "
-            "SELECT n, (SELECT max(k.v) FROM range(0, 16) k(v) "
-            "WHERE f % cast('1' || repeat('0', cast(k.v as int)) "
-            "as hugeint) = 0) AS tz FROM fc ORDER BY n"
-        ),
-        # Calkin-Wilf oracle: the tree built directly by index —
-        # children 2k and 2k+1 (engine: Newman's single recurrence
-        # walking the tree breadth-first).
-        "calkin_wilf": (
-            "WITH RECURSIVE cw(k, num, den) AS ("
-            "SELECT 1, cast(1 as bigint), cast(1 as bigint) "
-            "UNION ALL SELECT c.k * 2 + s.b, "
-            "CASE WHEN s.b = 0 THEN c.num ELSE c.num + c.den END, "
-            "CASE WHEN s.b = 0 THEN c.num + c.den ELSE c.den END "
-            "FROM cw c, (VALUES (0), (1)) s(b) WHERE c.k < 32) "
-            "SELECT k, num, den FROM cw WHERE k <= 63 ORDER BY k"
-        ),
-        # Perrin oracle: the same plate-spinning recurrence in a
-        # recursive CTE with a divisor-existence primality column
-        # (engine: imperative loop + trial division).
-        "perrin_test": (
-            "WITH RECURSIVE pr(n, k, p0, p1, p2) AS ("
-            "SELECT i, 2, 3 % i, 0, 2 % i FROM range(2, 121) t(i) "
-            "UNION ALL SELECT n, k + 1, p1, p2, (p0 + p1) % n "
-            "FROM pr WHERE k < n) "
-            "SELECT n, p2 AS pn_mod, CASE WHEN NOT EXISTS ("
-            "SELECT 1 FROM range(2, 12) d(j) WHERE j * j <= n "
-            "AND n % j = 0) THEN 1 ELSE 0 END AS is_prime "
-            "FROM pr WHERE k = n ORDER BY n"
-        ),
-        # Erdos-Gallai oracle: Havel-Hakimi — strip the max degree,
-        # decrement the next d1 entries, re-sort, repeat on a list
-        # state; fail on a negative (engine: the Erdos-Gallai
-        # inequality battery, no construction).
-        "erdos_gallai": (
-            "WITH RECURSIVE degs AS (SELECT g.a AS g, i.v AS i, "
-            "cast('0x' || substr(sha256('eg:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 8 AS d0 "
-            "FROM range(0, 20) g(a), range(0, 8) i(v)), "
-            "tot AS (SELECT g, sum(d0) AS tot FROM degs GROUP BY g), "
-            "fixed AS (SELECT d.g, d.i, CASE WHEN t.tot % 2 = 1 "
-            "AND d.i = 0 THEN CASE WHEN d.d0 < 7 THEN d.d0 + 1 "
-            "ELSE d.d0 - 1 END ELSE d.d0 END AS d "
-            "FROM degs d JOIN tot t ON t.g = d.g), "
-            "lst0 AS (SELECT g, list_reverse_sort(list(d)) AS lst "
-            "FROM fixed GROUP BY g), "
-            "hh(g, lst, state) AS (SELECT g, lst, 0 FROM lst0 "
-            "UNION ALL SELECT g, "
-            "CASE WHEN h1 = 0 OR h1 > len(lst) - 1 THEN lst "
-            "ELSE list_reverse_sort(list_transform("
-            "lst[2:cast(h1 as int)+1], x -> x - 1) || "
-            "lst[cast(h1 as int)+2:len(lst)]) END, "
-            "CASE WHEN h1 = 0 THEN 1 "
-            "WHEN h1 > len(lst) - 1 THEN 2 "
-            "WHEN list_min(list_transform("
-            "lst[2:cast(h1 as int)+1], x -> x - 1)) < 0 THEN 2 "
-            "ELSE 0 END "
-            "FROM (SELECT g, lst, lst[1] AS h1 FROM hh "
-            "WHERE state = 0)) "
-            "SELECT g, cast(CASE WHEN state = 1 THEN 1 ELSE 0 END "
-            "as int) AS graphical FROM hh WHERE state > 0 "
-            "ORDER BY g"
-        ),
-        # Prufer oracle: the same leaf-matching bijection replayed
-        # relationally — sequence and degree vector as list states
-        # (engine: kernel decoder).
-        "prufer_decode": (
-            "WITH RECURSIVE sq AS (SELECT g.a AS g, "
-            "list(cast('0x' || substr(sha256('pf:' || "
-            "cast(g.a as varchar) || ':' || cast(i.v as varchar)), "
-            "1, 8) as bigint) % 8 ORDER BY i.v) AS seq "
-            "FROM range(0, 12) g(a), range(0, 6) i(v) "
-            "GROUP BY g.a), "
-            "dg AS (SELECT g, seq, "
-            "list_transform(generate_series(0, 7), w -> 1 + "
-            "len(list_filter(seq, x -> x = w))) AS deg FROM sq), "
-            "st(g, seq, deg, k, u, v) AS ("
-            "SELECT g, seq, deg, 0, 0, 0 FROM dg "
-            "UNION ALL SELECT g, seq[2:len(seq)], "
-            "list_transform(generate_series(0, 7), w -> "
-            "deg[cast(w as int) + 1] - CASE WHEN w = leaf THEN 1 "
-            "WHEN w = hd THEN 1 ELSE 0 END), "
-            "k + 1, cast(least(leaf, hd) as int), "
-            "cast(greatest(leaf, hd) as int) FROM ("
-            "SELECT g, seq, deg, k, seq[1] AS hd, "
-            "(SELECT min(w.v) FROM range(0, 8) w(v) "
-            "WHERE deg[cast(w.v as int) + 1] = 1) AS leaf "
-            "FROM st WHERE len(seq) > 0)), "
-            "fin AS (SELECT g, k + 1 AS k, "
-            "cast((SELECT min(w.v) FROM range(0, 8) w(v) "
-            "WHERE deg[cast(w.v as int) + 1] = 1) as int) AS u, "
-            "cast((SELECT max(w.v) FROM range(0, 8) w(v) "
-            "WHERE deg[cast(w.v as int) + 1] = 1) as int) AS v "
-            "FROM st WHERE len(seq) = 0 AND k = 6) "
-            "SELECT g, cast(k as int) AS k, u, v FROM ("
-            "SELECT g, k, u, v FROM st WHERE k >= 1 "
-            "UNION ALL SELECT g, k, u, v FROM fin) "
-            "ORDER BY g, k"
-        ),
-        # Max-submatrix oracle: every rectangle scored by a range
-        # join + group (engine: 2D Kadane row-pair collapse).
-        "max_submatrix": (
-            "WITH a AS (SELECT g.a AS g, r.v AS r, c.w AS c, "
-            "cast('0x' || substr(sha256('k2:' || "
-            "cast(g.a as varchar) || ':' || cast(r.v as varchar) "
-            "|| ':' || cast(c.w as varchar)), 1, 8) as bigint) "
-            "% 21 - 10 AS x FROM range(0, 10) g(a), "
-            "range(0, 8) r(v), range(0, 8) c(w)), "
-            "rects AS (SELECT r1.v AS r1, r2.v AS r2, c1.v AS c1, "
-            "c2.v AS c2 FROM range(0, 8) r1(v), range(0, 8) r2(v), "
-            "range(0, 8) c1(v), range(0, 8) c2(v) "
-            "WHERE r1.v <= r2.v AND c1.v <= c2.v), "
-            "sums AS (SELECT a.g, r1, r2, c1, c2, sum(a.x) AS s "
-            "FROM rects JOIN a ON a.r BETWEEN r1 AND r2 "
-            "AND a.c BETWEEN c1 AND c2 GROUP BY 1, 2, 3, 4, 5) "
-            "SELECT g, max(s) AS best FROM sums GROUP BY g "
-            "ORDER BY g"
-        ),
-        # Shamir oracle: the ground truth — rebuild the hash
-        # coefficients and read f(0) directly, never touching a
-        # share (engine: Lagrange-at-zero from the shares only).
-        "shamir_reconstruct": (
-            "SELECT doc_id, cast('0x' || substr(sha256('sh0:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 257 "
-            "AS secret FROM documents WHERE doc_id < 20 "
-            "ORDER BY doc_id"
-        ),
-        # Vandermonde oracle: the convolution side — sum_i C(m,i)
-        # C(n,k-i) (engine: the single binomial C(m+n,k)).
-        "vandermonde_identity": (
-            "WITH fl AS (SELECT ["
-            + ", ".join(str(__import__('math').factorial(x))
-                        for x in range(25)) +
-            "] AS f), "
-            "t AS (SELECT doc_id, 1 + cast('0x' || substr(sha256("
-            "'vm:' || cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 12 AS m, 1 + cast('0x' || substr(sha256('vn:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS n "
-            "FROM documents WHERE doc_id < 30), "
-            "t2 AS (SELECT doc_id, m, n, cast('0x' || substr("
-            "sha256('vk:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % (m + n + 1) AS k FROM t) "
-            "SELECT t2.doc_id, t2.m, t2.n, t2.k, "
-            "sum((f[cast(t2.m as int) + 1] // "
-            "(f[cast(i.v as int) + 1] * "
-            "f[cast(t2.m - i.v as int) + 1])) * "
-            "(f[cast(t2.n as int) + 1] // "
-            "(f[cast(t2.k - i.v as int) + 1] * "
-            "f[cast(t2.n - (t2.k - i.v) as int) + 1]))) AS v "
-            "FROM t2, fl, range(0, 25) i(v) "
-            "WHERE i.v <= least(t2.m, t2.k) AND t2.k - i.v <= t2.n "
-            "GROUP BY 1, 2, 3, 4 ORDER BY t2.doc_id"
-        ),
-        # Rencontres oracle: the census — fixed points per
-        # enumerated permutation of S_7 (engine: C(7,k) times the
-        # subfactorial).
-        "rencontres": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "fx AS (SELECT p, (SELECT count(*) FROM range(0, 7) "
-            "i(v) WHERE cast(substr(p, cast(i.v as int) + 1, 1) "
-            "as bigint) = i.v) AS k FROM fp) "
-            "SELECT k, count(*) AS rencontres FROM fx GROUP BY k "
-            "ORDER BY k"
-        ),
-        # Perm-order oracle: the census — lcm of every
-        # permutation's orbit lengths via a list_reduce gcd fold
-        # (engine: cycle-index class counting over the 15
-        # partitions of 7).
-        "perm_orders": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) "
-            "d WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "fp AS (SELECT p FROM perms WHERE length(p) = 7), "
-            "reach(p, start, cur, step) AS ("
-            "SELECT p, s.i, s.i, 0 FROM fp, range(0, 7) s(i) "
-            "UNION ALL SELECT p, start, cast(substr(p, "
-            "cast(cur as int) + 1, 1) as bigint), step + 1 "
-            "FROM reach WHERE step < 7), "
-            "orblen AS (SELECT p, start, count(DISTINCT cur) "
-            "AS olen FROM reach GROUP BY p, start), "
-            "ords AS (SELECT p, list_reduce(list(DISTINCT olen), "
-            "(a, b) -> a * b // gcd(a, b)) AS ord FROM orblen "
-            "GROUP BY p) "
-            "SELECT ord, count(*) AS n_perms FROM ords "
-            "GROUP BY ord ORDER BY ord"
-        ),
-        # Cayley-Menger oracle: the scalar triple product straight
-        # from the coordinates — 288 V^2 = 8 * ((b-a).((c-a)x(d-a)))^2
-        # (engine: the bordered distance determinant).
-        "cayley_menger": (
-            "WITH p AS (SELECT g.a AS g, i.v AS i, "
-            + ", ".join(
-                "cast('0x' || substr(sha256('cm:' || "
-                "cast(g.a as varchar) || ':' || "
-                "cast(i.v as varchar) || ':" + str(c) + "'), 1, 8) "
-                "as bigint) % 21 AS " + ax
-                for c, ax in enumerate("xyz")) +
-            " FROM range(0, 20) g(a), range(0, 4) i(v)), "
-            "w AS (SELECT g, "
-            + ", ".join(
-                f"max(CASE WHEN i = {i} THEN {ax} END) AS {ax}{i}"
-                for i in range(4) for ax in "xyz") +
-            " FROM p GROUP BY g), "
-            "v AS (SELECT g, x1 - x0 AS bx, y1 - y0 AS by, "
-            "z1 - z0 AS bz, x2 - x0 AS cx, y2 - y0 AS cy, "
-            "z2 - z0 AS cz, x3 - x0 AS dx, y3 - y0 AS dy, "
-            "z3 - z0 AS dz FROM w), "
-            "tr AS (SELECT g, bx * (cy * dz - cz * dy) "
-            "+ by * (cz * dx - cx * dz) "
-            "+ bz * (cx * dy - cy * dx) AS t FROM v) "
-            "SELECT g, 8 * t * t AS v288 FROM tr ORDER BY g"
-        ),
-        # Quaternion oracle: matrices first — the two integer-scaled
-        # rotation matrices multiplied entry by entry (engine:
-        # Hamilton product first; equal by the SO(3) covering
-        # homomorphism).
-        "quaternion_rotation": _quat_oracle_sql(),
-        # Dedekind oracle: reciprocity — compute s(k,h) by ITS
-        # sawtooth definition and recover 12hk*s(h,k) from the 1892
-        # law (engine: the direct sawtooth sum for (h,k)).
-        "dedekind_reciprocity": (
-            "WITH t AS (SELECT doc_id, 2 + cast('0x' || substr("
-            "sha256('dk:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % 59 AS k FROM documents WHERE doc_id < 40), "
-            "t2 AS (SELECT doc_id, k, 1 + cast('0x' || substr("
-            "sha256('dh:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % (k - 1) AS h FROM t), "
-            "cop AS (SELECT * FROM t2 WHERE gcd(h, k) = 1), "
-            "tp AS (SELECT doc_id, h, k, sum(CASE WHEN "
-            "(k * i.v) % h = 0 THEN 0 ELSE (2 * i.v - h) * "
-            "(2 * ((k * i.v) % h) - h) END) AS tpr FROM cop, "
-            "range(1, 61) i(v) WHERE i.v < h GROUP BY 1, 2, 3), "
-            "full_t AS (SELECT c.doc_id, c.h, c.k, "
-            "coalesce(tp.tpr, 0) AS tpr FROM cop c "
-            "LEFT JOIN tp ON tp.doc_id = c.doc_id) "
-            "SELECT doc_id, h, k, (h * h + k * k + 1 - 3 * h * k) "
-            "- (3 * k * tpr) // h AS s12hk FROM full_t "
-            "ORDER BY doc_id"
-        ),
-        # Gauss-lattice oracle: brute force over the coefficient
-        # box [-25,25]^2 (sufficient given |det| >= 100) (engine:
-        # Gauss's swap-and-reduce descent).
-        "gauss_lattice": (
-            "WITH b AS (SELECT g.a AS g, "
-            + ", ".join(
-                "cast('0x' || substr(sha256('" + nm + ":' || "
-                "cast(g.a as varchar)), 1, 8) as bigint) % 61 - 30 "
-                "AS " + nm[1:] for nm in ("lu1", "lu2", "lv1", "lv2"))
-            + " FROM range(0, 40) g(a)), "
-            "f AS (SELECT * FROM b "
-            "WHERE abs(u1 * v2 - u2 * v1) >= 100) "
-            "SELECT g, (SELECT min((a.x * u1 + c.y * v1) * "
-            "(a.x * u1 + c.y * v1) + (a.x * u2 + c.y * v2) * "
-            "(a.x * u2 + c.y * v2)) FROM range(-25, 26) a(x), "
-            "range(-25, 26) c(y) WHERE NOT (a.x = 0 AND c.y = 0)) "
-            "AS short2 FROM f ORDER BY g"
-        ),
-        # Hockey-stick oracle: the diagonal sum — one binomial per
-        # term from HUGEINT factorials (engine: the single
-        # telescoped binomial C(n+1,r+1)).
-        "hockey_stick": (
-            "WITH fl AS (SELECT ["
-            + ", ".join(str(__import__('math').factorial(x))
-                        for x in range(20)) +
-            "] AS f), "
-            "t AS (SELECT doc_id, cast('0x' || substr(sha256("
-            "'hr:' || cast(doc_id as varchar)), 1, 8) as bigint) "
-            "% 10 AS r FROM documents WHERE doc_id < 30), "
-            "t2 AS (SELECT doc_id, r, r + cast('0x' || substr("
-            "sha256('hn:' || cast(doc_id as varchar)), 1, 8) "
-            "as bigint) % (19 - r) AS n FROM t) "
-            "SELECT t2.doc_id, t2.r, t2.n, cast(sum("
-            "f[cast(i.v as int) + 1] // (f[cast(t2.r as int) + 1] "
-            "* f[cast(i.v - t2.r as int) + 1])) as bigint) AS v "
-            "FROM t2, fl, range(0, 20) i(v) "
-            "WHERE i.v >= t2.r AND i.v <= t2.n "
-            "GROUP BY 1, 2, 3 ORDER BY t2.doc_id"
-        ),
-        # Hyperbola oracle: the census — every divisor pair counted
-        # directly (engine: the 2*sum - isqrt^2 symmetry).
-        "dirichlet_hyperbola": (
-            "SELECT n.v * 100 AS n, (SELECT count(*) FROM "
-            "range(1, 1001) m(x), range(1, 1001) d(y) "
-            "WHERE m.x <= n.v * 100 AND d.y <= m.x "
-            "AND m.x % d.y = 0) AS dsum "
-            "FROM range(1, 11) n(v) ORDER BY n"
-        ),
-        # Motzkin oracle: the path census — U/D/F paths that never
-        # dip below the axis, per length (engine: the
-        # binomial-Catalan convolution).
-        "motzkin_numbers": (
-            "WITH RECURSIVE mz(len, ht) AS (SELECT 0, 0 "
-            "UNION ALL SELECT len + 1, ht + s.dh FROM mz, "
-            "(VALUES (1), (0), (-1)) s(dh) "
-            "WHERE len < 10 AND ht + s.dh >= 0) "
-            "SELECT len AS n, count(*) AS motzkin FROM mz "
-            "WHERE ht = 0 GROUP BY len ORDER BY n"
-        ),
-        # Schroder oracle: the royal-path census — U, D and
-        # double-F steps, never below the axis, length 2n back to
-        # height 0 (engine: the holonomic three-term recurrence).
-        "schroder_numbers": (
-            "WITH RECURSIVE sp(len, ht) AS (SELECT 0, 0 "
-            "UNION ALL SELECT len + s.dl, ht + s.dh FROM sp, "
-            "(VALUES (1, 1), (1, -1), (2, 0)) s(dl, dh) "
-            "WHERE len + s.dl <= 16 AND ht + s.dh >= 0) "
-            "SELECT len // 2 AS n, count(*) AS schroder FROM sp "
-            "WHERE ht = 0 AND len % 2 = 0 GROUP BY len ORDER BY n"
-        ),
-        # Delannoy oracle: king paths (E, N, NE) to (n, n),
-        # aggregated per lattice point (engine: the sum of squared
-        # binomials times powers of two).
-        "delannoy_numbers": (
-            "WITH RECURSIVE kp(x, y, c) AS ("
-            "SELECT 0, 0, cast(1 as bigint) "
-            "UNION ALL SELECT nx, ny, sum(c) FROM ("
-            "SELECT x + s.dx AS nx, y + s.dy AS ny, c FROM kp, "
-            "(VALUES (1, 0), (0, 1), (1, 1)) s(dx, dy) "
-            "WHERE x + s.dx <= 8 AND y + s.dy <= 8 "
-            "AND (x + s.dx > x OR y + s.dy > y)) "
-            "GROUP BY nx, ny) "
-            "SELECT x AS n, sum(c) AS delannoy FROM kp "
-            "WHERE x = y GROUP BY x ORDER BY n"
-        ),
-        # Sylvester oracle: the quadratic recurrence a' = a^2-a+1
-        # (engine: the running-product form; equal by Sylvester's
-        # identity).
-        "sylvester_sequence": (
-            "WITH RECURSIVE sy(n, a) AS ("
-            "SELECT 0, cast(2 as bigint) "
-            "UNION ALL SELECT n + 1, a * a - a + 1 FROM sy "
-            "WHERE n < 6) SELECT n, a FROM sy ORDER BY n"
-        ),
-        # Cornacchia oracle: brute search over a <= b (engine: the
-        # Hermite-Serret Euclid descent from sqrt(-1) mod p).
-        "cornacchia_two_square": (
-            "WITH pr AS (SELECT i AS p FROM range(5, 600) t(i) "
-            "WHERE i % 4 = 1 AND NOT EXISTS ("
-            "SELECT 1 FROM range(2, 25) d(j) WHERE j * j <= i "
-            "AND i % j = 0)) "
-            "SELECT p, a.x AS a, cast(sqrt(p - a.x * a.x) "
-            "as bigint) AS b FROM pr, range(1, 18) a(x) "
-            "WHERE a.x * a.x * 2 <= p AND "
-            "cast(sqrt(p - a.x * a.x) as bigint) * "
-            "cast(sqrt(p - a.x * a.x) as bigint) = p - a.x * a.x "
-            "ORDER BY p"
-        ),
-        # Self-conjugate oracle: the hook bijection — partitions
-        # into DISTINCT ODD parts, binary-choice list DP over the
-        # odd sizes (engine: direct transpose-equality census).
-        "self_conjugate_partitions": (
-            "WITH RECURSIVE dp(k, row) AS ("
-            "SELECT 0, list_transform(generate_series(0, 20), "
-            "n -> CASE WHEN n = 0 THEN cast(1 as bigint) "
-            "ELSE cast(0 as bigint) END) "
-            "UNION ALL SELECT k + 1, "
-            "list_transform(generate_series(0, 20), n -> "
-            "row[n + 1] + CASE WHEN n - (2 * k + 1) >= 0 "
-            "THEN row[n - (2 * k + 1) + 1] ELSE 0 END) "
-            "FROM dp WHERE k < 10) "
-            "SELECT n.i AS n, row[cast(n.i as int) + 1] "
-            "AS n_selfconj FROM dp, range(1, 21) n(i) "
-            "WHERE k = 10 ORDER BY n"
-        ),
-        # Gauss oracle: the right side of sum_{d|n} phi(d) = n —
-        # n itself (engine: the divisor join against the
-        # relational totient).
-        "gauss_divisor_phi": (
-            "SELECT i AS n, cast(i as bigint) AS phisum "
-            "FROM range(1, 201) t(i) ORDER BY n"
-        ),
-        # MST oracle: sequential Prim in a recursive CTE (the engine
-        # is distributed Borůvka); distinct weights => unique MST.
-        "mst_edges": (
-            "WITH ex AS (SELECT "
-            "cast('0x' || substr(sha256('mu:' || cast(doc_id as "
-            "varchar)), 1, 8) as bigint) % 48 AS a, "
-            "cast('0x' || substr(sha256('mv:' || cast(doc_id as "
-            "varchar)), 1, 8) as bigint) % 48 AS b "
-            "FROM documents WHERE doc_id < 400), "
-            "pairs AS (SELECT DISTINCT least(a, b) AS u, "
-            "greatest(a, b) AS v FROM ex WHERE a <> b "
-            "UNION SELECT i AS u, i + 1 AS v FROM range(47) t(i)), "
-            "edges AS (SELECT u, v, "
-            "(cast('0x' || substr(sha256('mw:' || cast(u as varchar) "
-            "|| ':' || cast(v as varchar)), 1, 8) as bigint) "
-            "% 100000) * 4096 + u * 64 + v AS w FROM pairs), "
-            "prim AS (WITH RECURSIVE walk(n, visited, total, picked) "
-            "AS (SELECT 1, [0]::BIGINT[], 0::HUGEINT, []::VARCHAR[] "
-            "UNION ALL SELECT n + 1, "
-            "list_append(visited, e.nv), total + e.w, "
-            "list_append(picked, e.tag) FROM walk, LATERAL ("
-            "SELECT CASE WHEN list_contains(visited, u) THEN v "
-            "ELSE u END AS nv, w, "
-            "cast(u as varchar) || '-' || cast(v as varchar) || '-' "
-            "|| cast(w as varchar) AS tag FROM edges "
-            "WHERE list_contains(visited, u) <> "
-            "list_contains(visited, v) ORDER BY w LIMIT 1) e "
-            "WHERE n < 48) "
-            "SELECT total, picked FROM walk WHERE n = 48) "
-            "SELECT len(picked) AS n_edges, "
-            "cast(total as bigint) AS total_w, "
-            "sha256(array_to_string(list_sort(picked), ',')) "
-            "AS edges_sha FROM prim"
-        ),
-        # LIS oracle: O(n²) textbook DP in a recursive CTE carrying
-        # the value + DP arrays (the engine is patience sorting).
-        "lis_length": (
-            "WITH daily AS (" + _DAILY_SQL + "), "
-            "idx AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
-            "QUALIFY i <= 60), "
-            "n AS (SELECT event_type, count(*) AS n FROM idx "
-            "GROUP BY event_type), "
-            "dp AS (WITH RECURSIVE r(event_type, i, avals, fvals) AS ("
-            "SELECT event_type, 0, []::BIGINT[], []::BIGINT[] FROM n "
-            "UNION ALL SELECT r.event_type, r.i + 1, "
-            "list_append(avals, s.y), "
-            "list_append(fvals, 1 + coalesce(list_max("
-            "[fvals[j] for j in range(1, r.i + 1) "
-            "if avals[j] < s.y]), 0)) "
-            "FROM r JOIN idx s ON s.event_type = r.event_type "
-            "AND s.i = r.i + 1) "
-            "SELECT r.event_type, list_max(fvals) AS lis FROM r "
-            "JOIN n USING (event_type) WHERE r.i = n.n) "
-            "SELECT dp.event_type, n, lis FROM dp JOIN n "
-            "USING (event_type) ORDER BY event_type"
-        ),
-        # Interval-scheduling oracle: unit-weight DP f_i =
-        # max(f_{i-1}, 1 + f_{p(i)}) (the engine is the greedy).
-        "interval_schedule": (
-            "WITH ev AS (SELECT event_type, event_id, "
-            "cast(floor(epoch(ts)) as bigint) AS s, "
-            "(cast(floor(value * 100) as bigint) % 7200) + 60 AS dur, "
-            "row_number() OVER (PARTITION BY event_type "
-            "ORDER BY cast(floor(epoch(ts)) as bigint), event_id) "
-            "AS rn FROM events QUALIFY rn <= 40), "
-            "iv AS (SELECT event_type, s, s + dur AS e, "
-            "row_number() OVER (PARTITION BY event_type "
-            "ORDER BY s + dur, s, event_id) AS i FROM ev), "
-            "n AS (SELECT event_type, count(*) AS n FROM iv "
-            "GROUP BY event_type), "
-            "p AS (SELECT a.event_type, a.i, "
-            "coalesce(max(b.i), 0) AS pi FROM iv a "
-            "LEFT JOIN iv b ON b.event_type = a.event_type "
-            "AND b.e <= a.s GROUP BY a.event_type, a.i), "
-            "dp AS (WITH RECURSIVE r(event_type, i, vals) AS ("
-            "SELECT event_type, 0, [0]::BIGINT[] FROM n "
-            "UNION ALL SELECT r.event_type, r.i + 1, "
-            "list_append(vals, greatest(vals[r.i + 1], "
-            "1 + vals[p.pi + 1])) FROM r JOIN p "
-            "ON p.event_type = r.event_type AND p.i = r.i + 1) "
-            "SELECT r.event_type, vals[n.n + 1] AS best FROM r "
-            "JOIN n USING (event_type) WHERE r.i = n.n) "
-            "SELECT dp.event_type, n AS n_iv, best FROM dp JOIN n "
-            "USING (event_type) ORDER BY event_type"
-        ),
-        # Theil–Sen oracle: definitional double-sort median selection
-        # (the engine selects by integer cross-multiplied ranks).
-        "theil_sen": (
-            "WITH daily AS (" + _DAILY_SQL + "), "
-            "idx AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
-            "QUALIFY i <= 60), "
-            "p AS (SELECT a.event_type, b.y - a.y AS dy, "
-            "b.i - a.i AS dx, "
-            "cast(b.y - a.y as double) / (b.i - a.i) AS sl "
-            "FROM idx a JOIN idx b ON a.event_type = b.event_type "
-            "AND a.i < b.i), "
-            "r AS (SELECT event_type, sl, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY sl) AS rn FROM p), "
-            "m AS (SELECT event_type, count(*) AS m_pairs FROM p "
-            "GROUP BY event_type), "
-            "med AS (SELECT r.event_type, m_pairs, sl AS slope "
-            "FROM r JOIN m USING (event_type) "
-            "WHERE rn = (m_pairs + 1) // 2), "
-            "eq AS (SELECT p.event_type, count(*) AS n_at_median "
-            "FROM p JOIN med ON p.event_type = med.event_type "
-            "AND p.sl = med.slope GROUP BY p.event_type) "
-            "SELECT event_type, m_pairs, n_at_median, slope "
-            "FROM med JOIN eq USING (event_type) ORDER BY event_type"
-        ),
-        # Mann–Kendall oracle: definitional signed pair sum (the
-        # engine derives S from P-up + tie census + C(n,2)).
-        "mann_kendall": (
-            "WITH daily AS (" + _DAILY_SQL + "), "
-            "n AS (SELECT event_type, count(*) AS n FROM daily "
-            "GROUP BY event_type), "
-            "s AS (SELECT a.event_type, "
-            "sum(cast(sign(b.y - a.y) as bigint)) AS s "
-            "FROM daily a JOIN daily b "
-            "ON a.event_type = b.event_type AND a.day < b.day "
-            "GROUP BY a.event_type), "
-            "ties AS (SELECT event_type, "
-            "sum(t * (t - 1) * (2 * t + 5)) AS tie_var FROM ("
-            "SELECT event_type, y, count(*) AS t FROM daily "
-            "GROUP BY event_type, y) GROUP BY event_type) "
-            "SELECT event_type, n, s, "
-            "n * (n - 1) * (2 * n + 5) - tie_var AS var18 "
-            "FROM n JOIN s USING (event_type) "
-            "JOIN ties USING (event_type) ORDER BY event_type"
-        ),
-        # Max-drawdown oracle: the O(n²) definition (per-j max over an
-        # i ≤ j self-join); the engine is the O(n) window pass.
-        "max_drawdown": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "sum((CASE WHEN event_id % 2 = 0 THEN 1 ELSE -1 END) "
-            "* cast(floor(value * 100) as bigint)) AS y "
-            "FROM events GROUP BY 1, 2), "
-            "c AS (SELECT event_type, day, sum(y) OVER ("
-            "PARTITION BY event_type ORDER BY day "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-            "AS cum FROM daily), "
-            "dd AS (SELECT j.event_type, j.day, "
-            "max(i.cum) - j.cum AS dd FROM c j JOIN c i "
-            "ON i.event_type = j.event_type AND i.day <= j.day "
-            "GROUP BY j.event_type, j.day, j.cum) "
-            "SELECT event_type, count(*) AS n_days, "
-            "max(dd) AS max_dd, sum(dd) AS sum_dd "
-            "FROM dd GROUP BY event_type ORDER BY event_type"
-        ),
-        "hodges_lehmann": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-            "as bigint) AS y FROM events GROUP BY 1, 2), "
-            "idx AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
-            "QUALIFY i <= 60), "
-            "p AS (SELECT a.event_type, a.y + b.y AS s "
-            "FROM idx a JOIN idx b ON a.event_type = b.event_type "
-            "AND a.i <= b.i), "
-            "r AS (SELECT event_type, s, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY s) AS rn FROM p), "
-            "m AS (SELECT event_type, count(*) AS m FROM p "
-            "GROUP BY event_type) "
-            "SELECT r.event_type, m, s AS two_hl FROM r "
-            "JOIN m USING (event_type) "
-            "WHERE rn = (m + 1) // 2 ORDER BY event_type"
-        ),
-        "runs_test": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-            "as bigint) AS y FROM events GROUP BY 1, 2), "
-            "cnt AS (SELECT event_type, count(*) AS n FROM daily "
-            "GROUP BY event_type), "
-            "rv AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY y, day) AS rv "
-            "FROM daily), "
-            "med AS (SELECT rv.event_type, y AS median FROM rv "
-            "JOIN cnt USING (event_type) WHERE rv = (n + 1) // 2), "
-            "t AS (SELECT daily.event_type, day, CASE WHEN y > median "
-            "THEN 1 ELSE -1 END AS sgn FROM daily JOIN med "
-            "USING (event_type) WHERE y <> median), "
-            "l AS (SELECT event_type, sgn, lag(sgn) OVER ("
-            "PARTITION BY event_type ORDER BY day) AS prev FROM t) "
-            "SELECT event_type, sum(CASE WHEN prev IS NULL OR "
-            "sgn <> prev THEN 1 ELSE 0 END) AS n_runs, "
-            "sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS n_plus, "
-            "sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS n_minus "
-            "FROM l GROUP BY event_type ORDER BY event_type"
-        ),
-        # NOT IN trap — VERBATIM shared ANSI text.
-        "not_in_null_trap": NOT_IN_NULL_TEXT,
-        "ignore_nulls_window": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) AS ep, event_id, "
-            "CASE WHEN event_id % 3 = 0 THEN "
-            "cast(floor(value * 100) as bigint) END AS v FROM events), "
-            "t AS (SELECT event_type, ep, event_id, v, "
-            "last_value(v IGNORE NULLS) OVER (PARTITION BY event_type "
-            "ORDER BY ep, event_id ROWS BETWEEN UNBOUNDED PRECEDING "
-            "AND CURRENT ROW) AS filled FROM e) "
-            "SELECT event_type, count(*) AS n, "
-            "sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS n_null, "
-            "sum(CASE WHEN filled IS NULL THEN 1 ELSE 0 END) "
-            "AS n_still_null, sum(filled) AS sum_filled, "
-            "sha256(string_agg(coalesce(cast(filled as varchar), "
-            "'x'), ',' ORDER BY ep, event_id)) AS series_sha "
-            "FROM t GROUP BY event_type ORDER BY event_type"
-        ),
         # Haar — closed-form signed dyadic-block sums, no recursion.
         "haar_wavelet": (
             "WITH daily AS (SELECT event_type, "
@@ -21489,22 +11023,6 @@ def oracle_sql() -> dict[str, str]:
             "cast(j as int) AS j, coef FROM (SELECT * FROM d "
             "UNION ALL SELECT * FROM s) "
             "ORDER BY event_type, level, j"
-        ),
-        # SymSpell — brute-force all-pairs levenshtein (DuckDB's own
-        # edit-distance implementation) over the same vocabulary.
-        "symspell_pairs": (
-            "WITH toks AS (SELECT unnest(list_filter(string_split("
-            "lower(text), ' '), x -> x <> '')) AS tok FROM documents), "
-            "freq AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1), "
-            "vocab AS (SELECT tok, row_number() OVER (ORDER BY c "
-            "DESC, tok) AS r FROM freq QUALIFY r <= 300), "
-            "p AS (SELECT a.tok AS ta, b.tok AS tb FROM vocab a "
-            "JOIN vocab b ON a.tok < b.tok "
-            "WHERE levenshtein(a.tok, b.tok) <= 1) "
-            "SELECT count(*) AS n_pairs, "
-            "coalesce(sum(length(ta) + length(tb)), 0) AS len_sum, "
-            "sha256(coalesce(string_agg(ta || '|' || tb, chr(10) "
-            "ORDER BY ta || '|' || tb), '')) AS pairs_sha FROM p"
         ),
         "kl_divergence": (
             "WITH prof AS (SELECT source, lang, count(*) AS c "

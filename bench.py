@@ -97,18 +97,6 @@ def main() -> None:
     n_pages_in = pages.count()
     timings["flagship_rank_x%d" % replicate] = round(t_flag, 3)
 
-    # Same flagship through the staged skew_rank (two-phase bucketed rank) so
-    # both rank implementations stay measured, not just exact-parity tested.
-    if not os.environ.get("SPARK_GRAFT_BENCH_FLAGSHIP_ONLY"):
-        os.environ["SPARK_GRAFT_RANK_IMPL"] = "skew"
-        try:
-            t0 = time.perf_counter()
-            MQ.ranked_from_pages(pages).write.format("noop").mode("overwrite").save()
-            timings["flagship_rank_skew_x%d" % replicate] = round(
-                time.perf_counter() - t0, 3)
-        finally:
-            del os.environ["SPARK_GRAFT_RANK_IMPL"]
-
     # ---- cutline grouped-map skew diagnostic (VERDICT r4 #7): one tile
     # deliberately holds 25% of all candidates, so its applyInPandas task is
     # the straggler the plan docs reason about. Diagnostic row, not an

@@ -60,7 +60,6 @@ def skew_rank(
     order_cols: list[Column],
     bucket: Column,
     out: str = "rank",
-    stage: bool = True,
 ) -> DataFrame:
     """row_number over (partition_col ORDER BY order_cols) computed without a
     single-task-per-partition sort. ``bucket`` must be monotone
@@ -76,10 +75,8 @@ def skew_rank(
     fact is never shuffled again). This replaced a
     persist(MEMORY_AND_DISK) staging pass that materialized the whole
     fact through the block manager (16.7 s vs 4.6 s plain at the r5
-    bench skew diagnostic). ``stage`` is kept for API compatibility;
-    the exchange-reuse plan needs no staging.
+    bench skew diagnostic).
     """
-    del stage  # r6: single-exchange plan needs no staging persist
     b = df.withColumn("_bkt", bucket)
     w_in = Window.partitionBy(partition_col, "_bkt").orderBy(*order_cols)
     ranked = b.withColumn("_rn", F.row_number().over(w_in))

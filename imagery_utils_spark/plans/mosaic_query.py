@@ -124,17 +124,8 @@ def ranked_from_pages(pages: DataFrame, params: ScoreParams | None = None,
     # staged pass 5x at bench skew — BENCH_r02); operators.rank.skew_rank
     # is the documented contingency for hot groups beyond
     # rank.DEFAULT_SKEW_THRESHOLD_ROWS, gated via operators.rank.rank_auto
-    # when the pipeline carries a group-size estimate. The env override
-    # exists so the bench can measure both paths honestly.
+    # when the pipeline carries a group-size estimate.
     narrow = df.select("doc_id", "tile_name", "score").filter(F.col("score") > 0)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_RANK_IMPL", "plain") == "skew":
-        from ..operators.rank import skew_rank
-
-        return skew_rank(narrow, "tile_name",
-                         [F.desc("score"), F.asc("doc_id")],
-                         F.floor(F.col("score") * 4), out="tile_rank")
     w = Window.partitionBy("tile_name").orderBy(F.desc("score"), F.asc("doc_id"))
     return narrow.withColumn("tile_rank", F.row_number().over(w))
 

@@ -19,12 +19,11 @@ float round-trip through the geocoder is therefore bit-exact.
 
 The geocoding step plays the role of the reference's metadata-sidecar scan
 (S7: ``get_attributes_from_xml``, /root/reference/lib/mosaic.py:320-497):
-a vectorized pandas UDF parsing per-row metadata into typed columns.
+JVM substring slicing of per-row metadata into typed columns.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,72 +131,31 @@ def pages_from_documents(docs: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- geocoding
 
-_GEO_RE = r'geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
-
-import pyspark.sql.types as T
-
-_GEO_TYPE = T.StructType([
-    T.StructField("lat", T.DoubleType()),
-    T.StructField("lon", T.DoubleType()),
-])
-
-
-@F.pandas_udf(_GEO_TYPE)
-def geocode_udf(html: pd.Series) -> pd.DataFrame:
-    """Vectorized metadata extraction (Arrow batches; no per-row Python).
-
-    Parses the ``geo.position`` meta tag out of the raw page bytes. Pages
-    without the tag geocode to null (analog of metadata-missing scenes that
-    score -1, /root/reference/lib/mosaic.py:513-519).
-    """
-    s = html.map(lambda b: b.decode("utf-8", "replace") if b is not None else "")
-    ext = s.str.extract(_GEO_RE)
-    return pd.DataFrame({
-        "lat": pd.to_numeric(ext[0], errors="coerce"),
-        "lon": pd.to_numeric(ext[1], errors="coerce"),
-    })
-
-
 _GEO_MARK = 'geo.position" content="'
 
 
-def geocode(pages: DataFrame, method: str = "fast") -> DataFrame:
+def geocode(pages: DataFrame) -> DataFrame:
     """pages + (lat, lon) columns; the byte-identical ``text`` column rides
     through untouched (input_hint invariant).
 
-    Three equivalent implementations (bit-identical outputs, asserted in
-    tests), fastest first:
-
-    * ``fast`` (default): decode + substring_index slicing + try_cast —
-      pure codegen, no regex engine (~1.7x faster than the regex path);
-      malformed values null out via try_cast.
-    * ``jvm``: decode + regexp_extract + cast (validating regex).
-    * ``pandas``: Arrow-batched UDF — the shape metadata parsers take when
-      real per-format parsing is needed (see functions/metadata.py).
+    Decode + substring_index slicing + try_cast — pure codegen, no regex
+    engine and no Python worker. Pages without the tag geocode to null
+    (analog of metadata-missing scenes that score -1 in the reference's
+    ``lib/mosaic.py``); malformed values null out via try_cast.
     """
-    if method == "pandas":
-        g = geocode_udf(F.col("html"))
-        return pages.withColumn("lat", g["lat"]).withColumn("lon", g["lon"])
     s = F.decode(F.col("html"), "utf-8")
-    if method == "fast":
-        # FIRST occurrence of the marker (parity with the regex/pandas paths
-        # when the body text itself contains the marker string): before the
-        # 2nd occurrence, after the 1st — substring_index(s, mark, 2) returns
-        # the whole string when only one occurrence exists, so the -1 slice
-        # is always the text following the first marker.
-        tag = F.substring_index(
-            F.substring_index(F.substring_index(s, _GEO_MARK, 2), _GEO_MARK, -1), '"', 1
-        )
-        has = F.contains(s, F.lit(_GEO_MARK))
-        lat = F.when(has, F.substring_index(tag, ";", 1)).try_cast("double")
-        lon = F.when(has, F.substring_index(tag, ";", -1)).try_cast("double")
-        return pages.withColumn("lat", lat).withColumn("lon", lon)
-    lat_s = F.regexp_extract(s, _GEO_RE, 1)
-    lon_s = F.regexp_extract(s, _GEO_RE, 2)
-    return (
-        pages.withColumn("lat", F.when(lat_s != "", lat_s).cast("double"))
-        .withColumn("lon", F.when(lon_s != "", lon_s).cast("double"))
+    # FIRST occurrence of the marker (the head tag wins when the body text
+    # itself contains the marker string): before the 2nd occurrence, after
+    # the 1st — substring_index(s, mark, 2) returns the whole string when
+    # only one occurrence exists, so the -1 slice is always the text
+    # following the first marker.
+    tag = F.substring_index(
+        F.substring_index(F.substring_index(s, _GEO_MARK, 2), _GEO_MARK, -1), '"', 1
     )
+    has = F.contains(s, F.lit(_GEO_MARK))
+    lat = F.when(has, F.substring_index(tag, ";", 1)).try_cast("double")
+    lon = F.when(has, F.substring_index(tag, ";", -1)).try_cast("double")
+    return pages.withColumn("lat", lat).withColumn("lon", lon)
 
 
 def extract_text_col(html: Column) -> Column:

@@ -23,11 +23,9 @@ def test_schema_and_counts(pages_df, spark, sf_dir):
     assert pages_df.select("url").distinct().count() == ndocs
 
 
-@pytest.mark.parametrize("method", ["fast", "jvm", "pandas"])
-def test_geocode_roundtrip_exact(pages_df, method):
+def test_geocode_roundtrip_exact(pages_df):
     # geocoded lat/lon from html must equal the arithmetic derivation exactly
-    # for both the JVM hot path and the pandas-UDF variant
-    geo = pages.geocode(pages_df, method=method)
+    geo = pages.geocode(pages_df)
     lon, lat = pages.lonlat_cols(F.col("doc_id"))
     mismatch = geo.withColumn("e_lon", lon).withColumn("e_lat", lat).filter(
         (F.col("lon") != F.col("e_lon")) | (F.col("lat") != F.col("e_lat"))
@@ -40,9 +38,8 @@ def test_geocode_missing_tag_is_null(spark):
         [(1, bytearray(b"<html><head></head><body>no geo</body></html>"))],
         "doc_id long, html binary",
     )
-    for method in ("fast", "jvm", "pandas"):
-        r = pages.geocode(df, method=method).first()
-        assert r.lat is None and r.lon is None, method
+    r = pages.geocode(df).first()
+    assert r.lat is None and r.lon is None
 
 
 def test_geocode_malformed_value_nulls(spark):
@@ -52,7 +49,7 @@ def test_geocode_malformed_value_nulls(spark):
         [(1, bytearray(b'<meta name="geo.position" content="abc;def">'))],
         "doc_id long, html binary",
     )
-    r = pages.geocode(df, method="fast").first()
+    r = pages.geocode(df).first()
     assert r.lat is None and r.lon is None
 
 
@@ -113,15 +110,14 @@ def test_hot_cell_skew(pages_df):
 
 
 def test_geocode_marker_in_body_first_occurrence(spark):
-    # ADVICE r1: the fast path must anchor on the FIRST geo marker (the head
+    # ADVICE r1: the geocoder must anchor on the FIRST geo marker (the head
     # tag), not the last — a body containing the literal marker string must
-    # not change the result, and all three methods must agree.
+    # not change the result.
     head = b'<html><head><meta name="geo.position" content="15.1000;179.8000">'
     body = b'</head><body>quoting geo.position" content="99.0;99.0" here</body></html>'
     df = spark.createDataFrame([(1, bytearray(head + body))], "doc_id long, html binary")
-    for method in ("fast", "jvm", "pandas"):
-        r = pages.geocode(df, method=method).first()
-        assert (r.lat, r.lon) == (15.1, 179.8), method
+    r = pages.geocode(df).first()
+    assert (r.lat, r.lon) == (15.1, 179.8)
 
 
 def test_spread_small_input_byte_gate(spark, tmp_path):

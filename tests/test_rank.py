@@ -1,14 +1,12 @@
 """skew_rank must agree exactly with the plain window row_number."""
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from imagery_utils_spark.operators.rank import skew_rank
 
 
-@pytest.mark.parametrize("stage", [False, True])
-def test_skew_rank_matches_plain_window(spark, stage):
+def test_skew_rank_matches_plain_window(spark):
     # skewed groups incl. heavy ties across bucket boundaries
     rows = []
     for i in range(4000):
@@ -20,7 +18,7 @@ def test_skew_rank_matches_plain_window(spark, stage):
     w = Window.partitionBy("grp").orderBy(F.desc("score"), F.asc("id"))
     plain = df.withColumn("r", F.row_number().over(w))
     skew = skew_rank(df, "grp", [F.desc("score"), F.asc("id")],
-                     F.floor(F.col("score")), out="r", stage=stage)
+                     F.floor(F.col("score")), out="r")
     a = {(r.grp, r.id): r.r for r in plain.collect()}
     b = {(r.grp, r.id): r.r for r in skew.collect()}
     assert a == b
