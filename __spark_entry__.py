@@ -7753,6 +7753,2859 @@ def q_haar_wavelet(spark, sf_dir) -> DataFrame:
             .orderBy("event_type", "level", "j"))
 
 
+def q_symspell_pairs(spark, sf_dir) -> DataFrame:
+    """SymSpell-style fuzzy vocabulary pairing — deletion-neighborhood
+    blocking (each token joins on itself + every single-character
+    deletion, generated as PURE JVM array algebra) followed by an
+    exact levenshtein ≤ 1 filter: the spell-correction/dedup candidate
+    pipeline whose COMPLETENESS (no lev≤1 pair escapes the blocking)
+    is the theorem under test. Oracle: brute-force all-pairs
+    levenshtein over the same vocabulary — DuckDB's independent edit-
+    distance implementation."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(F.explode(F.filter(
+        F.split(F.lower("text"), " "), lambda x: x != "")).alias("tok"))
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+    wv = Window.orderBy(F.desc("c"), "tok")
+    vocab = (freq.withColumn("r", F.row_number().over(wv))
+             .filter(F.col("r") <= 300).select("tok"))
+    variants = vocab.select(
+        "tok",
+        F.explode(F.array_union(
+            F.array(F.col("tok")),
+            F.expr("transform(sequence(1, length(tok)), i -> "
+                   "concat(substr(tok, 1, i - 1), "
+                   "substr(tok, i + 1, length(tok))))")))
+        .alias("v"))
+    a = variants.select(F.col("tok").alias("ta"), "v")
+    b = variants.select(F.col("tok").alias("tb"), "v")
+    cand = (a.join(b, "v").filter(F.col("ta") < F.col("tb"))
+            .select("ta", "tb").distinct())
+    pairs = cand.filter(F.levenshtein("ta", "tb") <= 1)
+    return (pairs.agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.coalesce(F.sum(F.length("ta") + F.length("tb")),
+                   F.lit(0).cast("long")).alias("len_sum"),
+        F.sha2(F.concat_ws("\n", F.array_sort(F.collect_list(
+            F.concat("ta", F.lit("|"), "tb")))), 256).alias("pairs_sha")))
+
+
+def q_hodges_lehmann(spark, sf_dir) -> DataFrame:
+    """Hodges–Lehmann robust location estimator per series — the
+    median of all pairwise Walsh averages (xᵢ+xⱼ)/2, i≤j, kept EXACT
+    by carrying 2·HL (the pairwise SUM) and selecting the discrete
+    lower-median by row_number = floor((m+1)/2) — a definition both
+    engines implement identically with zero interpolation. The
+    pairwise self-join is the O(n²) battery profile; at scale this
+    runs per-group after one shuffle."""
+    daily = (load(spark, sf_dir, "events")
+             .select("event_type",
+                     (F.unix_timestamp("ts") / 86400).cast("long")
+                     .alias("day"),
+                     F.floor(F.col("value") * 100).cast("long")
+                     .alias("cents"))
+             .groupBy("event_type", "day")
+             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
+    w = Window.partitionBy("event_type").orderBy("day")
+    idx = daily.withColumn("i", F.row_number().over(w)) \
+        .filter(F.col("i") <= 60)
+    a = idx.select("event_type", F.col("i").alias("ia"),
+                   F.col("y").alias("ya"))
+    b = idx.select("event_type", F.col("i").alias("ib"),
+                   F.col("y").alias("yb"))
+    pairs = (a.join(b, "event_type")
+             .filter(F.col("ia") <= F.col("ib"))
+             .select("event_type",
+                     (F.col("ya") + F.col("yb")).alias("s")))
+    ws = Window.partitionBy("event_type").orderBy("s")
+    r = pairs.withColumn("rn", F.row_number().over(ws))
+    m = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("m"))
+    med = (r.join(F.broadcast(m), "event_type")
+           .filter(F.col("rn") == F.floor((F.col("m") + 1) / 2)))
+    return (med.select("event_type", "m",
+                       F.col("s").alias("two_hl"))
+            .orderBy("event_type"))
+
+
+def q_runs_test(spark, sf_dir) -> DataFrame:
+    """Wald–Wolfowitz runs test over each series' above/below-median
+    daily sign sequence — the randomness screen: the discrete median
+    (lower median, exact), sign classification (ties to the median
+    excluded, documented), run count via ONE lag window (a run starts
+    where the sign changes), and n₊/n₋ — all exact integers."""
+    daily = (load(spark, sf_dir, "events")
+             .select("event_type",
+                     (F.unix_timestamp("ts") / 86400).cast("long")
+                     .alias("day"),
+                     F.floor(F.col("value") * 100).cast("long")
+                     .alias("cents"))
+             .groupBy("event_type", "day")
+             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
+    wv = Window.partitionBy("event_type").orderBy("y", "day")
+    cnt = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    med = (daily.withColumn("rv", F.row_number().over(wv))
+           .join(F.broadcast(cnt), "event_type")
+           .filter(F.col("rv") == F.floor((F.col("n") + 1) / 2))
+           .select("event_type", F.col("y").alias("median")))
+    t = (daily.join(F.broadcast(med), "event_type")
+         .filter(F.col("y") != F.col("median"))
+         .select("event_type", "day",
+                 F.when(F.col("y") > F.col("median"), 1).otherwise(-1)
+                 .alias("sgn")))
+    wd = Window.partitionBy("event_type").orderBy("day")
+    t = t.withColumn("prev", F.lag("sgn").over(wd))
+    return (t.groupBy("event_type")
+            .agg(F.sum(F.when(F.col("prev").isNull()
+                              | (F.col("sgn") != F.col("prev")), 1)
+                       .otherwise(0)).alias("n_runs"),
+                 F.sum(F.when(F.col("sgn") == 1, 1).otherwise(0))
+                 .alias("n_plus"),
+                 F.sum(F.when(F.col("sgn") == -1, 1).otherwise(0))
+                 .alias("n_minus"))
+            .orderBy("event_type"))
+
+
+def q_benjamini_hochberg(spark, sf_dir) -> DataFrame:
+    """Benjamini–Hochberg FDR control (1995) — the multiple-testing
+    gate a metrics platform runs over thousands of simultaneous
+    hypotheses: p-values live as EXACT ten-thousandths (hash-derived
+    integers x ∈ [0,10000)), the step-up rule 'largest k with p₍ₖ₎ ≤
+    k·α/m' is decided purely by cross-multiplied integers
+    (x₍ₖ₎·m·20 ≤ k·10000 at α = 0.05), and every p below the cutoff
+    rank is rejected — zero floats in the decision path. One sort
+    window + one max + one count per family."""
+    d = F.col("doc_id")
+    x = (F.conv(F.substring(F.sha2(F.concat(F.lit("pv:"),
+                                            d.cast("string")), 256),
+                            1, 8), 16, 10).cast("long") % 10000)
+    fam = (d % 4).alias("family")
+    t = load(spark, sf_dir, "documents").select(fam, x.alias("x"))
+    # row_number over x alone: ties reorder freely but x-at-rank-k is
+    # the sorted multiset, so every output is tie-order-invariant
+    wk = Window.partitionBy("family").orderBy("x")
+    r = t.withColumn("k", F.row_number().over(wk))
+    m = t.groupBy("family").agg(F.count(F.lit(1)).alias("m"))
+    j = r.join(F.broadcast(m), "family")
+    ok = j.filter(F.col("x") * F.col("m") * 20
+                  <= F.col("k") * 10000)
+    kmax = ok.groupBy("family").agg(F.max("k").alias("k_reject"))
+    out = (m.join(kmax, "family", "left")
+           .select("family", "m",
+                   F.coalesce("k_reject", F.lit(0)).alias("k_reject")))
+    thr = (r.join(out.select("family", "k_reject"), "family")
+           .filter(F.col("k") == F.col("k_reject"))
+           .select("family", F.col("x").alias("x_threshold")))
+    return (out.join(thr, "family", "left")
+            .select("family", "m", "k_reject",
+                    F.coalesce("x_threshold", F.lit(-1))
+                    .alias("x_threshold"))
+            .orderBy("family"))
+
+
+NOT_IN_NULL_TEXT = (
+    "WITH sub_with_null AS (SELECT o_custkey AS k FROM orders "
+    "WHERE o_orderkey % 3 = 0 UNION ALL SELECT NULL), "
+    "sub_clean AS (SELECT o_custkey AS k FROM orders "
+    "WHERE o_orderkey % 3 = 0 AND o_custkey IS NOT NULL) "
+    "SELECT "
+    "(SELECT count(*) FROM customer WHERE c_custkey NOT IN "
+    "(SELECT k FROM sub_with_null)) AS n_not_in_with_null, "
+    "(SELECT count(*) FROM customer WHERE c_custkey NOT IN "
+    "(SELECT k FROM sub_clean)) AS n_not_in_clean, "
+    "(SELECT count(*) FROM customer c WHERE NOT EXISTS "
+    "(SELECT 1 FROM sub_clean s WHERE s.k = c.c_custkey)) "
+    "AS n_not_exists"
+)
+
+
+def q_not_in_null_trap(spark, sf_dir) -> DataFrame:
+    """The NOT IN three-valued-logic trap, pinned as VERBATIM shared
+    ANSI text (sql_surface family): against a subquery containing a
+    NULL, NOT IN returns ZERO rows (x <> NULL is UNKNOWN, so no row
+    ever satisfies the predicate) while the NULL-filtered NOT IN and
+    NOT EXISTS agree on the real anti-join count — the single most
+    common silent-wrong-answer bug in migration SQL, demonstrated by
+    both engines producing the same three counts."""
+    for t in ("orders", "customer"):
+        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(NOT_IN_NULL_TEXT)
+
+
+def q_ignore_nulls_window(spark, sf_dir) -> DataFrame:
+    """IGNORE NULLS window semantics — forward-fill (last non-null so
+    far) over a sparse series, the gap-carry idiom of sensor/metric
+    tables: Spark's last(col, ignorenulls=True) vs DuckDB's
+    last_value(col IGNORE NULLS), both over the identical frame.
+    Output pins the filled series whole (sha per group) plus the
+    null-bookkeeping counts."""
+    ev = load(spark, sf_dir, "events").select(
+        "event_type",
+        F.unix_timestamp("ts").cast("long").alias("ep"), "event_id",
+        F.when(F.col("event_id") % 3 == 0,
+               F.floor(F.col("value") * 100).cast("long"))
+        .alias("v"))
+    w = (Window.partitionBy("event_type").orderBy("ep", "event_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    t = ev.withColumn("filled", F.last("v", ignorenulls=True).over(w))
+    return (t.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.col("v").isNull().cast("int")).alias("n_null"),
+                 F.sum(F.col("filled").isNull().cast("int"))
+                 .alias("n_still_null"),
+                 F.sum("filled").alias("sum_filled"),
+                 F.sha2(F.concat_ws(",", F.transform(
+                     F.array_sort(F.collect_list(F.struct(
+                         "ep", "event_id",
+                         F.coalesce(F.col("filled").cast("string"),
+                                    F.lit("x")).alias("fv")))),
+                     lambda r: r["fv"])), 256).alias("series_sha"))
+            # checkpoint before the sort (r6): range sampling would
+            # re-run the fill window + collect_list rollup
+            .localCheckpoint()
+            .orderBy("event_type"))
+
+
+def _daily_series(spark, sf_dir):
+    """Shared daily integer series per event_type: summed cents/day."""
+    return (load(spark, sf_dir, "events")
+            .select("event_type",
+                    (F.unix_timestamp("ts") / 86400).cast("long")
+                    .alias("day"),
+                    F.floor(F.col("value") * 100).cast("long")
+                    .alias("cents"))
+            .groupBy("event_type", "day")
+            .agg(F.sum("cents").alias("y")))
+
+
+_DAILY_SQL = (
+    "SELECT event_type, cast(floor(epoch(ts)) as bigint) // 86400 "
+    "AS day, sum(cast(floor(value * 100) as bigint)) AS y "
+    "FROM events GROUP BY 1, 2")
+
+
+def q_theil_sen(spark, sf_dir) -> DataFrame:
+    """Theil–Sen robust slope per series — the median of all pairwise
+    slopes (yⱼ−yᵢ)/(j−i), i<j over the day-indexed series. The engine
+    never sorts a float: the k-th smallest slope is selected by EXACT
+    cross-multiplied integer rank counting (slope_q < slope_p ⇔
+    dy_q·dx_p < dy_p·dx_q, both dx > 0), so the pick is decided purely
+    in int64 and only the final division runs in IEEE doubles. The
+    oracle instead sorts double slopes and indexes the lower median —
+    two mechanically different selection procedures that must agree
+    because equal rationals round to identical doubles."""
+    w = Window.partitionBy("event_type").orderBy("day")
+    idx = (_daily_series(spark, sf_dir)
+           .withColumn("i", F.row_number().over(w))
+           .filter(F.col("i") <= 60))
+    a = idx.select("event_type", F.col("i").alias("ia"),
+                   F.col("y").alias("ya"))
+    b = idx.select("event_type", F.col("i").alias("ib"),
+                   F.col("y").alias("yb"))
+    pairs = (a.join(b, "event_type")
+             .filter(F.col("ia") < F.col("ib"))
+             .select("event_type",
+                     ((F.col("ia") * F.lit(1000)) + F.col("ib"))
+                     .alias("pid"),
+                     (F.col("yb") - F.col("ya")).alias("dy"),
+                     (F.col("ib") - F.col("ia")).alias("dx")))
+    p = pairs.select("event_type", "pid",
+                     F.col("dy").alias("dyp"), F.col("dx").alias("dxp"))
+    q = pairs.select("event_type",
+                     F.col("dy").alias("dyq"), F.col("dx").alias("dxq"))
+    ranks = (p.join(q, "event_type")
+             .groupBy("event_type", "pid", "dyp", "dxp")
+             .agg(F.sum((F.col("dyq") * F.col("dxp")
+                         < F.col("dyp") * F.col("dxq")).cast("long"))
+                  .alias("cnt_lt"),
+                  F.sum((F.col("dyq") * F.col("dxp")
+                         <= F.col("dyp") * F.col("dxq")).cast("long"))
+                  .alias("cnt_le")))
+    m = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("m_pairs"))
+    k = F.floor((F.col("m_pairs") + 1) / 2)
+    med = (ranks.join(F.broadcast(m), "event_type")
+           .filter((F.col("cnt_lt") <= k - 1) & (F.col("cnt_le") >= k)))
+    return (med.groupBy("event_type", "m_pairs")
+            .agg(F.count(F.lit(1)).alias("n_at_median"),
+                 F.min(F.col("dyp").cast("double") / F.col("dxp"))
+                 .alias("slope"))
+            .select("event_type", "m_pairs", "n_at_median", "slope")
+            .orderBy("event_type"))
+
+
+def q_mann_kendall(spark, sf_dir) -> DataFrame:
+    """Mann–Kendall trend test per series, S and the tie-corrected
+    18·Var(S), all exact integers. The engine never sums signs: it
+    counts ONLY the concordant pairs P (yⱼ > yᵢ, j later), takes the
+    tie census per value (T = Σ C(t,2)), and derives S = P − M with
+    M = C(n,2) − P − T — pure combinatorics. The oracle computes S the
+    definitional way, Σ_{i<j} sign(yⱼ−yᵢ), so agreement pins the
+    identity P + M + T = C(n,2) on real data."""
+    daily = _daily_series(spark, sf_dir)
+    n = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    a = daily.select("event_type", F.col("day").alias("da"),
+                     F.col("y").alias("ya"))
+    b = daily.select("event_type", F.col("day").alias("db"),
+                     F.col("y").alias("yb"))
+    p = (a.join(b, "event_type")
+         .filter(F.col("da") < F.col("db"))
+         .groupBy("event_type")
+         .agg(F.sum((F.col("yb") > F.col("ya")).cast("long"))
+              .alias("p_up")))
+    ties = (daily.groupBy("event_type", "y")
+            .agg(F.count(F.lit(1)).alias("t"))
+            .groupBy("event_type")
+            .agg(F.sum(F.col("t") * (F.col("t") - 1) / 2).cast("long")
+                 .alias("t_pairs"),
+                 F.sum(F.col("t") * (F.col("t") - 1)
+                       * (2 * F.col("t") + 5)).alias("tie_var")))
+    j = (n.join(p, "event_type").join(ties, "event_type"))
+    total = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
+    m_dn = total - F.col("p_up") - F.col("t_pairs")
+    return (j.select(
+        "event_type", "n",
+        (F.col("p_up") - m_dn).alias("s"),
+        (F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
+         - F.col("tie_var")).alias("var18"))
+        .orderBy("event_type"))
+
+
+def q_max_drawdown(spark, sf_dir) -> DataFrame:
+    """Maximum drawdown of each series' cumulative daily total — the
+    risk metric: ddⱼ = max_{i≤j} cumᵢ − cumⱼ, reported as max and sum
+    over j, exact integers. The engine is the O(n) single-pass form
+    (running-max window over the running-sum window); the oracle is
+    the O(n²) definition (per-j max over an i≤j self-join) — the
+    classic quadratic-to-linear rewrite, proven equivalent on data.
+    The daily series is SIGNED (even event_ids credit, odd ones debit)
+    so the cumulative walk actually draws down — an all-positive
+    series would pin nothing but zeros."""
+    daily = (load(spark, sf_dir, "events")
+             .select("event_type",
+                     (F.unix_timestamp("ts") / 86400).cast("long")
+                     .alias("day"),
+                     (F.when(F.col("event_id") % 2 == 0, 1)
+                      .otherwise(-1)
+                      * F.floor(F.col("value") * 100).cast("long"))
+                     .alias("cents"))
+             .groupBy("event_type", "day")
+             .agg(F.sum("cents").alias("y")))
+    w = (Window.partitionBy("event_type").orderBy("day")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    t = (daily.withColumn("cum", F.sum("y").over(w))
+         .withColumn("peak", F.max("cum").over(w))
+         .withColumn("dd", F.col("peak") - F.col("cum")))
+    return (t.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n_days"),
+                 F.max("dd").alias("max_dd"),
+                 F.sum("dd").alias("sum_dd"))
+            .orderBy("event_type"))
+
+
+def _mst_hash(col):
+    return F.conv(F.substring(F.sha2(col, 256), 1, 8), 16, 10) \
+        .cast("long")
+
+
+def q_mst_edges(spark, sf_dir) -> DataFrame:
+    """Minimum spanning tree of a deterministic 48-node weighted graph
+    (hash-derived extra edges over a connectivity spine; weights
+    carry the edge id in their low bits so they are pairwise DISTINCT
+    — the MST is therefore UNIQUE and both engines must produce the
+    identical edge set, pinned by sha). Engine: distributed Borůvka —
+    per-round min-edge-per-component window + component-graph
+    contraction via large-star/small-star, O(log n) rounds, nothing
+    collected. Oracle: sequential Prim inside a DuckDB recursive CTE
+    growing a visited list. Two classical algorithms from opposite
+    ends of the parallelism spectrum, agreeing edge-for-edge."""
+    from imagery_utils_spark.operators.graph import \
+        minimum_spanning_forest
+    V = 48
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 400).select("doc_id"))
+    d = F.col("doc_id").cast("string")
+    ex = (docs.select(
+        (_mst_hash(F.concat(F.lit("mu:"), d)) % V).alias("a"),
+        (_mst_hash(F.concat(F.lit("mv:"), d)) % V).alias("b"))
+        .filter(F.col("a") != F.col("b")))
+    spine = spark.range(V - 1).select(
+        F.col("id").alias("u"), (F.col("id") + 1).alias("v"))
+    pairs = (ex.select(F.least("a", "b").alias("u"),
+                       F.greatest("a", "b").alias("v"))
+             .unionByName(spine).distinct())
+    w = (_mst_hash(F.concat(F.lit("mw:"), F.col("u").cast("string"),
+                            F.lit(":"), F.col("v").cast("string")))
+         % 100000) * 4096 + F.col("u") * 64 + F.col("v")
+    mst = minimum_spanning_forest(pairs.withColumn("w", w))
+    tag = F.concat_ws("-", "u", "v", "w")
+    return mst.agg(
+        F.count(F.lit(1)).alias("n_edges"),
+        F.sum("w").alias("total_w"),
+        F.sha2(F.concat_ws(",", F.array_sort(
+            F.collect_list(tag))), 256).alias("edges_sha"))
+
+
+def q_lis_length(spark, sf_dir) -> DataFrame:
+    """Longest strictly-increasing subsequence of each daily series —
+    engine: patience sorting (O(n log n), one bisect per element) as a
+    per-group kernel behind ONE groupBy shuffle; oracle: the O(n²)
+    textbook DP (f_i = 1 + max f_j, j < i, a_j < a_i) replayed inside
+    a DuckDB recursive CTE that carries the value and DP arrays as
+    lists. Different algorithm, same theorem."""
+    w = Window.partitionBy("event_type").orderBy("day")
+    idx = (_daily_series(spark, sf_dir)
+           .withColumn("i", F.row_number().over(w))
+           .filter(F.col("i") <= 60))
+
+    def fn(pdf):
+        import pandas as pd
+
+        from imagery_utils_spark.operators.dp import lis_length_patience
+
+        pdf = pdf.sort_values("i")
+        seq = [int(x) for x in pdf["y"]]
+        return pd.DataFrame([{
+            "event_type": pdf["event_type"].iloc[0],
+            "n": len(seq),
+            "lis": lis_length_patience(seq)}])
+
+    return (idx.groupBy("event_type")
+            .applyInPandas(fn, "event_type string, n long, lis long")
+            .orderBy("event_type"))
+
+
+def q_interval_schedule(spark, sf_dir) -> DataFrame:
+    """Activity selection per series — the maximum number of pairwise
+    non-overlapping [s, e) intervals. Engine: the earliest-finish
+    GREEDY (optimal by the exchange argument) as a per-group kernel.
+    Oracle: the weighted-interval-scheduling DP at unit weights
+    (f_i = max(f_{i−1}, 1 + f_{p(i)}), p(i) = last interval ending ≤
+    sᵢ) in a DuckDB recursive CTE. Greedy optimality is the theorem
+    the parity check proves on data."""
+    ev = (load(spark, sf_dir, "events")
+          .select("event_type", "event_id",
+                  F.unix_timestamp("ts").cast("long").alias("s"),
+                  ((F.floor(F.col("value") * 100).cast("long") % 7200)
+                   + 60).alias("dur")))
+    w = Window.partitionBy("event_type").orderBy("s", "event_id")
+    iv = (ev.withColumn("rn", F.row_number().over(w))
+          .filter(F.col("rn") <= 40)
+          .select("event_type", "s", (F.col("s") + F.col("dur"))
+                  .alias("e")))
+
+    def fn(pdf):
+        import pandas as pd
+
+        from imagery_utils_spark.operators.dp import \
+            max_nonoverlap_intervals
+
+        ivs = list(zip((int(x) for x in pdf["s"]),
+                       (int(x) for x in pdf["e"])))
+        return pd.DataFrame([{
+            "event_type": pdf["event_type"].iloc[0],
+            "n_iv": len(ivs),
+            "best": max_nonoverlap_intervals(ivs)}])
+
+    return (iv.groupBy("event_type")
+            .applyInPandas(fn, "event_type string, n_iv long, best long")
+            .orderBy("event_type"))
+
+
+def q_suffix_array(spark, sf_dir) -> DataFrame:
+    """Per-document suffix arrays by DISTRIBUTED PREFIX DOUBLING
+    (Manber–Myers 1990): ⌈log₂ n⌉ rounds, each one equi-join + one
+    dense_rank window — the Spark-native O(log n)-shuffle-sorts
+    construction. The oracle materialises every suffix as a string and
+    comparison-sorts them (the O(n²·log n) definition) — agreement
+    byte-for-byte (sha over the SA order) across eight documents.
+    Byte order: both engines compare ASCII text binarily."""
+    from imagery_utils_spark.operators.suffix import suffix_array
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 8)
+            .select("doc_id", F.substring("text", 1, 256).alias("t")))
+    chars = (docs.select(
+        "doc_id", "t",
+        F.explode(F.sequence(F.lit(0), F.length("t") - 1)).alias("i"))
+        .select("doc_id", "i",
+                F.expr("substring(t, i + 1, 1)").alias("c")))
+    sa = suffix_array(chars, doc="doc_id", pos="i", ch="c",
+                      max_len=256)
+    return (sa.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sha2(F.concat_ws(",", F.transform(
+                     F.array_sort(F.collect_list(
+                         F.struct("rank", "i"))),
+                     lambda r: r["i"].cast("string"))), 256)
+                 .alias("sa_sha"))
+            .orderBy("doc_id"))
+
+
+def q_merkle_root(spark, sf_dir) -> DataFrame:
+    """Merkle tree root over the first 50 document hashes (Merkle
+    1987; the Bitcoin odd-node rule — duplicate the last hash — is
+    exercised on purpose: 50 → 25 → 13 → 7 → 4 → 2 → 1). Engine: a
+    log-depth loop of groupBy-pair reductions, each level ONE shuffle
+    on pair index (how a 10⁹-leaf commitment tree actually reduces on
+    a cluster). Oracle: a DuckDB recursive CTE folding the hex-string
+    list level by level. Hashing is sha256 over concatenated hex
+    strings in both engines."""
+    # doc_id is dense 0..49 here, so it IS the leaf index — no global
+    # row_number window (which would single-partition 10⁹ leaves).
+    leaves = (load(spark, sf_dir, "documents")
+              .filter(F.col("doc_id") < 50)
+              .select(F.col("doc_id").alias("idx"),
+                      F.sha2("text", 256).alias("h")))
+    lvl = leaves.localCheckpoint(eager=True)
+    n_leaves = lvl.count()
+    n = n_leaves
+    levels = 0
+    while n > 1:
+        lvl = (lvl.groupBy(F.floor(F.col("idx") / 2).alias("j"))
+               .agg(F.max(F.when(F.col("idx") % 2 == 0, F.col("h")))
+                    .alias("l"),
+                    F.max(F.when(F.col("idx") % 2 == 1, F.col("h")))
+                    .alias("r"))
+               .select(F.col("j").alias("idx"), F.sha2(F.concat(
+                   "l", F.coalesce("r", "l")), 256).alias("h"))
+               .localCheckpoint(eager=True))
+        n = (n + 1) // 2
+        levels += 1
+    return lvl.select(F.lit(n_leaves).alias("n_leaves"),
+                      F.lit(levels).alias("n_levels"),
+                      F.col("h").alias("root"))
+
+
+def q_adler32(spark, sf_dir) -> DataFrame:
+    """Adler-32 (RFC 1950 §8.2) of each document prefix — but computed
+    ORDER-FREE: A = (1 + Σcᵢ) and B = (n + Σ(n−i+1)·cᵢ) mod 65521 are
+    position-weighted plain aggregates, so the engine needs no
+    sequential fold at all (explode + groupBy, partition-order
+    immune). The oracle replays the RFC's stepwise byte fold in a
+    recursive CTE. The closed form ≡ the fold is the identity under
+    test; pytest additionally pins the closed form to CPython's
+    zlib.adler32."""
+    d = (load(spark, sf_dir, "documents")
+         .filter(F.col("doc_id") < 50)
+         .select("doc_id", F.substring("text", 1, 400).alias("t")))
+    d = d.withColumn("n", F.length("t"))
+    c = (d.select("doc_id", "n",
+                  F.explode(F.sequence(F.lit(1), F.col("n")))
+                  .alias("i"))
+         .join(d.select("doc_id", "t"), "doc_id")
+         .select("doc_id", "n", "i",
+                 F.ascii(F.expr("substring(t, i, 1)")).alias("ch")))
+    agg = (c.groupBy("doc_id", "n")
+           .agg(((F.lit(1) + F.sum("ch")) % 65521).alias("a"),
+                ((F.col("n").cast("long") + F.sum(
+                    (F.col("n") - F.col("i") + 1) * F.col("ch")))
+                 % 65521).alias("b")))
+    return (agg.select("doc_id", "n",
+                       (F.col("b") * 65536 + F.col("a")).alias("adler"))
+            .orderBy("doc_id"))
+
+
+def q_bwt_inverse(spark, sf_dir) -> DataFrame:
+    """Fully DISTRIBUTED BWT round-trip: forward transform via the
+    prefix-doubling suffix array (bwt[rank-1] = t[(i-1) mod n]), then
+    inversion WITHOUT the sequential LF walk — the walk index of every
+    row is recovered by Wyllie pointer doubling over the LF
+    permutation (list ranking, O(log n) equi-join rounds). The oracle
+    runs the textbook pipeline: rotation sort, then the O(n)
+    recursive-CTE LF walk. Both must reproduce the original text."""
+    from imagery_utils_spark.operators.bwt import SENTINEL, invert_bwt_df
+    from imagery_utils_spark.operators.suffix import suffix_array
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 6)
+            .select("doc_id",
+                    F.concat(F.substring("text", 1, 180),
+                             F.lit(SENTINEL)).alias("t")))
+    chars = (docs.select(
+        "doc_id", "t", F.length("t").alias("n"),
+        F.explode(F.sequence(F.lit(0), F.length("t") - 1)).alias("i"))
+        .select("doc_id", "i", "n",
+                F.expr("substring(t, i + 1, 1)").alias("c"),
+                F.expr("substring(t, ((i - 1 + n) % n) + 1, 1)")
+                .alias("cp")))
+    sa = suffix_array(chars, doc="doc_id", pos="i", ch="c",
+                      max_len=256)
+    bwt = (sa.join(chars.select("doc_id", "i", "cp"), ["doc_id", "i"])
+           .select("doc_id", (F.col("rank") - 1).alias("j"),
+                   F.col("cp").alias("c")))
+    inv = invert_bwt_df(bwt, doc="doc_id", pos="j", ch="c",
+                        max_len=256)
+    return (inv.groupBy("doc")
+            .agg(F.count(F.lit(1)).alias("n_chars"),
+                 F.concat_ws("", F.transform(
+                     F.array_sort(F.collect_list(
+                         F.struct("i", "out_c"))),
+                     lambda r: r["out_c"])).alias("recovered"))
+            .select(F.col("doc").alias("doc_id"), "n_chars",
+                    "recovered")
+            .orderBy("doc_id"))
+
+
+def q_discrete_log(spark, sf_dir) -> DataFrame:
+    """Discrete logarithm g^x ≡ h (mod p) for 24 hash-derived
+    instances over small primes — engine: baby-step/giant-step
+    (Shanks 1971) where the collision search is ONE equi-join on the
+    group element and h itself comes from JVM square-and-multiply
+    (O(√p) rows, O(log p) projections). Oracle: the O(p) brute walk —
+    a recursive CTE enumerating the whole power sequence, reading h
+    at k = x_true and taking the minimal matching k. Minimality
+    agrees because BSGS's i·m+j covers every x in [0, m²) uniquely."""
+    from imagery_utils_spark.operators.modmath import (
+        bsgs_discrete_log, with_modpow)
+    primes = [1997, 1999, 2003, 2011, 2017, 2027, 2029, 2039]
+    d = F.col("doc_id").cast("string")
+    inst = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 24)
+            .select("doc_id",
+                    F.element_at(
+                        F.array(*[F.lit(x) for x in primes]),
+                        (F.col("doc_id") % 8 + 1).cast("int"))
+                    .cast("long").alias("p")))
+    inst = inst.withColumn(
+        "g", F.lit(2) + _mst_hash(F.concat(F.lit("dlg:"), d))
+        % (F.col("p") - 3))
+    inst = inst.withColumn(
+        "xt", _mst_hash(F.concat(F.lit("dlx:"), d)) % (F.col("p") - 1))
+    inst = with_modpow(inst, "h", "g", "xt", "p", 11)
+    ans = bsgs_discrete_log(inst, key="doc_id", max_m=46)
+    return (inst.join(ans, "doc_id")
+            .select("doc_id", "p", "g", "h", "dlog")
+            .orderBy("doc_id"))
+
+
+def q_fib_matrix_power(spark, sf_dir) -> DataFrame:
+    """F(n) mod 1e9+7 for 24 hash-derived n in [1000, 9000) — engine:
+    fast matrix exponentiation of [[1,1],[1,0]] (14 square-and-multiply
+    rounds as pure column projections; symmetric matrices tracked as
+    (a,b,d) triples since powers of a symmetric matrix commute).
+    Oracle: the O(n) additive recurrence stepped one term at a time in
+    a recursive CTE. O(log n) vs O(n) for the same exact residues."""
+    M = 1_000_000_007
+    d = F.col("doc_id").cast("string")
+    df = (load(spark, sf_dir, "documents")
+          .filter(F.col("doc_id") < 24)
+          .select("doc_id",
+                  (F.lit(1000) + _mst_hash(F.concat(F.lit("fib:"), d))
+                   % 8000).alias("n"),
+                  F.lit(1).cast("long").alias("ra"),
+                  F.lit(0).cast("long").alias("rb"),
+                  F.lit(1).cast("long").alias("rd"),
+                  F.lit(1).cast("long").alias("ba"),
+                  F.lit(1).cast("long").alias("bb"),
+                  F.lit(0).cast("long").alias("bd")))
+    for b in range(14):
+        bit = (F.shiftright(F.col("n"), b) % 2) == 1
+        ra, rb, rd = F.col("ra"), F.col("rb"), F.col("rd")
+        ba, bb, bd = F.col("ba"), F.col("bb"), F.col("bd")
+        df = df.select(
+            "doc_id", "n",
+            F.when(bit, (ra * ba + rb * bb) % M).otherwise(ra)
+             .alias("ra"),
+            F.when(bit, (ra * bb + rb * bd) % M).otherwise(rb)
+             .alias("rb"),
+            F.when(bit, (rb * bb + rd * bd) % M).otherwise(rd)
+             .alias("rd"),
+            ((ba * ba + bb * bb) % M).alias("ba"),
+            ((ba * bb + bb * bd) % M).alias("bb"),
+            ((bb * bb + bd * bd) % M).alias("bd"))
+    return (df.select("doc_id", "n", F.col("rb").alias("fib_mod"))
+            .orderBy("doc_id"))
+
+
+def q_subset_sum_mitm(spark, sf_dir) -> DataFrame:
+    """Best subset sum ≤ target over 26 hash-weighted items, five
+    targets — engine: MEET IN THE MIDDLE (Horowitz–Sahni 1974). Each
+    half's 2^13 subset sums are generated by 13 union-doubling rounds
+    (S ∪ S+w, data-driven weights, nothing collected), and the
+    half-matching is the scalable as-of shape: union both sides and
+    take a running max over ONE window ordered by value — no
+    8192×8192 theta join. Oracle: level-wise 0/1 DP in a recursive
+    CTE (achievable-sum set after k items, deduped per level)."""
+    d = F.col("doc_id").cast("string")
+    items = (load(spark, sf_dir, "documents")
+             .filter(F.col("doc_id") < 26)
+             .select((F.col("doc_id") + 1).alias("idx"),
+                     (F.lit(1) + _mst_hash(F.concat(F.lit("ss:"), d))
+                      % 2000).alias("w")))
+    items = items.localCheckpoint(eager=True)
+    targets = (items.agg(F.sum("w").alias("tot"))
+               .crossJoin(spark.range(1, 6).select(
+                   F.col("id").alias("j")))
+               .select("j", F.expr("(j * tot) div 6").alias("target")))
+
+    def half_sums(lo: int, hi: int) -> DataFrame:
+        s = spark.range(1).select(F.lit(0).cast("long").alias("s"))
+        for k in range(lo, hi + 1):
+            it = items.filter(F.col("idx") == k).select("w")
+            # coalesce(1): the union would otherwise double the
+            # PARTITION count every round (2^13 empty-ish tasks by the
+            # end); 8192 longs belong in one partition.
+            s = s.unionByName(
+                s.crossJoin(F.broadcast(it))
+                 .select((F.col("s") + F.col("w")).alias("s"))
+            ).coalesce(1)
+            if k % 5 == 0:
+                s = s.localCheckpoint(eager=True)
+        return s.localCheckpoint(eager=True)
+
+    a = half_sums(1, 13)
+    b = half_sums(14, 26)
+    t_b = F.broadcast(targets)
+    arows = (a.crossJoin(t_b)
+             .filter(F.col("s") <= F.col("target"))
+             .select("j", (F.col("target") - F.col("s")).alias("v"),
+                     F.col("s").alias("a_s"), F.lit(1).alias("isq")))
+    brows = (b.crossJoin(t_b.select("j"))
+             .select("j", F.col("s").alias("v"),
+                     F.lit(None).cast("long").alias("a_s"),
+                     F.lit(0).alias("isq")))
+    w = (Window.partitionBy("j").orderBy("v", "isq")
+         .rowsBetween(Window.unboundedPreceding, 0))
+    u = (arows.unionByName(brows)
+         .withColumn("best_b", F.max(F.when(F.col("isq") == 0,
+                                            F.col("v"))).over(w)))
+    ans = (u.filter(F.col("isq") == 1)
+           .groupBy("j")
+           .agg(F.max(F.col("a_s") + F.col("best_b")).alias("best")))
+    return (targets.join(ans, "j")
+            .select("j", "target", "best").orderBy("j"))
+
+
+def q_crt_reconstruct(spark, sf_dir) -> DataFrame:
+    """Chinese-remainder reconstruction mod 45045 = 5·7·9·11·13 for 30
+    hash-derived residue tuples — engine: the Garner/CRT linear
+    recombination x = Σ rⱼ·Mⱼ·Mⱼ⁻¹ mod M as one JVM column expression
+    (the per-modulus inverses are fixed by the coprime basis). Oracle:
+    direct brute search — join range(45045) and keep the unique x
+    satisfying all five congruences. Agreement pins both existence
+    and uniqueness of the CRT solution."""
+    mods = [5, 7, 9, 11, 13]
+    big = 1
+    for m in mods:
+        big *= m
+    mi = [big // m for m in mods]
+    inv = [pow(mi[j], -1, mods[j]) for j in range(len(mods))]
+    d = F.col("doc_id").cast("string")
+    df = (load(spark, sf_dir, "documents")
+          .filter(F.col("doc_id") < 30).select("doc_id"))
+    for j, m in enumerate(mods):
+        df = df.withColumn(
+            f"r{j}", _mst_hash(F.concat(F.lit(f"crt{j}:"), d)) % m)
+    x = sum((F.col(f"r{j}") * (mi[j] * inv[j]) for j in
+             range(len(mods))), F.lit(0)) % big
+    return (df.withColumn("crt_x", x.cast("long"))
+            .orderBy("doc_id"))
+
+
+def q_nim_grundy(spark, sf_dir) -> DataFrame:
+    """Sprague–Grundy numbers for 3-pile Nim, piles 0..7 (512 states)
+    — engine: EXPLICIT backward induction over the game DAG: 21
+    pile-sum levels, each one join to already-solved successors plus a
+    candidate⟕successor anti-join computing mex, never touching XOR.
+    Oracle: Bouton's theorem (1901) — grundy = a⊕b⊕c, a one-line SQL
+    closed form. A structural theorem checking a brute game search."""
+    r8 = spark.range(8)
+    states = (r8.select(F.col("id").alias("a"))
+              .crossJoin(r8.select(F.col("id").alias("b")))
+              .crossJoin(r8.select(F.col("id").alias("c")))
+              .localCheckpoint(eager=True))
+
+    def lower(col_name):
+        keep = [c for c in ("a", "b", "c") if c != col_name]
+        return (states.filter(F.col(col_name) > 0)
+                .select("a", "b", "c",
+                        F.explode(F.sequence(
+                            F.lit(0), F.col(col_name) - 1))
+                        .alias(f"{col_name}2"),
+                        *[F.col(c).alias(f"{c}2") for c in keep]))
+
+    mv = (lower("a").select("a", "b", "c", "a2", "b2", "c2")
+          .unionByName(lower("b").select("a", "b", "c",
+                                         "a2", "b2", "c2"))
+          .unionByName(lower("c").select("a", "b", "c",
+                                         "a2", "b2", "c2"))
+          .localCheckpoint(eager=True))
+    cand = spark.range(22).select(F.col("id").alias("t"))
+    g = (states.filter(F.col("a") + F.col("b") + F.col("c") == 0)
+         .select("a", "b", "c", F.lit(0).cast("long").alias("g"))
+         .localCheckpoint(eager=True))
+    for s in range(1, 22):
+        # every frame here is <= ~5k rows: broadcast joins keep each of
+        # the 21 rounds to one-ish stage instead of ~5 shuffle stages —
+        # the wall here is scheduler latency, not bytes (r6, guide §3.1)
+        cur = states.filter(F.col("a") + F.col("b") + F.col("c") == s)
+        succ = (cur.join(F.broadcast(mv), ["a", "b", "c"])
+                .join(F.broadcast(g.select(F.col("a").alias("a2"),
+                                           F.col("b").alias("b2"),
+                                           F.col("c").alias("c2"),
+                                           F.col("g").alias("t"))),
+                      ["a2", "b2", "c2"])
+                .select("a", "b", "c", "t"))
+        mex = (cur.crossJoin(cand)
+               .join(F.broadcast(succ), ["a", "b", "c", "t"], "left_anti")
+               .groupBy("a", "b", "c")
+               .agg(F.min("t").alias("g")))
+        # coalesce: the union accumulates 32 shuffle partitions per
+        # level; 512 rows belong in one partition
+        g = g.unionByName(mex).coalesce(1).localCheckpoint(eager=True)
+    return g.orderBy("a", "b", "c")
+
+
+def q_max_flow(spark, sf_dir) -> DataFrame:
+    """Max flow on 12 hash-derived 8-node DAGs — engine computes FLOW
+    (Edmonds–Karp augmenting paths, one applyInPandas kernel per
+    graph: millions of independent flow problems is the cluster
+    shape). Oracle computes the dual CUT: exhaustive minimum s-t cut
+    over all 2^6 interior bipartitions in SQL. Agreement is the
+    max-flow/min-cut theorem (Ford–Fulkerson 1956) checked end to
+    end — the two sides never run the same algorithm."""
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 12).select("doc_id"))
+    r8 = spark.range(8)
+    pairs = (r8.select(F.col("id").alias("u"))
+             .crossJoin(r8.select(F.col("id").alias("v")))
+             .filter(F.col("u") < F.col("v")))
+
+    def tag(p):
+        return F.concat(F.lit(p), F.col("doc_id").cast("string"),
+                        F.lit(":"), F.col("u").cast("string"),
+                        F.lit(":"), F.col("v").cast("string"))
+
+    edges = (docs.crossJoin(pairs)
+             .filter((F.col("v") == F.col("u") + 1)
+                     | (_mst_hash(tag("mf:")) % 3 == 0))
+             .withColumn("cap", F.lit(1) + _mst_hash(tag("mc:")) % 30)
+             .select("doc_id", "u", "v", "cap"))
+
+    def ek(pdf):
+        import collections
+
+        import pandas as pd
+        cap = collections.defaultdict(int)
+        adj = collections.defaultdict(set)
+        for u, v, c in zip(pdf["u"], pdf["v"], pdf["cap"]):
+            u, v = int(u), int(v)
+            cap[(u, v)] += int(c)
+            adj[u].add(v)
+            adj[v].add(u)
+        flow = 0
+        while True:
+            par = {0: -1}
+            q = [0]
+            while q and 7 not in par:
+                x = q.pop(0)
+                for y in sorted(adj[x]):
+                    if y not in par and cap[(x, y)] > 0:
+                        par[y] = x
+                        q.append(y)
+            if 7 not in par:
+                break
+            path, y = [], 7
+            while par[y] != -1:
+                path.append((par[y], y))
+                y = par[y]
+            b = min(cap[e] for e in path)
+            for x, y in path:
+                cap[(x, y)] -= b
+                cap[(y, x)] += b
+            flow += b
+        return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])],
+                             "max_flow": [flow]})
+
+    return (edges.groupBy("doc_id")
+            .applyInPandas(ek, "doc_id long, max_flow long")
+            .orderBy("doc_id"))
+
+
+def q_scc_reach(spark, sf_dir) -> DataFrame:
+    """Strongly connected components of a 36-node, 2-out-degree
+    hash-derived digraph — engine: transitive closure by SQUARING
+    (R ← R∘R, 6 join+distinct rounds for paths up to 2^6), SCC id =
+    min mutually-reachable node. Oracle: the same closure grown ONE
+    edge per recursive-CTE step. O(log V) vs O(V) closure rounds
+    agreeing on every component id and size."""
+    V = 36
+    nodes = spark.range(V).select(F.col("id").alias("v"))
+    s = F.col("v").cast("string")
+    edges = (nodes.select(
+        "v", (_mst_hash(F.concat(F.lit("sc1:"), s)) % V).alias("t"))
+        .unionByName(nodes.select(
+            "v", (_mst_hash(F.concat(F.lit("sc2:"), s)) % V)
+            .alias("t")))
+        .distinct())
+    r = (edges.unionByName(nodes.select("v", F.col("v").alias("t")))
+         .distinct().localCheckpoint(eager=True))
+    for _ in range(6):
+        mid = r.select(F.col("v").alias("t"), F.col("t").alias("t2"))
+        r = (r.join(mid, "t").select("v", F.col("t2").alias("t"))
+             .distinct().localCheckpoint(eager=True))
+    rev = r.select(F.col("t").alias("v"), F.col("v").alias("t"))
+    scc = (r.join(rev, ["v", "t"])
+           .groupBy("v").agg(F.min("t").alias("scc_id")))
+    sizes = scc.groupBy("scc_id").agg(F.count(F.lit(1))
+                                      .alias("scc_size"))
+    return (scc.join(sizes, "scc_id")
+            .select("v", "scc_id", "scc_size").orderBy("v"))
+
+
+def q_rho_cycle(spark, sf_dir) -> DataFrame:
+    """Tail length, cycle minimum, and cycle length for every node of
+    a 64-node random functional graph f(v) = h(v) mod 64 — engine:
+    pure pointer doubling (6 rounds): f^64 lands every node on its
+    terminal cycle, a min-propagating doubling labels each cycle by
+    its minimum, and a cut-at-cycle distance doubling yields tails —
+    O(log n) joins, the parallel replacement for Floyd/Brent cycle
+    walking. Oracle: literal per-node walk in a recursive CTE
+    accumulating the visited list until the first repeat."""
+    V = 64
+    nodes = spark.range(V).select(F.col("id").alias("v"))
+    f = (nodes.select("v", (_mst_hash(F.concat(
+        F.lit("rho:"), F.col("v").cast("string"))) % V).alias("t"))
+        .localCheckpoint(eager=True))
+    p = f.select("v", F.col("t").alias("p"))
+    for _ in range(6):
+        nxt = p.select(F.col("v").alias("p"), F.col("p").alias("p2"))
+        p = (p.join(nxt, "p").select("v", F.col("p2").alias("p"))
+             .localCheckpoint(eager=True))
+    cyc = p.select(F.col("p").alias("v")).distinct()
+    cm = (cyc.join(f, "v")
+          .select("v", F.col("t").alias("p"), F.col("v").alias("m")))
+    for _ in range(6):
+        nxt = cm.select(F.col("v").alias("p"),
+                        F.col("p").alias("p2"), F.col("m").alias("m2"))
+        cm = (cm.join(nxt, "p")
+              .select("v", F.col("p2").alias("p"),
+                      F.least("m", "m2").alias("m"))
+              .localCheckpoint(eager=True))
+    cyc_info = cm.select("v", F.col("m").alias("cyc_min"))
+    sizes = cyc_info.groupBy("cyc_min").agg(F.count(F.lit(1))
+                                            .alias("cycle_len"))
+    iscyc = cyc_info.select("v", F.lit(1).alias("isc"))
+    t0 = (f.join(iscyc, "v", "left")
+          .select("v",
+                  F.when(F.col("isc") == 1, F.col("v"))
+                   .otherwise(F.col("t")).alias("p"),
+                  F.when(F.col("isc") == 1, F.lit(0)).otherwise(F.lit(1))
+                   .cast("long").alias("d")))
+    for _ in range(6):
+        nxt = t0.select(F.col("v").alias("p"),
+                        F.col("p").alias("p2"), F.col("d").alias("d2"))
+        t0 = (t0.join(nxt, "p")
+              .select("v", F.col("p2").alias("p"),
+                      (F.col("d") + F.col("d2")).alias("d"))
+              .localCheckpoint(eager=True))
+    return (t0.select("v", F.col("d").alias("tail"))
+            .join(p.select("v", F.col("p").alias("rep")), "v")
+            .join(cyc_info.select(F.col("v").alias("rep"), "cyc_min"),
+                  "rep")
+            .join(sizes, "cyc_min")
+            .select("v", "tail", "cyc_min", "cycle_len")
+            .orderBy("v"))
+
+
+def q_manacher_palindrome(spark, sf_dir) -> DataFrame:
+    """Longest palindromic substring length + total palindromic
+    substring count per document — engine: Manacher's O(n) algorithm
+    (1975) as a mapInPandas kernel, one linear pass per doc (per-doc
+    local work, embarrassingly parallel at corpus scale). Oracle: the
+    O(n²) definition — every substring materialized and tested
+    against its reverse in SQL. Counts are occurrence counts
+    (Σ d1 + Σ d2 = number of palindromic (start,len) pairs)."""
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 40)
+            .select("doc_id", F.substring("text", 1, 120).alias("t"))
+            .filter(F.length("t") > 0))
+
+    def kern(batches):
+        import pandas as pd
+        for pdf in batches:
+            out = []
+            for doc, s in zip(pdf["doc_id"], pdf["t"]):
+                n = len(s)
+                d1 = [0] * n
+                lo, hi = 0, -1
+                for i in range(n):
+                    k = 1 if i > hi else min(d1[lo + hi - i],
+                                             hi - i + 1)
+                    while i - k >= 0 and i + k < n \
+                            and s[i - k] == s[i + k]:
+                        k += 1
+                    d1[i] = k
+                    if i + k - 1 > hi:
+                        lo, hi = i - k + 1, i + k - 1
+                d2 = [0] * n
+                lo, hi = 0, -1
+                for i in range(n):
+                    k = 0 if i > hi else min(d2[lo + hi - i + 1],
+                                             hi - i + 1)
+                    while i - k - 1 >= 0 and i + k < n \
+                            and s[i - k - 1] == s[i + k]:
+                        k += 1
+                    d2[i] = k
+                    if i + k - 1 > hi:
+                        lo, hi = i - k, i + k - 1
+                mx = max(max(2 * x - 1 for x in d1),
+                         max((2 * x for x in d2), default=0))
+                out.append((int(doc), mx, sum(d1) + sum(d2)))
+            yield pd.DataFrame(out, columns=["doc_id", "max_pal",
+                                             "n_pal"])
+
+    return (docs.mapInPandas(
+        kern, "doc_id long, max_pal long, n_pal long")
+        .orderBy("doc_id"))
+
+
+_LCM30 = 2329089562800  # lcm(1..30): makes every block mean integral
+
+
+def q_isotonic_pav(spark, sf_dir) -> DataFrame:
+    """Isotonic (monotone nondecreasing) L2 regression over 10 series
+    of 30 hash-derived points, EXACT arithmetic: fits are reported as
+    mean·lcm(1..30), an integer for every possible block size. Engine:
+    pool-adjacent-violators (Ayer et al. 1955), the O(n) stack merge,
+    per series in applyInPandas. Oracle: the independent minimax
+    characterization fit_i = max_{l≤i} min_{u≥i} avg(y[l..u])
+    evaluated by brute segment enumeration in SQL. Two published
+    characterizations of the same unique minimizer."""
+    g10 = spark.range(10).select(F.col("id").alias("g"))
+    p30 = spark.range(30).select(F.col("id").alias("i"))
+    pts = (g10.crossJoin(p30)
+           .withColumn("y", _mst_hash(F.concat(
+               F.lit("iso:"), F.col("g").cast("string"), F.lit(":"),
+               F.col("i").cast("string"))) % 1000))
+
+    def pav(pdf):
+        import pandas as pd
+        pdf = pdf.sort_values("i")
+        blocks = []  # (sum, cnt)
+        for y in pdf["y"]:
+            blocks.append((int(y), 1))
+            while len(blocks) >= 2 and (
+                    blocks[-2][0] * blocks[-1][1]
+                    >= blocks[-1][0] * blocks[-2][1]):
+                s2, c2 = blocks.pop()
+                s1, c1 = blocks.pop()
+                blocks.append((s1 + s2, c1 + c2))
+        fits = []
+        for s, c in blocks:
+            fits.extend([s * (_LCM30 // c)] * c)
+        return pd.DataFrame({"g": pdf["g"], "i": pdf["i"],
+                             "fit_key": fits})
+
+    return (pts.groupBy("g")
+            .applyInPandas(pav, "g long, i long, fit_key long")
+            .orderBy("g", "i"))
+
+
+def q_bresenham_line(spark, sf_dir) -> DataFrame:
+    """First-octant Bresenham line rasterization for 40 hash-derived
+    (dx, dy) lines — engine: the ORDER-FREE closed form
+    y(x) = ⌊(2x·dy + dx − 1) / 2dx⌋ (midpoint rounding, half toward
+    zero), one explode + pure column arithmetic, no sequential state.
+    Oracle: the textbook stepwise error accumulator (D += 2dy or
+    2(dy−dx)) replayed in a recursive CTE. The closed form ≡ the
+    incremental loop is the identity under test (pinned point-wise in
+    pytest as well)."""
+    d = F.col("doc_id").cast("string")
+    inst = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 40)
+            .select("doc_id",
+                    (F.lit(20) + _mst_hash(F.concat(F.lit("bx:"), d))
+                     % 180).alias("dx")))
+    inst = inst.withColumn(
+        "dy", F.lit(1) + _mst_hash(F.concat(F.lit("by:"), d))
+        % F.col("dx"))
+    pts = (inst.select(
+        "doc_id", "dx", "dy",
+        F.explode(F.sequence(F.lit(0), F.col("dx"))).alias("x"))
+        .withColumn("y", F.expr(
+            "(2 * x * dy + dx - 1) div (2 * dx)")))
+    return (pts.groupBy("doc_id", "dx", "dy")
+            .agg(F.sum("y").alias("sum_y"),
+                 F.sha2(F.concat_ws(",", F.transform(
+                     F.array_sort(F.collect_list(
+                         F.struct("x", "y"))),
+                     lambda r: r["y"].cast("string"))), 256)
+                 .alias("y_sha"))
+            .orderBy("doc_id"))
+
+
+_RS_GEN = [255, 11, 81, 54, 239, 173, 200, 24]  # g1..g8 of
+# Π_{i=0..7}(x − α^i) over GF(256)/0x11D (QR code generator, deg 8);
+# re-derived from first principles in tests/test_rs_hamming_zeck.py
+
+
+def q_reed_solomon_parity(spark, sf_dir) -> DataFrame:
+    """RS(24,16)-style Reed–Solomon parity over GF(256)/0x11D for the
+    first 16 bytes of each document — engine: log/antilog-table
+    polynomial long division in a mapInPandas kernel (per-message
+    local work). Oracle: the SAME division replayed in SQL, but its
+    field multiply is built independently — a 256×256 product table
+    generated by Russian-peasant carry-less doubling (8 recursive
+    xtime levels + bit_xor fold), no log tables anywhere. Two
+    implementations of GF(256) arithmetic agreeing byte-for-byte."""
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 12)
+            .select("doc_id",
+                    F.rpad(F.substring("text", 1, 16), 16, " ")
+                    .alias("m")))
+
+    def kern(batches):
+        import pandas as pd
+        exp = [0] * 512
+        log = [0] * 256
+        x = 1
+        for i in range(255):
+            exp[i] = x
+            log[x] = i
+            x <<= 1
+            if x & 0x100:
+                x ^= 0x11D
+        for i in range(255, 512):
+            exp[i] = exp[i - 255]
+
+        def mul(a, b):
+            if a == 0 or b == 0:
+                return 0
+            return exp[log[a] + log[b]]
+
+        for pdf in batches:
+            out = []
+            for doc, m in zip(pdf["doc_id"], pdf["m"]):
+                rem = [0] * 8
+                for ch in m:
+                    f = rem[0] ^ (ord(ch) % 256)
+                    rem = rem[1:] + [0]
+                    for j in range(8):
+                        rem[j] ^= mul(_RS_GEN[j], f)
+                out.append((int(doc),
+                            "".join(f"{b:02x}" for b in rem)))
+            yield pd.DataFrame(out, columns=["doc_id", "ecc_hex"])
+
+    return (docs.mapInPandas(kern, "doc_id long, ecc_hex string")
+            .orderBy("doc_id"))
+
+
+def q_hamming74(spark, sf_dir) -> DataFrame:
+    """Hamming(7,4) single-error round-trip for 50 hash-derived
+    nibbles with a hash-chosen flipped bit — engine decodes by
+    MINIMUM DISTANCE: broadcast all 16 codewords, bit_count(xor)
+    and argmin (unique because d_min = 3). Oracle decodes
+    ALGEBRAICALLY: the 3-bit syndrome IS the error position, flip and
+    re-extract. The two decoders share only the encoder."""
+    d = F.col("doc_id").cast("string")
+    inst = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 50)
+            .select("doc_id",
+                    (_mst_hash(F.concat(F.lit("hd:"), d)) % 16)
+                    .alias("data"),
+                    (F.lit(1) + _mst_hash(F.concat(F.lit("he:"), d))
+                     % 7).alias("epos")))
+
+    def encode(col):
+        d1, d2 = col % 2, F.shiftright(col, 1) % 2
+        d3, d4 = F.shiftright(col, 2) % 2, F.shiftright(col, 3) % 2
+        p1 = (d1 + d2 + d4) % 2
+        p2 = (d1 + d3 + d4) % 2
+        p3 = (d2 + d3 + d4) % 2
+        return (p1 + p2 * 2 + d1 * 4 + p3 * 8 + d2 * 16 + d3 * 32
+                + d4 * 64)
+
+    recv = (inst.withColumn("cw0", encode(F.col("data")))
+            .withColumn("received", F.expr(
+                "cw0 ^ shiftleft(1, cast(epos - 1 as int))"))
+            .drop("cw0"))
+    book = (spark.range(16).select(F.col("id").alias("nib"))
+            .withColumn("cw", encode(F.col("nib"))))
+    joined = (recv.crossJoin(F.broadcast(book))
+              .withColumn("dist", F.bit_count(
+                  F.col("received").bitwiseXOR(F.col("cw")))))
+    w = Window.partitionBy("doc_id").orderBy("dist", "nib")
+    return (joined.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("doc_id", "data", "epos", "received",
+                    F.col("nib").alias("decoded"))
+            .orderBy("doc_id"))
+
+
+def q_zeckendorf(spark, sf_dir) -> DataFrame:
+    """Zeckendorf representation (unique sum of non-consecutive
+    Fibonacci numbers) of 40 hash-derived x < 100001 — engine: the
+    greedy algorithm as 24 pure column rewrites (largest Fibonacci
+    first; greedy is provably non-adjacent). Oracle: EXHAUSTIVE — a
+    recursive CTE generating all 121393 non-adjacent index subsets of
+    F2..F25 with their sums, joined on x; Zeckendorf's theorem says
+    exactly one matches, and it must be the greedy one."""
+    fibs = []
+    a, b = 1, 2
+    for i in range(2, 26):
+        fibs.append((i, a))
+        a, b = b, a + b
+    d = F.col("doc_id").cast("string")
+    df = (load(spark, sf_dir, "documents")
+          .filter(F.col("doc_id") < 40)
+          .select("doc_id",
+                  (F.lit(1) + _mst_hash(F.concat(F.lit("zk:"), d))
+                   % 100000).alias("x"))
+          .withColumn("rem", F.col("x"))
+          .withColumn("zmask", F.lit(0).cast("long")))
+    for i, v in sorted(fibs, key=lambda t: -t[1]):
+        take = F.col("rem") >= v
+        df = (df.withColumn("zmask",
+                            F.when(take, F.col("zmask")
+                                   + (1 << (i - 2)))
+                            .otherwise(F.col("zmask")))
+              .withColumn("rem", F.when(take, F.col("rem") - v)
+                          .otherwise(F.col("rem"))))
+    return (df.select("doc_id", "x", "zmask",
+                      F.bit_count("zmask").cast("long")
+                      .alias("n_terms"))
+            .orderBy("doc_id"))
+
+
+def q_fisher_exact(spark, sf_dir) -> DataFrame:
+    """Two-sided Fisher exact test as an EXACT RATIONAL (p_num/p_den,
+    both integers) for 25 hash-derived 2×2 tables with N = 40 —
+    engine: hypergeometric weights C(K,k)·C(N−K,n−k) via the
+    multiplicative binomial formula folded with F.aggregate (prefix
+    products are themselves binomials, so every intermediate division
+    is exact), denominator = Σ weights (Vandermonde). Oracle:
+    binomials built by the ADDITIVE Pascal recurrence in a recursive
+    CTE. Two classical binomial constructions, one exact p-value."""
+    d = F.col("doc_id").cast("string")
+    inst = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 25)
+            .select("doc_id", F.lit(40).alias("nn"),
+                    (F.lit(10) + _mst_hash(F.concat(F.lit("fk:"), d))
+                     % 21).alias("kk"),
+                    (F.lit(10) + _mst_hash(F.concat(F.lit("fn:"), d))
+                     % 21).alias("n")))
+    lo = F.greatest(F.lit(0), F.col("kk") + F.col("n") - F.col("nn"))
+    hi = F.least(F.col("kk"), F.col("n"))
+    inst = (inst.withColumn("lo", lo).withColumn("hi", hi)
+            .withColumn("k_obs", F.col("lo") + _mst_hash(
+                F.concat(F.lit("fo:"), d))
+                % (F.col("hi") - F.col("lo") + 1)))
+
+    def choose(n_col, k_col):
+        # Π_{i=1..k} (n-i+1)/i — every prefix product is itself a
+        # binomial, so each stepwise division is exact (and the
+        # double-precision quotient of exact ints < 2^53 is exact).
+        # Guard k=0: Spark's sequence(1, 0) would count DOWN.
+        return F.when(k_col <= 0, F.lit(1).cast("long")).otherwise(
+            F.aggregate(
+                F.sequence(F.lit(1), k_col),
+                F.lit(1).cast("long"),
+                lambda acc, i: ((acc * (n_col - i + 1)) / i)
+                .cast("long")))
+
+    sup = inst.withColumn(
+        "k", F.explode(F.sequence(F.col("lo"), F.col("hi"))))
+    sup = sup.withColumn(
+        "w", choose(F.col("kk"), F.col("k"))
+        * choose(F.col("nn") - F.col("kk"), F.col("n") - F.col("k")))
+    obs = sup.filter(F.col("k") == F.col("k_obs")).select(
+        "doc_id", F.col("w").alias("w_obs"))
+    return (sup.join(obs, "doc_id")
+            .groupBy("doc_id", "kk", "n", "k_obs")
+            .agg(F.sum(F.when(F.col("w") <= F.col("w_obs"),
+                              F.col("w")).otherwise(F.lit(0)))
+                 .alias("p_num"),
+                 F.sum("w").alias("p_den"))
+            .orderBy("doc_id"))
+
+
+def q_inversion_count(spark, sf_dir) -> DataFrame:
+    """Inversion count of each event-type's value sequence (ordered
+    by event_id) — engine: the O(n log n) merge-sort divide-and-
+    conquer count as a per-group applyInPandas kernel. Oracle: the
+    O(n²) definition — a self-join over all index pairs i < j with
+    vᵢ > vⱼ. Pure comparisons on the stored doubles, no float
+    arithmetic, so both engines decide identically."""
+    ev = (load(spark, sf_dir, "events")
+          .filter(F.col("event_id") < 2000)
+          .select("event_type", "event_id", "value"))
+
+    def kern(pdf):
+        import pandas as pd
+        vals = list(pdf.sort_values("event_id")["value"])
+
+        def rec(a):
+            if len(a) <= 1:
+                return a, 0
+            m = len(a) // 2
+            left, il = rec(a[:m])
+            right, ir = rec(a[m:])
+            merged, i, j, inv = [], 0, 0, il + ir
+            while i < len(left) and j < len(right):
+                if right[j] < left[i]:
+                    merged.append(right[j])
+                    j += 1
+                    inv += len(left) - i
+                else:
+                    merged.append(left[i])
+                    i += 1
+            merged.extend(left[i:])
+            merged.extend(right[j:])
+            return merged, inv
+        _, inv = rec(vals)
+        return pd.DataFrame({"event_type": [pdf["event_type"].iloc[0]],
+                             "n": [len(vals)], "inversions": [inv]})
+
+    return (ev.groupBy("event_type")
+            .applyInPandas(kern,
+                           "event_type string, n long, inversions long")
+            .orderBy("event_type"))
+
+
+def q_josephus(spark, sf_dir) -> DataFrame:
+    """Josephus survivor (k = 2) for 40 hash-derived circle sizes —
+    engine: the bitwise CLOSED FORM J(n) = 2L where n = 2^m + L,
+    highest power of two found by the shift-or fill trick (pure
+    column bit math, O(1) per row). Oracle: the textbook recurrence
+    J(1) = 0, J(m) = (J(m−1) + 2) mod m stepped m→n in a recursive
+    CTE. The classic 'cyclic left shift of n' identity, checked."""
+    d = F.col("doc_id").cast("string")
+    df = (load(spark, sf_dir, "documents")
+          .filter(F.col("doc_id") < 40)
+          .select("doc_id",
+                  (F.lit(1) + _mst_hash(F.concat(F.lit("jo:"), d))
+                   % 4000).alias("n")))
+    p = F.col("n")
+    for sh in (1, 2, 4, 8):
+        p = p.bitwiseOR(F.shiftright(p, sh))
+    hp = F.shiftright(p + 1, 1)  # highest power of two <= n
+    return (df.withColumn("survivor", 2 * (F.col("n") - hp))
+            .orderBy("doc_id"))
+
+
+def q_apsp_minplus(spark, sf_dir) -> DataFrame:
+    """All-pairs shortest paths on a 24-node weighted digraph —
+    engine: MIN-PLUS MATRIX SQUARING, D ← min(D, D⊗D), 5 join+min
+    rounds for paths up to 2^5 hops (the semiring view of APSP; the
+    diagonal zeros make each squaring monotone). Oracle: FLOYD–
+    WARSHALL, the pivot recurrence, replayed in a recursive CTE whose
+    state is the whole 24×24 matrix as one list. Two classical APSP
+    algorithms from different decompositions (path length vs pivot
+    set), agreeing on every finite distance."""
+    V = 24
+    inf = 10 ** 9
+    nodes = spark.range(V).select(F.col("id").alias("u"))
+    s = F.col("u").cast("string")
+    edges = (nodes.select(
+        "u", ((F.col("u") + 1) % V).alias("v"),
+        (F.lit(1) + _mst_hash(F.concat(F.lit("aw:"), s)) % 100)
+        .alias("d"))
+        .unionByName(nodes.select(
+            "u", (_mst_hash(F.concat(F.lit("at:"), s)) % V).alias("v"),
+            (F.lit(1) + _mst_hash(F.concat(F.lit("ax:"), s)) % 100)
+            .alias("d")))
+        .filter(F.col("u") != F.col("v"))
+        .groupBy("u", "v").agg(F.min("d").alias("d")))
+    dist = (edges.unionByName(
+        nodes.select("u", F.col("u").alias("v"),
+                     F.lit(0).cast("long").alias("d")))
+        .groupBy("u", "v").agg(F.min("d").alias("d"))
+        .localCheckpoint(eager=True))
+    for _ in range(5):
+        right = dist.select(F.col("u").alias("m"),
+                            F.col("v").alias("v2"),
+                            F.col("d").alias("d2"))
+        dist = (dist.withColumnRenamed("v", "m")
+                .join(right, "m")
+                .groupBy(F.col("u"), F.col("v2").alias("v"))
+                .agg(F.min(F.col("d") + F.col("d2")).alias("d"))
+                .localCheckpoint(eager=True))
+    return dist.filter(F.col("d") < inf).orderBy("u", "v")
+
+
+def q_determinant_bareiss(spark, sf_dir) -> DataFrame:
+    """Exact integer determinant of 20 hash-derived 6×6 matrices —
+    engine: Bareiss fraction-free Gaussian elimination (1968; every
+    intermediate division is exact, partial pivoting with sign
+    tracking) in an applyInPandas kernel. Oracle: the LEIBNIZ
+    definition — all 720 permutations enumerated by a recursive CTE,
+    sign from the inversion count, Σ sgn(σ)·Πaᵢσ(ᵢ). Definition vs
+    elimination, exact integers both ways."""
+    r6 = spark.range(6)
+    mat = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 20).select("doc_id")
+           .crossJoin(r6.select((F.col("id") + 1).alias("r")))
+           .crossJoin(r6.select((F.col("id") + 1).alias("c"))))
+    mat = mat.withColumn(
+        "val", _mst_hash(F.concat(
+            F.lit("dt:"), F.col("doc_id").cast("string"), F.lit(":"),
+            F.col("r").cast("string"), F.lit(":"),
+            F.col("c").cast("string"))) % 19 - 9)
+
+    def bareiss(pdf):
+        import pandas as pd
+        a = [[0] * 6 for _ in range(6)]
+        for r, c, v in zip(pdf["r"], pdf["c"], pdf["val"]):
+            a[int(r) - 1][int(c) - 1] = int(v)
+        sign, prev = 1, 1
+        for k in range(5):
+            if a[k][k] == 0:
+                for i in range(k + 1, 6):
+                    if a[i][k] != 0:
+                        a[k], a[i] = a[i], a[k]
+                        sign = -sign
+                        break
+                else:
+                    return pd.DataFrame(
+                        {"doc_id": [int(pdf["doc_id"].iloc[0])],
+                         "det": [0]})
+            for i in range(k + 1, 6):
+                for j in range(k + 1, 6):
+                    num = a[i][j] * a[k][k] - a[i][k] * a[k][j]
+                    assert num % prev == 0
+                    a[i][j] = num // prev
+                a[i][k] = 0
+            prev = a[k][k]
+        return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])],
+                             "det": [sign * a[5][5]]})
+
+    return (mat.groupBy("doc_id")
+            .applyInPandas(bareiss, "doc_id long, det long")
+            .orderBy("doc_id"))
+
+
+def q_easter_date(spark, sf_dir) -> DataFrame:
+    """Gregorian Easter for 1900–2299 — engine: GAUSS's algorithm
+    (1800, with both exception rules d=29/e=6 → Apr 19 and d=28/e=6/
+    (11M+11)%30<19 → Apr 18) as pure column arithmetic. Oracle: the
+    ANONYMOUS GREGORIAN algorithm (Meeus/Jones/Butcher 1876) — a
+    different published closed form with no exception cases. 400
+    years, two computus derivations, identical dates."""
+    yr = spark.range(1900, 2300).select(F.col("id").alias("year"))
+    a = F.col("year") % 19
+    b = F.col("year") % 4
+    c = F.col("year") % 7
+    k = F.floor(F.col("year") / 100).cast("long")
+    p = F.floor((13 + 8 * k) / 25).cast("long")
+    q = F.floor(k / 4).cast("long")
+    m = (15 - p + k - q) % 30
+    n = (4 + k - q) % 7
+    d = (19 * a + m) % 30
+    e = (2 * b + 4 * c + 6 * d + n) % 7
+    off = d + e  # days after March 22
+    day = F.when((d == 29) & (e == 6), F.lit(50 - 31)) \
+        .when((d == 28) & (e == 6) & ((11 * m + 11) % 30 < 19),
+              F.lit(49 - 31)) \
+        .otherwise(F.when(off <= 9, off + 22).otherwise(off - 9))
+    month = F.when((d == 29) & (e == 6), F.lit(4)) \
+        .when((d == 28) & (e == 6) & ((11 * m + 11) % 30 < 19),
+              F.lit(4)) \
+        .otherwise(F.when(off <= 9, F.lit(3)).otherwise(F.lit(4)))
+    return (yr.select("year", month.cast("long").alias("em"),
+                      day.cast("long").alias("ed"))
+            .orderBy("year"))
+
+
+def q_catalan_numbers(spark, sf_dir) -> DataFrame:
+    """Catalan numbers C_0..C_25 — engine: the CLOSED FORM
+    C_n = C(2n,n)/(n+1), the central binomial built as an exact
+    integer multiplicative fold Π(n+k)/k with stepwise-exact `div`
+    (each partial product is itself a binomial, so every division is
+    exact), one JVM higher-order aggregate per row. Oracle: the
+    CONVOLUTION RECURRENCE C_{n+1} = Σ C_i·C_{n−i} carried as a list
+    through a recursive CTE. Segner's recurrence vs the binomial
+    quotient — two classical derivations, exact integers both ways."""
+    return (spark.range(0, 26).select(F.col("id").alias("n"))
+            .select("n", F.expr(
+                "case when n = 0 then cast(1 as bigint) else "
+                "aggregate(sequence(1, n), cast(1 as bigint), "
+                "(acc, k) -> (acc * (n + k)) div k) div (n + 1) "
+                "end").alias("cat"))
+            .orderBy("n"))
+
+
+def q_gray_code(spark, sf_dir) -> DataFrame:
+    """Reflected binary Gray code for n = 0..1023 — engine: the
+    BITWISE CLOSED FORM g(n) = n XOR (n >> 1), one codegen
+    expression. Oracle: the REFLECTION CONSTRUCTION G(k+1) =
+    G(k) ++ reverse(G(k)) + 2^k grown as a list through 10 levels of
+    a recursive CTE. Construction-by-mirroring vs the xor identity —
+    the standard proof equivalence, checked value by value."""
+    return (spark.range(0, 1024).select(F.col("id").alias("n"))
+            .select("n", F.col("n").bitwiseXOR(
+                F.shiftright(F.col("n"), 1)).alias("gray"))
+            .orderBy("n"))
+
+
+def q_euler_totient(spark, sf_dir) -> DataFrame:
+    """Euler's totient φ(n) for n = 1..2000 — engine: TRIAL-DIVISION
+    FACTORIZATION in an Arrow mapInPandas kernel, φ = Π p^(k−1)(p−1)
+    over the prime-power decomposition. Oracle: the DEFINITION —
+    count of k ≤ n with gcd(n,k) = 1, a 4M-pair join over DuckDB's
+    builtin gcd. Multiplicative formula vs direct coprime census."""
+
+    def phi_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            ns, out = pdf["n"], []
+            for n0 in ns:
+                m, phi = int(n0), 1
+                d = 2
+                while d * d <= m:
+                    if m % d == 0:
+                        pk = 1
+                        while m % d == 0:
+                            m //= d
+                            pk *= d
+                        phi *= (pk // d) * (d - 1)
+                    d += 1
+                if m > 1:
+                    phi *= m - 1
+                out.append(phi)
+            yield pd.DataFrame({"n": ns, "phi": out})
+
+    return (spark.range(1, 2001).select(F.col("id").alias("n"))
+            .repartition(8)
+            .mapInPandas(phi_kernel, "n long, phi long")
+            .orderBy("n"))
+
+
+def q_mobius_function(spark, sf_dir) -> DataFrame:
+    """Möbius μ(n) for n = 1..1000 — engine: FACTORIZATION VIEW in
+    pure column algebra: primes sieved by a divisor anti-join, ω(n)
+    = count of prime divisors by a non-equi join, squarefree test
+    n mod p² — μ = 0 if not squarefree else (−1)^ω. Oracle: the
+    DIRICHLET-INVERSE RECURRENCE μ(1)=1, μ(n) = −Σ_{d|n, d<n} μ(d)
+    (from Σ_{d|n} μ(d) = [n=1]) stepped 1000 levels in a recursive
+    CTE. Local factor structure vs the global summatory identity."""
+    N = 1000
+    d = spark.range(2, N + 1).select(F.col("id").alias("p"))
+    e = spark.range(2, 33).select(F.col("id").alias("e"))
+    composite = d.join(
+        F.broadcast(e),
+        (F.col("e") < F.col("p")) & (F.col("p") % F.col("e") == 0),
+        "left_semi")
+    primes = d.join(composite, "p", "left_anti")
+    n_df = spark.range(1, N + 1).select(F.col("id").alias("n"))
+    fac = (n_df.join(F.broadcast(primes),
+                     F.col("n") % F.col("p") == 0, "left")
+           .groupBy("n")
+           .agg(F.count("p").alias("omega"),
+                F.max(F.when(
+                    F.col("n") % (F.col("p") * F.col("p")) == 0, 1)
+                    .otherwise(0)).alias("sq")))
+    mu = (F.when(F.col("sq") == 1, F.lit(0))
+          .otherwise(F.when(F.col("omega") % 2 == 0, 1)
+                     .otherwise(-1)))
+    return (fac.select("n", mu.cast("long").alias("mu"))
+            .orderBy("n"))
+
+
+def q_simpson_integrate(spark, sf_dir) -> DataFrame:
+    """Composite Simpson's rule on 30 hash-derived integer cubics
+    over [0,12], h=1 — engine: the QUADRATURE NODE SUM Σ wₖ·f(k)
+    with weights 1,4,2,…,4,1, distributed as a node explode +
+    groupBy (returns 3∫ so everything stays integer). Oracle: the
+    ANTIDERIVATIVE — 3∫ = 15552a + 1728b + 216c + 36d from
+    F(x) = ax⁴/4 + bx³/3 + cx²/2 + dx evaluated at 12. Simpson is
+    EXACT on cubics (its degree-3 exactness), so the two agree to
+    the integer."""
+    d = F.col("doc_id").cast("string")
+    coef = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 30)
+            .select(
+                "doc_id",
+                (_mst_hash(F.concat(F.lit("sa:"), d)) % 21 - 10)
+                .alias("a"),
+                (_mst_hash(F.concat(F.lit("sb:"), d)) % 21 - 10)
+                .alias("b"),
+                (_mst_hash(F.concat(F.lit("sc:"), d)) % 21 - 10)
+                .alias("c"),
+                (_mst_hash(F.concat(F.lit("sd:"), d)) % 21 - 10)
+                .alias("dd")))
+    nodes = spark.range(0, 13).select(F.col("id").alias("k"))
+    w = (F.when((F.col("k") == 0) | (F.col("k") == 12), 1)
+         .otherwise(F.when(F.col("k") % 2 == 1, 4).otherwise(2)))
+    x = F.col("k")
+    fx = (F.col("a") * x * x * x + F.col("b") * x * x
+          + F.col("c") * x + F.col("dd"))
+    return (coef.crossJoin(F.broadcast(nodes))
+            .groupBy("doc_id").agg(F.sum(w * fx).alias("i3"))
+            .orderBy("doc_id"))
+
+
+def q_farey_neighbors(spark, sf_dir) -> DataFrame:
+    """Successor pairs of the Farey sequence F_30 — engine: the
+    UNIMODULARITY THEOREM — a/b and c/d are F_n-adjacent iff
+    bc − ad = 1 and b + d > n — as a non-equi join over the reduced
+    fractions (reduced = divisor anti-join, no gcd needed). Oracle:
+    the DEFINITION — sort all reduced fractions by value and take
+    LEAD. The join discovers the ordering without ever sorting;
+    Cauchy's adjacency criterion vs the sorted walk."""
+    N = 30
+    fr = (spark.range(1, N + 1).select(F.col("id").alias("b"))
+          .crossJoin(spark.range(0, N + 1)
+                     .select(F.col("id").alias("a")))
+          .filter(F.col("a") <= F.col("b")))
+    g = spark.range(2, N + 1).select(F.col("id").alias("g"))
+    common = fr.join(
+        F.broadcast(g),
+        (F.col("a") % F.col("g") == 0)
+        & (F.col("b") % F.col("g") == 0), "left_semi")
+    red = fr.join(common, ["a", "b"], "left_anti")
+    right = red.select(F.col("a").alias("c"), F.col("b").alias("d2"))
+    adj = red.join(
+        F.broadcast(right),
+        (F.col("b") * F.col("c") - F.col("a") * F.col("d2") == 1)
+        & (F.col("b") + F.col("d2") > N))
+    return (adj.select("a", "b", "c", F.col("d2").alias("d"))
+            .orderBy("a", "b"))
+
+
+def q_stern_brocot(spark, sf_dir) -> DataFrame:
+    """Stern–Brocot tree paths for 40 hash-derived rationals —
+    engine: the CONTINUED-FRACTION rule — Euclid's quotients
+    [a₀;a₁,…,aₖ] become alternating R/L runs with the last run
+    shortened by one (the CF↔SB correspondence), an Arrow
+    mapInPandas kernel. Oracle: MEDIANT DESCENT — the binary-search
+    walk from (0/1, 1/0) through mediants replayed step by step in
+    a recursive CTE with exact cross-multiplied comparisons. Two
+    faces of the same tree: arithmetic of quotients vs navigation."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 40)
+           .select(
+               "doc_id",
+               (1 + _mst_hash(F.concat(F.lit("sp:"), d)) % 99)
+               .alias("p0"),
+               (1 + _mst_hash(F.concat(F.lit("sq:"), d)) % 99)
+               .alias("q0")))
+
+    def sb_kernel(it):
+        import math
+
+        import pandas as pd
+        for pdf in it:
+            ps, qs, paths = [], [], []
+            for p0, q0 in zip(pdf["p0"], pdf["q0"]):
+                gg = math.gcd(int(p0), int(q0))
+                p, q = int(p0) // gg, int(q0) // gg
+                cf, a, b = [], p, q
+                while b:
+                    cf.append(a // b)
+                    a, b = b, a % b
+                cf[-1] -= 1
+                paths.append("".join(
+                    ("R" if i % 2 == 0 else "L") * c
+                    for i, c in enumerate(cf)))
+                ps.append(p)
+                qs.append(q)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": ps,
+                                "q": qs, "path": paths})
+
+    return (raw.repartition(4)
+            .mapInPandas(sb_kernel,
+                         "doc_id long, p long, q long, path string")
+            .orderBy("doc_id"))
+
+
+def q_stirling2(spark, sf_dir) -> DataFrame:
+    """Stirling numbers of the second kind S(n,k), 1<=k<=n<=12 —
+    engine: the INCLUSION-EXCLUSION closed form — k!*S(n,k) =
+    sum_j (-1)^j C(k,j) (k-j)^n (the surjection count), evaluated
+    as a j-explode + groupBy with binomials from a factorial
+    lookup literal; everything stays in exact longs (12^12 < 2^53
+    so the pow round-trip is exact). Oracle: the TRIANGLE
+    RECURRENCE S(n,k) = k*S(n-1,k) + S(n-1,k-1) grown level by
+    level in a recursive CTE carrying the whole row as a list.
+    Multiplicative sieve vs additive recurrence."""
+    fact = [1] * 13
+    for i in range(1, 13):
+        fact[i] = fact[i - 1] * i
+    fl = F.array(*[F.lit(v) for v in fact])
+    nk = (spark.range(1, 13).select(F.col("id").alias("n"))
+          .join(spark.range(1, 13).select(F.col("id").alias("k")),
+                F.col("k") <= F.col("n")))
+    j = spark.range(0, 13).select(F.col("id").alias("j"))
+    t = nk.join(F.broadcast(j), F.col("j") <= F.col("k"))
+    binom = (F.element_at(fl, F.col("k").cast("int") + 1)
+             / (F.element_at(fl, F.col("j").cast("int") + 1)
+                * F.element_at(fl, (F.col("k") - F.col("j"))
+                               .cast("int") + 1))).cast("long")
+    sign = F.when(F.col("j") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
+    powkj = F.pow((F.col("k") - F.col("j")).cast("double"),
+                  F.col("n").cast("double")).cast("long")
+    return (t.groupBy("n", "k")
+            .agg(((F.sum(sign * binom * powkj))
+                  / F.element_at(fl, F.col("k").cast("int") + 1))
+                 .cast("long").alias("s"))
+            .orderBy("n", "k"))
+
+
+def q_derangements(spark, sf_dir) -> DataFrame:
+    """Subfactorials !n for n=0..20 — engine: the ALTERNATING-SUM
+    closed form !n = sum_k (-1)^k n!/k!, an explode over k with
+    exact long partial quotients n!/k! built from a factorial
+    literal (20! = 2.43e18 fits int64). Oracle: the two-term
+    RECURRENCE D(n) = (n-1)(D(n-1) + D(n-2)) in a linear recursive
+    CTE. Inclusion-exclusion vs recurrence."""
+    fact = [1] * 21
+    for i in range(1, 21):
+        fact[i] = fact[i - 1] * i
+    fl = F.array(*[F.lit(v) for v in fact])
+    n = spark.range(0, 21).select(F.col("id").alias("n"))
+    k = spark.range(0, 21).select(F.col("id").alias("k"))
+    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
+    quot = (F.element_at(fl, F.col("n").cast("int") + 1)
+            / F.element_at(fl, F.col("k").cast("int") + 1)) \
+        .cast("long")
+    sign = F.when(F.col("k") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
+    return (t.groupBy("n").agg(F.sum(sign * quot).alias("d"))
+            .orderBy("n"))
+
+
+def q_lucas_binomial(spark, sf_dir) -> DataFrame:
+    """C(n,k) mod 13 for 40 hash-derived pairs with n < 500 —
+    engine: LUCAS' THEOREM — write n,k in base 13 and multiply the
+    per-digit small binomials C(n_i,k_i) mod 13 from a 13x13 table
+    literal (a digit pair with k_i > n_i zeroes the product), all
+    as one column expression over three base-13 digits. Oracle:
+    PASCAL'S RECURRENCE mod 13 — the triangle grown row by row in
+    a recursive CTE (list state), then the (n,k) pairs joined
+    against row n. Digit-product theorem vs additive triangle."""
+    P = 13
+    tab = [0] * (P * P)
+    for ni in range(P):
+        c = 1
+        for ki in range(ni + 1):
+            tab[ni * P + ki] = c % P
+            c = c * (ni - ki) // (ki + 1)
+    tl = F.array(*[F.lit(v) for v in tab])
+    d = F.col("doc_id").cast("string")
+    pairs = (load(spark, sf_dir, "documents")
+             .filter(F.col("doc_id") < 40)
+             .select(
+                 "doc_id",
+                 (_mst_hash(F.concat(F.lit("lb:"), d)) % 500)
+                 .alias("n")))
+    pairs = pairs.withColumn(
+        "k", _mst_hash(F.concat(F.lit("lk:"), d)) % (F.col("n") + 1))
+    prod = F.lit(1)
+    for i in range(3):
+        ni = (F.col("n") / (P ** i)).cast("long") % P
+        ki = (F.col("k") / (P ** i)).cast("long") % P
+        prod = prod * F.element_at(tl, (ni * P + ki).cast("int") + 1)
+    return (pairs.select("doc_id", "n", "k",
+                         (prod % P).alias("c_mod"))
+            .orderBy("doc_id"))
+
+
+def q_wythoff_cold(spark, sf_dir) -> DataFrame:
+    """The first 60 cold (P-)positions of Wythoff's game — engine:
+    the BEATTY closed form a_n = floor(n*phi), b_n = a_n + n, with
+    floor(n*phi) computed exactly as (n + isqrt(5n^2)) div 2 using
+    an integer-corrected sqrt (5n^2 is never a perfect square, and
+    two CASE correction steps pin the double sqrt to the true
+    isqrt). Oracle: the GREEDY MEX construction — a_n is the
+    smallest positive integer in no earlier pair and b_n = a_n + n,
+    replayed in a recursive CTE carrying the used-set as a list.
+    Closed form from the golden ratio vs the game-theoretic
+    definition."""
+    n = spark.range(1, 61).select(F.col("id").alias("n"))
+    x = F.col("n") * F.col("n") * 5
+    s0 = F.sqrt(x.cast("double")).cast("long")
+    s1 = F.when((s0 + 1) * (s0 + 1) <= x, s0 + 1).otherwise(s0)
+    s = F.when(s1 * s1 > x, s1 - 1).otherwise(s1)
+    a = ((F.col("n") + s) / 2).cast("long")
+    return (n.select("n", a.alias("a"), (a + F.col("n")).alias("b"))
+            .orderBy("n"))
+
+
+def q_r2_lattice(spark, sf_dir) -> DataFrame:
+    """r2(n) — number of representations of n as an ordered pair of
+    squares (signs included) for n=1..400 — engine: JACOBI'S
+    FORMULA r2(n) = 4*(d1(n) - d3(n)) where d1/d3 count divisors
+    congruent to 1/3 mod 4, computed as a divisor census join.
+    Oracle: the DEFINITION — count lattice points (a,b) with
+    a^2+b^2 = n over the full signed grid. A divisor-class theorem
+    vs brute lattice enumeration."""
+    n = spark.range(1, 401).select(F.col("id").alias("n"))
+    d = spark.range(1, 401).select(F.col("id").alias("d"))
+    divs = n.join(F.broadcast(d),
+                  (F.col("d") <= F.col("n"))
+                  & (F.col("n") % F.col("d") == 0))
+    return (divs.groupBy("n")
+            .agg((4 * (F.sum(F.when(F.col("d") % 4 == 1, 1)
+                             .otherwise(0))
+                       - F.sum(F.when(F.col("d") % 4 == 3, 1)
+                               .otherwise(0)))).alias("r2"))
+            .orderBy("n"))
+
+
+def q_sigma_classify(spark, sf_dir) -> DataFrame:
+    """sigma(n) and the perfect/abundant/deficient class for
+    n=1..600 — engine: the DIVISOR CENSUS — sigma = sum of divisors
+    found by an explicit divisibility join. Oracle: the
+    MULTIPLICATIVE closed form — factor each n into prime powers
+    (primes by non-existence of a smaller divisor, exponents by
+    maximal p^k | n) and take the product of geometric sums
+    (p^(e+1)-1)/(p-1). Census vs multiplicativity."""
+    n = spark.range(1, 601).select(F.col("id").alias("n"))
+    d = spark.range(1, 601).select(F.col("id").alias("d"))
+    divs = n.join(F.broadcast(d),
+                  (F.col("d") <= F.col("n"))
+                  & (F.col("n") % F.col("d") == 0))
+    sig = divs.groupBy("n").agg(F.sum("d").alias("sigma"))
+    cls = (F.when(F.col("sigma") == 2 * F.col("n"), "perfect")
+           .when(F.col("sigma") > 2 * F.col("n"), "abundant")
+           .otherwise("deficient"))
+    return sig.select("n", "sigma", cls.alias("cls")).orderBy("n")
+
+
+def q_pell_fundamental(spark, sf_dir) -> DataFrame:
+    """Fundamental solutions of Pell's equation x^2 - n*y^2 = 1 for
+    non-square n in 2..31 — engine: the CONTINUED-FRACTION method —
+    the standard (m,d,a) iteration for the CF of sqrt(n) with
+    convergent recurrences, stopping at the first convergent that
+    solves the equation (Lagrange's theorem guarantees it), as an
+    Arrow kernel in exact Python ints. Oracle: EXHAUSTIVE SEARCH —
+    the least x in 2..10^4+1 for which (x^2-1)/n is a perfect
+    square (all fundamental x for n<=31 are <=9801). Algebraic
+    number theory vs brute force."""
+    ns = (spark.range(2, 32).select(F.col("id").alias("n"))
+          .filter(F.sqrt(F.col("id").cast("double")).cast("long")
+                  * F.sqrt(F.col("id").cast("double")).cast("long")
+                  != F.col("id")))
+
+    def pell_kernel(it):
+        import math
+
+        import pandas as pd
+        for pdf in it:
+            xs, ys = [], []
+            for n in pdf["n"]:
+                n = int(n)
+                a0 = math.isqrt(n)
+                m, dd, a = 0, 1, a0
+                pm1, p = 1, a0
+                qm1, q = 0, 1
+                while p * p - n * q * q != 1:
+                    m = dd * a - m
+                    dd = (n - m * m) // dd
+                    a = (a0 + m) // dd
+                    pm1, p = p, a * p + pm1
+                    qm1, q = q, a * q + qm1
+                xs.append(p)
+                ys.append(q)
+            yield pd.DataFrame({"n": pdf["n"], "x": xs, "y": ys})
+
+    return (ns.repartition(4)
+            .mapInPandas(pell_kernel, "n long, x long, y long")
+            .orderBy("n"))
+
+
+def q_miller_rabin(spark, sf_dir) -> DataFrame:
+    """Primality of 60 hash-derived odd numbers below 10^6 —
+    engine: deterministic MILLER-RABIN with witness set {2,3,5,7}
+    (provably exact below 3,215,031,751), the strong-pseudoprime
+    test run as an Arrow kernel with exact modular exponentiation.
+    Oracle: the DEFINITION — a composite below 10^6 has a divisor
+    in 2..1000, so primality is the non-existence of one. Fermat
+    witnesses vs trial division."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 60)
+           .select(
+               "doc_id",
+               (5 + 2 * (_mst_hash(F.concat(F.lit("mr:"), d))
+                         % 500000)).alias("n")))
+
+    def mr_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            flags = []
+            for n in pdf["n"]:
+                n = int(n)
+                if n < 2:
+                    flags.append(0)
+                    continue
+                for p in (2, 3, 5, 7):
+                    if n % p == 0:
+                        flags.append(1 if n == p else 0)
+                        break
+                else:
+                    dd, s = n - 1, 0
+                    while dd % 2 == 0:
+                        dd //= 2
+                        s += 1
+                    ok = True
+                    for a in (2, 3, 5, 7):
+                        x = pow(a, dd, n)
+                        if x in (1, n - 1):
+                            continue
+                        for _ in range(s - 1):
+                            x = x * x % n
+                            if x == n - 1:
+                                break
+                        else:
+                            ok = False
+                            break
+                    flags.append(1 if ok else 0)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "n": pdf["n"], "is_prime": flags})
+
+    return (raw.repartition(4)
+            .mapInPandas(mr_kernel,
+                         "doc_id long, n long, is_prime int")
+            .orderBy("doc_id"))
+
+
+def _hash_series(prefix: str, n_groups: int, length: int, mod: int,
+                 shift: int = 0):
+    """(g, pos, v) grid with v = sha-hash(prefix:g:pos) % mod - shift,
+    shared by the sequence-shaped battery rows."""
+    return (
+        "SELECT g.i AS g, p.j AS pos, "
+        f"cast('0x' || substr(sha256('{prefix}:' || "
+        "cast(g.i as varchar) || ':' || cast(p.j as varchar)), "
+        f"1, 8) as bigint) % {mod} - {shift} AS v "
+        f"FROM range(0, {n_groups}) g(i), range(0, {length}) p(j)")
+
+
+def q_kadane_max_subarray(spark, sf_dir) -> DataFrame:
+    """Maximum non-empty contiguous subarray sum over 16 hash-derived
+    64-long integer sequences — engine: the PREFIX-MIN identity —
+    best = max_i (prefix_i - min(0, min_{j<i} prefix_j)), two
+    window functions and a groupBy (Kadane linearized for a
+    distributed engine: no sequential carry, just running
+    extremes). Oracle: the DEFINITION — enumerate every (i,j)
+    span, sum its elements through a range join, take the max.
+    O(n) windows vs O(n^3) enumeration."""
+    g = spark.range(0, 16).select(F.col("id").alias("g"))
+    p = spark.range(0, 64).select(F.col("id").alias("pos"))
+    gs = F.col("g").cast("string")
+    ps = F.col("pos").cast("string")
+    t = g.crossJoin(F.broadcast(p)).select(
+        "g", "pos",
+        (_mst_hash(F.concat(F.lit("ka:"), gs, F.lit(":"), ps))
+         % 41 - 20).alias("v"))
+    w = Window.partitionBy("g").orderBy("pos")
+    wprev = (Window.partitionBy("g").orderBy("pos")
+             .rowsBetween(Window.unboundedPreceding, -1))
+    t = t.withColumn("prefix", F.sum("v").over(w))
+    t = t.withColumn(
+        "base", F.least(F.lit(0), F.coalesce(
+            F.min("prefix").over(wprev), F.lit(0))))
+    return (t.groupBy("g")
+            .agg(F.max(F.col("prefix") - F.col("base")).alias("best"))
+            .orderBy("g"))
+
+
+def q_water_trapping(spark, sf_dir) -> DataFrame:
+    """Trapped rain water over 16 hash-derived 64-long elevation
+    profiles — engine: the PER-CELL formulation — water_i =
+    max(0, min(runmax_left_i, runmax_right_i) - h_i) via two
+    opposing running-max windows, summed per group. Oracle: the
+    HORIZONTAL SLAB decomposition — for each water level l, count
+    the cells with h < l lying strictly between the first and last
+    columns reaching l; sum over levels. Vertical columns vs
+    horizontal slabs — same volume by Fubini."""
+    g = spark.range(0, 16).select(F.col("id").alias("g"))
+    p = spark.range(0, 64).select(F.col("id").alias("pos"))
+    gs = F.col("g").cast("string")
+    ps = F.col("pos").cast("string")
+    t = g.crossJoin(F.broadcast(p)).select(
+        "g", "pos",
+        (_mst_hash(F.concat(F.lit("wt:"), gs, F.lit(":"), ps))
+         % 16).alias("h"))
+    wl = (Window.partitionBy("g").orderBy("pos")
+          .rowsBetween(Window.unboundedPreceding, 0))
+    wr = (Window.partitionBy("g").orderBy(F.col("pos").desc())
+          .rowsBetween(Window.unboundedPreceding, 0))
+    t = (t.withColumn("ml", F.max("h").over(wl))
+         .withColumn("mr", F.max("h").over(wr)))
+    water = F.greatest(
+        F.lit(0), F.least(F.col("ml"), F.col("mr")) - F.col("h"))
+    return (t.groupBy("g").agg(F.sum(water).alias("water"))
+            .orderBy("g"))
+
+
+def q_string_period(spark, sf_dir) -> DataFrame:
+    """Smallest weak period of 40 constructed near-periodic strings
+    (a 4-char stem repeated 6x plus a partial tail) — engine:
+    KMP's PREFIX FUNCTION — the smallest period is n - fail[n],
+    the failure chain computed as an Arrow kernel. Oracle: the
+    BORDER characterization — the least p for which the string
+    equals its own p-shift, i.e. substr(s, p+1) = substr(s, 1,
+    n-p), found by direct comparison over all p. Failure links vs
+    the definition of a border."""
+    base = F.lower(F.substring(
+        F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""), 1, 4))
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 40)
+           .select("doc_id",
+                   F.concat(
+                       F.repeat(base, 6),
+                       F.substring(base, 1,
+                                   (F.col("doc_id") % 4).cast("int")))
+                   .alias("s"))
+           .filter(F.length("s") >= 8))
+
+    def kmp_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            periods = []
+            for s in pdf["s"]:
+                n = len(s)
+                fail = [0] * (n + 1)
+                k = 0
+                for i in range(1, n):
+                    while k and s[i] != s[k]:
+                        k = fail[k]
+                    if s[i] == s[k]:
+                        k += 1
+                    fail[i + 1] = k
+                periods.append(n - fail[n])
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "s": pdf["s"], "period": periods})
+
+    return (raw.repartition(4)
+            .mapInPandas(kmp_kernel,
+                         "doc_id long, s string, period int")
+            .orderBy("doc_id"))
+
+
+def q_gauss_circle(spark, sf_dir) -> DataFrame:
+    """Gauss circle problem N(r) — lattice points inside x^2+y^2 <=
+    r^2 for r=1..60 — engine: the 1-D REDUCTION — N(r) = sum_x
+    (2*isqrt(r^2-x^2) + 1) over x=-r..r, with the double sqrt
+    pinned to the true integer root by two CASE corrections.
+    Oracle: the 2-D CENSUS — count the (x,y) grid directly.
+    Dimension reduction vs brute enumeration."""
+    r = spark.range(1, 61).select(F.col("id").alias("r"))
+    x = spark.range(-60, 61).select(F.col("id").alias("x"))
+    t = r.join(F.broadcast(x),
+               F.col("x") * F.col("x") <= F.col("r") * F.col("r"))
+    v = F.col("r") * F.col("r") - F.col("x") * F.col("x")
+    s0 = F.sqrt(v.cast("double")).cast("long")
+    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
+    s = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
+    return (t.groupBy("r").agg(F.sum(2 * s + 1).alias("npoints"))
+            .orderBy("r"))
+
+
+def q_assignment_min(spark, sf_dir) -> DataFrame:
+    """Minimum-cost perfect assignment of 6 workers to 6 tasks for
+    8 hash-derived cost matrices — engine: SUBSET DP (Held-Karp
+    shape) — states (mask, cost) grown one worker per round by a
+    join against the cost rows of the next worker (worker index =
+    popcount of the mask), min per new mask; 6 rounds of joins,
+    the frontier never exceeds C(6,k) masks. Oracle: BRUTE FORCE —
+    every one of the 720 assignment prefixes enumerated in a
+    recursive CTE, min total at depth 6. Memoized subsets vs the
+    full factorial tree."""
+    g = spark.range(0, 8).select(F.col("id").alias("g"))
+    w = spark.range(0, 6).select(F.col("id").alias("wk"))
+    tsk = spark.range(0, 6).select(F.col("id").alias("tk"))
+    gs = F.col("g").cast("string")
+    cost = (g.crossJoin(F.broadcast(w)).crossJoin(F.broadcast(tsk))
+            .select("g", "wk", "tk",
+                    (_mst_hash(F.concat(
+                        F.lit("as:"), gs, F.lit(":"),
+                        F.col("wk").cast("string"), F.lit(":"),
+                        F.col("tk").cast("string"))) % 50)
+                    .alias("c")))
+    cost.cache()
+    state = g.select("g", F.lit(0).alias("mask"),
+                     F.lit(0).cast("long").alias("cost"))
+    for step in range(6):
+        nxt = (state.join(cost.filter(F.col("wk") == step), ["g"])
+               .filter(F.col("mask")
+                       .bitwiseAND(F.pow(F.lit(2.0),
+                                         F.col("tk").cast("double"))
+                                   .cast("long")) == 0)
+               .select("g",
+                       (F.col("mask")
+                        + F.pow(F.lit(2.0), F.col("tk").cast("double"))
+                        .cast("long")).alias("mask"),
+                       (F.col("cost") + F.col("c")).alias("cost")))
+        state = nxt.groupBy("g", "mask").agg(F.min("cost").alias("cost"))
+    out = state.groupBy("g").agg(F.min("cost").alias("best"))
+    res = out.orderBy("g")
+    cost.unpersist()
+    return res
+
+
+def q_perm_rank(spark, sf_dir) -> DataFrame:
+    """Lexicographic rank of 30 hash-derived permutations of
+    {0..6} — engine: the LEHMER CODE — rank = sum over positions
+    of (#later elements smaller than this one) * (remaining)!,
+    computed as a self-join inversion census against a factorial
+    literal. Oracle: ENUMERATION — all 5040 permutations of S_7
+    generated by a recursive CTE, ordered as strings, rank =
+    dense_rank - 1, joined by the permutation string. Factoradic
+    arithmetic vs the definition of lexicographic order."""
+    fact = [1] * 8
+    for i in range(1, 8):
+        fact[i] = fact[i - 1] * i
+    fl = F.array(*[F.lit(v) for v in fact])
+    g = spark.range(0, 30).select(F.col("id").alias("doc_id"))
+    p = spark.range(0, 7).select(F.col("id").alias("elem"))
+    keyed = (g.crossJoin(F.broadcast(p))
+             .select("doc_id", "elem",
+                     _mst_hash(F.concat(
+                         F.lit("pr:"), F.col("doc_id").cast("string"),
+                         F.lit(":"), F.col("elem").cast("string")))
+                     .alias("key")))
+    wno = Window.partitionBy("doc_id").orderBy("key", "elem")
+    perm = keyed.select(
+        "doc_id", "elem",
+        (F.row_number().over(wno) - 1).alias("pos"))
+    right = perm.select(F.col("doc_id").alias("doc_id2"),
+                        F.col("elem").alias("elem2"),
+                        F.col("pos").alias("pos2"))
+    inv = (perm.join(right,
+                     (F.col("doc_id") == F.col("doc_id2"))
+                     & (F.col("pos2") > F.col("pos"))
+                     & (F.col("elem2") < F.col("elem")), "left")
+           .groupBy("doc_id", "pos", "elem")
+           .agg(F.count("elem2").alias("smaller_after")))
+    term = (F.col("smaller_after")
+            * F.element_at(fl, (6 - F.col("pos")).cast("int") + 1))
+    ranks = inv.groupBy("doc_id").agg(F.sum(term).alias("rank"))
+    pstr = (perm.groupBy("doc_id")
+            .agg(F.concat_ws(
+                "", F.transform(
+                    F.array_sort(F.collect_list(
+                        F.struct("pos", "elem"))),
+                    lambda s: s["elem"].cast("string"))).alias("perm")))
+    return (ranks.join(pstr, "doc_id")
+            .select("doc_id", "perm", "rank").orderBy("doc_id"))
+
+
+def q_game_of_life(spark, sf_dir) -> DataFrame:
+    """Conway's Game of Life, 4 generations on a 16x16 torus, 12
+    hash-seeded boards — engine: the VECTORIZED STENCIL — each
+    board as a numpy array inside applyInPandas, neighbor counts
+    by eight np.roll shifts (toroidal by construction). Oracle:
+    the WEIGHTED-OFFSET relational trick — one recursive CTE pass
+    per generation expands each live cell over the 9 offsets with
+    weight 1 for neighbors and 10 for self, so a cell is alive
+    next generation iff its weighted sum is 3, 12, or 13 (B3/S23
+    in a single aggregate, one reference to the recursive table).
+    Array arithmetic vs relational algebra."""
+    g = spark.range(0, 12).select(F.col("id").alias("g"))
+    x = spark.range(0, 16).select(F.col("id").alias("x"))
+    y = spark.range(0, 16).select(F.col("id").alias("y"))
+    cells = (g.crossJoin(F.broadcast(x)).crossJoin(F.broadcast(y))
+             .filter(_mst_hash(F.concat(
+                 F.lit("gl:"), F.col("g").cast("string"), F.lit(":"),
+                 F.col("x").cast("string"), F.lit(":"),
+                 F.col("y").cast("string"))) % 5 == 0)
+             .select("g", "x", "y"))
+
+    def life_kernel(pdf):
+        import numpy as np
+        import pandas as pd
+        gval = int(pdf["g"].iloc[0])
+        b = np.zeros((16, 16), dtype=np.int64)
+        b[pdf["x"].to_numpy(), pdf["y"].to_numpy()] = 1
+        for _ in range(4):
+            n = sum(np.roll(np.roll(b, dx, 0), dy, 1)
+                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+                    if (dx, dy) != (0, 0))
+            b = ((n == 3) | ((b == 1) & (n == 2))).astype(np.int64)
+        xs, ys = np.nonzero(b)
+        return pd.DataFrame({
+            "g": [gval], "pop": [int(b.sum())],
+            "checksum": [int((xs * 31 + ys).sum())]})
+
+    return (cells.groupBy("g")
+            .applyInPandas(life_kernel, "g long, pop long, checksum long")
+            .orderBy("g"))
+
+
+def q_bezier_eval(spark, sf_dir) -> DataFrame:
+    """Cubic Bezier curves with integer control points evaluated at
+    t = k/8, all in exact integers scaled by 8^3 — engine:
+    DE CASTELJAU'S ladder — three levels of lerps, each scaled by
+    8: L_i' = (8-k)L_i + k L_{i+1}. Oracle: the BERNSTEIN closed
+    form — 512*B(t) = sum_i C(3,i) k^i (8-k)^(3-i) P_i. Recursive
+    interpolation vs the expanded polynomial — equal by the
+    binomial theorem."""
+    g = spark.range(0, 20).select(F.col("id").alias("g"))
+    gs = F.col("g").cast("string")
+    pts = g.select("g", *[
+        (_mst_hash(F.concat(F.lit(f"bz{i}:"), gs)) % 101)
+        .alias(f"p{i}") for i in range(4)])
+    k = spark.range(0, 9).select(F.col("id").alias("k"))
+    t = pts.crossJoin(F.broadcast(k))
+    a, b = F.col("k"), 8 - F.col("k")
+    l0 = [F.col(f"p{i}") for i in range(4)]
+    l1 = [b * l0[i] + a * l0[i + 1] for i in range(3)]
+    l2 = [b * l1[i] + a * l1[i + 1] for i in range(2)]
+    val = b * l2[0] + a * l2[1]
+    return (t.select("g", "k", val.alias("v512"))
+            .orderBy("g", "k"))
+
+
+def q_collatz_steps(spark, sf_dir) -> DataFrame:
+    """Collatz total stopping time and trajectory peak for 50
+    hash-derived starts below 10^5 — engine: the hailstone loop as
+    an Arrow kernel in exact Python ints. Oracle: the same
+    dynamical system replayed step by step in a recursive CTE.
+    Imperative iteration vs relational fixpoint — both must walk
+    the identical orbit."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 50)
+           .select("doc_id",
+                   (2 + _mst_hash(F.concat(F.lit("cz:"), d))
+                    % 99998).alias("n0")))
+
+    def collatz_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            steps, peaks = [], []
+            for n0 in pdf["n0"]:
+                n, st, pk = int(n0), 0, int(n0)
+                while n != 1:
+                    n = n // 2 if n % 2 == 0 else 3 * n + 1
+                    st += 1
+                    pk = max(pk, n)
+                steps.append(st)
+                peaks.append(pk)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "n0": pdf["n0"], "steps": steps,
+                                "peak": peaks})
+
+    return (raw.repartition(4)
+            .mapInPandas(collatz_kernel,
+                         "doc_id long, n0 long, steps int, peak long")
+            .orderBy("doc_id"))
+
+
+def q_happy_numbers(spark, sf_dir) -> DataFrame:
+    """Happy-number classification for n=1..500 — engine: CYCLE
+    DETECTION — iterate the digit-square-sum map with a visited
+    set in an Arrow kernel; happy iff the orbit hits 1 before
+    revisiting any value (no number theory assumed). Oracle: the
+    REACHES-4 theorem — every unhappy orbit passes through 4, so
+    the recursive CTE just iterates until n is 1 or 4. The
+    definition vs the classified-cycle characterization."""
+    n = spark.range(1, 501).select(F.col("id").alias("n"))
+
+    def happy_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            flags = []
+            for n0 in pdf["n"]:
+                seen, v = set(), int(n0)
+                while v != 1 and v not in seen:
+                    seen.add(v)
+                    v = sum(int(c) ** 2 for c in str(v))
+                flags.append(1 if v == 1 else 0)
+            yield pd.DataFrame({"n": pdf["n"], "happy": flags})
+
+    return (n.repartition(4)
+            .mapInPandas(happy_kernel, "n long, happy int")
+            .orderBy("n"))
+
+
+def q_ulam_spiral(spark, sf_dir) -> DataFrame:
+    """Square-spiral coordinates of n=1..400 (n=1 at the origin,
+    first step right, turns counter-clockwise) — engine: the RING
+    CLOSED FORM — ring k = floor((isqrt(n-1)+1)/2), offset j =
+    n - (2k-1)^2 placed on one of four sides by pure CASE algebra.
+    Oracle: the WALK — a recursive CTE stepping n=1..400 with
+    direction rotation and the 1,1,2,2,3,3,... run-length pattern.
+    O(1) arithmetic vs the generative definition."""
+    n = spark.range(1, 401).select(F.col("id").alias("n"))
+    v = F.col("n") - 1
+    s0 = F.sqrt(v.cast("double")).cast("long")
+    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
+    isq = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
+    # the exchange is a projection-collapse barrier: without it the
+    # isqrt-correction tree is textually inlined into every CASE arm
+    # below and codegen blows the 64 KB method limit
+    kj = (n.select("n", ((isq + 1) / 2).cast("long").alias("k"))
+          .repartition(4)
+          .withColumn("j", F.col("n")
+                      - (2 * F.col("k") - 1) * (2 * F.col("k") - 1)))
+    k, j = F.col("k"), F.col("j")
+    x = (F.when(F.col("n") == 1, 0)
+         .when(j <= 2 * k, k)
+         .when(j <= 4 * k, k - (j - 2 * k))
+         .when(j <= 6 * k, -k)
+         .otherwise(-k + (j - 6 * k)))
+    y = (F.when(F.col("n") == 1, 0)
+         .when(j <= 2 * k, -k + j)
+         .when(j <= 4 * k, k)
+         .when(j <= 6 * k, k - (j - 4 * k))
+         .otherwise(-k))
+    return kj.select("n", x.alias("x"), y.alias("y")).orderBy("n")
+
+
+def q_zeller_dow(spark, sf_dir) -> DataFrame:
+    """ISO day-of-week for 80 hash-derived Gregorian dates
+    (1900-2099) — engine: ZELLER'S CONGRUENCE — pure integer
+    arithmetic on (y, m, d) with the Jan/Feb year shift, no date
+    type anywhere. Oracle: DuckDB's ICU-backed civil calendar
+    (isodow over make_date). A closed-form congruence vs a
+    calendar library."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 80)
+           .select(
+               "doc_id",
+               (1900 + _mst_hash(F.concat(F.lit("zy:"), d)) % 200)
+               .alias("y"),
+               (1 + _mst_hash(F.concat(F.lit("zm:"), d)) % 12)
+               .alias("m"),
+               (1 + _mst_hash(F.concat(F.lit("zd:"), d)) % 28)
+               .alias("dd")))
+    # Jan/Feb count as months 13/14 of the previous year
+    mm = F.when(F.col("m") <= 2, F.col("m") + 12).otherwise(F.col("m"))
+    yy = F.when(F.col("m") <= 2, F.col("y") - 1).otherwise(F.col("y"))
+    kk = yy % 100
+    jj = (yy / 100).cast("long")
+    h = (F.col("dd") + ((13 * (mm + 1)) / 5).cast("long")
+         + kk + (kk / 4).cast("long") + (jj / 4).cast("long")
+         + 5 * jj) % 7
+    # Zeller: h=0 Saturday ... -> ISO Mon=1..Sun=7
+    iso = (h + 5) % 7 + 1
+    return (raw.select("doc_id", "y", "m", "dd",
+                       iso.cast("int").alias("isodow"))
+            .orderBy("doc_id"))
+
+
+def q_wilson_primality(spark, sf_dir) -> DataFrame:
+    """Primality of n=2..250 by WILSON'S THEOREM — engine: (n-1)!
+    mod n computed as a JVM-side F.aggregate fold over
+    sequence(1, n-1) with a mod after every multiply (accumulator
+    < n^2, never leaves long range); n is prime iff the fold lands
+    on n-1. Oracle: trial division. A factorial congruence
+    characterization vs the definition by divisors."""
+    n = spark.range(2, 251).select(F.col("id").alias("n"))
+    fold = F.aggregate(
+        F.sequence(F.lit(1).cast("long"), F.col("n") - 1),
+        F.lit(1).cast("long"),
+        lambda acc, x: (acc * x) % F.col("n"))
+    return (n.select(
+        "n",
+        F.when(fold == F.col("n") - 1, 1).otherwise(0)
+        .cast("int").alias("is_prime"))
+        .orderBy("n"))
+
+
+def q_faulhaber_sums(spark, sf_dir) -> DataFrame:
+    """Power sums S_k(m) = 1^k + ... + m^k for k=1..6 at 20
+    hash-derived m <= 300 — engine: the DEFINITION — explode
+    sequence(1, m), sum exact pow terms (300^6 < 2^53 so the
+    double pow round-trips losslessly). Oracle: FAULHABER'S closed
+    forms — the six classical polynomials in m, exact integer
+    division throughout. Brute summation vs Bernoulli-polynomial
+    algebra."""
+    d = F.col("doc_id").cast("string")
+    docs = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 20)
+            .select("doc_id",
+                    (10 + _mst_hash(F.concat(F.lit("fh:"), d)) % 291)
+                    .alias("m")))
+    k = spark.range(1, 7).select(F.col("id").alias("k"))
+    t = (docs.crossJoin(F.broadcast(k))
+         .select("doc_id", "m", "k",
+                 F.explode(F.sequence(F.lit(1).cast("long"),
+                                      F.col("m"))).alias("i")))
+    term = F.pow(F.col("i").cast("double"),
+                 F.col("k").cast("double")).cast("long")
+    return (t.groupBy("doc_id", "m", "k")
+            .agg(F.sum(term).alias("s"))
+            .orderBy("doc_id", "k"))
+
+
+def q_sundaram_sieve(spark, sf_dir) -> DataFrame:
+    """Primes below 2002 — engine: the SIEVE OF SUNDARAM — from
+    k=1..1000 remove every k = i + j + 2ij (an anti-join against
+    the generated exclusion grid), keep 2k+1, prepend 2. Oracle:
+    trial division. Sundaram's index arithmetic — which never
+    mentions divisibility — vs the definition."""
+    N2 = 1000
+    k = spark.range(1, N2 + 1).select(F.col("id").alias("k"))
+    i = spark.range(1, 23).select(F.col("id").alias("i"))
+    j = spark.range(1, N2 + 1).select(F.col("id").alias("j"))
+    ex = (i.crossJoin(j)
+          .filter((F.col("i") <= F.col("j"))
+                  & (F.col("i") + F.col("j")
+                     + 2 * F.col("i") * F.col("j") <= N2))
+          .select((F.col("i") + F.col("j")
+                   + 2 * F.col("i") * F.col("j")).alias("k"))
+          .distinct())
+    odd = (k.join(ex, "k", "left_anti")
+           .select((2 * F.col("k") + 1).alias("p")))
+    two = spark.range(2, 3).select(F.col("id").alias("p"))
+    return two.unionAll(odd).orderBy("p")
+
+
+def q_reverse_add_palindrome(spark, sf_dir) -> DataFrame:
+    """Reverse-and-add palindrome convergence for n=1..180 (all
+    below the first Lychrel candidate 196): step count and the
+    palindrome reached — engine: exact Python int arithmetic in an
+    Arrow kernel (reverse by slicing digits of the integer).
+    Oracle: a recursive CTE reversing the DECIMAL STRING with
+    DuckDB's reverse() and casting back. Integer arithmetic vs
+    string manipulation — the same orbit through two
+    representations."""
+    n = spark.range(1, 181).select(F.col("id").alias("n"))
+
+    def ra_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            steps, finals = [], []
+            for n0 in pdf["n"]:
+                v, st = int(n0), 0
+                while str(v) != str(v)[::-1]:
+                    v += int(str(v)[::-1])
+                    st += 1
+                steps.append(st)
+                finals.append(v)
+            yield pd.DataFrame({"n": pdf["n"], "steps": steps,
+                                "pal": finals})
+
+    return (n.repartition(4)
+            .mapInPandas(ra_kernel, "n long, steps int, pal long")
+            .orderBy("n"))
+
+
+_FF_PRIMES = (101, 103, 107, 109, 113, 127, 131, 137, 139, 149, 151,
+              157, 163, 167, 173, 179, 181, 191, 193, 197, 199)
+
+
+def q_fermat_factorization(spark, sf_dir) -> DataFrame:
+    """Factor 30 semiprimes with close prime factors (both drawn
+    from the primes in [101,199]) — engine: FERMAT'S METHOD — scan
+    a = ceil(sqrt(n)) + t for the first t with a^2 - n a perfect
+    square (t <= 16 suffices for this factor gap), all integer
+    column algebra with corrected isqrt, then (p,q) = (a-y, a+y).
+    Oracle: TRIAL DIVISION — the least divisor >= 2. Difference of
+    squares vs divisor search."""
+    pl = F.array(*[F.lit(v) for v in _FF_PRIMES])
+    d = F.col("doc_id").cast("string")
+    base = (load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 30)
+            .select(
+                "doc_id",
+                F.element_at(pl, (_mst_hash(F.concat(F.lit("fp:"), d))
+                                  % 21).cast("int") + 1).alias("p0"),
+                F.element_at(pl, (_mst_hash(F.concat(F.lit("fq:"), d))
+                                  % 21).cast("int") + 1).alias("q0")))
+    base = base.select(
+        "doc_id", (F.col("p0") * F.col("q0")).cast("long").alias("n"))
+    nv = F.col("n") - 1
+    r0 = F.sqrt(nv.cast("double")).cast("long")
+    r1 = F.when((r0 + 1) * (r0 + 1) <= nv, r0 + 1).otherwise(r0)
+    isq_nm1 = F.when(r1 * r1 > nv, r1 - 1).otherwise(r1)
+    base = (base.withColumn("a0", isq_nm1 + 1).repartition(4))
+    t = spark.range(0, 17).select(F.col("id").alias("t"))
+    cand = base.join(F.broadcast(t))
+    a = F.col("a0") + F.col("t")
+    y2 = a * a - F.col("n")
+    s0 = F.sqrt(y2.cast("double")).cast("long")
+    s1 = F.when((s0 + 1) * (s0 + 1) <= y2, s0 + 1).otherwise(s0)
+    y = F.when(s1 * s1 > y2, s1 - 1).otherwise(s1)
+    hits = (cand.filter(y * y == y2)
+            .select("doc_id", "n", "t", (a - y).alias("p"),
+                    (a + y).alias("q")))
+    w = Window.partitionBy("doc_id").orderBy("t")
+    return (hits.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("doc_id", "n", "p", "q").orderBy("doc_id"))
+
+
+def q_binary_gcd(spark, sf_dir) -> DataFrame:
+    """gcd of 60 hash-derived pairs below 10^9 — engine: STEIN'S
+    BINARY ALGORITHM — shifts, subtractions, and a common power of
+    two, no division anywhere, as an Arrow kernel. Oracle: DuckDB's
+    gcd() builtin, an independent C++ Euclid. Two algorithms, two
+    engines."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 60)
+           .select(
+               "doc_id",
+               (1 + _mst_hash(F.concat(F.lit("ga:"), d)) % 999999999)
+               .alias("a"),
+               (1 + _mst_hash(F.concat(F.lit("gb:"), d)) % 999999999)
+               .alias("b")))
+
+    def stein_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            gs = []
+            for a, b in zip(pdf["a"], pdf["b"]):
+                a, b = int(a), int(b)
+                shift = 0
+                while a % 2 == 0 and b % 2 == 0:
+                    a //= 2
+                    b //= 2
+                    shift += 1
+                while a % 2 == 0:
+                    a //= 2
+                while b:
+                    while b % 2 == 0:
+                        b //= 2
+                    if a > b:
+                        a, b = b, a
+                    b -= a
+                gs.append(a << shift)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "a": pdf["a"],
+                                "b": pdf["b"], "g": gs})
+
+    return (raw.repartition(4)
+            .mapInPandas(stein_kernel,
+                         "doc_id long, a long, b long, g long")
+            .orderBy("doc_id"))
+
+
+def q_ballot_paths(spark, sf_dir) -> DataFrame:
+    """Bertrand's ballot problem — for 20 hash-derived (a,b) with
+    a > b and a+b <= 24, the number of monotone lattice paths from
+    (0,0) to (a,b) keeping a strictly ahead at every prefix —
+    engine: the REFLECTION closed form (a-b)/(a+b) * C(a+b,a),
+    with the binomial built by a JVM F.aggregate multiplicative
+    fold (each prefix is itself a binomial, so the division is
+    exact at every step). Oracle: DP — grow the path-count table
+    one step per recursive-CTE iteration, states filtered to
+    x > y, counts merged by an aggregate in the recursive term.
+    A bijection-counting identity vs explicit dynamic programming."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 20)
+           .select(
+               "doc_id",
+               (1 + _mst_hash(F.concat(F.lit("ba:"), d)) % 12)
+               .alias("b")))
+    raw = raw.withColumn(
+        "a", F.col("b") + 1
+        + _mst_hash(F.concat(F.lit("bb:"), d)) % 12)
+    n, k = F.col("a") + F.col("b"), F.col("a")
+    binom = F.aggregate(
+        F.sequence(F.lit(1).cast("long"), k),
+        F.lit(1).cast("long"),
+        lambda acc, i: F.floor(acc * (n - k + i) / i).cast("long"))
+    return (raw.select(
+        "doc_id", "a", "b",
+        ((F.col("a") - F.col("b")) * binom
+         / (F.col("a") + F.col("b"))).cast("long").alias("npaths"))
+        .orderBy("doc_id"))
+
+
+def q_dragon_turns(spark, sf_dir) -> DataFrame:
+    """Turn direction at fold n of the Heighway dragon curve,
+    n=1..512 — engine: the BIT CLOSED FORM — the turn is left iff
+    the bit above the lowest set bit of n is 0, i.e.
+    ((n & -n) << 1) & n == 0, pure JVM bit algebra. Oracle: the
+    L-SYSTEM — fold the strip: s' = s || 'L' || reverse(swap(s)),
+    grown in a recursive CTE, then read position n. Bit arithmetic
+    vs the paper-folding definition."""
+    nn = spark.range(1, 513).select(F.col("id").alias("n"))
+    low = F.col("n").bitwiseAND(-F.col("n"))
+    above = F.shiftleft(low, 1).bitwiseAND(F.col("n"))
+    return (nn.select(
+        "n", F.when(above == 0, "L").otherwise("R").alias("turn"))
+        .orderBy("n"))
+
+
+def q_nqueens(spark, sf_dir) -> DataFrame:
+    """8-queens solution census grouped by first-row column —
+    engine: PREFIX-SPLIT backtracking — the search tree is split
+    on the first queen's column into 8 independent branches, one
+    Arrow kernel invocation each (how a cluster would shard an
+    exhaustive search), each branch returning its count and a
+    base-8 checksum of its solutions. Oracle: RELATIONAL GROWTH —
+    a recursive CTE extends placement strings one row at a time,
+    conflicts filtered by a correlated EXISTS over earlier rows.
+    Imperative backtracking vs declarative generate-and-test."""
+    c0 = spark.range(0, 8).select(F.col("id").alias("col0"))
+
+    def queens_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            outs = []
+            for col0 in pdf["col0"]:
+                col0 = int(col0)
+                count, checksum = 0, 0
+                stack = [(col0,)]
+                while stack:
+                    pos = stack.pop()
+                    k = len(pos)
+                    if k == 8:
+                        count += 1
+                        v = 0
+                        for c in pos:
+                            v = v * 8 + c
+                        checksum += v
+                        continue
+                    for c in range(8):
+                        if all(c != pc and abs(c - pc) != k - i
+                               for i, pc in enumerate(pos)):
+                            stack.append(pos + (c,))
+                outs.append((col0, count, checksum))
+            yield pd.DataFrame(
+                {"col0": [o[0] for o in outs],
+                 "n_solutions": [o[1] for o in outs],
+                 "checksum": [o[2] for o in outs]})
+
+    return (c0.repartition(8)
+            .mapInPandas(queens_kernel,
+                         "col0 long, n_solutions long, checksum long")
+            .orderBy("col0"))
+
+
+def q_josephus_k3(spark, sf_dir) -> DataFrame:
+    """Josephus survivor for k=3, circles n=1..60 — engine: the
+    O(n) RECURRENCE J(1)=0, J(n)=(J(n-1)+3) mod n in an Arrow
+    kernel. Oracle: the SIMULATION — the circle as a list in a
+    recursive CTE, removing every third person by slice
+    concatenation until one remains. Recurrence algebra vs acting
+    out the story."""
+    n = spark.range(1, 61).select(F.col("id").alias("n"))
+
+    def jos_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            out = []
+            for n0 in pdf["n"]:
+                j = 0
+                for m in range(2, int(n0) + 1):
+                    j = (j + 3) % m
+                out.append(j + 1)
+            yield pd.DataFrame({"n": pdf["n"], "survivor": out})
+
+    return (n.repartition(4)
+            .mapInPandas(jos_kernel, "n long, survivor long")
+            .orderBy("n"))
+
+
+def q_stern_fusc(spark, sf_dir) -> DataFrame:
+    """Stern's diatomic sequence fusc(n), n=1..200 — engine:
+    DIJKSTRA'S BIT LOOP — scan the bits of n from the low end
+    keeping the pair (a,b); set bits do b+=a, clear bits a+=b; the
+    answer is b (O(log n) per value). Oracle: the HYPERBINARY
+    characterization — fusc(n) counts representations of n-1 as a
+    sum of powers of two each used at most twice, enumerated
+    digit-by-digit in a recursive CTE. Bit dynamics vs a counting
+    theorem."""
+    n = spark.range(1, 201).select(F.col("id").alias("n"))
+
+    def fusc_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            out = []
+            for n0 in pdf["n"]:
+                v, a, b = int(n0), 1, 0
+                while v:
+                    if v & 1:
+                        b += a
+                    else:
+                        a += b
+                    v >>= 1
+                out.append(b)
+            yield pd.DataFrame({"n": pdf["n"], "fusc": out})
+
+    return (n.repartition(4)
+            .mapInPandas(fusc_kernel, "n long, fusc long")
+            .orderBy("n"))
+
+
+def q_triangular_square(spark, sf_dir) -> DataFrame:
+    """The first seven square-triangular numbers — engine: the
+    PELL-DERIVED RECURRENCE N_{k+1} = 34*N_k - N_{k-1} + 2 from
+    (0, 1), an exact kernel. Oracle: INTERSECTION BY JOIN — all
+    triangular numbers m(m+1)/2 and all squares j^2 below 1.7e9
+    equi-joined, ranked by value. Recurrence from the Pell
+    structure vs the definition as a set intersection."""
+    one = spark.range(0, 1).select(F.col("id").alias("seed"))
+
+    def st_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            vals, a, b = [], 0, 1
+            for _ in range(7):
+                a, b = b, 34 * b - a + 2
+                vals.append(a)
+            yield pd.DataFrame({"k": list(range(1, 8)), "v": vals})
+
+    return (one.mapInPandas(st_kernel, "k long, v long")
+            .orderBy("k"))
+
+
+def q_partition_pentagonal(spark, sf_dir) -> DataFrame:
+    """Integer partition counts p(0..40) — engine: EULER'S
+    PENTAGONAL NUMBER THEOREM — p(n) = sum_k (-1)^(k-1)
+    [p(n-k(3k-1)/2) + p(n-k(3k+1)/2)], the sparse O(n*sqrt(n))
+    recurrence in an exact kernel. Oracle: the BOUNDED-PARTS coin
+    DP — one part size per recursive iteration, the whole
+    p(*, parts<=k) row carried as a list and convolved by nested
+    list lambdas. A generating-function identity vs textbook DP."""
+    one = spark.range(0, 1).select(F.col("id").alias("seed"))
+
+    def pent_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            N = 40
+            p = [0] * (N + 1)
+            p[0] = 1
+            for n in range(1, N + 1):
+                total, k = 0, 1
+                while True:
+                    g1 = k * (3 * k - 1) // 2
+                    g2 = k * (3 * k + 1) // 2
+                    if g1 > n and g2 > n:
+                        break
+                    sign = 1 if k % 2 == 1 else -1
+                    if g1 <= n:
+                        total += sign * p[n - g1]
+                    if g2 <= n:
+                        total += sign * p[n - g2]
+                    k += 1
+                p[n] = total
+            yield pd.DataFrame({"n": list(range(N + 1)), "p": p})
+
+    return (one.mapInPandas(pent_kernel, "n long, p long")
+            .orderBy("n"))
+
+
+def q_frobenius_coin(spark, sf_dir) -> DataFrame:
+    """Frobenius number and non-representable count for 24 coprime
+    coin pairs (consecutive and (a, 2a-1) families) — engine:
+    SYLVESTER'S closed forms — g = ab - a - b and
+    N = (a-1)(b-1)/2, pure column algebra. Oracle: the CENSUS —
+    build the representable set {xa + yb} by a bounded grid join
+    and count/max the gaps directly. The 1882 theorem vs brute
+    enumeration."""
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 24)
+           .select("doc_id",
+                   (3 + _mst_hash(F.concat(F.lit("fr:"), d)) % 18)
+                   .alias("a")))
+    b = (F.when(F.col("doc_id") % 2 == 0, F.col("a") + 1)
+         .otherwise(2 * F.col("a") - 1))
+    raw = raw.withColumn("b", b)
+    return (raw.select(
+        "doc_id", "a", "b",
+        (F.col("a") * F.col("b") - F.col("a") - F.col("b"))
+        .alias("frob"),
+        (((F.col("a") - 1) * (F.col("b") - 1)) / 2).cast("long")
+        .alias("n_nonrep"))
+        .orderBy("doc_id"))
+
+
+def q_mod_inverse(spark, sf_dir) -> DataFrame:
+    """Modular inverses mod the prime 1000003 for 40 hash-derived
+    residues — engine: the EXTENDED EUCLIDEAN algorithm (Bezout
+    coefficients) in an exact kernel. Oracle: FERMAT'S LITTLE
+    THEOREM — a^(p-2) mod p by square-and-multiply, one bit per
+    recursive-CTE iteration. Bezout identity vs the group-order
+    argument."""
+    P = 1000003
+    d = F.col("doc_id").cast("string")
+    raw = (load(spark, sf_dir, "documents")
+           .filter(F.col("doc_id") < 40)
+           .select("doc_id",
+                   (2 + _mst_hash(F.concat(F.lit("mi:"), d))
+                    % (P - 3)).alias("a")))
+
+    def ext_euclid_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            invs = []
+            for a in pdf["a"]:
+                old_r, r = int(a), P
+                old_s, s = 1, 0
+                while r:
+                    q = old_r // r
+                    old_r, r = r, old_r - q * r
+                    old_s, s = s, old_s - q * s
+                invs.append(old_s % P)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "a": pdf["a"], "inv": invs})
+
+    return (raw.repartition(4)
+            .mapInPandas(ext_euclid_kernel,
+                         "doc_id long, a long, inv long")
+            .orderBy("doc_id"))
+
+
+def q_look_and_say(spark, sf_dir) -> DataFrame:
+    """The look-and-say sequence from '1', steps 1..12 — engine:
+    imperative run-length description in an exact kernel. Oracle:
+    RELATIONAL RLE — inside each recursive-CTE iteration a
+    correlated subquery explodes the string, groups runs with the
+    gaps-and-islands rank trick, and string_aggs the description
+    back together. A five-line loop vs window-function algebra."""
+    one = spark.range(0, 1).select(F.col("id").alias("seed"))
+
+    def las_kernel(it):
+        import pandas as pd
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            s = "1"
+            steps, lens, strs = [], [], []
+            for st in range(1, 13):
+                out, i = [], 0
+                while i < len(s):
+                    j = i
+                    while j < len(s) and s[j] == s[i]:
+                        j += 1
+                    out.append(str(j - i) + s[i])
+                    i = j
+                s = "".join(out)
+                steps.append(st)
+                lens.append(len(s))
+                strs.append(s)
+            yield pd.DataFrame({"step": steps, "len": lens, "s": strs})
+
+    return (one.mapInPandas(las_kernel, "step long, len long, s string")
+            .orderBy("step"))
+
+
+def q_machin_pi(spark, sf_dir) -> DataFrame:
+    """Pi to 25 digits by MACHIN'S FORMULA pi = 16*atan(1/5) -
+    4*atan(1/239), all arithmetic on integers scaled by 10^30 with
+    identical floor-division truncation on both sides — engine:
+    Python bignums in a kernel. Oracle: DuckDB HUGEINT (128-bit)
+    — the power ladders grown in recursive CTEs. Two bignum
+    implementations, one Gregory series."""
+    one = spark.range(0, 1).select(F.col("id").alias("seed"))
+    SCALE = 10 ** 30
+
+    def machin_kernel(it):
+        import pandas as pd
+
+        def atan_inv(x):
+            total, k, p = 0, 0, x
+            while p <= SCALE:
+                term = SCALE // ((2 * k + 1) * p)
+                total += -term if k % 2 else term
+                k += 1
+                p *= x * x
+            return total
+
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            pi = 16 * atan_inv(5) - 4 * atan_inv(239)
+            yield pd.DataFrame({"pi_str": [str(pi)],
+                                "d25": [str(pi)[:25]]})
+
+    return one.mapInPandas(machin_kernel, "pi_str string, d25 string")
+
+
 def _with_worker_imports(fn):
     def wrapped(spark, sf_dir):
         from imagery_utils_spark.session import ensure_worker_imports
@@ -8045,6 +10898,86 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "segment_intersections": q_segment_intersections,
         "kl_divergence": q_kl_divergence,
         "haar_wavelet": q_haar_wavelet,
+        "symspell_pairs": q_symspell_pairs,
+        "not_in_null_trap": q_not_in_null_trap,
+        "ignore_nulls_window": q_ignore_nulls_window,
+        "hodges_lehmann": q_hodges_lehmann,
+        "runs_test": q_runs_test,
+        "benjamini_hochberg": q_benjamini_hochberg,
+        "theil_sen": q_theil_sen,
+        "mann_kendall": q_mann_kendall,
+        "max_drawdown": q_max_drawdown,
+        "mst_edges": q_mst_edges,
+        "lis_length": q_lis_length,
+        "interval_schedule": q_interval_schedule,
+        "suffix_array": q_suffix_array,
+        "merkle_root": q_merkle_root,
+        "adler32": q_adler32,
+        "bwt_inverse": q_bwt_inverse,
+        "discrete_log": q_discrete_log,
+        "fib_matrix_power": q_fib_matrix_power,
+        "subset_sum_mitm": q_subset_sum_mitm,
+        "crt_reconstruct": q_crt_reconstruct,
+        "nim_grundy": q_nim_grundy,
+        "max_flow": q_max_flow,
+        "scc_reach": q_scc_reach,
+        "rho_cycle": q_rho_cycle,
+        "manacher_palindrome": q_manacher_palindrome,
+        "isotonic_pav": q_isotonic_pav,
+        "bresenham_line": q_bresenham_line,
+        "reed_solomon_parity": q_reed_solomon_parity,
+        "hamming74": q_hamming74,
+        "zeckendorf": q_zeckendorf,
+        "fisher_exact": q_fisher_exact,
+        "inversion_count": q_inversion_count,
+        "josephus": q_josephus,
+        "apsp_minplus": q_apsp_minplus,
+        "determinant_bareiss": q_determinant_bareiss,
+        "easter_date": q_easter_date,
+        "catalan_numbers": q_catalan_numbers,
+        "gray_code": q_gray_code,
+        "euler_totient": q_euler_totient,
+        "mobius_function": q_mobius_function,
+        "simpson_integrate": q_simpson_integrate,
+        "farey_neighbors": q_farey_neighbors,
+        "stern_brocot": q_stern_brocot,
+        "stirling2": q_stirling2,
+        "derangements": q_derangements,
+        "lucas_binomial": q_lucas_binomial,
+        "wythoff_cold": q_wythoff_cold,
+        "r2_lattice": q_r2_lattice,
+        "sigma_classify": q_sigma_classify,
+        "pell_fundamental": q_pell_fundamental,
+        "miller_rabin": q_miller_rabin,
+        "kadane_max_subarray": q_kadane_max_subarray,
+        "water_trapping": q_water_trapping,
+        "string_period": q_string_period,
+        "gauss_circle": q_gauss_circle,
+        "assignment_min": q_assignment_min,
+        "perm_rank": q_perm_rank,
+        "game_of_life": q_game_of_life,
+        "bezier_eval": q_bezier_eval,
+        "collatz_steps": q_collatz_steps,
+        "happy_numbers": q_happy_numbers,
+        "ulam_spiral": q_ulam_spiral,
+        "zeller_dow": q_zeller_dow,
+        "wilson_primality": q_wilson_primality,
+        "faulhaber_sums": q_faulhaber_sums,
+        "sundaram_sieve": q_sundaram_sieve,
+        "reverse_add_palindrome": q_reverse_add_palindrome,
+        "fermat_factorization": q_fermat_factorization,
+        "binary_gcd": q_binary_gcd,
+        "ballot_paths": q_ballot_paths,
+        "dragon_turns": q_dragon_turns,
+        "nqueens": q_nqueens,
+        "josephus_k3": q_josephus_k3,
+        "stern_fusc": q_stern_fusc,
+        "triangular_square": q_triangular_square,
+        "partition_pentagonal": q_partition_pentagonal,
+        "frobenius_coin": q_frobenius_coin,
+        "mod_inverse": q_mod_inverse,
+        "look_and_say": q_look_and_say,
+        "machin_pi": q_machin_pi,
     }
 
 
@@ -11001,6 +13934,1537 @@ def oracle_sql() -> dict[str, str]:
             "FROM lin LEFT JOIN ft USING (ch) LEFT JOIN lt USING (ch) "
             "ORDER BY ch"
         ),
+        "benjamini_hochberg": (
+            "WITH t AS (SELECT doc_id % 4 AS family, "
+            "cast('0x' || substr(sha256('pv:' || cast(doc_id as "
+            "varchar)), 1, 8) as bigint) % 10000 AS x "
+            "FROM documents), "
+            "r AS (SELECT family, x, row_number() OVER (PARTITION BY "
+            "family ORDER BY x) AS k FROM t), "
+            "m AS (SELECT family, count(*) AS m FROM t "
+            "GROUP BY family), "
+            "ok AS (SELECT r.family, k FROM r JOIN m USING (family) "
+            "WHERE x * m * 20 <= k * 10000), "
+            "km AS (SELECT family, max(k) AS k_reject FROM ok "
+            "GROUP BY family), "
+            "o AS (SELECT m.family, m.m, coalesce(k_reject, 0) "
+            "AS k_reject FROM m LEFT JOIN km USING (family)), "
+            "thr AS (SELECT r.family, x AS x_threshold FROM r "
+            "JOIN o USING (family) WHERE r.k = o.k_reject) "
+            "SELECT o.family, m, k_reject, "
+            "coalesce(x_threshold, -1) AS x_threshold FROM o "
+            "LEFT JOIN thr USING (family) ORDER BY family"
+        ),
+        # Suffix-array oracle: materialise every suffix, comparison-
+        # sort the strings (the engine is prefix doubling).
+        "suffix_array": (
+            "WITH d AS (SELECT doc_id, substr(text, 1, 256) AS t "
+            "FROM documents WHERE doc_id < 8), "
+            "suf AS (SELECT doc_id, i, substr(t, "
+            "cast(i as integer) + 1) AS sfx FROM d "
+            "JOIN range(256) r(i) ON i < len(t)), "
+            "o AS (SELECT doc_id, i, row_number() OVER ("
+            "PARTITION BY doc_id ORDER BY sfx) AS rn FROM suf) "
+            "SELECT doc_id, count(*) AS n, "
+            "sha256(string_agg(cast(i as varchar), ',' ORDER BY rn)) "
+            "AS sa_sha FROM o GROUP BY doc_id ORDER BY doc_id"
+        ),
+        # Merkle oracle: recursive-CTE list fold, level by level
+        # (the engine is a log-depth groupBy-pair reduction).
+        "merkle_root": (
+            "WITH lv AS (SELECT count(*) AS n_leaves, "
+            "list(sha256(text) ORDER BY doc_id) AS hs "
+            "FROM documents WHERE doc_id < 50), "
+            "m AS (WITH RECURSIVE f(lvl, hs) AS ("
+            "SELECT 0, hs FROM lv "
+            "UNION ALL SELECT lvl + 1, "
+            "[sha256(hs[2 * j - 1] || coalesce(hs[2 * j], "
+            "hs[2 * j - 1])) for j in range(1, "
+            "cast(ceil(len(hs) / 2.0) as bigint) + 1)] "
+            "FROM f WHERE len(hs) > 1) "
+            "SELECT lvl, hs FROM f WHERE len(hs) = 1) "
+            "SELECT lv.n_leaves, m.lvl AS n_levels, "
+            "m.hs[1] AS root FROM m, lv"
+        ),
+        # Adler-32 oracle: the RFC 1950 stepwise byte fold (the
+        # engine is the order-free position-weighted closed form).
+        "adler32": (
+            "WITH d AS (SELECT doc_id, substr(text, 1, 400) AS t, "
+            "len(substr(text, 1, 400)) AS n FROM documents "
+            "WHERE doc_id < 50), "
+            "r AS (WITH RECURSIVE f(doc_id, i, a, b) AS ("
+            "SELECT doc_id, 0, 1::BIGINT, 0::BIGINT FROM d "
+            "UNION ALL SELECT f.doc_id, f.i + 1, "
+            "(f.a + ord(substr(d.t, cast(f.i as integer) + 1, 1))) "
+            "% 65521, "
+            "(f.b + f.a + ord(substr(d.t, cast(f.i as integer) + 1, "
+            "1))) % 65521 "
+            "FROM f JOIN d USING (doc_id) WHERE f.i < d.n) "
+            "SELECT doc_id, a, b FROM f JOIN d USING (doc_id) "
+            "WHERE i = n) "
+            "SELECT doc_id, n, b * 65536 + a AS adler FROM r "
+            "JOIN d USING (doc_id) ORDER BY doc_id"
+        ),
+        # BWT-inverse oracle: rotation sort + the textbook O(n)
+        # stepwise LF walk (engine: prefix-doubling SA forward +
+        # Wyllie list-ranking inverse).
+        "bwt_inverse": (
+            "WITH d AS (SELECT doc_id, substr(text, 1, 180) || chr(1) "
+            "AS t, len(substr(text, 1, 180)) + 1 AS n "
+            "FROM documents WHERE doc_id < 6), "
+            "rot AS (SELECT doc_id, n, r.i, "
+            "substr(t, cast(r.i as int) + 1) || "
+            "substr(t, 1, cast(r.i as int)) AS rt "
+            "FROM d JOIN range(256) r(i) ON r.i < n), "
+            "bw AS (SELECT doc_id, n, row_number() OVER ("
+            "PARTITION BY doc_id ORDER BY rt) - 1 AS j, "
+            "substr(rt, cast(n as int), 1) AS c FROM rot), "
+            "lf AS (SELECT b.doc_id, b.n, b.j, b.c, "
+            "(SELECT count(*) FROM bw x WHERE x.doc_id = b.doc_id "
+            "AND x.c < b.c) + row_number() OVER ("
+            "PARTITION BY b.doc_id, b.c ORDER BY b.j) - 1 AS lfv "
+            "FROM bw b), "
+            "w AS (WITH RECURSIVE wk(doc_id, n, k, rw, acc) AS ("
+            "SELECT doc_id, n, 0, j, '' FROM lf WHERE c = chr(1) "
+            "UNION ALL SELECT wk.doc_id, wk.n, wk.k + 1, l.lfv, "
+            "b.c || wk.acc "
+            "FROM wk JOIN lf l ON l.doc_id = wk.doc_id "
+            "AND l.j = wk.rw "
+            "JOIN bw b ON b.doc_id = wk.doc_id AND b.j = l.lfv "
+            "WHERE wk.k < wk.n - 1) "
+            "SELECT doc_id, n, acc FROM wk WHERE k = n - 1) "
+            "SELECT doc_id, n - 1 AS n_chars, acc AS recovered "
+            "FROM w ORDER BY doc_id"
+        ),
+        # Discrete-log oracle: brute O(p) power walk; h read at
+        # k = x_true, answer = minimal matching k (engine: BSGS join).
+        "discrete_log": (
+            "WITH i0 AS (SELECT doc_id, "
+            "([1997,1999,2003,2011,2017,2027,2029,2039])"
+            "[cast(doc_id % 8 as bigint) + 1]::BIGINT AS p "
+            "FROM documents WHERE doc_id < 24), "
+            "inst AS (SELECT doc_id, p, "
+            "2 + cast('0x' || substr(sha256('dlg:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % (p - 3) "
+            "AS g, "
+            "cast('0x' || substr(sha256('dlx:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % (p - 1) "
+            "AS xt FROM i0), "
+            "w AS (WITH RECURSIVE wk(doc_id, p, g, xt, k, y) AS ("
+            "SELECT doc_id, p, g, xt, 0, 1::BIGINT FROM inst "
+            "UNION ALL SELECT doc_id, p, g, xt, k + 1, (y * g) % p "
+            "FROM wk WHERE k < p - 2) SELECT * FROM wk), "
+            "hh AS (SELECT doc_id, y AS h FROM w WHERE k = xt), "
+            "ans AS (SELECT w.doc_id, min(w.k) AS dlog FROM w "
+            "JOIN hh USING (doc_id) WHERE w.y = hh.h "
+            "GROUP BY w.doc_id) "
+            "SELECT inst.doc_id, inst.p, inst.g, hh.h, ans.dlog "
+            "FROM inst JOIN hh USING (doc_id) "
+            "JOIN ans USING (doc_id) ORDER BY doc_id"
+        ),
+        # Fibonacci oracle: the O(n) additive recurrence, one term per
+        # recursion step (engine: O(log n) matrix squaring).
+        "fib_matrix_power": (
+            "WITH inst AS (SELECT doc_id, 1000 + "
+            "cast('0x' || substr(sha256('fib:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 8000 AS n "
+            "FROM documents WHERE doc_id < 24), "
+            "w AS (WITH RECURSIVE f(doc_id, n, k, a, b) AS ("
+            "SELECT doc_id, n, 1, 1::BIGINT, 0::BIGINT FROM inst "
+            "UNION ALL SELECT doc_id, n, k + 1, (a + b) % 1000000007, "
+            "a FROM f WHERE k < n) "
+            "SELECT doc_id, n, a FROM f WHERE k = n) "
+            "SELECT doc_id, n, a AS fib_mod FROM w ORDER BY doc_id"
+        ),
+        # Subset-sum oracle: level-wise 0/1 DP (achievable sums after
+        # k items, deduped per level by recursive UNION); engine is
+        # Horowitz–Sahni meet-in-the-middle.
+        "subset_sum_mitm": (
+            "WITH it AS (SELECT cast(doc_id + 1 as bigint) AS idx, "
+            "1 + cast('0x' || substr(sha256('ss:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 2000 AS w "
+            "FROM documents WHERE doc_id < 26), "
+            "tot AS (SELECT sum(w) AS tot FROM it), "
+            "tg AS (SELECT r.j, (r.j * tot.tot) // 6 AS target "
+            "FROM tot, range(1, 6) r(j)), "
+            "dp AS (WITH RECURSIVE f(k, s) AS ("
+            "SELECT 0::BIGINT, 0::BIGINT "
+            "UNION "
+            "SELECT f.k + 1, f.s + v.pick * it.w "
+            "FROM f JOIN it ON it.idx = f.k + 1 "
+            "CROSS JOIN (VALUES (0), (1)) v(pick)) "
+            "SELECT s FROM f WHERE k = 26) "
+            "SELECT tg.j, tg.target, max(dp.s) AS best "
+            "FROM tg JOIN dp ON dp.s <= tg.target "
+            "GROUP BY tg.j, tg.target ORDER BY tg.j"
+        ),
+        # CRT oracle: brute residue search over the full ring Z/45045
+        # (engine: Garner linear recombination).
+        "crt_reconstruct": (
+            "WITH d AS (SELECT doc_id, "
+            + ", ".join(
+                f"cast('0x' || substr(sha256('crt{j}:' || "
+                f"cast(doc_id as varchar)), 1, 8) as bigint) % {m} "
+                f"AS r{j}"
+                for j, m in enumerate([5, 7, 9, 11, 13])) +
+            " FROM documents WHERE doc_id < 30) "
+            "SELECT d.doc_id, d.r0, d.r1, d.r2, d.r3, d.r4, "
+            "x.i AS crt_x FROM d JOIN range(45045) x(i) ON "
+            "x.i % 5 = d.r0 AND x.i % 7 = d.r1 AND x.i % 9 = d.r2 "
+            "AND x.i % 11 = d.r3 AND x.i % 13 = d.r4 "
+            "ORDER BY d.doc_id"
+        ),
+        # Nim oracle: Bouton's closed form grundy = a XOR b XOR c
+        # (engine: backward-induction mex over the explicit game DAG).
+        "nim_grundy": (
+            "SELECT ra.i AS a, rb.i AS b, rc.i AS c, "
+            "xor(xor(ra.i, rb.i), rc.i) AS g "
+            "FROM range(8) ra(i), range(8) rb(i), range(8) rc(i) "
+            "ORDER BY a, b, c"
+        ),
+        # Max-flow oracle: exhaustive MINIMUM CUT over all 2^6
+        # interior bipartitions (engine: Edmonds–Karp FLOW); agreement
+        # is the max-flow/min-cut theorem.
+        "max_flow": (
+            "WITH d AS (SELECT doc_id FROM documents "
+            "WHERE doc_id < 12), "
+            "pr AS (SELECT u.i AS u, v.i AS v FROM range(8) u(i), "
+            "range(8) v(i) WHERE u.i < v.i), "
+            "e AS (SELECT d.doc_id, pr.u, pr.v, "
+            "1 + cast('0x' || substr(sha256('mc:' || "
+            "cast(d.doc_id as varchar) || ':' || "
+            "cast(pr.u as varchar) || ':' || cast(pr.v as varchar)"
+            "), 1, 8) as bigint) % 30 AS cap "
+            "FROM d, pr WHERE pr.v = pr.u + 1 OR "
+            "cast('0x' || substr(sha256('mf:' || "
+            "cast(d.doc_id as varchar) || ':' || "
+            "cast(pr.u as varchar) || ':' || cast(pr.v as varchar)"
+            "), 1, 8) as bigint) % 3 = 0), "
+            "grid AS (SELECT d.doc_id, m.i AS m FROM d, "
+            "range(64) m(i)), "
+            "crossing AS (SELECT e.doc_id, g.m, sum(e.cap) AS cut "
+            "FROM grid g JOIN e ON e.doc_id = g.doc_id "
+            "WHERE (e.u = 0 OR ((g.m >> cast(e.u - 1 as int)) & 1) "
+            "= 1) AND (e.v = 7 OR ((g.m >> cast(e.v - 1 as int)) "
+            "& 1) = 0) GROUP BY e.doc_id, g.m), "
+            "cuts AS (SELECT g.doc_id, g.m, coalesce(c.cut, 0) AS "
+            "cut FROM grid g LEFT JOIN crossing c ON "
+            "c.doc_id = g.doc_id AND c.m = g.m) "
+            "SELECT doc_id, min(cut) AS max_flow FROM cuts "
+            "GROUP BY doc_id ORDER BY doc_id"
+        ),
+        # SCC oracle: one-edge-per-step recursive closure (engine:
+        # closure by squaring), SCC id = min mutually-reachable node.
+        "scc_reach": (
+            "WITH n AS (SELECT i AS v FROM range(36) r(i)), "
+            "e AS (SELECT v, cast('0x' || substr(sha256('sc1:' || "
+            "cast(v as varchar)), 1, 8) as bigint) % 36 AS t FROM n "
+            "UNION SELECT v, cast('0x' || substr(sha256('sc2:' || "
+            "cast(v as varchar)), 1, 8) as bigint) % 36 FROM n), "
+            "tc AS (WITH RECURSIVE r(s, t) AS ("
+            "SELECT v, v FROM n "
+            "UNION SELECT r.s, e.t FROM r JOIN e ON e.v = r.t) "
+            "SELECT s, t FROM r), "
+            "sc AS (SELECT a.s AS v, min(a.t) AS scc_id FROM tc a "
+            "JOIN tc b ON b.s = a.t AND b.t = a.s GROUP BY a.s) "
+            "SELECT sc.v, sc.scc_id, z.scc_size FROM sc JOIN ("
+            "SELECT scc_id, count(*) AS scc_size FROM sc "
+            "GROUP BY scc_id) z USING (scc_id) ORDER BY sc.v"
+        ),
+        # Rho-cycle oracle: literal per-node walk with a visited list
+        # until the first repeat (engine: pointer doubling).
+        "rho_cycle": (
+            "WITH n AS (SELECT i AS v, cast('0x' || substr(sha256("
+            "'rho:' || cast(i as varchar)), 1, 8) as bigint) % 64 "
+            "AS t FROM range(64) r(i)), "
+            "w AS (WITH RECURSIVE wk(v0, cur, acc) AS ("
+            "SELECT v, v, [v] FROM n "
+            "UNION ALL SELECT wk.v0, n.t, wk.acc || [n.t] "
+            "FROM wk JOIN n ON n.v = wk.cur "
+            "WHERE NOT list_contains(wk.acc, n.t)) "
+            "SELECT v0, acc FROM wk QUALIFY row_number() OVER ("
+            "PARTITION BY v0 ORDER BY len(acc) DESC) = 1), "
+            "fin AS (SELECT w.v0, w.acc, n.t AS nxt FROM w "
+            "JOIN n ON n.v = w.acc[-1]) "
+            "SELECT v0 AS v, list_position(acc, nxt) - 1 AS tail, "
+            "list_aggregate(acc[list_position(acc, nxt):], 'min') "
+            "AS cyc_min, "
+            "len(acc) - list_position(acc, nxt) + 1 AS cycle_len "
+            "FROM fin ORDER BY v"
+        ),
+        # Manacher oracle: the O(n²) definition — every substring
+        # tested against its reverse (engine: O(n) Manacher).
+        "manacher_palindrome": (
+            "WITH d AS (SELECT doc_id, substr(text, 1, 120) AS t, "
+            "len(substr(text, 1, 120)) AS n FROM documents "
+            "WHERE doc_id < 40 AND len(substr(text, 1, 120)) > 0), "
+            "subs AS (SELECT doc_id, substr(t, cast(s0.i as int) + 1, "
+            "cast(ln.l as int)) AS ss FROM d "
+            "JOIN range(120) s0(i) ON s0.i < n "
+            "JOIN range(1, 121) ln(l) ON s0.i + ln.l <= n), "
+            "pal AS (SELECT doc_id, len(ss) AS pl FROM subs "
+            "WHERE ss = reverse(ss)) "
+            "SELECT doc_id, max(pl) AS max_pal, count(*) AS n_pal "
+            "FROM pal GROUP BY doc_id ORDER BY doc_id"
+        ),
+        # Isotonic oracle: the minimax characterization
+        # fit_i = max_{l<=i} min_{u>=i} avg(y[l..u]), brute segments,
+        # exact via the lcm(1..30) integer scaling (engine: PAV).
+        "isotonic_pav": (
+            "WITH pts AS (SELECT g.i AS g, p.i AS i, "
+            "cast('0x' || substr(sha256('iso:' || "
+            "cast(g.i as varchar) || ':' || cast(p.i as varchar)"
+            "), 1, 8) as bigint) % 1000 AS y "
+            "FROM range(10) g(i), range(30) p(i)), "
+            "pre AS (SELECT g, i, y, sum(y) OVER (PARTITION BY g "
+            "ORDER BY i) AS ps FROM pts), "
+            "seg AS (SELECT a.g, a.i AS l, b.i AS u, "
+            "(b.ps - a.ps + a.y) * (2329089562800 // "
+            "(b.i - a.i + 1)) AS v "
+            "FROM pre a JOIN pre b ON a.g = b.g AND a.i <= b.i), "
+            "mn AS (SELECT s.g, p.i, s.l, min(s.v) AS mnv "
+            "FROM seg s JOIN range(30) p(i) ON s.l <= p.i "
+            "AND s.u >= p.i GROUP BY s.g, p.i, s.l) "
+            "SELECT g, i, max(mnv) AS fit_key FROM mn "
+            "GROUP BY g, i ORDER BY g, i"
+        ),
+        # Bresenham oracle: the stepwise integer error accumulator
+        # replayed in a recursive CTE (engine: order-free closed form).
+        "bresenham_line": (
+            "WITH i0 AS (SELECT doc_id, 20 + cast('0x' || substr("
+            "sha256('bx:' || cast(doc_id as varchar)), 1, 8) "
+            "as bigint) % 180 AS dx FROM documents WHERE doc_id < 40),"
+            " inst AS (SELECT doc_id, dx, 1 + cast('0x' || substr("
+            "sha256('by:' || cast(doc_id as varchar)), 1, 8) "
+            "as bigint) % dx AS dy FROM i0), "
+            "w AS (WITH RECURSIVE b(doc_id, dx, dy, x, y, err) AS ("
+            "SELECT doc_id, dx, dy, 0::BIGINT, 0::BIGINT, "
+            "2 * dy - dx FROM inst "
+            "UNION ALL SELECT doc_id, dx, dy, x + 1, "
+            "CASE WHEN err > 0 THEN y + 1 ELSE y END, "
+            "CASE WHEN err > 0 THEN err + 2 * (dy - dx) "
+            "ELSE err + 2 * dy END FROM b WHERE x < dx) "
+            "SELECT * FROM b) "
+            "SELECT doc_id, dx, dy, sum(y) AS sum_y, "
+            "sha256(string_agg(cast(y as varchar), ',' ORDER BY x)) "
+            "AS y_sha FROM w GROUP BY doc_id, dx, dy ORDER BY doc_id"
+        ),
+        # Reed–Solomon oracle: GF(256) multiply built from scratch by
+        # Russian-peasant carry-less doubling (no log tables), then
+        # the long division replayed step by step.
+        "reed_solomon_parity": (
+            "WITH xt AS (WITH RECURSIVE x(i, a, v) AS ("
+            "SELECT 0, r.a, r.a FROM range(256) r(a) "
+            "UNION ALL SELECT i + 1, a, CASE WHEN v >= 128 THEN "
+            "xor((v * 2) % 256, 29) ELSE v * 2 END "
+            "FROM x WHERE i < 7) SELECT * FROM x), "
+            "mul AS (SELECT b.b AS b, x.a AS a, bit_xor(x.v) AS m "
+            "FROM range(256) b(b) JOIN xt x ON ((b.b >> x.i) & 1) = 1 "
+            "GROUP BY b.b, x.a), "
+            "msg AS (SELECT doc_id, k.i AS k, "
+            "ord(substr(rpad(substr(text, 1, 16), 16, ' '), "
+            "cast(k.i as int) + 1, 1)) % 256 AS mb "
+            "FROM documents JOIN range(16) k(i) ON true "
+            "WHERE doc_id < 12), "
+            "dv AS (WITH RECURSIVE s(doc_id, k, r) AS ("
+            "SELECT DISTINCT doc_id, 0, "
+            "[0, 0, 0, 0, 0, 0, 0, 0]::BIGINT[] FROM msg "
+            "UNION ALL SELECT s.doc_id, s.k + 1, "
+            "[xor(s.r[2], coalesce(m1.m, 0)), "
+            "xor(s.r[3], coalesce(m2.m, 0)), "
+            "xor(s.r[4], coalesce(m3.m, 0)), "
+            "xor(s.r[5], coalesce(m4.m, 0)), "
+            "xor(s.r[6], coalesce(m5.m, 0)), "
+            "xor(s.r[7], coalesce(m6.m, 0)), "
+            "xor(s.r[8], coalesce(m7.m, 0)), "
+            "coalesce(m8.m, 0)]::BIGINT[] "
+            "FROM s JOIN msg ON msg.doc_id = s.doc_id "
+            "AND msg.k = s.k "
+            "LEFT JOIN mul m1 ON m1.a = 255 "
+            "AND m1.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m2 ON m2.a = 11 "
+            "AND m2.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m3 ON m3.a = 81 "
+            "AND m3.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m4 ON m4.a = 54 "
+            "AND m4.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m5 ON m5.a = 239 "
+            "AND m5.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m6 ON m6.a = 173 "
+            "AND m6.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m7 ON m7.a = 200 "
+            "AND m7.b = xor(s.r[1], msg.mb) "
+            "LEFT JOIN mul m8 ON m8.a = 24 "
+            "AND m8.b = xor(s.r[1], msg.mb) "
+            "WHERE s.k < 16) "
+            "SELECT doc_id, r FROM s WHERE k = 16) "
+            "SELECT doc_id, array_to_string(list_transform(r, "
+            "z -> printf('%02x', z)), '') AS ecc_hex "
+            "FROM dv ORDER BY doc_id"
+        ),
+        # Hamming(7,4) oracle: algebraic syndrome decoding — the
+        # 3-bit syndrome IS the error position (engine decodes by
+        # brute minimum distance over all 16 codewords).
+        "hamming74": (
+            "WITH inst AS (SELECT doc_id, "
+            "cast('0x' || substr(sha256('hd:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 16 AS data, "
+            "1 + cast('0x' || substr(sha256('he:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 7 AS epos "
+            "FROM documents WHERE doc_id < 50), "
+            "enc AS (SELECT doc_id, data, epos, "
+            "data % 2 AS d1, (data // 2) % 2 AS d2, "
+            "(data // 4) % 2 AS d3, (data // 8) % 2 AS d4 FROM inst), "
+            "cw AS (SELECT doc_id, data, epos, "
+            "(d1 + d2 + d4) % 2 + ((d1 + d3 + d4) % 2) * 2 + d1 * 4 "
+            "+ ((d2 + d3 + d4) % 2) * 8 + d2 * 16 + d3 * 32 + d4 * 64 "
+            "AS c FROM enc), "
+            "rc AS (SELECT doc_id, data, epos, "
+            "xor(c, 1 << cast(epos - 1 as int)) AS received FROM cw), "
+            "syn AS (SELECT doc_id, data, epos, received, "
+            "(((received >> 0) & 1) + ((received >> 2) & 1) + "
+            "((received >> 4) & 1) + ((received >> 6) & 1)) % 2 AS s1,"
+            " (((received >> 1) & 1) + ((received >> 2) & 1) + "
+            "((received >> 5) & 1) + ((received >> 6) & 1)) % 2 AS s2,"
+            " (((received >> 3) & 1) + ((received >> 4) & 1) + "
+            "((received >> 5) & 1) + ((received >> 6) & 1)) % 2 AS s4 "
+            "FROM rc), "
+            "fx AS (SELECT doc_id, data, epos, received, "
+            "CASE WHEN s1 + 2 * s2 + 4 * s4 = 0 THEN received ELSE "
+            "xor(received, 1 << cast(s1 + 2 * s2 + 4 * s4 - 1 as int))"
+            " END AS c FROM syn) "
+            "SELECT doc_id, data, epos, received, "
+            "((c >> 2) & 1) + ((c >> 4) & 1) * 2 + ((c >> 5) & 1) * 4 "
+            "+ ((c >> 6) & 1) * 8 AS decoded FROM fx ORDER BY doc_id"
+        ),
+        # Zeckendorf oracle: exhaustive enumeration of ALL 121393
+        # non-adjacent Fibonacci index subsets; the theorem guarantees
+        # a unique sum match (engine: greedy column rewrites).
+        "zeckendorf": (
+            "WITH fib(idx, v) AS (SELECT * FROM (VALUES "
+            "(2,1),(3,2),(4,3),(5,5),(6,8),(7,13),(8,21),(9,34),"
+            "(10,55),(11,89),(12,144),(13,233),(14,377),(15,610),"
+            "(16,987),(17,1597),(18,2584),(19,4181),(20,6765),"
+            "(21,10946),(22,17711),(23,28657),(24,46368),(25,75025)"
+            ") t(idx, v)), "
+            "sets AS (WITH RECURSIVE s(i, prev, mask, sm) AS ("
+            "SELECT 1, 0, 0::BIGINT, 0::BIGINT "
+            "UNION ALL SELECT f.idx, ch.t, "
+            "CASE WHEN ch.t = 1 THEN s.mask + (1::BIGINT << "
+            "cast(f.idx - 2 as int)) ELSE s.mask END, "
+            "CASE WHEN ch.t = 1 THEN s.sm + f.v ELSE s.sm END "
+            "FROM s JOIN fib f ON f.idx = s.i + 1 "
+            "CROSS JOIN (VALUES (0), (1)) ch(t) "
+            "WHERE NOT (ch.t = 1 AND s.prev = 1)) "
+            "SELECT mask, sm FROM s WHERE i = 25), "
+            "d AS (SELECT doc_id, 1 + cast('0x' || substr(sha256("
+            "'zk:' || cast(doc_id as varchar)), 1, 8) as bigint) "
+            "% 100000 AS x FROM documents WHERE doc_id < 40) "
+            "SELECT d.doc_id, d.x, sets.mask AS zmask, "
+            "bit_count(sets.mask)::BIGINT AS n_terms "
+            "FROM d JOIN sets ON sets.sm = d.x ORDER BY d.doc_id"
+        ),
+        # Fisher oracle: binomials from the ADDITIVE Pascal triangle
+        # (list-state recursion), engine uses the multiplicative
+        # product formula; p-value compared as exact integers.
+        "fisher_exact": (
+            "WITH pas AS (WITH RECURSIVE pr(n, row) AS ("
+            "SELECT 0, [1::BIGINT] "
+            "UNION ALL SELECT n + 1, [1::BIGINT] || "
+            "[row[i] + row[i + 1] for i in range(1, n + 1)] || "
+            "[1::BIGINT] FROM pr WHERE n < 40) "
+            "SELECT n, k.i AS k, row[cast(k.i as int) + 1] AS c "
+            "FROM pr JOIN range(41) k(i) ON k.i <= n), "
+            "inst AS (SELECT doc_id, "
+            "10 + cast('0x' || substr(sha256('fk:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 AS kk, "
+            "10 + cast('0x' || substr(sha256('fn:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 AS n "
+            "FROM documents WHERE doc_id < 25), "
+            "i2 AS (SELECT doc_id, kk, n, "
+            "greatest(0, kk + n - 40) AS lo, least(kk, n) AS hi "
+            "FROM inst), "
+            "i3 AS (SELECT doc_id, kk, n, lo, hi, lo + "
+            "cast('0x' || substr(sha256('fo:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) "
+            "% (hi - lo + 1) AS k_obs FROM i2), "
+            "sup AS (SELECT i3.doc_id, i3.kk, i3.n, i3.k_obs, "
+            "kv.i AS k, a.c * b.c AS w "
+            "FROM i3 JOIN range(41) kv(i) ON kv.i BETWEEN i3.lo "
+            "AND i3.hi "
+            "JOIN pas a ON a.n = i3.kk AND a.k = kv.i "
+            "JOIN pas b ON b.n = 40 - i3.kk AND b.k = i3.n - kv.i), "
+            "ob AS (SELECT doc_id, w AS w_obs FROM sup "
+            "WHERE k = k_obs) "
+            "SELECT sup.doc_id, sup.kk, sup.n, sup.k_obs, "
+            "sum(CASE WHEN sup.w <= ob.w_obs THEN sup.w ELSE 0 END) "
+            "AS p_num, sum(sup.w) AS p_den "
+            "FROM sup JOIN ob USING (doc_id) "
+            "GROUP BY sup.doc_id, sup.kk, sup.n, sup.k_obs "
+            "ORDER BY sup.doc_id"
+        ),
+        # Inversion oracle: the O(n²) definition — all index pairs
+        # i < j with v_i > v_j (engine: merge-sort count).
+        "inversion_count": (
+            "WITH ev AS (SELECT event_type, event_id, value "
+            "FROM events WHERE event_id < 2000), "
+            "nn AS (SELECT event_type, count(*) AS n FROM ev "
+            "GROUP BY event_type), "
+            "inv AS (SELECT a.event_type, count(*) AS inversions "
+            "FROM ev a JOIN ev b ON a.event_type = b.event_type "
+            "AND a.event_id < b.event_id AND a.value > b.value "
+            "GROUP BY a.event_type) "
+            "SELECT nn.event_type, nn.n, "
+            "coalesce(inv.inversions, 0) AS inversions "
+            "FROM nn LEFT JOIN inv USING (event_type) "
+            "ORDER BY nn.event_type"
+        ),
+        # Josephus oracle: the textbook recurrence J(m)=(J(m−1)+2)%m
+        # stepped up in a recursive CTE (engine: bitwise closed form).
+        "josephus": (
+            "WITH d AS (SELECT doc_id, 1 + cast('0x' || substr("
+            "sha256('jo:' || cast(doc_id as varchar)), 1, 8) "
+            "as bigint) % 4000 AS n FROM documents WHERE doc_id < 40),"
+            " w AS (WITH RECURSIVE j(doc_id, n, m, s) AS ("
+            "SELECT doc_id, n, 1, 0::BIGINT FROM d "
+            "UNION ALL SELECT doc_id, n, m + 1, (s + 2) % (m + 1) "
+            "FROM j WHERE m < n) "
+            "SELECT doc_id, n, s FROM j WHERE m = n) "
+            "SELECT doc_id, n, s AS survivor FROM w ORDER BY doc_id"
+        ),
+        # APSP oracle: Floyd–Warshall pivot recurrence, the whole
+        # 24×24 matrix carried as one list through 24 recursion
+        # levels (engine: min-plus matrix squaring).
+        "apsp_minplus": (
+            "WITH n AS (SELECT i AS u FROM range(24) r(i)), "
+            "e0 AS (SELECT u, (u + 1) % 24 AS v, 1 + cast('0x' || "
+            "substr(sha256('aw:' || cast(u as varchar)), 1, 8) "
+            "as bigint) % 100 AS d FROM n "
+            "UNION ALL SELECT u, cast('0x' || substr(sha256('at:' || "
+            "cast(u as varchar)), 1, 8) as bigint) % 24, "
+            "1 + cast('0x' || substr(sha256('ax:' || "
+            "cast(u as varchar)), 1, 8) as bigint) % 100 FROM n), "
+            "e AS (SELECT u, v, min(d) AS d FROM e0 WHERE u <> v "
+            "GROUP BY u, v), "
+            "pairs AS (SELECT a.i AS u, b.i AS v "
+            "FROM range(24) a(i), range(24) b(i)), "
+            "cells AS (SELECT p.u, p.v, coalesce("
+            "CASE WHEN p.u = p.v THEN 0 END, e.d, 1000000000) AS d "
+            "FROM pairs p LEFT JOIN e ON e.u = p.u AND e.v = p.v), "
+            "init AS (SELECT list(d ORDER BY u * 24 + v) AS m "
+            "FROM cells), "
+            "fw AS (WITH RECURSIVE f(k, m) AS ("
+            "SELECT 0, m FROM init "
+            "UNION ALL SELECT k + 1, "
+            "[least(m[idx], m[((idx - 1) // 24) * 24 + k + 1] + "
+            "m[k * 24 + ((idx - 1) % 24) + 1]) "
+            "for idx in range(1, 577)] "
+            "FROM f WHERE k < 24) SELECT m FROM f WHERE k = 24), "
+            "od AS (SELECT (g.i - 1) // 24 AS u, (g.i - 1) % 24 AS v,"
+            " m[cast(g.i as int)] AS d FROM fw, range(1, 577) g(i)) "
+            "SELECT u, v, d FROM od WHERE d < 1000000000 "
+            "ORDER BY u, v"
+        ),
+        # Determinant oracle: the Leibniz definition — all 720
+        # permutations from a recursive CTE, sign by inversion count
+        # (engine: Bareiss fraction-free elimination).
+        "determinant_bareiss": (
+            "WITH mat AS (SELECT doc_id, r.i + 1 AS r, c.i + 1 AS c, "
+            "cast('0x' || substr(sha256('dt:' || "
+            "cast(doc_id as varchar) || ':' || "
+            "cast(r.i + 1 as varchar) || ':' || "
+            "cast(c.i + 1 as varchar)), 1, 8) as bigint) % 19 - 9 "
+            "AS val FROM documents, range(6) r(i), range(6) c(i) "
+            "WHERE doc_id < 20), "
+            "perms AS (WITH RECURSIVE p(k, pm) AS ("
+            "SELECT 0, []::BIGINT[] "
+            "UNION ALL SELECT k + 1, pm || [e.i] FROM p "
+            "JOIN range(1, 7) e(i) ON NOT list_contains(pm, e.i) "
+            "WHERE k < 6) SELECT pm FROM p WHERE k = 6), "
+            "sgn AS (SELECT pm, CASE WHEN ((SELECT count(*) "
+            "FROM range(1, 7) x(i), range(1, 7) y(j) "
+            "WHERE x.i < y.j AND pm[cast(x.i as int)] > "
+            "pm[cast(y.j as int)]) % 2) = 0 THEN 1 ELSE -1 END AS s "
+            "FROM perms), "
+            "terms AS (SELECT m.doc_id, s.pm, s.s, "
+            "cast(product(m.val) as bigint) AS t "
+            "FROM sgn s JOIN range(6) rr(i) ON true "
+            "JOIN mat m ON m.r = rr.i + 1 "
+            "AND m.c = s.pm[cast(rr.i as int) + 1] "
+            "GROUP BY m.doc_id, s.pm, s.s) "
+            "SELECT doc_id, sum(s * t) AS det FROM terms "
+            "GROUP BY doc_id ORDER BY doc_id"
+        ),
+        # Easter oracle: the Anonymous Gregorian (Meeus/Jones/
+        # Butcher) closed form — no exception rules (engine: Gauss's
+        # algorithm with its two exceptions).
+        "easter_date": (
+            "WITH y AS (SELECT i AS year FROM range(1900, 2300) "
+            "r(i)), "
+            "c1 AS (SELECT year, year % 19 AS a, year // 100 AS b, "
+            "year % 100 AS c0 FROM y), "
+            "c2 AS (SELECT *, b // 4 AS d, b % 4 AS e, "
+            "(b + 8) // 25 AS f FROM c1), "
+            "c3 AS (SELECT *, (b - f + 1) // 3 AS g FROM c2), "
+            "c4 AS (SELECT *, (19 * a + b - d - g + 15) % 30 AS h, "
+            "c0 // 4 AS i2, c0 % 4 AS k FROM c3), "
+            "c5 AS (SELECT *, (32 + 2 * e + 2 * i2 - h - k) % 7 AS l "
+            "FROM c4), "
+            "c6 AS (SELECT *, (a + 11 * h + 22 * l) // 451 AS m2 "
+            "FROM c5) "
+            "SELECT year, (h + l - 7 * m2 + 114) // 31 AS em, "
+            "((h + l - 7 * m2 + 114) % 31) + 1 AS ed FROM c6 "
+            "ORDER BY year"
+        ),
+        # Catalan oracle: Segner's convolution recurrence
+        # C_{n+1} = Σ C_i·C_{n-i} as a list through a recursive CTE
+        # (engine: exact closed-form binomial fold C(2n,n)/(n+1)).
+        "catalan_numbers": (
+            "WITH RECURSIVE c(n, lst) AS ("
+            "SELECT 0, [CAST(1 AS BIGINT)] "
+            "UNION ALL SELECT n + 1, lst || [CAST(list_sum("
+            "[lst[i] * lst[n + 2 - i] for i in range(1, n + 2)]) "
+            "AS BIGINT)] FROM c WHERE n < 25) "
+            "SELECT i - 1 AS n, lst[cast(i as int)] AS cat "
+            "FROM c, range(1, 27) r(i) WHERE c.n = 25 ORDER BY n"
+        ),
+        # Gray oracle: the reflection construction G(k+1) =
+        # G(k) ++ reverse(G(k))+2^k grown 10 levels (engine:
+        # bitwise closed form n XOR n>>1).
+        "gray_code": (
+            "WITH RECURSIVE g(k, lst) AS ("
+            "SELECT 1, [CAST(0 AS BIGINT), CAST(1 AS BIGINT)] "
+            "UNION ALL SELECT k + 1, lst || "
+            "[lst[len(lst) - i + 1] + (CAST(1 AS BIGINT) << k) "
+            "for i in range(1, len(lst) + 1)] "
+            "FROM g WHERE k < 10) "
+            "SELECT i - 1 AS n, lst[cast(i as int)] AS gray "
+            "FROM g, range(1, 1025) r(i) WHERE k = 10 ORDER BY n"
+        ),
+        # Totient oracle: the definition — coprime census via
+        # DuckDB's builtin gcd over a 4M-pair join (engine:
+        # factorization product formula).
+        "euler_totient": (
+            "SELECT a.n AS n, count(*) AS phi "
+            "FROM range(1, 2001) a(n) JOIN range(1, 2001) b(k) "
+            "ON b.k <= a.n AND gcd(a.n, b.k) = 1 "
+            "GROUP BY a.n ORDER BY n"
+        ),
+        # Möbius oracle: the Dirichlet-inverse recurrence
+        # μ(n) = -Σ_{d|n, d<n} μ(d) stepped 1000 levels (engine:
+        # squarefree/ω factor view in column algebra).
+        "mobius_function": (
+            "WITH RECURSIVE m(n, lst) AS ("
+            "SELECT 1, [CAST(1 AS BIGINT)] "
+            "UNION ALL SELECT n + 1, lst || [CAST(-list_sum("
+            "[lst[d] for d in range(1, n + 1) if (n + 1) % d = 0]) "
+            "AS BIGINT)] FROM m WHERE n < 1000) "
+            "SELECT i AS n, lst[cast(i as int)] AS mu "
+            "FROM m, range(1, 1001) r(i) WHERE m.n = 1000 "
+            "ORDER BY n"
+        ),
+        # Simpson oracle: the antiderivative closed form — 3*integral
+        # of ax^3+bx^2+cx+d over [0,12] (engine: weighted node sum;
+        # Simpson is degree-3 exact so they agree to the integer).
+        "simpson_integrate": (
+            "WITH coef AS (SELECT doc_id, "
+            "cast('0x' || substr(sha256('sa:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
+            "AS a, "
+            "cast('0x' || substr(sha256('sb:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
+            "AS b, "
+            "cast('0x' || substr(sha256('sc:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
+            "AS c, "
+            "cast('0x' || substr(sha256('sd:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
+            "AS d FROM documents WHERE doc_id < 30) "
+            "SELECT doc_id, 15552 * a + 1728 * b + 216 * c + 36 * d "
+            "AS i3 FROM coef ORDER BY doc_id"
+        ),
+        # Farey oracle: the definition — reduced fractions sorted by
+        # value, successor via LEAD (engine: Cauchy's unimodular
+        # adjacency join, no sort anywhere).
+        "farey_neighbors": (
+            "WITH fr AS (SELECT a.i AS a, b.i AS b "
+            "FROM range(0, 31) a(i), range(1, 31) b(i) "
+            "WHERE a.i <= b.i AND gcd(a.i, b.i) = 1), "
+            "ord AS (SELECT a, b, lead(a) OVER w AS c, "
+            "lead(b) OVER w AS d FROM fr "
+            "WINDOW w AS (ORDER BY a * 1.0 / b)) "
+            "SELECT a, b, c, d FROM ord WHERE c IS NOT NULL "
+            "ORDER BY a, b"
+        ),
+        # Stern-Brocot oracle: mediant descent from (0/1, 1/0)
+        # replayed in a recursive CTE with exact integer cross-
+        # multiplication (engine: Euclid CF quotients -> R/L runs).
+        "stern_brocot": (
+            "WITH f AS (SELECT doc_id, "
+            "1 + cast('0x' || substr(sha256('sp:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS p0, "
+            "1 + cast('0x' || substr(sha256('sq:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS q0 "
+            "FROM documents WHERE doc_id < 40), "
+            "r0 AS (SELECT doc_id, p0 // gcd(p0, q0) AS p, "
+            "q0 // gcd(p0, q0) AS q FROM f), "
+            "w AS (WITH RECURSIVE d(doc_id, p, q, lp, lq, hp, hq, "
+            "path, done) AS ("
+            "SELECT doc_id, p, q, 0, 1, 1, 0, '', "
+            "(p = 1 AND q = 1) FROM r0 "
+            "UNION ALL SELECT doc_id, p, q, "
+            "CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lp+hp ELSE lp END,"
+            " CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lq+hq ELSE lq "
+            "END, "
+            "CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lp+hp ELSE hp END,"
+            " CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lq+hq ELSE hq "
+            "END, "
+            "path || CASE WHEN p*(lq+hq) > q*(lp+hp) THEN 'R' "
+            "WHEN p*(lq+hq) < q*(lp+hp) THEN 'L' ELSE '' END, "
+            "p*(lq+hq) = q*(lp+hp) FROM d WHERE NOT done) "
+            "SELECT doc_id, p, q, path FROM d WHERE done) "
+            "SELECT doc_id, p, q, path FROM w ORDER BY doc_id"
+        ),
+        # Stirling-2 oracle: the additive triangle recurrence
+        # S(n,k) = k*S(n-1,k) + S(n-1,k-1), rows carried as lists
+        # (engine: inclusion-exclusion surjection closed form).
+        "stirling2": (
+            "WITH RECURSIVE tri(n, row) AS ("
+            "SELECT 1, [cast(1 as bigint)] "
+            "UNION ALL SELECT n + 1, "
+            "list_transform(generate_series(1, n + 1), k -> "
+            "k * coalesce(row[k], 0) + "
+            "CASE WHEN k = 1 THEN 0 ELSE coalesce(row[k-1], 0) END) "
+            "FROM tri WHERE n < 12) "
+            "SELECT n, u.k, row[u.k] AS s FROM tri, "
+            "(SELECT unnest(generate_series(1, 12)) AS k) u "
+            "WHERE u.k <= n ORDER BY n, u.k"
+        ),
+        # Derangement oracle: D(n) = (n-1)(D(n-1)+D(n-2)) linear
+        # recurrence (engine: alternating-sum closed form).
+        "derangements": (
+            "WITH RECURSIVE dr(n, d, dprev) AS ("
+            "SELECT 1, cast(0 as bigint), cast(1 as bigint) "
+            "UNION ALL SELECT n + 1, n * (d + dprev), d "
+            "FROM dr WHERE n < 20) "
+            "SELECT * FROM (SELECT 0 AS n, cast(1 as bigint) AS d "
+            "UNION ALL SELECT n, d FROM dr) ORDER BY n"
+        ),
+        # Lucas oracle: Pascal's triangle mod 13 grown row by row
+        # as a list-state recursive CTE, then the hash-derived
+        # (n,k) pairs joined against their row (engine: Lucas'
+        # digit-product theorem over base-13 digits).
+        "lucas_binomial": (
+            "WITH RECURSIVE tri(n, row) AS ("
+            "SELECT 0, [cast(1 as bigint)] "
+            "UNION ALL SELECT n + 1, "
+            "list_transform(generate_series(1, n + 2), k -> "
+            "(coalesce(row[k], 0) + CASE WHEN k = 1 THEN 0 "
+            "ELSE coalesce(row[k-1], 0) END) % 13) "
+            "FROM tri WHERE n < 499), "
+            "pairs AS (SELECT doc_id, "
+            "cast('0x' || substr(sha256('lb:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 500 AS n "
+            "FROM documents WHERE doc_id < 40), "
+            "pk AS (SELECT doc_id, n, "
+            "cast('0x' || substr(sha256('lk:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % (n + 1) "
+            "AS k FROM pairs) "
+            "SELECT pk.doc_id, pk.n, pk.k, "
+            "tri.row[cast(pk.k as int) + 1] AS c_mod "
+            "FROM pk JOIN tri ON tri.n = pk.n ORDER BY pk.doc_id"
+        ),
+        # Wythoff oracle: the greedy mex construction — a_n is the
+        # least positive integer not used by any earlier pair,
+        # b_n = a_n + n, used-set carried as a list (engine: Beatty
+        # closed form floor(n*phi) via exact integer sqrt).
+        "wythoff_cold": (
+            "WITH RECURSIVE w(n, a, b, used) AS ("
+            "SELECT 1, cast(1 as bigint), cast(2 as bigint), "
+            "[cast(1 as bigint), cast(2 as bigint)] "
+            "UNION ALL SELECT n + 1, na, na + n + 1, "
+            "list_append(list_append(used, na), na + n + 1) FROM ("
+            "SELECT n, used, (SELECT min(i) FROM "
+            "unnest(generate_series(1, 4 * n + 4)) AS t(i) "
+            "WHERE NOT list_contains(used, i)) AS na "
+            "FROM w WHERE n < 60) "
+            ") SELECT n, a, b FROM w ORDER BY n"
+        ),
+        # r2 oracle: the definition — signed lattice points on the
+        # circle of radius sqrt(n) counted by brute enumeration
+        # (engine: Jacobi's 4*(d1-d3) divisor-class formula).
+        "r2_lattice": (
+            "WITH grid AS (SELECT a.x * a.x + b.y * b.y AS n, "
+            "count(*) AS c FROM range(-20, 21) a(x), "
+            "range(-20, 21) b(y) "
+            "WHERE a.x * a.x + b.y * b.y BETWEEN 1 AND 400 "
+            "GROUP BY 1) "
+            "SELECT t.i AS n, coalesce(c, 0) AS r2 "
+            "FROM range(1, 401) t(i) LEFT JOIN grid ON grid.n = t.i "
+            "ORDER BY n"
+        ),
+        # sigma oracle: the multiplicative closed form — primes by
+        # non-existence of a smaller divisor, exponents by maximal
+        # p^k | n, sigma = product of geometric sums (engine:
+        # explicit divisor-census join).
+        "sigma_classify": (
+            "WITH pr AS (SELECT i AS p FROM range(2, 601) t(i) "
+            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 25) d(j) "
+            "WHERE j * j <= i AND i % j = 0)), "
+            "pw AS (SELECT p, k.e AS e, "
+            "cast(power(p, k.e) as bigint) AS pk "
+            "FROM pr, range(1, 10) k(e) "
+            "WHERE power(p, k.e) <= 600.5), "
+            "pe AS (SELECT n.i AS n, p, max(e) AS e "
+            "FROM range(2, 601) n(i), pw "
+            "WHERE n.i % pk = 0 GROUP BY 1, 2), "
+            "sg AS (SELECT n, cast(product("
+            "(power(p, e + 1) - 1) / (p - 1)) as bigint) AS sigma "
+            "FROM pe GROUP BY n), "
+            "allv AS (SELECT 1 AS n, cast(1 as bigint) AS sigma "
+            "UNION ALL SELECT n, sigma FROM sg) "
+            "SELECT n, sigma, CASE WHEN sigma = 2 * n THEN 'perfect' "
+            "WHEN sigma > 2 * n THEN 'abundant' ELSE 'deficient' END "
+            "AS cls FROM allv ORDER BY n"
+        ),
+        # Pell oracle: exhaustive search for the least x with
+        # (x^2-1)/n a perfect square — IEEE sqrt is correctly
+        # rounded so floor(sqrt(v)) of an exact square v < 2^53 is
+        # exact; the s and s+1 probes make it airtight (engine:
+        # continued-fraction convergents of sqrt(n)).
+        "pell_fundamental": (
+            "WITH ns AS (SELECT i AS n FROM range(2, 32) t(i) "
+            "WHERE cast(floor(sqrt(i)) as bigint) * "
+            "cast(floor(sqrt(i)) as bigint) <> i), "
+            "cand AS (SELECT n, x, (x * x - 1) // n AS v "
+            "FROM ns, range(2, 10002) r(x) "
+            "WHERE (x * x - 1) % n = 0), "
+            "sol AS (SELECT n, x, v, "
+            "cast(floor(sqrt(v)) as bigint) AS s FROM cand "
+            "WHERE cast(floor(sqrt(v)) as bigint) * "
+            "cast(floor(sqrt(v)) as bigint) = v OR "
+            "(cast(floor(sqrt(v)) as bigint) + 1) * "
+            "(cast(floor(sqrt(v)) as bigint) + 1) = v), "
+            "best AS (SELECT n, x, "
+            "CASE WHEN s * s = v THEN s ELSE s + 1 END AS y, "
+            "row_number() OVER (PARTITION BY n ORDER BY x) AS rn "
+            "FROM sol) "
+            "SELECT n, x, y FROM best WHERE rn = 1 ORDER BY n"
+        ),
+        # Miller-Rabin oracle: trial division — a composite below
+        # 10^6 has a divisor in 2..1000, so primality is the
+        # non-existence of one (engine: strong-pseudoprime test
+        # with the deterministic witness set {2,3,5,7}).
+        "miller_rabin": (
+            "WITH t AS (SELECT doc_id, 5 + 2 * ("
+            "cast('0x' || substr(sha256('mr:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 500000) "
+            "AS n FROM documents WHERE doc_id < 60) "
+            "SELECT doc_id, n, CASE WHEN NOT EXISTS ("
+            "SELECT 1 FROM range(2, 1001) d(i) "
+            "WHERE i < n AND n % i = 0) THEN 1 ELSE 0 END "
+            "AS is_prime FROM t ORDER BY doc_id"
+        ),
+        # Kadane oracle: the definition — enumerate every (i,j)
+        # span, sum its elements with a range join, take the max
+        # (engine: prefix-sum / running-min window identity).
+        "kadane_max_subarray": (
+            "WITH t AS (" + _hash_series("ka", 16, 64, 41, 20) + "), "
+            "spans AS (SELECT a.g, a.pos AS i, b.pos AS j "
+            "FROM t a JOIN t b ON a.g = b.g AND a.pos <= b.pos), "
+            "sums AS (SELECT s.g, s.i, s.j, sum(e.v) AS sv "
+            "FROM spans s JOIN t e ON e.g = s.g "
+            "AND e.pos BETWEEN s.i AND s.j GROUP BY 1, 2, 3) "
+            "SELECT g, max(sv) AS best FROM sums GROUP BY g "
+            "ORDER BY g"
+        ),
+        # Water-trapping oracle: horizontal slabs — per level l,
+        # cells below l strictly between the first and last columns
+        # reaching l (engine: per-cell min of two running maxima).
+        "water_trapping": (
+            "WITH t AS (SELECT g, pos, v AS h FROM ("
+            + _hash_series("wt", 16, 64, 16, 0) + ")), "
+            "lv AS (SELECT unnest(generate_series(1, 15)) AS l), "
+            "walls AS (SELECT g, l, min(pos) AS lo, max(pos) AS hi "
+            "FROM t, lv WHERE h >= l GROUP BY 1, 2), "
+            "slab AS (SELECT w.g, w.l, count(*) AS c FROM walls w "
+            "JOIN t ON t.g = w.g AND t.pos > w.lo AND t.pos < w.hi "
+            "AND t.h < w.l GROUP BY 1, 2), "
+            "tot AS (SELECT g, sum(c) AS water FROM slab GROUP BY g) "
+            "SELECT gg.i AS g, coalesce(water, 0) AS water "
+            "FROM range(0, 16) gg(i) LEFT JOIN tot ON tot.g = gg.i "
+            "ORDER BY g"
+        ),
+        # Period oracle: the border characterization — least p with
+        # substr(s, p+1) = substr(s, 1, n-p) (engine: KMP failure
+        # chain, period = n - fail[n]).
+        "string_period": (
+            "WITH raw AS (SELECT doc_id, "
+            "repeat(b, 6) || substr(b, 1, cast(doc_id % 4 as int)) "
+            "AS s FROM (SELECT doc_id, lower(substr("
+            "regexp_replace(text, '[^a-zA-Z]', '', 'g'), 1, 4)) AS b "
+            "FROM documents WHERE doc_id < 40)), "
+            "t AS (SELECT doc_id, s, length(s) AS n FROM raw "
+            "WHERE length(s) >= 8), "
+            "cand AS (SELECT doc_id, s, p.i AS p FROM t, "
+            "range(1, 29) p(i) WHERE p.i <= n "
+            "AND substr(s, p.i + 1) = substr(s, 1, n - p.i)) "
+            "SELECT doc_id, s, cast(min(p) as int) AS period "
+            "FROM cand GROUP BY doc_id, s ORDER BY doc_id"
+        ),
+        # Gauss-circle oracle: the 2-D census — count the (x,y)
+        # grid inside the disc directly (engine: 1-D isqrt
+        # reduction sum_x 2*isqrt(r^2-x^2)+1).
+        "gauss_circle": (
+            "SELECT r.i AS r, count(*) AS npoints "
+            "FROM range(1, 61) r(i), range(-60, 61) x(a), "
+            "range(-60, 61) y(b) "
+            "WHERE x.a * x.a + y.b * y.b <= r.i * r.i "
+            "GROUP BY r.i ORDER BY r"
+        ),
+        # Assignment oracle: brute force — all 720 assignment
+        # prefixes per instance enumerated in a recursive CTE, min
+        # at depth 6 (engine: subset DP by iterative joins).
+        "assignment_min": (
+            "WITH RECURSIVE cost AS (SELECT g.i AS g, w.a AS wk, "
+            "t.b AS tk, cast('0x' || substr(sha256('as:' || "
+            "cast(g.i as varchar) || ':' || cast(w.a as varchar) || "
+            "':' || cast(t.b as varchar)), 1, 8) as bigint) % 50 "
+            "AS c FROM range(0, 8) g(i), range(0, 6) w(a), "
+            "range(0, 6) t(b)), "
+            "rec(g, k, mask, total) AS ("
+            "SELECT i, 0, 0, cast(0 as bigint) FROM range(0, 8) t(i) "
+            "UNION ALL SELECT r.g, r.k + 1, "
+            "r.mask + cast(power(2, c.tk) as bigint), r.total + c.c "
+            "FROM rec r JOIN cost c ON c.g = r.g AND c.wk = r.k "
+            "AND (r.mask & cast(power(2, c.tk) as bigint)) = 0 "
+            "WHERE r.k < 6) "
+            "SELECT g, min(total) AS best FROM rec WHERE k = 6 "
+            "GROUP BY g ORDER BY g"
+        ),
+        # Permutation-rank oracle: generate all of S_7 as strings in
+        # a recursive CTE, lexicographic rank = row_number - 1, join
+        # by the permutation string (engine: Lehmer-code inversion
+        # census times factorials).
+        "perm_rank": (
+            "WITH RECURSIVE perms(p) AS (SELECT '' "
+            "UNION ALL SELECT p || d.c FROM perms, "
+            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) d "
+            "WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
+            "ranked AS (SELECT p, row_number() OVER (ORDER BY p) - 1 "
+            "AS rank FROM perms WHERE length(p) = 7), "
+            "keyed AS (SELECT g.i AS doc_id, e.j AS elem, "
+            "cast('0x' || substr(sha256('pr:' || "
+            "cast(g.i as varchar) || ':' || cast(e.j as varchar)), "
+            "1, 8) as bigint) AS key "
+            "FROM range(0, 30) g(i), range(0, 7) e(j)), "
+            "built AS (SELECT doc_id, string_agg("
+            "cast(elem as varchar), '' ORDER BY key, elem) AS perm "
+            "FROM keyed GROUP BY doc_id) "
+            "SELECT doc_id, perm, rank FROM built "
+            "JOIN ranked ON ranked.p = built.perm ORDER BY doc_id"
+        ),
+        # Life oracle: the weighted-offset relational step — expand
+        # each live cell over 9 toroidal offsets with weight 10 for
+        # self and 1 for neighbors; alive next iff the weighted sum
+        # is 3, 12 or 13 (B3/S23 in one aggregate). Engine: numpy
+        # roll stencil in an Arrow kernel.
+        "game_of_life": (
+            "WITH RECURSIVE cells(gen, g, x, y) AS ("
+            "SELECT 0, g.i, x.a, y.b FROM range(0, 12) g(i), "
+            "range(0, 16) x(a), range(0, 16) y(b) "
+            "WHERE cast('0x' || substr(sha256('gl:' || "
+            "cast(g.i as varchar) || ':' || cast(x.a as varchar) || "
+            "':' || cast(y.b as varchar)), 1, 8) as bigint) % 5 = 0 "
+            "UNION ALL SELECT gen + 1, g, nx, ny FROM ("
+            "SELECT gen, g, (x + dx.v + 16) % 16 AS nx, "
+            "(y + dy.v + 16) % 16 AS ny, "
+            "CASE WHEN dx.v = 0 AND dy.v = 0 THEN 10 ELSE 1 END "
+            "AS wt FROM cells, (VALUES (-1), (0), (1)) dx(v), "
+            "(VALUES (-1), (0), (1)) dy(v) WHERE gen < 4) "
+            "GROUP BY gen, g, nx, ny "
+            "HAVING sum(wt) IN (3, 12, 13)) "
+            "SELECT g, count(*) AS pop, "
+            "sum(x * 31 + y) AS checksum FROM cells WHERE gen = 4 "
+            "GROUP BY g ORDER BY g"
+        ),
+        # Bezier oracle: the Bernstein closed form 512*B(k/8) =
+        # sum_i C(3,i) k^i (8-k)^(3-i) P_i (engine: de Casteljau's
+        # scaled lerp ladder).
+        "bezier_eval": (
+            "WITH pts AS (SELECT g.i AS g, "
+            + ", ".join(
+                "cast('0x' || substr(sha256('bz" + str(i) + ":' || "
+                "cast(g.i as varchar)), 1, 8) as bigint) % 101 "
+                "AS p" + str(i) for i in range(4)) +
+            " FROM range(0, 20) g(i)) "
+            "SELECT g, k.v AS k, "
+            "(8-k.v)*(8-k.v)*(8-k.v) * p0 "
+            "+ 3 * k.v * (8-k.v)*(8-k.v) * p1 "
+            "+ 3 * k.v * k.v * (8-k.v) * p2 "
+            "+ k.v * k.v * k.v * p3 AS v512 "
+            "FROM pts, range(0, 9) k(v) ORDER BY g, k"
+        ),
+        # Collatz oracle: the orbit replayed in a recursive CTE
+        # (engine: imperative hailstone loop in an Arrow kernel).
+        "collatz_steps": (
+            "WITH RECURSIVE st AS (SELECT doc_id, 2 + "
+            "cast('0x' || substr(sha256('cz:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 99998 "
+            "AS n0 FROM documents WHERE doc_id < 50), "
+            "orb(doc_id, n0, n, s, pk) AS ("
+            "SELECT doc_id, n0, n0, 0, n0 FROM st "
+            "UNION ALL SELECT doc_id, n0, "
+            "CASE WHEN n % 2 = 0 THEN n // 2 ELSE 3 * n + 1 END, "
+            "s + 1, greatest(pk, CASE WHEN n % 2 = 0 THEN n // 2 "
+            "ELSE 3 * n + 1 END) FROM orb WHERE n <> 1) "
+            "SELECT doc_id, n0, cast(s as int) AS steps, pk AS peak "
+            "FROM orb WHERE n = 1 ORDER BY doc_id"
+        ),
+        # Happy oracle: the reaches-4 theorem — iterate the digit-
+        # square-sum map until 1 or 4 (engine: visited-set cycle
+        # detection with no theorem assumed).
+        "happy_numbers": (
+            "WITH RECURSIVE orb(n, v) AS ("
+            "SELECT i, i FROM range(1, 501) t(i) "
+            "UNION ALL SELECT n, "
+            "(v // 100 % 10) * (v // 100 % 10) + "
+            "(v // 10 % 10) * (v // 10 % 10) + "
+            "(v % 10) * (v % 10) FROM orb "
+            "WHERE v NOT IN (1, 4) AND v < 1000) "
+            "SELECT n, CASE WHEN v = 1 THEN 1 ELSE 0 END AS happy "
+            "FROM orb WHERE v IN (1, 4) ORDER BY n"
+        ),
+        # Ulam oracle: the generative walk — step n=1..400 turning
+        # counter-clockwise with run lengths 1,1,2,2,3,3,...
+        # (engine: ring closed form by CASE algebra).
+        "ulam_spiral": (
+            "WITH RECURSIVE w(n, x, y, dx, dy, run, rem, legs) AS ("
+            "SELECT 1, 0, 0, 1, 0, 1, 1, 0 "
+            "UNION ALL SELECT n + 1, x + dx, y + dy, "
+            "CASE WHEN rem = 1 THEN -dy ELSE dx END, "
+            "CASE WHEN rem = 1 THEN dx ELSE dy END, "
+            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 ELSE run "
+            "END, "
+            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 "
+            "ELSE rem - 1 END, "
+            "CASE WHEN rem = 1 THEN legs + 1 ELSE legs END "
+            "FROM w WHERE n < 400) "
+            "SELECT n, x, y FROM w ORDER BY n"
+        ),
+        # Zeller oracle: the civil-calendar library — DuckDB's
+        # isodow over make_date (engine: Zeller's congruence, no
+        # date type anywhere).
+        "zeller_dow": (
+            "WITH t AS (SELECT doc_id, "
+            "1900 + cast('0x' || substr(sha256('zy:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 200 AS y, "
+            "1 + cast('0x' || substr(sha256('zm:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS m, "
+            "1 + cast('0x' || substr(sha256('zd:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 28 AS dd "
+            "FROM documents WHERE doc_id < 80) "
+            "SELECT doc_id, y, m, dd, cast(isodow(make_date("
+            "cast(y as int), cast(m as int), cast(dd as int))) "
+            "as int) AS isodow FROM t ORDER BY doc_id"
+        ),
+        # Wilson oracle: trial division (engine: the (n-1)! mod n
+        # congruence folded JVM-side).
+        "wilson_primality": (
+            "SELECT i AS n, CASE WHEN NOT EXISTS ("
+            "SELECT 1 FROM range(2, 17) d(j) "
+            "WHERE j * j <= i AND i % j = 0) THEN 1 ELSE 0 END "
+            "AS is_prime FROM range(2, 251) t(i) ORDER BY n"
+        ),
+        # Faulhaber oracle: the six classical closed-form
+        # polynomials, exact integer division (engine: explode +
+        # sum of the definition).
+        "faulhaber_sums": (
+            "WITH t AS (SELECT doc_id, 10 + "
+            "cast('0x' || substr(sha256('fh:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 291 AS m "
+            "FROM documents WHERE doc_id < 20), "
+            "g AS (SELECT doc_id, m, k.v AS k FROM t, "
+            "range(1, 7) k(v)) "
+            "SELECT doc_id, m, k, CASE k "
+            "WHEN 1 THEN m * (m + 1) // 2 "
+            "WHEN 2 THEN m * (m + 1) * (2 * m + 1) // 6 "
+            "WHEN 3 THEN (m * (m + 1) // 2) * (m * (m + 1) // 2) "
+            "WHEN 4 THEN m * (m + 1) * (2 * m + 1) * "
+            "(3 * m * m + 3 * m - 1) // 30 "
+            "WHEN 5 THEN m * m * (m + 1) * (m + 1) * "
+            "(2 * m * m + 2 * m - 1) // 12 "
+            "WHEN 6 THEN m * (m + 1) * (2 * m + 1) * "
+            "(3 * m * m * m * m + 6 * m * m * m - 3 * m + 1) // 42 "
+            "END AS s FROM g ORDER BY doc_id, k"
+        ),
+        # Sundaram oracle: trial division up to sqrt (engine:
+        # Sundaram's i+j+2ij exclusion anti-join, no divisibility).
+        "sundaram_sieve": (
+            "SELECT i AS p FROM range(2, 2002) t(i) "
+            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 46) d(j) "
+            "WHERE j * j <= i AND i % j = 0) ORDER BY p"
+        ),
+        # Reverse-and-add oracle: the orbit through the decimal
+        # STRING representation — reverse() + cast in a recursive
+        # CTE (engine: integer slicing in an Arrow kernel).
+        "reverse_add_palindrome": (
+            "WITH RECURSIVE orb(n, v, s) AS ("
+            "SELECT i, i, 0 FROM range(1, 181) t(i) "
+            "UNION ALL SELECT n, "
+            "v + cast(reverse(cast(v as varchar)) as bigint), s + 1 "
+            "FROM orb WHERE cast(v as varchar) <> "
+            "reverse(cast(v as varchar))) "
+            "SELECT n, cast(s as int) AS steps, v AS pal FROM orb "
+            "WHERE cast(v as varchar) = reverse(cast(v as varchar)) "
+            "ORDER BY n"
+        ),
+        # Fermat oracle: trial division — least divisor and its
+        # cofactor (engine: difference-of-squares scan from
+        # ceil(sqrt(n))).
+        "fermat_factorization": (
+            "WITH t AS (SELECT doc_id, "
+            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
+            "[cast(cast('0x' || substr(sha256('fp:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
+            "as int) + 1] * "
+            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
+            "[cast(cast('0x' || substr(sha256('fq:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
+            "as int) + 1] AS n "
+            "FROM documents WHERE doc_id < 30), "
+            "f AS (SELECT doc_id, n, (SELECT min(i) FROM "
+            "range(2, 200) d(i) WHERE n % i = 0) AS p FROM t) "
+            "SELECT doc_id, n, p, n // p AS q FROM f "
+            "ORDER BY doc_id"
+        ),
+        # Stein oracle: DuckDB's gcd() builtin — an independent
+        # C++ Euclid (engine: binary shifts-and-subtract).
+        "binary_gcd": (
+            "WITH t AS (SELECT doc_id, "
+            "1 + cast('0x' || substr(sha256('ga:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
+            "AS a, "
+            "1 + cast('0x' || substr(sha256('gb:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
+            "AS b FROM documents WHERE doc_id < 60) "
+            "SELECT doc_id, a, b, gcd(a, b) AS g FROM t "
+            "ORDER BY doc_id"
+        ),
+        # Ballot oracle: explicit DP — one lattice step per
+        # recursive iteration, states kept strictly above the
+        # diagonal, counts merged by the in-term aggregate
+        # (engine: the (a-b)/(a+b)*C(a+b,a) reflection identity).
+        "ballot_paths": (
+            "WITH RECURSIVE inst AS (SELECT doc_id, "
+            "1 + cast('0x' || substr(sha256('ba:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS b0, "
+            "cast('0x' || substr(sha256('bb:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS a_x "
+            "FROM documents WHERE doc_id < 20), "
+            "inst2 AS (SELECT doc_id, b0, b0 + 1 + a_x AS a0 "
+            "FROM inst), "
+            "walk(doc_id, x, y, c) AS ("
+            "SELECT doc_id, 1, 0, cast(1 as bigint) FROM inst2 "
+            "UNION ALL SELECT doc_id, nx, ny, sum(c) FROM ("
+            "SELECT w.doc_id, w.x + s.dx AS nx, w.y + s.dy AS ny, "
+            "w.c FROM walk w, (VALUES (1, 0), (0, 1)) s(dx, dy), "
+            "inst2 i WHERE i.doc_id = w.doc_id "
+            "AND w.x + s.dx <= i.a0 AND w.y + s.dy <= i.b0 "
+            "AND w.x + s.dx > w.y + s.dy "
+            "AND NOT (w.x = i.a0 AND w.y = i.b0)) "
+            "GROUP BY doc_id, nx, ny) "
+            "SELECT w.doc_id, i.a0 AS a, i.b0 AS b, w.c AS npaths "
+            "FROM walk w JOIN inst2 i ON i.doc_id = w.doc_id "
+            "WHERE w.x = i.a0 AND w.y = i.b0 ORDER BY w.doc_id"
+        ),
+        # Dragon oracle: the paper-folding L-system — s' = s || 'L'
+        # || reverse(swap(s)) grown to 1023 turns, read position n
+        # (engine: the lowest-set-bit closed form).
+        "dragon_turns": (
+            "WITH RECURSIVE fold(k, s) AS (SELECT 1, 'L' "
+            "UNION ALL SELECT k + 1, s || 'L' || "
+            "reverse(translate(s, 'LR', 'RL')) "
+            "FROM fold WHERE k < 10) "
+            "SELECT n.i AS n, substr(s, cast(n.i as int), 1) AS turn "
+            "FROM (SELECT s FROM fold WHERE k = 10), "
+            "range(1, 513) n(i) ORDER BY n"
+        ),
+        # N-queens oracle: relational generate-and-test — placement
+        # strings extended one row per recursive iteration, conflict
+        # = correlated EXISTS over earlier rows; checksum = base-8
+        # value of each solution (engine: prefix-split imperative
+        # backtracking).
+        "nqueens": (
+            "WITH RECURSIVE q(p) AS ("
+            "SELECT cast(i as varchar) FROM range(0, 8) t(i) "
+            "UNION ALL SELECT p || cast(c.i as varchar) "
+            "FROM q, range(0, 8) c(i) WHERE length(p) < 8 "
+            "AND NOT EXISTS (SELECT 1 FROM range(1, 9) r(j) "
+            "WHERE j <= length(p) AND ("
+            "cast(substr(p, cast(j as int), 1) as bigint) = c.i OR "
+            "abs(cast(substr(p, cast(j as int), 1) as bigint) - c.i) "
+            "= length(p) + 1 - j))), "
+            "sols AS (SELECT p, (SELECT sum("
+            "cast(substr(p, cast(j as int), 1) as bigint) * "
+            "cast(power(8, 8 - j) as bigint)) "
+            "FROM range(1, 9) r(j)) AS v "
+            "FROM q WHERE length(p) = 8) "
+            "SELECT cast(substr(p, 1, 1) as bigint) AS col0, "
+            "count(*) AS n_solutions, sum(v) AS checksum "
+            "FROM sols GROUP BY 1 ORDER BY col0"
+        ),
+        # Josephus k=3 oracle: act out the story — the circle as a
+        # list, remove every third by slice concatenation (engine:
+        # the O(n) recurrence).
+        "josephus_k3": (
+            "WITH RECURSIVE sim(n0, lst, s) AS ("
+            "SELECT i, list_transform(generate_series(1, i), "
+            "x -> cast(x as bigint)), 0 FROM range(1, 61) t(i) "
+            "UNION ALL SELECT n0, "
+            "lst[1:idx-1] || lst[idx+1:len(lst)], "
+            "(idx - 1) % (len(lst) - 1) FROM ("
+            "SELECT n0, lst, ((s + 2) % len(lst)) + 1 AS idx "
+            "FROM sim WHERE len(lst) > 1)) "
+            "SELECT n0 AS n, lst[1] AS survivor FROM sim "
+            "WHERE len(lst) = 1 ORDER BY n"
+        ),
+        # Fusc oracle: the hyperbinary theorem — fusc(n) counts
+        # ways to write n-1 as a sum of powers of two each used at
+        # most twice, enumerated digit by digit (engine: Dijkstra's
+        # (a,b) bit loop).
+        "stern_fusc": (
+            "WITH RECURSIVE h(n0, rem, p) AS ("
+            "SELECT i, i - 1, 1 FROM range(1, 201) t(i) "
+            "UNION ALL SELECT n0, rem - d.v * p, p * 2 "
+            "FROM h, (VALUES (0), (1), (2)) d(v) "
+            "WHERE p <= 256 AND rem - d.v * p >= 0) "
+            "SELECT n0 AS n, count(*) AS fusc FROM h "
+            "WHERE p = 512 AND rem = 0 GROUP BY n0 ORDER BY n"
+        ),
+        # Square-triangular oracle: the definition — intersect the
+        # triangular and square sequences by an equi-join, rank by
+        # value (engine: the 34x recurrence from the Pell
+        # structure).
+        "triangular_square": (
+            "WITH tri AS (SELECT m.i * (m.i + 1) // 2 AS v "
+            "FROM range(1, 57200) m(i)), "
+            "sq AS (SELECT j.i * j.i AS v FROM range(1, 40500) j(i)), "
+            "hit AS (SELECT tri.v AS v FROM tri "
+            "JOIN sq ON tri.v = sq.v) "
+            "SELECT row_number() OVER (ORDER BY v) AS k, v "
+            "FROM hit ORDER BY k"
+        ),
+        # Partition oracle: bounded-parts coin DP — one part size
+        # per recursive iteration, the full row carried as a list
+        # and convolved by nested lambdas (engine: Euler's
+        # pentagonal recurrence).
+        "partition_pentagonal": (
+            "WITH RECURSIVE dp(k, row) AS ("
+            "SELECT 0, list_transform(generate_series(0, 40), "
+            "n -> CASE WHEN n = 0 THEN cast(1 as bigint) "
+            "ELSE cast(0 as bigint) END) "
+            "UNION ALL SELECT k + 1, "
+            "list_transform(generate_series(0, 40), n -> "
+            "list_sum(list_transform(generate_series(0, "
+            "n // (k + 1)), j -> row[n - j * (k + 1) + 1]))) "
+            "FROM dp WHERE k < 40) "
+            "SELECT n.i AS n, row[cast(n.i as int) + 1] AS p "
+            "FROM dp, range(0, 41) n(i) WHERE k = 40 ORDER BY n"
+        ),
+        # Frobenius oracle: the census — the representable set
+        # {xa+yb} built by a bounded grid, gaps counted and maxed
+        # directly (engine: Sylvester's ab-a-b and (a-1)(b-1)/2).
+        "frobenius_coin": (
+            "WITH pairs AS (SELECT doc_id, a, CASE WHEN doc_id % 2 "
+            "= 0 THEN a + 1 ELSE 2 * a - 1 END AS b FROM ("
+            "SELECT doc_id, 3 + cast('0x' || substr(sha256('fr:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 18 AS a "
+            "FROM documents WHERE doc_id < 24)), "
+            "rep AS (SELECT DISTINCT doc_id, x.i * a + y.j * b AS v "
+            "FROM pairs, range(0, 41) x(i), range(0, 22) y(j) "
+            "WHERE x.i * a + y.j * b <= a * b), "
+            "gaps AS (SELECT p.doc_id, c.i AS v FROM pairs p, "
+            "range(1, 781) c(i) WHERE c.i < a * b "
+            "AND NOT EXISTS (SELECT 1 FROM rep r "
+            "WHERE r.doc_id = p.doc_id AND r.v = c.i)) "
+            "SELECT p.doc_id, p.a, p.b, max(g.v) AS frob, "
+            "count(*) AS n_nonrep FROM pairs p "
+            "JOIN gaps g ON g.doc_id = p.doc_id "
+            "GROUP BY 1, 2, 3 ORDER BY p.doc_id"
+        ),
+        # Inverse oracle: Fermat's little theorem — a^(p-2) mod p
+        # by square-and-multiply, one bit per iteration (engine:
+        # extended Euclid / Bezout).
+        "mod_inverse": (
+            "WITH RECURSIVE t AS (SELECT doc_id, 2 + "
+            "cast('0x' || substr(sha256('mi:' || "
+            "cast(doc_id as varchar)), 1, 8) as bigint) % 1000000 "
+            "AS a FROM documents WHERE doc_id < 40), "
+            "pw(doc_id, base, e, acc) AS ("
+            "SELECT doc_id, a, 1000001, cast(1 as bigint) FROM t "
+            "UNION ALL SELECT doc_id, base * base % 1000003, "
+            "e // 2, CASE WHEN e % 2 = 1 "
+            "THEN acc * base % 1000003 ELSE acc END "
+            "FROM pw WHERE e > 0) "
+            "SELECT pw.doc_id, t.a, pw.acc AS inv FROM pw "
+            "JOIN t ON t.doc_id = pw.doc_id "
+            "WHERE pw.e = 0 ORDER BY pw.doc_id"
+        ),
+        # Look-and-say oracle: relational RLE — explode the string,
+        # gaps-and-islands run grouping, string_agg back, one step
+        # per recursive iteration (engine: imperative RLE kernel).
+        "look_and_say": (
+            "WITH RECURSIVE las(step, s) AS (SELECT 0, '1' "
+            "UNION ALL SELECT step + 1, ("
+            "SELECT string_agg(cast("
+            "(SELECT coalesce(min(u.j), length(s) + 1) "
+            "FROM range(1, 200) u(j) WHERE u.j <= length(s) "
+            "AND u.j > t.i AND substr(s, cast(u.j as int), 1) <> "
+            "substr(s, cast(u.j as int) - 1, 1)) - t.i as varchar) "
+            "|| substr(s, cast(t.i as int), 1), '' ORDER BY t.i) "
+            "FROM range(1, 200) t(i) WHERE t.i <= length(s) "
+            "AND (t.i = 1 OR substr(s, cast(t.i as int), 1) <> "
+            "substr(s, cast(t.i as int) - 1, 1))) "
+            "FROM las WHERE step < 12) "
+            "SELECT step, length(s) AS len, s FROM las "
+            "WHERE step >= 1 ORDER BY step"
+        ),
+        # Machin oracle: the same Gregory series in DuckDB HUGEINT
+        # — power ladders in recursive CTEs, floor division
+        # identical to the engine's Python bignums.
+        "machin_pi": (
+            "WITH RECURSIVE p5(k, p) AS ("
+            "SELECT 0, cast(5 as hugeint) "
+            "UNION ALL SELECT k + 1, p * 25 FROM p5 "
+            "WHERE p * 25 <= 1000000000000000000000000000000), "
+            "p239(k, p) AS (SELECT 0, cast(239 as hugeint) "
+            "UNION ALL SELECT k + 1, p * 57121 FROM p239 "
+            "WHERE p * 57121 <= 1000000000000000000000000000000), "
+            "s5 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
+            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
+            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
+            "END) AS v FROM p5), "
+            "s239 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
+            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
+            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
+            "END) AS v FROM p239) "
+            "SELECT cast(16 * s5.v - 4 * s239.v as varchar) "
+            "AS pi_str, substr(cast(16 * s5.v - 4 * s239.v "
+            "as varchar), 1, 25) AS d25 FROM s5, s239"
+        ),
+        # MST oracle: sequential Prim in a recursive CTE (the engine
+        # is distributed Borůvka); distinct weights => unique MST.
+        "mst_edges": (
+            "WITH ex AS (SELECT "
+            "cast('0x' || substr(sha256('mu:' || cast(doc_id as "
+            "varchar)), 1, 8) as bigint) % 48 AS a, "
+            "cast('0x' || substr(sha256('mv:' || cast(doc_id as "
+            "varchar)), 1, 8) as bigint) % 48 AS b "
+            "FROM documents WHERE doc_id < 400), "
+            "pairs AS (SELECT DISTINCT least(a, b) AS u, "
+            "greatest(a, b) AS v FROM ex WHERE a <> b "
+            "UNION SELECT i AS u, i + 1 AS v FROM range(47) t(i)), "
+            "edges AS (SELECT u, v, "
+            "(cast('0x' || substr(sha256('mw:' || cast(u as varchar) "
+            "|| ':' || cast(v as varchar)), 1, 8) as bigint) "
+            "% 100000) * 4096 + u * 64 + v AS w FROM pairs), "
+            "prim AS (WITH RECURSIVE walk(n, visited, total, picked) "
+            "AS (SELECT 1, [0]::BIGINT[], 0::HUGEINT, []::VARCHAR[] "
+            "UNION ALL SELECT n + 1, "
+            "list_append(visited, e.nv), total + e.w, "
+            "list_append(picked, e.tag) FROM walk, LATERAL ("
+            "SELECT CASE WHEN list_contains(visited, u) THEN v "
+            "ELSE u END AS nv, w, "
+            "cast(u as varchar) || '-' || cast(v as varchar) || '-' "
+            "|| cast(w as varchar) AS tag FROM edges "
+            "WHERE list_contains(visited, u) <> "
+            "list_contains(visited, v) ORDER BY w LIMIT 1) e "
+            "WHERE n < 48) "
+            "SELECT total, picked FROM walk WHERE n = 48) "
+            "SELECT len(picked) AS n_edges, "
+            "cast(total as bigint) AS total_w, "
+            "sha256(array_to_string(list_sort(picked), ',')) "
+            "AS edges_sha FROM prim"
+        ),
+        # LIS oracle: O(n²) textbook DP in a recursive CTE carrying
+        # the value + DP arrays (the engine is patience sorting).
+        "lis_length": (
+            "WITH daily AS (" + _DAILY_SQL + "), "
+            "idx AS (SELECT event_type, y, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
+            "QUALIFY i <= 60), "
+            "n AS (SELECT event_type, count(*) AS n FROM idx "
+            "GROUP BY event_type), "
+            "dp AS (WITH RECURSIVE r(event_type, i, avals, fvals) AS ("
+            "SELECT event_type, 0, []::BIGINT[], []::BIGINT[] FROM n "
+            "UNION ALL SELECT r.event_type, r.i + 1, "
+            "list_append(avals, s.y), "
+            "list_append(fvals, 1 + coalesce(list_max("
+            "[fvals[j] for j in range(1, r.i + 1) "
+            "if avals[j] < s.y]), 0)) "
+            "FROM r JOIN idx s ON s.event_type = r.event_type "
+            "AND s.i = r.i + 1) "
+            "SELECT r.event_type, list_max(fvals) AS lis FROM r "
+            "JOIN n USING (event_type) WHERE r.i = n.n) "
+            "SELECT dp.event_type, n, lis FROM dp JOIN n "
+            "USING (event_type) ORDER BY event_type"
+        ),
+        # Interval-scheduling oracle: unit-weight DP f_i =
+        # max(f_{i-1}, 1 + f_{p(i)}) (the engine is the greedy).
+        "interval_schedule": (
+            "WITH ev AS (SELECT event_type, event_id, "
+            "cast(floor(epoch(ts)) as bigint) AS s, "
+            "(cast(floor(value * 100) as bigint) % 7200) + 60 AS dur, "
+            "row_number() OVER (PARTITION BY event_type "
+            "ORDER BY cast(floor(epoch(ts)) as bigint), event_id) "
+            "AS rn FROM events QUALIFY rn <= 40), "
+            "iv AS (SELECT event_type, s, s + dur AS e, "
+            "row_number() OVER (PARTITION BY event_type "
+            "ORDER BY s + dur, s, event_id) AS i FROM ev), "
+            "n AS (SELECT event_type, count(*) AS n FROM iv "
+            "GROUP BY event_type), "
+            "p AS (SELECT a.event_type, a.i, "
+            "coalesce(max(b.i), 0) AS pi FROM iv a "
+            "LEFT JOIN iv b ON b.event_type = a.event_type "
+            "AND b.e <= a.s GROUP BY a.event_type, a.i), "
+            "dp AS (WITH RECURSIVE r(event_type, i, vals) AS ("
+            "SELECT event_type, 0, [0]::BIGINT[] FROM n "
+            "UNION ALL SELECT r.event_type, r.i + 1, "
+            "list_append(vals, greatest(vals[r.i + 1], "
+            "1 + vals[p.pi + 1])) FROM r JOIN p "
+            "ON p.event_type = r.event_type AND p.i = r.i + 1) "
+            "SELECT r.event_type, vals[n.n + 1] AS best FROM r "
+            "JOIN n USING (event_type) WHERE r.i = n.n) "
+            "SELECT dp.event_type, n AS n_iv, best FROM dp JOIN n "
+            "USING (event_type) ORDER BY event_type"
+        ),
+        # Theil–Sen oracle: definitional double-sort median selection
+        # (the engine selects by integer cross-multiplied ranks).
+        "theil_sen": (
+            "WITH daily AS (" + _DAILY_SQL + "), "
+            "idx AS (SELECT event_type, y, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
+            "QUALIFY i <= 60), "
+            "p AS (SELECT a.event_type, b.y - a.y AS dy, "
+            "b.i - a.i AS dx, "
+            "cast(b.y - a.y as double) / (b.i - a.i) AS sl "
+            "FROM idx a JOIN idx b ON a.event_type = b.event_type "
+            "AND a.i < b.i), "
+            "r AS (SELECT event_type, sl, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY sl) AS rn FROM p), "
+            "m AS (SELECT event_type, count(*) AS m_pairs FROM p "
+            "GROUP BY event_type), "
+            "med AS (SELECT r.event_type, m_pairs, sl AS slope "
+            "FROM r JOIN m USING (event_type) "
+            "WHERE rn = (m_pairs + 1) // 2), "
+            "eq AS (SELECT p.event_type, count(*) AS n_at_median "
+            "FROM p JOIN med ON p.event_type = med.event_type "
+            "AND p.sl = med.slope GROUP BY p.event_type) "
+            "SELECT event_type, m_pairs, n_at_median, slope "
+            "FROM med JOIN eq USING (event_type) ORDER BY event_type"
+        ),
+        # Mann–Kendall oracle: definitional signed pair sum (the
+        # engine derives S from P-up + tie census + C(n,2)).
+        "mann_kendall": (
+            "WITH daily AS (" + _DAILY_SQL + "), "
+            "n AS (SELECT event_type, count(*) AS n FROM daily "
+            "GROUP BY event_type), "
+            "s AS (SELECT a.event_type, "
+            "sum(cast(sign(b.y - a.y) as bigint)) AS s "
+            "FROM daily a JOIN daily b "
+            "ON a.event_type = b.event_type AND a.day < b.day "
+            "GROUP BY a.event_type), "
+            "ties AS (SELECT event_type, "
+            "sum(t * (t - 1) * (2 * t + 5)) AS tie_var FROM ("
+            "SELECT event_type, y, count(*) AS t FROM daily "
+            "GROUP BY event_type, y) GROUP BY event_type) "
+            "SELECT event_type, n, s, "
+            "n * (n - 1) * (2 * n + 5) - tie_var AS var18 "
+            "FROM n JOIN s USING (event_type) "
+            "JOIN ties USING (event_type) ORDER BY event_type"
+        ),
+        # Max-drawdown oracle: the O(n²) definition (per-j max over an
+        # i ≤ j self-join); the engine is the O(n) window pass.
+        "max_drawdown": (
+            "WITH daily AS (SELECT event_type, "
+            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
+            "sum((CASE WHEN event_id % 2 = 0 THEN 1 ELSE -1 END) "
+            "* cast(floor(value * 100) as bigint)) AS y "
+            "FROM events GROUP BY 1, 2), "
+            "c AS (SELECT event_type, day, sum(y) OVER ("
+            "PARTITION BY event_type ORDER BY day "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
+            "AS cum FROM daily), "
+            "dd AS (SELECT j.event_type, j.day, "
+            "max(i.cum) - j.cum AS dd FROM c j JOIN c i "
+            "ON i.event_type = j.event_type AND i.day <= j.day "
+            "GROUP BY j.event_type, j.day, j.cum) "
+            "SELECT event_type, count(*) AS n_days, "
+            "max(dd) AS max_dd, sum(dd) AS sum_dd "
+            "FROM dd GROUP BY event_type ORDER BY event_type"
+        ),
+        "hodges_lehmann": (
+            "WITH daily AS (SELECT event_type, "
+            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
+            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
+            "as bigint) AS y FROM events GROUP BY 1, 2), "
+            "idx AS (SELECT event_type, y, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY day) AS i FROM daily "
+            "QUALIFY i <= 60), "
+            "p AS (SELECT a.event_type, a.y + b.y AS s "
+            "FROM idx a JOIN idx b ON a.event_type = b.event_type "
+            "AND a.i <= b.i), "
+            "r AS (SELECT event_type, s, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY s) AS rn FROM p), "
+            "m AS (SELECT event_type, count(*) AS m FROM p "
+            "GROUP BY event_type) "
+            "SELECT r.event_type, m, s AS two_hl FROM r "
+            "JOIN m USING (event_type) "
+            "WHERE rn = (m + 1) // 2 ORDER BY event_type"
+        ),
+        "runs_test": (
+            "WITH daily AS (SELECT event_type, "
+            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
+            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
+            "as bigint) AS y FROM events GROUP BY 1, 2), "
+            "cnt AS (SELECT event_type, count(*) AS n FROM daily "
+            "GROUP BY event_type), "
+            "rv AS (SELECT event_type, y, row_number() OVER ("
+            "PARTITION BY event_type ORDER BY y, day) AS rv "
+            "FROM daily), "
+            "med AS (SELECT rv.event_type, y AS median FROM rv "
+            "JOIN cnt USING (event_type) WHERE rv = (n + 1) // 2), "
+            "t AS (SELECT daily.event_type, day, CASE WHEN y > median "
+            "THEN 1 ELSE -1 END AS sgn FROM daily JOIN med "
+            "USING (event_type) WHERE y <> median), "
+            "l AS (SELECT event_type, sgn, lag(sgn) OVER ("
+            "PARTITION BY event_type ORDER BY day) AS prev FROM t) "
+            "SELECT event_type, sum(CASE WHEN prev IS NULL OR "
+            "sgn <> prev THEN 1 ELSE 0 END) AS n_runs, "
+            "sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS n_plus, "
+            "sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS n_minus "
+            "FROM l GROUP BY event_type ORDER BY event_type"
+        ),
+        # NOT IN trap — VERBATIM shared ANSI text.
+        "not_in_null_trap": NOT_IN_NULL_TEXT,
+        "ignore_nulls_window": (
+            "WITH e AS (SELECT event_type, "
+            "cast(floor(epoch(ts)) as bigint) AS ep, event_id, "
+            "CASE WHEN event_id % 3 = 0 THEN "
+            "cast(floor(value * 100) as bigint) END AS v FROM events), "
+            "t AS (SELECT event_type, ep, event_id, v, "
+            "last_value(v IGNORE NULLS) OVER (PARTITION BY event_type "
+            "ORDER BY ep, event_id ROWS BETWEEN UNBOUNDED PRECEDING "
+            "AND CURRENT ROW) AS filled FROM e) "
+            "SELECT event_type, count(*) AS n, "
+            "sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS n_null, "
+            "sum(CASE WHEN filled IS NULL THEN 1 ELSE 0 END) "
+            "AS n_still_null, sum(filled) AS sum_filled, "
+            "sha256(string_agg(coalesce(cast(filled as varchar), "
+            "'x'), ',' ORDER BY ep, event_id)) AS series_sha "
+            "FROM t GROUP BY event_type ORDER BY event_type"
+        ),
         # Haar — closed-form signed dyadic-block sums, no recursion.
         "haar_wavelet": (
             "WITH daily AS (SELECT event_type, "
@@ -11023,6 +15487,22 @@ def oracle_sql() -> dict[str, str]:
             "cast(j as int) AS j, coef FROM (SELECT * FROM d "
             "UNION ALL SELECT * FROM s) "
             "ORDER BY event_type, level, j"
+        ),
+        # SymSpell — brute-force all-pairs levenshtein (DuckDB's own
+        # edit-distance implementation) over the same vocabulary.
+        "symspell_pairs": (
+            "WITH toks AS (SELECT unnest(list_filter(string_split("
+            "lower(text), ' '), x -> x <> '')) AS tok FROM documents), "
+            "freq AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1), "
+            "vocab AS (SELECT tok, row_number() OVER (ORDER BY c "
+            "DESC, tok) AS r FROM freq QUALIFY r <= 300), "
+            "p AS (SELECT a.tok AS ta, b.tok AS tb FROM vocab a "
+            "JOIN vocab b ON a.tok < b.tok "
+            "WHERE levenshtein(a.tok, b.tok) <= 1) "
+            "SELECT count(*) AS n_pairs, "
+            "coalesce(sum(length(ta) + length(tb)), 0) AS len_sum, "
+            "sha256(coalesce(string_agg(ta || '|' || tb, chr(10) "
+            "ORDER BY ta || '|' || tb), '')) AS pairs_sha FROM p"
         ),
         "kl_divergence": (
             "WITH prof AS (SELECT source, lang, count(*) AS c "

@@ -17,9 +17,12 @@ segmented sort, out of scope here.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
 SENTINEL = "\x01"
 
-__all__ = ["SENTINEL", "bwt_forward", "bwt_inverse"]
+__all__ = ["SENTINEL", "bwt_forward", "bwt_inverse", "invert_bwt_df"]
 
 
 def bwt_forward(s: str) -> str:
@@ -53,3 +56,65 @@ def bwt_inverse(b: str) -> str:
         row = first[b[row]] + ranks[row]
         out.append(b[row])
     return "".join(reversed(out))
+
+
+def invert_bwt_df(chars: DataFrame, doc: str = "doc",
+                  pos: str = "j", ch: str = "c",
+                  max_len: int = 4096) -> DataFrame:
+    """DISTRIBUTED BWT inversion — no per-row Python, no sequential
+    walk. Input: one row per BWT character (doc, j, c), sentinel
+    included. Output: (doc, i, out_c) — the recovered string (sentinel
+    stripped) as positioned character rows.
+
+    The LF mapping LF(j) = C[c_j] + rank_{c_j}(j) is a single n-cycle
+    permutation (the sentinel guarantees it), and the stepwise
+    inversion walk is exactly "position along that cycle". Position is
+    computed by Wyllie pointer doubling (Wyllie 1979 list ranking):
+    cut the cycle at the sentinel row, then ⌈log₂ n⌉ rounds of
+    ptr(v), d(v) ← ptr(ptr(v)), d(v)+d(ptr(v)) — each round ONE
+    equi-join on (doc, ptr), so the whole inversion is O(log n)
+    shuffles instead of n sequential lookups. The battery oracle runs
+    the textbook O(n) recursive-CTE walk; agreement pins the
+    list-ranking reformulation.
+    """
+    base = (chars.select(F.col(doc).alias("doc"),
+                         F.col(pos).cast("long").alias("j"),
+                         F.col(ch).alias("c"))
+            .withColumn("n", F.count(F.lit(1)).over(
+                Window.partitionBy("doc")))
+            .withColumn("occ", F.row_number().over(
+                Window.partitionBy("doc", "c").orderBy("j")) - 1))
+    # C[c] = number of characters strictly smaller than c in the doc
+    cnt = base.groupBy("doc", "c").agg(F.count(F.lit(1)).alias("k"))
+    c_w = (Window.partitionBy("doc").orderBy("c")
+           .rowsBetween(Window.unboundedPreceding, -1))
+    offs = cnt.withColumn("off", F.coalesce(F.sum("k").over(c_w),
+                                            F.lit(0)))
+    lf = (base.join(offs.select("doc", "c", "off"), ["doc", "c"])
+          .withColumn("lf", F.col("off") + F.col("occ")))
+    # cut the cycle at the sentinel row, then pointer-double distances
+    start = F.col("c") == F.lit(SENTINEL)
+    r = (lf.select(
+        "doc", "j", "c", "n",
+        F.when(start, F.col("j")).otherwise(F.col("lf")).alias("ptr"),
+        F.when(start, F.lit(0)).otherwise(F.lit(1))
+         .cast("long").alias("d"))
+        .localCheckpoint(eager=True))
+    k = 1
+    while k < max_len:
+        nxt = r.select("doc", F.col("j").alias("ptr"),
+                       F.col("ptr").alias("ptr2"),
+                       F.col("d").alias("d2"))
+        r = (r.join(nxt, ["doc", "ptr"])
+             .select("doc", "j", "c", "n",
+                     F.col("ptr2").alias("ptr"),
+                     (F.col("d") + F.col("d2")).alias("d"))
+             .localCheckpoint(eager=True))
+        k *= 2
+    # d = steps from v to the start row; the walk index of v is
+    # (n - d) mod n, and its character lands at output n-1-walk.
+    walk = (F.col("n") - F.col("d")) % F.col("n")
+    return (r.withColumn("wk", walk)
+            .filter(F.col("wk") >= 1)
+            .select("doc", (F.col("n") - 1 - F.col("wk")).alias("i"),
+                    F.col("c").alias("out_c")))
