@@ -3,6 +3,7 @@ filters reach the parquet scan, small sides broadcast, the fact side of the
 spatial join never shuffles, hot paths stay inside WholeStageCodegen."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -180,11 +181,14 @@ def test_bm25_scoring_scan_is_explode_free(spark, sf_dir):
     # codegen pass) and checkpointed; the SCORING plan reads that tiny
     # (doc_id, dl, tf...) table — no Generate, no re-tokenize, corpus
     # stats arrive by broadcast, top-k via TakeOrdered not a full sort
+    from imagery_utils_spark.functions.text import tokens_col
     from imagery_utils_spark.operators.search import bm25_topk
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     plan = plan_of(bm25_topk(docs, ["merge", "stream"], k=10))
+    tokenize = re.compile(r"split\(lower\(text#\d+\), \\s\+, -1\)")
+    assert tokenize.search(plan_of(docs.select(tokens_col(F.lower("text")))))
     assert "Generate" not in plan
-    assert "split" not in plan          # tokenize happened pre-checkpoint
+    assert not tokenize.search(plan)    # tokenize happened pre-checkpoint
     assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
     assert "TakeOrderedAndProject" in plan      # top-k, not a full sort
 
