@@ -1247,8 +1247,8 @@ def q_png_roundtrip(spark, sf_dir) -> DataFrame:
     image — 8x8 grayscale for even doc_ids, 4x4 RGB for odd — with
     pixels p(i) = (doc_id*31 + i*7) % 256, encoded with the filter
     type doc_id % 5 (all five spec filters exercised across the
-    corpus), decoded back inside the same Arrow batch (mapInPandas —
-    the multimodal binary-column path). The oracle recomputes the
+    corpus), decoded back inside the same Arrow batch (mapInPandas
+    over a binary column). The oracle recomputes the
     decoded pixel stream closed-form in SQL, so any filter/CRC/
     framing asymmetry flips the sha."""
     import pandas as pd

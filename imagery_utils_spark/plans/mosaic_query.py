@@ -151,9 +151,9 @@ def tile_manifest(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataF
 
 def tile_density_rasters(spark: SparkSession, sf_dir: str, out_dir: str,
                          width: int = 64, height: int = 64,
-                         replicate: int = 1, fmt: str = "bmp") -> DataFrame:
+                         replicate: int = 1) -> DataFrame:
     """The pgc_mosaic_build_tile analog over the webtext graft: every world
-    tile becomes one REAL raster file (BMP/PPM + ESRI world file) whose
+    tile becomes one REAL raster file (BMP + ESRI world file) whose
     pixels encode page density — geocode -> tile assign -> per-pixel count
     -> log-scaled grayscale -> per-tile encode (one task per tile).
 
@@ -189,4 +189,4 @@ def tile_density_rasters(spark: SparkSession, sf_dir: str, out_dir: str,
         "px_row", "px_col",
         gray.alias("red"), gray.alias("green"), gray.alias("blue"),
     )
-    return write_raster_tiles(pixels, out_dir, width=width, height=height, fmt=fmt)
+    return write_raster_tiles(pixels, out_dir, width=width, height=height)

@@ -2,9 +2,8 @@
 from-scratch GIF-variant LZW coder (no external imaging/compression
 library; the stdlib has no GIF LZW).
 
-Web-payload rationale: GIF is the third of the big three legacy web
-image formats (JPEG/PNG/GIF) riding in Common-Crawl WARC payloads;
-with sources/jpeg.py and sources/png.py this closes the set.
+Web-payload rationale: GIF is one of the legacy web image formats
+riding in Common-Crawl WARC payloads, next to PNG (sources/png.py).
 
 Implemented profile:
 * header + logical screen descriptor + global color table;

@@ -9,12 +9,11 @@ partitioned columnar tables + manifest tables.
   provided for drop-in compatibility.
 * K4 (per-tile raster sink): two forms — ``partitionBy(tile)`` columnar
   writes (the query-able analog), and since r3 :func:`write_raster_tiles`,
-  which encodes REAL per-tile raster images (uncompressed 24-bit BMP or
-  PPM P6 via the pure-numpy codecs in ``sources.multimodal``) plus an ESRI
-  world file per tile for georeferencing — the closest container this
-  environment can produce to the reference's one-GeoTIFF-per-tile output
-  (pgc_mosaic_build_tile.py; GeoTIFF itself needs libtiff/GDAL, absent
-  here, but the pixel assembly, encoding, and geotransform math are real).
+  which encodes REAL per-tile raster images: GeoTIFF or COG through
+  ``sources.geotiff`` (the reference's one-GeoTIFF-per-tile output,
+  pgc_mosaic_build_tile.py), or an uncompressed 24-bit BMP preview
+  through ``sources.bmp`` plus an ESRI world file per tile for
+  georeferencing.
 * K5 (XML provenance): one lineage/metrics row per output
   (operators.lineage covers the ledger; ``write_run_metadata`` emits the
   per-output record).
@@ -63,7 +62,8 @@ def world_file_text(xmin: float, ymin: float, xmax: float, ymax: float,
 def write_raster_tiles(pixels: DataFrame, out_dir: str, width: int, height: int,
                        fmt: str = "bmp", background: int = 0,
                        epsg: int = 4326) -> DataFrame:
-    """K4 real-raster form: one image file + world file per tile.
+    """K4 real-raster form: one image file per tile, ``fmt`` one of
+    ``bmp`` (plus a world file), ``tif`` or ``cog``.
 
     ``pixels``: one row per painted pixel with columns ``tile_name, xmin,
     ymin, xmax, ymax`` (tile extent, repeated per row), ``px_row, px_col``
@@ -81,9 +81,9 @@ def write_raster_tiles(pixels: DataFrame, out_dir: str, width: int, height: int,
     import pandas as pd
 
     from .geotiff import encode_cog, encode_geotiff
-    from .multimodal import encode_bmp, encode_ppm
+    from .bmp import encode_bmp
 
-    if fmt not in ("bmp", "ppm", "tif", "cog"):
+    if fmt not in ("bmp", "tif", "cog"):
         raise ValueError(f"unknown raster format {fmt!r}")
     os.makedirs(out_dir, exist_ok=True)
 
@@ -118,8 +118,8 @@ def write_raster_tiles(pixels: DataFrame, out_dir: str, width: int, height: int,
                 # pgc_mosaic_build_tile.py:205-216)
                 f.write(encode_cog(img, xmin, ymin, xmax, ymax, epsg=epsg))
             else:
-                f.write({"bmp": encode_bmp, "ppm": encode_ppm}[fmt](img))
-        if fmt not in ("tif", "cog"):
+                f.write(encode_bmp(img))
+        if fmt == "bmp":
             with open(path + ".wld", "w") as f:
                 f.write(world_file_text(xmin, ymin, xmax, ymax, width, height))
         return pd.DataFrame([(tile, path, width, height, int(ok.sum()))],

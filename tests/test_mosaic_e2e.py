@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from imagery_utils_spark.operators.compose import composite
 from imagery_utils_spark.operators.cutline import cutline_contributors
-from imagery_utils_spark.sources.multimodal import decode_bmp
+from imagery_utils_spark.sources.bmp import decode_bmp
 from imagery_utils_spark.sources.sinks import write_raster_tiles
 
 # one 10x10-deg tile rasterized at 10x10 px (1 deg/px)
@@ -102,10 +102,8 @@ def test_tile_density_rasters_over_pages(spark, tmp_path):
 
 def test_mosaic_composite_to_geotiff(spark, tmp_path):
     """Same composite path as test_mosaic_pipeline_end_to_end but sunk to
-    the GeoTIFF container: georeferencing must ride inside the file and
-    the auto-sniffing decoder must pick it up by magic."""
+    the GeoTIFF container: georeferencing must ride inside the file."""
     from imagery_utils_spark.sources.geotiff import decode_geotiff
-    from imagery_utils_spark.sources.multimodal import _decode
 
     pixels = spark.createDataFrame(
         [("t1", 0.0, 0.0, 10.0, 10.0, r, c, 200, 10, 10)
@@ -118,4 +116,3 @@ def test_mosaic_composite_to_geotiff(spark, tmp_path):
     arr, gtf, epsg = decode_geotiff(blob)
     assert (arr[:, :, 0] == 200).all()
     assert gtf == (0.0, 2.5, 0.0, 10.0, 0.0, -2.5) and epsg == 4326
-    assert (_decode(blob, "auto") == arr).all()  # II* magic sniffed

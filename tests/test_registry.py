@@ -4,13 +4,20 @@ stdlib ``ast`` only (no Spark session, no import of the module):
 * ``queries()`` and ``oracle_sql()`` name the same rows;
 * every module-level definition and import is reachable from ``entry``,
   ``queries`` or ``oracle_sql``, so deleting a row cannot leave its oracle
-  text or helpers behind."""
+  text or helpers behind;
+* every ``imagery_utils_spark`` import in the repo's Python, at module
+  level or inside a function, names an existing module and a name that
+  module defines, so deleting a module cannot leave a lazy import that
+  fails only when its function runs."""
 
 import ast
+import functools
+import glob
 import os
 
-ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "__spark_entry__.py")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENTRY = os.path.join(REPO, "__spark_entry__.py")
+PACKAGE = "imagery_utils_spark"
 ROOTS = ("entry", "queries", "oracle_sql")
 
 
@@ -77,3 +84,62 @@ def test_every_module_level_name_is_reachable():
             work.extend(_loaded_names(stmt))
     assert all(r in defs for r in ROOTS)
     assert sorted(set(defs) - live) == []
+
+
+def _module_file(dotted):
+    """The source file of a repo module, or None if there is none."""
+    base = os.path.join(REPO, *dotted.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+@functools.lru_cache(maxsize=None)
+def _top_level_names(path):
+    with open(path, encoding="utf-8") as f:
+        return set().union(*map(_bound_names, ast.parse(f.read()).body))
+
+
+def _package_imports(path):
+    """(lineno, module, names) for each import of the package in a file;
+    ``names`` is empty for a plain ``import a.b``."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    rel = os.path.relpath(path, REPO)[:-len(".py")].split(os.sep)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PACKAGE:
+                    yield node.lineno, a.name, []
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = rel[:len(rel) - node.level]
+                module = ".".join(parts + ([node.module] if node.module else []))
+            else:
+                module = node.module or ""
+            if module.split(".")[0] == PACKAGE:
+                yield node.lineno, module, [a.name for a in node.names]
+
+
+def test_every_package_import_resolves():
+    files = (glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+             + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
+             + glob.glob(os.path.join(REPO, "tests", "*.py"))
+             + glob.glob(os.path.join(REPO, "*.py")))
+    checked, dangling = 0, []
+    for path in sorted(files):
+        for lineno, module, names in _package_imports(path):
+            checked += 1
+            where = f"{os.path.relpath(path, REPO)}:{lineno}"
+            target = _module_file(module)
+            if target is None:
+                dangling.append(f"{where}: no module {module}")
+                continue
+            defined = _top_level_names(target)
+            for name in names:
+                if name != "*" and name not in defined \
+                        and _module_file(f"{module}.{name}") is None:
+                    dangling.append(f"{where}: {module} has no {name}")
+    assert checked > 100, checked  # the scan must see the repo's imports
+    assert dangling == []

@@ -55,7 +55,7 @@ def test_write_raster_tiles_roundtrip(spark, tmp_path):
     bit-exact, georeferencing solved from the tile extent."""
     import numpy as np
 
-    from imagery_utils_spark.sources.multimodal import decode_bmp
+    from imagery_utils_spark.sources.bmp import decode_bmp
     from imagery_utils_spark.sources.sinks import write_raster_tiles
 
     rows = []
