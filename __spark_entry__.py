@@ -441,7 +441,7 @@ def q_warc_roundtrip(spark, sf_dir) -> DataFrame:
     def build(key, pdf):
         pdf = pdf.sort_values("doc_id")
         # column-wise zip, not iterrows (r6 — a pandas Series per row;
-        # same fix measured 4x on csv_roundtrip's blob build)
+        # the same fix measured 4x on a CSV blob build)
         recs = []
         for d, txt in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
             d = int(d)
@@ -1014,7 +1014,8 @@ def q_bloom_join(spark, sf_dir) -> DataFrame:
     fact = orders.select("o_orderkey", "o_custkey")
     # ONE fact pass for the whole funnel (r6, guide §1.2): the probe
     # emits a membership flag instead of filtering, the exact check is
-    # a broadcast left join against the (unique-keyed) dim, and all
+    # a broadcast left join against the dim's distinct keys (a repeated
+    # key would duplicate fact rows and inflate every count), and all
     # four counts + the matched sha come out of a single conditional
     # aggregation — previously three separate fact scans (bare count,
     # probe count, probe + semi-join + collect), each re-running the
@@ -1022,9 +1023,10 @@ def q_bloom_join(spark, sf_dir) -> DataFrame:
     # skips the NULLs the WHEN leaves on unmatched rows.
     flagged = bloom_probe(fact, F.col("o_custkey"), bloom, k=2,
                           m_bits=4096, flag="_hit")
+    keys = dim.dropDuplicates(["c_custkey"])
     j = flagged.join(
-        F.broadcast(dim),
-        flagged.o_custkey == dim.c_custkey, "left")
+        F.broadcast(keys),
+        flagged.o_custkey == keys.c_custkey, "left")
     is_m = F.col("_hit") & F.col("c_custkey").isNotNull()
     return j.agg(
         F.count("*").alias("n_fact"),
@@ -1295,56 +1297,6 @@ def q_png_roundtrip(spark, sf_dir) -> DataFrame:
             .localCheckpoint().orderBy("doc_id"))
 
 
-def q_gif_roundtrip(spark, sf_dir) -> DataFrame:
-    """GIF87a container (sources/gif.py — from-spec GIF-LZW): per doc
-    a 6x6 indexed image over a 16-color palette, indices
-    (doc_id*13 + i*5) % 16 and palette channel values
-    (doc_id*7 + j*11) % 256, encoded -> decoded inside the Arrow
-    batch; the oracle recomputes both streams closed-form. Completes
-    the big-three web image formats (JPEG/PNG/GIF)."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources.tables import spread_small_input
-
-    # r6: spread the single-split input under the python codec pass
-    docs = spread_small_input(
-        load(spark, sf_dir, "documents").select("doc_id"))
-
-    def work(batches):
-        import numpy as np
-
-        from imagery_utils_spark.sources.gif import (
-            decode_gif, encode_gif)
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                idx = np.array([(d * 13 + i * 5) % 16
-                                for i in range(36)],
-                               dtype=np.uint8).reshape(6, 6)
-                pal = np.array([(d * 7 + j * 11) % 256
-                                for j in range(48)],
-                               dtype=np.uint8).reshape(16, 3)
-                i2, p2 = decode_gif(encode_gif(idx, pal))
-                assert i2.shape == (6, 6) and p2.shape[0] == 16
-                rows.append((
-                    d,
-                    ",".join(str(v) for v in i2.reshape(-1).tolist()),
-                    ",".join(str(v) for v in
-                             p2[:16].reshape(-1).tolist())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "idx_csv", "pal_csv"])
-
-    out = docs.mapInPandas(
-        work, "doc_id long, idx_csv string, pal_csv string")
-    # checkpoint the digest before the sort (r6): the codec mapInPandas
-    # sits after the last exchange, so range sampling would run it twice
-    return (out.select("doc_id",
-                       F.sha2("idx_csv", 256).alias("idx_sha"),
-                       F.sha2("pal_csv", 256).alias("pal_sha"))
-            .localCheckpoint().orderBy("doc_id"))
-
-
 def q_bpe_train(spark, sf_dir) -> DataFrame:
     """BPE merge training (operators/bpe.py, Sennrich 2016): 4 merge
     rounds over the [a-z]+ word-frequency table. Corpus collapses once
@@ -1396,77 +1348,6 @@ def q_neg_sample(spark, sf_dir) -> DataFrame:
             .otherwise(cand))
     return (out.select("doc_id", "neg0", "neg1", "neg2", "neg3")
             .orderBy("doc_id"))
-
-
-def q_mp3_meta(spark, sf_dir) -> DataFrame:
-    """MP3 frame index (sources/mp3.py, ISO 11172-3 header layer): per
-    doc a synthetic VBR stream — ID3v2 prefix of doc_id%5 filler
-    bytes, then 3 frames with bitrate index 1+(doc_id+f)%14, sample
-    rate index doc_id%3, padding (doc_id+f)%2 — built and re-walked
-    inside the Arrow batch. The oracle recomputes offsets and frame
-    lengths closed-form from the same tables (144000*kbps//sr+pad),
-    so any header-packing or walk asymmetry flips the sha."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources.tables import spread_small_input
-
-    # r6: spread the single-split input under the python codec pass
-    docs = spread_small_input(
-        load(spark, sf_dir, "documents").select("doc_id"))
-
-    def work(batches):
-        from imagery_utils_spark.sources.mp3 import (
-            build_id3v2, build_mp3_frame, parse_mp3)
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                blob = build_id3v2(d % 5)
-                for f in range(3):
-                    blob += build_mp3_frame(1 + (d + f) % 14, d % 3,
-                                            (d + f) % 2, crc=(f == 1))
-                frames = parse_mp3(blob)
-                rows.append((
-                    d, len(frames), len(blob),
-                    ",".join(f"{fr['offset']}:{fr['kbps']}:"
-                             f"{fr['samplerate']}:{fr['padding']}:"
-                             f"{fr['length']}" for fr in frames)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_frames", "stream_len", "frames_csv"])
-
-    out = docs.mapInPandas(
-        work, "doc_id long, n_frames int, stream_len int, "
-              "frames_csv string")
-    return (out.select("doc_id", "n_frames", "stream_len",
-                       F.sha2("frames_csv", 256).alias("frames_sha"))
-            .orderBy("doc_id"))
-
-
-def _mp3_oracle_sql() -> str:
-    """Closed-form frame walk from the same bitrate/samplerate tables."""
-    from imagery_utils_spark.sources.mp3 import BITRATES_KBPS, SAMPLERATES
-    kb = "[" + ", ".join(str(v) for v in BITRATES_KBPS[1:]) + "]"
-    sr = "[" + ", ".join(str(v) for v in SAMPLERATES) + "]"
-    return (
-        f"WITH f AS (SELECT doc_id, i, "
-        f"{kb}[1 + (doc_id + i) % 14] AS kbps, "
-        f"{sr}[1 + doc_id % 3] AS srate, "
-        f"(doc_id + i) % 2 AS pad FROM documents, "
-        f"unnest([0, 1, 2]) AS u(i)), "
-        "g AS (SELECT doc_id, i, kbps, srate, pad, "
-        "144000 * kbps // srate + pad AS flen FROM f), "
-        "o AS (SELECT doc_id, i, kbps, srate, pad, flen, "
-        "10 + (doc_id % 5) + coalesce(sum(flen) OVER ("
-        "PARTITION BY doc_id ORDER BY i ROWS BETWEEN UNBOUNDED "
-        "PRECEDING AND 1 PRECEDING), 0) AS off FROM g) "
-        "SELECT doc_id, 3 AS n_frames, "
-        "cast(10 + (doc_id % 5) + sum(flen) as int) AS stream_len, "
-        "sha256(string_agg(cast(off as varchar) || ':' || "
-        "cast(kbps as varchar) || ':' || cast(srate as varchar) || "
-        "':' || cast(pad as varchar) || ':' || "
-        "cast(flen as varchar), ',' ORDER BY i)) AS frames_sha "
-        "FROM o GROUP BY doc_id ORDER BY doc_id"
-    )
 
 
 def q_partition_prune(spark, sf_dir) -> DataFrame:
@@ -3889,86 +3770,6 @@ def q_anomaly_mad(spark, sf_dir) -> DataFrame:
             .orderBy("event_type"))
 
 
-def _g711_inner_sql(gen: str) -> str:
-    """Shared G.711 battery pipeline: synthetic 16-bit PCM (64 samples
-    per doc from integer hash math), encode+decode both companders,
-    re-encode the decoded samples (idempotence audit). ``gen`` is the
-    dialect-specific sample generator; everything after it is the SAME
-    expression text on both engines."""
-    from imagery_utils_spark.functions import audio as A
-
-    steps = (A.ULAW_ENCODE_STEPS + A.ULAW_DECODE_STEPS
-             + A.ALAW_ENCODE_STEPS + A.ALAW_DECODE_STEPS
-             + A.rebind(A.ULAW_ENCODE_STEPS, "r", {"x": "upcm"})
-             + A.rebind(A.ALAW_ENCODE_STEPS, "r", {"x": "apcm"}))
-    return A.steps_sql(gen, steps)
-
-
-_G711_AGG_SQL = (
-    "SELECT doc_id % 16 AS bucket, count(*) AS n, "
-    "sum(ucode) AS sum_ucode, sum(acode) AS sum_acode, "
-    "sum(upcm) AS sum_upcm, sum(apcm) AS sum_apcm, "
-    "max(abs(x - upcm)) AS max_uerr, max(abs(x - apcm)) AS max_aerr, "
-    "sum(CASE WHEN rucode <> ucode THEN 1 ELSE 0 END) AS n_u_nonidem, "
-    "sum(CASE WHEN racode <> acode THEN 1 ELSE 0 END) AS n_a_nonidem "
-    "FROM ({inner}) s GROUP BY doc_id % 16 ORDER BY bucket"
-)
-
-
-def q_g711_codec(spark, sf_dir) -> DataFrame:
-    """G.711 mu-law + A-law companding (functions/audio.py) as PURE
-    column algebra — the telephony codec's sign/segment/mantissa
-    packing runs entirely inside whole-stage codegen (no Python, no
-    shuffle before the final rollup), and the identical expression
-    TEXT is the oracle. Spec parity pinned exhaustively (all 65536
-    inputs vs the public g711.c bit-twiddling form) in
-    tests/test_audio.py; here the corpus-driven samples pin sums,
-    quantization-error maxima, and the roundtrip idempotence audit
-    (A-law exact; mu-law's 3 'negative zero' cells counted, not
-    hidden)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    gen = docs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("i")
-    ).withColumn(
-        "x", F.expr("(doc_id * 2654435761 + i * 40503) % 65536 - 32768"))
-    gen.createOrReplaceTempView("g711_samples")
-    inner = _g711_inner_sql("SELECT * FROM g711_samples")
-    return spark.sql(_G711_AGG_SQL.format(inner=inner))
-
-
-def q_zip_roundtrip(spark, sf_dir) -> DataFrame:
-    """ZIP container (sources/ziparc.py, PKWARE APPNOTE from spec): 10
-    docs per archive (stored/deflate alternating by doc), built
-    executor-side, exploded back by the central-directory parser with
-    crc32 + size verification enforced in-line; the oracle recomputes
-    name/method/size/sha direct from the corpus — any writer/parser
-    asymmetry or crc slip breaks parity. Interop with stdlib zipfile
-    pinned both directions in tests/test_ziparc.py."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources import ziparc as Z
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        entries = []
-        for _, r in pdf.iterrows():
-            d = int(r.doc_id)
-            entries.append((f"p/{d}.txt", str(r.text).encode("utf-8"),
-                            Z.DEFLATED if d % 2 else Z.STORED))
-        return pd.DataFrame({"zip_id": [int(key[0])],
-                             "zip": [Z.write_zip(entries)]})
-
-    blobs = (docs.groupBy(F.floor(F.col("doc_id") / 10).alias("g"))
-             .applyInPandas(build, "zip_id long, zip binary"))
-    return (Z.zip_entries(blobs)
-            .select("name", "method", "usize",
-                    F.sha2(F.col("body"), 256).alias("body_sha"))
-            .orderBy("name"))
-
-
 def q_feature_hash(spark, sf_dir) -> DataFrame:
     """Hashing-trick featurizer (operators/features.py, Weinberger
     2009): fixed-dim signed-hash vectors with NO vocabulary build —
@@ -4039,45 +3840,6 @@ def q_hist_eq(spark, sf_dir) -> DataFrame:
                 / (F.col("n") - F.col("cdf_min")))).cast("long")
     return (g.select("tile", "v", "cnt", new_v.alias("new_v"))
             .orderBy("tile", "v"))
-
-
-def q_csv_roundtrip(spark, sf_dir) -> DataFrame:
-    """RFC 4180 CSV container (sources/csvio.py): 10 docs per blob with
-    a deliberately hostile text field (appended quote/comma/newline
-    riff exercises doubled quotes, embedded commas AND multi-line
-    records — the case naive line splitting corrupts); built
-    executor-side with the minimal-quoting writer, exploded back by
-    the state-machine parser. Oracle recomputes id/lang/sha from the
-    corpus with the same riff."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources import csvio as C
-
-    riff = '",\n tricky "'
-    docs = (load(spark, sf_dir, "documents")
-            .select("doc_id", "lang",
-                    F.concat(F.col("text"), F.lit(riff)).alias("body")))
-
-    def build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        # column-wise zip, not iterrows (r6): iterrows materializes a
-        # pandas Series per row and dominated the build UDF's profile
-        rows = list(zip((str(int(x)) for x in pdf["doc_id"]),
-                        (str(x) for x in pdf["lang"]),
-                        (str(x) for x in pdf["body"])))
-        return pd.DataFrame({"csv_id": [int(key[0])],
-                             "csv": [C.write_csv(rows)]})
-
-    blobs = (docs.groupBy(F.floor(F.col("doc_id") / 10).alias("g"))
-             .applyInPandas(build, "csv_id long, csv string"))
-    from pyspark.sql import types as T
-    schema = T.StructType([T.StructField("doc_id", T.StringType()),
-                           T.StructField("lang", T.StringType()),
-                           T.StructField("body", T.StringType())])
-    return (C.csv_records(blobs, schema)
-            .select(F.col("doc_id").cast("long").alias("doc_id"),
-                    "lang", F.sha2(F.col("body"), 256).alias("body_sha"))
-            .orderBy("doc_id"))
 
 
 def q_temporal_join(spark, sf_dir) -> DataFrame:
@@ -4389,35 +4151,6 @@ def q_arrow_group_stats(spark, sf_dir) -> DataFrame:
     schema = "tile long, mode_v long, mode_n long, n long"
     return (px.groupBy("tile").applyInArrow(mode_fn, schema)
             .orderBy("tile"))
-
-
-def q_tar_roundtrip(spark, sf_dir) -> DataFrame:
-    """POSIX ustar container (sources/tar.py): 10 docs per archive
-    built executor-side, exploded back by the checksum-verifying
-    parser (stdlib-tarfile interop pinned both directions in
-    tests/test_tar.py). Completes the archive set beside WARC and ZIP;
-    the reference bundles sidecars in tar. Oracle recomputes
-    name/size/sha direct from the corpus."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources import tar as TAR
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        entries = [(f"p/{int(r.doc_id)}.txt",
-                    str(r.text).encode("utf-8"))
-                   for _, r in pdf.iterrows()]
-        return pd.DataFrame({"tar_id": [int(key[0])],
-                             "tar": [TAR.write_tar(entries)]})
-
-    blobs = (docs.groupBy(F.floor(F.col("doc_id") / 10).alias("g"))
-             .applyInPandas(build, "tar_id long, tar binary"))
-    return (TAR.tar_entries(blobs)
-            .select("name", "size",
-                    F.sha2(F.col("body"), 256).alias("body_sha"))
-            .orderBy("name"))
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -4891,8 +4624,8 @@ def q_hilbert_key(spark, sf_dir) -> DataFrame:
     pure whole-stage codegen on Spark, the IDENTICAL text on DuckDB.
     Bijectivity + the adjacency property are pinned in
     tests/test_hilbert.py against an independent reference."""
-    from imagery_utils_spark.functions.audio import apply_steps
-    from imagery_utils_spark.operators.hilbert import hilbert_steps
+    from imagery_utils_spark.operators.hilbert import (
+        apply_steps, hilbert_steps)
 
     pts = MQ.geocoded_pages(spark, sf_dir).select(
         "doc_id", F.expr(_HILBERT_X).alias("hx"),
@@ -5813,112 +5546,6 @@ def q_map_surface(spark, sf_dir) -> DataFrame:
     return docs.select(
         "doc_id", F.size(m).alias("n_keys"), F.size(m3).alias("n_kept"),
         rendered.alias("entries")).orderBy("doc_id")
-
-
-def q_gif_anim_compose(spark, sf_dir) -> DataFrame:
-    """GIF89a animation with partial-canvas frames + the player's
-    composition pass (sources/gif.py compose_gif — disposal 2 restore-
-    to-background, 3 restore-to-previous, transparency holes), closing
-    the last declared GIF limit. Per doc: full base frame (disposal 2),
-    a transparent-holed patch (disposal 3), an opaque patch — encoded,
-    re-decoded and composed executor-side; the oracle derives all three
-    DISPLAYED canvases closed-form (the disposal semantics make them
-    analytic: frame 2 paints over background, not over frame 1).
-    Spec-vector + per-disposal literals pinned in tests/test_gif.py."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources.tables import spread_small_input
-
-    # r6: spread the single-split input under the python codec pass
-    docs = spread_small_input(
-        load(spark, sf_dir, "documents").select("doc_id")) \
-        .filter(F.col("doc_id") % 3 == 0)
-
-    def work(batches):
-        import numpy as np
-
-        from imagery_utils_spark.sources.gif import (
-            compose_gif, encode_gif89a_anim)
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                a = np.array([[(d + i * 3 + j) % 16 for j in range(8)]
-                              for i in range(8)], dtype=np.uint8)
-                b = np.array([[(d * 5 + i * 7 + j) % 16
-                               for j in range(4)] for i in range(3)],
-                             dtype=np.uint8)
-                c = np.array([[(d * 11 + i * 2 + j + 1) % 16
-                               for j in range(2)] for i in range(2)],
-                             dtype=np.uint8)
-                pal = np.array([(d * 7 + j * 11) % 256
-                                for j in range(48)],
-                               dtype=np.uint8).reshape(16, 3)
-                blob = encode_gif89a_anim(
-                    [{"indices": a, "disposal": 2, "delay_cs": 5},
-                     {"indices": b, "left": 2, "top": 3,
-                      "transparent": d % 16, "disposal": 3},
-                     {"indices": c, "left": 5, "top": 1}],
-                    pal, background=0)
-                _, out = compose_gif(blob)
-                assert len(out) == 3
-                rows.append(tuple([d] + [
-                    ",".join(str(v) for v in fr.reshape(-1).tolist())
-                    for fr in out]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "f0", "f1", "f2"])
-
-    out = docs.mapInPandas(work, "doc_id long, f0 string, f1 string, "
-                                 "f2 string")
-    return (out.select("doc_id",
-                       F.sha2("f0", 256).alias("f0_sha"),
-                       F.sha2("f1", 256).alias("f1_sha"),
-                       F.sha2("f2", 256).alias("f2_sha"))
-            .orderBy("doc_id"))
-
-
-def q_exif_meta(spark, sf_dir) -> DataFrame:
-    """EXIF extraction from JPEG APP1 blobs (sources/exif.py — TIFF 6.0
-    IFD walk, EXIF 2.3 envelope, both byte orders alternating per doc)
-    — the in-band camera-metadata scan of a multimodal corpus: marker
-    grammar only, no entropy decode, Arrow-batched. Each blob is BUILT
-    executor-side by the from-spec writer and re-parsed; the oracle
-    derives the expected fields analytically from doc_id, so any
-    writer/parser asymmetry (inline vs heap ASCII, endianness, marker
-    walk) breaks parity. Hand-assembled spec-layout golden pinned in
-    tests/test_exif.py."""
-    import pandas as pd
-
-    from imagery_utils_spark.sources.tables import spread_small_input
-
-    # r6: spread the single-split input under the python codec pass
-    docs = spread_small_input(
-        load(spark, sf_dir, "documents").select("doc_id")) \
-        .filter(F.col("doc_id") % 4 == 1)
-
-    def work(batches):
-        from imagery_utils_spark.sources.exif import (
-            build_jpeg_exif, parse_exif)
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                blob = build_jpeg_exif(
-                    {0x010F: f"Vendor{d % 5}", 0x0110: f"Camera{d % 7}",
-                     0x0112: d % 8 + 1,
-                     0x0132: f"2026:01:{d % 28 + 1:02d} 00:00:00"},
-                    little_endian=(d % 2 == 1))
-                m = parse_exif(blob)
-                rows.append((d, m["byte_order"], m["make"], m["model"],
-                             m["orientation"], m["datetime"]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "byte_order", "make", "model", "orientation",
-                "dt"])
-
-    out = docs.mapInPandas(
-        work, "doc_id long, byte_order string, make string, "
-              "model string, orientation int, dt string")
-    return out.orderBy("doc_id")
 
 
 def q_sitemap_urls(spark, sf_dir) -> DataFrame:
@@ -10676,10 +10303,8 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_sample": q_stratified_sample,
         "kmv_intersect": q_kmv_intersect,
         "png_roundtrip": q_png_roundtrip,
-        "gif_roundtrip": q_gif_roundtrip,
         "bpe_train": q_bpe_train,
         "neg_sample": q_neg_sample,
-        "mp3_meta": q_mp3_meta,
         "partition_prune": q_partition_prune,
         "bucketed_join": q_bucketed_join,
         "star_join": q_star_join,
@@ -10767,12 +10392,9 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gap_fill": q_gap_fill,
         "kcore": q_kcore,
         "anomaly_mad": q_anomaly_mad,
-        "g711_codec": q_g711_codec,
-        "zip_roundtrip": q_zip_roundtrip,
         "feature_hash": q_feature_hash,
         "interval_overlap": q_interval_overlap,
         "hist_eq": q_hist_eq,
-        "csv_roundtrip": q_csv_roundtrip,
         "temporal_join": q_temporal_join,
         "ntile_bins": q_ntile_bins,
         "pmi_pairs": q_pmi_pairs,
@@ -10784,7 +10406,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "udtf_sentences": q_udtf_sentences,
         "variant_json": q_variant_json,
         "arrow_group_stats": q_arrow_group_stats,
-        "tar_roundtrip": q_tar_roundtrip,
         "unpivot_melt": q_unpivot_melt,
         "rank_functions": q_rank_functions,
         "twap": q_twap,
@@ -10838,8 +10459,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ewma_trend": q_ewma_trend,
         "weighted_sample": q_weighted_sample,
         "map_surface": q_map_surface,
-        "gif_anim_compose": q_gif_anim_compose,
-        "exif_meta": q_exif_meta,
         "sitemap_urls": q_sitemap_urls,
         "ntt_convolution": q_ntt_convolution,
         "jaro_winkler": q_jaro_winkler,
@@ -11147,8 +10766,8 @@ def _rpc_warp_oracle_sql() -> str:
 
 
 def _hilbert_oracle_sql() -> str:
-    from imagery_utils_spark.functions.audio import steps_sql
-    from imagery_utils_spark.operators.hilbert import hilbert_steps
+    from imagery_utils_spark.operators.hilbert import (
+        hilbert_steps, steps_sql)
 
     inner = (f"WITH {_pages_cte()} SELECT doc_id, "
              f"{_HILBERT_X} AS hx, {_HILBERT_Y} AS hy FROM pages")
@@ -11959,16 +11578,6 @@ def oracle_sql() -> dict[str, str]:
             "i -> cast((doc_id * 31 + i * 7) % 256 as varchar)), ',')) "
             "AS pix_sha FROM documents ORDER BY doc_id"
         ),
-        # GIF roundtrip: index + palette streams closed-form.
-        "gif_roundtrip": (
-            "SELECT doc_id, "
-            "sha256(array_to_string(list_transform(range(0, 36), "
-            "i -> cast((doc_id * 13 + i * 5) % 16 as varchar)), ',')) "
-            "AS idx_sha, "
-            "sha256(array_to_string(list_transform(range(0, 48), "
-            "j -> cast((doc_id * 7 + j * 11) % 256 as varchar)), ',')) "
-            "AS pal_sha FROM documents ORDER BY doc_id"
-        ),
         # Negative sampling: salted-sha draws + wraparound replay.
         "neg_sample": (
             "WITH n AS (SELECT count(*) AS nc FROM documents), "
@@ -12344,11 +11953,6 @@ def oracle_sql() -> dict[str, str]:
             "cast(bit_count(bitmap) as bigint) AS n_days "
             "FROM b ORDER BY user_id"
         ),
-        "tar_roundtrip": (
-            "SELECT 'p/' || doc_id || '.txt' AS name, "
-            "cast(octet_length(encode(text)) as bigint) AS size, "
-            "sha256(text) AS body_sha FROM documents ORDER BY name"
-        ),
         "unpivot_melt": (
             "SELECT user_id % 10 AS bucket, event_type, "
             "count(*) AS n FROM events GROUP BY 1, 2 "
@@ -12465,11 +12069,6 @@ def oracle_sql() -> dict[str, str]:
             "(2 * six - (n_users + 1) * sx) / (n_users * sx) AS gini "
             "FROM g ORDER BY event_type"
         ),
-        "csv_roundtrip": (
-            "SELECT doc_id, lang, "
-            "sha256(text || '\",' || chr(10) || ' tricky \"') "
-            "AS body_sha FROM documents ORDER BY doc_id"
-        ),
         "temporal_join": (
             "WITH log AS (SELECT user_id % 50 AS key, "
             "event_type AS attr, "
@@ -12568,18 +12167,6 @@ def oracle_sql() -> dict[str, str]:
             "as bigint) AS new_v "
             "FROM c2 ORDER BY tile, v"
         ),
-        "zip_roundtrip": (
-            "SELECT 'p/' || doc_id || '.txt' AS name, "
-            "cast(CASE WHEN doc_id % 2 = 1 THEN 8 ELSE 0 END as int) "
-            "AS method, "
-            "cast(octet_length(encode(text)) as bigint) AS usize, "
-            "sha256(text) AS body_sha "
-            "FROM documents ORDER BY name"
-        ),
-        "g711_codec": _G711_AGG_SQL.format(inner=_g711_inner_sql(
-            "SELECT doc_id, i, (doc_id * 2654435761 + i * 40503) "
-            "% 65536 - 32768 AS x FROM documents CROSS JOIN "
-            "(SELECT unnest(generate_series(0, 63)) AS i) g")),
         "anomaly_mad": (
             "WITH e AS (SELECT event_type, "
             "cast(floor(value * 100) as bigint) AS y FROM events), "
@@ -12756,9 +12343,6 @@ def oracle_sql() -> dict[str, str]:
             "max(CASE WHEN rn = (n * 99 + 99) // 100 THEN cents END) "
             "AS p99 FROM r"
         ),
-        # MP3 frame walk: offsets/lengths closed-form (generated from
-        # the shared bitrate/samplerate tables).
-        "mp3_meta": _mp3_oracle_sql(),
         # BPE training: 4 unrolled rounds (see _bpe_oracle_sql).
         "bpe_train": _bpe_oracle_sql(),
         # Snapshot diff: construction + full outer sha join replayed.
@@ -13878,30 +13462,6 @@ def oracle_sql() -> dict[str, str]:
             "sum(max_age) AS sum_max_age, sum(clen) AS sum_clen "
             "FROM p GROUP BY status, media_type, charset "
             "ORDER BY status, media_type, charset"
-        ),
-        # GIF animation composition — all three displayed canvases are
-        # analytic consequences of the disposal semantics (f0 shown =
-        # base; f1 shown = patch-over-BACKGROUND since f0 had disposal
-        # 2; f2 shown = opaque patch over background since f1 had
-        # disposal 3), so the oracle derives them closed-form.
-        "gif_anim_compose": (
-            "SELECT doc_id, "
-            "sha256(array_to_string(list_transform(range(0, 64), k -> "
-            "cast((doc_id + (k // 8) * 3 + (k % 8)) % 16 as varchar)"
-            "), ',')) AS f0_sha, "
-            "sha256(array_to_string(list_transform(range(0, 64), k -> "
-            "cast(CASE WHEN k // 8 BETWEEN 3 AND 5 "
-            "AND k % 8 BETWEEN 2 AND 5 "
-            "AND (doc_id * 5 + (k // 8 - 3) * 7 + (k % 8 - 2)) % 16 "
-            "<> doc_id % 16 "
-            "THEN (doc_id * 5 + (k // 8 - 3) * 7 + (k % 8 - 2)) % 16 "
-            "ELSE 0 END as varchar)), ',')) AS f1_sha, "
-            "sha256(array_to_string(list_transform(range(0, 64), k -> "
-            "cast(CASE WHEN k // 8 BETWEEN 1 AND 2 "
-            "AND k % 8 BETWEEN 5 AND 6 "
-            "THEN (doc_id * 11 + (k // 8 - 1) * 2 + (k % 8 - 5) + 1) "
-            "% 16 ELSE 0 END as varchar)), ',')) AS f2_sha "
-            "FROM documents WHERE doc_id % 3 = 0 ORDER BY doc_id"
         ),
         # Closest pair — O(n²) brute force (VALUES).
         "closest_pair": _IO.closest_pair_oracle_sql(_oracle_sf_dir()),
@@ -16239,19 +15799,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT g, sha256(string_agg(cast(cv as varchar), ',' "
             "ORDER BY ck)) AS conv_sha, sum(cv) AS conv_sum, "
             "max(cv) AS conv_max FROM c GROUP BY g ORDER BY g"
-        ),
-        # EXIF — expected fields are analytic in doc_id; the engine
-        # must reproduce them through a real build->parse binary pass.
-        "exif_meta": (
-            "SELECT doc_id, "
-            "CASE WHEN doc_id % 2 = 1 THEN 'II' ELSE 'MM' END "
-            "AS byte_order, "
-            "'Vendor' || cast(doc_id % 5 as varchar) AS make, "
-            "'Camera' || cast(doc_id % 7 as varchar) AS model, "
-            "cast(doc_id % 8 + 1 as int) AS orientation, "
-            "'2026:01:' || lpad(cast(doc_id % 28 + 1 as varchar), 2, "
-            "'0') || ' 00:00:00' AS dt "
-            "FROM documents WHERE doc_id % 4 = 1 ORDER BY doc_id"
         ),
         # Sitemap — rollup derived analytically, no XML on oracle side.
         "sitemap_urls": (

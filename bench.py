@@ -157,8 +157,6 @@ def main() -> None:
                   "hygiene_funnel",
                   # r5d iterative peel / CC-composed rows
                   "kcore", "grid_cluster", "bfs_layers", "dag_layers",
-                  # container build+parse roundtrips (warc-shaped walls)
-                  "zip_roundtrip", "tar_roundtrip", "csv_roundtrip",
                   # write-then-read-back lakehouse semantics rows
                   "dyn_overwrite", "nested_shred", "stream_upsert"}
     rep_walls: dict[str, list[float]] = {}

@@ -11,8 +11,8 @@ The classic iterative xy→d algorithm (Hamilton's / the Wikipedia
 public-domain form) is a fixed per-bit loop of integer compares,
 rotations and reflections — so for a fixed ``order`` it UNROLLS into a
 chain of CASE/arithmetic step expressions in the dialect-shared SQL
-subset (the functions/audio.py ``steps_sql`` mechanism): the identical
-text runs as Spark whole-stage-codegen columns AND as the DuckDB
+subset: ``apply_steps`` folds the identical text into Spark
+whole-stage-codegen columns and ``steps_sql`` nests it into the DuckDB
 oracle. No UDF, no shuffle; computing the key is a projection.
 
 Layout use: ``df.repartitionByRange(hilbert_d).sortWithinPartitions``
@@ -21,7 +21,29 @@ Layout use: ``df.repartitionByRange(hilbert_d).sortWithinPartitions``
 
 from __future__ import annotations
 
-__all__ = ["hilbert_steps", "hilbert_xy2d_ref"]
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+__all__ = ["apply_steps", "hilbert_steps", "hilbert_xy2d_ref", "steps_sql"]
+
+
+def apply_steps(df: DataFrame, steps: list[tuple[str, str]]) -> DataFrame:
+    """Fold the step expressions onto ``df`` as JVM columns (Spark side).
+    Each step may reference every earlier one; Catalyst inlines the
+    chain into one whole-stage-codegen projection."""
+    return reduce(lambda d, s: d.withColumn(s[0], F.expr(s[1])), steps, df)
+
+
+def steps_sql(inner: str, steps: list[tuple[str, str]]) -> str:
+    """The SAME step expressions as nested SELECTs over ``inner`` (the
+    DuckDB oracle side) — identical expression text, so results are
+    bit-exact by construction, not by luck."""
+    sql = inner
+    for name, expr in steps:
+        sql = f"SELECT t.*, {expr} AS {name} FROM ({sql}) t"
+    return sql
 
 
 def hilbert_steps(order: int, x: str = "hx", y: str = "hy",

@@ -18,7 +18,7 @@ payloads. This implements the core profile end-to-end:
   stdlib's, only the filter/framing layers are ours);
 * multi-IDAT streams (the spec allows IDAT to be split arbitrarily).
 
-Like the repo's other codecs (sources/gif.py, sources/bmp.py), encode
+Like the repo's other raster codec (sources/bmp.py), encode
 and decode are independent walks of the spec — a roundtrip equality is
 evidence both sides are right, and the battery pins decode parity
 against a closed-form pixel oracle.

@@ -2,7 +2,7 @@
 writes by default for imagery products (`-co COMPRESS=LZW`), and a
 declared gap of sources/geotiff.py until now.
 
-Same dictionary machine as GIF-LZW (sources/gif.py) but with the two
+Same dictionary machine as GIF-LZW but with the two
 famous differences that make the formats mutually unreadable:
 
 * **MSB-first bit packing** (GIF is LSB-first);
@@ -51,8 +51,8 @@ def tiff_lzw_encode(data: bytes) -> bytes:
     table = {bytes([i]): i for i in range(256)}
     next_code, width = _FIRST, 9
     w.write(_CLEAR, width)
-    # Width bookkeeping mirrors the decoder EXACTLY (same lesson as
-    # sources/gif.py, found by fuzz at the stream tail): the decoder
+    # Width bookkeeping mirrors the decoder EXACTLY (found by fuzz at
+    # the stream tail): the decoder
     # grows by one entry per data code except the first after a Clear
     # and early-changes at len == 2^width - 2; driving the encoder's
     # width from next_code desyncs EOI when the final entry lands on

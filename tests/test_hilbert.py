@@ -4,9 +4,8 @@ evaluation via DuckDB."""
 
 import duckdb
 
-from imagery_utils_spark.functions.audio import steps_sql
 from imagery_utils_spark.operators.hilbert import (
-    hilbert_steps, hilbert_xy2d_ref)
+    hilbert_steps, hilbert_xy2d_ref, steps_sql)
 
 
 def _duck_eval(order):

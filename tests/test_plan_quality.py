@@ -386,17 +386,6 @@ def test_compaction_plan_single_shuffle_on_source(spark, sf_dir):
     assert shuffles and all("source" in s for s in shuffles), shuffles
 
 
-def test_g711_is_pure_jvm_projection(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["g711_codec"](spark, sf_dir)
-    df.collect()  # finalize AQE so codegen annotations materialize
-    plan = plan_of(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "codegen id" in plan
-
-
 def test_hist_eq_collapses_before_window(spark, sf_dir):
     import __spark_entry__ as E
 

@@ -2,6 +2,8 @@
 stdlib ``ast`` only (no Spark session, no import of the module):
 
 * ``queries()`` and ``oracle_sql()`` name the same rows;
+* every row name in ``bench.py``'s ``SINGLE_REP`` set is a row, so a
+  deleted row's name cannot linger there doing nothing;
 * every module-level definition and import is reachable from ``entry``,
   ``queries`` or ``oracle_sql``, so deleting a row cannot leave its oracle
   text or helpers behind;
@@ -17,6 +19,7 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY = os.path.join(REPO, "__spark_entry__.py")
+BENCH = os.path.join(REPO, "bench.py")
 PACKAGE = "imagery_utils_spark"
 ROOTS = ("entry", "queries", "oracle_sql")
 
@@ -62,6 +65,18 @@ def test_queries_and_oracles_name_the_same_rows():
     assert rows == oracles, (
         f"queries without oracle: {sorted(rows - oracles)}; "
         f"oracles without query: {sorted(oracles - rows)}")
+
+
+def test_bench_single_rep_names_existing_rows():
+    with open(BENCH, encoding="utf-8") as f:
+        bench = ast.parse(f.read())
+    sets = [n.value for n in ast.walk(bench) if isinstance(n, ast.Assign)
+            and any(isinstance(t, ast.Name) and t.id == "SINGLE_REP"
+                    for t in n.targets)]
+    assert len(sets) == 1 and isinstance(sets[0], ast.Set)
+    names = {e.value for e in sets[0].elts}
+    rows = _returned_dict_keys(_module(), "_raw_queries")
+    assert sorted(names - rows) == []
 
 
 def test_every_module_level_name_is_reachable():

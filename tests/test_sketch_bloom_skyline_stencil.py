@@ -80,6 +80,31 @@ def test_bloom_word_table_is_broadcast_and_fact_unshuffled(spark):
                 line.index("Exchange") > 6  # indented under a build side
 
 
+def test_bloom_join_funnel_ignores_repeated_dim_keys(spark, sf_dir, tmp_path):
+    """The bloom_join row on a fixture copy whose nation-7 customers each
+    appear twice must equal the run on the original: the exact-check
+    join is against the dim's distinct keys, so repeated keys cannot
+    inflate n_fact, n_matched or matched_sha."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    for name in os.listdir(sf_dir):
+        if name != "customer.parquet":
+            os.symlink(os.path.join(sf_dir, name), tmp_path / name)
+    cust = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
+    dup = cust.filter(pc.equal(cust["c_nationkey"], 7))
+    assert dup.num_rows > 0
+    pq.write_table(pa.concat_tables([cust, dup]),
+                   tmp_path / "customer.parquet")
+    q = E.queries()["bloom_join"]
+    assert q(spark, str(tmp_path)).collect() == q(spark, sf_dir).collect()
+
+
 # ------------------------------------------------------------- skyline
 
 def _brute_skyline(pts):

@@ -188,7 +188,8 @@ def test_simhash_blocking_complete_on_fixture(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fps = docs.select("doc_id", DD.simhash_udf()(F.col("text")).alias("fp")).collect()
     ids = np.array([r.doc_id for r in fps])
-    v = np.array([np.uint64(r.fp) for r in fps], dtype=np.uint64)
+    # Spark's simhash is a signed long: reinterpret the bits as uint64
+    v = np.array([r.fp for r in fps], dtype=np.int64).view(np.uint64)
     x = v[:, None] ^ v[None, :]
     ham = np.zeros(x.shape, dtype=np.int64)
     for _ in range(64):
