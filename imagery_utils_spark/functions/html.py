@@ -19,15 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["html_str", "title_col", "meta_content_col", "first_h1_col"]
+__all__ = ["title_col", "meta_content_col", "first_h1_col"]
 
 TITLE_RE = "<title>([^<]*)</title>"
 H1_RE = "<h1>([^<]*)</h1>"
-
-
-def html_str(html: Column) -> Column:
-    """Decode a binary html column to string (idempotent on strings)."""
-    return F.decode(html, "UTF-8")
 
 
 def title_col(page: Column) -> Column:

@@ -51,12 +51,12 @@ def extract_links(pages: DataFrame, html_col: str = "html",
                   id_col: str = "doc_id") -> DataFrame:
     """(doc_id, href, anchor) — one row per anchor tag, document order.
 
-    ``html_col`` may be binary (UTF-8 page bytes) or string. Pages with
-    no anchors contribute no rows.
+    ``html_col`` may be binary (UTF-8 page bytes) or string. Binary is
+    cast to string, which wraps the bytes without validating them, so a
+    page with invalid UTF-8 contributes its anchors instead of failing
+    the query. Pages with no anchors contribute no rows.
     """
-    s = F.col(html_col)
-    if dict(pages.dtypes)[html_col] == "binary":
-        s = F.decode(s, "UTF-8")
+    s = F.col(html_col).cast("string")
     pat = F.lit(LINK_RE)
     pairs = F.arrays_zip(
         F.regexp_extract_all(s, pat, 1).alias("href"),

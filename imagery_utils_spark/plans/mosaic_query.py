@@ -2,7 +2,7 @@
 (``pgc_mosaic_query_index.py``: which scenes/pages contribute to each tile?)
 re-expressed as one DataFrame DAG:
 
-  pages -> geocode (pandas UDF)               # S7 metadata extract
+  pages -> geocode (column slicing)           # S7 metadata extract
         -> scene-attr derivation (columns)    # F7/F8 record projection
         -> tile assignment (broadcast grid)   # J1 spatial filter join
         -> score (column expr)                # O2 + F4 gates
@@ -36,13 +36,13 @@ def with_scene_attrs(df: DataFrame) -> DataFrame:
     to exercise every score gate."""
     d = F.col("doc_id")
     sensor = F.element_at(F.array(*[F.lit(s) for s in SENSORS]), (d % 5 + 1).cast("int"))
-    return (
-        df.withColumn("cloudcover", ((d * 7) % 1000) / 1000.0)
-        .withColumn("sun_elev", ((d * 13) % 900) / 10.0)
-        .withColumn("off_nadir", ((d * 17) % 450) / 10.0)
-        .withColumn("sensor", sensor)
-        .withColumn("bands", F.lit(1))
-    )
+    return df.withColumns({
+        "cloudcover": ((d * 7) % 1000) / 1000.0,
+        "sun_elev": ((d * 13) % 900) / 10.0,
+        "off_nadir": ((d * 17) % 450) / 10.0,
+        "sensor": sensor,
+        "bands": F.lit(1),
+    })
 
 
 def scene_attrs_sql(d: str = "doc_id") -> dict[str, str]:

@@ -138,24 +138,26 @@ def geocode(pages: DataFrame) -> DataFrame:
     """pages + (lat, lon) columns; the byte-identical ``text`` column rides
     through untouched (input_hint invariant).
 
-    Decode + substring_index slicing + try_cast — pure codegen, no regex
-    engine and no Python worker. Pages without the tag geocode to null
-    (analog of metadata-missing scenes that score -1 in the reference's
-    ``lib/mosaic.py``); malformed values null out via try_cast.
+    The tag is the ``content`` attribute value, as an HTML parser reads it:
+    the text after the FIRST marker (the head tag wins when the body text
+    itself contains the marker string), up to the next ``"``. One
+    early-exit ``instr`` over the raw bytes finds it; the cast to string
+    wraps the bytes without validating them, so a page with invalid UTF-8
+    in its body geocodes like any other instead of failing the query.
+    Pure codegen, no regex engine and no Python worker. Pages without the
+    tag geocode to null (analog of metadata-missing scenes that score -1 in
+    the reference's ``lib/mosaic.py``); malformed values null out via
+    try_cast.
     """
-    s = F.decode(F.col("html"), "utf-8")
-    # FIRST occurrence of the marker (the head tag wins when the body text
-    # itself contains the marker string): before the 2nd occurrence, after
-    # the 1st — substring_index(s, mark, 2) returns the whole string when
-    # only one occurrence exists, so the -1 slice is always the text
-    # following the first marker.
-    tag = F.substring_index(
-        F.substring_index(F.substring_index(s, _GEO_MARK, 2), _GEO_MARK, -1), '"', 1
-    )
-    has = F.contains(s, F.lit(_GEO_MARK))
-    lat = F.when(has, F.substring_index(tag, ";", 1)).try_cast("double")
-    lon = F.when(has, F.substring_index(tag, ";", -1)).try_cast("double")
-    return pages.withColumn("lat", lat).withColumn("lon", lon)
+    s = F.col("html").cast("string")
+    at = F.instr(s, _GEO_MARK)
+    # the guard wraps the tag, not each coordinate: lat and lon then share
+    # one tag expression, which codegen evaluates once per row
+    tag = F.when(at > 0, F.substring_index(F.substr(s, at + F.lit(len(_GEO_MARK))), '"', 1))
+    return pages.withColumns({
+        "lat": F.substring_index(tag, ";", 1).try_cast("double"),
+        "lon": F.substring_index(tag, ";", -1).try_cast("double"),
+    })
 
 
 def extract_text_col(html: Column) -> Column:
@@ -167,8 +169,10 @@ def extract_text_col(html: Column) -> Column:
     string '<body>'), and every document ends with the fixed 14-char
     '</body></html>' suffix — so slicing [first '<body>' + 6, len - 14]
     is exact even when the body text itself contains html markers (no
-    regex, no split-on-suffix ambiguity). Pure JVM: decode + locate +
-    substring, whole-stage-codegen'd."""
-    s = F.decode(html, "UTF-8")
+    regex, no split-on-suffix ambiguity). Pure JVM: cast + locate +
+    substring, whole-stage-codegen'd. The cast wraps the bytes without
+    validating them, so a page with invalid UTF-8 yields its raw body
+    instead of failing the query."""
+    s = html.cast("string")
     start = F.locate("<body>", s) + F.lit(6)
     return F.substring(s, start, F.length(s) - start - F.lit(13))

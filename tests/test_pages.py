@@ -1,6 +1,9 @@
 """Pages synthesis determinism, geocode round-trip, byte-identical text
 invariant, and SQL-parity of the lon/lat derivation (BASELINE.json.input_hint)."""
 
+import hashlib
+import random
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -118,6 +121,109 @@ def test_geocode_marker_in_body_first_occurrence(spark):
     df = spark.createDataFrame([(1, bytearray(head + body))], "doc_id long, html binary")
     r = pages.geocode(df).first()
     assert (r.lat, r.lon) == (15.1, 179.8)
+
+
+_HEAD = b'<html><head><meta name="geo.position" content="15.1000;179.8000">'
+
+
+def test_geocode_invalid_utf8_body(spark):
+    # a page whose body is not valid UTF-8 geocodes like the valid page
+    # instead of failing the whole query
+    df = spark.createDataFrame(
+        [(1, bytearray(_HEAD + b"</head><body>ok</body></html>")),
+         (2, bytearray(_HEAD + b"</head><body>bad \xff\xfe x</body></html>"))],
+        "doc_id long, html binary",
+    )
+    got = {r.doc_id: (r.lat, r.lon) for r in pages.geocode(df).collect()}
+    assert got == {1: (15.1, 179.8), 2: (15.1, 179.8)}
+
+
+def test_geocode_tag_ends_at_first_quote(spark):
+    # the tag is the content attribute value: a second marker inside it
+    # does not end it, the closing quote does
+    page = b'<meta name="geo.position" content="12.5;3.0 geo.position" content="7;8">'
+    df = spark.createDataFrame([(1, bytearray(page))], "doc_id long, html binary")
+    r = pages.geocode(df).first()
+    assert (r.lat, r.lon) == (12.5, None)
+
+
+def _attr_tag(s):
+    """The content attribute value after the first marker, as a parser
+    reads it (None without a marker)."""
+    i = s.find(pages._GEO_MARK)
+    return None if i < 0 else s[i + len(pages._GEO_MARK):].split('"', 1)[0]
+
+
+def _marker_before_quote(s):
+    rest = s[s.find(pages._GEO_MARK) + len(pages._GEO_MARK):]
+    j, q = rest.find(pages._GEO_MARK), rest.find('"')
+    return j >= 0 and (q < 0 or j < q)
+
+
+def _decode_slicing_oracle(html):
+    """The earlier geocode: decode the page, cut before the second marker
+    and after the first, then at the first quote."""
+    m = pages._GEO_MARK
+    s = F.decode(html, "utf-8")
+    tag = F.substring_index(
+        F.substring_index(F.substring_index(s, m, 2), m, -1), '"', 1)
+    has = F.contains(s, F.lit(m))
+    return (F.when(has, F.substring_index(tag, ";", 1)).try_cast("double"),
+            F.when(has, F.substring_index(tag, ";", -1)).try_cast("double"))
+
+
+def test_geocode_fuzz_matches_attribute_rule_and_decode_oracle(spark):
+    # 30k adversarial strings from the marker, quotes, separators, digits,
+    # spaces and multi-byte characters. Every row follows the attribute-value
+    # rule; rows differ from the decode oracle only where a second marker
+    # comes before the closing quote (the oracle cut the tag there).
+    rng = random.Random(20261019)
+    tokens = [pages._GEO_MARK] * 3 + ['"', '"', ";", ";", ".", "-", " ", "é", "€",
+                                      '<meta name="'] + list("0123456789")
+    corpus = []
+    for _ in range(30_000):
+        s = "".join(rng.choice(tokens) for _ in range(rng.randrange(16)))
+        if rng.random() < 0.5:
+            s = '<meta name="' + pages._GEO_MARK + s
+        corpus.append(s)
+    df = spark.createDataFrame(
+        [(i, bytearray(s.encode()), _attr_tag(s)) for i, s in enumerate(corpus)],
+        "id long, html binary, tag string",
+    )
+    tag = F.col("tag")
+    exp_lat = F.when(tag.isNotNull(), F.substring_index(tag, ";", 1)).try_cast("double")
+    exp_lon = F.when(tag.isNotNull(), F.substring_index(tag, ";", -1)).try_cast("double")
+    old_lat, old_lon = _decode_slicing_oracle(F.col("html"))
+    rows = pages.geocode(df).select(
+        "id", "lat", "lon", exp_lat.alias("exp_lat"), exp_lon.alias("exp_lon"),
+        old_lat.alias("old_lat"), old_lon.alias("old_lon")).collect()
+    assert len(rows) == len(corpus)
+    parsed = differ = 0
+    for r in rows:
+        s = corpus[r.id]
+        assert (r.lat, r.lon) == (r.exp_lat, r.exp_lon), (s, r)
+        parsed += r.lat is not None
+        if (r.lat, r.lon) != (r.old_lat, r.old_lon):
+            assert _marker_before_quote(s), (s, r)
+            differ += 1
+    # the corpus reaches both the parsed values and the changed rows
+    assert parsed > 1000 and differ > 100, (parsed, differ)
+
+
+def test_extract_text_col_invalid_utf8_body(spark):
+    # the valid page's text is unchanged and the invalid page's body comes
+    # back byte for byte, instead of failing the query
+    bad = b"bad \xff\xfe x"
+    df = spark.createDataFrame(
+        [(1, bytearray(_HEAD + "</head><body>ok é €</body></html>".encode())),
+         (2, bytearray(_HEAD + b"</head><body>" + bad + b"</body></html>"))],
+        "doc_id long, html binary",
+    )
+    text = pages.extract_text_col(F.col("html"))
+    got = {r.doc_id: r for r in df.select("doc_id", text.alias("t"),
+                                          F.sha2(text, 256).alias("h")).collect()}
+    assert got[1].t == "ok é €"
+    assert got[2].h == hashlib.sha256(bad).hexdigest()
 
 
 def test_spread_small_input_byte_gate(spark, tmp_path):

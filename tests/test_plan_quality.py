@@ -61,7 +61,7 @@ def test_flagship_has_codegen_and_single_shuffle(spark, sf_dir):
 
 
 def test_flagship_no_python_udf_in_hot_path(spark, sf_dir):
-    # geocode default is the JVM regexp path: no BatchEvalPython / ArrowEval
+    # geocode is JVM column slicing: no BatchEvalPython / ArrowEval
     plan = plan_of(MQ.ranked_assignments(spark, sf_dir))
     assert "EvalPython" not in plan and "ArrowEval" not in plan
 

@@ -10,7 +10,9 @@ stdlib ``ast`` only (no Spark session, no import of the module):
 * every ``imagery_utils_spark`` import in the repo's Python, at module
   level or inside a function, names an existing module and a name that
   module defines, so deleting a module cannot leave a lazy import that
-  fails only when its function runs."""
+  fails only when its function runs;
+* no package module calls Spark's ``decode``, which fails the whole query
+  on one row of invalid UTF-8 (a cast to string wraps the bytes instead)."""
 
 import ast
 import functools
@@ -158,3 +160,32 @@ def test_every_package_import_resolves():
                     dangling.append(f"{where}: {module} has no {name}")
     assert checked > 100, checked  # the scan must see the repo's imports
     assert dangling == []
+
+
+def _spark_decode_calls(path):
+    """(lineno, text) of each use of ``pyspark.sql.functions.decode`` in a
+    file: a call through a module alias, or an import of the name."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    aliases = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql":
+            aliases |= {a.asname or a.name for a in node.names if a.name == "functions"}
+        elif isinstance(node, ast.Import):
+            aliases |= {a.asname for a in node.names
+                        if a.name == "pyspark.sql.functions" and a.asname}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql.functions" \
+                and any(a.name == "decode" for a in node.names):
+            yield node.lineno, "import of decode"
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                and node.func.attr == "decode" and isinstance(node.func.value, ast.Name) \
+                and node.func.value.id in aliases:
+            yield node.lineno, f"{node.func.value.id}.decode(...)"
+
+
+def test_package_never_calls_spark_decode():
+    files = glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+    found = [f"{os.path.relpath(path, REPO)}:{lineno}: {what}"
+             for path in sorted(files) for lineno, what in _spark_decode_calls(path)]
+    assert found == []

@@ -74,6 +74,17 @@ def test_extract_links_and_rollup(spark):
     assert roll["a.example"].n_src_docs == 1
 
 
+def test_extract_links_invalid_utf8_page(spark):
+    # a page that is not valid UTF-8 contributes its anchors instead of
+    # failing the query, and the valid page's links are unchanged
+    pages = spark.createDataFrame(
+        [(1, b'<html><body><a href="https://a.example/">one</a></body></html>'),
+         (2, b'<html><body>\xff\xfe<a href="https://b.example/">two</a></body></html>')],
+        "doc_id long, html binary")
+    links = sorted((r.doc_id, r.href, r.anchor) for r in extract_links(pages).collect())
+    assert links == [(1, "https://a.example/", "one"), (2, "https://b.example/", "two")]
+
+
 def test_host_col_shapes(spark):
     df = spark.createDataFrame(
         [("https://www.x.example:8080/p/1",),
