@@ -8,7 +8,7 @@ __spark_entry__.queries() at $SPARK_GRAFT_SF_DIR.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N]    (default 32)
+  SPARK_GRAFT_CPUS     local[N]    (default: the CPUs this process may run on)
   SPARK_GRAFT_REPLICATE page replication factor for the flagship (default 200)
 
 Scaling-efficiency protocol (north rule, sandbox form): run this script
@@ -25,13 +25,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from imagery_utils_spark.session import get_spark
+from imagery_utils_spark.session import default_cpus, get_spark
 
 
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     replicate = int(os.environ.get("SPARK_GRAFT_REPLICATE", "200"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 

@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from imagery_utils_spark.session import get_spark
+from imagery_utils_spark.session import default_cpus, get_spark
 
 
 def main() -> None:
@@ -37,7 +37,7 @@ def main() -> None:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(master=f"local[{cpus}]",
                       app_name="imagery_utils_spark-bench-extra",
                       shuffle_partitions=max(4 * cpus, 16))

@@ -255,38 +255,3 @@ def closest_pair_d2(points: list[tuple[int, int]]) -> tuple[int, int]:
 
     rec(0, n)
     return best, cnt
-
-
-def lis_length_patience(seq: list[int]) -> int:
-    """Length of the longest STRICTLY increasing subsequence, by
-    patience sorting (Aldous & Diaconis 1999): one bisect per element
-    over the tails array, O(n log n). The battery oracle recomputes it
-    with the O(n²) textbook DP (f_i = 1 + max f_j over j < i with
-    a_j < a_i) inside a DuckDB recursive CTE — a different algorithm
-    whose agreement is the check."""
-    import bisect
-
-    tails: list[int] = []
-    for a in seq:
-        pos = bisect.bisect_left(tails, a)
-        if pos == len(tails):
-            tails.append(a)
-        else:
-            tails[pos] = a
-    return len(tails)
-
-
-def max_nonoverlap_intervals(intervals: list[tuple[int, int]]) -> int:
-    """Maximum number of pairwise non-overlapping intervals [s, e) —
-    the activity-selection greedy (earliest finish first), provably
-    optimal by the classic exchange argument. The battery oracle is
-    the weighted-scheduling DP specialised to unit weights
-    (f_i = max(f_{i−1}, 1 + f_{p(i)})), so greedy optimality itself
-    is the theorem under test."""
-    taken = 0
-    last_end = None
-    for s, e in sorted(intervals, key=lambda t: (t[1], t[0])):
-        if last_end is None or s >= last_end:
-            taken += 1
-            last_end = e
-    return taken

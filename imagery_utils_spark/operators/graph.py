@@ -36,8 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["connected_components", "dedup_by_components",
-           "minimum_spanning_forest"]
+__all__ = ["connected_components", "dedup_by_components"]
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -168,71 +167,3 @@ def kcore(edges: DataFrame, k: int, iters: int, src: str = "src",
              .localCheckpoint(eager=True))
         deg = e.groupBy("u").agg(F.count("*").alias("degree"))
     return deg.select(F.col("u").alias("node"), "degree")
-
-
-def minimum_spanning_forest(edges: DataFrame, src: str = "u",
-                            dst: str = "v", weight: str = "w",
-                            max_iter: int = 40) -> DataFrame:
-    """Distributed Borůvka (1926) minimum spanning forest.
-
-    ``edges``: undirected weighted edges with **pairwise-distinct
-    weights** (the caller's contract — distinct weights make the MSF
-    unique, which is what lets an independent oracle pin the exact
-    edge set). Returns the forest's edges as (u, v, w).
-
-    Each round is pure DataFrame algebra: label every edge endpoint
-    with its current component, keep crossing edges, pick each
-    component's minimum-weight incident edge (window over component,
-    deterministic because weights are distinct), then contract the
-    picked edges by running :func:`connected_components` ON THE
-    COMPONENT GRAPH — whose size halves (at least) per round, so the
-    loop is O(log n) rounds and nothing is ever collected to the
-    driver. This is the textbook MapReduce-MST shape (Kiveris et al.
-    SoCC 2014 lineage), not a union-find port.
-    """
-    e = (edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-            F.col(weight).cast("long").alias("w"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint(eager=True))
-    comp = (e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .distinct()
-            .withColumn("c", F.col("node"))
-            .localCheckpoint(eager=True))
-    picked = None
-    for _ in range(max_iter):
-        lab_u = comp.select(F.col("node").alias("u"),
-                            F.col("c").alias("cu"))
-        lab_v = comp.select(F.col("node").alias("v"),
-                            F.col("c").alias("cv"))
-        cross = (e.join(lab_u, "u").join(lab_v, "v")
-                 .filter(F.col("cu") != F.col("cv")))
-        if cross.limit(1).count() == 0:
-            break
-        both = (cross.select(F.col("cu").alias("cset"), "u", "v", "w",
-                             "cu", "cv")
-                .unionByName(cross.select(F.col("cv").alias("cset"),
-                                          "u", "v", "w", "cu", "cv")))
-        from pyspark.sql import Window as _W
-        wnd = _W.partitionBy("cset").orderBy("w")
-        sel = (both.withColumn("rn", F.row_number().over(wnd))
-               .filter(F.col("rn") == 1)
-               .select("u", "v", "w", "cu", "cv")
-               .distinct().localCheckpoint(eager=True))
-        new_e = sel.select("u", "v", "w")
-        picked = new_e if picked is None else picked.unionByName(new_e)
-        merged = connected_components(
-            sel.select(F.col("cu").alias("src"),
-                       F.col("cv").alias("dst")), "src", "dst")
-        comp = (comp.join(merged.withColumnRenamed("node", "c"),
-                          "c", "left")
-                .select("node",
-                        F.coalesce("component", "c").alias("c"))
-                .localCheckpoint(eager=True))
-    else:
-        raise RuntimeError("minimum_spanning_forest: no convergence")
-    if picked is None:
-        return e.limit(0)
-    return picked.distinct()

@@ -67,6 +67,12 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     setattr(sc, flag, True)
 
 
+def default_cpus() -> int:
+    """Task threads for a local session: ``SPARK_GRAFT_CPUS`` when set, else
+    the CPUs this process may run on, so each core runs one task thread."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "imagery_utils_spark",
@@ -92,10 +98,10 @@ def get_spark(
     if _REPO_ROOT not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (_REPO_ROOT, pp) if p)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus
 
     b = (
         SparkSession.builder.master(master)

@@ -47,12 +47,10 @@ def test_random_graphs_match_union_find(spark):
         assert got == _uf_components(edges), trial
 
 
-def test_long_chain_converges():
+def test_long_chain_converges(spark):
     # path graph: diameter = n-1; naive min-label propagation needs n
     # rounds, large-star/small-star must do it in O(log^2 n) — assert the
     # iteration budget stays tiny for a 512-node chain.
-    from imagery_utils_spark import session
-    spark = session.get_spark()
     n = 512
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                "src long, dst long")

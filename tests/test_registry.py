@@ -11,6 +11,8 @@ stdlib ``ast`` only (no Spark session, no import of the module):
   level or inside a function, names an existing module and a name that
   module defines, so deleting a module cannot leave a lazy import that
   fails only when its function runs;
+* every name in a package module's ``__all__`` is bound at that module's top
+  level, so deleting a function cannot leave its name exported;
 * no package module calls Spark's ``decode``, which fails the whole query
   on one row of invalid UTF-8 (a cast to string wraps the bytes instead)."""
 
@@ -160,6 +162,30 @@ def test_every_package_import_resolves():
                     dangling.append(f"{where}: {module} has no {name}")
     assert checked > 100, checked  # the scan must see the repo's imports
     assert dangling == []
+
+
+def _all_names(path):
+    """The strings of a module's ``__all__`` list, or None if it has none."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign) and "__all__" in _bound_names(stmt):
+            return [e.value for e in stmt.value.elts]
+    return None
+
+
+def test_every_all_name_is_bound():
+    files = glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+    checked, stale = 0, []
+    for path in sorted(files):
+        names = _all_names(path)
+        if names is None:
+            continue
+        checked += 1
+        defined = _top_level_names(path)
+        stale += [f"{os.path.relpath(path, REPO)}: {n}" for n in names if n not in defined]
+    assert checked > 30, checked  # the scan must see the package's __all__ lists
+    assert stale == []
 
 
 def _spark_decode_calls(path):
