@@ -2401,8 +2401,10 @@ def _pagerank_oracle_sql(iters: int = 8, scale: int = 10 ** 12) -> str:
             f"d{i} AS (SELECT coalesce(sum(r.rank), 0) AS dang "
             f"FROM {p} r LEFT JOIN deg dg ON r.node = dg.src "
             "WHERE dg.src IS NULL)")
+        # each r{i} feeds both c{i+1} and d{i+1}: an inlined CTE would be
+        # recomputed down both branches, 2^iters times in all
         parts.append(
-            f"r{i} AS (SELECT nd.node, "
+            f"r{i} AS MATERIALIZED (SELECT nd.node, "
             f"cast((15 * {scale}) // (100 * n) + "
             "(85 * (coalesce(c.insum, 0) + dang // n)) // 100 "
             "AS bigint) AS rank "
@@ -10980,6 +10982,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # Near-dup pipeline composition: exact all-pairs Jaccard pairs
         # (the minhash recall-1.0 contract) + recursive-CTE closure.
+        # ``pairs`` is read twice: MATERIALIZED computes the pairs once.
         "near_dup_keep": (
             r"WITH RECURSIVE toks AS (SELECT doc_id, list_filter("
             r"string_split_regex(lower(text), '\s+'), x -> x <> '') AS t "
@@ -10987,7 +10990,7 @@ def oracle_sql() -> dict[str, str]:
             "sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || "
             "' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s "
             "FROM toks WHERE len(t) >= 3), "
-            "pairs AS (SELECT key_a, key_b FROM ("
+            "pairs AS MATERIALIZED (SELECT key_a, key_b FROM ("
             "SELECT a.doc_id AS key_a, b.doc_id AS key_b, "
             "CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) "
             "/ (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) "
@@ -13056,6 +13059,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # Dup clusters — both stages independently re-derived: exact
         # all-pairs Jaccard + recursive reachability closure.
+        # ``pairs`` is read four times: MATERIALIZED computes the pairs once.
         "dup_clusters": (
             r"WITH toks AS (SELECT doc_id, list_filter("
             r"string_split_regex(lower(text), '\s+'), x -> x <> '') "
@@ -13063,7 +13067,7 @@ def oracle_sql() -> dict[str, str]:
             "sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || "
             "t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) "
             "AS s FROM toks WHERE len(t) >= 3), "
-            "pairs AS (SELECT key_a, key_b FROM (SELECT a.doc_id AS "
+            "pairs AS MATERIALIZED (SELECT key_a, key_b FROM (SELECT a.doc_id AS "
             "key_a, b.doc_id AS key_b, "
             "CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / "
             "(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) "

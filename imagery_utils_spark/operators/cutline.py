@@ -30,9 +30,10 @@ the exact scanline region algebra in core.region (GEOS-free).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._column_cache import per_jvm
 from ..core.region import Region
 
 DEFAULT_CONTRIBUTION_THRESHOLD = 20_000_000.0  # m^2, /root/reference/pgc_mosaic.py:66-68
@@ -131,7 +132,12 @@ def intersect_manifest(contributors: DataFrame) -> DataFrame:
     """Per-tile contributor manifest — the ``*_intersects.txt`` sink analog
     (/root/reference/pgc_mosaic.py:546-551): ordered contributor list +
     count per tile."""
-    return contributors.groupBy("tile_name").agg(
+    return contributors.groupBy("tile_name").agg(*_manifest_cols())
+
+
+@per_jvm
+def _manifest_cols() -> tuple[Column, Column]:
+    return (
         F.count("*").alias("n_contribs"),
         F.array_sort(
             F.collect_list(F.struct("paint_order", "scene_id"))

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._column_cache import per_jvm
 from ..functions.scalar import pl2xy
 from .spatial_join import cell_xy
 
@@ -117,24 +118,11 @@ def trimmed_footprints(
     parallel across groups like the reference's per-image fan-out."""
     n = 1 << res
     cw, ch = 360.0 / n, 180.0 / n
-    lon_c, lat_c = F.col(lon), F.col(lat)
-    gx, gy = cell_xy(lon_c, lat_c, res)
-    valid = lon_c.isNotNull() & lat_c.isNotNull() & ~F.isnan(lon_c) & ~F.isnan(lat_c)
-    # an invalid point gets a null column, which min/max skip, and a row with
-    # no valid point is dropped after the reduction. A filter on ``valid``
-    # would be pushed below the caller's projections and re-evaluate the
-    # expressions behind lon/lat once per predicate.
+    cells, row_keys, row_extent, nonempty, group, rows, out = _extent_cols(
+        group_col, res, lon, lat)
     extents = (
-        points.select(F.col(group_col), gy.cast("int").alias("_gy"),
-                      F.when(valid, gx).cast("int").alias("_gx"))
-        .groupBy(group_col, "_gy")
-        .agg(F.min("_gx").alias("_lo"), F.max("_gx").alias("_hi"))
-        .filter(F.col("_lo").isNotNull())
-        .groupBy(group_col)
-        .agg(F.sort_array(F.collect_list(F.struct("_gy", "_lo", "_hi")), asc=False)
-             .alias("_rows"))
-        .select(F.col(group_col).alias("group_id"), F.col("_rows._gy").alias("gy"),
-                F.col("_rows._lo").alias("lo"), F.col("_rows._hi").alias("hi"))
+        points.select(*cells).groupBy(*row_keys).agg(*row_extent).filter(nonempty)
+        .groupBy(group).agg(rows).select(*out)
     )
 
     def run(batches):
@@ -162,3 +150,26 @@ def trimmed_footprints(
                                 "footprint_wkt": wkts, "n_vertices": counts})
 
     return extents.mapInPandas(run, schema=TRIMMED_SCHEMA)
+
+
+@per_jvm
+def _extent_cols(group_col: str, res: int, lon: str, lat: str) -> tuple:
+    """The columns of ``trimmed_footprints``' per-point reduction to row
+    extents, in the order its steps use them."""
+    lon_c, lat_c, group = F.col(lon), F.col(lat), F.col(group_col)
+    gx, gy = cell_xy(lon_c, lat_c, res)
+    valid = lon_c.isNotNull() & lat_c.isNotNull() & ~F.isnan(lon_c) & ~F.isnan(lat_c)
+    # an invalid point gets a null column, which min/max skip, and a row with
+    # no valid point is dropped after the reduction. A filter on ``valid``
+    # would be pushed below the caller's projections and re-evaluate the
+    # expressions behind lon/lat once per predicate.
+    return (
+        (group, gy.cast("int").alias("_gy"), F.when(valid, gx).cast("int").alias("_gx")),
+        (group, F.col("_gy")),
+        (F.min("_gx").alias("_lo"), F.max("_gx").alias("_hi")),
+        F.col("_lo").isNotNull(),
+        group,
+        F.sort_array(F.collect_list(F.struct("_gy", "_lo", "_hi")), asc=False).alias("_rows"),
+        (group.alias("group_id"), F.col("_rows._gy").alias("gy"),
+         F.col("_rows._lo").alias("lo"), F.col("_rows._hi").alias("hi")),
+    )

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._column_cache import per_jvm
 from ..core import geom as G
 
 # ---------------------------------------------------------------- cell tagging
@@ -59,7 +60,12 @@ def cell_sql(lon: str, lat: str, res: int) -> str:
 
 def tag_points(points: DataFrame, res: int, lon="lon", lat="lat",
                out="cell") -> DataFrame:
-    return points.withColumn(out, cell_col(F.col(lon), F.col(lat), res))
+    return points.withColumn(out, _point_cell(res, lon, lat))
+
+
+@per_jvm
+def _point_cell(res: int, lon: str, lat: str) -> Column:
+    return cell_col(F.col(lon), F.col(lat), res)
 
 
 # ---------------------------------------------------------------- rect cover
@@ -81,17 +87,25 @@ def cover_rects(rects: DataFrame, res: int, xmin="xmin", ymin="ymin",
     cell row on the small broadcast side (refine drops its pairs) — the safe
     direction, unlike the previous fixed-epsilon subtraction which could
     silently drop a sub-epsilon sliver."""
+    cx, cy, cell = _cover_cols(res, xmin, ymin, xmax, ymax)
+    return (
+        rects.withColumn("_cx", cx).withColumn("_cy", cy).withColumn(out, cell)
+        .drop("_cx", "_cy")
+    )
+
+
+@per_jvm
+def _cover_cols(res: int, xmin: str, ymin: str, xmax: str,
+                ymax: str) -> tuple[Column, Column, Column]:
+    """The column and row explodes of ``cover_rects`` and the cell id they
+    make."""
     n = 1 << res
     x0 = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((F.col(xmin) + 180.0) / 360.0 * n)))
     y0 = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor((F.col(ymin) + 90.0) / 180.0 * n)))
     x1 = F.least(F.lit(n - 1), F.greatest(x0, F.floor((F.col(xmax) + 180.0) / 360.0 * n)))
     y1 = F.least(F.lit(n - 1), F.greatest(y0, F.floor((F.col(ymax) + 90.0) / 180.0 * n)))
-    return (
-        rects.withColumn("_cx", F.explode(F.sequence(x0, x1)))
-        .withColumn("_cy", F.explode(F.sequence(y0, y1)))
-        .withColumn(out, (F.col("_cy") * n + F.col("_cx")).cast("long"))
-        .drop("_cx", "_cy")
-    )
+    return (F.explode(F.sequence(x0, x1)), F.explode(F.sequence(y0, y1)),
+            (F.col("_cy") * n + F.col("_cx")).cast("long"))
 
 
 # ---------------------------------------------------------------- joins
@@ -182,10 +196,7 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int,
     if broadcast_polys:
         cov = F.broadcast(cov)
     pts = tag_points(points, res, lon, lat)
-    cand = pts.join(cov, "cell").filter(
-        (F.col(lon) >= F.col("xmin")) & (F.col(lon) <= F.col("xmax"))
-        & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax"))
-    )
+    cand = pts.join(cov, "cell").filter(_in_envelope(lon, lat))
 
     @F.pandas_udf("boolean")
     def pip(plon: pd.Series, plat: pd.Series, wkt: pd.Series) -> pd.Series:
@@ -206,3 +217,10 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int,
     # a point can hit several parts only if parts overlap; wrapped parts are
     # disjoint at +/-180, so no dedup is needed
     return refined.drop("cell", "part_ring_wkt", "xmin", "ymin", "xmax", "ymax")
+
+
+@per_jvm
+def _in_envelope(lon: str, lat: str) -> Column:
+    """The point lies in the closed envelope of its candidate part."""
+    return ((F.col(lon) >= F.col("xmin")) & (F.col(lon) <= F.col("xmax"))
+            & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax")))

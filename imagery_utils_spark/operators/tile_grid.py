@@ -23,15 +23,17 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import buffernum, drange
 
-TILE_SCHEMA = (
-    "row int, col int, name string, status string, "
-    "xmin double, xmax double, ymin double, ymax double, epsg int"
-)
+TILE_SCHEMA = pa.schema([
+    ("row", pa.int32()), ("col", pa.int32()), ("name", pa.string()), ("status", pa.string()),
+    ("xmin", pa.float64()), ("xmax", pa.float64()), ("ymin", pa.float64()),
+    ("ymax", pa.float64()), ("epsg", pa.int32()),
+])
 
 
 def compute_tile_grid(
@@ -71,7 +73,11 @@ def compute_tile_grid(
 
 
 def tile_grid_df(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    return spark.createDataFrame(compute_tile_grid(*args, **kwargs), TILE_SCHEMA)
+    """The computed grid as a JVM local relation (a ``LocalTableScan``):
+    Spark knows its size, so joins broadcast it, and no Python worker
+    serves its rows."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(compute_tile_grid(*args, **kwargs), schema=TILE_SCHEMA))
 
 
 def read_tile_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -16,9 +16,10 @@ oracle can replay the whole plan in ANSI SQL (see the *_sql helpers).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .._column_cache import per_jvm
 from ..functions.scoring import ScoreParams, score_col
 from ..operators.tile_grid import tile_assign_cols
 from ..sources import pages as P
@@ -34,15 +35,20 @@ def with_scene_attrs(df: DataFrame) -> DataFrame:
     """Deterministic scene-attribute analog per page: the graft treats each
     geocoded page as a catalog record (FIXTURES.md §2). Distributions chosen
     to exercise every score gate."""
+    return df.withColumns(_scene_attr_cols())
+
+
+@per_jvm
+def _scene_attr_cols() -> dict[str, Column]:
     d = F.col("doc_id")
     sensor = F.element_at(F.array(*[F.lit(s) for s in SENSORS]), (d % 5 + 1).cast("int"))
-    return df.withColumns({
+    return {
         "cloudcover": ((d * 7) % 1000) / 1000.0,
         "sun_elev": ((d * 13) % 900) / 10.0,
         "off_nadir": ((d * 17) % 450) / 10.0,
         "sensor": sensor,
         "bands": F.lit(1),
-    })
+    }
 
 
 def scene_attrs_sql(d: str = "doc_id") -> dict[str, str]:
@@ -80,24 +86,28 @@ def scored_pages(pages: DataFrame, params: ScoreParams | None = None,
     geocode -> attrs -> tile -> score; no rank/gate yet. At cluster scale
     ``pages`` is the Iceberg table; bench.py reads a materialized parquet."""
     g = dict(GRID, **(grid or {}))
-    params = params or ScoreParams(bands=1)
-    df = with_scene_attrs(P.geocode(pages))
-    row, col, name = tile_assign_cols(
+    cols, score = _scored_cols(params or ScoreParams(bands=1), tuple(sorted(g.items())))
+    return P.geocode(pages).select(*cols).withColumn("score", score)
+
+
+@per_jvm
+def _scored_cols(params: ScoreParams, grid: tuple) -> tuple[tuple[Column, ...], Column]:
+    """The wide projection of ``scored_pages`` (page columns, scene
+    attributes, tile assignment) and its score column."""
+    g = dict(grid)
+    tile = tile_assign_cols(
         F.col("lon"), F.col("lat"), g["xmin"], g["ymin"], g["xmax"], g["ymax"],
         g["xtilesize"], g["ytilesize"], g["mosaicname"],
     )
-    df = df.select("doc_id", "url", "warc_ts", "text", "lang", "lon", "lat",
-                   "cloudcover", "sun_elev", "off_nadir", "sensor", "bands",
-                   row, col, name)
-    return df.withColumn(
-        "score",
-        score_col(
-            params,
-            cloudcover=F.col("cloudcover"), sun_elev=F.col("sun_elev"),
-            off_nadir=F.col("off_nadir"), sensor=F.col("sensor"),
-            bands=F.col("bands"), acq_time=F.col("warc_ts"),
-        ),
+    cols = (tuple(F.col(c) for c in ("doc_id", "url", "warc_ts", "text", "lang", "lon", "lat"))
+            + tuple(c.alias(n) for n, c in _scene_attr_cols().items()) + tile)
+    score = score_col(
+        params,
+        cloudcover=F.col("cloudcover"), sun_elev=F.col("sun_elev"),
+        off_nadir=F.col("off_nadir"), sensor=F.col("sensor"),
+        bands=F.col("bands"), acq_time=F.col("warc_ts"),
     )
+    return cols, score
 
 
 def scored_assignments(
@@ -125,9 +135,15 @@ def ranked_from_pages(pages: DataFrame, params: ScoreParams | None = None,
     # is the documented contingency for hot groups beyond
     # rank.DEFAULT_SKEW_THRESHOLD_ROWS, gated via operators.rank.rank_auto
     # when the pipeline carries a group-size estimate.
-    narrow = df.select("doc_id", "tile_name", "score").filter(F.col("score") > 0)
+    cols, gate, rank = _rank_cols()
+    return df.select(*cols).filter(gate).withColumn("tile_rank", rank)
+
+
+@per_jvm
+def _rank_cols() -> tuple[tuple[Column, ...], Column, Column]:
     w = Window.partitionBy("tile_name").orderBy(F.desc("score"), F.asc("doc_id"))
-    return narrow.withColumn("tile_rank", F.row_number().over(w))
+    return ((F.col("doc_id"), F.col("tile_name"), F.col("score")), F.col("score") > 0,
+            F.row_number().over(w))
 
 
 def ranked_assignments(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:

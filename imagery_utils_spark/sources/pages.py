@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._column_cache import per_jvm
+
 # ---------------------------------------------------------------- derivation
 # All constants are small primes / powers of two so every engine computes the
 # same integers. KNUTH = 2654435761 (golden-ratio multiplicative hash).
@@ -149,15 +151,20 @@ def geocode(pages: DataFrame) -> DataFrame:
     the reference's ``lib/mosaic.py``); malformed values null out via
     try_cast.
     """
+    return pages.withColumns(_latlon_cols())
+
+
+@per_jvm
+def _latlon_cols() -> dict[str, Column]:
     s = F.col("html").cast("string")
     at = F.instr(s, _GEO_MARK)
     # the guard wraps the tag, not each coordinate: lat and lon then share
     # one tag expression, which codegen evaluates once per row
     tag = F.when(at > 0, F.substring_index(F.substr(s, at + F.lit(len(_GEO_MARK))), '"', 1))
-    return pages.withColumns({
+    return {
         "lat": F.substring_index(tag, ";", 1).try_cast("double"),
         "lon": F.substring_index(tag, ";", -1).try_cast("double"),
-    })
+    }
 
 
 def extract_text_col(html: Column) -> Column:

@@ -74,3 +74,17 @@ def test_tile_assign_cols_matches_grid(spark):
     names = {t["name"] for t in grid}
     for r in out:
         assert r.tile_name in names
+
+
+def test_tile_grid_df_is_a_local_relation(spark):
+    args = (-180.0, 180.0, -90.0, 90.0, 10.0, 10.0)
+    df = tile_grid.tile_grid_df(spark, *args, mosaicname="world")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # no Python RDD behind the rows, so a join can broadcast the grid
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert df.schema.simpleString() == (
+        "struct<row:int,col:int,name:string,status:string,"
+        "xmin:double,xmax:double,ymin:double,ymax:double,epsg:int>")
+    assert [r.asDict() for r in df.collect()] == tile_grid.compute_tile_grid(
+        *args, mosaicname="world")
