@@ -5586,48 +5586,6 @@ def q_sitemap_urls(spark, sf_dir) -> DataFrame:
         .orderBy("host"))
 
 
-def q_ntt_convolution(spark, sf_dir) -> DataFrame:
-    """Exact circular convolution via the number-theoretic transform
-    (operators/ntt.py — radix-2 Cooley–Tukey in Z/65537, from the
-    published algorithm): per group, the 64-bin doc histogram (counts
-    mod 10, keeping the true convolution under p) is convolved with a
-    fixed 8-tap kernel through forward-NTT → pointwise → inverse-NTT.
-    The ORACLE computes the O(n²) convolution sum directly and
-    relationally (a CROSS JOIN against the kernel + one groupBy) — two
-    entirely different algorithms that must agree bit-for-bit on exact
-    integers. Scale shape: ONE groupBy shuffle, then O(n log n) local
-    work per group."""
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % 16).alias("g"),
-        ((F.col("doc_id") / 16).cast("long") % 64).alias("bin"))
-    hist = (docs.groupBy("g", "bin")
-            .agg((F.count(F.lit(1)) % 10).alias("av")))
-
-    def work(key, pdf):
-        import numpy as np
-
-        from imagery_utils_spark.operators.ntt import circular_convolve
-        a = np.zeros(64, dtype=np.int64)
-        a[pdf["bin"].astype("int64").to_numpy()] = \
-            pdf["av"].astype("int64").to_numpy()
-        b = np.array([(j * j + 1) % 5 if j < 8 else 0
-                      for j in range(64)], dtype=np.int64)
-        c = circular_convolve(a, b)
-        return pd.DataFrame({
-            "g": [int(key[0])],
-            "conv_csv": [",".join(str(int(v)) for v in c)],
-            "conv_sum": [int(c.sum())],
-            "conv_max": [int(c.max())]})
-
-    out = hist.groupBy("g").applyInPandas(
-        work, "g long, conv_csv string, conv_sum long, conv_max long")
-    return (out.select("g", F.sha2("conv_csv", 256).alias("conv_sha"),
-                       "conv_sum", "conv_max")
-            .orderBy("g"))
-
-
 def q_jaro_winkler(spark, sf_dir) -> DataFrame:
     """Jaro–Winkler similarity from the published 1990 definition
     (operators/fuzzy.py — greedy windowed matching, half-transposition
@@ -6275,83 +6233,6 @@ def q_zipf_slope(spark, sf_dir) -> DataFrame:
         (num.cast("double") / den.cast("double")).alias("slope"))
 
 
-def q_dtw_align(spark, sf_dir) -> DataFrame:
-    """Dynamic-time-warping distance of each series' opening 16-day
-    revenue pattern against a fixed template (operators/dp.py — the
-    Sakoe–Chiba recurrence, exact integers): ONE groupBy collects each
-    group's sequence, then O(n²) local work — the canonical shape for
-    sequence DP at 10¹² rows. Oracle: an independent memoized-RECURSIVE
-    formulation (independent_oracles.dtw_expected) recomputed from the
-    same parquet at check time; hypothesis cross-checks both
-    formulations in tests/test_dp.py."""
-    import pandas as pd
-
-    from independent_oracles import DTW_TEMPLATE
-
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    w = Window.partitionBy("event_type").orderBy("day")
-    first16 = (daily.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 16))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import dtw_distance
-        pdf = pdf.sort_values("rn")
-        ys = [int(v) for v in pdf["y"]]
-        return pd.DataFrame({
-            "event_type": [key[0]], "n_days": [len(ys)],
-            "dtw": [dtw_distance(ys, DTW_TEMPLATE)]})
-
-    return (first16.groupBy("event_type")
-            .applyInPandas(work, "event_type string, n_days int, "
-                                 "dtw long")
-            .orderBy("event_type"))
-
-
-def q_viterbi_decode(spark, sf_dir) -> DataFrame:
-    """Viterbi decoding with optimal-path COUNTING (operators/dp.py —
-    max-plus DP carrying multiplicities) over per-user event
-    sequences and an integer log-odds HMM. The oracle enumerates ALL
-    2^len state paths exhaustively (independent_oracles.
-    viterbi_expected) — brute force vs DP, the strongest independence
-    a DP row can have. Same one-shuffle-then-local scale shape as
-    q_dtw_align."""
-    import pandas as pd
-
-    from independent_oracles import VIT_EMIT, VIT_START, VIT_TRANS
-
-    ev = (load(spark, sf_dir, "events")
-          .filter(F.col("user_id") % 29 == 0)
-          .select("user_id",
-                  (F.ascii(F.substring("event_type", 1, 1)) % 3)
-                  .alias("oc"),
-                  F.unix_timestamp("ts").cast("long").alias("ep"),
-                  "event_id"))
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    first10 = (ev.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 10))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import viterbi_best
-        pdf = pdf.sort_values("rn")
-        obs = [int(v) for v in pdf["oc"]]
-        best, cnt = viterbi_best(obs, VIT_START, VIT_TRANS, VIT_EMIT)
-        return pd.DataFrame({
-            "user_id": [int(key[0])], "seq_len": [len(obs)],
-            "best": [best], "n_opt": [cnt]})
-
-    return (first10.groupBy("user_id")
-            .applyInPandas(work, "user_id long, seq_len int, "
-                                 "best long, n_opt long")
-            .orderBy("user_id"))
-
-
 def q_permutation_test(spark, sf_dir) -> DataFrame:
     """Permutation test by deterministic hash-sign flipping — the
     resampling inference a metrics pipeline runs when no parametric
@@ -6580,40 +6461,6 @@ def q_label_propagation(spark, sf_dir) -> DataFrame:
             .orderBy("lab"))
 
 
-def q_bwt_transform(spark, sf_dir) -> DataFrame:
-    """Burrows–Wheeler transform per document snippet (operators/
-    bwt.py — rotation-sort construction, LF-mapping inversion asserted
-    inline on EVERY row): the bzip2-family block-sort permutation as a
-    mapInPandas local transform. Oracle: the suffix-array identity
-    bwt[i] = t[sa[i]−1] derived independently at check time —
-    equivalent only through the unique-smallest-sentinel property the
-    row pins. Classic 'banana'→'annb␁aa' vector + hypothesis
-    roundtrip/identity properties in tests/test_dp.py."""
-    import pandas as pd
-
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 9 == 4)
-            .select("doc_id",
-                    F.substring(F.regexp_replace(F.lower("text"),
-                                                 "[^a-z]", ""), 1, 16)
-                    .alias("s")))
-
-    def work(batches):
-        from imagery_utils_spark.operators.bwt import (
-            bwt_forward, bwt_inverse)
-        for pdf in batches:
-            rows = []
-            for d, s in zip(pdf["doc_id"].astype("int64"), pdf["s"]):
-                s = str(s) if s is not None else ""
-                b = bwt_forward(s)
-                assert bwt_inverse(b) == s
-                rows.append((int(d), b.encode("utf-8").hex()))
-            yield pd.DataFrame(rows, columns=["doc_id", "bwt_hex"])
-
-    return (docs.mapInPandas(work, "doc_id long, bwt_hex string")
-            .orderBy("doc_id"))
-
-
 def q_base58_encode(spark, sf_dir) -> DataFrame:
     """Base58 (Bitcoin alphabet) of a 6-byte payload as PURE column
     algebra — the content-id rendering compact enough for URLs: nine
@@ -6644,73 +6491,6 @@ def q_base58_encode(spark, sf_dir) -> DataFrame:
           .when(F.col("v") < (1 << 40), 1).otherwise(0))
     b58 = F.concat(F.repeat(F.lit("1"), lz.cast("int")), *pieces)
     return docs.select("doc_id", b58.alias("b58")).orderBy("doc_id")
-
-
-def q_huffman_bits(spark, sf_dir) -> DataFrame:
-    """Optimal prefix-code cost per language (operators/dp.py,
-    Huffman 1952) over the top-16 token frequencies: the output is
-    Σ freq·len, which is INVARIANT across every optimal code — so the
-    engine's heap construction and the oracle's sorted-list-insertion
-    construction use deliberately DIFFERENT tie-breaks and must still
-    agree exactly (the uniqueness-of-cost theorem is the thing being
-    pinned). The compression-budget estimator of a corpus codec."""
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select("lang", F.explode(F.filter(
-        F.split(F.lower("text"), " "), lambda x: x != "")).alias("tok"))
-    freq = toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("lang").orderBy(F.desc("c"), "tok")
-    top = freq.withColumn("rn", F.row_number().over(w)) \
-        .filter(F.col("rn") <= 16)
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import huffman_total_bits
-        cs = [int(v) for v in pdf["c"]]
-        return pd.DataFrame({
-            "lang": [key[0]], "n_symbols": [len(cs)],
-            "sum_freq": [sum(cs)],
-            "total_bits": [huffman_total_bits(cs)]})
-
-    return (top.groupBy("lang")
-            .applyInPandas(work, "lang string, n_symbols int, "
-                                 "sum_freq long, total_bits long")
-            .orderBy("lang"))
-
-
-def q_aho_corasick(spark, sf_dir) -> DataFrame:
-    """Multi-pattern corpus scan via Aho–Corasick (operators/aho.py,
-    the 1975 construction: goto trie + BFS failure links) — ONE
-    automaton pass per document instead of P regex passes, the
-    blocklist/keyword-filter primitive at corpus scale. Oracle: the
-    regex engine counts each pattern separately; the patterns are
-    borderless (no proper prefix = suffix), so non-overlapping regex
-    counts provably equal the automaton's all-occurrence counts —
-    the equivalence the row pins. Overlap semantics cross-checked vs
-    lookahead regex in tests/test_dp.py."""
-    import pandas as pd
-
-    pats = ["the", "and", "ing", "ion", "ent", "he"]
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def work(batches):
-        from imagery_utils_spark.operators.aho import (
-            build_automaton, count_matches)
-        a = build_automaton(pats)
-        for pdf in batches:
-            rows = []
-            for d, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                c = count_matches(str(t).lower(), a, len(pats))
-                rows.append(tuple([int(d)] + c))
-            yield pd.DataFrame(rows, columns=["doc_id"] + [
-                f"n_{p}" for p in pats])
-
-    out = docs.mapInPandas(
-        work, "doc_id long, " + ", ".join(f"n_{p} long" for p in pats))
-    aggs = [F.sum(f"n_{p}").alias(f"total_{p}") for p in pats] + \
-        [F.sum(F.when(F.col(f"n_{p}") > 0, 1).otherwise(0))
-         .alias(f"docs_{p}") for p in pats]
-    return out.agg(*aggs)
 
 
 def q_rounding_modes(spark, sf_dir) -> DataFrame:
@@ -6901,44 +6681,6 @@ def q_dispersion_index(spark, sf_dir) -> DataFrame:
         .orderBy("event_type"))
 
 
-def q_jenks_breaks(spark, sf_dir) -> DataFrame:
-    """Jenks/Fisher natural-breaks classification (operators/dp.py) —
-    the choropleth/histogram-banding optimizer, in EXACT form: the
-    within-class objective count·Σx²−(Σx)² stays int64 so optimality
-    comparisons never touch floats, and the output is (best cost,
-    number of optimal partitions) — invariants under tie-break choice.
-    Oracle: EXHAUSTIVE C(19,3) partition enumeration. Same
-    one-shuffle-then-local DP shape as dtw/viterbi."""
-    import pandas as pd
-
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    dv = daily.select("event_type", "y").distinct()
-    w = Window.partitionBy("event_type").orderBy("y")
-    small = (dv.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= 20))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import jenks_cost
-        xs = [int(v) for v in pdf["y"]]
-        k = min(4, len(xs))
-        best, cnt = jenks_cost(xs, k)
-        return pd.DataFrame({
-            "event_type": [key[0]], "n_vals": [len(xs)],
-            "best_cost": [best], "n_optimal": [cnt]})
-
-    return (small.groupBy("event_type")
-            .applyInPandas(work, "event_type string, n_vals int, "
-                                 "best_cost long, n_optimal long")
-            .orderBy("event_type"))
-
-
 def q_bleu_lite(spark, sf_dir) -> DataFrame:
     """BLEU-2 (Papineni 2002, the 1/2-gram form) over even/odd doc
     pairs — the generation-eval metric as RELATIONAL algebra: clipped
@@ -6994,52 +6736,6 @@ def q_bleu_lite(spark, sf_dir) -> DataFrame:
     return g.select("n_pairs", "clip1", "tot1", "clip2", "tot2",
                     "c_len", "r_len",
                     F.floor(bleu * 1e9).cast("long").alias("bleu_e9"))
-
-
-def q_rouge_l(spark, sf_dir) -> DataFrame:
-    """ROUGE-L (Lin 2004) over the same even/odd doc pairs — LCS
-    length via the classic DP (operators/dp.py lcs_len), F-measure
-    from exact integers per pair, summed as floored ×10⁶ integers so
-    the corpus rollup is partition-order-free. Oracle: an independent
-    memoized-RECURSIVE LCS (VALUES, recomputed from parquet)."""
-    import pandas as pd
-
-    d = F.col("doc_id")
-    toks = F.slice(F.filter(F.split(F.lower("text"), " "),
-                            lambda x: x != ""), 1, 12)
-    docs = load(spark, sf_dir, "documents").select(
-        (d - d % 2).alias("pair"), (d % 2).alias("side"),
-        toks.alias("toks")).filter((d - d % 2) % 3 == 0)
-    both = (docs.groupBy("pair").agg(
-        F.max(F.when(F.col("side") == 0, F.col("toks"))).alias("cand"),
-        F.max(F.when(F.col("side") == 1, F.col("toks"))).alias("ref"))
-        .filter(F.col("cand").isNotNull() & F.col("ref").isNotNull()))
-
-    def work(batches):
-        from imagery_utils_spark.operators.dp import lcs_len
-        for pdf in batches:
-            rows = []
-            for pair, cand, ref in zip(pdf["pair"].astype("int64"),
-                                       pdf["cand"], pdf["ref"]):
-                a, b = list(cand), list(ref)
-                l = lcs_len(a, b)
-                if l == 0 or not a or not b:
-                    f_e6 = 0
-                else:
-                    p = l / len(a)
-                    r = l / len(b)
-                    f_e6 = int((2 * p * r / (p + r)) * 1e6)
-                rows.append((int(pair), len(a), len(b), l, f_e6))
-            yield pd.DataFrame(rows, columns=[
-                "pair", "c_len", "r_len", "lcs", "f_e6"])
-
-    out = both.mapInPandas(
-        work, "pair long, c_len int, r_len int, lcs int, f_e6 long")
-    return out.agg(F.count(F.lit(1)).alias("n_pairs"),
-                   F.sum("lcs").alias("sum_lcs"),
-                   F.sum("c_len").alias("sum_clen"),
-                   F.sum("r_len").alias("sum_rlen"),
-                   F.sum("f_e6").alias("sum_f_e6"))
 
 
 def q_attribution(spark, sf_dir) -> DataFrame:
@@ -7121,123 +6817,6 @@ def q_decay_counts(spark, sf_dir) -> DataFrame:
                  F.sum(term).alias("decayed_e6"),
                  F.max("age").alias("max_age"))
             .orderBy("event_type"))
-
-
-def q_convex_hull(spark, sf_dir) -> DataFrame:
-    """Convex hull per region (operators/dp.py — Andrew's monotone
-    chain on EXACT integer coordinates, strict turns): the footprint-
-    envelope primitive of the tiling pipeline. Output pins vertex
-    count, shoelace 2·area, and Manhattan perimeter — all invariants
-    of the hull cycle. Oracle: an independent GIFT-WRAPPING
-    construction (Jarvis march) recomputed at check time; hypothesis
-    cross-checks both constructions in tests/test_dp.py."""
-    import pandas as pd
-
-    d = F.col("doc_id")
-    pts = load(spark, sf_dir, "documents").select(
-        (d % 8).alias("g"),
-        F.floor(((d * 37) % 3600) / 10.0).cast("long").alias("x"),
-        F.floor(((d * 53) % 1800) / 10.0).cast("long").alias("y"))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import convex_hull
-        ps = sorted({(int(x), int(y))
-                     for x, y in zip(pdf["x"], pdf["y"])})
-        hull = convex_hull(ps)
-        n = len(hull)
-        area2 = abs(sum(hull[i][0] * hull[(i + 1) % n][1]
-                        - hull[(i + 1) % n][0] * hull[i][1]
-                        for i in range(n))) if n >= 3 else 0
-        perim = sum(abs(hull[i][0] - hull[(i + 1) % n][0])
-                    + abs(hull[i][1] - hull[(i + 1) % n][1])
-                    for i in range(n)) if n >= 2 else 0
-        return pd.DataFrame({
-            "g": [int(key[0])], "n_pts": [len(ps)], "n_hull": [n],
-            "area2": [area2], "perim_manhattan": [perim]})
-
-    return (pts.groupBy("g")
-            .applyInPandas(work, "g long, n_pts int, n_hull int, "
-                                 "area2 long, perim_manhattan long")
-            .orderBy("g"))
-
-
-def q_stable_matching(spark, sf_dir) -> DataFrame:
-    """Proposer-optimal stable matching (Gale–Shapley 1962) per
-    language partition — the assignment primitive (work-to-executor,
-    query-to-replica): preferences are sha-derived from data-dependent
-    seeds, the ENGINE runs deferred-acceptance, the ORACLE enumerates
-    ALL n! matchings, keeps the stable ones, and selects the
-    proposer-optimal — which the G-S theorem says is unique and
-    exactly what deferred acceptance returns. Theorem-level
-    independence; property-tested in tests/test_dp.py."""
-    import hashlib
-
-    import pandas as pd
-
-    n = 6
-    counts = (load(spark, sf_dir, "documents")
-              .groupBy("lang").agg(F.count(F.lit(1)).alias("cnt")))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import gale_shapley
-        lang = key[0]
-        cnt = int(pdf["cnt"].iloc[0])
-
-        def prefs(tag, i):
-            h = hashlib.sha256(
-                f"{lang}:{cnt}:{tag}:{i}".encode()).digest()
-            return sorted(range(n), key=lambda j: (h[j], j))
-
-        pp = [prefs("p", i) for i in range(n)]
-        ap = [prefs("a", i) for i in range(n)]
-        m = gale_shapley(pp, ap)
-        prank = {(p, a): r for p in range(n)
-                 for r, a in enumerate(pp[p])}
-        srank = sum(prank[(p, m[p])] for p in range(n))
-        return pd.DataFrame({
-            "lang": [lang],
-            "matching": [",".join(str(a) for a in m)],
-            "sum_prop_rank": [srank]})
-
-    return (counts.groupBy("lang")
-            .applyInPandas(work, "lang string, matching string, "
-                                 "sum_prop_rank long")
-            .orderBy("lang"))
-
-
-def q_closest_pair(spark, sf_dir) -> DataFrame:
-    """Closest pair of points per region (operators/dp.py — the
-    classic divide-and-conquer with index-side strip refinement,
-    exact integer squared distances) plus the COUNT of pairs achieving
-    the minimum (tie-robust output). Oracle: O(n²) brute force over
-    the same point sets; 2000-seed randomized + hypothesis cross-check
-    in tests/test_dp.py (which caught a real x-tie split bug during
-    development)."""
-    import pandas as pd
-
-    d = F.col("doc_id")
-    pts = (load(spark, sf_dir, "documents")
-           .filter(d % 23 == 1)
-           .select((d % 8).alias("g"),
-                   ((d * 37) % 500).alias("x"),
-                   ((d * 53) % 500).alias("y")))
-
-    def work(key, pdf):
-        from imagery_utils_spark.operators.dp import closest_pair_d2
-        ps = sorted({(int(x), int(y))
-                     for x, y in zip(pdf["x"], pdf["y"])})
-        if len(ps) < 2:
-            return pd.DataFrame(columns=["g", "n_pts", "min_d2",
-                                         "n_pairs_at_min"])
-        best, cnt = closest_pair_d2(ps)
-        return pd.DataFrame({
-            "g": [int(key[0])], "n_pts": [len(ps)],
-            "min_d2": [best], "n_pairs_at_min": [cnt]})
-
-    return (pts.groupBy("g")
-            .applyInPandas(work, "g long, n_pts int, min_d2 long, "
-                                 "n_pairs_at_min long")
-            .orderBy("g"))
 
 
 def q_segment_intersections(spark, sf_dir) -> DataFrame:
@@ -7380,1413 +6959,6 @@ def q_haar_wavelet(spark, sf_dir) -> DataFrame:
             .applyInPandas(work, "event_type string, level int, "
                                  "j int, coef long")
             .orderBy("event_type", "level", "j"))
-
-
-def _mst_hash(col):
-    return F.conv(F.substring(F.sha2(col, 256), 1, 8), 16, 10) \
-        .cast("long")
-
-
-def q_catalan_numbers(spark, sf_dir) -> DataFrame:
-    """Catalan numbers C_0..C_25 — engine: the CLOSED FORM
-    C_n = C(2n,n)/(n+1), the central binomial built as an exact
-    integer multiplicative fold Π(n+k)/k with stepwise-exact `div`
-    (each partial product is itself a binomial, so every division is
-    exact), one JVM higher-order aggregate per row. Oracle: the
-    CONVOLUTION RECURRENCE C_{n+1} = Σ C_i·C_{n−i} carried as a list
-    through a recursive CTE. Segner's recurrence vs the binomial
-    quotient — two classical derivations, exact integers both ways."""
-    return (spark.range(0, 26).select(F.col("id").alias("n"))
-            .select("n", F.expr(
-                "case when n = 0 then cast(1 as bigint) else "
-                "aggregate(sequence(1, n), cast(1 as bigint), "
-                "(acc, k) -> (acc * (n + k)) div k) div (n + 1) "
-                "end").alias("cat"))
-            .orderBy("n"))
-
-
-def q_gray_code(spark, sf_dir) -> DataFrame:
-    """Reflected binary Gray code for n = 0..1023 — engine: the
-    BITWISE CLOSED FORM g(n) = n XOR (n >> 1), one codegen
-    expression. Oracle: the REFLECTION CONSTRUCTION G(k+1) =
-    G(k) ++ reverse(G(k)) + 2^k grown as a list through 10 levels of
-    a recursive CTE. Construction-by-mirroring vs the xor identity —
-    the standard proof equivalence, checked value by value."""
-    return (spark.range(0, 1024).select(F.col("id").alias("n"))
-            .select("n", F.col("n").bitwiseXOR(
-                F.shiftright(F.col("n"), 1)).alias("gray"))
-            .orderBy("n"))
-
-
-def q_euler_totient(spark, sf_dir) -> DataFrame:
-    """Euler's totient φ(n) for n = 1..2000 — engine: TRIAL-DIVISION
-    FACTORIZATION in an Arrow mapInPandas kernel, φ = Π p^(k−1)(p−1)
-    over the prime-power decomposition. Oracle: the DEFINITION —
-    count of k ≤ n with gcd(n,k) = 1, a 4M-pair join over DuckDB's
-    builtin gcd. Multiplicative formula vs direct coprime census."""
-
-    def phi_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            ns, out = pdf["n"], []
-            for n0 in ns:
-                m, phi = int(n0), 1
-                d = 2
-                while d * d <= m:
-                    if m % d == 0:
-                        pk = 1
-                        while m % d == 0:
-                            m //= d
-                            pk *= d
-                        phi *= (pk // d) * (d - 1)
-                    d += 1
-                if m > 1:
-                    phi *= m - 1
-                out.append(phi)
-            yield pd.DataFrame({"n": ns, "phi": out})
-
-    return (spark.range(1, 2001).select(F.col("id").alias("n"))
-            .repartition(8)
-            .mapInPandas(phi_kernel, "n long, phi long")
-            .orderBy("n"))
-
-
-def q_mobius_function(spark, sf_dir) -> DataFrame:
-    """Möbius μ(n) for n = 1..1000 — engine: FACTORIZATION VIEW in
-    pure column algebra: primes sieved by a divisor anti-join, ω(n)
-    = count of prime divisors by a non-equi join, squarefree test
-    n mod p² — μ = 0 if not squarefree else (−1)^ω. Oracle: the
-    DIRICHLET-INVERSE RECURRENCE μ(1)=1, μ(n) = −Σ_{d|n, d<n} μ(d)
-    (from Σ_{d|n} μ(d) = [n=1]) stepped 1000 levels in a recursive
-    CTE. Local factor structure vs the global summatory identity."""
-    N = 1000
-    d = spark.range(2, N + 1).select(F.col("id").alias("p"))
-    e = spark.range(2, 33).select(F.col("id").alias("e"))
-    composite = d.join(
-        F.broadcast(e),
-        (F.col("e") < F.col("p")) & (F.col("p") % F.col("e") == 0),
-        "left_semi")
-    primes = d.join(composite, "p", "left_anti")
-    n_df = spark.range(1, N + 1).select(F.col("id").alias("n"))
-    fac = (n_df.join(F.broadcast(primes),
-                     F.col("n") % F.col("p") == 0, "left")
-           .groupBy("n")
-           .agg(F.count("p").alias("omega"),
-                F.max(F.when(
-                    F.col("n") % (F.col("p") * F.col("p")) == 0, 1)
-                    .otherwise(0)).alias("sq")))
-    mu = (F.when(F.col("sq") == 1, F.lit(0))
-          .otherwise(F.when(F.col("omega") % 2 == 0, 1)
-                     .otherwise(-1)))
-    return (fac.select("n", mu.cast("long").alias("mu"))
-            .orderBy("n"))
-
-
-def q_simpson_integrate(spark, sf_dir) -> DataFrame:
-    """Composite Simpson's rule on 30 hash-derived integer cubics
-    over [0,12], h=1 — engine: the QUADRATURE NODE SUM Σ wₖ·f(k)
-    with weights 1,4,2,…,4,1, distributed as a node explode +
-    groupBy (returns 3∫ so everything stays integer). Oracle: the
-    ANTIDERIVATIVE — 3∫ = 15552a + 1728b + 216c + 36d from
-    F(x) = ax⁴/4 + bx³/3 + cx²/2 + dx evaluated at 12. Simpson is
-    EXACT on cubics (its degree-3 exactness), so the two agree to
-    the integer."""
-    d = F.col("doc_id").cast("string")
-    coef = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 30)
-            .select(
-                "doc_id",
-                (_mst_hash(F.concat(F.lit("sa:"), d)) % 21 - 10)
-                .alias("a"),
-                (_mst_hash(F.concat(F.lit("sb:"), d)) % 21 - 10)
-                .alias("b"),
-                (_mst_hash(F.concat(F.lit("sc:"), d)) % 21 - 10)
-                .alias("c"),
-                (_mst_hash(F.concat(F.lit("sd:"), d)) % 21 - 10)
-                .alias("dd")))
-    nodes = spark.range(0, 13).select(F.col("id").alias("k"))
-    w = (F.when((F.col("k") == 0) | (F.col("k") == 12), 1)
-         .otherwise(F.when(F.col("k") % 2 == 1, 4).otherwise(2)))
-    x = F.col("k")
-    fx = (F.col("a") * x * x * x + F.col("b") * x * x
-          + F.col("c") * x + F.col("dd"))
-    return (coef.crossJoin(F.broadcast(nodes))
-            .groupBy("doc_id").agg(F.sum(w * fx).alias("i3"))
-            .orderBy("doc_id"))
-
-
-def q_farey_neighbors(spark, sf_dir) -> DataFrame:
-    """Successor pairs of the Farey sequence F_30 — engine: the
-    UNIMODULARITY THEOREM — a/b and c/d are F_n-adjacent iff
-    bc − ad = 1 and b + d > n — as a non-equi join over the reduced
-    fractions (reduced = divisor anti-join, no gcd needed). Oracle:
-    the DEFINITION — sort all reduced fractions by value and take
-    LEAD. The join discovers the ordering without ever sorting;
-    Cauchy's adjacency criterion vs the sorted walk."""
-    N = 30
-    fr = (spark.range(1, N + 1).select(F.col("id").alias("b"))
-          .crossJoin(spark.range(0, N + 1)
-                     .select(F.col("id").alias("a")))
-          .filter(F.col("a") <= F.col("b")))
-    g = spark.range(2, N + 1).select(F.col("id").alias("g"))
-    common = fr.join(
-        F.broadcast(g),
-        (F.col("a") % F.col("g") == 0)
-        & (F.col("b") % F.col("g") == 0), "left_semi")
-    red = fr.join(common, ["a", "b"], "left_anti")
-    right = red.select(F.col("a").alias("c"), F.col("b").alias("d2"))
-    adj = red.join(
-        F.broadcast(right),
-        (F.col("b") * F.col("c") - F.col("a") * F.col("d2") == 1)
-        & (F.col("b") + F.col("d2") > N))
-    return (adj.select("a", "b", "c", F.col("d2").alias("d"))
-            .orderBy("a", "b"))
-
-
-def q_stern_brocot(spark, sf_dir) -> DataFrame:
-    """Stern–Brocot tree paths for 40 hash-derived rationals —
-    engine: the CONTINUED-FRACTION rule — Euclid's quotients
-    [a₀;a₁,…,aₖ] become alternating R/L runs with the last run
-    shortened by one (the CF↔SB correspondence), an Arrow
-    mapInPandas kernel. Oracle: MEDIANT DESCENT — the binary-search
-    walk from (0/1, 1/0) through mediants replayed step by step in
-    a recursive CTE with exact cross-multiplied comparisons. Two
-    faces of the same tree: arithmetic of quotients vs navigation."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("sp:"), d)) % 99)
-               .alias("p0"),
-               (1 + _mst_hash(F.concat(F.lit("sq:"), d)) % 99)
-               .alias("q0")))
-
-    def sb_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            ps, qs, paths = [], [], []
-            for p0, q0 in zip(pdf["p0"], pdf["q0"]):
-                gg = math.gcd(int(p0), int(q0))
-                p, q = int(p0) // gg, int(q0) // gg
-                cf, a, b = [], p, q
-                while b:
-                    cf.append(a // b)
-                    a, b = b, a % b
-                cf[-1] -= 1
-                paths.append("".join(
-                    ("R" if i % 2 == 0 else "L") * c
-                    for i, c in enumerate(cf)))
-                ps.append(p)
-                qs.append(q)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "p": ps,
-                                "q": qs, "path": paths})
-
-    return (raw.repartition(4)
-            .mapInPandas(sb_kernel,
-                         "doc_id long, p long, q long, path string")
-            .orderBy("doc_id"))
-
-
-def q_stirling2(spark, sf_dir) -> DataFrame:
-    """Stirling numbers of the second kind S(n,k), 1<=k<=n<=12 —
-    engine: the INCLUSION-EXCLUSION closed form — k!*S(n,k) =
-    sum_j (-1)^j C(k,j) (k-j)^n (the surjection count), evaluated
-    as a j-explode + groupBy with binomials from a factorial
-    lookup literal; everything stays in exact longs (12^12 < 2^53
-    so the pow round-trip is exact). Oracle: the TRIANGLE
-    RECURRENCE S(n,k) = k*S(n-1,k) + S(n-1,k-1) grown level by
-    level in a recursive CTE carrying the whole row as a list.
-    Multiplicative sieve vs additive recurrence."""
-    fact = [1] * 13
-    for i in range(1, 13):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    nk = (spark.range(1, 13).select(F.col("id").alias("n"))
-          .join(spark.range(1, 13).select(F.col("id").alias("k")),
-                F.col("k") <= F.col("n")))
-    j = spark.range(0, 13).select(F.col("id").alias("j"))
-    t = nk.join(F.broadcast(j), F.col("j") <= F.col("k"))
-    binom = (F.element_at(fl, F.col("k").cast("int") + 1)
-             / (F.element_at(fl, F.col("j").cast("int") + 1)
-                * F.element_at(fl, (F.col("k") - F.col("j"))
-                               .cast("int") + 1))).cast("long")
-    sign = F.when(F.col("j") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    powkj = F.pow((F.col("k") - F.col("j")).cast("double"),
-                  F.col("n").cast("double")).cast("long")
-    return (t.groupBy("n", "k")
-            .agg(((F.sum(sign * binom * powkj))
-                  / F.element_at(fl, F.col("k").cast("int") + 1))
-                 .cast("long").alias("s"))
-            .orderBy("n", "k"))
-
-
-def q_derangements(spark, sf_dir) -> DataFrame:
-    """Subfactorials !n for n=0..20 — engine: the ALTERNATING-SUM
-    closed form !n = sum_k (-1)^k n!/k!, an explode over k with
-    exact long partial quotients n!/k! built from a factorial
-    literal (20! = 2.43e18 fits int64). Oracle: the two-term
-    RECURRENCE D(n) = (n-1)(D(n-1) + D(n-2)) in a linear recursive
-    CTE. Inclusion-exclusion vs recurrence."""
-    fact = [1] * 21
-    for i in range(1, 21):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    n = spark.range(0, 21).select(F.col("id").alias("n"))
-    k = spark.range(0, 21).select(F.col("id").alias("k"))
-    t = n.join(F.broadcast(k), F.col("k") <= F.col("n"))
-    quot = (F.element_at(fl, F.col("n").cast("int") + 1)
-            / F.element_at(fl, F.col("k").cast("int") + 1)) \
-        .cast("long")
-    sign = F.when(F.col("k") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    return (t.groupBy("n").agg(F.sum(sign * quot).alias("d"))
-            .orderBy("n"))
-
-
-def q_lucas_binomial(spark, sf_dir) -> DataFrame:
-    """C(n,k) mod 13 for 40 hash-derived pairs with n < 500 —
-    engine: LUCAS' THEOREM — write n,k in base 13 and multiply the
-    per-digit small binomials C(n_i,k_i) mod 13 from a 13x13 table
-    literal (a digit pair with k_i > n_i zeroes the product), all
-    as one column expression over three base-13 digits. Oracle:
-    PASCAL'S RECURRENCE mod 13 — the triangle grown row by row in
-    a recursive CTE (list state), then the (n,k) pairs joined
-    against row n. Digit-product theorem vs additive triangle."""
-    P = 13
-    tab = [0] * (P * P)
-    for ni in range(P):
-        c = 1
-        for ki in range(ni + 1):
-            tab[ni * P + ki] = c % P
-            c = c * (ni - ki) // (ki + 1)
-    tl = F.array(*[F.lit(v) for v in tab])
-    d = F.col("doc_id").cast("string")
-    pairs = (load(spark, sf_dir, "documents")
-             .filter(F.col("doc_id") < 40)
-             .select(
-                 "doc_id",
-                 (_mst_hash(F.concat(F.lit("lb:"), d)) % 500)
-                 .alias("n")))
-    pairs = pairs.withColumn(
-        "k", _mst_hash(F.concat(F.lit("lk:"), d)) % (F.col("n") + 1))
-    prod = F.lit(1)
-    for i in range(3):
-        ni = (F.col("n") / (P ** i)).cast("long") % P
-        ki = (F.col("k") / (P ** i)).cast("long") % P
-        prod = prod * F.element_at(tl, (ni * P + ki).cast("int") + 1)
-    return (pairs.select("doc_id", "n", "k",
-                         (prod % P).alias("c_mod"))
-            .orderBy("doc_id"))
-
-
-def q_wythoff_cold(spark, sf_dir) -> DataFrame:
-    """The first 60 cold (P-)positions of Wythoff's game — engine:
-    the BEATTY closed form a_n = floor(n*phi), b_n = a_n + n, with
-    floor(n*phi) computed exactly as (n + isqrt(5n^2)) div 2 using
-    an integer-corrected sqrt (5n^2 is never a perfect square, and
-    two CASE correction steps pin the double sqrt to the true
-    isqrt). Oracle: the GREEDY MEX construction — a_n is the
-    smallest positive integer in no earlier pair and b_n = a_n + n,
-    replayed in a recursive CTE carrying the used-set as a list.
-    Closed form from the golden ratio vs the game-theoretic
-    definition."""
-    n = spark.range(1, 61).select(F.col("id").alias("n"))
-    x = F.col("n") * F.col("n") * 5
-    s0 = F.sqrt(x.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= x, s0 + 1).otherwise(s0)
-    s = F.when(s1 * s1 > x, s1 - 1).otherwise(s1)
-    a = ((F.col("n") + s) / 2).cast("long")
-    return (n.select("n", a.alias("a"), (a + F.col("n")).alias("b"))
-            .orderBy("n"))
-
-
-def q_r2_lattice(spark, sf_dir) -> DataFrame:
-    """r2(n) — number of representations of n as an ordered pair of
-    squares (signs included) for n=1..400 — engine: JACOBI'S
-    FORMULA r2(n) = 4*(d1(n) - d3(n)) where d1/d3 count divisors
-    congruent to 1/3 mod 4, computed as a divisor census join.
-    Oracle: the DEFINITION — count lattice points (a,b) with
-    a^2+b^2 = n over the full signed grid. A divisor-class theorem
-    vs brute lattice enumeration."""
-    n = spark.range(1, 401).select(F.col("id").alias("n"))
-    d = spark.range(1, 401).select(F.col("id").alias("d"))
-    divs = n.join(F.broadcast(d),
-                  (F.col("d") <= F.col("n"))
-                  & (F.col("n") % F.col("d") == 0))
-    return (divs.groupBy("n")
-            .agg((4 * (F.sum(F.when(F.col("d") % 4 == 1, 1)
-                             .otherwise(0))
-                       - F.sum(F.when(F.col("d") % 4 == 3, 1)
-                               .otherwise(0)))).alias("r2"))
-            .orderBy("n"))
-
-
-def q_sigma_classify(spark, sf_dir) -> DataFrame:
-    """sigma(n) and the perfect/abundant/deficient class for
-    n=1..600 — engine: the DIVISOR CENSUS — sigma = sum of divisors
-    found by an explicit divisibility join. Oracle: the
-    MULTIPLICATIVE closed form — factor each n into prime powers
-    (primes by non-existence of a smaller divisor, exponents by
-    maximal p^k | n) and take the product of geometric sums
-    (p^(e+1)-1)/(p-1). Census vs multiplicativity."""
-    n = spark.range(1, 601).select(F.col("id").alias("n"))
-    d = spark.range(1, 601).select(F.col("id").alias("d"))
-    divs = n.join(F.broadcast(d),
-                  (F.col("d") <= F.col("n"))
-                  & (F.col("n") % F.col("d") == 0))
-    sig = divs.groupBy("n").agg(F.sum("d").alias("sigma"))
-    cls = (F.when(F.col("sigma") == 2 * F.col("n"), "perfect")
-           .when(F.col("sigma") > 2 * F.col("n"), "abundant")
-           .otherwise("deficient"))
-    return sig.select("n", "sigma", cls.alias("cls")).orderBy("n")
-
-
-def q_pell_fundamental(spark, sf_dir) -> DataFrame:
-    """Fundamental solutions of Pell's equation x^2 - n*y^2 = 1 for
-    non-square n in 2..31 — engine: the CONTINUED-FRACTION method —
-    the standard (m,d,a) iteration for the CF of sqrt(n) with
-    convergent recurrences, stopping at the first convergent that
-    solves the equation (Lagrange's theorem guarantees it), as an
-    Arrow kernel in exact Python ints. Oracle: EXHAUSTIVE SEARCH —
-    the least x in 2..10^4+1 for which (x^2-1)/n is a perfect
-    square (all fundamental x for n<=31 are <=9801). Algebraic
-    number theory vs brute force."""
-    ns = (spark.range(2, 32).select(F.col("id").alias("n"))
-          .filter(F.sqrt(F.col("id").cast("double")).cast("long")
-                  * F.sqrt(F.col("id").cast("double")).cast("long")
-                  != F.col("id")))
-
-    def pell_kernel(it):
-        import math
-
-        import pandas as pd
-        for pdf in it:
-            xs, ys = [], []
-            for n in pdf["n"]:
-                n = int(n)
-                a0 = math.isqrt(n)
-                m, dd, a = 0, 1, a0
-                pm1, p = 1, a0
-                qm1, q = 0, 1
-                while p * p - n * q * q != 1:
-                    m = dd * a - m
-                    dd = (n - m * m) // dd
-                    a = (a0 + m) // dd
-                    pm1, p = p, a * p + pm1
-                    qm1, q = q, a * q + qm1
-                xs.append(p)
-                ys.append(q)
-            yield pd.DataFrame({"n": pdf["n"], "x": xs, "y": ys})
-
-    return (ns.repartition(4)
-            .mapInPandas(pell_kernel, "n long, x long, y long")
-            .orderBy("n"))
-
-
-def q_miller_rabin(spark, sf_dir) -> DataFrame:
-    """Primality of 60 hash-derived odd numbers below 10^6 —
-    engine: deterministic MILLER-RABIN with witness set {2,3,5,7}
-    (provably exact below 3,215,031,751), the strong-pseudoprime
-    test run as an Arrow kernel with exact modular exponentiation.
-    Oracle: the DEFINITION — a composite below 10^6 has a divisor
-    in 2..1000, so primality is the non-existence of one. Fermat
-    witnesses vs trial division."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select(
-               "doc_id",
-               (5 + 2 * (_mst_hash(F.concat(F.lit("mr:"), d))
-                         % 500000)).alias("n")))
-
-    def mr_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            flags = []
-            for n in pdf["n"]:
-                n = int(n)
-                if n < 2:
-                    flags.append(0)
-                    continue
-                for p in (2, 3, 5, 7):
-                    if n % p == 0:
-                        flags.append(1 if n == p else 0)
-                        break
-                else:
-                    dd, s = n - 1, 0
-                    while dd % 2 == 0:
-                        dd //= 2
-                        s += 1
-                    ok = True
-                    for a in (2, 3, 5, 7):
-                        x = pow(a, dd, n)
-                        if x in (1, n - 1):
-                            continue
-                        for _ in range(s - 1):
-                            x = x * x % n
-                            if x == n - 1:
-                                break
-                        else:
-                            ok = False
-                            break
-                    flags.append(1 if ok else 0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n": pdf["n"], "is_prime": flags})
-
-    return (raw.repartition(4)
-            .mapInPandas(mr_kernel,
-                         "doc_id long, n long, is_prime int")
-            .orderBy("doc_id"))
-
-
-def _hash_series(prefix: str, n_groups: int, length: int, mod: int,
-                 shift: int = 0):
-    """(g, pos, v) grid with v = sha-hash(prefix:g:pos) % mod - shift,
-    shared by the sequence-shaped battery rows."""
-    return (
-        "SELECT g.i AS g, p.j AS pos, "
-        f"cast('0x' || substr(sha256('{prefix}:' || "
-        "cast(g.i as varchar) || ':' || cast(p.j as varchar)), "
-        f"1, 8) as bigint) % {mod} - {shift} AS v "
-        f"FROM range(0, {n_groups}) g(i), range(0, {length}) p(j)")
-
-
-def q_kadane_max_subarray(spark, sf_dir) -> DataFrame:
-    """Maximum non-empty contiguous subarray sum over 16 hash-derived
-    64-long integer sequences — engine: the PREFIX-MIN identity —
-    best = max_i (prefix_i - min(0, min_{j<i} prefix_j)), two
-    window functions and a groupBy (Kadane linearized for a
-    distributed engine: no sequential carry, just running
-    extremes). Oracle: the DEFINITION — enumerate every (i,j)
-    span, sum its elements through a range join, take the max.
-    O(n) windows vs O(n^3) enumeration."""
-    g = spark.range(0, 16).select(F.col("id").alias("g"))
-    p = spark.range(0, 64).select(F.col("id").alias("pos"))
-    gs = F.col("g").cast("string")
-    ps = F.col("pos").cast("string")
-    t = g.crossJoin(F.broadcast(p)).select(
-        "g", "pos",
-        (_mst_hash(F.concat(F.lit("ka:"), gs, F.lit(":"), ps))
-         % 41 - 20).alias("v"))
-    w = Window.partitionBy("g").orderBy("pos")
-    wprev = (Window.partitionBy("g").orderBy("pos")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    t = t.withColumn("prefix", F.sum("v").over(w))
-    t = t.withColumn(
-        "base", F.least(F.lit(0), F.coalesce(
-            F.min("prefix").over(wprev), F.lit(0))))
-    return (t.groupBy("g")
-            .agg(F.max(F.col("prefix") - F.col("base")).alias("best"))
-            .orderBy("g"))
-
-
-def q_water_trapping(spark, sf_dir) -> DataFrame:
-    """Trapped rain water over 16 hash-derived 64-long elevation
-    profiles — engine: the PER-CELL formulation — water_i =
-    max(0, min(runmax_left_i, runmax_right_i) - h_i) via two
-    opposing running-max windows, summed per group. Oracle: the
-    HORIZONTAL SLAB decomposition — for each water level l, count
-    the cells with h < l lying strictly between the first and last
-    columns reaching l; sum over levels. Vertical columns vs
-    horizontal slabs — same volume by Fubini."""
-    g = spark.range(0, 16).select(F.col("id").alias("g"))
-    p = spark.range(0, 64).select(F.col("id").alias("pos"))
-    gs = F.col("g").cast("string")
-    ps = F.col("pos").cast("string")
-    t = g.crossJoin(F.broadcast(p)).select(
-        "g", "pos",
-        (_mst_hash(F.concat(F.lit("wt:"), gs, F.lit(":"), ps))
-         % 16).alias("h"))
-    wl = (Window.partitionBy("g").orderBy("pos")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wr = (Window.partitionBy("g").orderBy(F.col("pos").desc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    t = (t.withColumn("ml", F.max("h").over(wl))
-         .withColumn("mr", F.max("h").over(wr)))
-    water = F.greatest(
-        F.lit(0), F.least(F.col("ml"), F.col("mr")) - F.col("h"))
-    return (t.groupBy("g").agg(F.sum(water).alias("water"))
-            .orderBy("g"))
-
-
-def q_string_period(spark, sf_dir) -> DataFrame:
-    """Smallest weak period of 40 constructed near-periodic strings
-    (a 4-char stem repeated 6x plus a partial tail) — engine:
-    KMP's PREFIX FUNCTION — the smallest period is n - fail[n],
-    the failure chain computed as an Arrow kernel. Oracle: the
-    BORDER characterization — the least p for which the string
-    equals its own p-shift, i.e. substr(s, p+1) = substr(s, 1,
-    n-p), found by direct comparison over all p. Failure links vs
-    the definition of a border."""
-    base = F.lower(F.substring(
-        F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""), 1, 4))
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   F.concat(
-                       F.repeat(base, 6),
-                       F.substring(base, 1,
-                                   (F.col("doc_id") % 4).cast("int")))
-                   .alias("s"))
-           .filter(F.length("s") >= 8))
-
-    def kmp_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            periods = []
-            for s in pdf["s"]:
-                n = len(s)
-                fail = [0] * (n + 1)
-                k = 0
-                for i in range(1, n):
-                    while k and s[i] != s[k]:
-                        k = fail[k]
-                    if s[i] == s[k]:
-                        k += 1
-                    fail[i + 1] = k
-                periods.append(n - fail[n])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "s": pdf["s"], "period": periods})
-
-    return (raw.repartition(4)
-            .mapInPandas(kmp_kernel,
-                         "doc_id long, s string, period int")
-            .orderBy("doc_id"))
-
-
-def q_gauss_circle(spark, sf_dir) -> DataFrame:
-    """Gauss circle problem N(r) — lattice points inside x^2+y^2 <=
-    r^2 for r=1..60 — engine: the 1-D REDUCTION — N(r) = sum_x
-    (2*isqrt(r^2-x^2) + 1) over x=-r..r, with the double sqrt
-    pinned to the true integer root by two CASE corrections.
-    Oracle: the 2-D CENSUS — count the (x,y) grid directly.
-    Dimension reduction vs brute enumeration."""
-    r = spark.range(1, 61).select(F.col("id").alias("r"))
-    x = spark.range(-60, 61).select(F.col("id").alias("x"))
-    t = r.join(F.broadcast(x),
-               F.col("x") * F.col("x") <= F.col("r") * F.col("r"))
-    v = F.col("r") * F.col("r") - F.col("x") * F.col("x")
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    s = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    return (t.groupBy("r").agg(F.sum(2 * s + 1).alias("npoints"))
-            .orderBy("r"))
-
-
-def q_assignment_min(spark, sf_dir) -> DataFrame:
-    """Minimum-cost perfect assignment of 6 workers to 6 tasks for
-    8 hash-derived cost matrices — engine: SUBSET DP (Held-Karp
-    shape) — states (mask, cost) grown one worker per round by a
-    join against the cost rows of the next worker (worker index =
-    popcount of the mask), min per new mask; 6 rounds of joins,
-    the frontier never exceeds C(6,k) masks. Oracle: BRUTE FORCE —
-    every one of the 720 assignment prefixes enumerated in a
-    recursive CTE, min total at depth 6. Memoized subsets vs the
-    full factorial tree."""
-    g = spark.range(0, 8).select(F.col("id").alias("g"))
-    w = spark.range(0, 6).select(F.col("id").alias("wk"))
-    tsk = spark.range(0, 6).select(F.col("id").alias("tk"))
-    gs = F.col("g").cast("string")
-    cost = (g.crossJoin(F.broadcast(w)).crossJoin(F.broadcast(tsk))
-            .select("g", "wk", "tk",
-                    (_mst_hash(F.concat(
-                        F.lit("as:"), gs, F.lit(":"),
-                        F.col("wk").cast("string"), F.lit(":"),
-                        F.col("tk").cast("string"))) % 50)
-                    .alias("c")))
-    cost.cache()
-    state = g.select("g", F.lit(0).alias("mask"),
-                     F.lit(0).cast("long").alias("cost"))
-    for step in range(6):
-        nxt = (state.join(cost.filter(F.col("wk") == step), ["g"])
-               .filter(F.col("mask")
-                       .bitwiseAND(F.pow(F.lit(2.0),
-                                         F.col("tk").cast("double"))
-                                   .cast("long")) == 0)
-               .select("g",
-                       (F.col("mask")
-                        + F.pow(F.lit(2.0), F.col("tk").cast("double"))
-                        .cast("long")).alias("mask"),
-                       (F.col("cost") + F.col("c")).alias("cost")))
-        state = nxt.groupBy("g", "mask").agg(F.min("cost").alias("cost"))
-    out = state.groupBy("g").agg(F.min("cost").alias("best"))
-    res = out.orderBy("g")
-    cost.unpersist()
-    return res
-
-
-def q_perm_rank(spark, sf_dir) -> DataFrame:
-    """Lexicographic rank of 30 hash-derived permutations of
-    {0..6} — engine: the LEHMER CODE — rank = sum over positions
-    of (#later elements smaller than this one) * (remaining)!,
-    computed as a self-join inversion census against a factorial
-    literal. Oracle: ENUMERATION — all 5040 permutations of S_7
-    generated by a recursive CTE, ordered as strings, rank =
-    dense_rank - 1, joined by the permutation string. Factoradic
-    arithmetic vs the definition of lexicographic order."""
-    fact = [1] * 8
-    for i in range(1, 8):
-        fact[i] = fact[i - 1] * i
-    fl = F.array(*[F.lit(v) for v in fact])
-    g = spark.range(0, 30).select(F.col("id").alias("doc_id"))
-    p = spark.range(0, 7).select(F.col("id").alias("elem"))
-    keyed = (g.crossJoin(F.broadcast(p))
-             .select("doc_id", "elem",
-                     _mst_hash(F.concat(
-                         F.lit("pr:"), F.col("doc_id").cast("string"),
-                         F.lit(":"), F.col("elem").cast("string")))
-                     .alias("key")))
-    wno = Window.partitionBy("doc_id").orderBy("key", "elem")
-    perm = keyed.select(
-        "doc_id", "elem",
-        (F.row_number().over(wno) - 1).alias("pos"))
-    right = perm.select(F.col("doc_id").alias("doc_id2"),
-                        F.col("elem").alias("elem2"),
-                        F.col("pos").alias("pos2"))
-    inv = (perm.join(right,
-                     (F.col("doc_id") == F.col("doc_id2"))
-                     & (F.col("pos2") > F.col("pos"))
-                     & (F.col("elem2") < F.col("elem")), "left")
-           .groupBy("doc_id", "pos", "elem")
-           .agg(F.count("elem2").alias("smaller_after")))
-    term = (F.col("smaller_after")
-            * F.element_at(fl, (6 - F.col("pos")).cast("int") + 1))
-    ranks = inv.groupBy("doc_id").agg(F.sum(term).alias("rank"))
-    pstr = (perm.groupBy("doc_id")
-            .agg(F.concat_ws(
-                "", F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("pos", "elem"))),
-                    lambda s: s["elem"].cast("string"))).alias("perm")))
-    return (ranks.join(pstr, "doc_id")
-            .select("doc_id", "perm", "rank").orderBy("doc_id"))
-
-
-def q_game_of_life(spark, sf_dir) -> DataFrame:
-    """Conway's Game of Life, 4 generations on a 16x16 torus, 12
-    hash-seeded boards — engine: the VECTORIZED STENCIL — each
-    board as a numpy array inside applyInPandas, neighbor counts
-    by eight np.roll shifts (toroidal by construction). Oracle:
-    the WEIGHTED-OFFSET relational trick — one recursive CTE pass
-    per generation expands each live cell over the 9 offsets with
-    weight 1 for neighbors and 10 for self, so a cell is alive
-    next generation iff its weighted sum is 3, 12, or 13 (B3/S23
-    in a single aggregate, one reference to the recursive table).
-    Array arithmetic vs relational algebra."""
-    g = spark.range(0, 12).select(F.col("id").alias("g"))
-    x = spark.range(0, 16).select(F.col("id").alias("x"))
-    y = spark.range(0, 16).select(F.col("id").alias("y"))
-    cells = (g.crossJoin(F.broadcast(x)).crossJoin(F.broadcast(y))
-             .filter(_mst_hash(F.concat(
-                 F.lit("gl:"), F.col("g").cast("string"), F.lit(":"),
-                 F.col("x").cast("string"), F.lit(":"),
-                 F.col("y").cast("string"))) % 5 == 0)
-             .select("g", "x", "y"))
-
-    def life_kernel(pdf):
-        import numpy as np
-        import pandas as pd
-        gval = int(pdf["g"].iloc[0])
-        b = np.zeros((16, 16), dtype=np.int64)
-        b[pdf["x"].to_numpy(), pdf["y"].to_numpy()] = 1
-        for _ in range(4):
-            n = sum(np.roll(np.roll(b, dx, 0), dy, 1)
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                    if (dx, dy) != (0, 0))
-            b = ((n == 3) | ((b == 1) & (n == 2))).astype(np.int64)
-        xs, ys = np.nonzero(b)
-        return pd.DataFrame({
-            "g": [gval], "pop": [int(b.sum())],
-            "checksum": [int((xs * 31 + ys).sum())]})
-
-    return (cells.groupBy("g")
-            .applyInPandas(life_kernel, "g long, pop long, checksum long")
-            .orderBy("g"))
-
-
-def q_bezier_eval(spark, sf_dir) -> DataFrame:
-    """Cubic Bezier curves with integer control points evaluated at
-    t = k/8, all in exact integers scaled by 8^3 — engine:
-    DE CASTELJAU'S ladder — three levels of lerps, each scaled by
-    8: L_i' = (8-k)L_i + k L_{i+1}. Oracle: the BERNSTEIN closed
-    form — 512*B(t) = sum_i C(3,i) k^i (8-k)^(3-i) P_i. Recursive
-    interpolation vs the expanded polynomial — equal by the
-    binomial theorem."""
-    g = spark.range(0, 20).select(F.col("id").alias("g"))
-    gs = F.col("g").cast("string")
-    pts = g.select("g", *[
-        (_mst_hash(F.concat(F.lit(f"bz{i}:"), gs)) % 101)
-        .alias(f"p{i}") for i in range(4)])
-    k = spark.range(0, 9).select(F.col("id").alias("k"))
-    t = pts.crossJoin(F.broadcast(k))
-    a, b = F.col("k"), 8 - F.col("k")
-    l0 = [F.col(f"p{i}") for i in range(4)]
-    l1 = [b * l0[i] + a * l0[i + 1] for i in range(3)]
-    l2 = [b * l1[i] + a * l1[i + 1] for i in range(2)]
-    val = b * l2[0] + a * l2[1]
-    return (t.select("g", "k", val.alias("v512"))
-            .orderBy("g", "k"))
-
-
-def q_collatz_steps(spark, sf_dir) -> DataFrame:
-    """Collatz total stopping time and trajectory peak for 50
-    hash-derived starts below 10^5 — engine: the hailstone loop as
-    an Arrow kernel in exact Python ints. Oracle: the same
-    dynamical system replayed step by step in a recursive CTE.
-    Imperative iteration vs relational fixpoint — both must walk
-    the identical orbit."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 50)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("cz:"), d))
-                    % 99998).alias("n0")))
-
-    def collatz_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            steps, peaks = [], []
-            for n0 in pdf["n0"]:
-                n, st, pk = int(n0), 0, int(n0)
-                while n != 1:
-                    n = n // 2 if n % 2 == 0 else 3 * n + 1
-                    st += 1
-                    pk = max(pk, n)
-                steps.append(st)
-                peaks.append(pk)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "n0": pdf["n0"], "steps": steps,
-                                "peak": peaks})
-
-    return (raw.repartition(4)
-            .mapInPandas(collatz_kernel,
-                         "doc_id long, n0 long, steps int, peak long")
-            .orderBy("doc_id"))
-
-
-def q_happy_numbers(spark, sf_dir) -> DataFrame:
-    """Happy-number classification for n=1..500 — engine: CYCLE
-    DETECTION — iterate the digit-square-sum map with a visited
-    set in an Arrow kernel; happy iff the orbit hits 1 before
-    revisiting any value (no number theory assumed). Oracle: the
-    REACHES-4 theorem — every unhappy orbit passes through 4, so
-    the recursive CTE just iterates until n is 1 or 4. The
-    definition vs the classified-cycle characterization."""
-    n = spark.range(1, 501).select(F.col("id").alias("n"))
-
-    def happy_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            flags = []
-            for n0 in pdf["n"]:
-                seen, v = set(), int(n0)
-                while v != 1 and v not in seen:
-                    seen.add(v)
-                    v = sum(int(c) ** 2 for c in str(v))
-                flags.append(1 if v == 1 else 0)
-            yield pd.DataFrame({"n": pdf["n"], "happy": flags})
-
-    return (n.repartition(4)
-            .mapInPandas(happy_kernel, "n long, happy int")
-            .orderBy("n"))
-
-
-def q_ulam_spiral(spark, sf_dir) -> DataFrame:
-    """Square-spiral coordinates of n=1..400 (n=1 at the origin,
-    first step right, turns counter-clockwise) — engine: the RING
-    CLOSED FORM — ring k = floor((isqrt(n-1)+1)/2), offset j =
-    n - (2k-1)^2 placed on one of four sides by pure CASE algebra.
-    Oracle: the WALK — a recursive CTE stepping n=1..400 with
-    direction rotation and the 1,1,2,2,3,3,... run-length pattern.
-    O(1) arithmetic vs the generative definition."""
-    n = spark.range(1, 401).select(F.col("id").alias("n"))
-    v = F.col("n") - 1
-    s0 = F.sqrt(v.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= v, s0 + 1).otherwise(s0)
-    isq = F.when(s1 * s1 > v, s1 - 1).otherwise(s1)
-    # the exchange is a projection-collapse barrier: without it the
-    # isqrt-correction tree is textually inlined into every CASE arm
-    # below and codegen blows the 64 KB method limit
-    kj = (n.select("n", ((isq + 1) / 2).cast("long").alias("k"))
-          .repartition(4)
-          .withColumn("j", F.col("n")
-                      - (2 * F.col("k") - 1) * (2 * F.col("k") - 1)))
-    k, j = F.col("k"), F.col("j")
-    x = (F.when(F.col("n") == 1, 0)
-         .when(j <= 2 * k, k)
-         .when(j <= 4 * k, k - (j - 2 * k))
-         .when(j <= 6 * k, -k)
-         .otherwise(-k + (j - 6 * k)))
-    y = (F.when(F.col("n") == 1, 0)
-         .when(j <= 2 * k, -k + j)
-         .when(j <= 4 * k, k)
-         .when(j <= 6 * k, k - (j - 4 * k))
-         .otherwise(-k))
-    return kj.select("n", x.alias("x"), y.alias("y")).orderBy("n")
-
-
-def q_zeller_dow(spark, sf_dir) -> DataFrame:
-    """ISO day-of-week for 80 hash-derived Gregorian dates
-    (1900-2099) — engine: ZELLER'S CONGRUENCE — pure integer
-    arithmetic on (y, m, d) with the Jan/Feb year shift, no date
-    type anywhere. Oracle: DuckDB's ICU-backed civil calendar
-    (isodow over make_date). A closed-form congruence vs a
-    calendar library."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 80)
-           .select(
-               "doc_id",
-               (1900 + _mst_hash(F.concat(F.lit("zy:"), d)) % 200)
-               .alias("y"),
-               (1 + _mst_hash(F.concat(F.lit("zm:"), d)) % 12)
-               .alias("m"),
-               (1 + _mst_hash(F.concat(F.lit("zd:"), d)) % 28)
-               .alias("dd")))
-    # Jan/Feb count as months 13/14 of the previous year
-    mm = F.when(F.col("m") <= 2, F.col("m") + 12).otherwise(F.col("m"))
-    yy = F.when(F.col("m") <= 2, F.col("y") - 1).otherwise(F.col("y"))
-    kk = yy % 100
-    jj = (yy / 100).cast("long")
-    h = (F.col("dd") + ((13 * (mm + 1)) / 5).cast("long")
-         + kk + (kk / 4).cast("long") + (jj / 4).cast("long")
-         + 5 * jj) % 7
-    # Zeller: h=0 Saturday ... -> ISO Mon=1..Sun=7
-    iso = (h + 5) % 7 + 1
-    return (raw.select("doc_id", "y", "m", "dd",
-                       iso.cast("int").alias("isodow"))
-            .orderBy("doc_id"))
-
-
-def q_wilson_primality(spark, sf_dir) -> DataFrame:
-    """Primality of n=2..250 by WILSON'S THEOREM — engine: (n-1)!
-    mod n computed as a JVM-side F.aggregate fold over
-    sequence(1, n-1) with a mod after every multiply (accumulator
-    < n^2, never leaves long range); n is prime iff the fold lands
-    on n-1. Oracle: trial division. A factorial congruence
-    characterization vs the definition by divisors."""
-    n = spark.range(2, 251).select(F.col("id").alias("n"))
-    fold = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), F.col("n") - 1),
-        F.lit(1).cast("long"),
-        lambda acc, x: (acc * x) % F.col("n"))
-    return (n.select(
-        "n",
-        F.when(fold == F.col("n") - 1, 1).otherwise(0)
-        .cast("int").alias("is_prime"))
-        .orderBy("n"))
-
-
-def q_faulhaber_sums(spark, sf_dir) -> DataFrame:
-    """Power sums S_k(m) = 1^k + ... + m^k for k=1..6 at 20
-    hash-derived m <= 300 — engine: the DEFINITION — explode
-    sequence(1, m), sum exact pow terms (300^6 < 2^53 so the
-    double pow round-trips losslessly). Oracle: FAULHABER'S closed
-    forms — the six classical polynomials in m, exact integer
-    division throughout. Brute summation vs Bernoulli-polynomial
-    algebra."""
-    d = F.col("doc_id").cast("string")
-    docs = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 20)
-            .select("doc_id",
-                    (10 + _mst_hash(F.concat(F.lit("fh:"), d)) % 291)
-                    .alias("m")))
-    k = spark.range(1, 7).select(F.col("id").alias("k"))
-    t = (docs.crossJoin(F.broadcast(k))
-         .select("doc_id", "m", "k",
-                 F.explode(F.sequence(F.lit(1).cast("long"),
-                                      F.col("m"))).alias("i")))
-    term = F.pow(F.col("i").cast("double"),
-                 F.col("k").cast("double")).cast("long")
-    return (t.groupBy("doc_id", "m", "k")
-            .agg(F.sum(term).alias("s"))
-            .orderBy("doc_id", "k"))
-
-
-def q_sundaram_sieve(spark, sf_dir) -> DataFrame:
-    """Primes below 2002 — engine: the SIEVE OF SUNDARAM — from
-    k=1..1000 remove every k = i + j + 2ij (an anti-join against
-    the generated exclusion grid), keep 2k+1, prepend 2. Oracle:
-    trial division. Sundaram's index arithmetic — which never
-    mentions divisibility — vs the definition."""
-    N2 = 1000
-    k = spark.range(1, N2 + 1).select(F.col("id").alias("k"))
-    i = spark.range(1, 23).select(F.col("id").alias("i"))
-    j = spark.range(1, N2 + 1).select(F.col("id").alias("j"))
-    ex = (i.crossJoin(j)
-          .filter((F.col("i") <= F.col("j"))
-                  & (F.col("i") + F.col("j")
-                     + 2 * F.col("i") * F.col("j") <= N2))
-          .select((F.col("i") + F.col("j")
-                   + 2 * F.col("i") * F.col("j")).alias("k"))
-          .distinct())
-    odd = (k.join(ex, "k", "left_anti")
-           .select((2 * F.col("k") + 1).alias("p")))
-    two = spark.range(2, 3).select(F.col("id").alias("p"))
-    return two.unionAll(odd).orderBy("p")
-
-
-def q_reverse_add_palindrome(spark, sf_dir) -> DataFrame:
-    """Reverse-and-add palindrome convergence for n=1..180 (all
-    below the first Lychrel candidate 196): step count and the
-    palindrome reached — engine: exact Python int arithmetic in an
-    Arrow kernel (reverse by slicing digits of the integer).
-    Oracle: a recursive CTE reversing the DECIMAL STRING with
-    DuckDB's reverse() and casting back. Integer arithmetic vs
-    string manipulation — the same orbit through two
-    representations."""
-    n = spark.range(1, 181).select(F.col("id").alias("n"))
-
-    def ra_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            steps, finals = [], []
-            for n0 in pdf["n"]:
-                v, st = int(n0), 0
-                while str(v) != str(v)[::-1]:
-                    v += int(str(v)[::-1])
-                    st += 1
-                steps.append(st)
-                finals.append(v)
-            yield pd.DataFrame({"n": pdf["n"], "steps": steps,
-                                "pal": finals})
-
-    return (n.repartition(4)
-            .mapInPandas(ra_kernel, "n long, steps int, pal long")
-            .orderBy("n"))
-
-
-_FF_PRIMES = (101, 103, 107, 109, 113, 127, 131, 137, 139, 149, 151,
-              157, 163, 167, 173, 179, 181, 191, 193, 197, 199)
-
-
-def q_fermat_factorization(spark, sf_dir) -> DataFrame:
-    """Factor 30 semiprimes with close prime factors (both drawn
-    from the primes in [101,199]) — engine: FERMAT'S METHOD — scan
-    a = ceil(sqrt(n)) + t for the first t with a^2 - n a perfect
-    square (t <= 16 suffices for this factor gap), all integer
-    column algebra with corrected isqrt, then (p,q) = (a-y, a+y).
-    Oracle: TRIAL DIVISION — the least divisor >= 2. Difference of
-    squares vs divisor search."""
-    pl = F.array(*[F.lit(v) for v in _FF_PRIMES])
-    d = F.col("doc_id").cast("string")
-    base = (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 30)
-            .select(
-                "doc_id",
-                F.element_at(pl, (_mst_hash(F.concat(F.lit("fp:"), d))
-                                  % 21).cast("int") + 1).alias("p0"),
-                F.element_at(pl, (_mst_hash(F.concat(F.lit("fq:"), d))
-                                  % 21).cast("int") + 1).alias("q0")))
-    base = base.select(
-        "doc_id", (F.col("p0") * F.col("q0")).cast("long").alias("n"))
-    nv = F.col("n") - 1
-    r0 = F.sqrt(nv.cast("double")).cast("long")
-    r1 = F.when((r0 + 1) * (r0 + 1) <= nv, r0 + 1).otherwise(r0)
-    isq_nm1 = F.when(r1 * r1 > nv, r1 - 1).otherwise(r1)
-    base = (base.withColumn("a0", isq_nm1 + 1).repartition(4))
-    t = spark.range(0, 17).select(F.col("id").alias("t"))
-    cand = base.join(F.broadcast(t))
-    a = F.col("a0") + F.col("t")
-    y2 = a * a - F.col("n")
-    s0 = F.sqrt(y2.cast("double")).cast("long")
-    s1 = F.when((s0 + 1) * (s0 + 1) <= y2, s0 + 1).otherwise(s0)
-    y = F.when(s1 * s1 > y2, s1 - 1).otherwise(s1)
-    hits = (cand.filter(y * y == y2)
-            .select("doc_id", "n", "t", (a - y).alias("p"),
-                    (a + y).alias("q")))
-    w = Window.partitionBy("doc_id").orderBy("t")
-    return (hits.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("doc_id", "n", "p", "q").orderBy("doc_id"))
-
-
-def q_binary_gcd(spark, sf_dir) -> DataFrame:
-    """gcd of 60 hash-derived pairs below 10^9 — engine: STEIN'S
-    BINARY ALGORITHM — shifts, subtractions, and a common power of
-    two, no division anywhere, as an Arrow kernel. Oracle: DuckDB's
-    gcd() builtin, an independent C++ Euclid. Two algorithms, two
-    engines."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 60)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("ga:"), d)) % 999999999)
-               .alias("a"),
-               (1 + _mst_hash(F.concat(F.lit("gb:"), d)) % 999999999)
-               .alias("b")))
-
-    def stein_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            gs = []
-            for a, b in zip(pdf["a"], pdf["b"]):
-                a, b = int(a), int(b)
-                shift = 0
-                while a % 2 == 0 and b % 2 == 0:
-                    a //= 2
-                    b //= 2
-                    shift += 1
-                while a % 2 == 0:
-                    a //= 2
-                while b:
-                    while b % 2 == 0:
-                        b //= 2
-                    if a > b:
-                        a, b = b, a
-                    b -= a
-                gs.append(a << shift)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "a": pdf["a"],
-                                "b": pdf["b"], "g": gs})
-
-    return (raw.repartition(4)
-            .mapInPandas(stein_kernel,
-                         "doc_id long, a long, b long, g long")
-            .orderBy("doc_id"))
-
-
-def q_ballot_paths(spark, sf_dir) -> DataFrame:
-    """Bertrand's ballot problem — for 20 hash-derived (a,b) with
-    a > b and a+b <= 24, the number of monotone lattice paths from
-    (0,0) to (a,b) keeping a strictly ahead at every prefix —
-    engine: the REFLECTION closed form (a-b)/(a+b) * C(a+b,a),
-    with the binomial built by a JVM F.aggregate multiplicative
-    fold (each prefix is itself a binomial, so the division is
-    exact at every step). Oracle: DP — grow the path-count table
-    one step per recursive-CTE iteration, states filtered to
-    x > y, counts merged by an aggregate in the recursive term.
-    A bijection-counting identity vs explicit dynamic programming."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 20)
-           .select(
-               "doc_id",
-               (1 + _mst_hash(F.concat(F.lit("ba:"), d)) % 12)
-               .alias("b")))
-    raw = raw.withColumn(
-        "a", F.col("b") + 1
-        + _mst_hash(F.concat(F.lit("bb:"), d)) % 12)
-    n, k = F.col("a") + F.col("b"), F.col("a")
-    binom = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), k),
-        F.lit(1).cast("long"),
-        lambda acc, i: F.floor(acc * (n - k + i) / i).cast("long"))
-    return (raw.select(
-        "doc_id", "a", "b",
-        ((F.col("a") - F.col("b")) * binom
-         / (F.col("a") + F.col("b"))).cast("long").alias("npaths"))
-        .orderBy("doc_id"))
-
-
-def q_dragon_turns(spark, sf_dir) -> DataFrame:
-    """Turn direction at fold n of the Heighway dragon curve,
-    n=1..512 — engine: the BIT CLOSED FORM — the turn is left iff
-    the bit above the lowest set bit of n is 0, i.e.
-    ((n & -n) << 1) & n == 0, pure JVM bit algebra. Oracle: the
-    L-SYSTEM — fold the strip: s' = s || 'L' || reverse(swap(s)),
-    grown in a recursive CTE, then read position n. Bit arithmetic
-    vs the paper-folding definition."""
-    nn = spark.range(1, 513).select(F.col("id").alias("n"))
-    low = F.col("n").bitwiseAND(-F.col("n"))
-    above = F.shiftleft(low, 1).bitwiseAND(F.col("n"))
-    return (nn.select(
-        "n", F.when(above == 0, "L").otherwise("R").alias("turn"))
-        .orderBy("n"))
-
-
-def q_nqueens(spark, sf_dir) -> DataFrame:
-    """8-queens solution census grouped by first-row column —
-    engine: PREFIX-SPLIT backtracking — the search tree is split
-    on the first queen's column into 8 independent branches, one
-    Arrow kernel invocation each (how a cluster would shard an
-    exhaustive search), each branch returning its count and a
-    base-8 checksum of its solutions. Oracle: RELATIONAL GROWTH —
-    a recursive CTE extends placement strings one row at a time,
-    conflicts filtered by a correlated EXISTS over earlier rows.
-    Imperative backtracking vs declarative generate-and-test."""
-    c0 = spark.range(0, 8).select(F.col("id").alias("col0"))
-
-    def queens_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            outs = []
-            for col0 in pdf["col0"]:
-                col0 = int(col0)
-                count, checksum = 0, 0
-                stack = [(col0,)]
-                while stack:
-                    pos = stack.pop()
-                    k = len(pos)
-                    if k == 8:
-                        count += 1
-                        v = 0
-                        for c in pos:
-                            v = v * 8 + c
-                        checksum += v
-                        continue
-                    for c in range(8):
-                        if all(c != pc and abs(c - pc) != k - i
-                               for i, pc in enumerate(pos)):
-                            stack.append(pos + (c,))
-                outs.append((col0, count, checksum))
-            yield pd.DataFrame(
-                {"col0": [o[0] for o in outs],
-                 "n_solutions": [o[1] for o in outs],
-                 "checksum": [o[2] for o in outs]})
-
-    return (c0.repartition(8)
-            .mapInPandas(queens_kernel,
-                         "col0 long, n_solutions long, checksum long")
-            .orderBy("col0"))
-
-
-def q_josephus_k3(spark, sf_dir) -> DataFrame:
-    """Josephus survivor for k=3, circles n=1..60 — engine: the
-    O(n) RECURRENCE J(1)=0, J(n)=(J(n-1)+3) mod n in an Arrow
-    kernel. Oracle: the SIMULATION — the circle as a list in a
-    recursive CTE, removing every third person by slice
-    concatenation until one remains. Recurrence algebra vs acting
-    out the story."""
-    n = spark.range(1, 61).select(F.col("id").alias("n"))
-
-    def jos_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            out = []
-            for n0 in pdf["n"]:
-                j = 0
-                for m in range(2, int(n0) + 1):
-                    j = (j + 3) % m
-                out.append(j + 1)
-            yield pd.DataFrame({"n": pdf["n"], "survivor": out})
-
-    return (n.repartition(4)
-            .mapInPandas(jos_kernel, "n long, survivor long")
-            .orderBy("n"))
-
-
-def q_stern_fusc(spark, sf_dir) -> DataFrame:
-    """Stern's diatomic sequence fusc(n), n=1..200 — engine:
-    DIJKSTRA'S BIT LOOP — scan the bits of n from the low end
-    keeping the pair (a,b); set bits do b+=a, clear bits a+=b; the
-    answer is b (O(log n) per value). Oracle: the HYPERBINARY
-    characterization — fusc(n) counts representations of n-1 as a
-    sum of powers of two each used at most twice, enumerated
-    digit-by-digit in a recursive CTE. Bit dynamics vs a counting
-    theorem."""
-    n = spark.range(1, 201).select(F.col("id").alias("n"))
-
-    def fusc_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            out = []
-            for n0 in pdf["n"]:
-                v, a, b = int(n0), 1, 0
-                while v:
-                    if v & 1:
-                        b += a
-                    else:
-                        a += b
-                    v >>= 1
-                out.append(b)
-            yield pd.DataFrame({"n": pdf["n"], "fusc": out})
-
-    return (n.repartition(4)
-            .mapInPandas(fusc_kernel, "n long, fusc long")
-            .orderBy("n"))
-
-
-def q_triangular_square(spark, sf_dir) -> DataFrame:
-    """The first seven square-triangular numbers — engine: the
-    PELL-DERIVED RECURRENCE N_{k+1} = 34*N_k - N_{k-1} + 2 from
-    (0, 1), an exact kernel. Oracle: INTERSECTION BY JOIN — all
-    triangular numbers m(m+1)/2 and all squares j^2 below 1.7e9
-    equi-joined, ranked by value. Recurrence from the Pell
-    structure vs the definition as a set intersection."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def st_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            vals, a, b = [], 0, 1
-            for _ in range(7):
-                a, b = b, 34 * b - a + 2
-                vals.append(a)
-            yield pd.DataFrame({"k": list(range(1, 8)), "v": vals})
-
-    return (one.mapInPandas(st_kernel, "k long, v long")
-            .orderBy("k"))
-
-
-def q_partition_pentagonal(spark, sf_dir) -> DataFrame:
-    """Integer partition counts p(0..40) — engine: EULER'S
-    PENTAGONAL NUMBER THEOREM — p(n) = sum_k (-1)^(k-1)
-    [p(n-k(3k-1)/2) + p(n-k(3k+1)/2)], the sparse O(n*sqrt(n))
-    recurrence in an exact kernel. Oracle: the BOUNDED-PARTS coin
-    DP — one part size per recursive iteration, the whole
-    p(*, parts<=k) row carried as a list and convolved by nested
-    list lambdas. A generating-function identity vs textbook DP."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def pent_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            N = 40
-            p = [0] * (N + 1)
-            p[0] = 1
-            for n in range(1, N + 1):
-                total, k = 0, 1
-                while True:
-                    g1 = k * (3 * k - 1) // 2
-                    g2 = k * (3 * k + 1) // 2
-                    if g1 > n and g2 > n:
-                        break
-                    sign = 1 if k % 2 == 1 else -1
-                    if g1 <= n:
-                        total += sign * p[n - g1]
-                    if g2 <= n:
-                        total += sign * p[n - g2]
-                    k += 1
-                p[n] = total
-            yield pd.DataFrame({"n": list(range(N + 1)), "p": p})
-
-    return (one.mapInPandas(pent_kernel, "n long, p long")
-            .orderBy("n"))
-
-
-def q_frobenius_coin(spark, sf_dir) -> DataFrame:
-    """Frobenius number and non-representable count for 24 coprime
-    coin pairs (consecutive and (a, 2a-1) families) — engine:
-    SYLVESTER'S closed forms — g = ab - a - b and
-    N = (a-1)(b-1)/2, pure column algebra. Oracle: the CENSUS —
-    build the representable set {xa + yb} by a bounded grid join
-    and count/max the gaps directly. The 1882 theorem vs brute
-    enumeration."""
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 24)
-           .select("doc_id",
-                   (3 + _mst_hash(F.concat(F.lit("fr:"), d)) % 18)
-                   .alias("a")))
-    b = (F.when(F.col("doc_id") % 2 == 0, F.col("a") + 1)
-         .otherwise(2 * F.col("a") - 1))
-    raw = raw.withColumn("b", b)
-    return (raw.select(
-        "doc_id", "a", "b",
-        (F.col("a") * F.col("b") - F.col("a") - F.col("b"))
-        .alias("frob"),
-        (((F.col("a") - 1) * (F.col("b") - 1)) / 2).cast("long")
-        .alias("n_nonrep"))
-        .orderBy("doc_id"))
-
-
-def q_mod_inverse(spark, sf_dir) -> DataFrame:
-    """Modular inverses mod the prime 1000003 for 40 hash-derived
-    residues — engine: the EXTENDED EUCLIDEAN algorithm (Bezout
-    coefficients) in an exact kernel. Oracle: FERMAT'S LITTLE
-    THEOREM — a^(p-2) mod p by square-and-multiply, one bit per
-    recursive-CTE iteration. Bezout identity vs the group-order
-    argument."""
-    P = 1000003
-    d = F.col("doc_id").cast("string")
-    raw = (load(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") < 40)
-           .select("doc_id",
-                   (2 + _mst_hash(F.concat(F.lit("mi:"), d))
-                    % (P - 3)).alias("a")))
-
-    def ext_euclid_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            invs = []
-            for a in pdf["a"]:
-                old_r, r = int(a), P
-                old_s, s = 1, 0
-                while r:
-                    q = old_r // r
-                    old_r, r = r, old_r - q * r
-                    old_s, s = s, old_s - q * s
-                invs.append(old_s % P)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "a": pdf["a"], "inv": invs})
-
-    return (raw.repartition(4)
-            .mapInPandas(ext_euclid_kernel,
-                         "doc_id long, a long, inv long")
-            .orderBy("doc_id"))
-
-
-def q_look_and_say(spark, sf_dir) -> DataFrame:
-    """The look-and-say sequence from '1', steps 1..12 — engine:
-    imperative run-length description in an exact kernel. Oracle:
-    RELATIONAL RLE — inside each recursive-CTE iteration a
-    correlated subquery explodes the string, groups runs with the
-    gaps-and-islands rank trick, and string_aggs the description
-    back together. A five-line loop vs window-function algebra."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-
-    def las_kernel(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            s = "1"
-            steps, lens, strs = [], [], []
-            for st in range(1, 13):
-                out, i = [], 0
-                while i < len(s):
-                    j = i
-                    while j < len(s) and s[j] == s[i]:
-                        j += 1
-                    out.append(str(j - i) + s[i])
-                    i = j
-                s = "".join(out)
-                steps.append(st)
-                lens.append(len(s))
-                strs.append(s)
-            yield pd.DataFrame({"step": steps, "len": lens, "s": strs})
-
-    return (one.mapInPandas(las_kernel, "step long, len long, s string")
-            .orderBy("step"))
-
-
-def q_machin_pi(spark, sf_dir) -> DataFrame:
-    """Pi to 25 digits by MACHIN'S FORMULA pi = 16*atan(1/5) -
-    4*atan(1/239), all arithmetic on integers scaled by 10^30 with
-    identical floor-division truncation on both sides — engine:
-    Python bignums in a kernel. Oracle: DuckDB HUGEINT (128-bit)
-    — the power ladders grown in recursive CTEs. Two bignum
-    implementations, one Gregory series."""
-    one = spark.range(0, 1).select(F.col("id").alias("seed"))
-    SCALE = 10 ** 30
-
-    def machin_kernel(it):
-        import pandas as pd
-
-        def atan_inv(x):
-            total, k, p = 0, 0, x
-            while p <= SCALE:
-                term = SCALE // ((2 * k + 1) * p)
-                total += -term if k % 2 else term
-                k += 1
-                p *= x * x
-            return total
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pi = 16 * atan_inv(5) - 4 * atan_inv(239)
-            yield pd.DataFrame({"pi_str": [str(pi)],
-                                "d25": [str(pi)[:25]]})
-
-    return one.mapInPandas(machin_kernel, "pi_str string, d25 string")
 
 
 def _with_worker_imports(fn):
@@ -9016,7 +7188,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample": q_weighted_sample,
         "map_surface": q_map_surface,
         "sitemap_urls": q_sitemap_urls,
-        "ntt_convolution": q_ntt_convolution,
         "jaro_winkler": q_jaro_winkler,
         "luhn_check": q_luhn_check,
         "url_parse_surface": q_url_parse_surface,
@@ -9041,8 +7212,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "autocorr": q_autocorr,
         "shannon_entropy": q_shannon_entropy,
         "zipf_slope": q_zipf_slope,
-        "dtw_align": q_dtw_align,
-        "viterbi_decode": q_viterbi_decode,
         "permutation_test": q_permutation_test,
         "haversine_bins": q_haversine_bins,
         "sssp": q_sssp,
@@ -9051,72 +7220,20 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "matmul_relational": q_matmul_relational,
         "markov_transitions": q_markov_transitions,
         "label_propagation": q_label_propagation,
-        "bwt_transform": q_bwt_transform,
         "base58_encode": q_base58_encode,
-        "huffman_bits": q_huffman_bits,
-        "aho_corasick": q_aho_corasick,
         "rounding_modes": q_rounding_modes,
         "wilson_ci": q_wilson_ci,
         "schema_infer": q_schema_infer,
         "cohens_kappa": q_cohens_kappa,
         "eval_metrics": q_eval_metrics,
         "dispersion_index": q_dispersion_index,
-        "jenks_breaks": q_jenks_breaks,
         "bleu_lite": q_bleu_lite,
-        "rouge_l": q_rouge_l,
         "attribution": q_attribution,
         "hist_intersect": q_hist_intersect,
         "decay_counts": q_decay_counts,
-        "convex_hull": q_convex_hull,
-        "stable_matching": q_stable_matching,
-        "closest_pair": q_closest_pair,
         "segment_intersections": q_segment_intersections,
         "kl_divergence": q_kl_divergence,
         "haar_wavelet": q_haar_wavelet,
-        "catalan_numbers": q_catalan_numbers,
-        "gray_code": q_gray_code,
-        "euler_totient": q_euler_totient,
-        "mobius_function": q_mobius_function,
-        "simpson_integrate": q_simpson_integrate,
-        "farey_neighbors": q_farey_neighbors,
-        "stern_brocot": q_stern_brocot,
-        "stirling2": q_stirling2,
-        "derangements": q_derangements,
-        "lucas_binomial": q_lucas_binomial,
-        "wythoff_cold": q_wythoff_cold,
-        "r2_lattice": q_r2_lattice,
-        "sigma_classify": q_sigma_classify,
-        "pell_fundamental": q_pell_fundamental,
-        "miller_rabin": q_miller_rabin,
-        "kadane_max_subarray": q_kadane_max_subarray,
-        "water_trapping": q_water_trapping,
-        "string_period": q_string_period,
-        "gauss_circle": q_gauss_circle,
-        "assignment_min": q_assignment_min,
-        "perm_rank": q_perm_rank,
-        "game_of_life": q_game_of_life,
-        "bezier_eval": q_bezier_eval,
-        "collatz_steps": q_collatz_steps,
-        "happy_numbers": q_happy_numbers,
-        "ulam_spiral": q_ulam_spiral,
-        "zeller_dow": q_zeller_dow,
-        "wilson_primality": q_wilson_primality,
-        "faulhaber_sums": q_faulhaber_sums,
-        "sundaram_sieve": q_sundaram_sieve,
-        "reverse_add_palindrome": q_reverse_add_palindrome,
-        "fermat_factorization": q_fermat_factorization,
-        "binary_gcd": q_binary_gcd,
-        "ballot_paths": q_ballot_paths,
-        "dragon_turns": q_dragon_turns,
-        "nqueens": q_nqueens,
-        "josephus_k3": q_josephus_k3,
-        "stern_fusc": q_stern_fusc,
-        "triangular_square": q_triangular_square,
-        "partition_pentagonal": q_partition_pentagonal,
-        "frobenius_coin": q_frobenius_coin,
-        "mod_inverse": q_mod_inverse,
-        "look_and_say": q_look_and_say,
-        "machin_pi": q_machin_pi,
     }
 
 
@@ -11984,16 +10101,9 @@ def oracle_sql() -> dict[str, str]:
             "FROM p GROUP BY status, media_type, charset "
             "ORDER BY status, media_type, charset"
         ),
-        # Closest pair — O(n²) brute force (VALUES).
-        "closest_pair": _IO.closest_pair_oracle_sql(_oracle_sf_dir()),
         # Segment intersections — rational parametric solver (VALUES).
         "segment_intersections":
             _IO.seg_intersections_oracle_sql(_oracle_sf_dir()),
-        # Hull — independent Jarvis-march construction (VALUES).
-        "convex_hull": _IO.hull_oracle_sql(_oracle_sf_dir()),
-        # Matching — all-stable-matchings enumeration + proposer-
-        # optimal selection (VALUES); theorem-level independence.
-        "stable_matching": _IO.matching_oracle_sql(_oracle_sf_dir()),
         "attribution": (
             "WITH e AS (SELECT user_id, event_type AS ch, "
             "cast(floor(epoch(ts)) as bigint) * 10000000 + event_id "
@@ -12014,743 +10124,6 @@ def oracle_sql() -> dict[str, str]:
             "coalesce(last_touch, 0) AS last_touch, linear_micro "
             "FROM lin LEFT JOIN ft USING (ch) LEFT JOIN lt USING (ch) "
             "ORDER BY ch"
-        ),
-        # Catalan oracle: Segner's convolution recurrence
-        # C_{n+1} = Σ C_i·C_{n-i} as a list through a recursive CTE
-        # (engine: exact closed-form binomial fold C(2n,n)/(n+1)).
-        "catalan_numbers": (
-            "WITH RECURSIVE c(n, lst) AS ("
-            "SELECT 0, [CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT n + 1, lst || [CAST(list_sum("
-            "[lst[i] * lst[n + 2 - i] for i in range(1, n + 2)]) "
-            "AS BIGINT)] FROM c WHERE n < 25) "
-            "SELECT i - 1 AS n, lst[cast(i as int)] AS cat "
-            "FROM c, range(1, 27) r(i) WHERE c.n = 25 ORDER BY n"
-        ),
-        # Gray oracle: the reflection construction G(k+1) =
-        # G(k) ++ reverse(G(k))+2^k grown 10 levels (engine:
-        # bitwise closed form n XOR n>>1).
-        "gray_code": (
-            "WITH RECURSIVE g(k, lst) AS ("
-            "SELECT 1, [CAST(0 AS BIGINT), CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT k + 1, lst || "
-            "[lst[len(lst) - i + 1] + (CAST(1 AS BIGINT) << k) "
-            "for i in range(1, len(lst) + 1)] "
-            "FROM g WHERE k < 10) "
-            "SELECT i - 1 AS n, lst[cast(i as int)] AS gray "
-            "FROM g, range(1, 1025) r(i) WHERE k = 10 ORDER BY n"
-        ),
-        # Totient oracle: the definition — coprime census via
-        # DuckDB's builtin gcd over a 4M-pair join (engine:
-        # factorization product formula).
-        "euler_totient": (
-            "SELECT a.n AS n, count(*) AS phi "
-            "FROM range(1, 2001) a(n) JOIN range(1, 2001) b(k) "
-            "ON b.k <= a.n AND gcd(a.n, b.k) = 1 "
-            "GROUP BY a.n ORDER BY n"
-        ),
-        # Möbius oracle: the Dirichlet-inverse recurrence
-        # μ(n) = -Σ_{d|n, d<n} μ(d) stepped 1000 levels (engine:
-        # squarefree/ω factor view in column algebra).
-        "mobius_function": (
-            "WITH RECURSIVE m(n, lst) AS ("
-            "SELECT 1, [CAST(1 AS BIGINT)] "
-            "UNION ALL SELECT n + 1, lst || [CAST(-list_sum("
-            "[lst[d] for d in range(1, n + 1) if (n + 1) % d = 0]) "
-            "AS BIGINT)] FROM m WHERE n < 1000) "
-            "SELECT i AS n, lst[cast(i as int)] AS mu "
-            "FROM m, range(1, 1001) r(i) WHERE m.n = 1000 "
-            "ORDER BY n"
-        ),
-        # Simpson oracle: the antiderivative closed form — 3*integral
-        # of ax^3+bx^2+cx+d over [0,12] (engine: weighted node sum;
-        # Simpson is degree-3 exact so they agree to the integer).
-        "simpson_integrate": (
-            "WITH coef AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('sa:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS a, "
-            "cast('0x' || substr(sha256('sb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS b, "
-            "cast('0x' || substr(sha256('sc:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS c, "
-            "cast('0x' || substr(sha256('sd:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 - 10 "
-            "AS d FROM documents WHERE doc_id < 30) "
-            "SELECT doc_id, 15552 * a + 1728 * b + 216 * c + 36 * d "
-            "AS i3 FROM coef ORDER BY doc_id"
-        ),
-        # Farey oracle: the definition — reduced fractions sorted by
-        # value, successor via LEAD (engine: Cauchy's unimodular
-        # adjacency join, no sort anywhere).
-        "farey_neighbors": (
-            "WITH fr AS (SELECT a.i AS a, b.i AS b "
-            "FROM range(0, 31) a(i), range(1, 31) b(i) "
-            "WHERE a.i <= b.i AND gcd(a.i, b.i) = 1), "
-            "ord AS (SELECT a, b, lead(a) OVER w AS c, "
-            "lead(b) OVER w AS d FROM fr "
-            "WINDOW w AS (ORDER BY a * 1.0 / b)) "
-            "SELECT a, b, c, d FROM ord WHERE c IS NOT NULL "
-            "ORDER BY a, b"
-        ),
-        # Stern-Brocot oracle: mediant descent from (0/1, 1/0)
-        # replayed in a recursive CTE with exact integer cross-
-        # multiplication (engine: Euclid CF quotients -> R/L runs).
-        "stern_brocot": (
-            "WITH f AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('sp:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS p0, "
-            "1 + cast('0x' || substr(sha256('sq:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99 AS q0 "
-            "FROM documents WHERE doc_id < 40), "
-            "r0 AS (SELECT doc_id, p0 // gcd(p0, q0) AS p, "
-            "q0 // gcd(p0, q0) AS q FROM f), "
-            "w AS (WITH RECURSIVE d(doc_id, p, q, lp, lq, hp, hq, "
-            "path, done) AS ("
-            "SELECT doc_id, p, q, 0, 1, 1, 0, '', "
-            "(p = 1 AND q = 1) FROM r0 "
-            "UNION ALL SELECT doc_id, p, q, "
-            "CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lp+hp ELSE lp END,"
-            " CASE WHEN p*(lq+hq) > q*(lp+hp) THEN lq+hq ELSE lq "
-            "END, "
-            "CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lp+hp ELSE hp END,"
-            " CASE WHEN p*(lq+hq) < q*(lp+hp) THEN lq+hq ELSE hq "
-            "END, "
-            "path || CASE WHEN p*(lq+hq) > q*(lp+hp) THEN 'R' "
-            "WHEN p*(lq+hq) < q*(lp+hp) THEN 'L' ELSE '' END, "
-            "p*(lq+hq) = q*(lp+hp) FROM d WHERE NOT done) "
-            "SELECT doc_id, p, q, path FROM d WHERE done) "
-            "SELECT doc_id, p, q, path FROM w ORDER BY doc_id"
-        ),
-        # Stirling-2 oracle: the additive triangle recurrence
-        # S(n,k) = k*S(n-1,k) + S(n-1,k-1), rows carried as lists
-        # (engine: inclusion-exclusion surjection closed form).
-        "stirling2": (
-            "WITH RECURSIVE tri(n, row) AS ("
-            "SELECT 1, [cast(1 as bigint)] "
-            "UNION ALL SELECT n + 1, "
-            "list_transform(generate_series(1, n + 1), k -> "
-            "k * coalesce(row[k], 0) + "
-            "CASE WHEN k = 1 THEN 0 ELSE coalesce(row[k-1], 0) END) "
-            "FROM tri WHERE n < 12) "
-            "SELECT n, u.k, row[u.k] AS s FROM tri, "
-            "(SELECT unnest(generate_series(1, 12)) AS k) u "
-            "WHERE u.k <= n ORDER BY n, u.k"
-        ),
-        # Derangement oracle: D(n) = (n-1)(D(n-1)+D(n-2)) linear
-        # recurrence (engine: alternating-sum closed form).
-        "derangements": (
-            "WITH RECURSIVE dr(n, d, dprev) AS ("
-            "SELECT 1, cast(0 as bigint), cast(1 as bigint) "
-            "UNION ALL SELECT n + 1, n * (d + dprev), d "
-            "FROM dr WHERE n < 20) "
-            "SELECT * FROM (SELECT 0 AS n, cast(1 as bigint) AS d "
-            "UNION ALL SELECT n, d FROM dr) ORDER BY n"
-        ),
-        # Lucas oracle: Pascal's triangle mod 13 grown row by row
-        # as a list-state recursive CTE, then the hash-derived
-        # (n,k) pairs joined against their row (engine: Lucas'
-        # digit-product theorem over base-13 digits).
-        "lucas_binomial": (
-            "WITH RECURSIVE tri(n, row) AS ("
-            "SELECT 0, [cast(1 as bigint)] "
-            "UNION ALL SELECT n + 1, "
-            "list_transform(generate_series(1, n + 2), k -> "
-            "(coalesce(row[k], 0) + CASE WHEN k = 1 THEN 0 "
-            "ELSE coalesce(row[k-1], 0) END) % 13) "
-            "FROM tri WHERE n < 499), "
-            "pairs AS (SELECT doc_id, "
-            "cast('0x' || substr(sha256('lb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 500 AS n "
-            "FROM documents WHERE doc_id < 40), "
-            "pk AS (SELECT doc_id, n, "
-            "cast('0x' || substr(sha256('lk:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % (n + 1) "
-            "AS k FROM pairs) "
-            "SELECT pk.doc_id, pk.n, pk.k, "
-            "tri.row[cast(pk.k as int) + 1] AS c_mod "
-            "FROM pk JOIN tri ON tri.n = pk.n ORDER BY pk.doc_id"
-        ),
-        # Wythoff oracle: the greedy mex construction — a_n is the
-        # least positive integer not used by any earlier pair,
-        # b_n = a_n + n, used-set carried as a list (engine: Beatty
-        # closed form floor(n*phi) via exact integer sqrt).
-        "wythoff_cold": (
-            "WITH RECURSIVE w(n, a, b, used) AS ("
-            "SELECT 1, cast(1 as bigint), cast(2 as bigint), "
-            "[cast(1 as bigint), cast(2 as bigint)] "
-            "UNION ALL SELECT n + 1, na, na + n + 1, "
-            "list_append(list_append(used, na), na + n + 1) FROM ("
-            "SELECT n, used, (SELECT min(i) FROM "
-            "unnest(generate_series(1, 4 * n + 4)) AS t(i) "
-            "WHERE NOT list_contains(used, i)) AS na "
-            "FROM w WHERE n < 60) "
-            ") SELECT n, a, b FROM w ORDER BY n"
-        ),
-        # r2 oracle: the definition — signed lattice points on the
-        # circle of radius sqrt(n) counted by brute enumeration
-        # (engine: Jacobi's 4*(d1-d3) divisor-class formula).
-        "r2_lattice": (
-            "WITH grid AS (SELECT a.x * a.x + b.y * b.y AS n, "
-            "count(*) AS c FROM range(-20, 21) a(x), "
-            "range(-20, 21) b(y) "
-            "WHERE a.x * a.x + b.y * b.y BETWEEN 1 AND 400 "
-            "GROUP BY 1) "
-            "SELECT t.i AS n, coalesce(c, 0) AS r2 "
-            "FROM range(1, 401) t(i) LEFT JOIN grid ON grid.n = t.i "
-            "ORDER BY n"
-        ),
-        # sigma oracle: the multiplicative closed form — primes by
-        # non-existence of a smaller divisor, exponents by maximal
-        # p^k | n, sigma = product of geometric sums (engine:
-        # explicit divisor-census join).
-        "sigma_classify": (
-            "WITH pr AS (SELECT i AS p FROM range(2, 601) t(i) "
-            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 25) d(j) "
-            "WHERE j * j <= i AND i % j = 0)), "
-            "pw AS (SELECT p, k.e AS e, "
-            "cast(power(p, k.e) as bigint) AS pk "
-            "FROM pr, range(1, 10) k(e) "
-            "WHERE power(p, k.e) <= 600.5), "
-            "pe AS (SELECT n.i AS n, p, max(e) AS e "
-            "FROM range(2, 601) n(i), pw "
-            "WHERE n.i % pk = 0 GROUP BY 1, 2), "
-            "sg AS (SELECT n, cast(product("
-            "(power(p, e + 1) - 1) / (p - 1)) as bigint) AS sigma "
-            "FROM pe GROUP BY n), "
-            "allv AS (SELECT 1 AS n, cast(1 as bigint) AS sigma "
-            "UNION ALL SELECT n, sigma FROM sg) "
-            "SELECT n, sigma, CASE WHEN sigma = 2 * n THEN 'perfect' "
-            "WHEN sigma > 2 * n THEN 'abundant' ELSE 'deficient' END "
-            "AS cls FROM allv ORDER BY n"
-        ),
-        # Pell oracle: exhaustive search for the least x with
-        # (x^2-1)/n a perfect square — IEEE sqrt is correctly
-        # rounded so floor(sqrt(v)) of an exact square v < 2^53 is
-        # exact; the s and s+1 probes make it airtight (engine:
-        # continued-fraction convergents of sqrt(n)).
-        "pell_fundamental": (
-            "WITH ns AS (SELECT i AS n FROM range(2, 32) t(i) "
-            "WHERE cast(floor(sqrt(i)) as bigint) * "
-            "cast(floor(sqrt(i)) as bigint) <> i), "
-            "cand AS (SELECT n, x, (x * x - 1) // n AS v "
-            "FROM ns, range(2, 10002) r(x) "
-            "WHERE (x * x - 1) % n = 0), "
-            "sol AS (SELECT n, x, v, "
-            "cast(floor(sqrt(v)) as bigint) AS s FROM cand "
-            "WHERE cast(floor(sqrt(v)) as bigint) * "
-            "cast(floor(sqrt(v)) as bigint) = v OR "
-            "(cast(floor(sqrt(v)) as bigint) + 1) * "
-            "(cast(floor(sqrt(v)) as bigint) + 1) = v), "
-            "best AS (SELECT n, x, "
-            "CASE WHEN s * s = v THEN s ELSE s + 1 END AS y, "
-            "row_number() OVER (PARTITION BY n ORDER BY x) AS rn "
-            "FROM sol) "
-            "SELECT n, x, y FROM best WHERE rn = 1 ORDER BY n"
-        ),
-        # Miller-Rabin oracle: trial division — a composite below
-        # 10^6 has a divisor in 2..1000, so primality is the
-        # non-existence of one (engine: strong-pseudoprime test
-        # with the deterministic witness set {2,3,5,7}).
-        "miller_rabin": (
-            "WITH t AS (SELECT doc_id, 5 + 2 * ("
-            "cast('0x' || substr(sha256('mr:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 500000) "
-            "AS n FROM documents WHERE doc_id < 60) "
-            "SELECT doc_id, n, CASE WHEN NOT EXISTS ("
-            "SELECT 1 FROM range(2, 1001) d(i) "
-            "WHERE i < n AND n % i = 0) THEN 1 ELSE 0 END "
-            "AS is_prime FROM t ORDER BY doc_id"
-        ),
-        # Kadane oracle: the definition — enumerate every (i,j)
-        # span, sum its elements with a range join, take the max
-        # (engine: prefix-sum / running-min window identity).
-        "kadane_max_subarray": (
-            "WITH t AS (" + _hash_series("ka", 16, 64, 41, 20) + "), "
-            "spans AS (SELECT a.g, a.pos AS i, b.pos AS j "
-            "FROM t a JOIN t b ON a.g = b.g AND a.pos <= b.pos), "
-            "sums AS (SELECT s.g, s.i, s.j, sum(e.v) AS sv "
-            "FROM spans s JOIN t e ON e.g = s.g "
-            "AND e.pos BETWEEN s.i AND s.j GROUP BY 1, 2, 3) "
-            "SELECT g, max(sv) AS best FROM sums GROUP BY g "
-            "ORDER BY g"
-        ),
-        # Water-trapping oracle: horizontal slabs — per level l,
-        # cells below l strictly between the first and last columns
-        # reaching l (engine: per-cell min of two running maxima).
-        "water_trapping": (
-            "WITH t AS (SELECT g, pos, v AS h FROM ("
-            + _hash_series("wt", 16, 64, 16, 0) + ")), "
-            "lv AS (SELECT unnest(generate_series(1, 15)) AS l), "
-            "walls AS (SELECT g, l, min(pos) AS lo, max(pos) AS hi "
-            "FROM t, lv WHERE h >= l GROUP BY 1, 2), "
-            "slab AS (SELECT w.g, w.l, count(*) AS c FROM walls w "
-            "JOIN t ON t.g = w.g AND t.pos > w.lo AND t.pos < w.hi "
-            "AND t.h < w.l GROUP BY 1, 2), "
-            "tot AS (SELECT g, sum(c) AS water FROM slab GROUP BY g) "
-            "SELECT gg.i AS g, coalesce(water, 0) AS water "
-            "FROM range(0, 16) gg(i) LEFT JOIN tot ON tot.g = gg.i "
-            "ORDER BY g"
-        ),
-        # Period oracle: the border characterization — least p with
-        # substr(s, p+1) = substr(s, 1, n-p) (engine: KMP failure
-        # chain, period = n - fail[n]).
-        "string_period": (
-            "WITH raw AS (SELECT doc_id, "
-            "repeat(b, 6) || substr(b, 1, cast(doc_id % 4 as int)) "
-            "AS s FROM (SELECT doc_id, lower(substr("
-            "regexp_replace(text, '[^a-zA-Z]', '', 'g'), 1, 4)) AS b "
-            "FROM documents WHERE doc_id < 40)), "
-            "t AS (SELECT doc_id, s, length(s) AS n FROM raw "
-            "WHERE length(s) >= 8), "
-            "cand AS (SELECT doc_id, s, p.i AS p FROM t, "
-            "range(1, 29) p(i) WHERE p.i <= n "
-            "AND substr(s, p.i + 1) = substr(s, 1, n - p.i)) "
-            "SELECT doc_id, s, cast(min(p) as int) AS period "
-            "FROM cand GROUP BY doc_id, s ORDER BY doc_id"
-        ),
-        # Gauss-circle oracle: the 2-D census — count the (x,y)
-        # grid inside the disc directly (engine: 1-D isqrt
-        # reduction sum_x 2*isqrt(r^2-x^2)+1).
-        "gauss_circle": (
-            "SELECT r.i AS r, count(*) AS npoints "
-            "FROM range(1, 61) r(i), range(-60, 61) x(a), "
-            "range(-60, 61) y(b) "
-            "WHERE x.a * x.a + y.b * y.b <= r.i * r.i "
-            "GROUP BY r.i ORDER BY r"
-        ),
-        # Assignment oracle: brute force — all 720 assignment
-        # prefixes per instance enumerated in a recursive CTE, min
-        # at depth 6 (engine: subset DP by iterative joins).
-        "assignment_min": (
-            "WITH RECURSIVE cost AS (SELECT g.i AS g, w.a AS wk, "
-            "t.b AS tk, cast('0x' || substr(sha256('as:' || "
-            "cast(g.i as varchar) || ':' || cast(w.a as varchar) || "
-            "':' || cast(t.b as varchar)), 1, 8) as bigint) % 50 "
-            "AS c FROM range(0, 8) g(i), range(0, 6) w(a), "
-            "range(0, 6) t(b)), "
-            "rec(g, k, mask, total) AS ("
-            "SELECT i, 0, 0, cast(0 as bigint) FROM range(0, 8) t(i) "
-            "UNION ALL SELECT r.g, r.k + 1, "
-            "r.mask + cast(power(2, c.tk) as bigint), r.total + c.c "
-            "FROM rec r JOIN cost c ON c.g = r.g AND c.wk = r.k "
-            "AND (r.mask & cast(power(2, c.tk) as bigint)) = 0 "
-            "WHERE r.k < 6) "
-            "SELECT g, min(total) AS best FROM rec WHERE k = 6 "
-            "GROUP BY g ORDER BY g"
-        ),
-        # Permutation-rank oracle: generate all of S_7 as strings in
-        # a recursive CTE, lexicographic rank = row_number - 1, join
-        # by the permutation string (engine: Lehmer-code inversion
-        # census times factorials).
-        "perm_rank": (
-            "WITH RECURSIVE perms(p) AS (SELECT '' "
-            "UNION ALL SELECT p || d.c FROM perms, "
-            "(SELECT cast(i as varchar) AS c FROM range(0, 7) t(i)) d "
-            "WHERE length(p) < 7 AND strpos(p, d.c) = 0), "
-            "ranked AS (SELECT p, row_number() OVER (ORDER BY p) - 1 "
-            "AS rank FROM perms WHERE length(p) = 7), "
-            "keyed AS (SELECT g.i AS doc_id, e.j AS elem, "
-            "cast('0x' || substr(sha256('pr:' || "
-            "cast(g.i as varchar) || ':' || cast(e.j as varchar)), "
-            "1, 8) as bigint) AS key "
-            "FROM range(0, 30) g(i), range(0, 7) e(j)), "
-            "built AS (SELECT doc_id, string_agg("
-            "cast(elem as varchar), '' ORDER BY key, elem) AS perm "
-            "FROM keyed GROUP BY doc_id) "
-            "SELECT doc_id, perm, rank FROM built "
-            "JOIN ranked ON ranked.p = built.perm ORDER BY doc_id"
-        ),
-        # Life oracle: the weighted-offset relational step — expand
-        # each live cell over 9 toroidal offsets with weight 10 for
-        # self and 1 for neighbors; alive next iff the weighted sum
-        # is 3, 12 or 13 (B3/S23 in one aggregate). Engine: numpy
-        # roll stencil in an Arrow kernel.
-        "game_of_life": (
-            "WITH RECURSIVE cells(gen, g, x, y) AS ("
-            "SELECT 0, g.i, x.a, y.b FROM range(0, 12) g(i), "
-            "range(0, 16) x(a), range(0, 16) y(b) "
-            "WHERE cast('0x' || substr(sha256('gl:' || "
-            "cast(g.i as varchar) || ':' || cast(x.a as varchar) || "
-            "':' || cast(y.b as varchar)), 1, 8) as bigint) % 5 = 0 "
-            "UNION ALL SELECT gen + 1, g, nx, ny FROM ("
-            "SELECT gen, g, (x + dx.v + 16) % 16 AS nx, "
-            "(y + dy.v + 16) % 16 AS ny, "
-            "CASE WHEN dx.v = 0 AND dy.v = 0 THEN 10 ELSE 1 END "
-            "AS wt FROM cells, (VALUES (-1), (0), (1)) dx(v), "
-            "(VALUES (-1), (0), (1)) dy(v) WHERE gen < 4) "
-            "GROUP BY gen, g, nx, ny "
-            "HAVING sum(wt) IN (3, 12, 13)) "
-            "SELECT g, count(*) AS pop, "
-            "sum(x * 31 + y) AS checksum FROM cells WHERE gen = 4 "
-            "GROUP BY g ORDER BY g"
-        ),
-        # Bezier oracle: the Bernstein closed form 512*B(k/8) =
-        # sum_i C(3,i) k^i (8-k)^(3-i) P_i (engine: de Casteljau's
-        # scaled lerp ladder).
-        "bezier_eval": (
-            "WITH pts AS (SELECT g.i AS g, "
-            + ", ".join(
-                "cast('0x' || substr(sha256('bz" + str(i) + ":' || "
-                "cast(g.i as varchar)), 1, 8) as bigint) % 101 "
-                "AS p" + str(i) for i in range(4)) +
-            " FROM range(0, 20) g(i)) "
-            "SELECT g, k.v AS k, "
-            "(8-k.v)*(8-k.v)*(8-k.v) * p0 "
-            "+ 3 * k.v * (8-k.v)*(8-k.v) * p1 "
-            "+ 3 * k.v * k.v * (8-k.v) * p2 "
-            "+ k.v * k.v * k.v * p3 AS v512 "
-            "FROM pts, range(0, 9) k(v) ORDER BY g, k"
-        ),
-        # Collatz oracle: the orbit replayed in a recursive CTE
-        # (engine: imperative hailstone loop in an Arrow kernel).
-        "collatz_steps": (
-            "WITH RECURSIVE st AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('cz:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 99998 "
-            "AS n0 FROM documents WHERE doc_id < 50), "
-            "orb(doc_id, n0, n, s, pk) AS ("
-            "SELECT doc_id, n0, n0, 0, n0 FROM st "
-            "UNION ALL SELECT doc_id, n0, "
-            "CASE WHEN n % 2 = 0 THEN n // 2 ELSE 3 * n + 1 END, "
-            "s + 1, greatest(pk, CASE WHEN n % 2 = 0 THEN n // 2 "
-            "ELSE 3 * n + 1 END) FROM orb WHERE n <> 1) "
-            "SELECT doc_id, n0, cast(s as int) AS steps, pk AS peak "
-            "FROM orb WHERE n = 1 ORDER BY doc_id"
-        ),
-        # Happy oracle: the reaches-4 theorem — iterate the digit-
-        # square-sum map until 1 or 4 (engine: visited-set cycle
-        # detection with no theorem assumed).
-        "happy_numbers": (
-            "WITH RECURSIVE orb(n, v) AS ("
-            "SELECT i, i FROM range(1, 501) t(i) "
-            "UNION ALL SELECT n, "
-            "(v // 100 % 10) * (v // 100 % 10) + "
-            "(v // 10 % 10) * (v // 10 % 10) + "
-            "(v % 10) * (v % 10) FROM orb "
-            "WHERE v NOT IN (1, 4) AND v < 1000) "
-            "SELECT n, CASE WHEN v = 1 THEN 1 ELSE 0 END AS happy "
-            "FROM orb WHERE v IN (1, 4) ORDER BY n"
-        ),
-        # Ulam oracle: the generative walk — step n=1..400 turning
-        # counter-clockwise with run lengths 1,1,2,2,3,3,...
-        # (engine: ring closed form by CASE algebra).
-        "ulam_spiral": (
-            "WITH RECURSIVE w(n, x, y, dx, dy, run, rem, legs) AS ("
-            "SELECT 1, 0, 0, 1, 0, 1, 1, 0 "
-            "UNION ALL SELECT n + 1, x + dx, y + dy, "
-            "CASE WHEN rem = 1 THEN -dy ELSE dx END, "
-            "CASE WHEN rem = 1 THEN dx ELSE dy END, "
-            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 ELSE run "
-            "END, "
-            "CASE WHEN rem = 1 THEN (legs + 1) // 2 + 1 "
-            "ELSE rem - 1 END, "
-            "CASE WHEN rem = 1 THEN legs + 1 ELSE legs END "
-            "FROM w WHERE n < 400) "
-            "SELECT n, x, y FROM w ORDER BY n"
-        ),
-        # Zeller oracle: the civil-calendar library — DuckDB's
-        # isodow over make_date (engine: Zeller's congruence, no
-        # date type anywhere).
-        "zeller_dow": (
-            "WITH t AS (SELECT doc_id, "
-            "1900 + cast('0x' || substr(sha256('zy:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 200 AS y, "
-            "1 + cast('0x' || substr(sha256('zm:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS m, "
-            "1 + cast('0x' || substr(sha256('zd:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 28 AS dd "
-            "FROM documents WHERE doc_id < 80) "
-            "SELECT doc_id, y, m, dd, cast(isodow(make_date("
-            "cast(y as int), cast(m as int), cast(dd as int))) "
-            "as int) AS isodow FROM t ORDER BY doc_id"
-        ),
-        # Wilson oracle: trial division (engine: the (n-1)! mod n
-        # congruence folded JVM-side).
-        "wilson_primality": (
-            "SELECT i AS n, CASE WHEN NOT EXISTS ("
-            "SELECT 1 FROM range(2, 17) d(j) "
-            "WHERE j * j <= i AND i % j = 0) THEN 1 ELSE 0 END "
-            "AS is_prime FROM range(2, 251) t(i) ORDER BY n"
-        ),
-        # Faulhaber oracle: the six classical closed-form
-        # polynomials, exact integer division (engine: explode +
-        # sum of the definition).
-        "faulhaber_sums": (
-            "WITH t AS (SELECT doc_id, 10 + "
-            "cast('0x' || substr(sha256('fh:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 291 AS m "
-            "FROM documents WHERE doc_id < 20), "
-            "g AS (SELECT doc_id, m, k.v AS k FROM t, "
-            "range(1, 7) k(v)) "
-            "SELECT doc_id, m, k, CASE k "
-            "WHEN 1 THEN m * (m + 1) // 2 "
-            "WHEN 2 THEN m * (m + 1) * (2 * m + 1) // 6 "
-            "WHEN 3 THEN (m * (m + 1) // 2) * (m * (m + 1) // 2) "
-            "WHEN 4 THEN m * (m + 1) * (2 * m + 1) * "
-            "(3 * m * m + 3 * m - 1) // 30 "
-            "WHEN 5 THEN m * m * (m + 1) * (m + 1) * "
-            "(2 * m * m + 2 * m - 1) // 12 "
-            "WHEN 6 THEN m * (m + 1) * (2 * m + 1) * "
-            "(3 * m * m * m * m + 6 * m * m * m - 3 * m + 1) // 42 "
-            "END AS s FROM g ORDER BY doc_id, k"
-        ),
-        # Sundaram oracle: trial division up to sqrt (engine:
-        # Sundaram's i+j+2ij exclusion anti-join, no divisibility).
-        "sundaram_sieve": (
-            "SELECT i AS p FROM range(2, 2002) t(i) "
-            "WHERE NOT EXISTS (SELECT 1 FROM range(2, 46) d(j) "
-            "WHERE j * j <= i AND i % j = 0) ORDER BY p"
-        ),
-        # Reverse-and-add oracle: the orbit through the decimal
-        # STRING representation — reverse() + cast in a recursive
-        # CTE (engine: integer slicing in an Arrow kernel).
-        "reverse_add_palindrome": (
-            "WITH RECURSIVE orb(n, v, s) AS ("
-            "SELECT i, i, 0 FROM range(1, 181) t(i) "
-            "UNION ALL SELECT n, "
-            "v + cast(reverse(cast(v as varchar)) as bigint), s + 1 "
-            "FROM orb WHERE cast(v as varchar) <> "
-            "reverse(cast(v as varchar))) "
-            "SELECT n, cast(s as int) AS steps, v AS pal FROM orb "
-            "WHERE cast(v as varchar) = reverse(cast(v as varchar)) "
-            "ORDER BY n"
-        ),
-        # Fermat oracle: trial division — least divisor and its
-        # cofactor (engine: difference-of-squares scan from
-        # ceil(sqrt(n))).
-        "fermat_factorization": (
-            "WITH t AS (SELECT doc_id, "
-            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
-            "[cast(cast('0x' || substr(sha256('fp:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-            "as int) + 1] * "
-            "([" + ", ".join(str(v) for v in _FF_PRIMES) + "])"
-            "[cast(cast('0x' || substr(sha256('fq:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 21 "
-            "as int) + 1] AS n "
-            "FROM documents WHERE doc_id < 30), "
-            "f AS (SELECT doc_id, n, (SELECT min(i) FROM "
-            "range(2, 200) d(i) WHERE n % i = 0) AS p FROM t) "
-            "SELECT doc_id, n, p, n // p AS q FROM f "
-            "ORDER BY doc_id"
-        ),
-        # Stein oracle: DuckDB's gcd() builtin — an independent
-        # C++ Euclid (engine: binary shifts-and-subtract).
-        "binary_gcd": (
-            "WITH t AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('ga:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
-            "AS a, "
-            "1 + cast('0x' || substr(sha256('gb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 999999999 "
-            "AS b FROM documents WHERE doc_id < 60) "
-            "SELECT doc_id, a, b, gcd(a, b) AS g FROM t "
-            "ORDER BY doc_id"
-        ),
-        # Ballot oracle: explicit DP — one lattice step per
-        # recursive iteration, states kept strictly above the
-        # diagonal, counts merged by the in-term aggregate
-        # (engine: the (a-b)/(a+b)*C(a+b,a) reflection identity).
-        "ballot_paths": (
-            "WITH RECURSIVE inst AS (SELECT doc_id, "
-            "1 + cast('0x' || substr(sha256('ba:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS b0, "
-            "cast('0x' || substr(sha256('bb:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 12 AS a_x "
-            "FROM documents WHERE doc_id < 20), "
-            "inst2 AS (SELECT doc_id, b0, b0 + 1 + a_x AS a0 "
-            "FROM inst), "
-            "walk(doc_id, x, y, c) AS ("
-            "SELECT doc_id, 1, 0, cast(1 as bigint) FROM inst2 "
-            "UNION ALL SELECT doc_id, nx, ny, sum(c) FROM ("
-            "SELECT w.doc_id, w.x + s.dx AS nx, w.y + s.dy AS ny, "
-            "w.c FROM walk w, (VALUES (1, 0), (0, 1)) s(dx, dy), "
-            "inst2 i WHERE i.doc_id = w.doc_id "
-            "AND w.x + s.dx <= i.a0 AND w.y + s.dy <= i.b0 "
-            "AND w.x + s.dx > w.y + s.dy "
-            "AND NOT (w.x = i.a0 AND w.y = i.b0)) "
-            "GROUP BY doc_id, nx, ny) "
-            "SELECT w.doc_id, i.a0 AS a, i.b0 AS b, w.c AS npaths "
-            "FROM walk w JOIN inst2 i ON i.doc_id = w.doc_id "
-            "WHERE w.x = i.a0 AND w.y = i.b0 ORDER BY w.doc_id"
-        ),
-        # Dragon oracle: the paper-folding L-system — s' = s || 'L'
-        # || reverse(swap(s)) grown to 1023 turns, read position n
-        # (engine: the lowest-set-bit closed form).
-        "dragon_turns": (
-            "WITH RECURSIVE fold(k, s) AS (SELECT 1, 'L' "
-            "UNION ALL SELECT k + 1, s || 'L' || "
-            "reverse(translate(s, 'LR', 'RL')) "
-            "FROM fold WHERE k < 10) "
-            "SELECT n.i AS n, substr(s, cast(n.i as int), 1) AS turn "
-            "FROM (SELECT s FROM fold WHERE k = 10), "
-            "range(1, 513) n(i) ORDER BY n"
-        ),
-        # N-queens oracle: relational generate-and-test — placement
-        # strings extended one row per recursive iteration, conflict
-        # = correlated EXISTS over earlier rows; checksum = base-8
-        # value of each solution (engine: prefix-split imperative
-        # backtracking).
-        "nqueens": (
-            "WITH RECURSIVE q(p) AS ("
-            "SELECT cast(i as varchar) FROM range(0, 8) t(i) "
-            "UNION ALL SELECT p || cast(c.i as varchar) "
-            "FROM q, range(0, 8) c(i) WHERE length(p) < 8 "
-            "AND NOT EXISTS (SELECT 1 FROM range(1, 9) r(j) "
-            "WHERE j <= length(p) AND ("
-            "cast(substr(p, cast(j as int), 1) as bigint) = c.i OR "
-            "abs(cast(substr(p, cast(j as int), 1) as bigint) - c.i) "
-            "= length(p) + 1 - j))), "
-            "sols AS (SELECT p, (SELECT sum("
-            "cast(substr(p, cast(j as int), 1) as bigint) * "
-            "cast(power(8, 8 - j) as bigint)) "
-            "FROM range(1, 9) r(j)) AS v "
-            "FROM q WHERE length(p) = 8) "
-            "SELECT cast(substr(p, 1, 1) as bigint) AS col0, "
-            "count(*) AS n_solutions, sum(v) AS checksum "
-            "FROM sols GROUP BY 1 ORDER BY col0"
-        ),
-        # Josephus k=3 oracle: act out the story — the circle as a
-        # list, remove every third by slice concatenation (engine:
-        # the O(n) recurrence).
-        "josephus_k3": (
-            "WITH RECURSIVE sim(n0, lst, s) AS ("
-            "SELECT i, list_transform(generate_series(1, i), "
-            "x -> cast(x as bigint)), 0 FROM range(1, 61) t(i) "
-            "UNION ALL SELECT n0, "
-            "lst[1:idx-1] || lst[idx+1:len(lst)], "
-            "(idx - 1) % (len(lst) - 1) FROM ("
-            "SELECT n0, lst, ((s + 2) % len(lst)) + 1 AS idx "
-            "FROM sim WHERE len(lst) > 1)) "
-            "SELECT n0 AS n, lst[1] AS survivor FROM sim "
-            "WHERE len(lst) = 1 ORDER BY n"
-        ),
-        # Fusc oracle: the hyperbinary theorem — fusc(n) counts
-        # ways to write n-1 as a sum of powers of two each used at
-        # most twice, enumerated digit by digit (engine: Dijkstra's
-        # (a,b) bit loop).
-        "stern_fusc": (
-            "WITH RECURSIVE h(n0, rem, p) AS ("
-            "SELECT i, i - 1, 1 FROM range(1, 201) t(i) "
-            "UNION ALL SELECT n0, rem - d.v * p, p * 2 "
-            "FROM h, (VALUES (0), (1), (2)) d(v) "
-            "WHERE p <= 256 AND rem - d.v * p >= 0) "
-            "SELECT n0 AS n, count(*) AS fusc FROM h "
-            "WHERE p = 512 AND rem = 0 GROUP BY n0 ORDER BY n"
-        ),
-        # Square-triangular oracle: the definition — intersect the
-        # triangular and square sequences by an equi-join, rank by
-        # value (engine: the 34x recurrence from the Pell
-        # structure).
-        "triangular_square": (
-            "WITH tri AS (SELECT m.i * (m.i + 1) // 2 AS v "
-            "FROM range(1, 57200) m(i)), "
-            "sq AS (SELECT j.i * j.i AS v FROM range(1, 40500) j(i)), "
-            "hit AS (SELECT tri.v AS v FROM tri "
-            "JOIN sq ON tri.v = sq.v) "
-            "SELECT row_number() OVER (ORDER BY v) AS k, v "
-            "FROM hit ORDER BY k"
-        ),
-        # Partition oracle: bounded-parts coin DP — one part size
-        # per recursive iteration, the full row carried as a list
-        # and convolved by nested lambdas (engine: Euler's
-        # pentagonal recurrence).
-        "partition_pentagonal": (
-            "WITH RECURSIVE dp(k, row) AS ("
-            "SELECT 0, list_transform(generate_series(0, 40), "
-            "n -> CASE WHEN n = 0 THEN cast(1 as bigint) "
-            "ELSE cast(0 as bigint) END) "
-            "UNION ALL SELECT k + 1, "
-            "list_transform(generate_series(0, 40), n -> "
-            "list_sum(list_transform(generate_series(0, "
-            "n // (k + 1)), j -> row[n - j * (k + 1) + 1]))) "
-            "FROM dp WHERE k < 40) "
-            "SELECT n.i AS n, row[cast(n.i as int) + 1] AS p "
-            "FROM dp, range(0, 41) n(i) WHERE k = 40 ORDER BY n"
-        ),
-        # Frobenius oracle: the census — the representable set
-        # {xa+yb} built by a bounded grid, gaps counted and maxed
-        # directly (engine: Sylvester's ab-a-b and (a-1)(b-1)/2).
-        "frobenius_coin": (
-            "WITH pairs AS (SELECT doc_id, a, CASE WHEN doc_id % 2 "
-            "= 0 THEN a + 1 ELSE 2 * a - 1 END AS b FROM ("
-            "SELECT doc_id, 3 + cast('0x' || substr(sha256('fr:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 18 AS a "
-            "FROM documents WHERE doc_id < 24)), "
-            "rep AS (SELECT DISTINCT doc_id, x.i * a + y.j * b AS v "
-            "FROM pairs, range(0, 41) x(i), range(0, 22) y(j) "
-            "WHERE x.i * a + y.j * b <= a * b), "
-            "gaps AS (SELECT p.doc_id, c.i AS v FROM pairs p, "
-            "range(1, 781) c(i) WHERE c.i < a * b "
-            "AND NOT EXISTS (SELECT 1 FROM rep r "
-            "WHERE r.doc_id = p.doc_id AND r.v = c.i)) "
-            "SELECT p.doc_id, p.a, p.b, max(g.v) AS frob, "
-            "count(*) AS n_nonrep FROM pairs p "
-            "JOIN gaps g ON g.doc_id = p.doc_id "
-            "GROUP BY 1, 2, 3 ORDER BY p.doc_id"
-        ),
-        # Inverse oracle: Fermat's little theorem — a^(p-2) mod p
-        # by square-and-multiply, one bit per iteration (engine:
-        # extended Euclid / Bezout).
-        "mod_inverse": (
-            "WITH RECURSIVE t AS (SELECT doc_id, 2 + "
-            "cast('0x' || substr(sha256('mi:' || "
-            "cast(doc_id as varchar)), 1, 8) as bigint) % 1000000 "
-            "AS a FROM documents WHERE doc_id < 40), "
-            "pw(doc_id, base, e, acc) AS ("
-            "SELECT doc_id, a, 1000001, cast(1 as bigint) FROM t "
-            "UNION ALL SELECT doc_id, base * base % 1000003, "
-            "e // 2, CASE WHEN e % 2 = 1 "
-            "THEN acc * base % 1000003 ELSE acc END "
-            "FROM pw WHERE e > 0) "
-            "SELECT pw.doc_id, t.a, pw.acc AS inv FROM pw "
-            "JOIN t ON t.doc_id = pw.doc_id "
-            "WHERE pw.e = 0 ORDER BY pw.doc_id"
-        ),
-        # Look-and-say oracle: relational RLE — explode the string,
-        # gaps-and-islands run grouping, string_agg back, one step
-        # per recursive iteration (engine: imperative RLE kernel).
-        "look_and_say": (
-            "WITH RECURSIVE las(step, s) AS (SELECT 0, '1' "
-            "UNION ALL SELECT step + 1, ("
-            "SELECT string_agg(cast("
-            "(SELECT coalesce(min(u.j), length(s) + 1) "
-            "FROM range(1, 200) u(j) WHERE u.j <= length(s) "
-            "AND u.j > t.i AND substr(s, cast(u.j as int), 1) <> "
-            "substr(s, cast(u.j as int) - 1, 1)) - t.i as varchar) "
-            "|| substr(s, cast(t.i as int), 1), '' ORDER BY t.i) "
-            "FROM range(1, 200) t(i) WHERE t.i <= length(s) "
-            "AND (t.i = 1 OR substr(s, cast(t.i as int), 1) <> "
-            "substr(s, cast(t.i as int) - 1, 1))) "
-            "FROM las WHERE step < 12) "
-            "SELECT step, length(s) AS len, s FROM las "
-            "WHERE step >= 1 ORDER BY step"
-        ),
-        # Machin oracle: the same Gregory series in DuckDB HUGEINT
-        # — power ladders in recursive CTEs, floor division
-        # identical to the engine's Python bignums.
-        "machin_pi": (
-            "WITH RECURSIVE p5(k, p) AS ("
-            "SELECT 0, cast(5 as hugeint) "
-            "UNION ALL SELECT k + 1, p * 25 FROM p5 "
-            "WHERE p * 25 <= 1000000000000000000000000000000), "
-            "p239(k, p) AS (SELECT 0, cast(239 as hugeint) "
-            "UNION ALL SELECT k + 1, p * 57121 FROM p239 "
-            "WHERE p * 57121 <= 1000000000000000000000000000000), "
-            "s5 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
-            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
-            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
-            "END) AS v FROM p5), "
-            "s239 AS (SELECT sum(CASE WHEN k % 2 = 0 THEN "
-            "1000000000000000000000000000000 // ((2*k+1) * p) ELSE "
-            "-(1000000000000000000000000000000 // ((2*k+1) * p)) "
-            "END) AS v FROM p239) "
-            "SELECT cast(16 * s5.v - 4 * s239.v as varchar) "
-            "AS pi_str, substr(cast(16 * s5.v - 4 * s239.v "
-            "as varchar), 1, 25) AS d25 FROM s5, s239"
         ),
         # Haar — closed-form signed dyadic-block sums, no recursion.
         "haar_wavelet": (
@@ -12859,10 +10232,6 @@ def oracle_sql() -> dict[str, str]:
             "double))) * 1e9) as bigint) AS bleu_e9 "
             "FROM a1 CROSS JOIN a2 CROSS JOIN l"
         ),
-        # ROUGE-L — independent recursive LCS (VALUES).
-        "rouge_l": _IO.rouge_oracle_sql(_oracle_sf_dir()),
-        # Jenks — exhaustive partition enumeration (VALUES).
-        "jenks_breaks": _IO.jenks_oracle_sql(_oracle_sf_dir()),
         "cohens_kappa": (
             "WITH d AS (SELECT lang, "
             "cast('0x' || substr(sha256('ra:' || cast(doc_id as "
@@ -12987,30 +10356,8 @@ def oracle_sql() -> dict[str, str]:
             "cast(n as double)) * 1e9) as bigint) AS hi_e9 "
             "FROM g ORDER BY event_type"
         ),
-        # Aho-Corasick — RE2 counts each borderless pattern separately.
-        "aho_corasick": (
-            "WITH c AS (SELECT "
-            + ", ".join(
-                f"cast(len(regexp_extract_all(lower(text), '{p}')) "
-                f"as bigint) AS n_{p}" for p in
-                ["the", "and", "ing", "ion", "ent", "he"]) +
-            " FROM documents) SELECT "
-            + ", ".join(
-                f"sum(n_{p}) AS total_{p}" for p in
-                ["the", "and", "ing", "ion", "ent", "he"]) + ", "
-            + ", ".join(
-                f"sum(CASE WHEN n_{p} > 0 THEN 1 ELSE 0 END) "
-                f"AS docs_{p}" for p in
-                ["the", "and", "ing", "ion", "ent", "he"]) +
-            " FROM c"
-        ),
-        # Huffman — cost invariance across optimal codes: oracle uses
-        # a DIFFERENT tie-break construction on purpose.
-        "huffman_bits": _IO.huffman_oracle_sql(_oracle_sf_dir()),
         # base58 — CPython divmod reference (VALUES).
         "base58_encode": _IO.base58_oracle_sql(_oracle_sf_dir()),
-        # BWT — suffix-array identity, independent of rotation sort.
-        "bwt_transform": _IO.bwt_oracle_sql(_oracle_sf_dir()),
         "matmul_relational": (
             "WITH a AS (SELECT doc_id % 24 AS i, (doc_id * 3) % 24 "
             "AS k, count(*) % 7 AS a FROM documents GROUP BY 1, 2), "
@@ -13134,10 +10481,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT cast(floor(km / 1000.0) as bigint) AS mm_bin, "
             "count(*) AS n FROM d GROUP BY 1 ORDER BY mm_bin"
         ),
-        # DTW / Viterbi — independent recursive / brute-force oracles
-        # (VALUES literals recomputed from the same parquet).
-        "dtw_align": _IO.dtw_oracle_sql(_oracle_sf_dir()),
-        "viterbi_decode": _IO.viterbi_oracle_sql(_oracle_sf_dir()),
         "autocorr": (
             "WITH daily AS (SELECT event_type, "
             "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
@@ -13490,27 +10833,6 @@ def oracle_sql() -> dict[str, str]:
             "jaro_winkler_similarity(a, b) AS jw, "
             "CASE WHEN jaro_winkler_similarity(a, b) >= 0.84 THEN 1 "
             "ELSE 0 END AS is_match FROM t ORDER BY doc_id"
-        ),
-        # NTT convolution — the oracle is the O(n²) DEFINITION of
-        # circular convolution, computed relationally; the engine runs
-        # the O(n log n) transform algorithm. Independent by algebra.
-        "ntt_convolution": (
-            "WITH h AS (SELECT doc_id % 16 AS g, "
-            "(doc_id // 16) % 64 AS bin, count(*) % 10 AS av "
-            "FROM documents GROUP BY 1, 2), "
-            "k AS (SELECT j, CASE WHEN j < 8 THEN (j * j + 1) % 5 "
-            "ELSE 0 END AS bv FROM (SELECT unnest(generate_series(0, "
-            "63)) AS j)), "
-            "c0 AS (SELECT h.g, (h.bin + k.j) % 64 AS ck, "
-            "sum(h.av * k.bv) AS cv FROM h CROSS JOIN k "
-            "GROUP BY 1, 2), "
-            "grid AS (SELECT g, ck FROM (SELECT DISTINCT g FROM h) "
-            "CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS ck)), "
-            "c AS (SELECT grid.g, grid.ck, coalesce(cv, 0) AS cv "
-            "FROM grid LEFT JOIN c0 USING (g, ck)) "
-            "SELECT g, sha256(string_agg(cast(cv as varchar), ',' "
-            "ORDER BY ck)) AS conv_sha, sum(cv) AS conv_sum, "
-            "max(cv) AS conv_max FROM c GROUP BY g ORDER BY g"
         ),
         # Sitemap — rollup derived analytically, no XML on oracle side.
         "sitemap_urls": (

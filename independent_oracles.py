@@ -1116,152 +1116,6 @@ def uuid5_oracle_sql(sf_dir: str) -> str:
     )
 
 
-# ------------------------------------------------ DTW (recursive form)
-
-DTW_TEMPLATE = [((j * j * 7) % 50) for j in range(16)]
-
-
-def dtw_expected(sf_dir: str):
-    """(event_type, n_days, dtw) — top-down MEMOIZED-RECURSIVE DTW (an
-    independent formulation of the recurrence; the engine runs the
-    iterative rolling-row form) over the first 16 thousand-scaled
-    daily totals per series vs the fixed template."""
-    import functools as _ft
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH daily AS (SELECT event_type, "
-        "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-        "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-        "as bigint) AS y FROM "
-        f"read_parquet('{sf_dir}/events.parquet') GROUP BY 1, 2), "
-        "r AS (SELECT event_type, y, row_number() OVER (PARTITION BY "
-        "event_type ORDER BY day) AS rn FROM daily) "
-        "SELECT event_type, list(y ORDER BY rn) FROM r WHERE rn <= 16 "
-        "GROUP BY event_type ORDER BY event_type").fetchall()
-
-    def rec(a, b):
-        @_ft.lru_cache(maxsize=None)
-        def d(i, j):
-            opts = []
-            if i == 0 and j == 0:
-                return abs(a[0] - b[0])
-            if i > 0:
-                opts.append(d(i - 1, j))
-            if j > 0:
-                opts.append(d(i, j - 1))
-            if i > 0 and j > 0:
-                opts.append(d(i - 1, j - 1))
-            return abs(a[i] - b[j]) + min(opts)
-
-        return d(len(a) - 1, len(b) - 1)
-
-    return [(et, len(ys), rec(tuple(int(y) for y in ys),
-                              tuple(DTW_TEMPLATE)))
-            for et, ys in rows]
-
-
-@functools.lru_cache(maxsize=4)
-def dtw_oracle_sql(sf_dir: str) -> str:
-    rows = dtw_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS VARCHAR) AS event_type, CAST(c1 AS INTEGER) "
-        "AS n_days, CAST(c2 AS BIGINT) AS dtw",
-        "event_type", ncols=3,
-    )
-
-
-# ------------------------------------------------ Viterbi (brute force)
-
-VIT_START = [0, -2]
-VIT_TRANS = [[0, -3], [-4, 0]]
-VIT_EMIT = [[0, -5, -1], [-6, 0, -1]]
-
-
-def viterbi_expected(sf_dir: str):
-    """(user_id, seq_len, best, n_opt) — EXHAUSTIVE enumeration of all
-    2^len state paths (independent of any DP): first 10 events per
-    sampled user ordered by (epoch, event_id), observation =
-    ascii(first char of event_type) % 3."""
-    import itertools
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH e AS (SELECT user_id, "
-        "ascii(substr(event_type, 1, 1)) % 3 AS oc, "
-        "row_number() OVER (PARTITION BY user_id ORDER BY "
-        "cast(floor(epoch(ts)) as bigint), event_id) AS rn FROM "
-        f"read_parquet('{sf_dir}/events.parquet') "
-        "WHERE user_id % 29 = 0) "
-        "SELECT user_id, list(oc ORDER BY rn) FROM e WHERE rn <= 10 "
-        "GROUP BY user_id ORDER BY user_id").fetchall()
-    out = []
-    for uid, obs in rows:
-        obs = [int(o) for o in obs]
-        best, cnt = None, 0
-        for path in itertools.product((0, 1), repeat=len(obs)):
-            sc = VIT_START[path[0]] + VIT_EMIT[path[0]][obs[0]]
-            for t in range(1, len(obs)):
-                sc += VIT_TRANS[path[t - 1]][path[t]] \
-                    + VIT_EMIT[path[t]][obs[t]]
-            if best is None or sc > best:
-                best, cnt = sc, 1
-            elif sc == best:
-                cnt += 1
-        out.append((int(uid), len(obs), best, cnt))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def viterbi_oracle_sql(sf_dir: str) -> str:
-    rows = viterbi_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS user_id, CAST(c1 AS INTEGER) AS seq_len, "
-        "CAST(c2 AS BIGINT) AS best, CAST(c3 AS BIGINT) AS n_opt",
-        "user_id", ncols=4,
-    )
-
-
-# ------------------------------------------------ BWT via suffix array
-
-def bwt_expected(sf_dir: str):
-    """(doc_id, bwt_hex) — BWT derived through the SUFFIX-ARRAY identity
-    bwt[i] = t[sa[i]-1] (direct suffix sort), independent of the
-    engine's rotation-sort construction; equivalence REQUIRES the
-    unique smallest sentinel, which is the property being pinned."""
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "SELECT doc_id, substr(regexp_replace(lower(text), "
-        "'[^a-z]', '', 'g'), 1, 16) FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE doc_id % 9 = 4 ORDER BY doc_id").fetchall()
-    out = []
-    for d, s in rows:
-        t = (s or "") + "\x01"
-        sa = sorted(range(len(t)), key=lambda i: t[i:])
-        bwt = "".join(t[(i - 1) % len(t)] for i in sa)
-        out.append((int(d), bwt.encode("utf-8").hex()))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def bwt_oracle_sql(sf_dir: str) -> str:
-    rows = bwt_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS bwt_hex",
-        "doc_id", ncols=2,
-    )
-
-
 # ------------------------------------------------ base58 (Bitcoin form)
 
 B58_ALPHA = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
@@ -1305,354 +1159,6 @@ def base58_oracle_sql(sf_dir: str) -> str:
         rows,
         "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS b58",
         "doc_id", ncols=2,
-    )
-
-
-# ------------------------------------------------ Huffman cost
-
-def huffman_expected(sf_dir: str):
-    """(lang, n_symbols, sum_freq, total_bits) — optimal prefix-code
-    cost via a DIFFERENT construction than the engine's heap: sorted-
-    list merging with last-position insertion (a distinct valid
-    tie-break; the cost is invariant across optimal codes, which is
-    the property under test)."""
-    import bisect
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH toks AS (SELECT lang, unnest(list_filter(string_split("
-        "lower(text), ' '), x -> x <> '')) AS tok FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')), "
-        "f AS (SELECT lang, tok, count(*) AS c FROM toks GROUP BY 1, 2), "
-        "r AS (SELECT lang, c, row_number() OVER (PARTITION BY lang "
-        "ORDER BY c DESC, tok) AS rn FROM f) "
-        "SELECT lang, list(c ORDER BY rn) FROM r WHERE rn <= 16 "
-        "GROUP BY lang ORDER BY lang").fetchall()
-    out = []
-    for lang, cs in rows:
-        cs = [int(c) for c in cs]
-        if len(cs) == 1:
-            out.append((lang, 1, cs[0], cs[0]))
-            continue
-        work = sorted(cs)
-        total = 0
-        while len(work) > 1:
-            a, b = work[0], work[1]
-            work = work[2:]
-            total += a + b
-            bisect.insort_right(work, a + b)  # rightmost insertion
-        out.append((lang, len(cs), sum(cs), total))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def huffman_oracle_sql(sf_dir: str) -> str:
-    rows = huffman_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS VARCHAR) AS lang, CAST(c1 AS INTEGER) AS n_symbols, "
-        "CAST(c2 AS BIGINT) AS sum_freq, CAST(c3 AS BIGINT) "
-        "AS total_bits",
-        "lang", ncols=4,
-    )
-
-
-# ------------------------------------------------ Jenks (brute force)
-
-def jenks_expected(sf_dir: str, k: int = 4):
-    """(event_type, n_vals, best_cost, n_optimal) — EXHAUSTIVE
-    enumeration over all C(n-1, k-1) contiguous partitions of the 20
-    smallest distinct daily totals; the engine runs the Fisher/Jenks
-    DP. Integer-scaled objective count*SSD keeps everything exact."""
-    import itertools
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH daily AS (SELECT event_type, "
-        "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-        "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-        "as bigint) AS y FROM "
-        f"read_parquet('{sf_dir}/events.parquet') GROUP BY 1, 2), "
-        "dv AS (SELECT DISTINCT event_type, y FROM daily), "
-        "r AS (SELECT event_type, y, row_number() OVER (PARTITION BY "
-        "event_type ORDER BY y) AS rn FROM dv) "
-        "SELECT event_type, list(y ORDER BY y) FROM r WHERE rn <= 20 "
-        "GROUP BY event_type ORDER BY event_type").fetchall()
-    out = []
-    for et, ys in rows:
-        xs = sorted(int(y) for y in ys)
-        n = len(xs)
-        kk = min(k, n)
-
-        def cost(seg):
-            c = len(seg)
-            s = sum(seg)
-            q = sum(x * x for x in seg)
-            return c * q - s * s
-
-        best, cnt = None, 0
-        for cuts in itertools.combinations(range(1, n), kk - 1):
-            bounds = [0] + list(cuts) + [n]
-            tot = sum(cost(xs[bounds[i]:bounds[i + 1]])
-                      for i in range(kk))
-            if best is None or tot < best:
-                best, cnt = tot, 1
-            elif tot == best:
-                cnt += 1
-        out.append((et, n, best, cnt))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def jenks_oracle_sql(sf_dir: str) -> str:
-    rows = jenks_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS VARCHAR) AS event_type, CAST(c1 AS INTEGER) "
-        "AS n_vals, CAST(c2 AS BIGINT) AS best_cost, "
-        "CAST(c3 AS BIGINT) AS n_optimal",
-        "event_type", ncols=4,
-    )
-
-
-# ------------------------------------------------ ROUGE-L (recursive)
-
-def rouge_expected(sf_dir: str):
-    """Corpus totals via an independent memoized-RECURSIVE LCS."""
-    import functools as _ft
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH t AS (SELECT doc_id - doc_id % 2 AS pair, "
-        "doc_id % 2 AS side, list_filter(string_split(lower(text), "
-        "' '), x -> x <> '')[1:12] AS toks FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE (doc_id - doc_id % 2) % 3 = 0) "
-        "SELECT pair, max(CASE WHEN side = 0 THEN toks END), "
-        "max(CASE WHEN side = 1 THEN toks END) FROM t GROUP BY pair "
-        "HAVING max(CASE WHEN side = 0 THEN toks END) IS NOT NULL "
-        "AND max(CASE WHEN side = 1 THEN toks END) IS NOT NULL "
-        "ORDER BY pair").fetchall()
-    n_pairs = sum_lcs = sum_clen = sum_rlen = sum_f = 0
-    for _pair, cand, ref in rows:
-        a, b = tuple(cand), tuple(ref)
-
-        @_ft.lru_cache(maxsize=None)
-        def rec(i, j):
-            if i == 0 or j == 0:
-                return 0
-            if a[i - 1] == b[j - 1]:
-                return rec(i - 1, j - 1) + 1
-            return max(rec(i - 1, j), rec(i, j - 1))
-
-        l = rec(len(a), len(b))
-        rec.cache_clear()
-        n_pairs += 1
-        sum_lcs += l
-        sum_clen += len(a)
-        sum_rlen += len(b)
-        if l and a and b:
-            p = l / len(a)
-            r = l / len(b)
-            sum_f += int((2 * p * r / (p + r)) * 1e6)
-    return [(n_pairs, sum_lcs, sum_clen, sum_rlen, sum_f)]
-
-
-@functools.lru_cache(maxsize=4)
-def rouge_oracle_sql(sf_dir: str) -> str:
-    rows = rouge_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS n_pairs, CAST(c1 AS BIGINT) AS sum_lcs, "
-        "CAST(c2 AS BIGINT) AS sum_clen, CAST(c3 AS BIGINT) "
-        "AS sum_rlen, CAST(c4 AS BIGINT) AS sum_f_e6",
-        "n_pairs", ncols=5,
-    )
-
-
-# ------------------------------------------------ convex hull (Jarvis)
-
-def hull_expected(sf_dir: str):
-    """(g, n_pts, n_hull, area2, perim_manhattan) — gift-wrapping
-    (Jarvis march), an independent construction from the engine's
-    monotone chain; all stats are vertex-cycle invariants on exact
-    integer coordinates."""
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH p AS (SELECT doc_id % 8 AS g, "
-        "cast(floor(((doc_id * 37 % 3600) / 10.0)) as bigint) AS x, "
-        "cast(floor(((doc_id * 53 % 1800) / 10.0)) as bigint) AS y "
-        f"FROM read_parquet('{sf_dir}/documents.parquet')) "
-        "SELECT g, list(DISTINCT [x, y]) FROM p GROUP BY g "
-        "ORDER BY g").fetchall()
-
-    def cross(o, a, b):
-        return ((a[0] - o[0]) * (b[1] - o[1])
-                - (a[1] - o[1]) * (b[0] - o[0]))
-
-    out = []
-    for g, pts in rows:
-        pts = sorted({(int(p[0]), int(p[1])) for p in pts})
-        if len(pts) <= 2:
-            hull = pts
-        else:
-            hull = []
-            start = min(pts)
-            p = start
-            while True:
-                hull.append(p)
-                q = pts[0] if pts[0] != p else pts[1]
-                for r in pts:
-                    if r == p:
-                        continue
-                    c = cross(p, q, r)
-                    if c < 0 or (c == 0 and
-                                 (abs(r[0] - p[0]) + abs(r[1] - p[1]))
-                                 > (abs(q[0] - p[0])
-                                    + abs(q[1] - p[1]))):
-                        q = r
-                p = q
-                if p == start:
-                    break
-        n = len(hull)
-        area2 = abs(sum(hull[i][0] * hull[(i + 1) % n][1]
-                        - hull[(i + 1) % n][0] * hull[i][1]
-                        for i in range(n))) if n >= 3 else 0
-        perim = sum(abs(hull[i][0] - hull[(i + 1) % n][0])
-                    + abs(hull[i][1] - hull[(i + 1) % n][1])
-                    for i in range(n)) if n >= 2 else 0
-        out.append((int(g), len(pts), n, area2, perim))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def hull_oracle_sql(sf_dir: str) -> str:
-    rows = hull_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS g, CAST(c1 AS INTEGER) AS n_pts, "
-        "CAST(c2 AS INTEGER) AS n_hull, CAST(c3 AS BIGINT) AS area2, "
-        "CAST(c4 AS BIGINT) AS perim_manhattan",
-        "g", ncols=5,
-    )
-
-
-# --------------------------------------- stable matching (brute force)
-
-def matching_expected(sf_dir: str, n: int = 6):
-    """(lang, matching, sum_prop_rank) — enumerate ALL stable
-    matchings, select the proposer-optimal one (unique by theorem);
-    the engine runs Gale-Shapley, a different algorithm."""
-    import hashlib
-    import itertools
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "SELECT lang, count(*) FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') GROUP BY lang "
-        "ORDER BY lang").fetchall()
-
-    def prefs(lang, cnt, tag, i):
-        h = hashlib.sha256(f"{lang}:{cnt}:{tag}:{i}".encode()).digest()
-        return sorted(range(n), key=lambda j: (h[j], j))
-
-    out = []
-    for lang, cnt in rows:
-        pp = [prefs(lang, cnt, "p", i) for i in range(n)]
-        ap = [prefs(lang, cnt, "a", i) for i in range(n)]
-        prank = [[0] * n for _ in range(n)]
-        for p in range(n):
-            for r, a in enumerate(pp[p]):
-                prank[p][a] = r
-        arank = [[0] * n for _ in range(n)]
-        for a in range(n):
-            for r, p in enumerate(ap[a]):
-                arank[a][p] = r
-        best = None
-        for perm in itertools.permutations(range(n)):
-            stable = True
-            for p in range(n):
-                mp = perm[p]
-                for a in range(n):
-                    if a == mp:
-                        continue
-                    if prank[p][a] < prank[p][mp] and \
-                            arank[a][p] < arank[a][perm.index(a)]:
-                        stable = False
-                        break
-                if not stable:
-                    break
-            if stable:
-                if best is None or all(
-                        prank[p][perm[p]] <= prank[p][best[p]]
-                        for p in range(n)):
-                    best = list(perm)
-        srank = sum(prank[p][best[p]] for p in range(n))
-        out.append((lang, ",".join(str(a) for a in best), srank))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def matching_oracle_sql(sf_dir: str) -> str:
-    rows = matching_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS VARCHAR) AS lang, CAST(c1 AS VARCHAR) AS matching, "
-        "CAST(c2 AS BIGINT) AS sum_prop_rank",
-        "lang", ncols=3,
-    )
-
-
-# ------------------------------------------ closest pair (brute force)
-
-def closest_pair_expected(sf_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH p AS (SELECT doc_id % 8 AS g, "
-        "(doc_id * 37) % 500 AS x, (doc_id * 53) % 500 AS y FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE doc_id % 23 = 1) "
-        "SELECT g, list(DISTINCT [x, y]) FROM p GROUP BY g "
-        "ORDER BY g").fetchall()
-    out = []
-    for g, pts in rows:
-        ps = sorted({(int(p[0]), int(p[1])) for p in pts})
-        if len(ps) < 2:
-            continue
-        best, cnt = None, 0
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                v = ((ps[i][0] - ps[j][0]) ** 2
-                     + (ps[i][1] - ps[j][1]) ** 2)
-                if best is None or v < best:
-                    best, cnt = v, 1
-                elif v == best:
-                    cnt += 1
-        out.append((int(g), len(ps), best, cnt))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def closest_pair_oracle_sql(sf_dir: str) -> str:
-    rows = closest_pair_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS g, CAST(c1 AS INTEGER) AS n_pts, "
-        "CAST(c2 AS BIGINT) AS min_d2, CAST(c3 AS BIGINT) "
-        "AS n_pairs_at_min",
-        "g", ncols=4,
     )
 
 

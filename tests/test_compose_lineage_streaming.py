@@ -109,6 +109,66 @@ def test_commit_units_same_run_same_millisecond(spark, tmp_path, monkeypatch):
     assert not [f for f in os.listdir(store.lineage_path) if f.endswith(".inprogress")]
 
 
+def _units_of(df, col):
+    return sorted(r[col] for r in df.collect())
+
+
+def test_torn_commit_file_is_ignored(spark, tmp_path):
+    # a crash inside commit_units leaves half of its temp file behind; no
+    # reader may see its unit, alone or next to a finished commit
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = LineageStore(spark, str(tmp_path / "ice"))
+    units = spark.createDataFrame([("u1",), ("u2",), ("u9",)], "unit string")
+    buf = io.BytesIO()
+    pq.write_table(pa.table({
+        "unit_id": ["u9"], "stage": ["stage_a"], "run_id": ["r0"],
+        "committed_at": [1.0], "n_rows": pa.array([1], pa.int64())}), buf)
+    os.makedirs(store.lineage_path)
+    torn = os.path.join(store.lineage_path, ".commit-1000-r0-0.inprogress")
+    with open(torn, "wb") as f:
+        f.write(buf.getvalue()[:len(buf.getvalue()) // 2])
+
+    assert _units_of(store.completed_units("stage_a"), "unit_id") == []
+    assert _units_of(store.remaining_units(units, "stage_a", "unit"), "unit") == ["u1", "u2", "u9"]
+    store.commit_units("stage_a", [("u1", 1)])
+    assert _units_of(store.completed_units("stage_a"), "unit_id") == ["u1"]
+    assert _units_of(store.remaining_units(units, "stage_a", "unit"), "unit") == ["u2", "u9"]
+    assert os.path.exists(torn)
+
+
+def test_resumable_stage_crash_after_output_write(spark, tmp_path):
+    # a crash between the output write and the lineage commit: the units are
+    # processed again (at least once) but committed exactly once
+    store = LineageStore(spark, str(tmp_path / "ice"))
+    out = str(tmp_path / "out")
+    units = spark.createDataFrame([("u1",), ("u2",), ("u3",)], "unit string")
+    processed = []
+
+    def process(todo, crash=False):
+        got = _units_of(todo, "unit")
+        processed.append(got)
+        result = spark.createDataFrame([(u, u.upper()) for u in got], "unit string, out string")
+        result.write.mode("append").parquet(out)
+        if crash:
+            raise RuntimeError("crash before commit")
+        return result
+
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        resumable_stage(store, "stage_a", units, "unit", lambda t: process(t, crash=True))
+    assert _units_of(store.completed_units("stage_a"), "unit_id") == []
+    assert _units_of(store.remaining_units(units, "stage_a", "unit"), "unit") == ["u1", "u2", "u3"]
+
+    resumable_stage(store, "stage_a", units, "unit", process)
+    resumable_stage(store, "stage_a", units, "unit", process)
+    assert processed == [["u1", "u2", "u3"], ["u1", "u2", "u3"], []]
+    assert _units_of(store.completed_units("stage_a"), "unit_id") == ["u1", "u2", "u3"]
+    assert _units_of(spark.read.parquet(out), "unit") == ["u1", "u1", "u2", "u2", "u3", "u3"]
+
+
 # --------------------------------------------------------------- streaming
 
 

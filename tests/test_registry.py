@@ -11,10 +11,16 @@ stdlib ``ast`` only (no Spark session, no import of the module):
   level or inside a function, names an existing module and a name that
   module defines, so deleting a module cannot leave a lazy import that
   fails only when its function runs;
+* every package module is imported by some non-test Python file (the
+  entry module, the root scripts, ``perfbench/`` or another package
+  module), so deleting a module's last caller cannot leave the module
+  behind for its tests alone;
 * every name in a package module's ``__all__`` is bound at that module's top
   level, so deleting a function cannot leave its name exported;
 * no package module calls Spark's ``decode``, which fails the whole query
-  on one row of invalid UTF-8 (a cast to string wraps the bytes instead)."""
+  on one row of invalid UTF-8 (a cast to string wraps the bytes instead);
+* every backticked name in the battery column of a ``COVERAGE.md`` table is
+  a row, so the coverage map cannot name a deleted row as live."""
 
 import ast
 import functools
@@ -24,6 +30,7 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY = os.path.join(REPO, "__spark_entry__.py")
 BENCH = os.path.join(REPO, "bench.py")
+COVERAGE = os.path.join(REPO, "COVERAGE.md")
 PACKAGE = "imagery_utils_spark"
 ROOTS = ("entry", "queries", "oracle_sql")
 
@@ -141,13 +148,18 @@ def _package_imports(path):
                 yield node.lineno, module, [a.name for a in node.names]
 
 
+def _python_files():
+    """The repo's Python: the package, ``perfbench/``, ``tests/`` and the
+    root scripts."""
+    return (glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+            + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
+            + glob.glob(os.path.join(REPO, "tests", "*.py"))
+            + glob.glob(os.path.join(REPO, "*.py")))
+
+
 def test_every_package_import_resolves():
-    files = (glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
-             + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
-             + glob.glob(os.path.join(REPO, "tests", "*.py"))
-             + glob.glob(os.path.join(REPO, "*.py")))
     checked, dangling = 0, []
-    for path in sorted(files):
+    for path in sorted(_python_files()):
         for lineno, module, names in _package_imports(path):
             checked += 1
             where = f"{os.path.relpath(path, REPO)}:{lineno}"
@@ -162,6 +174,35 @@ def test_every_package_import_resolves():
                     dangling.append(f"{where}: {module} has no {name}")
     assert checked > 100, checked  # the scan must see the repo's imports
     assert dangling == []
+
+
+# Imported by tests alone today. ROADMAP item 2 (the mosaic pipeline) must
+# give each a production caller or delete it; then drop it from this set.
+TEST_ONLY_MODULES = {
+    "imagery_utils_spark/sources/layout.py",
+    "imagery_utils_spark/sources/sidecar.py",
+}
+
+
+def test_every_package_module_has_a_non_test_importer():
+    imported = set()
+    for path in _python_files():
+        if os.path.dirname(path) == os.path.join(REPO, "tests") \
+                or os.path.basename(path).startswith("test_"):
+            continue
+        for _, module, names in _package_imports(path):
+            # ``from pkg import mod`` imports the submodule; importing a
+            # submodule runs each enclosing package's __init__
+            for dotted in [module] + [f"{module}.{n}" for n in names]:
+                parts = dotted.split(".")
+                for i in range(1, len(parts) + 1):
+                    target = _module_file(".".join(parts[:i]))
+                    if target is not None and target != path:
+                        imported.add(os.path.relpath(target, REPO))
+    modules = {os.path.relpath(p, REPO) for p in
+               glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)}
+    assert len(modules) > 50, len(modules)  # the scan must see the package
+    assert sorted(modules - imported) == sorted(TEST_ONLY_MODULES)
 
 
 def _all_names(path):
@@ -215,3 +256,31 @@ def test_package_never_calls_spark_decode():
     found = [f"{os.path.relpath(path, REPO)}:{lineno}: {what}"
              for path in sorted(files) for lineno, what in _spark_decode_calls(path)]
     assert found == []
+
+
+def _coverage_battery_names():
+    """(line number, name) for each backticked name in the last column of a
+    ``COVERAGE.md`` table whose header calls that column the battery, on
+    rows whose implementation cell does not start with "removed"."""
+    with open(COVERAGE, encoding="utf-8") as f:
+        lines = f.read().split("\n")
+    battery = None  # None outside a table; else whether it has the column
+    for lineno, line in enumerate(lines, 1):
+        if not line.startswith("|"):
+            battery = None
+            continue
+        cells = [c.strip() for c in line.strip().strip("|").split("|")]
+        if battery is None:  # the header row
+            battery = cells[-1].startswith("battery")
+        elif battery and not cells[0].startswith("-") \
+                and not cells[1].startswith("removed"):
+            for name in cells[-1].split("`")[1::2]:
+                yield lineno, name
+
+
+def test_coverage_names_only_live_rows():
+    rows = _returned_dict_keys(_module(), "_raw_queries")
+    found = list(_coverage_battery_names())
+    assert len(found) > 150, len(found)  # the scan must see the tables
+    assert [f"COVERAGE.md:{n}: {name}" for n, name in found
+            if name not in rows] == []
