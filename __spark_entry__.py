@@ -4806,274 +4806,6 @@ def q_frontier_expand(spark, sf_dir) -> DataFrame:
             .orderBy("host"))
 
 
-def q_ab_test(spark, sf_dir) -> DataFrame:
-    """Two-cohort A/B readout: events split by id parity, conversion =
-    cents above a mid-range threshold (event-level units keep both
-    outcome classes populated at every SF — user-level conversion
-    saturates on this fixture). Counts are integers; the lift ratio
-    and the pooled two-proportion z-statistic are computed in ONE
-    shared expression order (each float op is a single IEEE operation
-    — the same cross-engine-bitwise argument mixture_stats makes for
-    sqrt), so even the z value hashes identically. One groupBy +
-    a 2-row pivot."""
-    ev = load(spark, sf_dir, "events").select(
-        (F.col("event_id") % 2).alias("cohort"),
-        (F.floor(F.col("value") * 100) > 10000).cast("int")
-        .alias("converted"))
-    g = (ev.groupBy("cohort")
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum("converted").alias("c"))
-         .orderBy("cohort"))
-    w = g.agg(
-        F.max(F.when(F.col("cohort") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("cohort") == 0, F.col("c"))).alias("c0"),
-        F.max(F.when(F.col("cohort") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("cohort") == 1, F.col("c"))).alias("c1"))
-    z_expr = ("(c1 / n1 - c0 / n0) / sqrt("
-              "((c0 + c1) / (n0 + n1)) * (1 - (c0 + c1) / (n0 + n1)) "
-              "* (1 / n0 + 1 / n1))")
-    return w.select(
-        "n0", "c0", "n1", "c1",
-        F.expr("(c1 * n0) / (c0 * n1)").alias("lift"),
-        F.expr(z_expr).alias("z"))
-
-
-def q_record_linkage(spark, sf_dir) -> DataFrame:
-    """Fellegi–Sunter record linkage with EXACT integer odds — the
-    probabilistic matcher (1969, public) without a single logarithm:
-    each field agreement multiplies the match odds by a fixed rational
-    m/u; the composite score stays an integer numerator/denominator
-    pair and the decision threshold compares by CROSS-MULTIPLICATION,
-    so classification is bit-exact at any scale and partitioning
-    (float log-weights would not be). Blocking = same source domain
-    (the candidate-pair generator); agreements: lang equality and
-    n_chars within 10%."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", "n_chars")
-    a = docs.alias("a")
-    b = docs.alias("b")
-    pairs = (a.join(b, (F.col("a.source") == F.col("b.source"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .filter((F.col("a.doc_id") % 3 == 0)
-                     & (F.col("b.doc_id") % 3 == 0)))
-    # field odds as fixed rationals (m/u): lang agree 9/2, disagree
-    # 1/8; size-within-10% agree 4/1, disagree 1/4. Numerator and
-    # denominator accumulate separately as exact integers.
-    lang_eq = F.col("a.lang") == F.col("b.lang")
-    size_ok = (F.abs(F.col("a.n_chars") - F.col("b.n_chars")) * 10
-               <= F.least(F.col("a.n_chars"), F.col("b.n_chars")))
-    num = (F.when(lang_eq, 9).otherwise(1)
-           * F.when(size_ok, 4).otherwise(1)).cast("long")
-    den = (F.when(lang_eq, 2).otherwise(8)
-           * F.when(size_ok, 1).otherwise(4)).cast("long")
-    # decision: odds >= 9 (threshold 9/1) via cross-multiplication
-    is_match = num >= 9 * den
-    scored = pairs.select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"),
-        num.alias("num"), den.alias("den"), is_match.alias("match"))
-    return (scored.groupBy("match")
-            .agg(F.count(F.lit(1)).alias("n_pairs"),
-                 F.sum("num").alias("sum_num"),
-                 F.sum("den").alias("sum_den"),
-                 F.sum(F.col("id_a") + F.col("id_b")).alias("id_sum"))
-            .orderBy("match"))
-
-
-_OLS_TAIL_SQL = (
-    "SELECT event_type, n, "
-    "(n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope, "
-    "(sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n "
-    "AS intercept, "
-    # each variance term fits 2^53 (exact as double); their PRODUCT
-    # does not fit int64, so multiply as doubles — identical on both
-    # engines, where int128 × int64 arithmetic would diverge
-    "(n * sxy - sx * sy) / sqrt(cast(n * sxx - sx * sx as double) "
-    "* cast(n * syy - sy * sy as double)) AS pearson_r "
-    "FROM m ORDER BY event_type"
-)
-
-
-def q_ols_trend(spark, sf_dir) -> DataFrame:
-    """Closed-form OLS trend + Pearson r per event_type — revenue vs
-    day: every MOMENT (Σx, Σy, Σxy, Σx², Σy²) is an exact integer sum
-    (day index × cents), so the slope/intercept/r are each a fixed
-    chain of IEEE ops over exact integers — bit-equal cross-engine,
-    partitioning-free. ONE groupBy; the regression itself is a
-    projection. The tail SQL is shared text."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        (F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    m0 = ev.agg(F.min("day").alias("d0"))
-    e2 = (ev.crossJoin(F.broadcast(m0))
-          .select("event_type", (F.col("day") - F.col("d0")).alias("x"),
-                  F.col("cents").alias("y")))
-    m = (e2.groupBy("event_type")
-         .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx"),
-              F.sum(F.col("y") * F.col("y")).alias("syy")))
-    m.createOrReplaceTempView("m")
-    return spark.sql(_OLS_TAIL_SQL)
-
-
-def q_winsorize(spark, sf_dir) -> DataFrame:
-    """Winsorization at discrete p05/p95 — the robust-stats clamp a
-    metrics pipeline applies before averaging: percentile_disc returns
-    an ACTUAL data value (integer cents), so unlike interpolated
-    percentiles there is no (1−f)a+fb float-form ULP hazard between
-    engines. Per-group quantiles broadcast back onto the stream; one
-    extra groupBy pins the clamped sums."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100).cast("long").alias("y"))
-    q = ev.groupBy("event_type").agg(
-        F.expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY y)")
-        .alias("lo"),
-        F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY y)")
-        .alias("hi"))
-    w = (ev.join(F.broadcast(q), "event_type")
-         .withColumn("wy", F.greatest(F.col("lo"),
-                                      F.least(F.col("hi"), F.col("y")))))
-    return (w.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("lo").alias("lo"),
-                 F.max("hi").alias("hi"), F.sum("wy").alias("sum_w"),
-                 F.sum(F.when(F.col("y") != F.col("wy"), 1).otherwise(0))
-                 .alias("n_clamped"))
-            .orderBy("event_type"))
-
-
-def q_explode_outer(spark, sf_dir) -> DataFrame:
-    """NULL-preservation semantics of the two explode flavors — the
-    row-multiplying operator's edge contract: docs tokenize to arrays
-    (every 7th doc deliberately emptied); explode DROPS empty-array
-    parents, explode_outer keeps them with a NULL element. Both
-    flavors counted; the oracle replays with unnest vs a LEFT JOIN
-    LATERAL."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 7 == 0,
-               F.array().cast("array<string>"))
-        .otherwise(F.expr("slice(split(text, ' '), 1, 3)"))
-        .alias("toks"))
-    inner = docs.select("doc_id", F.explode("toks").alias("tok"))
-    outer = docs.select("doc_id", F.explode_outer("toks").alias("tok"))
-    a = inner.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("doc_id").alias("n_docs"),
-        F.sum(F.when(F.col("tok").isNull(), 1).otherwise(0))
-        .alias("n_null")).select(F.lit("inner").alias("mode"), "*")
-    b = outer.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("doc_id").alias("n_docs"),
-        F.sum(F.when(F.col("tok").isNull(), 1).otherwise(0))
-        .alias("n_null")).select(F.lit("outer").alias("mode"), "*")
-    return a.unionByName(b).orderBy("mode")
-
-
-def q_comparator_sort(spark, sf_dir) -> DataFrame:
-    """array_sort with a CUSTOM LAMBDA COMPARATOR — the higher-order-
-    function surface beyond natural ordering: tokens sorted by
-    (length ASC, lexicographic ASC) inside the array, no explode/
-    re-collect round trip. The oracle replays the same order
-    relationally (string_agg ORDER BY length, tok). Comparator
-    returns {-1,0,1} via integer CASE — pure JVM."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr("slice(filter(split(lower(text), ' '), "
-               "x -> x <> ''), 1, 8)").alias("toks"))
-    cmp_sorted = F.expr(
-        "array_sort(toks, (l, r) -> CASE "
-        "WHEN length(l) < length(r) THEN -1 "
-        "WHEN length(l) > length(r) THEN 1 "
-        "WHEN l < r THEN -1 WHEN l > r THEN 1 ELSE 0 END)")
-    return (docs.filter(F.col("doc_id") % 5 == 0)
-            .select("doc_id",
-                    F.concat_ws("|", cmp_sorted).alias("ordered"))
-            .orderBy("doc_id"))
-
-
-def q_event_pattern(spark, sf_dir) -> DataFrame:
-    """Sequence-pattern detection (the MATCH_RECOGNIZE/CEP shape as a
-    fold): each user's event-type INITIALS concatenate in (ts,
-    event_id) order into one sequence string, then funnel patterns
-    count by non-overlapping regexp — 'vc*p' = view, any clicks, then
-    purchase. One window-free groupBy (string_agg with ORDER is the
-    fold); both engines regexp the identically-built string, so order
-    construction itself is under test."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.substring("event_type", 1, 1).alias("ch"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_timestamp("ts"), "event_id")
-    seq = (ev.withColumn("rn", F.row_number().over(w))
-           .groupBy("user_id")
-           .agg(F.concat_ws("", F.transform(
-               F.array_sort(F.collect_list(F.struct("rn", "ch"))),
-               lambda r: r["ch"])).alias("seq")))
-    return (seq.select(
-        "user_id", F.length("seq").alias("n_events"),
-        F.regexp_count(F.col("seq"), F.lit("vc*p")).alias("n_funnels"),
-        F.regexp_count(F.col("seq"), F.lit("e")).alias("n_errors"))
-        .orderBy("user_id"))
-
-
-def q_string_surface(spark, sf_dir) -> DataFrame:
-    """The scalar string-function surface in one pinned row: translate,
-    repeat, reverse, lpad/rpad, left/right, replace, trim variants —
-    the utility layer every ETL expression leans on, value-hashed
-    across engines over real corpus text."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    s = F.substring(F.col("text"), 1, 40)
-    out = docs.filter(F.col("doc_id") % 4 == 0).select(
-        "doc_id",
-        F.translate(s, "aeiou", "AEIOU").alias("tr"),
-        F.reverse(F.substring(s, 1, 12)).alias("rev"),
-        F.lpad(F.substring(s, 1, 5), 9, ".").alias("lp"),
-        F.rpad(F.substring(s, 1, 5), 9, "_").alias("rp"),
-        F.expr("left(text, 6)").alias("l6"),
-        F.expr("right(text, 6)").alias("r6"),
-        F.expr("repeat(substring(text, 3, 2), 3)").alias("rep"),
-        F.expr("replace(substring(text, 1, 30), ' ', '~')").alias("rpl"),
-        F.expr("trim(BOTH ' ' FROM substring(text, 1, 20))").alias("tb"))
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sha2(F.concat_ws("\n", F.array_sort(F.collect_list(
-            F.concat_ws("|", "doc_id", "tr", "rev", "lp", "rp", "l6",
-                        "r6", "rep", "rpl", "tb")))), 256).alias("sha"))
-    return agg
-
-
-def q_try_arithmetic(spark, sf_dir) -> DataFrame:
-    """ANSI error-safety surface — the two error classes this battery
-    itself tripped during development (DIVIDE_BY_ZERO on a saturated
-    cohort, ARITHMETIC_OVERFLOW on a variance product), pinned as
-    semantics: try_divide → NULL on zero divisor, try_multiply → NULL
-    on int64 overflow (×3e14 overflows exactly the cents > 30747
-    tail). The oracle replays both NULL contracts with explicit CASE
-    guards over DuckDB's non-overflowing int128."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("a"),
-        ((F.col("event_id") % 5) - 2).cast("long").alias("b"))
-    r = ev.select(
-        "event_id", "a", "b",
-        F.try_divide(F.col("a"), F.col("b")).alias("sdiv"),
-        F.try_multiply(F.col("a"), F.lit(300000000000000).cast("long"))
-        .alias("smul"))
-    return r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("sdiv").isNull(), 1).otherwise(0))
-        .alias("n_div_null"),
-        F.sum(F.when(F.col("smul").isNull(), 1).otherwise(0))
-        .alias("n_mul_null"),
-        # floor() before summing: a float sum would be merge-order
-        # dependent; integer partials are associative
-        F.sum(F.floor("sdiv").cast("long")).alias("sum_div_floor"),
-        F.max("smul").alias("max_mul"))
-
-
 def q_hash_partition(spark, sf_dir) -> DataFrame:
     """Engine-internals — Spark's shuffle partitioning hash pinned against
     an independent from-spec Murmur3_x86_32 reimplementation
@@ -5123,157 +4855,6 @@ def q_crc32_digest(spark, sf_dir) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q_digest_surface(spark, sf_dir) -> DataFrame:
-    """Scalar digest surface — md5 and sha2-256 hex over utf-8 text bytes;
-    both engines run their native implementations of the same published
-    algorithms (RFC 1321 / FIPS 180-4), so agreement is a genuine
-    cross-implementation check, not a replay."""
-    docs = load(spark, sf_dir, "documents")
-    body = F.encode(F.substring("text", 1, 120), "utf-8")
-    return docs.select(
-        "doc_id",
-        F.md5(body).alias("md5_hex"),
-        F.sha2(body, 256).alias("sha256_hex"),
-        F.substring(F.sha2(body, 256), 1, 8).alias("sha_prefix"),
-    ).orderBy("doc_id")
-
-
-def q_agg_filter_surface(spark, sf_dir) -> DataFrame:
-    """ANSI aggregate-modifier surface — count_if, FILTER clause,
-    bool_and/bool_or, and deterministic max_by/min_by (the ordering value
-    is made unique by folding o_orderkey into the low bits, so arg-max
-    ties cannot arise). Integer partials only: floor before sum."""
-    orders = load(spark, sf_dir, "orders")
-    uniq = (F.floor(F.col("o_totalprice") * 100).cast("long") * 4294967296
-            + F.col("o_orderkey"))
-    return (orders
-            .withColumn("uniq", uniq)
-            .groupBy("o_orderpriority")
-            .agg(F.expr("count_if(o_totalprice > 150000)").alias("n_high"),
-                 F.expr("sum(CAST(floor(o_totalprice) AS BIGINT)) "
-                        "FILTER (WHERE o_orderstatus = 'O')").alias("sum_open"),
-                 F.expr("bool_and(o_totalprice > 0)").alias("all_pos"),
-                 F.expr("bool_or(o_orderstatus = 'F')").alias("any_f"),
-                 F.expr("max_by(o_orderkey, uniq)").alias("best_key"),
-                 F.expr("min_by(o_orderkey, uniq)").alias("worst_key"))
-            .orderBy("o_orderpriority"))
-
-
-def q_datetime_surface(spark, sf_dir) -> DataFrame:
-    """Calendar-function surface — last_day, month-trunc, end-of-month
-    clamped add_months, datediff, Sunday=1 dayofweek, ISO weekofyear,
-    quarter, dayofyear, next_day. The oracle reconstructs Spark's
-    conventions from DuckDB primitives (dow offset, to_days arithmetic)."""
-    orders = load(spark, sf_dir, "orders")
-    d = F.col("o_orderdate").cast("date")
-    return orders.select(
-        "o_orderkey",
-        d.alias("d"),
-        F.last_day(d).alias("ld"),
-        F.trunc(d, "month").alias("m0"),
-        F.add_months(d, (F.col("o_orderkey") % 3 + 1).cast("int")).alias("am"),
-        F.datediff(d, F.lit("2019-01-01").cast("date")).alias("dd"),
-        F.dayofweek(d).alias("dow"),
-        F.weekofyear(d).alias("woy"),
-        F.quarter(d).alias("q"),
-        F.dayofyear(d).alias("doy"),
-        F.next_day(d, "Mon").alias("nmon"),
-    ).orderBy("o_orderkey")
-
-
-def q_regexp_surface(spark, sf_dir) -> DataFrame:
-    """Regexp toolbox surface — extract_all with a capture group,
-    match counting, regexp split with empty-field preservation, and
-    group-reference replacement (Spark `$1` vs DuckDB `\\1` — different
-    spelling, same semantics). Patterns are plain char-classes so Java
-    regex and RE2 agree."""
-    docs = load(spark, sf_dir, "documents")
-    s = F.concat(F.lit("p"), F.col("doc_id") % 13, F.lit("-q"),
-                 F.col("doc_id") % 7, F.lit("-r"), F.col("doc_id") % 29)
-    body = F.substring("text", 1, 60)
-    return docs.select(
-        "doc_id",
-        F.array_join(F.expr(
-            "regexp_extract_all(concat('p', doc_id % 13, '-q', doc_id % 7, "
-            "'-r', doc_id % 29), '[a-z]([0-9]+)', 1)"), "|").alias("nums"),
-        F.size(F.expr(
-            "regexp_extract_all(substring(text, 1, 60), '[aeiou]', 0)")
-        ).alias("n_vowels"),
-        F.array_join(F.split(s, "-"), "|").alias("parts"),
-        F.regexp_replace(s, "([pqr])([0-9]+)", "$2$1").alias("swapped"),
-    ).orderBy("doc_id")
-
-
-def q_array_surface(spark, sf_dir) -> DataFrame:
-    """Array/lambda surface — sequence, transform, slice, position,
-    sorted distinct (first-occurrence order differs across engines, so
-    both sides sort), fold via aggregate(), repeat, flatten."""
-    docs = load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.expr("array_join(transform(sequence(1, CAST(1 + doc_id % 7 AS INT)),"
-               " x -> x * x), ',')").alias("squares"),
-        F.expr("array_join(slice(sequence(1, 6), CAST(1 + doc_id % 3 AS INT),"
-               " 3), ',')").alias("sl"),
-        F.expr("array_position(sequence(0, 9), CAST(doc_id % 10 AS BIGINT))")
-        .alias("pos"),
-        F.expr("array_join(array_sort(array_distinct(array(doc_id % 5, "
-               "doc_id % 3, doc_id % 5, 2))), ',')").alias("dist"),
-        F.expr("aggregate(sequence(1, CAST(1 + doc_id % 9 AS INT)), 0L, "
-               "(a, x) -> a + x * x)").alias("fold_sq"),
-        F.expr("array_join(array_repeat('ab', CAST(doc_id % 4 AS INT)), '')")
-        .alias("rep"),
-        F.expr("array_join(flatten(array(sequence(1, 2), "
-               "sequence(CAST(doc_id % 3 AS BIGINT), CAST(doc_id % 3 AS "
-               "BIGINT)))), ',')").alias("flat"),
-    ).orderBy("doc_id")
-
-
-def q_bit_radix_surface(spark, sf_dir) -> DataFrame:
-    """Bitwise + radix surface — bit_count, shifts (signed right),
-    and/or/xor (Spark `^` is xor; DuckDB `^` is POWER, its oracle uses
-    xor()), upper-hex, binary rendering, and conv() round-trips pinned
-    by re-parsing the engine's own rendering back to decimal."""
-    ev = load(spark, sf_dir, "events")
-    a = F.col("event_id")
-    b = F.col("user_id")
-    return ev.select(
-        "event_id",
-        F.bit_count(a).alias("bc"),
-        F.shiftleft(a % 1024, 3).alias("shl"),
-        F.shiftright(a - 500, 2).alias("shr"),
-        F.expr("event_id & user_id").alias("band"),
-        F.expr("event_id | user_id").alias("bor"),
-        F.expr("event_id ^ user_id").alias("bxor"),
-        F.hex(a).alias("hx"),
-        F.bin(a % 64).alias("bn"),
-        F.conv(F.hex(a), 16, 10).alias("hex_back"),
-        F.conv(F.bin(a % 64), 2, 10).alias("bin_back"),
-    ).orderBy("event_id")
-
-
-def q_phonetic_fuzzy(spark, sf_dir) -> DataFrame:
-    """Phonetic + edit-distance surface — Spark's soundex (the
-    H/W-transparent Hive variant) and levenshtein over 24 deterministic
-    name stems, pinned against from-spec reference implementations
-    (independent_oracles.soundex_ref / levenshtein_ref — Wagner-Fischer
-    DP, not a replay of either engine)."""
-    from independent_oracles import _NAME_STEMS
-
-    docs = load(spark, sf_dir, "documents")
-    stems = F.array(*[F.lit(s) for s in _NAME_STEMS])
-    n = len(_NAME_STEMS)
-    a = F.element_at(stems, (F.col("doc_id") % n + 1).cast("int"))
-    b = F.element_at(stems, ((F.col("doc_id") * 7 + 3) % n + 1).cast("int"))
-    return docs.select(
-        "doc_id",
-        F.soundex(a).alias("sdx_a"),
-        F.soundex(b).alias("sdx_b"),
-        F.levenshtein(a, b).alias("lev"),
-        F.when(F.soundex(a) == F.soundex(b), 1).otherwise(0).alias("same_code"),
-    ).orderBy("doc_id")
-
-
 def q_geohash_encode(spark, sf_dir) -> DataFrame:
     """Geohash page ids (operators/geokeys.py) — the interoperable
     prefix-joinable spatial key (Niemeyer's public scheme; the id
@@ -5318,274 +4899,6 @@ def q_slippy_tiles(spark, sf_dir) -> DataFrame:
             .limit(40))
 
 
-def q_ohlc_bars(spark, sf_dir) -> DataFrame:
-    """OHLC candlestick resampling — the time-series bar aggregation a
-    metrics warehouse runs per (series, day): open/close are min_by/
-    max_by over ONE exact bigint ordering key (epoch·10^7 + event_id —
-    collision-free, so the arg-extremum is deterministic), high/low/
-    volume are plain extrema. ONE groupBy, all integer cents; oracle =
-    DuckDB arg_min/arg_max over the same key."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        (F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-        (F.unix_timestamp("ts") * 10000000 + F.col("event_id"))
-        .cast("long").alias("ord"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    return (ev.groupBy("event_type", "day")
-            .agg(F.min_by("cents", "ord").alias("open"),
-                 F.max("cents").alias("high"),
-                 F.min("cents").alias("low"),
-                 F.max_by("cents", "ord").alias("close"),
-                 F.count(F.lit(1)).alias("volume"),
-                 F.sum("cents").alias("notional"))
-            .filter(F.col("day") % 7 == 0)
-            .orderBy("event_type", "day"))
-
-
-def q_benford_digits(spark, sf_dir) -> DataFrame:
-    """Benford first-significant-digit profile of the cents stream —
-    the classic fraud/quality screen over financial columns. The digit
-    is taken lexically (substr of the decimal rendering — identical
-    semantics both engines, no float log10 anywhere); per-mille shares
-    are integer division against the total via a broadcast scalar."""
-    ev = load(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    pos = ev.filter(F.col("cents") >= 1)
-    d = pos.select(F.substring(F.col("cents").cast("string"), 1, 1)
-                   .cast("int").alias("digit"))
-    tot = d.agg(F.count(F.lit(1)).alias("total"))
-    return (d.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
-            .crossJoin(F.broadcast(tot))
-            .select("digit", "n",
-                    (F.col("n") * 100000 / F.col("total")).cast("long")
-                    .alias("per_mille_x100"))
-            .orderBy("digit"))
-
-
-def q_allen_relations(spark, sf_dir) -> DataFrame:
-    """Allen's interval algebra — classify deterministic interval pairs
-    into the 13 published relations (before/meets/overlaps/starts/
-    during/finishes, their inverses, equals). The temporal-logic
-    surface under every scheduling/overlap join; pure integer CASE
-    chain (first-match-wins, both engines), one groupBy to pin the
-    distribution."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        (F.unix_timestamp("ts").cast("long") % 1000).alias("s1"),
-        (F.col("event_id") % 50 + 1).alias("d1"),
-        ((F.unix_timestamp("ts").cast("long") * 7) % 1000).alias("s2"),
-        ((F.col("event_id") * 3) % 60 + 1).alias("d2"))
-    t = ev.select(
-        "event_id", F.col("s1"), (F.col("s1") + F.col("d1")).alias("e1"),
-        F.col("s2"), (F.col("s2") + F.col("d2")).alias("e2"))
-    s1, e1, s2, e2 = (F.col("s1"), F.col("e1"), F.col("s2"), F.col("e2"))
-    rel = (F.when((s1 == s2) & (e1 == e2), "equals")
-           .when(e1 < s2, "before")
-           .when(e2 < s1, "after")
-           .when(e1 == s2, "meets")
-           .when(e2 == s1, "met_by")
-           .when((s1 == s2) & (e1 < e2), "starts")
-           .when((s1 == s2) & (e1 > e2), "started_by")
-           .when((e1 == e2) & (s1 > s2), "finishes")
-           .when((e1 == e2) & (s1 < s2), "finished_by")
-           .when((s1 > s2) & (e1 < e2), "during")
-           .when((s1 < s2) & (e1 > e2), "contains")
-           .when(s1 < s2, "overlaps")
-           .otherwise("overlapped_by"))
-    return (t.select(rel.alias("rel"))
-            .groupBy("rel").agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("rel"))
-
-
-def q_http_headers(spark, sf_dir) -> DataFrame:
-    """HTTP response-header parsing — the per-fetch hot path of a crawl
-    pipeline (status line, Content-Type media type + charset attribute
-    per RFC 9110 §8.3, Cache-Control max-age, Content-Length), as pure
-    regexp column algebra over deterministically synthesized raw header
-    blobs. Spark's java.util.regex vs DuckDB's RE2 are INDEPENDENT
-    regex engines running the same patterns — a cross-engine parse
-    check, not a replay. Missing charset defaults to utf-8 (the RFC
-    9110 HTML default convention)."""
-    d = F.col("doc_id")
-    status = F.element_at(F.split(F.lit("200|200|301|404|503"), "[|]"),
-                          (d % 5 + 1).cast("int"))
-    mime = F.element_at(F.split(F.lit(
-        "text/html|application/json|text/plain|image/png"), "[|]"),
-        (d % 4 + 1).cast("int"))
-    charset = F.when(d % 3 == 0, F.lit("; charset=ISO-8859-1")).otherwise(
-        F.when(d % 3 == 1, F.lit("; charset=utf-8")).otherwise(F.lit("")))
-    raw = F.concat(
-        F.lit("HTTP/1.1 "), status, F.lit(" OK\r\n"),
-        F.lit("Content-Type: "), mime, charset, F.lit("\r\n"),
-        F.lit("Cache-Control: public, max-age="),
-        ((d * 37) % 86400).cast("string"), F.lit("\r\n"),
-        F.lit("Content-Length: "), ((d * 991) % 100000).cast("string"),
-        F.lit("\r\nServer: graft/1.0\r\n\r\n"))
-    docs = load(spark, sf_dir, "documents").select("doc_id", raw.alias("raw"))
-    parsed = docs.select(
-        "doc_id",
-        F.regexp_extract("raw", r"^HTTP/1\.1 (\d{3})", 1).cast("int")
-        .alias("status"),
-        F.regexp_extract("raw", r"Content-Type: ([a-z]+/[a-z]+)", 1)
-        .alias("media_type"),
-        F.lower(F.coalesce(F.nullif(F.regexp_extract(
-            "raw", r"charset=([A-Za-z0-9-]+)", 1), F.lit("")),
-            F.lit("utf-8"))).alias("charset"),
-        F.regexp_extract("raw", r"max-age=(\d+)", 1).cast("long")
-        .alias("max_age"),
-        F.regexp_extract("raw", r"Content-Length: (\d+)", 1).cast("long")
-        .alias("clen"))
-    return (parsed.groupBy("status", "media_type", "charset")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("max_age").alias("sum_max_age"),
-                 F.sum("clen").alias("sum_clen"))
-            .orderBy("status", "media_type", "charset"))
-
-
-def q_hmac_sha256(spark, sf_dir) -> DataFrame:
-    """HMAC-SHA256 per RFC 2104 composed from Spark's sha2 primitive —
-    the content-authentication tag a pipeline stamps on shipped shards:
-    tag = H(K⊕opad ‖ H(K⊕ipad ‖ msg)) with the padded-key XOR blocks
-    precomputed as hex literals (key < block size, zero-padded to 64).
-    Everything stays JVM-side binary algebra (unhex/concat/sha2). The
-    oracle is CPython's hmac/hashlib recomputed at check time — an
-    independent FIPS 198-1 implementation, not a replay; the public
-    'f7bc83f4…' quick-brown-fox vector is pinned in
-    tests/test_geokeys.py::test_hmac_known_vector."""
-    from independent_oracles import HMAC_KEY
-
-    key = HMAC_KEY.ljust(64, b"\0")
-    ipad = bytes(b ^ 0x36 for b in key).hex()
-    opad = bytes(b ^ 0x5c for b in key).hex()
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    msg = F.encode(F.substring("text", 1, 80), "UTF-8")
-    inner = F.sha2(F.concat(F.unhex(F.lit(ipad)), msg), 256)
-    tag = F.sha2(F.concat(F.unhex(F.lit(opad)), F.unhex(inner)), 256)
-    return docs.select("doc_id", tag.alias("tag")).orderBy("doc_id")
-
-
-def q_ewma_trend(spark, sf_dir) -> DataFrame:
-    """Exponentially-weighted moving average (decay 3/4) over the last
-    12 daily revenue totals per series — the streaming-smoother
-    semantics, made EXACT: the recurrence s_t=(3s_{t-1}+y_t)/4 unrolls
-    to integer weights 3^(n-t)·4^(t-1) (S_n = 4^n·s_n stays int64 for
-    12 taps), so both engines sum exact integers and perform ONE final
-    IEEE division S/4^n. Window row_number picks the taps; weights come
-    from literal power tables (no float pow anywhere)."""
-    p3 = [3 ** i for i in range(13)]
-    p4 = [4 ** i for i in range(13)]
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg(F.sum("cents").alias("y")))
-    w = Window.partitionBy("event_type").orderBy(F.desc("day"))
-    last = (daily.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 12))
-    m = (last.groupBy("event_type").agg(F.count(F.lit(1)).alias("m")))
-    a3 = F.array(*[F.lit(v) for v in p3])
-    a4 = F.array(*[F.lit(v) for v in p4])
-    t = (last.join(F.broadcast(m), "event_type")
-         .withColumn("t", F.col("m") - F.col("rn"))
-         .withColumn("wt", F.element_at(a3, (F.col("m") - 1 - F.col("t") + 1)
-                                        .cast("int")) *
-                     F.when(F.col("t") == 0, F.lit(1)).otherwise(
-                         F.element_at(a4, F.col("t").cast("int")))))
-    return (t.groupBy("event_type")
-            .agg(F.sum(F.col("y") * F.col("wt")).alias("s_scaled"),
-                 F.max("m").alias("m"),
-                 F.sum("y").alias("sum_y"))
-            .select("event_type", "m", "s_scaled", "sum_y",
-                    (F.col("s_scaled") /
-                     F.element_at(a4, F.col("m").cast("int"))
-                     .cast("double")).alias("ewma"))
-            .orderBy("event_type"))
-
-
-def q_weighted_sample(spark, sf_dir) -> DataFrame:
-    """Weighted sampling without replacement (Efraimidis–Spirakis 2006,
-    exponential-clock form): key = −ln(u)/w with u a deterministic
-    Knuth multiplicative hash of doc_id mapped into (0,1) and w =
-    n_chars — the smallest k keys per language are the weighted sample.
-    Distributed shape: a scan + per-group top-k (no global sort); the
-    float chain is the same expression text on both engines over exact
-    integers, ties impossible (u injective per doc)."""
-    docs = load(spark, sf_dir, "documents")
-    u = ((F.col("doc_id") * 2654435761) % 2147483648 + 1).cast("double") \
-        / 2147483649.0
-    w = F.greatest(F.lit(1), F.col("n_chars")).cast("double")
-    key = -F.log(u) / w
-    t = docs.select("doc_id", "lang", key.alias("k"))
-    win = Window.partitionBy("lang").orderBy("k", "doc_id")
-    return (t.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= 10)
-            .select("lang", "rn", "doc_id", "k")
-            .orderBy("lang", "rn"))
-
-
-def q_map_surface(spark, sf_dir) -> DataFrame:
-    """Map-typed column surface — map_from_arrays over deduped leading
-    tokens, transform_values (doc-dependent rewrite), map_filter (key
-    predicate), map_entries→sorted render. The MapType algebra is
-    Spark-specific; the oracle derives the IDENTICAL rendered entries
-    relationally (DISTINCT unnest + string_agg ORDER BY), so the check
-    is semantic (set-of-entries), not a text replay. Sorted render
-    makes the comparison order-free by construction."""
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 1)
-    toks = F.slice(F.filter(F.split(F.lower("text"), " "),
-                            lambda x: x != ""), 1, 6)
-    ks = F.array_distinct(toks)
-    m = F.map_from_arrays(ks, F.transform(ks, lambda k: F.length(k)))
-    m2 = F.transform_values(m, lambda k, v: v * 2 + F.col("doc_id") % 3)
-    m3 = F.map_filter(m2, lambda k, v: F.length(k) > 3)
-    rendered = F.array_join(F.array_sort(F.transform(
-        F.map_entries(m3),
-        lambda e: F.concat(e["key"], F.lit("="),
-                           e["value"].cast("string")))), "|")
-    return docs.select(
-        "doc_id", F.size(m).alias("n_keys"), F.size(m3).alias("n_kept"),
-        rendered.alias("entries")).orderBy("doc_id")
-
-
-def q_sitemap_urls(spark, sf_dir) -> DataFrame:
-    """XML sitemap ingestion via Spark's xpath surface — the crawl-
-    seeding path: per-host sitemap documents assembled from sorted
-    <url> elements, then xpath('urlset/url/loc/text()') explodes the
-    locs and the priorities come off the sibling axis. The ORACLE never
-    parses XML — it derives the same rollup analytically from doc_id —
-    so the check exercises the engine's real XPath evaluator against
-    closed-form expectations."""
-    d = F.col("doc_id")
-    elem = F.concat(
-        F.lit("<url><loc>https://h"), (d % 23).cast("string"),
-        F.lit(".example/p"), d.cast("string"),
-        F.lit(".html</loc><priority>0."), (d % 9 + 1).cast("string"),
-        F.lit("</priority></url>"))
-    docs = load(spark, sf_dir, "documents").select(
-        (d % 23).alias("host"), d.alias("doc_id"), elem.alias("elem"))
-    sm = (docs.groupBy("host")
-          .agg(F.concat(F.lit("<urlset>"), F.array_join(F.array_sort(
-              F.collect_list(F.struct("doc_id", "elem")))["elem"], ""),
-              F.lit("</urlset>")).alias("xml")))
-    parsed = sm.select(
-        "host",
-        F.expr("xpath(xml, 'urlset/url/loc/text()')").alias("locs"),
-        F.expr("xpath(xml, 'urlset/url/priority/text()')").alias("pris"))
-    return (parsed.select(
-        "host", F.size("locs").alias("n_urls"),
-        F.array_min("locs").alias("loc_min"),
-        F.array_max("locs").alias("loc_max"),
-        F.aggregate(F.transform(
-            F.col("pris"),
-            lambda p: F.substring(p, 3, 1).cast("long")),
-            F.lit(0).cast("long"), lambda a, x: a + x)
-        .alias("pri_digit_sum"))
-        .orderBy("host"))
-
-
 def q_jaro_winkler(spark, sf_dir) -> DataFrame:
     """Jaro–Winkler similarity from the published 1990 definition
     (operators/fuzzy.py — greedy windowed matching, half-transposition
@@ -5615,667 +4928,6 @@ def q_jaro_winkler(spark, sf_dir) -> DataFrame:
         .orderBy("doc_id"))
 
 
-def q_luhn_check(spark, sf_dir) -> DataFrame:
-    """Luhn mod-10 validation (ISO/IEC 7812, the card/IMEI checksum) —
-    Spark's luhn_check builtin vs the oracle's from-scratch SQL
-    reimplementation of the published algorithm (reverse walk, double
-    every second digit, digit-sum fold): the engine surface is checked
-    against the spec, not replayed. The classic 79927398713 vector is
-    asserted inline at plan-build time via the filter below never being
-    empty (and in the oracle's identical algebra)."""
-    d = F.col("doc_id")
-    s = ((d * 7919) % 100000000 + 10000000).cast("string")
-    docs = load(spark, sf_dir, "documents").select("doc_id", s.alias("s"))
-    return (docs.select(
-        "doc_id", "s",
-        F.expr("luhn_check(s)").cast("int").alias("is_valid"))
-        .orderBy("doc_id"))
-
-
-def q_url_parse_surface(spark, sf_dir) -> DataFrame:
-    """parse_url surface (PROTOCOL/AUTHORITY/HOST/PATH/QUERY/REF +
-    keyed query lookup) — the crawl pipeline's URL dissection builtin,
-    exercised over full-form URLs (userinfo, port, query, fragment).
-    Spark's parse_url is java.net.URI-backed; the oracle dissects the
-    SAME strings with RE2 regexps — independent parsers agreeing on
-    RFC 3986 structure."""
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://user:pw@h"), (d % 13).cast("string"),
-        F.lit(".example:8"), (d % 10).cast("string"),
-        F.lit("43/p/"), d.cast("string"), F.lit("/x.html?a="),
-        (d % 5).cast("string"), F.lit("&b="), (d % 7).cast("string"),
-        F.lit("#s"), (d % 3).cast("string"))
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("u")).filter(d % 6 == 2)
-    return (docs.select(
-        "doc_id",
-        F.expr("parse_url(u, 'PROTOCOL')").alias("proto"),
-        F.expr("parse_url(u, 'HOST')").alias("host"),
-        F.expr("parse_url(u, 'PATH')").alias("path"),
-        F.expr("parse_url(u, 'QUERY')").alias("query"),
-        F.expr("parse_url(u, 'REF')").alias("frag"),
-        F.expr("parse_url(u, 'QUERY', 'b')").alias("qb"))
-        .orderBy("doc_id"))
-
-
-def q_printf_surface(spark, sf_dir) -> DataFrame:
-    """format_string/printf surface — C-style conversions (%s, %05d,
-    %x, width-padded %3d, literal %%) via Spark's java.util.Formatter
-    vs DuckDB's fmt-backed printf: two independent formatter
-    implementations of the same published conversion grammar."""
-    docs = load(spark, sf_dir, "documents")
-    line = F.format_string(
-        "%s=%05d/%x/%3d%%", F.col("lang"),
-        F.col("n_chars") % 100000, F.col("doc_id") % 4096,
-        F.col("doc_id") % 100)
-    return (docs.select(F.col("doc_id"), line.alias("line"))
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sha2(F.concat_ws(
-                     "\n", F.array_sort(F.collect_list("line"))), 256)
-                 .alias("sha")))
-
-
-def q_base64_surface(spark, sf_dir) -> DataFrame:
-    """RFC 4648 base64 + hex codec surface, BOTH directions (encode →
-    decode roundtrip must restore the text): Spark's java.util.Base64/
-    Hive hex vs DuckDB's own codecs — independent implementations of
-    the published alphabet, incl. padding."""
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 3)
-    s50 = F.substring("text", 1, 50)
-    b64 = F.base64(F.encode(s50, "UTF-8"))
-    return (docs.select(
-        "doc_id", b64.alias("b64"),
-        F.decode(F.unbase64(b64), "UTF-8").alias("back"),
-        F.hex(F.encode(F.substring("text", 1, 8), "UTF-8")).alias("hx"),
-        F.decode(F.unhex(F.hex(F.encode(F.substring("text", 1, 8),
-                                        "UTF-8"))), "UTF-8")
-        .alias("hx_back"))
-        .orderBy("doc_id"))
-
-
-def q_dist_rank_surface(spark, sf_dir) -> DataFrame:
-    """Distribution-rank window surface — percent_rank() and
-    cume_dist(), the two rational-definition window functions
-    ((rank-1)/(n-1) and rows≤current/n: ONE IEEE division each, so
-    bit-equal cross-engine). Tie groups (equal cents) must share
-    values; the rollup sums floor(·×10⁵) per series to pin every row
-    without emitting duplicate-keyed rows."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", F.floor(F.col("value") * 100).cast("long")
-        .alias("cents"))
-    w = Window.partitionBy("event_type").orderBy("cents")
-    t = ev.select(
-        "event_type", "cents",
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"))
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.floor(F.col("pr") * 100000)).alias("sum_pr5"),
-                 F.sum(F.floor(F.col("cd") * 100000)).alias("sum_cd5"),
-                 F.max("pr").alias("max_pr"))
-            .orderBy("event_type"))
-
-
-def q_width_bucket(spark, sf_dir) -> DataFrame:
-    """width_bucket equi-width histogram assignment (SQL:2003) —
-    Spark's builtin vs the oracle's from-definition algebra
-    (floor(nb·(v−lo)/(hi−lo))+1 with under/overflow buckets 0 and
-    nb+1, the EXACT operation order Spark's WidthBucket codegen uses).
-    The value stream exceeds [0,100) so both edge buckets are
-    populated."""
-    ev = load(spark, sf_dir, "events").select("value")
-    wb = F.width_bucket(F.col("value"), F.lit(0.0), F.lit(100.0),
-                        F.lit(16))
-    return (ev.select(wb.alias("bucket"))
-            .groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("bucket"))
-
-
-def q_str_to_map_surface(spark, sf_dir) -> DataFrame:
-    """str_to_map parsing surface (the Hive-inherited kv-blob splitter
-    a webtext pipeline aims at query strings and header lines) + keyed
-    lookup — rendered as sorted entries so the comparison is
-    map-order-free; the oracle re-derives the entries relationally
-    from the same delimited text."""
-    d = F.col("doc_id")
-    s = F.concat(
-        F.lit("k"), (d % 5).cast("string"), F.lit(":"),
-        (d % 7).cast("string"),
-        F.lit(",j"), (d % 4).cast("string"), F.lit(":"),
-        (d % 11).cast("string"),
-        F.lit(",z:"), (d % 3).cast("string"))
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", s.alias("s")).filter(d % 5 == 0)
-    m = F.expr("str_to_map(s, ',', ':')")
-    rendered = F.array_join(F.array_sort(F.transform(
-        F.map_entries(m),
-        lambda e: F.concat(e["key"], F.lit("="), e["value"]))), "|")
-    return (docs.select(
-        "doc_id", F.size(m).alias("n_keys"),
-        rendered.alias("entries"),
-        F.element_at(m, F.lit("z")).alias("z_val"))
-        .orderBy("doc_id"))
-
-
-def q_lateral_surface(spark, sf_dir) -> DataFrame:
-    """Row-multiplying lateral surface: stack(n, ...) (the UNPIVOT
-    kernel) and posexplode (ordinal explode). Both engines must agree
-    on ORDINALS, not just multisets — pos is part of the group key.
-    Oracle: stack as UNION ALL, posexplode as a range cross-join
-    subscript walk."""
-    docs = load(spark, sf_dir, "documents")
-    stacked = docs.select(
-        F.col("doc_id"),
-        F.expr("stack(3, 'lang', lang, 'src', source, 'len', "
-               "cast(n_chars as string)) AS (k, v)"))
-    s_agg = (stacked.groupBy("k")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.min("v").alias("mn"), F.max("v").alias("mx"))
-             .select(F.lit("stack").alias("kind"), F.col("k").alias("key"),
-                     "n", "mn", "mx"))
-    toks = docs.select(
-        (F.col("doc_id") % 7).alias("g"),
-        F.posexplode(F.slice(F.split(F.lower("text"), " "), 1, 4))
-        .alias("pos", "tok"))
-    p_agg = (toks.groupBy("pos")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.min("tok").alias("mn"), F.max("tok").alias("mx"))
-             .select(F.lit("pos").alias("kind"),
-                     F.col("pos").cast("string").alias("key"),
-                     "n", "mn", "mx"))
-    return s_agg.unionByName(p_agg).orderBy("kind", "key")
-
-
-def q_uuid5(spark, sf_dir) -> DataFrame:
-    """RFC 4122 name-based UUIDv5 composed from Spark's sha1 primitive
-    — the deterministic content-id a pipeline mints per host/url (same
-    input ⇒ same id on every run, unlike uuid()). The version nibble
-    ('5') and the variant nibble (high two bits → 10, i.e. '89ab'
-    alphabet) are set by explicit STRING surgery on the hex digest, per
-    spec §4.3/§4.1.1. Oracle: CPython's uuid.uuid5 — the reference
-    implementation — as a VALUES literal; the python.org public vector
-    is pinned in tests/test_geokeys.py::test_uuid5_known_vector."""
-    d = F.col("doc_id")
-    name = F.concat(F.lit("h"), (d % 97).cast("string"),
-                    F.lit(".example"))
-    ns = "6ba7b8109dad11d180b400c04fd430c8"  # NAMESPACE_DNS bytes
-    hx = F.sha1(F.concat(F.unhex(F.lit(ns)), F.encode(name, "UTF-8")))
-    variant_alpha = F.split(F.lit("8|9|a|b"), "[|]")
-    vchar = F.element_at(
-        variant_alpha,
-        (F.conv(F.substring(hx, 17, 1), 16, 10).cast("int") % 4 + 1))
-    u = F.concat(
-        F.substring(hx, 1, 8), F.lit("-"),
-        F.substring(hx, 9, 4), F.lit("-"),
-        F.lit("5"), F.substring(hx, 14, 3), F.lit("-"),
-        vchar, F.substring(hx, 18, 3), F.lit("-"),
-        F.substring(hx, 21, 12))
-    docs = load(spark, sf_dir, "documents").filter(d % 6 == 1)
-    return docs.select("doc_id", u.alias("uuid")).orderBy("doc_id")
-
-
-def q_islands_gaps(spark, sf_dir) -> DataFrame:
-    """Gaps-and-islands — consecutive-run detection over a sparse id
-    sequence (the resume/backfill primitive: which checkpoint ranges
-    are contiguous, where are the holes). ENGINE uses the rank-
-    difference idiom (value − dense_rank() is constant within an
-    island); the ORACLE uses the other classic derivation (LAG start-
-    flags + running sum) — two independent window formulations that
-    must produce identical islands."""
-    s = (load(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 5 != 3)
-         .select((F.col("doc_id") / 7).cast("long").alias("v"))
-         .distinct())
-    w = Window.orderBy("v")
-    t = s.withColumn("grp", F.col("v") - F.dense_rank().over(w))
-    isl = (t.groupBy("grp")
-           .agg(F.min("v").alias("start"), F.max("v").alias("end"),
-                F.count(F.lit(1)).alias("len")))
-    return (isl.select("start", "end", "len")
-            .orderBy("start"))
-
-
-def q_rank_sum_test(spark, sf_dir) -> DataFrame:
-    """Mann–Whitney rank-sum statistic with midrank ties, EXACT: twice
-    the average rank of a tie group is the integer 2·rank + c − 1, so
-    2R₁ and 2U₁ = 2R₁ − n₁(n₁+1) accumulate as plain bigints — the
-    nonparametric A/B readout with zero float anywhere. One window
-    pass + one groupBy per series."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", (F.col("event_id") % 2).alias("grp"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    w = Window.partitionBy("event_type").orderBy("cents")
-    wt = Window.partitionBy("event_type", "cents")
-    t = ev.select(
-        "event_type", "grp",
-        (2 * F.rank().over(w) + F.count(F.lit(1)).over(wt) - 1)
-        .alias("two_avg_rank"))
-    g = (t.groupBy("event_type")
-         .agg(F.count(F.lit(1)).alias("n_all"),
-              F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))
-              .alias("n1"),
-              F.sum(F.when(F.col("grp") == 0, F.col("two_avg_rank"))
-                    .otherwise(0)).alias("two_r1")))
-    return (g.select(
-        "event_type", "n1", (F.col("n_all") - F.col("n1")).alias("n2"),
-        "two_r1",
-        (F.col("two_r1") - F.col("n1") * (F.col("n1") + 1))
-        .alias("two_u1"))
-        .orderBy("event_type"))
-
-
-def q_tz_convert(spark, sf_dir) -> DataFrame:
-    """Named-timezone conversion via the IANA tzdb (Spark's JSR-310
-    zone rules vs DuckDB's ICU — two independent tz databases must
-    agree on wall clocks): UTC event stream rendered in New York (DST
-    both sides), Berlin, and Kolkata (the +05:30 half-hour offset that
-    catches integer-hour assumptions). Local-hour histogram per zone
-    pins every conversion."""
-    zones = F.split(
-        F.lit("America/New_York|Europe/Berlin|Asia/Kolkata"), "[|]")
-    ev = load(spark, sf_dir, "events").select(
-        "ts", F.element_at(zones, (F.col("event_id") % 3 + 1)
-                           .cast("int")).alias("zone"))
-    local = F.from_utc_timestamp(F.col("ts"), F.col("zone"))
-    return (ev.select("zone", F.hour(local).alias("local_hour"),
-                      F.to_date(local).alias("local_date"))
-            .groupBy("zone", "local_hour")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("local_date").alias("n_dates"))
-            .orderBy("zone", "local_hour"))
-
-
-def q_chi_square(spark, sf_dir) -> DataFrame:
-    """Chi-square independence test over the lang×source contingency
-    table, float-hazard-free: each cell's contribution is the ONE IEEE
-    chain (o·N − r·c)²/(r·c·N) over exact integer marginals, floored
-    at ×10⁹ BEFORE the cross-cell sum — so the statistic accumulates
-    as a plain bigint and is partitioning-invariant by construction
-    (a raw double Σ over cells would be shuffle-order-dependent).
-    Broadcast marginals; two small aggs + one projection."""
-    docs = load(spark, sf_dir, "documents").select("lang", "source")
-    o = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("o"))
-    r = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("r"))
-    c = docs.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
-    n = docs.agg(F.count(F.lit(1)).alias("n"))
-    cell = (o.join(F.broadcast(r), "lang")
-            .join(F.broadcast(c), "source")
-            .crossJoin(F.broadcast(n)))
-    # square in DOUBLE: (o·N − r·c)² can exceed int64 at large sf
-    num = (F.col("o") * F.col("n") - F.col("r") * F.col("c")) \
-        .cast("double")
-    term = (num * num) / \
-        (F.col("r") * F.col("c") * F.col("n")).cast("double")
-    t = cell.select(F.floor(term * 1e9).cast("long").alias("t9"))
-    dims = cell.agg(
-        F.countDistinct("lang").alias("nr"),
-        F.countDistinct("source").alias("nc"))
-    return (t.agg(F.sum("t9").alias("chi2_e9"),
-                  F.count(F.lit(1)).alias("n_cells"),
-                  F.max("t9").alias("max_cell_e9"))
-            .crossJoin(F.broadcast(dims))
-            .select("chi2_e9", "n_cells", "max_cell_e9",
-                    ((F.col("nr") - 1) * (F.col("nc") - 1)).alias("dof")))
-
-
-def q_reachability(spark, sf_dir) -> DataFrame:
-    """Bounded transitive closure (≤4 hops) on the doc DAG — ENGINE
-    runs the log-step DOUBLING plan (R₂ = E ∪ E∘E, R₄ = R₂ ∪ R₂∘R₂:
-    two self-join rounds instead of four sequential expansions — the
-    shuffle-count argument that matters at 10¹² edges); the ORACLE runs
-    a depth-tracked WITH RECURSIVE linear expansion. Different
-    evaluation strategies, identical reachable-pair sets."""
-    e = (load(spark, sf_dir, "documents")
-         .select((F.col("doc_id") % 200).alias("u"),
-                 (F.col("doc_id") % 200 + 1 + (F.col("doc_id") * 7) % 3)
-                 .alias("v"))
-         .distinct())
-
-    def compose(a, b):
-        return (a.alias("x")
-                .join(b.alias("y"), F.col("x.v") == F.col("y.u"))
-                .select(F.col("x.u").alias("u"), F.col("y.v").alias("v")))
-
-    r2 = e.unionByName(compose(e, e)).distinct()
-    r4 = r2.unionByName(compose(r2, r2)).distinct()
-    return (r4.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("n_reach"),
-                 F.min("v").alias("v_min"), F.max("v").alias("v_max"),
-                 F.sum("v").alias("v_sum"))
-            .orderBy("u"))
-
-
-def q_rendezvous_hash(spark, sf_dir) -> DataFrame:
-    """Rendezvous (highest-random-weight) hashing — Thaler &
-    Ravishankar 1998, the shard-assignment scheme whose MINIMAL-
-    DISRUPTION property the row pins: keys are assigned under an
-    8-node ring and a 7-node ring (node n3 removed), and by
-    construction every key that moved must have been on n3 — the
-    output includes that violation count, which both engines must
-    agree is ZERO. Weights are sha256-derived 60-bit ints (the
-    neg_sample idiom); assignment is ONE broadcast cross join +
-    max_by, no shuffle of the key table."""
-    nodes8 = [f"n{i}" for i in range(8)]
-    d = F.col("doc_id")
-    key = F.concat(F.lit("url"), d.cast("string"))
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", key.alias("key")).filter(d % 2 == 0)
-
-    def weight(node_col, key_col):
-        return F.conv(F.substring(F.sha2(F.concat(
-            node_col, F.lit("|"), key_col), 256), 1, 15), 16, 10) \
-            .cast("long")
-
-    nodes = spark.createDataFrame([(n,) for n in nodes8], "node string")
-    scored = (docs.crossJoin(F.broadcast(nodes))
-              .select("doc_id", "key", "node",
-                      weight(F.col("node"), F.col("key")).alias("w")))
-    a8 = (scored.groupBy("doc_id")
-          .agg(F.max_by("node", "w").alias("n8")))
-    a7 = (scored.filter(F.col("node") != "n3").groupBy("doc_id")
-          .agg(F.max_by("node", "w").alias("n7")))
-    j = a8.join(a7, "doc_id")
-    return (j.groupBy("n8")
-            .agg(F.count(F.lit(1)).alias("n_keys"),
-                 F.sum(F.when(F.col("n8") != F.col("n7"), 1)
-                       .otherwise(0)).alias("n_moved"),
-                 F.sum(F.when((F.col("n8") != F.col("n7")) &
-                              (F.col("n8") != "n3"), 1).otherwise(0))
-                 .alias("n_violations"))
-            .orderBy("n8"))
-
-
-def q_readability(spark, sf_dir) -> DataFrame:
-    """Flesch reading-ease scoring from pure integer counts (words,
-    [.!?]+ sentence breaks, [aeiouy]+ vowel-group syllables — the
-    published heuristic): the formula 206.835 − 1.015·W/S − 84.6·Syl/W
-    is one IEEE chain per doc over exact integers, floored ×100 before
-    the per-lang rollup so the aggregate is partition-order-free."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    txt = F.lower("text")
-    words = F.size(F.filter(F.split(txt, " "), lambda x: x != ""))
-    sents = F.greatest(F.lit(1), F.regexp_count(txt, F.lit(r"[.!?]+")))
-    syls = F.greatest(F.lit(1),
-                      F.regexp_count(txt, F.lit("[aeiouy]+")))
-    fre = (F.lit(206.835)
-           - F.lit(1.015) * (words.cast("double") / sents.cast("double"))
-           - F.lit(84.6) * (syls.cast("double") / words.cast("double")))
-    t = docs.select("lang", words.alias("w"), sents.alias("s"),
-                    syls.alias("y"),
-                    F.floor(fre * 100).cast("long").alias("fre100"))
-    return (t.filter(F.col("w") > 0)
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("w").alias("sum_words"),
-                 F.sum("s").alias("sum_sents"),
-                 F.sum("y").alias("sum_syls"),
-                 F.sum("fre100").alias("sum_fre100"),
-                 F.min("fre100").alias("min_fre100"),
-                 F.max("fre100").alias("max_fre100"))
-            .orderBy("lang"))
-
-
-def q_ks_test(spark, sf_dir) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov statistic as an EXACT RATIONAL:
-    D = max|F₁−F₂| evaluated on the combined support, kept as the
-    integer max of |c₁·n₂ − c₂·n₁| with denominator n₁·n₂ — no float
-    until never. Window cumulative counts per sample over the merged
-    value axis; one groupBy per series."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", (F.col("event_id") % 2).alias("grp"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    per_v = (ev.groupBy("event_type", "cents")
-             .agg(F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))
-                  .alias("a1"),
-                  F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))
-                  .alias("a2")))
-    w = (Window.partitionBy("event_type").orderBy("cents")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = per_v.select(
-        "event_type", "cents",
-        F.sum("a1").over(w).alias("c1"),
-        F.sum("a2").over(w).alias("c2"))
-    tot = (ev.groupBy("event_type")
-           .agg(F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))
-                .alias("n1"),
-                F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))
-                .alias("n2")))
-    j = cum.join(F.broadcast(tot), "event_type")
-    return (j.groupBy("event_type")
-            .agg(F.max(F.abs(F.col("c1") * F.col("n2")
-                             - F.col("c2") * F.col("n1")))
-                 .alias("d_num"),
-                 F.max(F.col("n1") * F.col("n2")).alias("d_den"))
-            .orderBy("event_type"))
-
-
-def q_bitmap_distinct(spark, sf_dir) -> DataFrame:
-    """Spark 3.5 bitmap aggregate surface — the documented exact-
-    distinct recipe (group by bitmap_bucket_number, OR bit positions
-    into 4 KiB bitmaps, count bits, sum across buckets) run TWICE: once
-    directly and once through an extra bitmap_or_agg merge level
-    (per-source partial bitmaps OR-ed together — the re-aggregation
-    path a warehouse rollup uses). The oracle is plain
-    count(DISTINCT): the bitmap algebra must reproduce it exactly."""
-    docs = load(spark, sf_dir, "documents").select("lang", "source",
-                                                   "doc_id")
-    b1 = (docs.groupBy("lang", F.expr("bitmap_bucket_number(doc_id)")
-                       .alias("bkt"))
-          .agg(F.expr("bitmap_count(bitmap_construct_agg("
-                      "bitmap_bit_position(doc_id)))").alias("c")))
-    direct = (b1.groupBy("lang").agg(F.sum("c").alias("nd_direct")))
-    b2 = (docs.groupBy("lang", "source",
-                       F.expr("bitmap_bucket_number(doc_id)")
-                       .alias("bkt"))
-          .agg(F.expr("bitmap_construct_agg("
-                      "bitmap_bit_position(doc_id))").alias("bm")))
-    merged = (b2.groupBy("lang", "bkt")
-              .agg(F.expr("bitmap_count(bitmap_or_agg(bm))").alias("c"))
-              .groupBy("lang").agg(F.sum("c").alias("nd_merged")))
-    return (direct.join(merged, "lang")
-            .select("lang", "nd_direct", "nd_merged")
-            .orderBy("lang"))
-
-
-def q_interval_merge(spark, sf_dir) -> DataFrame:
-    """Interval coalescing (the calendar/coverage primitive): merge
-    overlapping [s,e) ranges per source via the running-max sweep — a
-    new island starts exactly when s exceeds every prior end. Output
-    pins island count, total covered length (double-counted overlap
-    must vanish), and the longest merged span; all integers."""
-    d = F.col("doc_id")
-    iv = load(spark, sf_dir, "documents").select(
-        "source", ((d * 13) % 5000).alias("s"),
-        ((d * 13) % 5000 + d % 40 + 5).alias("e"))
-    w = (Window.partitionBy("source").orderBy("s", "e")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    t = iv.withColumn("prev_max_e", F.max("e").over(w))
-    t = t.withColumn(
-        "is_start",
-        F.when(F.col("prev_max_e").isNull() |
-               (F.col("s") > F.col("prev_max_e")), 1).otherwise(0))
-    w2 = (Window.partitionBy("source").orderBy("s", "e")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    t = t.withColumn("isl", F.sum("is_start").over(w2))
-    isl = (t.groupBy("source", "isl")
-           .agg(F.min("s").alias("ms"), F.max("e").alias("me")))
-    return (isl.groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_islands"),
-                 F.sum(F.col("me") - F.col("ms")).alias("covered"),
-                 F.max(F.col("me") - F.col("ms")).alias("longest"))
-            .orderBy("source"))
-
-
-def q_pivot_multi(spark, sf_dir) -> DataFrame:
-    """Multi-aggregate pivot — one pivot carrying TWO measures per
-    pivoted column (count + char sum per language): the Spark pivot
-    path emits suffixed columns which the row aliases explicitly; the
-    oracle builds the same wide table from CASE expressions."""
-    docs = load(spark, sf_dir, "documents")
-    langs = ["de", "en", "fr"]
-    p = (docs.filter(F.col("lang").isin(langs))
-         .groupBy("source").pivot("lang", langs)
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum("n_chars").alias("chars")))
-    cols = [F.col("source")]
-    for lg in langs:
-        cols.append(F.coalesce(F.col(f"{lg}_n"), F.lit(0))
-                    .alias(f"{lg}_n"))
-        cols.append(F.coalesce(F.col(f"{lg}_chars"), F.lit(0))
-                    .alias(f"{lg}_chars"))
-    return p.select(*cols).orderBy("source")
-
-
-def q_autocorr(spark, sf_dir) -> DataFrame:
-    """Lag-1 and lag-7 autocorrelation of the daily revenue series —
-    the seasonality probe, EXACT: the mean-centered estimator expands
-    into integer moments (n²P_k − nS(A_k+B_k) + m_k·S² over
-    n²Q − nS²), every one an int64 sum of thousand-scaled daily totals,
-    so both engines divide the SAME two integers. One groupBy + one
-    lag window; the regression-style tail is a projection."""
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    w = Window.partitionBy("event_type").orderBy("day")
-    t = daily.select(
-        "event_type", "y",
-        F.lag("y", 1).over(w).alias("y1"),
-        F.lag("y", 7).over(w).alias("y7"))
-    g = t.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("s"),
-        F.sum(F.col("y") * F.col("y")).alias("q"),
-        F.count("y1").alias("m1"),
-        F.sum(F.col("y") * F.col("y1")).alias("p1"),
-        F.sum(F.when(F.col("y1").isNotNull(), F.col("y"))).alias("a1"),
-        F.sum("y1").alias("b1"),
-        F.count("y7").alias("m7"),
-        F.sum(F.col("y") * F.col("y7")).alias("p7"),
-        F.sum(F.when(F.col("y7").isNotNull(), F.col("y"))).alias("a7"),
-        F.sum("y7").alias("b7"))
-    n, s = F.col("n"), F.col("s")
-
-    def r(k):
-        num = (n * n * F.col(f"p{k}")
-               - n * s * (F.col(f"a{k}") + F.col(f"b{k}"))
-               + F.col(f"m{k}") * s * s)
-        return num
-
-    den = n * n * F.col("q") - n * s * s
-    return (g.select(
-        "event_type", "n", r(1).alias("num1"), r(7).alias("num7"),
-        den.alias("den"),
-        (r(1).cast("double") / den.cast("double")).alias("r1"),
-        (r(7).cast("double") / den.cast("double")).alias("r7"))
-        .orderBy("event_type"))
-
-
-def q_shannon_entropy(spark, sf_dir) -> DataFrame:
-    """Shannon entropy of the per-language token distribution — the
-    corpus-diversity readout, partition-order-free: each distinct
-    token's −p·log₂p contribution is ONE IEEE chain over the exact
-    integers (c, N), floored at ×10⁹ BEFORE the cross-token sum, so the
-    entropy accumulates as a bigint (a raw double Σ would depend on
-    shuffle order)."""
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang", F.explode(F.slice(F.filter(
-            F.split(F.lower("text"), " "), lambda x: x != ""), 1, 6))
-        .alias("tok"))
-    c = toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c"))
-    n = toks.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    j = c.join(F.broadcast(n), "lang")
-    p = F.col("c").cast("double") / F.col("n").cast("double")
-    term = F.floor(-p * F.log2(p) * 1e9).cast("long")
-    return (j.select("lang", "c", "n", term.alias("t9"))
-            .groupBy("lang")
-            .agg(F.max("n").alias("n_tokens"),
-                 F.count(F.lit(1)).alias("n_distinct"),
-                 F.sum("t9").alias("entropy_e9"))
-            .orderBy("lang"))
-
-
-def q_zipf_slope(spark, sf_dir) -> DataFrame:
-    """Zipf rank-frequency slope — the log-log OLS over the top-200
-    token frequencies with BOTH axes floored to ×10⁶ integers before
-    the moments, so the slope is a ratio of two exact int64s (the
-    ln(rank)/ln(count) terms are each one libm call + one floor).
-    Rank ties break lexicographically. Scale note: at 10¹² docs the
-    top-k comes from per-shard partial top-k merge, not a global
-    window — here the 200-row window is the battery profile."""
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.filter(
-        F.split(F.lower("text"), " "), lambda x: x != "")).alias("tok"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy(F.desc("c"), "tok")
-    top = freq.withColumn("r", F.row_number().over(w)) \
-        .filter(F.col("r") <= 200)
-    t = top.select(
-        F.floor(F.log(F.col("r").cast("double")) * 1e6).cast("long")
-        .alias("x"),
-        F.floor(F.log(F.col("c").cast("double")) * 1e6).cast("long")
-        .alias("y"))
-    g = t.agg(F.count(F.lit(1)).alias("m"), F.sum("x").alias("sx"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return g.select(
-        "m", num.alias("num"), den.alias("den"),
-        (num.cast("double") / den.cast("double")).alias("slope"))
-
-
-def q_permutation_test(spark, sf_dir) -> DataFrame:
-    """Permutation test by deterministic hash-sign flipping — the
-    resampling inference a metrics pipeline runs when no parametric
-    form holds: 32 replicates, each flipping every observation's sign
-    by one sha256 bit (replicable across runs AND engines, unlike
-    rand()), statistic = signed cent sum, p-numerator = #replicates
-    with |T_b| ≥ |T_obs|. Everything integer; the replicate axis is a
-    broadcast 32-row cross join (scale shape: constant fan-out, one
-    groupBy)."""
-    B = 32
-    ev = (load(spark, sf_dir, "events")
-          .filter(F.col("event_id") % 4 == 0)
-          .select("event_type", "event_id",
-                  (F.col("event_id") % 2).alias("grp"),
-                  F.floor(F.col("value") * 100).cast("long")
-                  .alias("x")))
-    obs = (ev.groupBy("event_type")
-           .agg(F.sum(F.when(F.col("grp") == 0, F.col("x"))
-                      .otherwise(-F.col("x"))).alias("t_obs")))
-    reps = spark.range(B).select(F.col("id").alias("b"))
-    signed = (ev.crossJoin(F.broadcast(reps))
-              .select("event_type", "b",
-                      (F.when(
-                          F.conv(F.substring(F.sha2(F.concat(
-                              F.col("event_id").cast("string"),
-                              F.lit(":"), F.col("b").cast("string")),
-                              256), 1, 1), 16, 10).cast("int") % 2
-                          == 0, F.col("x")).otherwise(-F.col("x")))
-                      .alias("sx")))
-    tb = (signed.groupBy("event_type", "b")
-          .agg(F.sum("sx").alias("t_b")))
-    j = tb.join(F.broadcast(obs), "event_type")
-    return (j.groupBy("event_type")
-            .agg(F.max("t_obs").alias("t_obs"),
-                 F.sum(F.when(F.abs(F.col("t_b"))
-                              >= F.abs(F.col("t_obs")), 1)
-                       .otherwise(0)).alias("p_num"),
-                 F.count(F.lit(1)).alias("n_reps"),
-                 F.min("t_b").alias("t_min"),
-                 F.max("t_b").alias("t_max"))
-            .orderBy("event_type"))
-
-
 def q_haversine_bins(spark, sf_dir) -> DataFrame:
     """Great-circle distance binning (haversine, R = 6371.0088 km —
     the IUGG mean radius) from a fixed anchor: the geo-locality
@@ -6295,68 +4947,6 @@ def q_haversine_bins(spark, sf_dir) -> DataFrame:
     return (pts.select(F.floor(d / 1000.0).cast("long").alias("mm_bin"))
             .groupBy("mm_bin").agg(F.count(F.lit(1)).alias("n"))
             .orderBy("mm_bin"))
-
-
-def q_sssp(spark, sf_dir) -> DataFrame:
-    """Single-source shortest paths, bounded Bellman–Ford (≤6 edges) —
-    the min-plus semiring completing the graph-algebra family (max-plus
-    dag_layers, boolean-OR reachability, counting pagerank): per round
-    ONE edge join + min-groupBy, the textbook distributed relaxation.
-    Edge weights are min-deduped per (u,v). Oracle: WITH RECURSIVE path
-    enumeration (cost-carrying, depth-bounded) minimized per node —
-    path algebra vs relaxation algebra."""
-    d = F.col("doc_id")
-    e = (load(spark, sf_dir, "documents")
-         .select((d % 200).alias("u"),
-                 (d % 200 + 1 + (d * 7) % 3).alias("v"),
-                 (d % 9 + 1).alias("w"))
-         .groupBy("u", "v").agg(F.min("w").alias("w")))
-    dist = e.sparkSession.createDataFrame([(0, 0)], "node long, dist long")
-    for _ in range(6):
-        ext = (dist.join(e, dist.node == e.u)
-               .select(F.col("v").alias("node"),
-                       (F.col("dist") + F.col("w")).alias("dist")))
-        dist = (dist.unionByName(ext)
-                .groupBy("node").agg(F.min("dist").alias("dist")))
-    return dist.orderBy("node")
-
-
-def q_sprt(spark, sf_dir) -> DataFrame:
-    """Sequential probability-ratio test (Wald 1945) — the
-    early-stopping A/B monitor: per-series cumulative log-likelihood
-    ratio over the ordered conversion stream with the two per-step
-    increments and the ±log((1−β)/α) boundaries pre-scaled to ×10⁶
-    INTEGER literals (computed once, identical on both engines), so
-    the entire sequential walk is exact bigint algebra: first-crossing
-    index, decision, and final LLR."""
-    import math
-
-    l1 = math.floor(math.log(0.5 / 0.3) * 1e6)        # x=1 step
-    l0 = math.floor(math.log(0.5 / 0.7) * 1e6)        # x=0 step
-    bound = math.floor(math.log(0.95 / 0.05) * 1e6)   # ±A, α=β=0.05
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.unix_timestamp("ts").cast("long").alias("ep"), "event_id",
-        F.when(F.floor(F.col("value") * 100) > 5000, 1).otherwise(0)
-        .alias("x"))
-    w = (Window.partitionBy("event_type").orderBy("ep", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    wn = Window.partitionBy("event_type").orderBy("ep", "event_id")
-    t = ev.select(
-        "event_type",
-        F.row_number().over(wn).alias("rn"),
-        F.sum(F.when(F.col("x") == 1, l1).otherwise(l0)).over(w)
-        .alias("llr"))
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min(F.when(F.abs(F.col("llr")) >= bound,
-                              F.col("rn"))).alias("first_cross"),
-                 F.min(F.when(F.col("llr") >= bound, F.col("rn")))
-                 .alias("first_h1"),
-                 F.min(F.when(F.col("llr") <= -bound, F.col("rn")))
-                 .alias("first_h0"),
-                 F.max_by("llr", "rn").alias("final_llr"))
-            .orderBy("event_type"))
 
 
 def q_dup_clusters(spark, sf_dir) -> DataFrame:
@@ -6383,582 +4973,6 @@ def q_dup_clusters(spark, sf_dir) -> DataFrame:
             .select(F.col("size").alias("cluster_size"), "n_clusters",
                     "sum_label")
             .orderBy("cluster_size"))
-
-
-def q_matmul_relational(spark, sf_dir) -> DataFrame:
-    """Relational matrix multiply — the COO (i,k)×(k,j) join+groupBy
-    formulation that IS distributed matmul at any scale (one shuffle
-    on the contraction index, map-side partial sums): two 24×24
-    integer matrices derived from doc counts, C = A·B with exact
-    entries. Oracle: the identical contraction written as SQL — but
-    over its own independently-derived A and B."""
-    n = 24
-    d = F.col("doc_id")
-    docs = load(spark, sf_dir, "documents")
-    a = (docs.select((d % n).alias("i"), ((d * 3) % n).alias("k"))
-         .groupBy("i", "k").agg((F.count(F.lit(1)) % 7).alias("a")))
-    b = (docs.select(((d * 5) % n).alias("k"), ((d * 11) % n).alias("j"))
-         .groupBy("k", "j").agg((F.count(F.lit(1)) % 5).alias("b")))
-    c = (a.join(b, "k")
-         .groupBy("i", "j")
-         .agg(F.sum(F.col("a") * F.col("b")).alias("c")))
-    return (c.filter(F.col("c") != 0)
-            .groupBy("i")
-            .agg(F.count(F.lit(1)).alias("nnz"),
-                 F.sum("c").alias("row_sum"),
-                 F.max("c").alias("row_max"))
-            .orderBy("i"))
-
-
-def q_markov_transitions(spark, sf_dir) -> DataFrame:
-    """First-order Markov transition counts over per-user event
-    streams (the session-model estimator): consecutive event-initial
-    pairs via ONE lag window, then the (from,to) count matrix with
-    row-conditional probabilities as exact rationals (count·10⁶ //
-    row_total)."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.substring("event_type", 1, 1).alias("c"),
-        F.unix_timestamp("ts").cast("long").alias("ep"), "event_id")
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    t = (ev.withColumn("prev", F.lag("c").over(w))
-         .filter(F.col("prev").isNotNull()))
-    cnt = (t.groupBy(F.col("prev").alias("c_from"),
-                     F.col("c").alias("c_to"))
-           .agg(F.count(F.lit(1)).alias("n")))
-    tot = cnt.groupBy("c_from").agg(F.sum("n").alias("row_n"))
-    return (cnt.join(tot, "c_from")
-            .select("c_from", "c_to", "n",
-                    ((F.col("n") * 1000000 / F.col("row_n"))
-                     .cast("long")).alias("p_ppm"))
-            .orderBy("c_from", "c_to"))
-
-
-def q_label_propagation(spark, sf_dir) -> DataFrame:
-    """Synchronous min-label propagation (3 rounds) — the community
-    primitive distinct from components: each round every node adopts
-    min(own, neighbors') label SIMULTANEOUSLY, so round count matters
-    and the oracle unrolls the SAME three rounds as CTEs. Per round:
-    one join + one min-groupBy (the scale-canonical message pass)."""
-    d = F.col("doc_id")
-    docs = load(spark, sf_dir, "documents")
-    e = (docs.select((d % 150).alias("u"), ((d * 13) % 150).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct())
-    und = e.unionByName(e.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v"))).distinct()
-    lab = und.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("lab"))
-    for _ in range(3):
-        msg = (und.join(lab, und.v == lab.node)
-               .select(F.col("u").alias("node"),
-                       F.col("lab").alias("nlab")))
-        lab = (lab.unionByName(msg.select("node",
-                                          F.col("nlab").alias("lab")))
-               .groupBy("node").agg(F.min("lab").alias("lab")))
-    return (lab.groupBy("lab")
-            .agg(F.count(F.lit(1)).alias("sz"), F.min("node").alias("lo"),
-                 F.max("node").alias("hi"))
-            .orderBy("lab"))
-
-
-def q_base58_encode(spark, sf_dir) -> DataFrame:
-    """Base58 (Bitcoin alphabet) of a 6-byte payload as PURE column
-    algebra — the content-id rendering compact enough for URLs: nine
-    unrolled div/mod-58 steps (58⁹ > 2⁴⁸ covers the domain), position
-    emitted iff v ≥ 58^i (interior zero digits correctly render '1'),
-    leading zero BYTES preserved as '1' chars per the published
-    big-integer algorithm. Every other doc uses a small payload so the
-    leading-'1' path is hot. Oracle: an independent CPython divmod
-    reference (VALUES)."""
-    from independent_oracles import B58_ALPHA
-
-    d = F.col("doc_id")
-    v = F.when(d % 2 == 1, (d * 7919) % (1 << 48)).otherwise(d % 65536)
-    docs = (load(spark, sf_dir, "documents").filter(d % 5 == 2)
-            .select("doc_id", v.alias("v")))
-    alpha = F.split(F.lit("|".join(B58_ALPHA)), "[|]")
-    pieces = []
-    for i in range(8, -1, -1):
-        p = 58 ** i
-        digit = ((F.col("v") / p).cast("long") % 58 + 1).cast("int")
-        pieces.append(F.when(F.col("v") >= p, F.element_at(alpha, digit))
-                      .otherwise(F.lit("")))
-    lz = (F.when(F.col("v") == 0, 6)
-          .when(F.col("v") < (1 << 8), 5)
-          .when(F.col("v") < (1 << 16), 4)
-          .when(F.col("v") < (1 << 24), 3)
-          .when(F.col("v") < (1 << 32), 2)
-          .when(F.col("v") < (1 << 40), 1).otherwise(0))
-    b58 = F.concat(F.repeat(F.lit("1"), lz.cast("int")), *pieces)
-    return docs.select("doc_id", b58.alias("b58")).orderBy("doc_id")
-
-
-def q_rounding_modes(spark, sf_dir) -> DataFrame:
-    """Decimal rounding-mode semantics — round() is HALF_UP, bround()
-    is HALF_EVEN (banker's), pinned against the oracle's
-    FROM-DEFINITION integer algebra on exact cents at the tens place
-    (negative scale dodges decimal-precision construction entirely).
-    The rows where the two modes differ are exactly the …5-with-even-
-    tens cases; that differ-count is part of the output."""
-    ev = load(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    dec = F.col("cents").cast("decimal(18,0)")
-    t = ev.select(
-        "cents",
-        F.round(dec, -1).cast("long").alias("r_up"),
-        F.bround(dec, -1).cast("long").alias("r_even"))
-    return t.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("r_up").alias("sum_half_up"),
-        F.sum("r_even").alias("sum_half_even"),
-        F.sum(F.when(F.col("r_up") != F.col("r_even"), 1).otherwise(0))
-        .alias("n_differ"),
-        F.sum(F.when(F.col("cents") % 10 == 5, 1).otherwise(0))
-        .alias("n_midpoint"))
-
-
-def q_wilson_ci(spark, sf_dir) -> DataFrame:
-    """Wilson score interval for per-series conversion rates — the
-    small-sample-safe CI a metrics sheet should use instead of the
-    Wald interval: one IEEE chain per group over the exact integers
-    (c, n) with z = 1.96, bounds floored ×10⁹ so the output is
-    bigint-stable."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.when(F.floor(F.col("value") * 100) > 5000, 1).otherwise(0)
-        .alias("x"))
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("c"))
-    nn = F.col("n").cast("double")
-    p = F.col("c").cast("double") / nn
-    z2 = F.lit(1.96 * 1.96)
-    half = F.lit(1.96) * F.sqrt(
-        (p * (1.0 - p) + z2 / (4.0 * nn)) / nn)
-    lo = (p + z2 / (2.0 * nn) - half) / (1.0 + z2 / nn)
-    hi = (p + z2 / (2.0 * nn) + half) / (1.0 + z2 / nn)
-    return (g.select(
-        "event_type", "n", "c",
-        F.floor(lo * 1e9).cast("long").alias("lo_e9"),
-        F.floor(hi * 1e9).cast("long").alias("hi_e9"))
-        .orderBy("event_type"))
-
-
-def q_schema_infer(spark, sf_dir) -> DataFrame:
-    """CSV schema inference — the ingest-time type vote: per simulated
-    column, classify every cell (int/double/date/bool/empty/text) by
-    lexical class and apply the standard widening rule (all-int →
-    BIGINT, numeric mix → DOUBLE, any text → STRING, empties don't
-    vote). java.util.regex vs RE2 classify independently; the
-    inferred type is a CASE over exact counts."""
-    d = F.col("doc_id")
-    cell = (F.when(d % 6 == 0, (d * 17).cast("string"))
-            .when(d % 6 == 1, F.concat((d % 90).cast("string"),
-                                       F.lit("."), (d % 100).cast("string")))
-            .when(d % 6 == 2, F.concat(F.lit("2026-"),
-                                       F.lpad((d % 12 + 1).cast("string"),
-                                              2, "0"),
-                                       F.lit("-"),
-                                       F.lpad((d % 28 + 1).cast("string"),
-                                              2, "0")))
-            .when(d % 6 == 3, F.when(d % 2 == 0, "true").otherwise("false"))
-            .when(d % 6 == 4, F.lit("w")).otherwise(F.lit("")))
-    docs = load(spark, sf_dir, "documents").select(
-        (d % 3).alias("col_id"), cell.alias("cell"))
-    is_int = F.col("cell").rlike(r"^-?\d+$")
-    is_dbl = F.col("cell").rlike(r"^-?\d+\.\d+$")
-    is_date = F.col("cell").rlike(r"^\d{4}-\d{2}-\d{2}$")
-    is_bool = F.col("cell").rlike("^(true|false)$")
-    is_empty = F.col("cell") == ""
-    g = (docs.groupBy("col_id")
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum(is_int.cast("int")).alias("n_int"),
-              F.sum(is_dbl.cast("int")).alias("n_dbl"),
-              F.sum(is_date.cast("int")).alias("n_date"),
-              F.sum(is_bool.cast("int")).alias("n_bool"),
-              F.sum(is_empty.cast("int")).alias("n_empty")))
-    voters = (F.col("n") - F.col("n_empty"))
-    inferred = (F.when(voters == 0, "string")
-                .when(F.col("n_int") == voters, "bigint")
-                .when(F.col("n_int") + F.col("n_dbl") == voters, "double")
-                .when(F.col("n_date") == voters, "date")
-                .when(F.col("n_bool") == voters, "boolean")
-                .otherwise("string"))
-    return (g.select("col_id", "n", "n_int", "n_dbl", "n_date",
-                     "n_bool", "n_empty", inferred.alias("inferred"))
-            .orderBy("col_id"))
-
-
-def q_cohens_kappa(spark, sf_dir) -> DataFrame:
-    """Cohen's kappa — inter-annotator agreement over two
-    deterministic hash-derived binary labelers (the labeling-QA
-    readout of a training-data pipeline): observed and expected
-    agreement from exact contingency integers, kappa = (po−pe)/(1−pe)
-    expressed as ONE chain over n²-scaled integers (po_n2 = n·agree,
-    pe_n2 = r1·c1 + r0·c0), floored ×10⁹."""
-    d = F.col("doc_id")
-    a = (F.conv(F.substring(F.sha2(F.concat(F.lit("ra:"),
-                                            d.cast("string")), 256),
-                            1, 2), 16, 10).cast("int") % 2)
-    b = (F.conv(F.substring(F.sha2(F.concat(F.lit("rb:"),
-                                            d.cast("string")), 256),
-                            1, 2), 16, 10).cast("int") % 3 % 2)
-    docs = load(spark, sf_dir, "documents").select(
-        "lang", a.alias("ra"), b.alias("rb"))
-    g = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("ra") == F.col("rb"), 1).otherwise(0))
-        .alias("agree"),
-        F.sum("ra").alias("a1"), F.sum("rb").alias("b1"))
-    n = F.col("n")
-    po_n2 = n * F.col("agree")
-    pe_n2 = (F.col("a1") * F.col("b1")
-             + (n - F.col("a1")) * (n - F.col("b1")))
-    kappa = (po_n2 - pe_n2).cast("double") / (n * n - pe_n2).cast("double")
-    return (g.select("lang", "n", "agree", "a1", "b1",
-                     F.floor(kappa * 1e9).cast("long").alias("kappa_e9"))
-            .orderBy("lang"))
-
-
-def q_eval_metrics(spark, sf_dir) -> DataFrame:
-    """Classifier evaluation harness — precision/recall/F1/accuracy
-    from exact confusion-matrix integers (prediction = quality
-    heuristic, truth = hash-derived label): every metric is numerator/
-    denominator integer pairs plus ONE final division, so the scores
-    are bit-stable and the confusion counts are directly auditable."""
-    d = F.col("doc_id")
-    truth = (F.conv(F.substring(F.sha2(F.concat(
-        F.lit("y:"), d.cast("string")), 256), 1, 2), 16, 10)
-        .cast("int") % 2)
-    pred = F.when(F.col("n_chars") > 500, 1).otherwise(0)
-    docs = load(spark, sf_dir, "documents").select(
-        truth.alias("y"), pred.alias("p"))
-    g = docs.agg(
-        F.sum(F.when((F.col("y") == 1) & (F.col("p") == 1), 1)
-              .otherwise(0)).alias("tp"),
-        F.sum(F.when((F.col("y") == 0) & (F.col("p") == 1), 1)
-              .otherwise(0)).alias("fp"),
-        F.sum(F.when((F.col("y") == 1) & (F.col("p") == 0), 1)
-              .otherwise(0)).alias("fn"),
-        F.sum(F.when((F.col("y") == 0) & (F.col("p") == 0), 1)
-              .otherwise(0)).alias("tn"))
-    tp, fp, fn, tn = (F.col("tp"), F.col("fp"), F.col("fn"),
-                      F.col("tn"))
-    prec = tp.cast("double") / (tp + fp).cast("double")
-    rec = tp.cast("double") / (tp + fn).cast("double")
-    f1 = (2 * tp).cast("double") / (2 * tp + fp + fn).cast("double")
-    acc = (tp + tn).cast("double") / (tp + fp + fn + tn).cast("double")
-    return g.select(
-        "tp", "fp", "fn", "tn",
-        F.floor(prec * 1e9).cast("long").alias("prec_e9"),
-        F.floor(rec * 1e9).cast("long").alias("rec_e9"),
-        F.floor(f1 * 1e9).cast("long").alias("f1_e9"),
-        F.floor(acc * 1e9).cast("long").alias("acc_e9"))
-
-
-def q_dispersion_index(spark, sf_dir) -> DataFrame:
-    """Index of dispersion (variance-to-mean) per series from exact
-    integer moments — the overdispersion screen before choosing
-    Poisson vs negative-binomial models: D = n·(nΣx²−(Σx)²) /
-    ((n−1)·n·Σx) kept as an integer pair + one division; the binary
-    overdispersed flag is decided by exact cross-multiplication, no
-    floats in the decision."""
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"))
-             .groupBy("event_type", "day")
-             .agg(F.count(F.lit(1)).alias("x")))
-    g = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("q"))
-    n, s, q = F.col("n"), F.col("s"), F.col("q")
-    num = n * (n * q - s * s)
-    den = (n - 1) * n * s
-    return (g.select(
-        "event_type", "n", "s", num.alias("d_num"), den.alias("d_den"),
-        (num.cast("double") / den.cast("double")).alias("dispersion"),
-        F.when(num > den, 1).otherwise(0).alias("overdispersed"))
-        .orderBy("event_type"))
-
-
-def q_bleu_lite(spark, sf_dir) -> DataFrame:
-    """BLEU-2 (Papineni 2002, the 1/2-gram form) over even/odd doc
-    pairs — the generation-eval metric as RELATIONAL algebra: clipped
-    counts are Σ min(count_cand, count_ref) per n-gram (one join per
-    order), brevity penalty exp(1−r/c) and the geometric mean
-    √(p₁·p₂) are ONE IEEE chain over exact integers, floored ×10⁹.
-    Corpus-level (counts pooled before the chain), so no per-pair
-    float sums exist to reorder."""
-    d = F.col("doc_id")
-    toks = F.slice(F.filter(F.split(F.lower("text"), " "),
-                            lambda x: x != ""), 1, 10)
-    docs = load(spark, sf_dir, "documents").select(
-        (d - d % 2).alias("pair"), (d % 2).alias("side"),
-        toks.alias("toks"))
-    both = docs.groupBy("pair").agg(
-        F.max(F.when(F.col("side") == 0, F.col("toks"))).alias("cand"),
-        F.max(F.when(F.col("side") == 1, F.col("toks"))).alias("ref"))
-    both = both.filter(F.col("cand").isNotNull()
-                       & F.col("ref").isNotNull())
-
-    def grams(col, n):
-        if n == 1:
-            return col
-        z = F.zip_with(col, F.slice(col, 2, 100),
-                       lambda a, b: F.concat(a, F.lit(" "), b))
-        # zip_with pads to the longer input -> drop the null tail
-        return F.filter(z, lambda x: x.isNotNull())
-
-    out = []
-    for n in (1, 2):
-        cg = (both.select("pair", F.explode(grams(F.col("cand"), n))
-                          .alias("g"))
-              .groupBy("pair", "g").agg(F.count(F.lit(1)).alias("cc")))
-        rg = (both.select("pair", F.explode(grams(F.col("ref"), n))
-                          .alias("g"))
-              .groupBy("pair", "g").agg(F.count(F.lit(1)).alias("rc")))
-        j = (cg.join(rg, ["pair", "g"], "left")
-             .select("pair", "cc", F.coalesce("rc", F.lit(0))
-                     .alias("rc")))
-        agg = j.agg(F.sum(F.least("cc", "rc")).alias(f"clip{n}"),
-                    F.sum("cc").alias(f"tot{n}"))
-        out.append(agg)
-    lens = both.agg(F.sum(F.size("cand")).alias("c_len"),
-                    F.sum(F.size("ref")).alias("r_len"),
-                    F.count(F.lit(1)).alias("n_pairs"))
-    g = out[0].crossJoin(out[1]).crossJoin(lens)
-    p1 = F.col("clip1").cast("double") / F.col("tot1").cast("double")
-    p2 = F.col("clip2").cast("double") / F.col("tot2").cast("double")
-    bp = F.when(F.col("c_len") >= F.col("r_len"), F.lit(1.0)).otherwise(
-        F.exp(1.0 - F.col("r_len").cast("double")
-              / F.col("c_len").cast("double")))
-    bleu = bp * F.sqrt(p1 * p2)
-    return g.select("n_pairs", "clip1", "tot1", "clip2", "tot2",
-                    "c_len", "r_len",
-                    F.floor(bleu * 1e9).cast("long").alias("bleu_e9"))
-
-
-def q_attribution(spark, sf_dir) -> DataFrame:
-    """Multi-touch attribution — first-touch, last-touch, and linear
-    credit per channel over each user's ordered event path: the
-    arg-extremum pair reuses ONE collision-free bigint ordering key,
-    and linear credit stays exact by crediting 10⁶·touches//path_len
-    integer micro-units. The marketing-rollup the events table
-    exists for."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.col("event_type").alias("ch"),
-        (F.unix_timestamp("ts") * 10000000 + F.col("event_id"))
-        .cast("long").alias("ord"))
-    per_user = ev.groupBy("user_id").agg(
-        F.min_by("ch", "ord").alias("first_ch"),
-        F.max_by("ch", "ord").alias("last_ch"),
-        F.count(F.lit(1)).alias("path_len"))
-    touches = ev.groupBy("user_id", "ch").agg(
-        F.count(F.lit(1)).alias("t"))
-    lin = (touches.join(per_user.select("user_id", "path_len"),
-                        "user_id")
-           .groupBy("ch")
-           .agg(F.sum((F.col("t") * 1000000 / F.col("path_len"))
-                      .cast("long")).alias("linear_micro")))
-    ft = per_user.groupBy(F.col("first_ch").alias("ch")).agg(
-        F.count(F.lit(1)).alias("first_touch"))
-    lt = per_user.groupBy(F.col("last_ch").alias("ch")).agg(
-        F.count(F.lit(1)).alias("last_touch"))
-    return (lin.join(ft, "ch", "left").join(lt, "ch", "left")
-            .select("ch",
-                    F.coalesce("first_touch", F.lit(0))
-                    .alias("first_touch"),
-                    F.coalesce("last_touch", F.lit(0))
-                    .alias("last_touch"), "linear_micro")
-            .orderBy("ch"))
-
-
-def q_hist_intersect(spark, sf_dir) -> DataFrame:
-    """Histogram-intersection similarity between source corpora over
-    their language profiles — Σ min(pᵃ, pᵇ) kept EXACT by cross-
-    multiplying into a common denominator (min(aᵢ·N_b, bᵢ·N_a) summed
-    as integers over N_a·N_b): the distribution-drift readout with no
-    float sums anywhere."""
-    docs = load(spark, sf_dir, "documents")
-    prof = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("c"))
-    tot = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    p = prof.join(tot, "source")
-    a = p.select(F.col("source").alias("sa"), "lang",
-                 F.col("c").alias("ca"), F.col("n").alias("na"))
-    b = p.select(F.col("source").alias("sb"), "lang",
-                 F.col("c").alias("cb"), F.col("n").alias("nb"))
-    j = a.join(b, "lang").filter(F.col("sa") < F.col("sb"))
-    return (j.groupBy("sa", "sb")
-            .agg(F.sum(F.least(F.col("ca") * F.col("nb"),
-                               F.col("cb") * F.col("na")))
-                 .alias("inter_num"),
-                 F.max(F.col("na") * F.col("nb")).alias("inter_den"),
-                 F.count(F.lit(1)).alias("n_langs"))
-            .orderBy("sa", "sb"))
-
-
-def q_decay_counts(spark, sf_dir) -> DataFrame:
-    """Half-life-decayed engagement score (7-day half-life) — the
-    recency-weighted counter a ranking pipeline keeps per entity:
-    every event contributes floor(10⁶·0.5^(age_days/7)) as an INTEGER
-    (one libm pow per row, then exact sums), so the rollup is
-    partition-order-free; age is measured from the corpus max day."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        (F.unix_timestamp("ts") / 86400).cast("long").alias("day"))
-    mx = ev.agg(F.max("day").alias("dmax"))
-    t = ev.crossJoin(F.broadcast(mx)).select(
-        "event_type", (F.col("dmax") - F.col("day")).alias("age"))
-    term = F.floor(F.pow(F.lit(0.5), F.col("age").cast("double") / 7.0)
-                   * 1e6).cast("long")
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(term).alias("decayed_e6"),
-                 F.max("age").alias("max_age"))
-            .orderBy("event_type"))
-
-
-def q_segment_intersections(spark, sf_dir) -> DataFrame:
-    """Segment-intersection counting per region — the map-overlay
-    primitive — with the ENGINE predicate as PURE JVM orientation-sign
-    algebra over exact integers (the four cross products + collinear
-    on-segment boxes, CLRS §33.1 form) evaluated on a within-group
-    pair self-join; the ORACLE decides each pair with a rational
-    PARAMETRIC solver (Fractions, t/u ∈ [0,1]) — two different exact
-    decision procedures."""
-    d = F.col("doc_id")
-    segs = (load(spark, sf_dir, "documents")
-            .filter(d % 17 == 0)
-            .select((d % 5).alias("g"),
-                    ((d * 37) % 60).alias("x1"),
-                    ((d * 53) % 60).alias("y1"),
-                    ((d * 71) % 60).alias("x2"),
-                    ((d * 89) % 60).alias("y2"))
-            .filter(~((F.col("x1") == F.col("x2"))
-                      & (F.col("y1") == F.col("y2"))))
-            .distinct())
-    a = segs.select("g", *[F.col(c).alias(f"a{c}")
-                           for c in ("x1", "y1", "x2", "y2")])
-    b = segs.select("g", *[F.col(c).alias(f"b{c}")
-                           for c in ("x1", "y1", "x2", "y2")])
-    pairs = a.join(b, "g").filter(
-        F.struct("ax1", "ay1", "ax2", "ay2")
-        < F.struct("bx1", "by1", "bx2", "by2"))
-
-    def cross(ox, oy, ax, ay, bx, by):
-        return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-    d1 = F.signum(cross(F.col("bx1"), F.col("by1"), F.col("bx2"),
-                        F.col("by2"), F.col("ax1"), F.col("ay1")))
-    d2 = F.signum(cross(F.col("bx1"), F.col("by1"), F.col("bx2"),
-                        F.col("by2"), F.col("ax2"), F.col("ay2")))
-    d3 = F.signum(cross(F.col("ax1"), F.col("ay1"), F.col("ax2"),
-                        F.col("ay2"), F.col("bx1"), F.col("by1")))
-    d4 = F.signum(cross(F.col("ax1"), F.col("ay1"), F.col("ax2"),
-                        F.col("ay2"), F.col("bx2"), F.col("by2")))
-
-    def on_seg(px, py, qx, qy, rx, ry):
-        return ((rx >= F.least(px, qx)) & (rx <= F.greatest(px, qx))
-                & (ry >= F.least(py, qy)) & (ry <= F.greatest(py, qy)))
-
-    proper = (d1 * d2 < 0) & (d3 * d4 < 0)
-    touch = (
-        ((d1 == 0) & on_seg(F.col("bx1"), F.col("by1"), F.col("bx2"),
-                            F.col("by2"), F.col("ax1"), F.col("ay1")))
-        | ((d2 == 0) & on_seg(F.col("bx1"), F.col("by1"), F.col("bx2"),
-                              F.col("by2"), F.col("ax2"), F.col("ay2")))
-        | ((d3 == 0) & on_seg(F.col("ax1"), F.col("ay1"), F.col("ax2"),
-                              F.col("ay2"), F.col("bx1"), F.col("by1")))
-        | ((d4 == 0) & on_seg(F.col("ax1"), F.col("ay1"), F.col("ax2"),
-                              F.col("ay2"), F.col("bx2"), F.col("by2"))))
-    hit = (proper | touch).cast("long")
-    n_seg = segs.groupBy("g").agg(F.count(F.lit(1)).alias("n_segments"))
-    n_int = pairs.groupBy("g").agg(F.sum(hit).alias("n_intersecting"))
-    return (n_seg.join(n_int, "g", "left")
-            .select("g", F.col("n_segments").cast("int")
-                    .alias("n_segments"),
-                    F.coalesce("n_intersecting", F.lit(0))
-                    .alias("n_intersecting"))
-            .orderBy("g"))
-
-
-def q_kl_divergence(spark, sf_dir) -> DataFrame:
-    """KL divergence between source corpora over shared language
-    support — the drift alarm companion to hist_intersect: each term
-    pₐ·log₂(pₐ/p_b) is ONE IEEE chain over the four exact integers
-    (cₐ,nₐ,c_b,n_b), floored ×10⁹ before the cross-term sum (bigint
-    accumulation ⇒ partition-order-free). Restricted to langs present
-    in BOTH sources (documented ε-free support policy); the kept/total
-    mass numerators are exact integers."""
-    docs = load(spark, sf_dir, "documents")
-    prof = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("c"))
-    tot = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    p = prof.join(tot, "source")
-    a = p.select(F.col("source").alias("sa"), "lang",
-                 F.col("c").alias("ca"), F.col("n").alias("na"))
-    b = p.select(F.col("source").alias("sb"), "lang",
-                 F.col("c").alias("cb"), F.col("n").alias("nb"))
-    j = a.join(b, "lang").filter(F.col("sa") != F.col("sb"))
-    pa = F.col("ca").cast("double") / F.col("na").cast("double")
-    ratio = (F.col("ca") * F.col("nb")).cast("double") / \
-        (F.col("cb") * F.col("na")).cast("double")
-    term = F.floor(pa * F.log2(ratio) * 1e9).cast("long")
-    return (j.groupBy("sa", "sb")
-            .agg(F.count(F.lit(1)).alias("n_shared_langs"),
-                 F.sum("ca").alias("kept_mass_num"),
-                 F.max("na").alias("kept_mass_den"),
-                 F.sum(term).alias("kl_e9"))
-            .orderBy("sa", "sb"))
-
-
-def q_haar_wavelet(spark, sf_dir) -> DataFrame:
-    """Unnormalized integer Haar decomposition (the lifting scheme,
-    Sweldens form: s=a+b, d=a−b per level) of each series' first 16
-    daily totals — the multiresolution summary under compression/
-    anomaly pipelines, exact at every level. ENGINE runs the recursive
-    lifting; the ORACLE computes every coefficient CLOSED-FORM as a
-    signed dyadic-block sum (d_k[j] = first-half − second-half of
-    block j at width 2^k) — two different derivations of the same
-    algebra. Long-form output keys coefficients by (level, j)."""
-    import pandas as pd
-
-    daily = (load(spark, sf_dir, "events")
-             .select("event_type",
-                     (F.unix_timestamp("ts") / 86400).cast("long")
-                     .alias("day"),
-                     F.floor(F.col("value") * 100).cast("long")
-                     .alias("cents"))
-             .groupBy("event_type", "day")
-             .agg((F.sum("cents") / 1000).cast("long").alias("y")))
-    w = Window.partitionBy("event_type").orderBy("day")
-    first16 = (daily.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 16))
-
-    def work(key, pdf):
-        pdf = pdf.sort_values("rn")
-        xs = [int(v) for v in pdf["y"]]
-        rows = []
-        s = xs
-        level = 0
-        while len(s) > 1:
-            level += 1
-            nxt, det = [], []
-            for j in range(len(s) // 2):
-                nxt.append(s[2 * j] + s[2 * j + 1])
-                det.append(s[2 * j] - s[2 * j + 1])
-            for j, dv in enumerate(det):
-                rows.append((key[0], level, j, dv))
-            s = nxt
-        rows.append((key[0], 99, 0, s[0]))  # final smooth = total sum
-        return pd.DataFrame(rows, columns=["event_type", "level",
-                                           "j", "coef"])
-
-    return (first16.groupBy("event_type")
-            .applyInPandas(work, "event_type string, level int, "
-                                 "j int, coef long")
-            .orderBy("event_type", "level", "j"))
 
 
 def _with_worker_imports(fn):
@@ -7158,82 +5172,14 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bilinear_up": q_bilinear_up,
         "url_resolve": q_url_resolve,
         "frontier_expand": q_frontier_expand,
-        "ab_test": q_ab_test,
-        "record_linkage": q_record_linkage,
-        "ols_trend": q_ols_trend,
-        "winsorize": q_winsorize,
-        "explode_outer": q_explode_outer,
-        "comparator_sort": q_comparator_sort,
-        "event_pattern": q_event_pattern,
-        "string_surface": q_string_surface,
-        "try_arithmetic": q_try_arithmetic,
         "hash_partition": q_hash_partition,
         "xxhash_shard": q_xxhash_shard,
         "crc32_digest": q_crc32_digest,
-        "digest_surface": q_digest_surface,
-        "agg_filter_surface": q_agg_filter_surface,
-        "datetime_surface": q_datetime_surface,
-        "regexp_surface": q_regexp_surface,
-        "array_surface": q_array_surface,
-        "bit_radix_surface": q_bit_radix_surface,
-        "phonetic_fuzzy": q_phonetic_fuzzy,
         "geohash_encode": q_geohash_encode,
         "slippy_tiles": q_slippy_tiles,
-        "ohlc_bars": q_ohlc_bars,
-        "benford_digits": q_benford_digits,
-        "allen_relations": q_allen_relations,
-        "http_headers": q_http_headers,
-        "hmac_sha256": q_hmac_sha256,
-        "ewma_trend": q_ewma_trend,
-        "weighted_sample": q_weighted_sample,
-        "map_surface": q_map_surface,
-        "sitemap_urls": q_sitemap_urls,
         "jaro_winkler": q_jaro_winkler,
-        "luhn_check": q_luhn_check,
-        "url_parse_surface": q_url_parse_surface,
-        "printf_surface": q_printf_surface,
-        "base64_surface": q_base64_surface,
-        "dist_rank_surface": q_dist_rank_surface,
-        "width_bucket": q_width_bucket,
-        "str_to_map_surface": q_str_to_map_surface,
-        "lateral_surface": q_lateral_surface,
-        "uuid5": q_uuid5,
-        "islands_gaps": q_islands_gaps,
-        "rank_sum_test": q_rank_sum_test,
-        "tz_convert": q_tz_convert,
-        "chi_square": q_chi_square,
-        "reachability": q_reachability,
-        "rendezvous_hash": q_rendezvous_hash,
-        "readability": q_readability,
-        "ks_test": q_ks_test,
-        "bitmap_distinct": q_bitmap_distinct,
-        "interval_merge": q_interval_merge,
-        "pivot_multi": q_pivot_multi,
-        "autocorr": q_autocorr,
-        "shannon_entropy": q_shannon_entropy,
-        "zipf_slope": q_zipf_slope,
-        "permutation_test": q_permutation_test,
         "haversine_bins": q_haversine_bins,
-        "sssp": q_sssp,
-        "sprt": q_sprt,
         "dup_clusters": q_dup_clusters,
-        "matmul_relational": q_matmul_relational,
-        "markov_transitions": q_markov_transitions,
-        "label_propagation": q_label_propagation,
-        "base58_encode": q_base58_encode,
-        "rounding_modes": q_rounding_modes,
-        "wilson_ci": q_wilson_ci,
-        "schema_infer": q_schema_infer,
-        "cohens_kappa": q_cohens_kappa,
-        "eval_metrics": q_eval_metrics,
-        "dispersion_index": q_dispersion_index,
-        "bleu_lite": q_bleu_lite,
-        "attribution": q_attribution,
-        "hist_intersect": q_hist_intersect,
-        "decay_counts": q_decay_counts,
-        "segment_intersections": q_segment_intersections,
-        "kl_divergence": q_kl_divergence,
-        "haar_wavelet": q_haar_wavelet,
     }
 
 
@@ -7439,32 +5385,6 @@ def _slippy_oracle_sql(z: int = 6) -> str:
         f"q AS (SELECT xt, yt, {qk} AS qk FROM t) "
         "SELECT xt, yt, qk, count(*) AS n FROM q GROUP BY xt, yt, qk "
         "ORDER BY n DESC, qk LIMIT 40"
-    )
-
-
-def _sprt_oracle_sql() -> str:
-    import math
-
-    l1 = math.floor(math.log(0.5 / 0.3) * 1e6)
-    l0 = math.floor(math.log(0.5 / 0.7) * 1e6)
-    bound = math.floor(math.log(0.95 / 0.05) * 1e6)
-    return (
-        "WITH e AS (SELECT event_type, "
-        "cast(floor(epoch(ts)) as bigint) AS ep, event_id, "
-        "CASE WHEN cast(floor(value * 100) as bigint) > 5000 "
-        "THEN 1 ELSE 0 END AS x FROM events), "
-        "t AS (SELECT event_type, row_number() OVER (PARTITION BY "
-        "event_type ORDER BY ep, event_id) AS rn, "
-        f"sum(CASE WHEN x = 1 THEN {l1} ELSE {l0} END) OVER ("
-        "PARTITION BY event_type ORDER BY ep, event_id "
-        "ROWS UNBOUNDED PRECEDING) AS llr FROM e) "
-        "SELECT event_type, count(*) AS n, "
-        f"min(CASE WHEN abs(llr) >= {bound} THEN rn END) "
-        "AS first_cross, "
-        f"min(CASE WHEN llr >= {bound} THEN rn END) AS first_h1, "
-        f"min(CASE WHEN llr <= -{bound} THEN rn END) AS first_h0, "
-        "arg_max(llr, rn) AS final_llr FROM t GROUP BY event_type "
-        "ORDER BY event_type"
     )
 
 
@@ -8310,134 +6230,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "url_resolve": _IO.url_resolve_oracle_sql(_oracle_sf_dir()),
         "frontier_expand": _IO.frontier_oracle_sql(_oracle_sf_dir()),
-        "try_arithmetic": (
-            "WITH e AS (SELECT event_id, "
-            "cast(floor(value * 100) as bigint) AS a, "
-            "(event_id % 5) - 2 AS b FROM events), "
-            "r AS (SELECT a, b, "
-            "CASE WHEN b = 0 THEN NULL ELSE a / b END AS sdiv, "
-            "CASE WHEN a > 9223372036854775807 // 300000000000000 "
-            "THEN NULL ELSE a * 300000000000000 END AS smul FROM e) "
-            "SELECT count(*) AS n, "
-            "sum(CASE WHEN sdiv IS NULL THEN 1 ELSE 0 END) "
-            "AS n_div_null, "
-            "sum(CASE WHEN smul IS NULL THEN 1 ELSE 0 END) "
-            "AS n_mul_null, "
-            "sum(cast(floor(sdiv) as bigint)) AS sum_div_floor, "
-            "max(smul) AS max_mul FROM r"
-        ),
-        "string_surface": (
-            "WITH s AS (SELECT doc_id, substr(text, 1, 40) AS s40, "
-            "text FROM documents WHERE doc_id % 4 = 0), "
-            "r AS (SELECT doc_id || '|' || "
-            "translate(s40, 'aeiou', 'AEIOU') || '|' || "
-            "reverse(substr(s40, 1, 12)) || '|' || "
-            "lpad(substr(s40, 1, 5), 9, '.') || '|' || "
-            "rpad(substr(s40, 1, 5), 9, '_') || '|' || "
-            "left(text, 6) || '|' || right(text, 6) || '|' || "
-            "repeat(substr(text, 3, 2), 3) || '|' || "
-            "replace(substr(text, 1, 30), ' ', '~') || '|' || "
-            "trim(BOTH ' ' FROM substr(text, 1, 20)) AS line FROM s) "
-            "SELECT count(*) AS n, "
-            "sha256(string_agg(line, chr(10) ORDER BY line)) AS sha "
-            "FROM r"
-        ),
-        "comparator_sort": (
-            "WITH t AS (SELECT doc_id, unnest(list_filter("
-            "string_split(lower(text), ' '), x -> x <> '')[1:8]) "
-            "AS tok FROM documents WHERE doc_id % 5 = 0) "
-            "SELECT doc_id, string_agg(tok, '|' "
-            "ORDER BY length(tok), tok) AS ordered "
-            "FROM t GROUP BY doc_id ORDER BY doc_id"
-        ),
-        "event_pattern": (
-            "WITH e AS (SELECT user_id, substr(event_type, 1, 1) "
-            "AS ch, cast(floor(epoch(ts)) as bigint) AS ep, event_id "
-            "FROM events), "
-            "s AS (SELECT user_id, string_agg(ch, '' "
-            "ORDER BY ep, event_id) AS seq FROM e GROUP BY user_id) "
-            "SELECT user_id, cast(length(seq) as int) AS n_events, "
-            "cast(len(regexp_extract_all(seq, 'vc*p')) as int) "
-            "AS n_funnels, "
-            "cast(len(regexp_extract_all(seq, 'e')) as int) "
-            "AS n_errors FROM s ORDER BY user_id"
-        ),
-        "explode_outer": (
-            "WITH d AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0 "
-            "THEN [] ELSE string_split(text, ' ')[1:3] END AS toks "
-            "FROM documents), "
-            "i AS (SELECT doc_id, unnest(toks) AS tok FROM d), "
-            "o AS (SELECT d.doc_id, u.tok FROM d LEFT JOIN "
-            "(SELECT doc_id, unnest(toks) AS tok FROM d) u "
-            "USING (doc_id)) "
-            "SELECT 'inner' AS mode, count(*) AS n_rows, "
-            "count(DISTINCT doc_id) AS n_docs, "
-            "sum(CASE WHEN tok IS NULL THEN 1 ELSE 0 END) AS n_null "
-            "FROM i UNION ALL "
-            "SELECT 'outer', count(*), count(DISTINCT doc_id), "
-            "sum(CASE WHEN tok IS NULL THEN 1 ELSE 0 END) FROM o "
-            "ORDER BY mode"
-        ),
-        "winsorize": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(value * 100) as bigint) AS y FROM events), "
-            "q AS (SELECT event_type, "
-            "quantile_disc(y, 0.05) AS lo, "
-            "quantile_disc(y, 0.95) AS hi FROM e GROUP BY event_type), "
-            "w AS (SELECT e.event_type, y, lo, hi, "
-            "greatest(lo, least(hi, y)) AS wy FROM e "
-            "JOIN q USING (event_type)) "
-            "SELECT event_type, count(*) AS n, max(lo) AS lo, "
-            "max(hi) AS hi, sum(wy) AS sum_w, "
-            "sum(CASE WHEN y <> wy THEN 1 ELSE 0 END) AS n_clamped "
-            "FROM w GROUP BY event_type ORDER BY event_type"
-        ),
-        "ols_trend": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "m0 AS (SELECT min(day) AS d0 FROM e), "
-            "e2 AS (SELECT event_type, day - d0 AS x, cents AS y "
-            "FROM e CROSS JOIN m0), "
-            "m AS (SELECT event_type, count(*) AS n, sum(x) AS sx, "
-            "sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx, "
-            "sum(y * y) AS syy FROM e2 GROUP BY event_type) "
-            + _OLS_TAIL_SQL
-        ),
-        "ab_test": (
-            "WITH u AS (SELECT event_id % 2 AS cohort, "
-            "CASE WHEN cast(floor(value * 100) as bigint) > 10000 "
-            "THEN 1 ELSE 0 END AS converted FROM events), "
-            "g AS (SELECT cohort, count(*) AS n, sum(converted) AS c "
-            "FROM u GROUP BY cohort), "
-            "w AS (SELECT "
-            "max(CASE WHEN cohort = 0 THEN n END) AS n0, "
-            "max(CASE WHEN cohort = 0 THEN c END) AS c0, "
-            "max(CASE WHEN cohort = 1 THEN n END) AS n1, "
-            "max(CASE WHEN cohort = 1 THEN c END) AS c1 FROM g) "
-            "SELECT n0, c0, n1, c1, "
-            "(c1 * n0) / (c0 * n1) AS lift, "
-            "(c1 / n1 - c0 / n0) / sqrt("
-            "((c0 + c1) / (n0 + n1)) * (1 - (c0 + c1) / (n0 + n1)) "
-            "* (1 / n0 + 1 / n1)) AS z FROM w"
-        ),
-        "record_linkage": (
-            "WITH d AS (SELECT doc_id, source, lang, n_chars "
-            "FROM documents WHERE doc_id % 3 = 0), "
-            "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
-            "CASE WHEN a.lang = b.lang THEN 9 ELSE 1 END * "
-            "CASE WHEN abs(a.n_chars - b.n_chars) * 10 <= "
-            "least(a.n_chars, b.n_chars) THEN 4 ELSE 1 END AS num, "
-            "CASE WHEN a.lang = b.lang THEN 2 ELSE 8 END * "
-            "CASE WHEN abs(a.n_chars - b.n_chars) * 10 <= "
-            "least(a.n_chars, b.n_chars) THEN 1 ELSE 4 END AS den "
-            "FROM d a JOIN d b ON a.source = b.source "
-            "AND a.doc_id < b.doc_id) "
-            "SELECT num >= 9 * den AS match, count(*) AS n_pairs, "
-            "sum(num) AS sum_num, sum(den) AS sum_den, "
-            "sum(id_a + id_b) AS id_sum "
-            "FROM p GROUP BY 1 ORDER BY match"
-        ),
         "hilbert_key": _hilbert_oracle_sql(),
         "contour_trace": _IO.contour_oracle_sql(
             _oracle_sf_dir(),
@@ -9933,477 +7725,8 @@ def oracle_sql() -> dict[str, str]:
         "hash_partition": _IO.hash_partition_oracle_sql(_oracle_sf_dir()),
         "xxhash_shard": _IO.xxhash_shard_oracle_sql(_oracle_sf_dir()),
         "crc32_digest": _IO.crc32_oracle_sql(_oracle_sf_dir()),
-        # ANSI aggregate modifiers; max_by ordering value is unique by
-        # construction (orderkey folded into low bits) so no arg-max ties.
-        "agg_filter_surface": (
-            "WITH o AS (SELECT *, CAST(floor(o_totalprice * 100) AS BIGINT) "
-            "* 4294967296 + o_orderkey AS uniq FROM orders) "
-            "SELECT o_orderpriority, "
-            "count(*) FILTER (o_totalprice > 150000) AS n_high, "
-            "sum(CAST(floor(o_totalprice) AS BIGINT)) "
-            "FILTER (o_orderstatus = 'O') AS sum_open, "
-            "bool_and(o_totalprice > 0) AS all_pos, "
-            "bool_or(o_orderstatus = 'F') AS any_f, "
-            "max_by(o_orderkey, uniq) AS best_key, "
-            "min_by(o_orderkey, uniq) AS worst_key "
-            "FROM o GROUP BY o_orderpriority ORDER BY o_orderpriority"
-        ),
-        # Calendar surface — Spark conventions rebuilt from DuckDB
-        # primitives: dayofweek+1 (Sunday=1), to_days for next-Monday.
-        "datetime_surface": (
-            "WITH o AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d "
-            "FROM orders) "
-            "SELECT o_orderkey, d, last_day(d) AS ld, "
-            "date_trunc('month', d) AS m0, "
-            "CAST(d + to_months(CAST(o_orderkey % 3 + 1 AS INT)) AS DATE) "
-            "AS am, "
-            "datediff('day', DATE '2019-01-01', d) AS dd, "
-            "dayofweek(d) + 1 AS dow, weekofyear(d) AS woy, "
-            "quarter(d) AS q, dayofyear(d) AS doy, "
-            "CAST(d + to_days(CAST(CASE WHEN (8 - dayofweek(d)) % 7 = 0 "
-            "THEN 7 ELSE (8 - dayofweek(d)) % 7 END AS INT)) AS DATE) AS nmon "
-            "FROM o ORDER BY o_orderkey"
-        ),
-        # Regexp surface — DuckDB group refs are \1 and replace needs the
-        # 'g' flag to match Spark's replace-all.
-        "regexp_surface": (
-            "WITH d AS (SELECT doc_id, text, concat('p', doc_id % 13, '-q', "
-            "doc_id % 7, '-r', doc_id % 29) AS s FROM documents) "
-            "SELECT doc_id, "
-            "array_to_string(regexp_extract_all(s, '[a-z]([0-9]+)', 1), '|') "
-            "AS nums, "
-            "len(regexp_extract_all(substr(text, 1, 60), '[aeiou]', 0)) "
-            "AS n_vowels, "
-            "array_to_string(string_split_regex(s, '-'), '|') AS parts, "
-            "regexp_replace(s, '([pqr])([0-9]+)', '\\2\\1', 'g') AS swapped "
-            "FROM d ORDER BY doc_id"
-        ),
-        # Array/lambda surface — generate_series is end-inclusive (Spark
-        # sequence), list_slice takes an inclusive end index.
-        "array_surface": (
-            "SELECT doc_id, "
-            "array_to_string(list_transform(generate_series(1, "
-            "CAST(1 + doc_id % 7 AS INT)), x -> x * x), ',') AS squares, "
-            "array_to_string(list_slice(generate_series(1, 6), "
-            "CAST(1 + doc_id % 3 AS INT), CAST(3 + doc_id % 3 AS INT)), ',') "
-            "AS sl, "
-            "CAST(list_position(generate_series(0, 9), doc_id % 10) "
-            "AS BIGINT) AS pos, "
-            "array_to_string(list_sort(list_distinct([doc_id % 5, "
-            "doc_id % 3, doc_id % 5, 2])), ',') AS dist, "
-            "CAST(list_sum(list_transform(generate_series(1, "
-            "CAST(1 + doc_id % 9 AS INT)), x -> x * x)) AS BIGINT) "
-            "AS fold_sq, "
-            "repeat('ab', CAST(doc_id % 4 AS INT)) AS rep, "
-            "array_to_string(flatten([generate_series(1, 2), "
-            "generate_series(doc_id % 3, doc_id % 3)]), ',') AS flat "
-            "FROM documents ORDER BY doc_id"
-        ),
-        # Bitwise/radix surface — DuckDB ^ is POWER so xor() spells the
-        # engine's ^; conv() round-trips re-parse the rendering.
-        "bit_radix_surface": (
-            "SELECT event_id, bit_count(event_id) AS bc, "
-            "(event_id % 1024) << 3 AS shl, (event_id - 500) >> 2 AS shr, "
-            "event_id & user_id AS band, event_id | user_id AS bor, "
-            "xor(event_id, user_id) AS bxor, "
-            "upper(to_hex(event_id)) AS hx, bin(event_id % 64) AS bn, "
-            "CAST(event_id AS VARCHAR) AS hex_back, "
-            "CAST(event_id % 64 AS VARCHAR) AS bin_back "
-            "FROM events ORDER BY event_id"
-        ),
-        # Phonetics — from-spec soundex + Wagner-Fischer levenshtein
-        # rendered as VALUES (independent_oracles.py).
-        "phonetic_fuzzy": _IO.phonetic_oracle_sql(_oracle_sf_dir()),
-        # Digest surface — both engines' native RFC 1321 / FIPS 180-4.
-        "digest_surface": (
-            "SELECT doc_id, md5(substr(text, 1, 120)) AS md5_hex, "
-            "sha256(substr(text, 1, 120)) AS sha256_hex, "
-            "substr(sha256(substr(text, 1, 120)), 1, 8) AS sha_prefix "
-            "FROM documents ORDER BY doc_id"
-        ),
         "geohash_encode": _geohash_oracle_sql(),
         "slippy_tiles": _slippy_oracle_sql(),
-        "ohlc_bars": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(floor(epoch(ts)) as bigint) * 10000000 + event_id "
-            "AS ord, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events) "
-            "SELECT event_type, day, arg_min(cents, ord) AS open, "
-            "max(cents) AS high, min(cents) AS low, "
-            "arg_max(cents, ord) AS close, count(*) AS volume, "
-            "sum(cents) AS notional FROM e GROUP BY event_type, day "
-            "HAVING day % 7 = 0 ORDER BY event_type, day"
-        ),
-        "benford_digits": (
-            "WITH e AS (SELECT cast(floor(value * 100) as bigint) "
-            "AS cents FROM events), "
-            "d AS (SELECT cast(substr(cast(cents as varchar), 1, 1) "
-            "as int) AS digit FROM e WHERE cents >= 1), "
-            "t AS (SELECT count(*) AS total FROM d) "
-            "SELECT digit, count(*) AS n, "
-            "cast(count(*) * 100000 // max(total) as bigint) "
-            "AS per_mille_x100 "
-            "FROM d CROSS JOIN t GROUP BY digit ORDER BY digit"
-        ),
-        "allen_relations": (
-            "WITH e AS (SELECT event_id, "
-            "cast(floor(epoch(ts)) as bigint) % 1000 AS s1, "
-            "event_id % 50 + 1 AS d1, "
-            "(cast(floor(epoch(ts)) as bigint) * 7) % 1000 AS s2, "
-            "(event_id * 3) % 60 + 1 AS d2 FROM events), "
-            "t AS (SELECT s1, s1 + d1 AS e1, s2, s2 + d2 AS e2 FROM e), "
-            "r AS (SELECT CASE "
-            "WHEN s1 = s2 AND e1 = e2 THEN 'equals' "
-            "WHEN e1 < s2 THEN 'before' "
-            "WHEN e2 < s1 THEN 'after' "
-            "WHEN e1 = s2 THEN 'meets' "
-            "WHEN e2 = s1 THEN 'met_by' "
-            "WHEN s1 = s2 AND e1 < e2 THEN 'starts' "
-            "WHEN s1 = s2 AND e1 > e2 THEN 'started_by' "
-            "WHEN e1 = e2 AND s1 > s2 THEN 'finishes' "
-            "WHEN e1 = e2 AND s1 < s2 THEN 'finished_by' "
-            "WHEN s1 > s2 AND e1 < e2 THEN 'during' "
-            "WHEN s1 < s2 AND e1 > e2 THEN 'contains' "
-            "WHEN s1 < s2 THEN 'overlaps' "
-            "ELSE 'overlapped_by' END AS rel FROM t) "
-            "SELECT rel, count(*) AS n FROM r GROUP BY rel ORDER BY rel"
-        ),
-        "http_headers": (
-            "WITH d AS (SELECT doc_id, "
-            "(['200','200','301','404','503'])[doc_id % 5 + 1] AS st, "
-            "(['text/html','application/json','text/plain',"
-            "'image/png'])[doc_id % 4 + 1] AS mime, "
-            "CASE WHEN doc_id % 3 = 0 THEN '; charset=ISO-8859-1' "
-            "WHEN doc_id % 3 = 1 THEN '; charset=utf-8' ELSE '' END "
-            "AS cs FROM documents), "
-            "raw AS (SELECT doc_id, 'HTTP/1.1 ' || st || ' OK' || "
-            "chr(13) || chr(10) || 'Content-Type: ' || mime || cs || "
-            "chr(13) || chr(10) || 'Cache-Control: public, max-age=' "
-            "|| cast((doc_id * 37) % 86400 as varchar) || chr(13) || "
-            "chr(10) || 'Content-Length: ' || "
-            "cast((doc_id * 991) % 100000 as varchar) || chr(13) || "
-            "chr(10) || 'Server: graft/1.0' || chr(13) || chr(10) || "
-            "chr(13) || chr(10) AS raw FROM d), "
-            "p AS (SELECT doc_id, "
-            "cast(regexp_extract(raw, 'HTTP/1\\.1 (\\d{3})', 1) as int) "
-            "AS status, "
-            "regexp_extract(raw, 'Content-Type: ([a-z]+/[a-z]+)', 1) "
-            "AS media_type, "
-            "lower(coalesce(nullif(regexp_extract(raw, "
-            "'charset=([A-Za-z0-9-]+)', 1), ''), 'utf-8')) AS charset, "
-            "cast(regexp_extract(raw, 'max-age=(\\d+)', 1) as bigint) "
-            "AS max_age, "
-            "cast(regexp_extract(raw, 'Content-Length: (\\d+)', 1) "
-            "as bigint) AS clen FROM raw) "
-            "SELECT status, media_type, charset, count(*) AS n, "
-            "sum(max_age) AS sum_max_age, sum(clen) AS sum_clen "
-            "FROM p GROUP BY status, media_type, charset "
-            "ORDER BY status, media_type, charset"
-        ),
-        # Segment intersections — rational parametric solver (VALUES).
-        "segment_intersections":
-            _IO.seg_intersections_oracle_sql(_oracle_sf_dir()),
-        "attribution": (
-            "WITH e AS (SELECT user_id, event_type AS ch, "
-            "cast(floor(epoch(ts)) as bigint) * 10000000 + event_id "
-            "AS ord FROM events), "
-            "pu AS (SELECT user_id, arg_min(ch, ord) AS first_ch, "
-            "arg_max(ch, ord) AS last_ch, count(*) AS path_len "
-            "FROM e GROUP BY user_id), "
-            "tc AS (SELECT user_id, ch, count(*) AS t FROM e "
-            "GROUP BY 1, 2), "
-            "lin AS (SELECT ch, sum(t * 1000000 // path_len) "
-            "AS linear_micro FROM tc JOIN pu USING (user_id) "
-            "GROUP BY ch), "
-            "ft AS (SELECT first_ch AS ch, count(*) AS first_touch "
-            "FROM pu GROUP BY 1), "
-            "lt AS (SELECT last_ch AS ch, count(*) AS last_touch "
-            "FROM pu GROUP BY 1) "
-            "SELECT lin.ch, coalesce(first_touch, 0) AS first_touch, "
-            "coalesce(last_touch, 0) AS last_touch, linear_micro "
-            "FROM lin LEFT JOIN ft USING (ch) LEFT JOIN lt USING (ch) "
-            "ORDER BY ch"
-        ),
-        # Haar — closed-form signed dyadic-block sums, no recursion.
-        "haar_wavelet": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-            "as bigint) AS y FROM events GROUP BY 1, 2), "
-            "r AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY day) - 1 AS i "
-            "FROM daily), "
-            "x AS (SELECT event_type, i, y FROM r WHERE i < 16), "
-            "d AS (SELECT event_type, k.k AS level, "
-            "cast(i // (1 << k.k) as int) AS j, "
-            "sum(CASE WHEN ((i >> (k.k - 1)) & 1) = 0 THEN y "
-            "ELSE -y END) AS coef "
-            "FROM x CROSS JOIN (SELECT unnest(generate_series(1, 4)) "
-            "AS k) k GROUP BY 1, 2, 3), "
-            "s AS (SELECT event_type, 99 AS level, 0 AS j, "
-            "sum(y) AS coef FROM x GROUP BY event_type) "
-            "SELECT event_type, cast(level as int) AS level, "
-            "cast(j as int) AS j, coef FROM (SELECT * FROM d "
-            "UNION ALL SELECT * FROM s) "
-            "ORDER BY event_type, level, j"
-        ),
-        "kl_divergence": (
-            "WITH prof AS (SELECT source, lang, count(*) AS c "
-            "FROM documents GROUP BY 1, 2), "
-            "tot AS (SELECT source, count(*) AS n FROM documents "
-            "GROUP BY source), "
-            "p AS (SELECT prof.source, lang, c, n FROM prof "
-            "JOIN tot USING (source)), "
-            "j AS (SELECT a.source AS sa, b.source AS sb, "
-            "a.c AS ca, a.n AS na, b.c AS cb, b.n AS nb "
-            "FROM p a JOIN p b ON a.lang = b.lang "
-            "AND a.source <> b.source) "
-            "SELECT sa, sb, count(*) AS n_shared_langs, "
-            "sum(ca) AS kept_mass_num, max(na) AS kept_mass_den, "
-            "sum(cast(floor(cast(ca as double) / cast(na as double) "
-            "* log2(cast(ca * nb as double) / cast(cb * na as "
-            "double)) * 1e9) as bigint)) AS kl_e9 "
-            "FROM j GROUP BY sa, sb ORDER BY sa, sb"
-        ),
-        "hist_intersect": (
-            "WITH prof AS (SELECT source, lang, count(*) AS c "
-            "FROM documents GROUP BY 1, 2), "
-            "tot AS (SELECT source, count(*) AS n FROM documents "
-            "GROUP BY source), "
-            "p AS (SELECT prof.source, lang, c, n FROM prof "
-            "JOIN tot USING (source)), "
-            "j AS (SELECT a.source AS sa, b.source AS sb, "
-            "least(a.c * b.n, b.c * a.n) AS mn, a.n * b.n AS den "
-            "FROM p a JOIN p b ON a.lang = b.lang "
-            "AND a.source < b.source) "
-            "SELECT sa, sb, sum(mn) AS inter_num, "
-            "max(den) AS inter_den, count(*) AS n_langs FROM j "
-            "GROUP BY sa, sb ORDER BY sa, sb"
-        ),
-        "decay_counts": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day "
-            "FROM events), "
-            "m AS (SELECT max(day) AS dmax FROM e), "
-            "t AS (SELECT event_type, dmax - day AS age FROM e "
-            "CROSS JOIN m) "
-            "SELECT event_type, count(*) AS n, "
-            "sum(cast(floor(pow(0.5, cast(age as double) / 7.0) "
-            "* 1e6) as bigint)) AS decayed_e6, "
-            "max(age) AS max_age FROM t GROUP BY event_type "
-            "ORDER BY event_type"
-        ),
-        "bleu_lite": (
-            "WITH t AS (SELECT doc_id - doc_id % 2 AS pair, "
-            "doc_id % 2 AS side, list_filter(string_split(lower(text), "
-            "' '), x -> x <> '')[1:10] AS toks FROM documents), "
-            "b AS (SELECT pair, "
-            "max(CASE WHEN side = 0 THEN toks END) AS cand, "
-            "max(CASE WHEN side = 1 THEN toks END) AS ref FROM t "
-            "GROUP BY pair HAVING max(CASE WHEN side = 0 THEN toks "
-            "END) IS NOT NULL AND max(CASE WHEN side = 1 THEN toks "
-            "END) IS NOT NULL), "
-            "c1 AS (SELECT pair, unnest(cand) AS g FROM b), "
-            "r1 AS (SELECT pair, unnest(ref) AS g FROM b), "
-            "c2 AS (SELECT pair, unnest([cand[i] || ' ' || cand[i+1] "
-            "for i in range(1, len(cand))]) AS g FROM b), "
-            "r2 AS (SELECT pair, unnest([ref[i] || ' ' || ref[i+1] "
-            "for i in range(1, len(ref))]) AS g FROM b), "
-            "cc1 AS (SELECT pair, g, count(*) AS cc FROM c1 "
-            "GROUP BY 1, 2), "
-            "rc1 AS (SELECT pair, g, count(*) AS rc FROM r1 "
-            "GROUP BY 1, 2), "
-            "cc2 AS (SELECT pair, g, count(*) AS cc FROM c2 "
-            "GROUP BY 1, 2), "
-            "rc2 AS (SELECT pair, g, count(*) AS rc FROM r2 "
-            "GROUP BY 1, 2), "
-            "a1 AS (SELECT sum(least(cc, coalesce(rc, 0))) AS clip1, "
-            "sum(cc) AS tot1 FROM cc1 LEFT JOIN rc1 USING (pair, g)), "
-            "a2 AS (SELECT sum(least(cc, coalesce(rc, 0))) AS clip2, "
-            "sum(cc) AS tot2 FROM cc2 LEFT JOIN rc2 USING (pair, g)), "
-            "l AS (SELECT sum(len(cand)) AS c_len, sum(len(ref)) "
-            "AS r_len, count(*) AS n_pairs FROM b) "
-            "SELECT n_pairs, clip1, tot1, clip2, tot2, c_len, r_len, "
-            "cast(floor((CASE WHEN c_len >= r_len THEN 1.0 ELSE "
-            "exp(1.0 - cast(r_len as double) / cast(c_len as double)) "
-            "END) * sqrt((cast(clip1 as double) / cast(tot1 as "
-            "double)) * (cast(clip2 as double) / cast(tot2 as "
-            "double))) * 1e9) as bigint) AS bleu_e9 "
-            "FROM a1 CROSS JOIN a2 CROSS JOIN l"
-        ),
-        "cohens_kappa": (
-            "WITH d AS (SELECT lang, "
-            "cast('0x' || substr(sha256('ra:' || cast(doc_id as "
-            "varchar)), 1, 2) as int) % 2 AS ra, "
-            "cast('0x' || substr(sha256('rb:' || cast(doc_id as "
-            "varchar)), 1, 2) as int) % 3 % 2 AS rb FROM documents), "
-            "g AS (SELECT lang, count(*) AS n, "
-            "sum(CASE WHEN ra = rb THEN 1 ELSE 0 END) AS agree, "
-            "sum(ra) AS a1, sum(rb) AS b1 FROM d GROUP BY lang) "
-            "SELECT lang, n, agree, a1, b1, "
-            "cast(floor(cast(n * agree - (a1 * b1 + (n - a1) * "
-            "(n - b1)) as double) / cast(n * n - (a1 * b1 + "
-            "(n - a1) * (n - b1)) as double) * 1e9) as bigint) "
-            "AS kappa_e9 FROM g ORDER BY lang"
-        ),
-        "eval_metrics": (
-            "WITH d AS (SELECT "
-            "cast('0x' || substr(sha256('y:' || cast(doc_id as "
-            "varchar)), 1, 2) as int) % 2 AS y, "
-            "CASE WHEN n_chars > 500 THEN 1 ELSE 0 END AS p "
-            "FROM documents), "
-            "g AS (SELECT "
-            "sum(CASE WHEN y = 1 AND p = 1 THEN 1 ELSE 0 END) AS tp, "
-            "sum(CASE WHEN y = 0 AND p = 1 THEN 1 ELSE 0 END) AS fp, "
-            "sum(CASE WHEN y = 1 AND p = 0 THEN 1 ELSE 0 END) AS fn, "
-            "sum(CASE WHEN y = 0 AND p = 0 THEN 1 ELSE 0 END) AS tn "
-            "FROM d) "
-            "SELECT tp, fp, fn, tn, "
-            "cast(floor(cast(tp as double) / cast(tp + fp as double) "
-            "* 1e9) as bigint) AS prec_e9, "
-            "cast(floor(cast(tp as double) / cast(tp + fn as double) "
-            "* 1e9) as bigint) AS rec_e9, "
-            "cast(floor(cast(2 * tp as double) / cast(2 * tp + fp + "
-            "fn as double) * 1e9) as bigint) AS f1_e9, "
-            "cast(floor(cast(tp + tn as double) / cast(tp + fp + fn "
-            "+ tn as double) * 1e9) as bigint) AS acc_e9 FROM g"
-        ),
-        "dispersion_index": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "count(*) AS x FROM events GROUP BY 1, 2), "
-            "g AS (SELECT event_type, count(*) AS n, sum(x) AS s, "
-            "sum(x * x) AS q FROM daily GROUP BY event_type) "
-            "SELECT event_type, n, s, "
-            "n * (n * q - s * s) AS d_num, "
-            "(n - 1) * n * s AS d_den, "
-            "cast(n * (n * q - s * s) as double) / "
-            "cast((n - 1) * n * s as double) AS dispersion, "
-            "CASE WHEN n * (n * q - s * s) > (n - 1) * n * s THEN 1 "
-            "ELSE 0 END AS overdispersed FROM g ORDER BY event_type"
-        ),
-        "schema_infer": (
-            "WITH d AS (SELECT doc_id % 3 AS col_id, "
-            "CASE WHEN doc_id % 6 = 0 THEN cast(doc_id * 17 as varchar) "
-            "WHEN doc_id % 6 = 1 THEN cast(doc_id % 90 as varchar) || "
-            "'.' || cast(doc_id % 100 as varchar) "
-            "WHEN doc_id % 6 = 2 THEN '2026-' || "
-            "lpad(cast(doc_id % 12 + 1 as varchar), 2, '0') || '-' || "
-            "lpad(cast(doc_id % 28 + 1 as varchar), 2, '0') "
-            "WHEN doc_id % 6 = 3 THEN CASE WHEN doc_id % 2 = 0 "
-            "THEN 'true' ELSE 'false' END "
-            "WHEN doc_id % 6 = 4 THEN 'w' ELSE '' END AS cell "
-            "FROM documents), "
-            "g AS (SELECT col_id, count(*) AS n, "
-            "sum(CASE WHEN regexp_matches(cell, '^-?\\d+$') THEN 1 "
-            "ELSE 0 END) AS n_int, "
-            "sum(CASE WHEN regexp_matches(cell, '^-?\\d+\\.\\d+$') "
-            "THEN 1 ELSE 0 END) AS n_dbl, "
-            "sum(CASE WHEN regexp_matches(cell, "
-            "'^\\d{4}-\\d{2}-\\d{2}$') THEN 1 ELSE 0 END) AS n_date, "
-            "sum(CASE WHEN regexp_matches(cell, '^(true|false)$') "
-            "THEN 1 ELSE 0 END) AS n_bool, "
-            "sum(CASE WHEN cell = '' THEN 1 ELSE 0 END) AS n_empty "
-            "FROM d GROUP BY col_id) "
-            "SELECT col_id, n, n_int, n_dbl, n_date, n_bool, n_empty, "
-            "CASE WHEN n - n_empty = 0 THEN 'string' "
-            "WHEN n_int = n - n_empty THEN 'bigint' "
-            "WHEN n_int + n_dbl = n - n_empty THEN 'double' "
-            "WHEN n_date = n - n_empty THEN 'date' "
-            "WHEN n_bool = n - n_empty THEN 'boolean' "
-            "ELSE 'string' END AS inferred FROM g ORDER BY col_id"
-        ),
-        # Rounding — from-definition integer algebra, not a builtin.
-        "rounding_modes": (
-            "WITH e AS (SELECT cast(floor(value * 100) as bigint) "
-            "AS cents FROM events), "
-            "t AS (SELECT cents, cents % 10 AS r, "
-            "cents - (cents % 10) + CASE WHEN cents % 10 >= 5 "
-            "THEN 10 ELSE 0 END AS r_up, "
-            "CASE WHEN cents % 10 > 5 THEN cents - (cents % 10) + 10 "
-            "WHEN cents % 10 < 5 THEN cents - (cents % 10) "
-            "WHEN ((cents - 5) // 10) % 2 = 1 "
-            "THEN cents - (cents % 10) + 10 "
-            "ELSE cents - (cents % 10) END AS r_even FROM e) "
-            "SELECT count(*) AS n, sum(r_up) AS sum_half_up, "
-            "sum(r_even) AS sum_half_even, "
-            "sum(CASE WHEN r_up <> r_even THEN 1 ELSE 0 END) "
-            "AS n_differ, "
-            "sum(CASE WHEN r = 5 THEN 1 ELSE 0 END) AS n_midpoint "
-            "FROM t"
-        ),
-        "wilson_ci": (
-            "WITH e AS (SELECT event_type, CASE WHEN "
-            "cast(floor(value * 100) as bigint) > 5000 THEN 1 ELSE 0 "
-            "END AS x FROM events), "
-            "g AS (SELECT event_type, count(*) AS n, sum(x) AS c "
-            "FROM e GROUP BY event_type) "
-            "SELECT event_type, n, c, "
-            "cast(floor((cast(c as double) / cast(n as double) + "
-            "3.8415999999999997 / (2.0 * cast(n as double)) - "
-            "1.96 * sqrt((cast(c as double) / cast(n as double) * "
-            "(1.0 - cast(c as double) / cast(n as double)) + "
-            "3.8415999999999997 / (4.0 * cast(n as double))) / "
-            "cast(n as double))) / (1.0 + 3.8415999999999997 / "
-            "cast(n as double)) * 1e9) as bigint) AS lo_e9, "
-            "cast(floor((cast(c as double) / cast(n as double) + "
-            "3.8415999999999997 / (2.0 * cast(n as double)) + "
-            "1.96 * sqrt((cast(c as double) / cast(n as double) * "
-            "(1.0 - cast(c as double) / cast(n as double)) + "
-            "3.8415999999999997 / (4.0 * cast(n as double))) / "
-            "cast(n as double))) / (1.0 + 3.8415999999999997 / "
-            "cast(n as double)) * 1e9) as bigint) AS hi_e9 "
-            "FROM g ORDER BY event_type"
-        ),
-        # base58 — CPython divmod reference (VALUES).
-        "base58_encode": _IO.base58_oracle_sql(_oracle_sf_dir()),
-        "matmul_relational": (
-            "WITH a AS (SELECT doc_id % 24 AS i, (doc_id * 3) % 24 "
-            "AS k, count(*) % 7 AS a FROM documents GROUP BY 1, 2), "
-            "b AS (SELECT (doc_id * 5) % 24 AS k, (doc_id * 11) % 24 "
-            "AS j, count(*) % 5 AS b FROM documents GROUP BY 1, 2), "
-            "c AS (SELECT i, j, sum(a * b) AS c FROM a JOIN b "
-            "USING (k) GROUP BY i, j) "
-            "SELECT i, count(*) AS nnz, sum(c) AS row_sum, "
-            "max(c) AS row_max FROM c WHERE c <> 0 GROUP BY i "
-            "ORDER BY i"
-        ),
-        "markov_transitions": (
-            "WITH e AS (SELECT user_id, substr(event_type, 1, 1) AS c, "
-            "cast(floor(epoch(ts)) as bigint) AS ep, event_id "
-            "FROM events), "
-            "t AS (SELECT c, lag(c) OVER (PARTITION BY user_id "
-            "ORDER BY ep, event_id) AS prev FROM e), "
-            "cnt AS (SELECT prev AS c_from, c AS c_to, count(*) AS n "
-            "FROM t WHERE prev IS NOT NULL GROUP BY 1, 2), "
-            "tot AS (SELECT c_from, sum(n) AS row_n FROM cnt "
-            "GROUP BY c_from) "
-            "SELECT c_from, c_to, n, "
-            "cast(n * 1000000 // row_n as bigint) AS p_ppm "
-            "FROM cnt JOIN tot USING (c_from) ORDER BY c_from, c_to"
-        ),
-        "label_propagation": (
-            "WITH e0 AS (SELECT DISTINCT doc_id % 150 AS u, "
-            "(doc_id * 13) % 150 AS v FROM documents "
-            "WHERE doc_id % 150 <> (doc_id * 13) % 150), "
-            "und AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0), "
-            "l0 AS (SELECT DISTINCT u AS node, u AS lab FROM und), "
-            "l1 AS (SELECT node, min(lab) AS lab FROM ("
-            "SELECT node, lab FROM l0 UNION ALL "
-            "SELECT und.u AS node, l0.lab FROM und JOIN l0 "
-            "ON l0.node = und.v) GROUP BY node), "
-            "l2 AS (SELECT node, min(lab) AS lab FROM ("
-            "SELECT node, lab FROM l1 UNION ALL "
-            "SELECT und.u AS node, l1.lab FROM und JOIN l1 "
-            "ON l1.node = und.v) GROUP BY node), "
-            "l3 AS (SELECT node, min(lab) AS lab FROM ("
-            "SELECT node, lab FROM l2 UNION ALL "
-            "SELECT und.u AS node, l2.lab FROM und JOIN l2 "
-            "ON l2.node = und.v) GROUP BY node) "
-            "SELECT lab, count(*) AS sz, min(node) AS lo, "
-            "max(node) AS hi FROM l3 GROUP BY lab ORDER BY lab"
-        ),
         # Dup clusters — both stages independently re-derived: exact
         # all-pairs Jaccard + recursive reachability closure.
         # ``pairs`` is read four times: MATERIALIZED computes the pairs once.
@@ -10436,40 +7759,6 @@ def oracle_sql() -> dict[str, str]:
             "sum(component) AS sum_label FROM sz GROUP BY sz "
             "ORDER BY cluster_size"
         ),
-        # SSSP — path-enumerating recursive CTE vs iterative relaxation.
-        "sssp": (
-            "WITH RECURSIVE e AS (SELECT doc_id % 200 AS u, "
-            "doc_id % 200 + 1 + (doc_id * 7) % 3 AS v, "
-            "min(doc_id % 9 + 1) AS w FROM documents GROUP BY 1, 2), "
-            "p(node, cost, d) AS (SELECT 0, 0, 0 "
-            "UNION ALL SELECT e.v, p.cost + e.w, p.d + 1 FROM p "
-            "JOIN e ON e.u = p.node WHERE p.d < 6) "
-            "SELECT node, min(cost) AS dist FROM p GROUP BY node "
-            "ORDER BY node"
-        ),
-        "sprt": _sprt_oracle_sql(),
-        "permutation_test": (
-            "WITH e AS (SELECT event_type, event_id, "
-            "event_id % 2 AS grp, "
-            "cast(floor(value * 100) as bigint) AS x FROM events "
-            "WHERE event_id % 4 = 0), "
-            "obs AS (SELECT event_type, sum(CASE WHEN grp = 0 THEN x "
-            "ELSE -x END) AS t_obs FROM e GROUP BY event_type), "
-            "reps AS (SELECT unnest(generate_series(0, 31)) AS b), "
-            "s AS (SELECT event_type, b, CASE WHEN "
-            "cast('0x' || substr(sha256(cast(event_id as varchar) || "
-            "':' || cast(b as varchar)), 1, 1) as int) % 2 = 0 "
-            "THEN x ELSE -x END AS sx FROM e CROSS JOIN reps), "
-            "tb AS (SELECT event_type, b, sum(sx) AS t_b FROM s "
-            "GROUP BY 1, 2), "
-            "j AS (SELECT tb.event_type, t_b, t_obs FROM tb "
-            "JOIN obs USING (event_type)) "
-            "SELECT event_type, max(t_obs) AS t_obs, "
-            "sum(CASE WHEN abs(t_b) >= abs(t_obs) THEN 1 ELSE 0 END) "
-            "AS p_num, count(*) AS n_reps, min(t_b) AS t_min, "
-            "max(t_b) AS t_max FROM j GROUP BY event_type "
-            "ORDER BY event_type"
-        ),
         "haversine_bins": (
             f"WITH {_pages_cte()}, "
             "d AS (SELECT 2 * 6371.0088 * asin(sqrt("
@@ -10480,345 +7769,6 @@ def oracle_sql() -> dict[str, str]:
             "sin(radians(lon - 2.3522) / 2))) AS km FROM pages) "
             "SELECT cast(floor(km / 1000.0) as bigint) AS mm_bin, "
             "count(*) AS n FROM d GROUP BY 1 ORDER BY mm_bin"
-        ),
-        "autocorr": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "cast(sum(cast(floor(value * 100) as bigint)) // 1000 "
-            "as bigint) AS y FROM events GROUP BY 1, 2), "
-            "t AS (SELECT event_type, y, "
-            "lag(y, 1) OVER (PARTITION BY event_type ORDER BY day) "
-            "AS y1, "
-            "lag(y, 7) OVER (PARTITION BY event_type ORDER BY day) "
-            "AS y7 FROM daily), "
-            "g AS (SELECT event_type, count(*) AS n, sum(y) AS s, "
-            "sum(y * y) AS q, count(y1) AS m1, sum(y * y1) AS p1, "
-            "sum(CASE WHEN y1 IS NOT NULL THEN y END) AS a1, "
-            "sum(y1) AS b1, count(y7) AS m7, sum(y * y7) AS p7, "
-            "sum(CASE WHEN y7 IS NOT NULL THEN y END) AS a7, "
-            "sum(y7) AS b7 FROM t GROUP BY event_type) "
-            "SELECT event_type, n, "
-            "n * n * p1 - n * s * (a1 + b1) + m1 * s * s AS num1, "
-            "n * n * p7 - n * s * (a7 + b7) + m7 * s * s AS num7, "
-            "n * n * q - n * s * s AS den, "
-            "cast(n * n * p1 - n * s * (a1 + b1) + m1 * s * s "
-            "as double) / cast(n * n * q - n * s * s as double) AS r1, "
-            "cast(n * n * p7 - n * s * (a7 + b7) + m7 * s * s "
-            "as double) / cast(n * n * q - n * s * s as double) AS r7 "
-            "FROM g ORDER BY event_type"
-        ),
-        "shannon_entropy": (
-            "WITH toks AS (SELECT lang, unnest(list_filter("
-            "string_split(lower(text), ' '), x -> x <> '')[1:6]) "
-            "AS tok FROM documents), "
-            "c AS (SELECT lang, tok, count(*) AS c FROM toks "
-            "GROUP BY 1, 2), "
-            "n AS (SELECT lang, count(*) AS n FROM toks GROUP BY 1), "
-            "j AS (SELECT c.lang, c.c, n.n, "
-            "cast(floor(-(cast(c as double) / cast(n as double)) * "
-            "log2(cast(c as double) / cast(n as double)) * 1e9) "
-            "as bigint) AS t9 FROM c JOIN n USING (lang)) "
-            "SELECT lang, max(n) AS n_tokens, count(*) AS n_distinct, "
-            "sum(t9) AS entropy_e9 FROM j GROUP BY lang ORDER BY lang"
-        ),
-        "zipf_slope": (
-            "WITH toks AS (SELECT unnest(list_filter(string_split("
-            "lower(text), ' '), x -> x <> '')) AS tok FROM documents), "
-            "freq AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1), "
-            "top AS (SELECT c, row_number() OVER (ORDER BY c DESC, "
-            "tok) AS r FROM freq QUALIFY r <= 200), "
-            "t AS (SELECT cast(floor(ln(cast(r as double)) * 1e6) "
-            "as bigint) AS x, cast(floor(ln(cast(c as double)) * 1e6) "
-            "as bigint) AS y FROM top), "
-            "g AS (SELECT count(*) AS m, sum(x) AS sx, sum(y) AS sy, "
-            "sum(x * y) AS sxy, sum(x * x) AS sxx FROM t) "
-            "SELECT m, m * sxy - sx * sy AS num, "
-            "m * sxx - sx * sx AS den, "
-            "cast(m * sxy - sx * sy as double) / "
-            "cast(m * sxx - sx * sx as double) AS slope FROM g"
-        ),
-        # Bitmap aggregates — plain COUNT(DISTINCT) is the semantics
-        # the bitmap algebra must reproduce exactly.
-        "bitmap_distinct": (
-            "SELECT lang, count(DISTINCT doc_id) AS nd_direct, "
-            "count(DISTINCT doc_id) AS nd_merged FROM documents "
-            "GROUP BY lang ORDER BY lang"
-        ),
-        "interval_merge": (
-            "WITH iv AS (SELECT source, (doc_id * 13) % 5000 AS s, "
-            "(doc_id * 13) % 5000 + doc_id % 40 + 5 AS e "
-            "FROM documents), "
-            "t AS (SELECT source, s, e, max(e) OVER (PARTITION BY "
-            "source ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING "
-            "AND 1 PRECEDING) AS pme FROM iv), "
-            "f AS (SELECT source, s, e, CASE WHEN pme IS NULL OR "
-            "s > pme THEN 1 ELSE 0 END AS is_start FROM t), "
-            "g AS (SELECT source, s, e, sum(is_start) OVER ("
-            "PARTITION BY source ORDER BY s, e ROWS UNBOUNDED "
-            "PRECEDING) AS isl FROM f), "
-            "i AS (SELECT source, isl, min(s) AS ms, max(e) AS me "
-            "FROM g GROUP BY 1, 2) "
-            "SELECT source, count(*) AS n_islands, "
-            "sum(me - ms) AS covered, max(me - ms) AS longest "
-            "FROM i GROUP BY source ORDER BY source"
-        ),
-        "pivot_multi": (
-            "SELECT source, "
-            "sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS de_n, "
-            "coalesce(sum(CASE WHEN lang = 'de' THEN n_chars END), 0) "
-            "AS de_chars, "
-            "sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS en_n, "
-            "coalesce(sum(CASE WHEN lang = 'en' THEN n_chars END), 0) "
-            "AS en_chars, "
-            "sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS fr_n, "
-            "coalesce(sum(CASE WHEN lang = 'fr' THEN n_chars END), 0) "
-            "AS fr_chars "
-            "FROM documents GROUP BY source ORDER BY source"
-        ),
-        "rendezvous_hash": (
-            "WITH k AS (SELECT doc_id, 'url' || cast(doc_id as varchar) "
-            "AS key FROM documents WHERE doc_id % 2 = 0), "
-            "nodes AS (SELECT 'n' || cast(unnest(generate_series(0, 7)) "
-            "as varchar) AS node), "
-            "s AS (SELECT doc_id, node, "
-            "cast('0x' || substr(sha256(node || '|' || key), 1, 15) "
-            "as bigint) AS w FROM k CROSS JOIN nodes), "
-            "a8 AS (SELECT doc_id, arg_max(node, w) AS n8 FROM s "
-            "GROUP BY doc_id), "
-            "a7 AS (SELECT doc_id, arg_max(node, w) AS n7 FROM s "
-            "WHERE node <> 'n3' GROUP BY doc_id), "
-            "j AS (SELECT a8.doc_id, n8, n7 FROM a8 JOIN a7 "
-            "USING (doc_id)) "
-            "SELECT n8, count(*) AS n_keys, "
-            "sum(CASE WHEN n8 <> n7 THEN 1 ELSE 0 END) AS n_moved, "
-            "sum(CASE WHEN n8 <> n7 AND n8 <> 'n3' THEN 1 ELSE 0 END) "
-            "AS n_violations FROM j GROUP BY n8 ORDER BY n8"
-        ),
-        "readability": (
-            "WITH t AS (SELECT lang, lower(text) AS txt "
-            "FROM documents), "
-            "m AS (SELECT lang, "
-            "cast(len(list_filter(string_split(txt, ' '), "
-            "x -> x <> '')) as bigint) AS w, "
-            "greatest(1, cast(len(regexp_extract_all(txt, "
-            "'[.!?]+')) as bigint)) AS s, "
-            "greatest(1, cast(len(regexp_extract_all(txt, "
-            "'[aeiouy]+')) as bigint)) AS y FROM t), "
-            "f AS (SELECT lang, w, s, y, "
-            "cast(floor((206.835 - 1.015 * (cast(w as double) / "
-            "cast(s as double)) - 84.6 * (cast(y as double) / "
-            "cast(w as double))) * 100) as bigint) AS fre100 "
-            "FROM m WHERE w > 0) "
-            "SELECT lang, count(*) AS n, sum(w) AS sum_words, "
-            "sum(s) AS sum_sents, sum(y) AS sum_syls, "
-            "sum(fre100) AS sum_fre100, min(fre100) AS min_fre100, "
-            "max(fre100) AS max_fre100 FROM f GROUP BY lang "
-            "ORDER BY lang"
-        ),
-        "ks_test": (
-            "WITH e AS (SELECT event_type, event_id % 2 AS grp, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "pv AS (SELECT event_type, cents, "
-            "sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS a1, "
-            "sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS a2 "
-            "FROM e GROUP BY 1, 2), "
-            "c AS (SELECT event_type, cents, "
-            "sum(a1) OVER (PARTITION BY event_type ORDER BY cents "
-            "ROWS UNBOUNDED PRECEDING) AS c1, "
-            "sum(a2) OVER (PARTITION BY event_type ORDER BY cents "
-            "ROWS UNBOUNDED PRECEDING) AS c2 FROM pv), "
-            "t AS (SELECT event_type, "
-            "sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS n1, "
-            "sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n2 "
-            "FROM e GROUP BY event_type) "
-            "SELECT event_type, max(abs(c1 * n2 - c2 * n1)) AS d_num, "
-            "max(n1 * n2) AS d_den FROM c JOIN t USING (event_type) "
-            "GROUP BY event_type ORDER BY event_type"
-        ),
-        "chi_square": (
-            "WITH d AS (SELECT lang, source FROM documents), "
-            "o AS (SELECT lang, source, count(*) AS o FROM d "
-            "GROUP BY 1, 2), "
-            "r AS (SELECT lang, count(*) AS r FROM d GROUP BY 1), "
-            "c AS (SELECT source, count(*) AS c FROM d GROUP BY 1), "
-            "n AS (SELECT count(*) AS n FROM d), "
-            "cell AS (SELECT o.o, r.r, c.c, n.n FROM o "
-            "JOIN r USING (lang) JOIN c USING (source) CROSS JOIN n), "
-            "t AS (SELECT cast(floor(cast(o * n - r * c as double) * "
-            "cast(o * n - r * c as double) / cast(r * c * n as double) "
-            "* 1e9) as bigint) AS t9 FROM cell), "
-            "dims AS (SELECT count(DISTINCT lang) AS nr, "
-            "count(DISTINCT source) AS nc FROM o) "
-            "SELECT sum(t9) AS chi2_e9, count(*) AS n_cells, "
-            "max(t9) AS max_cell_e9, "
-            "(max(nr) - 1) * (max(nc) - 1) AS dof "
-            "FROM t CROSS JOIN dims"
-        ),
-        # Reachability — linear WITH RECURSIVE expansion vs the
-        # engine's doubling joins.
-        "reachability": (
-            "WITH RECURSIVE e AS (SELECT DISTINCT doc_id % 200 AS u, "
-            "doc_id % 200 + 1 + (doc_id * 7) % 3 AS v FROM documents), "
-            "r(u, v, d) AS (SELECT u, v, 1 FROM e "
-            "UNION SELECT r.u, e.v, r.d + 1 FROM r JOIN e "
-            "ON r.v = e.u WHERE r.d < 4), "
-            "p AS (SELECT DISTINCT u, v FROM r) "
-            "SELECT u, count(*) AS n_reach, min(v) AS v_min, "
-            "max(v) AS v_max, sum(v) AS v_sum FROM p GROUP BY u "
-            "ORDER BY u"
-        ),
-        # UUIDv5 — CPython's uuid module as the independent RFC 4122
-        # reference (VALUES literal recomputed at check time).
-        "uuid5": _IO.uuid5_oracle_sql(_oracle_sf_dir()),
-        # Islands — the OTHER classic derivation (lag start-flags +
-        # running sum), independent of the engine's rank-difference.
-        "islands_gaps": (
-            "WITH s AS (SELECT DISTINCT doc_id // 7 AS v "
-            "FROM documents WHERE doc_id % 5 <> 3), "
-            "f AS (SELECT v, CASE WHEN v - lag(v) OVER (ORDER BY v) "
-            "= 1 THEN 0 ELSE 1 END AS is_start FROM s), "
-            "g AS (SELECT v, sum(is_start) OVER (ORDER BY v "
-            "ROWS UNBOUNDED PRECEDING) AS isl FROM f) "
-            "SELECT min(v) AS start, max(v) AS \"end\", "
-            "count(*) AS len FROM g GROUP BY isl ORDER BY start"
-        ),
-        "rank_sum_test": (
-            "WITH e AS (SELECT event_type, event_id % 2 AS grp, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "t AS (SELECT event_type, grp, "
-            "2 * rank() OVER (PARTITION BY event_type ORDER BY cents) "
-            "+ count(*) OVER (PARTITION BY event_type, cents) - 1 "
-            "AS two_avg_rank FROM e), "
-            "g AS (SELECT event_type, count(*) AS n_all, "
-            "sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS n1, "
-            "sum(CASE WHEN grp = 0 THEN two_avg_rank ELSE 0 END) "
-            "AS two_r1 FROM t GROUP BY event_type) "
-            "SELECT event_type, n1, n_all - n1 AS n2, two_r1, "
-            "two_r1 - n1 * (n1 + 1) AS two_u1 FROM g "
-            "ORDER BY event_type"
-        ),
-        # tz — DuckDB's ICU tzdb vs Spark's JSR-310 rules.
-        "tz_convert": (
-            "WITH e AS (SELECT ts, (['America/New_York',"
-            "'Europe/Berlin','Asia/Kolkata'])[event_id % 3 + 1] "
-            "AS zone FROM events), "
-            "l AS (SELECT zone, ts AT TIME ZONE 'UTC' AT TIME ZONE "
-            "zone AS local FROM e) "
-            "SELECT zone, cast(hour(local) as int) AS local_hour, "
-            "count(*) AS n, count(DISTINCT cast(local as date)) "
-            "AS n_dates FROM l GROUP BY zone, local_hour "
-            "ORDER BY zone, local_hour"
-        ),
-        "dist_rank_surface": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "t AS (SELECT event_type, "
-            "percent_rank() OVER (PARTITION BY event_type "
-            "ORDER BY cents) AS pr, "
-            "cume_dist() OVER (PARTITION BY event_type "
-            "ORDER BY cents) AS cd FROM e) "
-            "SELECT event_type, count(*) AS n, "
-            "sum(cast(floor(pr * 100000) as bigint)) AS sum_pr5, "
-            "sum(cast(floor(cd * 100000) as bigint)) AS sum_cd5, "
-            "max(pr) AS max_pr FROM t GROUP BY event_type "
-            "ORDER BY event_type"
-        ),
-        # width_bucket — oracle reimplements the SQL:2003 definition in
-        # Spark's exact operation order (16.0*(v-0)/(100-0), floor, +1).
-        "width_bucket": (
-            "WITH t AS (SELECT CASE WHEN value < 0.0 THEN 0 "
-            "WHEN value >= 100.0 THEN 17 "
-            "ELSE cast(floor(16 * (value - 0.0) / (100.0 - 0.0)) "
-            "as bigint) + 1 END AS bucket FROM events) "
-            "SELECT bucket, count(*) AS n FROM t GROUP BY bucket "
-            "ORDER BY bucket"
-        ),
-        "str_to_map_surface": (
-            "WITH t AS (SELECT doc_id, "
-            "'k' || cast(doc_id % 5 as varchar) || ':' || "
-            "cast(doc_id % 7 as varchar) || ',j' || "
-            "cast(doc_id % 4 as varchar) || ':' || "
-            "cast(doc_id % 11 as varchar) || ',z:' || "
-            "cast(doc_id % 3 as varchar) AS s FROM documents "
-            "WHERE doc_id % 5 = 0), "
-            "kv AS (SELECT doc_id, unnest(string_split(s, ',')) AS p "
-            "FROM t), "
-            "e AS (SELECT doc_id, string_split(p, ':')[1] AS k, "
-            "string_split(p, ':')[2] AS v FROM kv) "
-            "SELECT doc_id, cast(count(*) as int) AS n_keys, "
-            "string_agg(k || '=' || v, '|' ORDER BY k || '=' || v) "
-            "AS entries, "
-            "max(CASE WHEN k = 'z' THEN v END) AS z_val "
-            "FROM e GROUP BY doc_id ORDER BY doc_id"
-        ),
-        "lateral_surface": (
-            "WITH st AS (SELECT 'lang' AS k, lang AS v FROM documents "
-            "UNION ALL SELECT 'src', source FROM documents "
-            "UNION ALL SELECT 'len', cast(n_chars as varchar) "
-            "FROM documents), "
-            "sa AS (SELECT 'stack' AS kind, k AS key, count(*) AS n, "
-            "min(v) AS mn, max(v) AS mx FROM st GROUP BY k), "
-            "tk AS (SELECT list_filter(string_split(lower(text), ' '), "
-            "x -> true)[1:4] AS l FROM documents), "
-            "px AS (SELECT i.i AS pos, l[i.i + 1] AS tok FROM tk "
-            "CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) i "
-            "WHERE i.i < len(l)), "
-            "pa AS (SELECT 'pos' AS kind, cast(pos as varchar) AS key, "
-            "count(*) AS n, min(tok) AS mn, max(tok) AS mx FROM px "
-            "GROUP BY pos) "
-            "SELECT * FROM sa UNION ALL SELECT * FROM pa "
-            "ORDER BY kind, key"
-        ),
-        # Luhn — from-spec mod-10 algebra, not a builtin replay.
-        "luhn_check": (
-            "WITH t AS (SELECT doc_id, cast((doc_id * 7919) % 100000000 "
-            "+ 10000000 as varchar) AS s FROM documents) "
-            "SELECT doc_id, s, "
-            "CASE WHEN list_sum(list_transform(range(0, length(s)), "
-            "i -> CASE WHEN i % 2 = 1 THEN "
-            "(cast(substr(s, length(s) - i, 1) as int) * 2) // 10 + "
-            "(cast(substr(s, length(s) - i, 1) as int) * 2) % 10 "
-            "ELSE cast(substr(s, length(s) - i, 1) as int) END)) "
-            "% 10 = 0 THEN 1 ELSE 0 END AS is_valid "
-            "FROM t ORDER BY doc_id"
-        ),
-        # parse_url — independent regexp dissection of the same URLs.
-        "url_parse_surface": (
-            "WITH t AS (SELECT doc_id, 'https://user:pw@h' || "
-            "cast(doc_id % 13 as varchar) || '.example:8' || "
-            "cast(doc_id % 10 as varchar) || '43/p/' || "
-            "cast(doc_id as varchar) || '/x.html?a=' || "
-            "cast(doc_id % 5 as varchar) || '&b=' || "
-            "cast(doc_id % 7 as varchar) || '#s' || "
-            "cast(doc_id % 3 as varchar) AS u FROM documents "
-            "WHERE doc_id % 6 = 2) "
-            "SELECT doc_id, "
-            "regexp_extract(u, '^([a-z]+)://', 1) AS proto, "
-            "regexp_extract(u, '://[^/@]*@([^:/]+)', 1) AS host, "
-            "regexp_extract(u, '://[^/]+(/[^?#]*)', 1) AS path, "
-            "regexp_extract(u, '\\?([^#]*)', 1) AS query, "
-            "regexp_extract(u, '#(.*)$', 1) AS frag, "
-            "regexp_extract(u, '[?&]b=([^&#]*)', 1) AS qb "
-            "FROM t ORDER BY doc_id"
-        ),
-        # printf — DuckDB's fmt printf vs Spark's java.util.Formatter.
-        "printf_surface": (
-            "WITH t AS (SELECT printf('%s=%05d/%x/%3d%%', lang, "
-            "n_chars % 100000, doc_id % 4096, doc_id % 100) AS line "
-            "FROM documents) "
-            "SELECT count(*) AS n, sha256(string_agg(line, chr(10) "
-            "ORDER BY line)) AS sha FROM t"
-        ),
-        # base64/hex — two independent RFC 4648 codecs, both directions.
-        "base64_surface": (
-            "WITH t AS (SELECT doc_id, substr(text, 1, 50) AS s50, "
-            "substr(text, 1, 8) AS s8 FROM documents "
-            "WHERE doc_id % 4 = 3) "
-            "SELECT doc_id, base64(encode(s50)) AS b64, "
-            "cast(from_base64(base64(encode(s50))) as varchar) AS back, "
-            "hex(encode(s8)) AS hx, "
-            "cast(from_hex(hex(encode(s8))) as varchar) AS hx_back "
-            "FROM t ORDER BY doc_id"
         ),
         # Jaro-Winkler — oracle is DuckDB's independent C++ builtin.
         "jaro_winkler": (
@@ -10833,71 +7783,5 @@ def oracle_sql() -> dict[str, str]:
             "jaro_winkler_similarity(a, b) AS jw, "
             "CASE WHEN jaro_winkler_similarity(a, b) >= 0.84 THEN 1 "
             "ELSE 0 END AS is_match FROM t ORDER BY doc_id"
-        ),
-        # Sitemap — rollup derived analytically, no XML on oracle side.
-        "sitemap_urls": (
-            "WITH d AS (SELECT doc_id % 23 AS host, "
-            "'https://h' || cast(doc_id % 23 as varchar) || "
-            "'.example/p' || cast(doc_id as varchar) || '.html' "
-            "AS loc, doc_id % 9 + 1 AS pd FROM documents) "
-            "SELECT host, cast(count(*) as int) AS n_urls, "
-            "min(loc) AS loc_min, max(loc) AS loc_max, "
-            "sum(pd) AS pri_digit_sum FROM d GROUP BY host "
-            "ORDER BY host"
-        ),
-        # HMAC — CPython hmac/hashlib as the independent FIPS 198-1
-        # reference (VALUES literal recomputed at check time).
-        "hmac_sha256": _IO.hmac_oracle_sql(_oracle_sf_dir()),
-        "ewma_trend": (
-            "WITH daily AS (SELECT event_type, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day, "
-            "sum(cast(floor(value * 100) as bigint)) AS y "
-            "FROM events GROUP BY 1, 2), "
-            "r AS (SELECT event_type, y, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY day DESC) AS rn "
-            "FROM daily), "
-            "last AS (SELECT * FROM r WHERE rn <= 12), "
-            "mm AS (SELECT event_type, count(*) AS m FROM last "
-            "GROUP BY event_type), "
-            "t AS (SELECT l.event_type, l.y, mm.m, mm.m - l.rn AS t, "
-            f"([{', '.join(str(3 ** i) for i in range(13))}])"
-            "[mm.m - 1 - (mm.m - l.rn) + 1] * "
-            "CASE WHEN mm.m - l.rn = 0 THEN 1 ELSE "
-            f"([{', '.join(str(4 ** i) for i in range(13))}])"
-            "[mm.m - l.rn] END AS wt "
-            "FROM last l JOIN mm USING (event_type)) "
-            "SELECT event_type, max(m) AS m, "
-            "sum(y * wt) AS s_scaled, sum(y) AS sum_y, "
-            f"sum(y * wt) / cast(([{', '.join(str(4 ** i) for i in range(13))}])"
-            "[max(m)] as double) AS ewma "
-            "FROM t GROUP BY event_type ORDER BY event_type"
-        ),
-        "weighted_sample": (
-            "WITH t AS (SELECT doc_id, lang, "
-            "-ln(cast((doc_id * 2654435761) % 2147483648 + 1 as double) "
-            "/ 2147483649.0) / "
-            "cast(greatest(1, n_chars) as double) AS k FROM documents), "
-            "r AS (SELECT lang, doc_id, k, row_number() OVER ("
-            "PARTITION BY lang ORDER BY k, doc_id) AS rn FROM t) "
-            "SELECT lang, rn, doc_id, k FROM r WHERE rn <= 10 "
-            "ORDER BY lang, rn"
-        ),
-        "map_surface": (
-            "WITH d AS (SELECT doc_id, list_filter(string_split("
-            "lower(text), ' '), x -> x <> '')[1:6] AS toks "
-            "FROM documents WHERE doc_id % 5 = 1), "
-            "u AS (SELECT DISTINCT doc_id, unnest(toks) AS tok FROM d), "
-            "v AS (SELECT doc_id, tok, "
-            "length(tok) * 2 + doc_id % 3 AS val FROM u), "
-            "agg AS (SELECT doc_id, count(*) AS n_keys, "
-            "count(*) FILTER (length(tok) > 3) AS n_kept, "
-            "coalesce(string_agg(tok || '=' || cast(val as varchar), "
-            "'|' ORDER BY tok || '=' || cast(val as varchar)) "
-            "FILTER (length(tok) > 3), '') AS entries "
-            "FROM v GROUP BY doc_id) "
-            "SELECT d.doc_id, cast(coalesce(n_keys, 0) as int) AS n_keys, "
-            "cast(coalesce(n_kept, 0) as int) AS n_kept, "
-            "coalesce(entries, '') AS entries "
-            "FROM d LEFT JOIN agg USING (doc_id) ORDER BY doc_id"
         ),
     }

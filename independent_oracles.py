@@ -1,4 +1,4 @@
-"""Independent-implementation oracles for the three battery queries whose
+"""Independent-implementation oracles for the battery queries whose
 semantics are not ANSI-SQL-expressible (VERDICT r2 asks #2/#3).
 
 INDEPENDENCE CONTRACT: this module imports NOTHING from
@@ -963,263 +963,9 @@ def crc32_oracle_sql(sf_dir: str) -> str:
     )
 
 
-# ------------------------------------------------ phonetics / edit distance
-
-_SOUNDEX_CODE = {}
-for _grp, _c in (("BFPV", "1"), ("CGJKQSXZ", "2"), ("DT", "3"),
-                 ("L", "4"), ("MN", "5"), ("R", "6")):
-    for _ch in _grp:
-        _SOUNDEX_CODE[_ch] = _c
-
-
-def soundex_ref(name: str) -> str:
-    """American Soundex, H/W-transparent variant (the one Hive/Spark
-    implement: H and W neither emit nor separate; vowels separate).
-    Verified on the classic vectors Robert=R163, Tymczak=T522,
-    Honeyman=H555, Ashcraft=A261, Pfister=P236."""
-    s = name.upper()
-    out = s[0]
-    last = _SOUNDEX_CODE.get(s[0])
-    for ch in s[1:]:
-        if ch in "HW":
-            continue
-        code = _SOUNDEX_CODE.get(ch)
-        if code is None:  # vowel (or Y): separates
-            last = None
-            continue
-        if code != last:
-            out += code
-            last = code
-        if len(out) == 4:
-            break
-    return (out + "000")[:4]
-
-
-def levenshtein_ref(a: str, b: str) -> int:
-    """Textbook Wagner-Fischer DP — independent of both engines."""
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
 _NAME_STEMS = [
     "Robert", "Rupert", "Ashcraft", "Ashcroft", "Tymczak", "Pfister",
     "Honeyman", "Jackson", "Schmidt", "Smith", "Smythe", "Gauss",
     "Ghosh", "Heilbronn", "Lloyd", "Moses", "Washington", "Lee",
     "Gutierrez", "Vandeusen", "Deusen", "Knuth", "Kant", "Oconnor",
 ]
-
-
-def phonetic_cases(sf_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    ids = [int(r[0]) for r in con.sql(
-        f"SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet') "
-        "ORDER BY doc_id").fetchall()]
-    out = []
-    for d in ids:
-        a = _NAME_STEMS[d % len(_NAME_STEMS)]
-        b = _NAME_STEMS[(d * 7 + 3) % len(_NAME_STEMS)]
-        out.append((d, a, b))
-    return out
-
-
-def phonetic_expected(sf_dir: str):
-    """(doc_id, sdx_a, sdx_b, lev, same_code) — soundex + levenshtein from
-    the from-spec reference implementations above."""
-    return [(d, soundex_ref(a), soundex_ref(b), levenshtein_ref(a, b),
-             1 if soundex_ref(a) == soundex_ref(b) else 0)
-            for d, a, b in phonetic_cases(sf_dir)]
-
-
-@functools.lru_cache(maxsize=4)
-def phonetic_oracle_sql(sf_dir: str) -> str:
-    rows = phonetic_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS sdx_a, "
-        "CAST(c2 AS VARCHAR) AS sdx_b, CAST(c3 AS INTEGER) AS lev, "
-        "CAST(c4 AS INTEGER) AS same_code",
-        "doc_id", ncols=5,
-    )
-
-
-# ------------------------------------------------ HMAC-SHA256 (RFC 2104)
-
-HMAC_KEY = b"graft-hmac-key"
-
-
-def hmac_expected(sf_dir: str):
-    """(doc_id, tag_hex) — CPython's hmac/hashlib (the FIPS 198-1
-    reference everybody validates against) over substr(text,1,80) of
-    every 7th document. The engine composes the SAME tag from Spark's
-    sha2 primitive per RFC 2104 (explicit ipad/opad block algebra), so
-    this checks the composition against an independent implementation,
-    not a replay."""
-    import hashlib
-    import hmac as _hmac
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        f"SELECT doc_id, substr(text, 1, 80) FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        f"WHERE doc_id % 7 = 0 ORDER BY doc_id").fetchall()
-    return [(int(d), _hmac.new(HMAC_KEY, t.encode("utf-8"),
-                               hashlib.sha256).hexdigest())
-            for d, t in rows]
-
-
-@functools.lru_cache(maxsize=4)
-def hmac_oracle_sql(sf_dir: str) -> str:
-    rows = hmac_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS tag",
-        "doc_id", ncols=2,
-    )
-
-
-# ------------------------------------------------ UUIDv5 (RFC 4122 §4.3)
-
-def uuid5_expected(sf_dir: str):
-    """(doc_id, uuid) — CPython's uuid.uuid5 (the reference RFC 4122
-    implementation) over deterministic host names; the engine composes
-    the same UUID from Spark's sha1 primitive with explicit version/
-    variant bit surgery in string algebra."""
-    import uuid
-
-    import duckdb
-
-    con = duckdb.connect()
-    ids = [int(r[0]) for r in con.sql(
-        f"SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE doc_id % 6 = 1 ORDER BY doc_id").fetchall()]
-    return [(d, str(uuid.uuid5(uuid.NAMESPACE_DNS,
-                               f"h{d % 97}.example"))) for d in ids]
-
-
-@functools.lru_cache(maxsize=4)
-def uuid5_oracle_sql(sf_dir: str) -> str:
-    rows = uuid5_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS uuid",
-        "doc_id", ncols=2,
-    )
-
-
-# ------------------------------------------------ base58 (Bitcoin form)
-
-B58_ALPHA = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
-
-
-def base58_ref(payload: bytes) -> str:
-    """Independent reference: the published big-integer algorithm —
-    leading zero BYTES map to '1' chars, remainder via repeated
-    divmod 58 (the form every BTC library implements)."""
-    lz = 0
-    for b in payload:
-        if b:
-            break
-        lz += 1
-    v = int.from_bytes(payload, "big")
-    digits = ""
-    while v:
-        v, r = divmod(v, 58)
-        digits = B58_ALPHA[r] + digits
-    return "1" * lz + digits
-
-
-def base58_expected(sf_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    ids = [int(r[0]) for r in con.sql(
-        f"SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE doc_id % 5 = 2 ORDER BY doc_id").fetchall()]
-    out = []
-    for d in ids:
-        v = (d * 7919) % (1 << 48) if d % 2 else d % 65536
-        out.append((d, base58_ref(v.to_bytes(6, "big"))))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def base58_oracle_sql(sf_dir: str) -> str:
-    rows = base58_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS doc_id, CAST(c1 AS VARCHAR) AS b58",
-        "doc_id", ncols=2,
-    )
-
-
-# --------------------------- segment intersections (Fraction solver)
-
-def seg_intersections_expected(sf_dir: str):
-    """(g, n_segments, n_intersecting) — PARAMETRIC rational solver
-    (Fractions: solve p1+t·d1 = p3+u·d2, check t,u ∈ [0,1]; parallel
-    case via collinearity + 1-D projection overlap) — an independent
-    decision procedure from the engine's orientation-sign algebra."""
-    from fractions import Fraction
-
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.sql(
-        "WITH s AS (SELECT doc_id % 5 AS g, "
-        "(doc_id * 37) % 60 AS x1, (doc_id * 53) % 60 AS y1, "
-        "(doc_id * 71) % 60 AS x2, (doc_id * 89) % 60 AS y2 FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE doc_id % 17 = 0) "
-        "SELECT g, list(DISTINCT [x1, y1, x2, y2]) FROM s "
-        "WHERE NOT (x1 = x2 AND y1 = y2) GROUP BY g "
-        "ORDER BY g").fetchall()
-
-    def intersects(a, b):
-        (x1, y1, x2, y2), (x3, y3, x4, y4) = a, b
-        dx1, dy1 = x2 - x1, y2 - y1
-        dx2, dy2 = x4 - x3, y4 - y3
-        den = dx1 * dy2 - dy1 * dx2
-        if den != 0:
-            t = Fraction(((x3 - x1) * dy2 - (y3 - y1) * dx2), den)
-            u = Fraction(((x3 - x1) * dy1 - (y3 - y1) * dx1), den)
-            return 0 <= t <= 1 and 0 <= u <= 1
-        # parallel: collinear + projection overlap
-        if (x3 - x1) * dy1 - (y3 - y1) * dx1 != 0:
-            return False
-        if dx1 != 0 or dx2 != 0:
-            lo1, hi1 = sorted((x1, x2))
-            lo2, hi2 = sorted((x3, x4))
-        else:
-            lo1, hi1 = sorted((y1, y2))
-            lo2, hi2 = sorted((y3, y4))
-        return max(lo1, lo2) <= min(hi1, hi2)
-
-    out = []
-    for g, segs in rows:
-        ss = sorted(tuple(int(v) for v in s) for s in segs)
-        n = len(ss)
-        cnt = sum(1 for i in range(n) for j in range(i + 1, n)
-                  if intersects(ss[i], ss[j]))
-        out.append((int(g), n, cnt))
-    return out
-
-
-@functools.lru_cache(maxsize=4)
-def seg_intersections_oracle_sql(sf_dir: str) -> str:
-    rows = seg_intersections_expected(sf_dir)
-    return _values_sql(
-        rows,
-        "CAST(c0 AS BIGINT) AS g, CAST(c1 AS INTEGER) AS n_segments, "
-        "CAST(c2 AS BIGINT) AS n_intersecting",
-        "g", ncols=3,
-    )

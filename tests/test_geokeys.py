@@ -152,45 +152,3 @@ def test_geohash_prefix_containment(spark):
         g8 = ref_geohash(la, lo, 8)
         g5 = ref_geohash(la, lo, 5)
         assert g8.startswith(g5)
-
-
-def test_hmac_known_vector(spark):
-    """RFC-style public vector: HMAC-SHA256('key', quick-brown-fox) —
-    the engine's unhex/concat/sha2 composition must reproduce it."""
-    from pyspark.sql import functions as F
-
-    key = b"key".ljust(64, b"\0")
-    ipad = bytes(b ^ 0x36 for b in key).hex()
-    opad = bytes(b ^ 0x5c for b in key).hex()
-    df = spark.createDataFrame(
-        [("The quick brown fox jumps over the lazy dog",)], "msg string")
-    inner = F.sha2(F.concat(F.unhex(F.lit(ipad)),
-                            F.encode(F.col("msg"), "UTF-8")), 256)
-    tag = F.sha2(F.concat(F.unhex(F.lit(opad)), F.unhex(inner)), 256)
-    got = df.select(tag.alias("t")).first().t
-    assert got == ("f7bc83f430538424b13298e6aa6fb143"
-                   "ef4d59a14946175997479dbc2d1a3cd8")
-
-
-def test_uuid5_known_vector(spark):
-    """Public RFC 4122 vector: uuid5(NAMESPACE_DNS, 'python.org')."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    assert str(_uuid.uuid5(_uuid.NAMESPACE_DNS, "python.org")) == \
-        "886313e1-3b8a-5372-9b90-0c9aee199e5d"
-    ns = "6ba7b8109dad11d180b400c04fd430c8"
-    df = spark.createDataFrame([("python.org",)], "name string")
-    hx = F.sha1(F.concat(F.unhex(F.lit(ns)),
-                         F.encode(F.col("name"), "UTF-8")))
-    vchar = F.element_at(
-        F.split(F.lit("8|9|a|b"), "[|]"),
-        (F.conv(F.substring(hx, 17, 1), 16, 10).cast("int") % 4 + 1))
-    u = F.concat(
-        F.substring(hx, 1, 8), F.lit("-"), F.substring(hx, 9, 4),
-        F.lit("-"), F.lit("5"), F.substring(hx, 14, 3), F.lit("-"),
-        vchar, F.substring(hx, 18, 3), F.lit("-"),
-        F.substring(hx, 21, 12))
-    assert df.select(u.alias("u")).first().u == \
-        "886313e1-3b8a-5372-9b90-0c9aee199e5d"

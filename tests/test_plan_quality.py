@@ -467,25 +467,3 @@ def test_geokeys_are_pure_jvm_projections(spark, sf_dir):
     assert "Exchange" not in plan
     # formatted mode marks codegen stages with '*'
     assert "* Project" in plan
-
-
-def test_rendezvous_hash_broadcasts_node_ring(spark, sf_dir):
-    """The 8-node ring must be the BROADCAST side; the key table must
-    not shuffle before the per-key argmax partial-agg."""
-    import __spark_entry__ as E
-
-    plan = plan_of(E._raw_queries()["rendezvous_hash"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" \
-        in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_interval_merge_single_shuffle(spark, sf_dir):
-    """The coalescing sweep is one partition-by-source exchange; the
-    two windows and the island groupBy must all reuse it."""
-    import __spark_entry__ as E
-
-    plan = plan_of(E._raw_queries()["interval_merge"](spark, sf_dir))
-    n_hash_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_hash_exchanges <= 1, plan[:2000]
-    assert "BatchEvalPython" not in plan
