@@ -1132,25 +1132,6 @@ def q_kmeans_fixed(spark, sf_dir) -> DataFrame:
             .orderBy("cid"))
 
 
-def q_cube_counts(spark, sf_dir) -> DataFrame:
-    """GROUP BY CUBE over (lang, source) with the grouping-id bitmask —
-    completes the rollup/pivot/moving_window OLAP family. All four
-    grouping sets come out of ONE pass (Spark expands the cube before
-    the exchange, partial aggregation applies per set); the oracle is
-    DuckDB's native CUBE with the same GROUPING() bit order."""
-    docs = load(spark, sf_dir, "documents")
-    return (docs.cube("lang", "source")
-            .agg(F.count("*").alias("n"),
-                 F.sum("n_chars").alias("chars"),
-                 F.grouping_id().alias("gid"))
-            .select("lang", "source", "n", "chars", "gid")
-            # NULL-explicit total order (VERDICT r5 #3): rollup rows carry
-            # NULL lang/source; DuckDB's default is NULLS LAST where Spark's
-            # is NULLS FIRST, so pin the oracle's ordering explicitly.
-            .orderBy(F.col("gid").asc(), F.col("lang").asc_nulls_last(),
-                     F.col("source").asc_nulls_last()))
-
-
 def q_stratified_sample(spark, sf_dir) -> DataFrame:
     """Exact-count stratified sampling (operators/selection.py): keep
     exactly ceil(n/5) docs per lang — the k smallest by (sha60(doc_id),
@@ -1350,87 +1331,6 @@ def q_neg_sample(spark, sf_dir) -> DataFrame:
             .orderBy("doc_id"))
 
 
-def q_partition_prune(spark, sf_dir) -> DataFrame:
-    """Hive-layout partition pruning (the Iceberg partition-spec
-    pattern on the parquet stand-in): documents written partitioned by
-    lang, then a lang-filtered read — the filter resolves at FILE
-    LISTING time (PartitionFilters in the scan, asserted in
-    test_plan_quality), so non-matching partitions are never opened;
-    at 100 TB this is the difference between scanning one partition
-    and scanning the lake. Rollup parity against the unpartitioned
-    base table proves the pruned read loses nothing."""
-    import shutil
-
-    base = _lineage_base(sf_dir, "pprune")
-    if not os.path.isfile(os.path.join(base, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        (load(spark, sf_dir, "documents")
-         .write.partitionBy("lang").mode("overwrite").parquet(base))
-    part = spark.read.parquet(base).filter(F.col("lang").isin("en", "de"))
-    return (part.groupBy("lang", "source")
-            .agg(F.count("*").alias("n"),
-                 F.sum("n_chars").alias("chars"))
-            .orderBy("lang", "source"))
-
-
-def q_bucketed_join(spark, sf_dir) -> DataFrame:
-    """Catalog-bucketed co-located join: orders and customer saved as
-    8-bucket tables on the join key (bucketBy + sortBy + saveAsTable —
-    Spark's persistent analog of Iceberg's bucket transform); the join
-    then runs with ZERO Exchange on EITHER side (asserted in
-    test_plan_quality) — at 100 TB the shuffle this avoids IS the
-    query cost. Oracle: the plain join on the base parquet."""
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    to, tc = f"iusb_orders_{sf}", f"iusb_customer_{sf}"
-    if not spark.catalog.tableExists(tc):
-        # the in-memory catalog forgets tables across sessions but the
-        # managed LOCATION persists — clear stale dirs before recreate
-        import shutil
-
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).replace("file:", "")
-        for t in (to, tc):
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-        (load(spark, sf_dir, "orders")
-         .select("o_orderkey", "o_custkey", "o_totalprice")
-         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-         .mode("overwrite").saveAsTable(to, format="parquet"))
-        (load(spark, sf_dir, "customer")
-         .select("c_custkey", "c_nationkey")
-         .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-         .mode("overwrite").saveAsTable(tc, format="parquet"))
-    o = spark.table(to)
-    c = spark.table(tc)
-    j = o.join(c.hint("merge"), o.o_custkey == c.c_custkey)
-    # integer cents, not a float sum: double addition is merge-order
-    # dependent across partitions; the per-row cast is engine-identical
-    return (j.groupBy("c_nationkey")
-            .agg(F.count("*").alias("n_orders"),
-                 F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
-                 .alias("total_cents"))
-            .orderBy("c_nationkey"))
-
-
-def q_star_join(spark, sf_dir) -> DataFrame:
-    """Star-schema rollup: orders fact against customer and nation
-    dims. Catalyst's size estimates broadcast BOTH dims (two
-    BroadcastHashJoins, no sort-merge, the only hash exchange is the
-    final rollup's — asserted in test_plan_quality): the fact flows
-    through the star without ever shuffling on a join key. Integer
-    cents, per bucketed_join's float-sum lesson."""
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = (o.join(c, o.o_custkey == c.c_custkey)
-         .join(n, c.c_nationkey == n.n_nationkey))
-    return (j.groupBy("n_name")
-            .agg(F.count("*").alias("n_orders"),
-                 F.sum(F.floor(F.col("o_totalprice") * 100)
-                       .cast("long")).alias("total_cents"))
-            .orderBy("n_name"))
-
-
 def q_dist_quantile(spark, sf_dir) -> DataFrame:
     """Exact order statistics WITHOUT a global sort: the p50/p90/p99
     of order totals (integer cents) via the same two-pass histogram
@@ -1454,48 +1354,6 @@ def q_dist_quantile(spark, sf_dir) -> DataFrame:
                                  value_bits=27)  # cents < 2^27
         pieces.append(kept.agg(F.max("cents").alias(name)))
     return pieces[0].crossJoin(pieces[1]).crossJoin(pieces[2])
-
-
-def q_change_detect(spark, sf_dir) -> DataFrame:
-    """Two-epoch per-tile change detection via COGROUPED grouped-map
-    (df1.groupBy(k).cogroup(df2.groupBy(k)).applyInPandas — the one
-    Arrow grouped-map shape the engine hadn't exercised): both epochs
-    co-shuffle ONCE on tile, each tile's two pixel frames arrive in
-    the same Arrow batch, and the per-tile diff (added / removed /
-    changed / unchanged, total |delta|) runs vectorized in pandas —
-    the imagery change-detection pattern (reference: mosaic rebuild
-    against a prior epoch). Integer pixel algebra; the oracle is the
-    relational FULL OUTER JOIN rollup."""
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    e1 = (docs.filter(d % 7 != 0)
-          .select((d % 10).alias("tile"),
-                  F.floor(d / 10).cast("long").alias("px"),
-                  ((d * d) % 97).alias("v")))
-    e2 = (docs.filter(d % 5 != 0)
-          .select((d % 10).alias("tile"),
-                  F.floor(d / 10).cast("long").alias("px"),
-                  ((d * 3 + 11) % 97).alias("v")))
-
-    def diff(key, l, r):
-        m = l.merge(r, on="px", how="outer", suffixes=("_1", "_2"))
-        only1 = int(m["v_2"].isna().sum())
-        only2 = int(m["v_1"].isna().sum())
-        both = m.dropna(subset=["v_1", "v_2"])
-        changed = int((both["v_1"] != both["v_2"]).sum())
-        same = int(len(both)) - changed
-        sab = int((both["v_1"] - both["v_2"]).abs().sum())
-        return pd.DataFrame([(int(key[0]), only1, only2, changed,
-                              same, sab)],
-                            columns=["tile", "n_only1", "n_only2",
-                                     "n_changed", "n_same", "sum_abs"])
-
-    out = (e1.groupBy("tile").cogroup(e2.groupBy("tile"))
-           .applyInPandas(diff, "tile long, n_only1 long, n_only2 long,"
-                          " n_changed long, n_same long, sum_abs long"))
-    return out.orderBy("tile")
 
 
 def q_hll_merge(spark, sf_dir) -> DataFrame:
@@ -1541,42 +1399,6 @@ def q_hll_merge(spark, sf_dir) -> DataFrame:
                     (F.col("merged_sha") == F.col("whole_sha"))
                     .alias("merge_ok"))
             .orderBy("source"))
-
-
-def q_polygon_moments(spark, sf_dir) -> DataFrame:
-    """Shoelace polygon moments in EXACT integer algebra (the raster↔
-    vector math the reference does through OGR GetArea/Centroid —
-    ortho_functions footprint area, mosaic contribution thresholds):
-    per doc a 6-vertex lattice polygon v_i = ((d*7+i*13)%200,
-    (d*11+i*17)%200); signed 2*area = Σ (x_i*y_{i+1} - x_{i+1}*y_i)
-    and the un-normalized centroid numerators Σ (x_i+x_{i+1})*cross —
-    pure JVM zip of the vertex array with its rotation, no Python,
-    no floats anywhere. The oracle replays it with an index join."""
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    xs = F.array(*[((d * 7 + i * 13) % 200).cast("long")
-                   for i in range(6)])
-    ys = F.array(*[((d * 11 + i * 17) % 200).cast("long")
-                   for i in range(6)])
-    p = docs.select("doc_id", xs.alias("xs"), ys.alias("ys"))
-    nxt = lambda a: F.concat(F.slice(a, 2, 5), F.slice(a, 1, 1))  # noqa: E731
-    cross = F.zip_with(
-        F.zip_with(F.col("xs"), nxt(F.col("ys")), lambda x, y2: x * y2),
-        F.zip_with(nxt(F.col("xs")), F.col("ys"), lambda x2, y: x2 * y),
-        lambda a, b: a - b)
-    sum_arr = (lambda arr: F.aggregate(
-        arr, F.lit(0).cast("long"), lambda acc, v: acc + v))
-    p = p.withColumn("_cr", cross)
-    cx = F.zip_with(
-        F.zip_with(F.col("xs"), nxt(F.col("xs")), lambda a, b: a + b),
-        F.col("_cr"), lambda s, c: s * c)
-    cy = F.zip_with(
-        F.zip_with(F.col("ys"), nxt(F.col("ys")), lambda a, b: a + b),
-        F.col("_cr"), lambda s, c: s * c)
-    return (p.select(
-        "doc_id", sum_arr(F.col("_cr")).alias("area2"),
-        sum_arr(cx).alias("cx_num"), sum_arr(cy).alias("cy_num"))
-        .orderBy("doc_id"))
 
 
 def q_hygiene_funnel(spark, sf_dir) -> DataFrame:
@@ -1649,91 +1471,6 @@ def q_bfs_layers(spark, sf_dir) -> DataFrame:
     edges = load(spark, sf_dir, "documents").select(
         (d % 61).alias("src"), ((d * 7) % 64).alias("dst"))
     return bfs_layers(edges, source=0, iters=4).orderBy("node")
-
-
-def q_merge_upsert(spark, sf_dir) -> DataFrame:
-    """MERGE INTO / upsert resolution (the Iceberg copy-on-write merge
-    pattern on the parquet stand-in): base = all docs at version 1;
-    changes = updates for doc_id%3==0 (new content version 2), inserts
-    for keys 10000+doc_id where doc_id%11==0, tombstones for
-    doc_id%13==5. ONE full-outer join on key resolves WHEN MATCHED
-    UPDATE / WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE; the merged
-    state is pinned by per-action counts and a sha over (key, version,
-    content-sig) lines. The oracle replays the resolution in SQL."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    d = F.col("doc_id")
-    base = docs.select(d.alias("key"),
-                       F.sha2(F.col("text"), 256).alias("sig"),
-                       F.lit(1).alias("version"))
-    upd = (docs.filter(d % 3 == 0)
-           .select(d.alias("key"),
-                   F.sha2(F.concat(F.col("text"), F.lit("#v2")), 256)
-                   .alias("sig"),
-                   F.lit(2).alias("version"), F.lit("u").alias("op")))
-    ins = (docs.filter(d % 11 == 0)
-           .select((d + 10000).alias("key"),
-                   F.sha2(F.concat(F.lit("new:"), d.cast("string")), 256)
-                   .alias("sig"),
-                   F.lit(2).alias("version"), F.lit("i").alias("op")))
-    dele = (docs.filter(d % 13 == 5)
-            .select(d.alias("key"), F.lit(None).cast("string")
-                    .alias("sig"),
-                    F.lit(2).alias("version"), F.lit("d").alias("op")))
-    changes = upd.unionByName(ins).unionByName(dele)
-    j = base.alias("b").join(changes.alias("c"),
-                             F.col("b.key") == F.col("c.key"), "full")
-    merged = (j.filter(F.col("c.op").isNull() | (F.col("c.op") != "d"))
-              .select(
-                  F.coalesce(F.col("c.key"), F.col("b.key")).alias("key"),
-                  F.coalesce(F.col("c.sig"), F.col("b.sig")).alias("sig"),
-                  F.coalesce(F.col("c.version"), F.col("b.version"))
-                  .alias("version")))
-    counts = j.agg(
-        F.sum(F.when(F.col("c.op") == "u", 1).otherwise(0))
-        .alias("n_updated"),
-        F.sum(F.when(F.col("c.op") == "i", 1).otherwise(0))
-        .alias("n_inserted"),
-        F.sum(F.when((F.col("c.op") == "d")
-                     & F.col("b.key").isNotNull(), 1).otherwise(0))
-        .alias("n_deleted"))
-    sha = merged.agg(
-        F.count("*").alias("n_final"),
-        F.sha2(F.concat_ws(",", F.transform(
-            F.array_sort(F.collect_list(F.struct("key", "version",
-                                                 "sig"))),
-            lambda r: F.concat_ws("|", r["key"].cast("string"),
-                                  r["version"].cast("string"),
-                                  r["sig"]))), 256).alias("state_sha"))
-    return counts.crossJoin(sha)
-
-
-# ONE ANSI string, two engines: q_sql_surface feeds this verbatim to
-# spark.sql() and the driver feeds it verbatim to DuckDB — the shared
-# SQL surface itself is the thing under test (dialect-portable subset:
-# CTEs, join, window dense_rank, floor/cast, deterministic tie-breaks).
-SQL_SURFACE_TEXT = (
-    "WITH c AS (SELECT o_custkey, "
-    "sum(cast(floor(o_totalprice * 100) as bigint)) AS cents "
-    "FROM orders GROUP BY o_custkey), "
-    "r AS (SELECT c_nationkey, c_custkey, cents, "
-    "dense_rank() OVER (PARTITION BY c_nationkey "
-    "ORDER BY cents DESC, c_custkey) AS rk "
-    "FROM c JOIN customer ON c_custkey = o_custkey) "
-    "SELECT c_nationkey, c_custkey, cents, rk FROM r "
-    "WHERE rk <= 3 ORDER BY c_nationkey, rk, c_custkey"
-)
-
-
-def q_sql_surface(spark, sf_dir) -> DataFrame:
-    """The spark.sql() TEXT surface: top-3 customers by order revenue
-    per nation, written once in the ANSI-shared subset and executed
-    VERBATIM by both engines (the oracle is the identical string) —
-    no DataFrame translation anywhere, proving a reference user's SQL
-    moves across unchanged. Integer cents; dense_rank ties broken by
-    customer key."""
-    for t in ("orders", "customer"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(SQL_SURFACE_TEXT)
 
 
 def _bfs_oracle_sql() -> str:
@@ -1925,45 +1662,6 @@ def q_lm_bits(spark, sf_dir) -> DataFrame:
     return lm_bits_score(docs, ref, threshold=4.5).orderBy("doc_id")
 
 
-def q_rollup_counts(spark, sf_dir) -> DataFrame:
-    """OLAP ROLLUP over (lang, source): doc counts + exact-decimal char
-    sums at every grouping level incl. the grand total — Spark
-    .rollup == SQL GROUP BY ROLLUP, partial-agg friendly."""
-    docs = load(spark, sf_dir, "documents")
-    return (docs.rollup("lang", "source")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_chars").alias("chars"))
-            .orderBy("lang", "source"))
-
-
-def q_pivot_counts(spark, sf_dir) -> DataFrame:
-    """Pivot: per-source doc counts with one column per language
-    (fixed column set, so the plan is a single conditional aggregation
-    — no second pass to discover values). Oracle = conditional sums."""
-    docs = load(spark, sf_dir, "documents")
-    langs = ["de", "en", "es", "fr", "zh"]
-    return (docs.groupBy("source").pivot("lang", langs).count()
-            .na.fill(0, langs)
-            .orderBy("source"))
-
-
-def q_moving_window(spark, sf_dir) -> DataFrame:
-    """Moving time-range window over the event stream: per event, the
-    count of same-user events in the trailing 24 h (RANGE frame on
-    integer epoch seconds — exact on both engines, no calendar
-    types in the frame spec). One user-key shuffle."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_timestamp("ts").alias("ep"))
-    w = (Window.partitionBy("user_id").orderBy("ep")
-         .rangeBetween(-86400, 0))
-    return (ev.select("event_id", "user_id",
-                      F.count("*").over(w).alias("n_24h"))
-            # checkpoint before the sort (r6): range sampling would
-            # re-run the per-user RANGE window
-            .localCheckpoint()
-            .orderBy("event_id"))
-
-
 def q_ip_geo(spark, sf_dir) -> DataFrame:
     """IP-geolocation enrichment — the canonical range join
     (operators/rangejoin.range_lookup): event IPs probed against 64
@@ -2061,54 +1759,6 @@ def q_delta_agg(spark, sf_dir) -> DataFrame:
     return maintained.orderBy("source")
 
 
-def q_cohort_retention(spark, sf_dir) -> DataFrame:
-    """Cohort retention — the canonical behavioral OLAP rollup: users
-    cohorted by FIRST-event week, counted per (cohort_week, week
-    offset). All time math is integer epoch-seconds div 604800 (no
-    calendar functions — cross-engine exact); two shuffles (first-event
-    agg, cohort rollup), both map-side combinable."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("ep"))
-    wk = (F.col("ep") / 604800).cast("long")
-    base = ev.select("user_id", wk.alias("wk"))
-    first = base.groupBy("user_id").agg(F.min("wk").alias("cohort"))
-    return (base.join(first, "user_id")
-            .select("user_id", "cohort",
-                    (F.col("wk") - F.col("cohort")).alias("week_offset"))
-            .distinct()
-            .groupBy("cohort", "week_offset")
-            .agg(F.count("*").alias("n_users"))
-            .orderBy("cohort", "week_offset"))
-
-
-def q_funnel_steps(spark, sf_dir) -> DataFrame:
-    """Ordered funnel analysis per (user, hour) session unit: the
-    earliest 'view' -> the earliest 'click' AFTER it -> the earliest
-    'purchase' after THAT (types from event_id % 3; the hour-narrow
-    unit makes drop-off real — most units never complete). Three
-    min-aggregations with monotone time gates — no window over the
-    whole event stream, just unit-key rollups; the oracle chains the
-    same conditional mins in SQL. Reports units reaching each stage."""
-    ev0 = load(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("ep"),
-        (F.col("event_id") % 3).alias("step"))
-    ev = ev0.withColumn("unit_d", F.expr("ep div 86400"))
-    keys = ["user_id", "unit_d"]
-    s0 = (ev.filter(F.col("step") == 0).groupBy(*keys)
-          .agg(F.min("ep").alias("t0")))
-    s1 = (ev.filter(F.col("step") == 1).join(s0, keys)
-          .filter(F.col("ep") > F.col("t0"))
-          .groupBy(*keys).agg(F.min("ep").alias("t1")))
-    s2 = (ev.filter(F.col("step") == 2).join(s1, keys)
-          .filter(F.col("ep") > F.col("t1"))
-          .groupBy(*keys).agg(F.min("ep").alias("t2")))
-    return (s0.agg(F.count("*").alias("n_step0"))
-            .crossJoin(F.broadcast(
-                s1.agg(F.count("*").alias("n_step1"))))
-            .crossJoin(F.broadcast(
-                s2.agg(F.count("*").alias("n_step2")))))
-
-
 def q_cms_counts(spark, sf_dir) -> DataFrame:
     """Count-Min sketch (operators/sketch.cms_build/cms_query,
     Cormode-Muthukrishnan 2005): token frequencies sketched into 4x128
@@ -2141,46 +1791,6 @@ def q_cms_counts(spark, sf_dir) -> DataFrame:
                     (F.col("est") >= F.coalesce("n", F.lit(0)))
                     .alias("sound"))
             .orderBy("q"))
-
-
-def q_leakage_split(spark, sf_dir) -> DataFrame:
-    """Deterministic domain-coherent train/val/test split — the LLM
-    data-hygiene contract: the split key is the DOMAIN hash (first 15
-    hex of sha256, as in operators/sketch.py), so every page of a
-    domain lands in one split and near-duplicate pages cannot leak
-    across train/eval. Buckets: hash % 100 -> <60 train, <80 val, else
-    test (fractions chosen so all three splits are non-empty on the
-    fixture's 20-domain universe). Output per split: domain count, doc count, and a sha over the
-    sorted domain list — the oracle replays hash, bucketing, and the
-    no-domain-spans-two-splits invariant."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    hx = F.substring(F.sha2(F.col("source"), 256), 1, 15)
-    bucket = F.conv(hx, 16, 10).cast("long") % 100
-    split = (F.when(bucket < 60, F.lit("train"))
-             .when(bucket < 80, F.lit("val"))
-             .otherwise(F.lit("test")))
-    tagged = docs.select("doc_id", "source", split.alias("split"))
-    return (tagged.groupBy("split")
-            .agg(F.countDistinct("source").alias("n_domains"),
-                 F.count("*").alias("n_docs"),
-                 F.sha2(F.concat_ws(",", F.sort_array(
-                     F.collect_set("source"))), 256).alias("domains_sha"))
-            .orderBy("split"))
-
-
-def q_crawl_schedule(spark, sf_dir) -> DataFrame:
-    """Crawl politeness scheduling: fetches ordered per host (window
-    rank over ts, id tie-break) and packed into rate-limited slots
-    (rate 3/slot — integer div of the 0-based rank). One host-key
-    shuffle; per-host ordering is the frontier-scheduler shape every
-    polite crawler needs. Oracle replays the window + division."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", (F.col("user_id") % 7).alias("host"))
-    w = Window.partitionBy("host").orderBy("ts", "event_id")
-    rn = F.row_number().over(w) - 1
-    return (ev.select("event_id", "host", rn.alias("seq"))
-            .withColumn("slot", F.expr("seq div 3"))
-            .orderBy("host", "seq"))
 
 
 def q_fuzzy_match(spark, sf_dir) -> DataFrame:
@@ -2504,72 +2114,6 @@ def q_sessionize(spark, sf_dir) -> DataFrame:
         .agg(F.max("session_id").alias("n_sessions"), F.count("*").alias("n_events"))
         .orderBy("user_id")
     )
-
-
-def q_schema_evolution(spark, sf_dir) -> DataFrame:
-    """Schema-evolution read: generation 1 parquet lacks the lang
-    column (even doc_ids), generation 2 carries it (odd doc_ids); a
-    single mergeSchema read unifies them with NULL back-fill — the
-    Iceberg add-column pattern on the parquet stand-in (docs/
-    ICEBERG_MAPPING.md). Rollup over coalesced lang; oracle
-    reconstructs the generation split from the base table."""
-    import shutil
-
-    base = _lineage_base(sf_dir, "schevo")
-    shutil.rmtree(base, ignore_errors=True)
-    d = F.col("doc_id")
-    docs = load(spark, sf_dir, "documents")
-    docs.filter(d % 2 == 0).select("doc_id", "text").write.parquet(
-        os.path.join(base, "v1"))
-    docs.filter(d % 2 == 1).select("doc_id", "text", "lang") \
-        .write.parquet(os.path.join(base, "v2"))
-    un = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(base, "v1"), os.path.join(base, "v2"))
-    return (un.groupBy(F.coalesce("lang", F.lit("missing"))
-                       .alias("lang"))
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("doc_id").alias("min_id"),
-                 F.max("doc_id").alias("max_id"))
-            .orderBy("lang"))
-
-
-def q_session_window(spark, sf_dir) -> DataFrame:
-    """Spark's NATIVE session_window aggregation (vs the engine's
-    custom sessionize, which is window-rank based): per user, merged
-    30-minute-gap sessions with exact integer bounds and counts. The
-    oracle is the classic gaps-and-islands rewrite — parity proves the
-    built-in's merge semantics equal the self-join formulation. All
-    outputs integer epoch seconds."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.timestamp_seconds(F.unix_timestamp("ts")).alias("ts"))
-    s = (ev.groupBy("user_id",
-                    F.session_window("ts", "30 minutes").alias("w"))
-         .agg(F.count("*").alias("n_events")))
-    return (s.select(
-        "user_id",
-        F.unix_timestamp("w.start").alias("s_start"),
-        (F.unix_timestamp("w.end") - 1800).alias("s_last"),
-        "n_events")
-        .orderBy("user_id", "s_start"))
-
-
-def q_jsonl_roundtrip(spark, sf_dir) -> DataFrame:
-    """JSONL source/sink roundtrip: documents serialized to JSON lines
-    executor-side (to_json over a struct), parsed back with an explicit
-    schema (from_json — the crawl-sidecar ingestion path; no schema
-    inference job), and value-checked by sha256 of the recovered text.
-    Oracle hashes the source column directly — any serialization
-    asymmetry (escaping, field order, null handling) breaks parity."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang")
-    line = F.to_json(F.struct("doc_id", "text", "lang"))
-    schema = "doc_id long, text string, lang string"
-    back = docs.select(line.alias("j")).select(
-        F.from_json("j", schema).alias("r")).select("r.*")
-    return back.select(
-        "doc_id", "lang", F.sha2("text", 256).alias("text_sha")
-    ).orderBy("doc_id")
 
 
 def q_stream_dedup(spark, sf_dir) -> DataFrame:
@@ -3384,10 +2928,6 @@ def _sweep_stale_scratch(tmp: str) -> None:
 
 
 def _lineage_base(sf_dir: str, tag: str) -> str:
-    # the pid suffix keeps CONCURRENT harness processes (e.g. the
-    # parity suite and the invariance sweep running side by side)
-    # from racing on the rmtree+rewrite of the same scratch dir —
-    # observed once as a spurious schema_evolution failure
     import tempfile
 
     _sweep_stale_scratch(tempfile.gettempdir())
@@ -3746,32 +3286,6 @@ def q_kcore(spark, sf_dir) -> DataFrame:
     return kcore(edges, k=3, iters=4).orderBy("node")
 
 
-def q_anomaly_mad(spark, sf_dir) -> DataFrame:
-    """Robust per-group anomaly gate: median + MAD outlier flags on
-    integer cents, ALL math exact — m2 = 2·median and mad2 = 2·MAD
-    stay integers (half-unit trick), and |x−med| > 3·MAD becomes the
-    pure-integer 2·dev > 3·mad2 (dev = |2y − m2|), so the row is
-    bit-exact cross-engine with interpolated medians. Scale shape: two
-    exact-percentile groupBys over the group key + two broadcast joins
-    of the tiny per-group stats back onto the stream."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100).cast("long").alias("y"))
-    med = ev.groupBy("event_type").agg(
-        (F.expr("percentile(y, 0.5)") * 2).cast("long").alias("m2"))
-    dev = (ev.join(F.broadcast(med), "event_type")
-           .withColumn("dev", F.abs(2 * F.col("y") - F.col("m2"))))
-    mad = dev.groupBy("event_type").agg(
-        (F.expr("percentile(dev, 0.5)") * 2).cast("long").alias("mad2"))
-    return (dev.join(F.broadcast(mad), "event_type")
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"), F.max("m2").alias("m2"),
-                 F.max("mad2").alias("mad2"),
-                 F.sum(F.when(2 * F.col("dev") > 3 * F.col("mad2"), 1)
-                       .otherwise(0)).alias("n_out"))
-            .orderBy("event_type"))
-
-
 def q_feature_hash(spark, sf_dir) -> DataFrame:
     """Hashing-trick featurizer (operators/features.py, Weinberger
     2009): fixed-dim signed-hash vectors with NO vocabulary build —
@@ -3816,32 +3330,6 @@ def q_interval_overlap(spark, sf_dir) -> DataFrame:
             .agg(F.count("*").alias("n_overlaps"),
                  F.sum("a_id").alias("sum_a_id"))
             .orderBy("b_id"))
-
-
-def q_hist_eq(spark, sf_dir) -> DataFrame:
-    """Per-tile histogram equalization — the classic raster contrast
-    stretch (the reference's LUT stretches are fixed curves; hist-eq
-    is the data-driven one): new_v = floor((cdf(v) − cdf_min)·255 /
-    (n − cdf_min)), all integer/IEEE-exact. Pixel histograms collapse
-    per (tile, v) BEFORE any window (map-side combine), then one
-    per-tile cumulative window. Oracle replays the same windows."""
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    px = (docs.select("doc_id",
-                      F.explode(F.sequence(F.lit(0), F.lit(63)))
-                      .alias("i"))
-          .select((F.col("doc_id") % 8).alias("tile"),
-                  F.expr("(doc_id * 31 + i * 17) % 256").alias("v")))
-    hist = px.groupBy("tile", "v").agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy("tile").orderBy("v")
-    wp = Window.partitionBy("tile")
-    g = (hist.withColumn("cdf", F.sum("cnt").over(w))
-         .withColumn("cdf_min", F.min("cdf").over(wp))
-         .withColumn("n", F.sum("cnt").over(wp)))
-    new_v = F.when(F.col("n") == F.col("cdf_min"), F.lit(0)).otherwise(
-        F.floor((F.col("cdf") - F.col("cdf_min")) * 255
-                / (F.col("n") - F.col("cdf_min")))).cast("long")
-    return (g.select("tile", "v", "cnt", new_v.alias("new_v"))
-            .orderBy("tile", "v"))
 
 
 def q_temporal_join(spark, sf_dir) -> DataFrame:
@@ -3892,23 +3380,6 @@ def q_temporal_join(spark, sf_dir) -> DataFrame:
             .orderBy("event_id"))
 
 
-def q_ntile_bins(spark, sf_dir) -> DataFrame:
-    """Equi-depth binning: ntile(8) per event_type over integer cents
-    with a TOTAL order (cents, event_id) so tie placement is engine-
-    independent — the histogram/binning primitive behind equi-depth
-    stats and stratified training splits. One window shuffle; bin
-    stats re-aggregate on the same key."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    return (ev.withColumn("bin", F.ntile(8).over(w))
-            .groupBy("event_type", "bin")
-            .agg(F.count("*").alias("n"), F.min("cents").alias("min_c"),
-                 F.max("cents").alias("max_c"))
-            .orderBy("event_type", "bin"))
-
-
 def q_pmi_pairs(spark, sf_dir) -> DataFrame:
     """Collocation mining: bigram lift = c_xy·N / (c_x·c_y) (the PMI
     argument before the log — rank-equivalent, and integer-products /
@@ -3944,50 +3415,6 @@ def q_pmi_pairs(spark, sf_dir) -> DataFrame:
                    ((F.col("c_xy") * F.col("n_tok"))
                     / (F.col("c_x") * F.col("c_y"))).alias("lift")))
     return out.orderBy(F.desc("lift"), "w1", "w2").limit(40)
-
-
-def q_simpson_diversity(spark, sf_dir) -> DataFrame:
-    """Per-domain language diversity — Simpson's index D = 1 −
-    Σnᵢ(nᵢ−1)/(N(N−1)): the diversity statistic that, unlike Shannon
-    entropy, needs NO logarithm, so it is bit-exact cross-engine
-    (integer numerator/denominator, one double division + one
-    subtraction). Two cheap groupBys, partial-agg friendly; the
-    corpus-mixture health check a crawl QA dashboard runs per domain."""
-    d = (load(spark, sf_dir, "documents")
-         .groupBy("source", "lang").agg(F.count("*").alias("ni")))
-    g = (d.groupBy("source")
-         .agg(F.sum("ni").alias("n_docs"),
-              F.count("*").alias("n_langs"),
-              F.sum(F.col("ni") * (F.col("ni") - 1)).alias("num")))
-    simpson = F.when(
-        F.col("n_docs") >= 2,
-        1 - F.col("num") / (F.col("n_docs") * (F.col("n_docs") - 1)))
-    return (g.select("source", "n_docs", "n_langs",
-                     simpson.alias("simpson"))
-            .orderBy("source"))
-
-
-def q_gini_concentration(spark, sf_dir) -> DataFrame:
-    """Per-event-type Gini coefficient of user activity — traffic
-    concentration (is one bot producing all the clicks?). Exact
-    sorted-rank form G = (2·Σi·xᵢ − (n+1)·Σxᵢ)/(n·Σxᵢ): integer sums,
-    ONE double division; ties are order-invariant under the formula
-    and the (cnt, user_id) total order pins ranks anyway. One groupBy
-    + one window on the same key."""
-    cnt = (load(spark, sf_dir, "events")
-           .groupBy("event_type", "user_id")
-           .agg(F.count("*").alias("cnt")))
-    w = Window.partitionBy("event_type").orderBy("cnt", "user_id")
-    r = cnt.withColumn("i", F.row_number().over(w))
-    return (r.groupBy("event_type")
-            .agg(F.count("*").alias("n_users"),
-                 F.sum("cnt").alias("sx"),
-                 F.sum(F.col("i") * F.col("cnt")).alias("six"))
-            .select("event_type", "n_users",
-                    ((2 * F.col("six") - (F.col("n_users") + 1)
-                      * F.col("sx"))
-                     / (F.col("n_users") * F.col("sx"))).alias("gini"))
-            .orderBy("event_type"))
 
 
 def q_grid_cluster(spark, sf_dir) -> DataFrame:
@@ -4036,27 +3463,6 @@ def q_grid_cluster(spark, sf_dir) -> DataFrame:
             .orderBy("cluster"))
 
 
-def q_compaction_plan(spark, sf_dir) -> DataFrame:
-    """Small-files compaction planning — the Iceberg/Delta maintenance
-    job: per partition (source domain), files in name order pack
-    greedily into ~4 KiB bins via bin = floor(running_bytes_before /
-    target) — ONE per-key window (contrast seq_pack's GLOBAL two-phase
-    prefix sum: partitioned prefix sums don't need the driver step).
-    Output pins every bin's file count, bytes and id span."""
-    docs = load(spark, sf_dir, "documents").select(
-        "source", "doc_id", F.col("n_chars").alias("bytes"))
-    w = Window.partitionBy("source").orderBy("doc_id")
-    cum_before = F.sum("bytes").over(w) - F.col("bytes")
-    binned = docs.withColumn(
-        "bin", F.floor(cum_before / 4096).cast("long"))
-    return (binned.groupBy("source", "bin")
-            .agg(F.count("*").alias("n_files"),
-                 F.sum("bytes").alias("bin_bytes"),
-                 F.min("doc_id").alias("first_id"),
-                 F.max("doc_id").alias("last_id"))
-            .orderBy("source", "bin"))
-
-
 def q_observe_metrics(spark, sf_dir) -> DataFrame:
     """In-flight pipeline metrics via df.observe() (CollectMetrics —
     the Spark surface behind the north rule's per-run metrics tables):
@@ -4083,245 +3489,6 @@ def q_observe_metrics(spark, sf_dir) -> DataFrame:
         "n_pages long, min_lon double, max_lat double, n_nogeo long")
 
 
-def q_udtf_sentences(spark, sf_dir) -> DataFrame:
-    """Python UDTF (Spark 4 user-defined TABLE function) splitting docs
-    into indexed sentences via LATERAL — the row-to-rows extension
-    point beyond scalar UDFs; indexes are assigned BEFORE empty
-    segments drop so they stay stable under edits. The oracle replays
-    the split with list indexing. (UDTFs are per-row Python — correct
-    surface coverage, not the hot path; the hot-path splitter stays
-    the JVM tokens_col.)"""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="idx: int, sentence: string")
-    class SentenceSplit:
-        def eval(self, text: str):
-            for i, s in enumerate((text or "").split(". ")):
-                if s != "":
-                    yield i, s
-
-    spark.udtf.register("sentence_split", SentenceSplit)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_v")
-    return spark.sql(
-        "SELECT d.doc_id, s.idx, s.sentence FROM docs_v d, "
-        "LATERAL sentence_split(d.text) s "
-        "ORDER BY d.doc_id, s.idx")
-
-
-def q_variant_json(spark, sf_dir) -> DataFrame:
-    """Semi-structured VARIANT path (Spark 4 parse_json/variant_get —
-    the open-format answer to schemaless columns): events.props parsed
-    once to variant, the typed field extracted WITHOUT a global schema
-    pass, rolled up per event_type. Oracle extracts via DuckDB JSON."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.variant_get(F.parse_json(F.col("props")), "$.k", "int")
-        .alias("k"))
-    return (ev.groupBy("event_type")
-            .agg(F.count("*").alias("n"), F.sum("k").alias("sum_k"),
-                 F.min("k").alias("min_k"), F.max("k").alias("max_k"))
-            .orderBy("event_type"))
-
-
-def q_arrow_group_stats(spark, sf_dir) -> DataFrame:
-    """groupBy().applyInArrow (the zero-pandas Arrow grouped-map path,
-    new beside the cogroup of change_detect): exact per-tile pixel
-    MODE (most frequent value, smallest-value tie-break) computed on
-    the Arrow table directly — no pandas materialization, the cheapest
-    Python grouped-map Spark offers. Oracle replays mode via windowed
-    rank."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    px = (docs.select("doc_id",
-                      F.explode(F.sequence(F.lit(0), F.lit(63)))
-                      .alias("i"))
-          .select((F.col("doc_id") % 8).alias("tile"),
-                  F.expr("(doc_id * 31 + i * 17) % 256").alias("v")))
-
-    def mode_fn(table: pa.Table) -> pa.Table:
-        tile = table.column("tile")[0].as_py()
-        vc = pc.value_counts(table.column("v"))
-        pairs = sorted((int(x["values"]), int(x["counts"]))
-                       for x in vc.to_pylist())
-        best_v, best_n = max(pairs, key=lambda p: (p[1], -p[0]))
-        return pa.table({"tile": [tile], "mode_v": [best_v],
-                         "mode_n": [best_n],
-                         "n": [table.num_rows]})
-
-    schema = "tile long, mode_v long, mode_n long, n long"
-    return (px.groupBy("tile").applyInArrow(mode_fn, schema)
-            .orderBy("tile"))
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_unpivot_melt(spark, sf_dir) -> DataFrame:
-    """pivot ∘ unpivot = identity: per-user-bucket event counts pivoted
-    WIDE (explicit column list — never let pivot run its distinct-scan
-    job at scale) then melted back LONG with df.unpivot (Spark 4 melt).
-    Null cells (bucket never saw the type) drop on the way back; the
-    oracle is the direct long-form aggregate, so any pivot/unpivot
-    asymmetry breaks parity."""
-    ev = load(spark, sf_dir, "events").select(
-        (F.col("user_id") % 10).alias("bucket"), "event_type")
-    wide = (ev.groupBy("bucket").pivot("event_type", _EVENT_TYPES)
-            .agg(F.count(F.lit(1))))
-    long = wide.unpivot("bucket", _EVENT_TYPES, "event_type", "n")
-    return (long.filter(F.col("n").isNotNull())
-            .orderBy("bucket", "event_type"))
-
-
-def q_rank_functions(spark, sf_dir) -> DataFrame:
-    """The analytic-rank surface in one row: percent_rank ((rank−1)/
-    (n−1)) and cume_dist (rn/n) per event_type over a TOTAL (cents,
-    event_id) order — tie-free by construction, each a single double
-    division so values are bit-exact cross-engine. Output thinned to
-    every 17th event."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    r = (ev.withColumn("pr", F.percent_rank().over(w))
-         .withColumn("cd", F.cume_dist().over(w)))
-    return (r.filter(F.col("event_id") % 17 == 0)
-            .select("event_type", "event_id", "cents", "pr", "cd")
-            .orderBy("event_type", "event_id"))
-
-
-def q_twap(spark, sf_dir) -> DataFrame:
-    """Time-weighted average price/value per user — the TWAP every
-    metering/billing pipeline needs: each observation holds until the
-    next one (lead), weight = hold seconds; integer Σ(cents·Δt) and
-    Σ(Δt) with ONE final division. One window + one groupBy on the
-    same user key."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.unix_timestamp("ts").alias("ep"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    d = ev.withColumn("dt", F.lead("ep").over(w) - F.col("ep"))
-    return (d.filter(F.col("dt").isNotNull())
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("cents") * F.col("dt")).alias("num"),
-                 F.sum("dt").alias("den"))
-            .withColumn("twap", F.when(
-                F.col("den") > 0, F.col("num") / F.col("den")))
-            .orderBy("user_id"))
-
-
-def q_dag_layers(spark, sf_dir) -> DataFrame:
-    """DAG scheduling depth via MAX-PLUS relaxations — the fourth and
-    last graph semiring next to pagerank (sum), connected components
-    (min-label) and BFS (min-plus): level(v) = longest path from a
-    source, the critical-path/stage-depth computation a task scheduler
-    runs. Edges oriented low→high (acyclic by construction); 4 fixed
-    relaxations, each one groupBy(max) shuffle; integer levels are
-    partitioning-independent. Oracle unrolls the same relaxations."""
-    d = F.col("doc_id")
-    edges = (load(spark, sf_dir, "documents")
-             .select((d % 61).alias("u"), ((d * 7) % 64).alias("v"))
-             .filter(F.col("u") < F.col("v")))
-    nodes = (edges.select(F.col("u").alias("node"))
-             .unionByName(edges.select(F.col("v").alias("node")))
-             .distinct())
-    lvl = nodes.select("node", F.lit(0).alias("lvl"))
-    for _ in range(4):
-        relaxed = (edges.join(lvl, edges["u"] == lvl["node"])
-                   .select(F.col("v").alias("node"),
-                           (F.col("lvl") + 1).alias("lvl")))
-        lvl = (lvl.unionByName(relaxed)
-               .groupBy("node").agg(F.max("lvl").alias("lvl"))
-               .localCheckpoint(eager=True))
-    return lvl.orderBy("node")
-
-
-def q_presence_bitmap(spark, sf_dir) -> DataFrame:
-    """Per-user activity bitmaps — the roaring-bitmap/presence-set
-    idiom: bit i = active on day i, built with ONE bit_or aggregate
-    (associative+commutative ⇒ partitioning-independent, map-side
-    combinable); day count back out via bit_count. At 10^9 users this
-    is the audience-overlap primitive (AND/OR of bitmaps replaces
-    set joins). Day span fits int64 (30 days here; shard the bitmap
-    column by epoch at larger spans)."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", (F.unix_timestamp("ts") / 86400).cast("long")
-        .alias("day"))
-    m = ev.agg(F.min("day").alias("d0"))
-    off = (ev.crossJoin(F.broadcast(m))
-           .select("user_id", (F.col("day") - F.col("d0")).alias("i")))
-    bit = F.expr("cast(power(2, i) as bigint)")  # exact for i <= 62
-    return (off.groupBy("user_id")
-            .agg(F.bit_or(bit).alias("bitmap"))
-            .select("user_id", "bitmap",
-                    F.bit_count("bitmap").cast("long").alias("n_days"))
-            .orderBy("user_id"))
-
-
-def q_embed_quantize(spark, sf_dir) -> DataFrame:
-    """Symmetric int8 embedding quantization — the 4× memory cut every
-    vector index applies before ANN: per-vector max-abs scale, q =
-    floor(x/s·127 + 0.5) (round-half-up spelled as floor so both
-    engines share the text; banker's-rounding builtins differ).
-    Quantized codes are INTEGERS, so unlike raw cosine floats the
-    whole vector is value-hashable cross-engine. Pure array algebra
-    (transform/aggregate), zero shuffles before the final sort."""
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    d = (emb.withColumn(
-        "s", F.expr("array_max(transform(embedding, "
-                    "x -> abs(cast(x as double))))"))
-        .withColumn("q", F.expr(
-            "transform(embedding, x -> CASE WHEN s = 0.0 THEN "
-            "cast(0 as bigint) ELSE cast(floor(cast(x as double) / s "
-            "* 127 + 0.5) as bigint) END)")))
-    return (d.select(
-        "vec_id",
-        F.expr("aggregate(q, cast(0 as bigint), (a, x) -> a + x)")
-        .alias("qsum"),
-        F.expr("size(filter(q, x -> x <> 0))").cast("long").alias("nnz"),
-        F.sha2(F.concat_ws(",", F.expr(
-            "transform(q, x -> cast(x as string))")), 256).alias("qsha"))
-        .orderBy("vec_id"))
-
-
-def q_log2_hist(spark, sf_dir) -> DataFrame:
-    """Power-of-two (latency-style) histogram: bucket = bit length of
-    integer cents — the floor-log2 idiom shared with lm_bits (Spark
-    length(bin(x)) ↔ DuckDB length(printf('%b', x))), giving exact
-    log-scale bins with NO libm log. One groupBy with map-side
-    combine; the shape every latency/size dashboard wants."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    bucket = F.length(F.bin(F.col("cents"))).cast("int")
-    return (ev.filter(F.col("cents") > 0)
-            .groupBy("event_type", bucket.alias("bucket"))
-            .agg(F.count("*").alias("n"), F.min("cents").alias("lo"),
-                 F.max("cents").alias("hi"))
-            .orderBy("event_type", "bucket"))
-
-
-def q_calendar_math(spark, sf_dir) -> DataFrame:
-    """Calendar semantics pinned (the battery's time math is otherwise
-    integer epochs BY POLICY — this row proves the calendar functions
-    themselves agree): month bucket, quarter, ISO weekday (Spark
-    weekday()+1 == ISO Mon=1 — dayofweek() is Sunday-first and NOT
-    portable), last day of month. Output thinned to every 13th
-    event."""
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_id") % 13 == 0)
-    return ev.select(
-        "event_id",
-        F.date_trunc("month", F.col("ts")).cast("date")
-        .alias("month_start"),
-        F.quarter("ts").cast("int").alias("q"),
-        (F.weekday("ts") + 1).cast("int").alias("isodow"),
-        F.last_day("ts").alias("month_end"),
-    ).orderBy("event_id")
-
-
 def q_salted_agg(spark, sf_dir) -> DataFrame:
     """Hot-key salting made oracle-checkable (operators/salt.py — the
     north rule's explicit skew answer): a deliberately skewed rollup
@@ -4345,131 +3512,6 @@ def q_salted_agg(spark, sf_dir) -> DataFrame:
         [F.sum("pn").alias("n_rows"), F.sum("pb").alias("sum_bytes")],
         n_salts=16, salt_from="doc_id")
     return out.orderBy("source")
-
-
-def q_dict_encode(spark, sf_dir) -> DataFrame:
-    """Dictionary encoding — the string-interning pass every columnar
-    warehouse applies: the (small, distinct) domain dictionary gets
-    dense integer codes by sorted order, then broadcast-joins back
-    onto the fact rows. One distinct + one broadcast join; the fact
-    table never shuffles. Output thins to every 7th doc."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    dic = (docs.select("source").distinct()
-           .withColumn("code", F.row_number().over(
-               Window.orderBy("source")) - 1))
-    return (docs.join(F.broadcast(dic), "source")
-            .filter(F.col("doc_id") % 7 == 0)
-            .select("doc_id", "source", "code")
-            .orderBy("doc_id"))
-
-
-# Shared-text ANSI rows (the sql_surface family): ONE string, executed
-# verbatim by spark.sql() AND DuckDB.
-GROUPING_SETS_TEXT = (
-    "SELECT coalesce(lang, '*') AS lang, "
-    "coalesce(source, '*') AS source, count(*) AS n, "
-    "grouping(lang) AS g_lang, grouping(source) AS g_source "
-    "FROM documents "
-    "GROUP BY GROUPING SETS ((lang, source), (lang), (source), ()) "
-    "ORDER BY g_lang, g_source, lang, source"
-)
-
-SUBQUERY_TEXT = (
-    "SELECT d.doc_id, d.lang FROM documents d "
-    "WHERE EXISTS (SELECT 1 FROM documents x "
-    "WHERE x.source = d.source AND x.n_chars > d.n_chars * 2) "
-    "AND d.lang IN (SELECT lang FROM documents "
-    "GROUP BY lang HAVING count(*) >= 5) "
-    "AND d.n_chars > (SELECT min(n_chars) FROM documents) "
-    "ORDER BY d.doc_id"
-)
-
-
-def q_grouping_sets(spark, sf_dir) -> DataFrame:
-    """Explicit GROUPING SETS in the shared ANSI dialect (one string,
-    both engines verbatim — the sql_surface family): all four set
-    shapes plus grouping() flags, which distinguish a real NULL from a
-    rolled-up one. Catalyst expands this to a single Expand + one
-    aggregate — no four-pass union."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(GROUPING_SETS_TEXT)
-
-
-def q_subquery_surface(spark, sf_dir) -> DataFrame:
-    """Correlated subqueries in the shared dialect (one string, both
-    engines): correlated EXISTS (decorrelated by Catalyst to a semi
-    join), uncorrelated IN (semi join on an aggregate), and a scalar
-    subquery (broadcast singleton) — the three rewrites a reference
-    user's ad-hoc SQL leans on most."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(SUBQUERY_TEXT)
-
-
-def q_range_frame(spark, sf_dir) -> DataFrame:
-    """VALUE-based window frames (RANGE BETWEEN 100 PRECEDING AND
-    CURRENT ROW) — semantically different from the ROWS frames of
-    moving_window: the frame is defined by cents VALUES, so tied rows
-    share one frame and the result is total-order-free by
-    construction. Output thinned to every 11th event."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    w = (Window.partitionBy("event_type").orderBy("cents")
-         .rangeBetween(-100, Window.currentRow))
-    r = ev.withColumn("near_sum", F.sum("cents").over(w)) \
-          .withColumn("near_n", F.count(F.lit(1)).over(w))
-    return (r.filter(F.col("event_id") % 11 == 0)
-            .select("event_type", "event_id", "cents", "near_sum",
-                    "near_n")
-            # checkpoint before the sort (r6): range sampling would
-            # re-run the per-type RANGE windows
-            .localCheckpoint()
-            .orderBy("event_type", "event_id"))
-
-
-def q_set_ops(spark, sf_dir) -> DataFrame:
-    """Relational set operators: INTERSECT and EXCEPT (distinct
-    semantics) between the even-doc and the %3==0 id sets, counted.
-    Both engines' set ops dedupe identically; counts pin it."""
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 3 == 0)
-    inter = a.intersect(b).agg(F.count(F.lit(1)).alias("n"))\
-        .select(F.lit("intersect").alias("op"), "n")
-    exc = a.exceptAll(b).distinct().agg(F.count(F.lit(1)).alias("n"))\
-        .select(F.lit("except").alias("op"), "n")
-    uni = a.union(b).distinct().agg(F.count(F.lit(1)).alias("n"))\
-        .select(F.lit("union").alias("op"), "n")
-    return inter.unionByName(exc).unionByName(uni).orderBy("op")
-
-
-def q_json_quarantine(spark, sf_dir) -> DataFrame:
-    """Ingest-robustness routing — the dead-letter/quarantine split
-    every raw-JSON feed needs: five crafted malformation classes
-    (valid, wrong-type, malformed, null field, non-object) classified
-    with try_parse_json/try_variant_get (error-safe VARIANT path, no
-    job-killing exceptions), counted per route with the parsable sum.
-    Oracle replays via json_valid + lazy CASE + try_cast."""
-    d = F.col("doc_id")
-    raw = (F.when(d % 5 == 0, F.concat(F.lit('{"k": '),
-                                       d.cast("string"), F.lit("}")))
-           .when(d % 5 == 1, F.concat(F.lit('{"k": "s'),
-                                      d.cast("string"), F.lit('"}')))
-           .when(d % 5 == 2, F.lit("{bad"))
-           .when(d % 5 == 3, F.lit('{"k": null}'))
-           .otherwise(F.lit("[1,2]")))
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", raw.alias("raw"))
-    v = F.try_parse_json(F.col("raw"))
-    ki = F.try_variant_get(v, "$.k", "bigint")
-    cls = (F.when(v.isNull(), "corrupt")
-           .when(ki.isNotNull(), "ok")
-           .otherwise("unusable"))
-    return (docs.select(cls.alias("route"), ki.alias("ki"))
-            .groupBy("route")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.coalesce(F.sum("ki"), F.lit(0)).alias("sum_k"))
-            .orderBy("route"))
 
 
 def q_stream_upsert(spark, sf_dir) -> DataFrame:
@@ -4521,94 +3563,6 @@ def q_stream_upsert(spark, sf_dir) -> DataFrame:
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("version").alias("sum_version"),
         F.lit(before).alias("state_sha"))
-
-
-def q_arrow_bytes(spark, sf_dir) -> DataFrame:
-    """mapInArrow — the last Python-boundary shape (beside pandas UDF,
-    applyInPandas, cogroup, applyInArrow): NON-grouped Arrow batches,
-    zero pandas materialization. Counts UTF-8 continuation bytes per
-    doc straight off the Arrow buffer; for valid UTF-8 that equals
-    octet_length − char_length, which is the oracle (an independent
-    identity, not a replay)."""
-    import pyarrow as pa
-
-    from imagery_utils_spark.sources.tables import spread_small_input
-
-    # r6: spread the single-split input under the per-byte python loop
-    docs = spread_small_input(load(spark, sf_dir, "documents")).select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("raw"))
-
-    def run(batches):
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            cont = [sum(1 for byte in (buf or b"") if byte & 0xC0 == 0x80)
-                    for buf in b.column("raw").to_pylist()]
-            total = [len(buf or b"") for buf in b.column("raw").to_pylist()]
-            yield pa.record_batch(
-                [pa.array(ids, pa.int64()), pa.array(cont, pa.int64()),
-                 pa.array(total, pa.int64())],
-                names=["doc_id", "cont_bytes", "n_bytes"])
-
-    return (docs.mapInArrow(run,
-                            "doc_id long, cont_bytes long, n_bytes long")
-            .orderBy("doc_id"))
-
-
-def q_dyn_overwrite(spark, sf_dir) -> DataFrame:
-    """Dynamic partition overwrite — the lakehouse write contract
-    (partitionOverwriteMode=dynamic, the Hive/Iceberg replace-
-    where-touched semantics): load all langs partitioned by lang,
-    then overwrite ONLY the partitions present in a corrected batch
-    (one lang, doubled weight). Untouched partitions must survive
-    byte-for-byte; static mode would have wiped them. Oracle builds
-    the expected post-state directly."""
-    import shutil
-
-    base = _lineage_base(sf_dir, "dynover")
-    shutil.rmtree(base, ignore_errors=True)
-    tgt = os.path.join(base, "t")
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.col("n_chars").alias("wt"))
-    docs.write.partitionBy("lang").parquet(tgt)
-    fix = (docs.filter(F.col("lang") == "en")
-           .select("doc_id", "lang", (F.col("wt") * 2).alias("wt")))
-    (fix.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("lang").parquet(tgt))
-    out = spark.read.parquet(tgt)
-    return (out.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("wt").alias("sum_wt"))
-            .orderBy("lang"))
-
-
-def q_nested_shred(spark, sf_dir) -> DataFrame:
-    """Nested-parquet shredding roundtrip: orders nest into one
-    array<struct> row per customer (the document/denormalized layout),
-    write parquet (Dremel repetition/definition encoding), read back,
-    re-explode — totals must survive the nest→shred→unnest cycle.
-    Array order is pinned by sort_array so the layout is deterministic;
-    oracle aggregates the flat table directly."""
-    import shutil
-
-    base = _lineage_base(sf_dir, "nest")
-    shutil.rmtree(base, ignore_errors=True)
-    tgt = os.path.join(base, "n")
-    orders = load(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-    nested = (orders.groupBy("o_custkey")
-              .agg(F.sort_array(F.collect_list(
-                  F.struct("o_orderkey", "cents"))).alias("orders")))
-    nested.write.parquet(tgt)
-    back = spark.read.parquet(tgt)
-    flat = back.select("o_custkey",
-                       F.explode("orders").alias("o"))
-    return (flat.groupBy("o_custkey")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.sum("o.cents").alias("sum_cents"),
-                 F.min("o.o_orderkey").alias("first_order"))
-            .orderBy("o_custkey"))
 
 
 _HILBERT_X = ("cast(least(255, greatest(0, "
@@ -5021,17 +3975,10 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tok_encode": q_tok_encode,
         "triangle_count": q_triangle_count,
         "fuzzy_match": q_fuzzy_match,
-        "leakage_split": q_leakage_split,
         "cms_counts": q_cms_counts,
-        "cohort_retention": q_cohort_retention,
         "delta_agg": q_delta_agg,
         "trending_terms": q_trending_terms,
         "ip_geo": q_ip_geo,
-        "rollup_counts": q_rollup_counts,
-        "pivot_counts": q_pivot_counts,
-        "moving_window": q_moving_window,
-        "funnel_steps": q_funnel_steps,
-        "crawl_schedule": q_crawl_schedule,
         "stream_join": q_stream_join,
         "html_meta": q_html_meta,
         "snapshot_diff": q_snapshot_diff,
@@ -5041,23 +3988,15 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skyline_pareto": q_skyline_pareto,
         "hillshade_stencil": q_hillshade_stencil,
         "kmeans_fixed": q_kmeans_fixed,
-        "cube_counts": q_cube_counts,
         "stratified_sample": q_stratified_sample,
         "kmv_intersect": q_kmv_intersect,
         "png_roundtrip": q_png_roundtrip,
         "bpe_train": q_bpe_train,
         "neg_sample": q_neg_sample,
-        "partition_prune": q_partition_prune,
-        "bucketed_join": q_bucketed_join,
-        "star_join": q_star_join,
         "dist_quantile": q_dist_quantile,
-        "change_detect": q_change_detect,
         "hll_merge": q_hll_merge,
-        "polygon_moments": q_polygon_moments,
         "hygiene_funnel": q_hygiene_funnel,
         "bfs_layers": q_bfs_layers,
-        "merge_upsert": q_merge_upsert,
-        "sql_surface": q_sql_surface,
         "url_canon": q_url_canon,
         "zorder_key": q_zorder_key,
         "connected_components": q_connected_components,
@@ -5087,9 +4026,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_champion": q_stream_champion,
         "stream_dedup": q_stream_dedup,
         "sessionize": q_sessionize,
-        "session_window": q_session_window,
-        "schema_evolution": q_schema_evolution,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
         "epsg_pick": q_epsg_pick,
         "strip_tile_candidates": q_strip_tile_candidates,
         "cutline_strips": q_cutline_strips,
@@ -5133,40 +4069,14 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_dim": q_scd2_dim,
         "gap_fill": q_gap_fill,
         "kcore": q_kcore,
-        "anomaly_mad": q_anomaly_mad,
         "feature_hash": q_feature_hash,
         "interval_overlap": q_interval_overlap,
-        "hist_eq": q_hist_eq,
         "temporal_join": q_temporal_join,
-        "ntile_bins": q_ntile_bins,
         "pmi_pairs": q_pmi_pairs,
-        "simpson_diversity": q_simpson_diversity,
-        "gini_concentration": q_gini_concentration,
         "grid_cluster": q_grid_cluster,
-        "compaction_plan": q_compaction_plan,
         "observe_metrics": q_observe_metrics,
-        "udtf_sentences": q_udtf_sentences,
-        "variant_json": q_variant_json,
-        "arrow_group_stats": q_arrow_group_stats,
-        "unpivot_melt": q_unpivot_melt,
-        "rank_functions": q_rank_functions,
-        "twap": q_twap,
-        "dag_layers": q_dag_layers,
-        "presence_bitmap": q_presence_bitmap,
-        "embed_quantize": q_embed_quantize,
-        "log2_hist": q_log2_hist,
-        "calendar_math": q_calendar_math,
         "salted_agg": q_salted_agg,
-        "dict_encode": q_dict_encode,
-        "grouping_sets": q_grouping_sets,
-        "subquery_surface": q_subquery_surface,
-        "range_frame": q_range_frame,
-        "set_ops": q_set_ops,
-        "json_quarantine": q_json_quarantine,
         "stream_upsert": q_stream_upsert,
-        "arrow_bytes": q_arrow_bytes,
-        "dyn_overwrite": q_dyn_overwrite,
-        "nested_shred": q_nested_shred,
         "hilbert_key": q_hilbert_key,
         "contour_trace": q_contour_trace,
         "bilinear_up": q_bilinear_up,
@@ -5685,54 +4595,6 @@ def oracle_sql() -> dict[str, str]:
         # BM25: SQL twin generated from the same constants/expression
         # tree (operators/search.bm25_sql).
         "bm25_topk": _bm25_oracle_sql(),
-        # ROLLUP / pivot / moving window: classic OLAP SQL surfaces.
-        "rollup_counts": (
-            "SELECT lang, source, count(*) AS n_docs, "
-            "cast(sum(n_chars) as bigint) AS chars FROM documents "
-            "GROUP BY ROLLUP (lang, source) ORDER BY lang, source"
-        ),
-        "pivot_counts": (
-            "SELECT source, "
-            + ", ".join(
-                f"cast(sum(CASE WHEN lang = '{lg}' THEN 1 ELSE 0 END) "
-                f"as bigint) AS {lg}"
-                for lg in ["de", "en", "es", "fr", "zh"])
-            + " FROM documents GROUP BY source ORDER BY source"
-        ),
-        "moving_window": (
-            "SELECT event_id, user_id, count(*) OVER ("
-            "PARTITION BY user_id "
-            "ORDER BY cast(floor(epoch(ts)) as bigint) "
-            "RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS n_24h "
-            "FROM events ORDER BY event_id"
-        ),
-        # Schema evolution: generation split reconstructed directly.
-        "schema_evolution": (
-            "SELECT CASE WHEN doc_id % 2 = 1 THEN lang "
-            "ELSE 'missing' END AS lang, count(*) AS n_docs, "
-            "min(doc_id) AS min_id, max(doc_id) AS max_id "
-            "FROM documents GROUP BY 1 ORDER BY lang"
-        ),
-        # Native session_window == gaps-and-islands rewrite.
-        "session_window": (
-            "WITH e AS (SELECT user_id, "
-            "cast(floor(epoch(ts)) as bigint) AS ep FROM events), "
-            "x AS (SELECT user_id, ep, CASE WHEN "
-            "lag(ep) OVER (PARTITION BY user_id ORDER BY ep) IS NULL "
-            "OR ep - lag(ep) OVER (PARTITION BY user_id ORDER BY ep) "
-            ">= 1800 THEN 1 ELSE 0 END AS brk FROM e), "
-            "g AS (SELECT user_id, ep, sum(brk) OVER ("
-            "PARTITION BY user_id ORDER BY ep "
-            "ROWS UNBOUNDED PRECEDING) AS sid FROM x) "
-            "SELECT user_id, min(ep) AS s_start, max(ep) AS s_last, "
-            "count(*) AS n_events FROM g GROUP BY user_id, sid "
-            "ORDER BY user_id, s_start"
-        ),
-        # JSONL roundtrip: oracle hashes the source text directly.
-        "jsonl_roundtrip": (
-            "SELECT doc_id, lang, sha256(text) AS text_sha "
-            "FROM documents ORDER BY doc_id"
-        ),
         # IP geo: plain BETWEEN join is the oracle.
         "ip_geo": (
             "WITH p AS (SELECT event_id, "
@@ -5768,39 +4630,6 @@ def oracle_sql() -> dict[str, str]:
             "as bigint) AS total "
             "FROM documents GROUP BY source ORDER BY source"
         ),
-        # Cohort: integer week math + distinct rollup replayed.
-        "cohort_retention": (
-            "WITH e AS (SELECT user_id, "
-            "cast(floor(epoch(ts)) as bigint) // 604800 AS wk "
-            "FROM events), "
-            "f AS (SELECT user_id, min(wk) AS cohort FROM e "
-            "GROUP BY user_id), "
-            "d AS (SELECT DISTINCT e.user_id, cohort, "
-            "wk - cohort AS week_offset FROM e JOIN f USING (user_id)) "
-            "SELECT cohort, week_offset, count(*) AS n_users FROM d "
-            "GROUP BY cohort, week_offset "
-            "ORDER BY cohort, week_offset"
-        ),
-        # Funnel: chained conditional mins replayed.
-        "funnel_steps": (
-            "WITH e AS (SELECT user_id, "
-            "cast(floor(epoch(ts)) as bigint) AS ep, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS unit_d, "
-            "event_id % 3 AS step FROM events), "
-            "s0 AS (SELECT user_id, unit_d, min(ep) AS t0 FROM e "
-            "WHERE step = 0 GROUP BY user_id, unit_d), "
-            "s1 AS (SELECT e.user_id, e.unit_d, min(ep) AS t1 FROM e "
-            "JOIN s0 USING (user_id, unit_d) "
-            "WHERE step = 1 AND ep > t0 "
-            "GROUP BY e.user_id, e.unit_d), "
-            "s2 AS (SELECT e.user_id, e.unit_d, min(ep) AS t2 FROM e "
-            "JOIN s1 USING (user_id, unit_d) "
-            "WHERE step = 2 AND ep > t1 "
-            "GROUP BY e.user_id, e.unit_d) "
-            "SELECT (SELECT count(*) FROM s0) AS n_step0, "
-            "(SELECT count(*) FROM s1) AS n_step1, "
-            "(SELECT count(*) FROM s2) AS n_step2"
-        ),
         # CMS: salted hashes + cells + min-query replayed.
         "cms_counts": (
             r"WITH toks AS (SELECT list_filter(string_split_regex("
@@ -5823,29 +4652,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT q, coalesce(n, 0) AS true_n, est, "
             "est >= coalesce(n, 0) AS sound "
             "FROM est LEFT JOIN cnt ON q = word ORDER BY q"
-        ),
-        # Leakage split: hash bucketing + domain rollup replayed.
-        "leakage_split": (
-            "WITH t AS (SELECT doc_id, source, CASE "
-            "WHEN cast('0x' || substr(sha256(source), 1, 15) as bigint) "
-            "% 100 < 60 THEN 'train' "
-            "WHEN cast('0x' || substr(sha256(source), 1, 15) as bigint) "
-            "% 100 < 80 THEN 'val' ELSE 'test' END AS split "
-            "FROM documents) "
-            "SELECT split, count(DISTINCT source) AS n_domains, "
-            "count(*) AS n_docs, "
-            "sha256(array_to_string(list_sort(list(DISTINCT source)), "
-            "',')) AS domains_sha "
-            "FROM t GROUP BY split ORDER BY split"
-        ),
-        # Crawl schedule: per-host window + slot division replayed.
-        "crawl_schedule": (
-            "SELECT event_id, user_id % 7 AS host, "
-            "row_number() OVER (PARTITION BY user_id % 7 "
-            "ORDER BY ts, event_id) - 1 AS seq, "
-            "(row_number() OVER (PARTITION BY user_id % 7 "
-            "ORDER BY ts, event_id) - 1) // 3 AS slot "
-            "FROM events ORDER BY host, seq"
         ),
         # Fuzzy match: blocks + levenshtein + best pick replayed.
         "fuzzy_match": (
@@ -6055,11 +4861,6 @@ def oracle_sql() -> dict[str, str]:
         # k-means: 3 unrolled exact-integer iterations (see
         # _kmeans_oracle_sql — generated from shared constants).
         "kmeans_fixed": _kmeans_oracle_sql(),
-        "cube_counts": (
-            "SELECT lang, source, count(*) AS n, sum(n_chars) AS chars, "
-            "GROUPING(lang, source) AS gid FROM documents "
-            "GROUP BY CUBE (lang, source) ORDER BY gid, lang, source"
-        ),
         # Stratified sample oracle: the NAIVE full-sort plan
         # (row_number over the whole stratum) — independent of the
         # engine's histogram selection; same kept set required.
@@ -6150,21 +4951,6 @@ def oracle_sql() -> dict[str, str]:
                 f"ELSE c{j} END AS neg{j}" for j in range(4)) +
             " FROM d ORDER BY doc_id"
         ),
-        # Partition pruning: rollup parity vs the unpartitioned base.
-        "partition_prune": (
-            "SELECT lang, source, count(*) AS n, sum(n_chars) AS chars "
-            "FROM documents WHERE lang IN ('en', 'de') "
-            "GROUP BY lang, source ORDER BY lang, source"
-        ),
-        # Bucketed join: plain join on the base tables.
-        "bucketed_join": (
-            "SELECT c_nationkey, count(*) AS n_orders, "
-            "sum(cast(floor(o_totalprice * 100) as bigint)) AS total_cents "
-            "FROM orders JOIN customer ON o_custkey = c_custkey "
-            "GROUP BY c_nationkey ORDER BY c_nationkey"
-        ),
-        # SQL surface: the IDENTICAL string Spark executes.
-        "sql_surface": SQL_SURFACE_TEXT,
         "scd2_dim": (
             "WITH log AS (SELECT user_id % 50 AS key, "
             "event_type AS attr, "
@@ -6235,28 +5021,6 @@ def oracle_sql() -> dict[str, str]:
             _oracle_sf_dir(),
             f"WITH {_pages_cte()} SELECT lon, lat FROM pages",
             res=5, level=2),
-        "dyn_overwrite": (
-            "SELECT lang, count(*) AS n, "
-            "sum(CASE WHEN lang = 'en' THEN n_chars * 2 "
-            "ELSE n_chars END) AS sum_wt "
-            "FROM documents GROUP BY lang ORDER BY lang"
-        ),
-        "nested_shred": (
-            "WITH o AS (SELECT o_custkey, o_orderkey, "
-            "cast(floor(o_totalprice * 100) as bigint) AS cents "
-            "FROM orders) "
-            "SELECT o_custkey, count(*) AS n_orders, "
-            "sum(cents) AS sum_cents, "
-            "min(o_orderkey) AS first_order "
-            "FROM o GROUP BY o_custkey ORDER BY o_custkey"
-        ),
-        "arrow_bytes": (
-            "SELECT doc_id, "
-            "cast(octet_length(encode(text)) - length(text) as bigint) "
-            "AS cont_bytes, "
-            "cast(octet_length(encode(text)) as bigint) AS n_bytes "
-            "FROM documents ORDER BY doc_id"
-        ),
         "stream_upsert": (
             "WITH st AS (SELECT doc_id AS key, "
             "CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS version, "
@@ -6266,49 +5030,6 @@ def oracle_sql() -> dict[str, str]:
             "sha256(string_agg(key || '|' || version || '|' || sig, "
             "',' ORDER BY key)) AS state_sha FROM st"
         ),
-        "json_quarantine": (
-            "WITH raw AS (SELECT CASE doc_id % 5 "
-            "WHEN 0 THEN '{\"k\": ' || doc_id || '}' "
-            "WHEN 1 THEN '{\"k\": \"s' || doc_id || '\"}' "
-            "WHEN 2 THEN '{bad' "
-            "WHEN 3 THEN '{\"k\": null}' "
-            "ELSE '[1,2]' END AS raw FROM documents), "
-            "c AS (SELECT raw, NOT json_valid(raw) AS corrupt, "
-            "CASE WHEN json_valid(raw) THEN try_cast("
-            "json_extract_string(raw, '$.k') as bigint) END AS ki "
-            "FROM raw) "
-            "SELECT CASE WHEN corrupt THEN 'corrupt' "
-            "WHEN ki IS NOT NULL THEN 'ok' ELSE 'unusable' END "
-            "AS route, count(*) AS n, "
-            "coalesce(sum(ki), 0) AS sum_k "
-            "FROM c GROUP BY route ORDER BY route"
-        ),
-        "grouping_sets": GROUPING_SETS_TEXT,
-        "subquery_surface": SUBQUERY_TEXT,
-        "range_frame": (
-            "WITH e AS (SELECT event_type, event_id, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "r AS (SELECT event_type, event_id, cents, "
-            "sum(cents) OVER w AS near_sum, count(*) OVER w AS near_n "
-            "FROM e WINDOW w AS (PARTITION BY event_type "
-            "ORDER BY cents RANGE BETWEEN 100 PRECEDING "
-            "AND CURRENT ROW)) "
-            "SELECT event_type, event_id, cents, near_sum, near_n "
-            "FROM r WHERE event_id % 11 = 0 "
-            "ORDER BY event_type, event_id"
-        ),
-        "set_ops": (
-            "WITH a AS (SELECT doc_id FROM documents "
-            "WHERE doc_id % 2 = 0), "
-            "b AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0) "
-            "SELECT 'except' AS op, count(*) AS n FROM "
-            "(SELECT doc_id FROM a EXCEPT SELECT doc_id FROM b) t1 "
-            "UNION ALL SELECT 'intersect', count(*) FROM "
-            "(SELECT doc_id FROM a INTERSECT SELECT doc_id FROM b) t2 "
-            "UNION ALL SELECT 'union', count(*) FROM "
-            "(SELECT doc_id FROM a UNION SELECT doc_id FROM b) t3 "
-            "ORDER BY op"
-        ),
         "salted_agg": (
             "WITH amp AS (SELECT source, n_chars AS b, "
             "unnest(generate_series(1, CASE WHEN doc_id % 97 = 0 "
@@ -6316,136 +5037,11 @@ def oracle_sql() -> dict[str, str]:
             "SELECT source, count(*) AS n_rows, sum(b) AS sum_bytes "
             "FROM amp GROUP BY source ORDER BY source"
         ),
-        "dict_encode": (
-            "WITH dic AS (SELECT source, row_number() OVER "
-            "(ORDER BY source) - 1 AS code FROM "
-            "(SELECT DISTINCT source FROM documents) s) "
-            "SELECT doc_id, d.source, code FROM documents d "
-            "JOIN dic USING (source) WHERE doc_id % 7 = 0 "
-            "ORDER BY doc_id"
-        ),
-        "calendar_math": (
-            "SELECT event_id, "
-            "cast(date_trunc('month', ts) as date) AS month_start, "
-            "cast(quarter(ts) as int) AS q, "
-            "cast(isodow(ts) as int) AS isodow, "
-            "last_day(ts) AS month_end "
-            "FROM events WHERE event_id % 13 = 0 ORDER BY event_id"
-        ),
-        "embed_quantize": (
-            "WITH d AS (SELECT vec_id, embedding::DOUBLE[] AS v, "
-            "list_max(list_transform(embedding::DOUBLE[], "
-            "x -> abs(x))) AS s FROM embeddings), "
-            "qd AS (SELECT vec_id, list_transform(v, x -> "
-            "CASE WHEN s = 0.0 THEN cast(0 as bigint) ELSE "
-            "cast(floor(x / s * 127 + 0.5) as bigint) END) AS q "
-            "FROM d) "
-            "SELECT vec_id, cast(list_sum(q) as bigint) AS qsum, "
-            "cast(len(list_filter(q, x -> x <> 0)) as bigint) AS nnz, "
-            "sha256(array_to_string(q, ',')) AS qsha "
-            "FROM qd ORDER BY vec_id"
-        ),
-        "log2_hist": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events) "
-            "SELECT event_type, "
-            "cast(length(printf('%b', cents)) as int) AS bucket, "
-            "count(*) AS n, min(cents) AS lo, max(cents) AS hi "
-            "FROM e WHERE cents > 0 "
-            "GROUP BY event_type, bucket ORDER BY event_type, bucket"
-        ),
-        "dag_layers": (
-            "WITH e AS (SELECT doc_id % 61 AS u, (doc_id * 7) % 64 AS v "
-            "FROM documents WHERE doc_id % 61 < (doc_id * 7) % 64), "
-            "n AS (SELECT DISTINCT u AS node FROM e "
-            "UNION SELECT DISTINCT v FROM e), "
-            "l0 AS (SELECT node, 0 AS lvl FROM n), "
-            + ", ".join(
-                f"l{t} AS (SELECT node, max(lvl) AS lvl FROM ("
-                f"SELECT node, lvl FROM l{t - 1} UNION ALL "
-                f"SELECT e.v AS node, l{t - 1}.lvl + 1 AS lvl FROM e "
-                f"JOIN l{t - 1} ON e.u = l{t - 1}.node) t{t} "
-                "GROUP BY node)"
-                for t in range(1, 5))
-            + " SELECT node, lvl FROM l4 ORDER BY node"
-        ),
-        "presence_bitmap": (
-            "WITH e AS (SELECT user_id, "
-            "cast(floor(epoch(ts)) as bigint) // 86400 AS day "
-            "FROM events), "
-            "m AS (SELECT min(day) AS d0 FROM e), "
-            "o AS (SELECT user_id, day - d0 AS i FROM e CROSS JOIN m), "
-            "b AS (SELECT user_id, "
-            "bit_or(cast(power(2, i) as bigint)) AS bitmap "
-            "FROM o GROUP BY user_id) "
-            "SELECT user_id, bitmap, "
-            "cast(bit_count(bitmap) as bigint) AS n_days "
-            "FROM b ORDER BY user_id"
-        ),
-        "unpivot_melt": (
-            "SELECT user_id % 10 AS bucket, event_type, "
-            "count(*) AS n FROM events GROUP BY 1, 2 "
-            "ORDER BY bucket, event_type"
-        ),
-        "rank_functions": (
-            "WITH e AS (SELECT event_type, event_id, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "r AS (SELECT event_type, event_id, cents, "
-            "percent_rank() OVER w AS pr, cume_dist() OVER w AS cd "
-            "FROM e WINDOW w AS (PARTITION BY event_type "
-            "ORDER BY cents, event_id)) "
-            "SELECT event_type, event_id, cents, pr, cd FROM r "
-            "WHERE event_id % 17 = 0 ORDER BY event_type, event_id"
-        ),
-        "twap": (
-            "WITH e AS (SELECT user_id, event_id, "
-            "cast(floor(epoch(ts)) as bigint) AS ep, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "d AS (SELECT user_id, cents, "
-            "lead(ep) OVER (PARTITION BY user_id "
-            "ORDER BY ep, event_id) - ep AS dt FROM e) "
-            "SELECT user_id, count(*) AS n, sum(cents * dt) AS num, "
-            "sum(dt) AS den, "
-            "CASE WHEN sum(dt) > 0 THEN sum(cents * dt) / sum(dt) END "
-            "AS twap "
-            "FROM d WHERE dt IS NOT NULL GROUP BY user_id "
-            "ORDER BY user_id"
-        ),
         "observe_metrics": (
             f"WITH {_pages_cte()} SELECT count(*) AS n_pages, "
             "min(lon) AS min_lon, max(lat) AS max_lat, "
             "sum(CASE WHEN lon IS NULL THEN 1 ELSE 0 END) AS n_nogeo "
             "FROM pages"
-        ),
-        "udtf_sentences": (
-            "WITH t AS (SELECT doc_id, string_split(text, '. ') AS p "
-            "FROM documents), "
-            "z AS (SELECT doc_id, p, unnest(generate_series(1, len(p))) "
-            "AS i FROM t) "
-            "SELECT doc_id, cast(i - 1 as int) AS idx, p[i] AS sentence "
-            "FROM z WHERE p[i] <> '' ORDER BY doc_id, idx"
-        ),
-        "variant_json": (
-            "SELECT event_type, count(*) AS n, "
-            "sum(cast(json_extract_string(props, '$.k') as int)) "
-            "AS sum_k, "
-            "min(cast(json_extract_string(props, '$.k') as int)) "
-            "AS min_k, "
-            "max(cast(json_extract_string(props, '$.k') as int)) "
-            "AS max_k "
-            "FROM events GROUP BY event_type ORDER BY event_type"
-        ),
-        "arrow_group_stats": (
-            "WITH px AS (SELECT doc_id % 8 AS tile, "
-            "(doc_id * 31 + i * 17) % 256 AS v FROM documents "
-            "CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS i) g), "
-            "h AS (SELECT tile, v, count(*) AS cnt FROM px "
-            "GROUP BY tile, v), "
-            "r AS (SELECT tile, v, cnt, row_number() OVER "
-            "(PARTITION BY tile ORDER BY cnt DESC, v) AS rn, "
-            "sum(cnt) OVER (PARTITION BY tile) AS n FROM h) "
-            "SELECT tile, v AS mode_v, cnt AS mode_n, n "
-            "FROM r WHERE rn = 1 ORDER BY tile"
         ),
         "grid_cluster": (
             f"WITH {_pages_cte()}, "
@@ -6464,39 +5060,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT comp AS cluster, count(*) AS n_cells, "
             "sum(n) AS n_points FROM r JOIN dense ON r.node = "
             "dense.cell GROUP BY comp ORDER BY cluster"
-        ),
-        "compaction_plan": (
-            "WITH f AS (SELECT source, doc_id, n_chars AS bytes, "
-            "sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id) "
-            "- n_chars AS cum_before FROM documents) "
-            "SELECT source, cast(floor(cum_before / 4096) as bigint) "
-            "AS bin, count(*) AS n_files, sum(bytes) AS bin_bytes, "
-            "min(doc_id) AS first_id, max(doc_id) AS last_id "
-            "FROM f GROUP BY source, bin ORDER BY source, bin"
-        ),
-        "simpson_diversity": (
-            "WITH d AS (SELECT source, lang, count(*) AS ni "
-            "FROM documents GROUP BY source, lang), "
-            "g AS (SELECT source, sum(ni) AS n_docs, "
-            "count(*) AS n_langs, sum(ni * (ni - 1)) AS num "
-            "FROM d GROUP BY source) "
-            "SELECT source, n_docs, n_langs, "
-            "CASE WHEN n_docs >= 2 THEN "
-            "1 - num / (n_docs * (n_docs - 1)) END AS simpson "
-            "FROM g ORDER BY source"
-        ),
-        "gini_concentration": (
-            "WITH c AS (SELECT event_type, user_id, count(*) AS cnt "
-            "FROM events GROUP BY event_type, user_id), "
-            "r AS (SELECT event_type, cnt, row_number() OVER "
-            "(PARTITION BY event_type ORDER BY cnt, user_id) AS i "
-            "FROM c), "
-            "g AS (SELECT event_type, count(*) AS n_users, "
-            "sum(cnt) AS sx, sum(i * cnt) AS six FROM r "
-            "GROUP BY event_type) "
-            "SELECT event_type, n_users, "
-            "(2 * six - (n_users + 1) * sx) / (n_users * sx) AS gini "
-            "FROM g ORDER BY event_type"
         ),
         "temporal_join": (
             "WITH log AS (SELECT user_id % 50 AS key, "
@@ -6520,16 +5083,6 @@ def oracle_sql() -> dict[str, str]:
             "AND f.ep >= d.valid_from "
             "AND (d.valid_to IS NULL OR f.ep < d.valid_to) "
             "ORDER BY f.event_id"
-        ),
-        "ntile_bins": (
-            "WITH e AS (SELECT event_type, event_id, "
-            "cast(floor(value * 100) as bigint) AS cents FROM events), "
-            "b AS (SELECT event_type, cents, ntile(8) OVER "
-            "(PARTITION BY event_type ORDER BY cents, event_id) AS bin "
-            "FROM e) "
-            "SELECT event_type, bin, count(*) AS n, "
-            "min(cents) AS min_c, max(cents) AS max_c "
-            "FROM b GROUP BY event_type, bin ORDER BY event_type, bin"
         ),
         "pmi_pairs": (
             r"WITH t AS (SELECT list_filter(string_split_regex("
@@ -6579,70 +5132,6 @@ def oracle_sql() -> dict[str, str]:
             "AND b_start <= a_start + 1800 "
             "GROUP BY b_id ORDER BY b_id"
         ),
-        "hist_eq": (
-            "WITH px AS (SELECT doc_id % 8 AS tile, "
-            "(doc_id * 31 + i * 17) % 256 AS v FROM documents "
-            "CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS i) g), "
-            "hist AS (SELECT tile, v, count(*) AS cnt FROM px "
-            "GROUP BY tile, v), "
-            "c AS (SELECT tile, v, cnt, "
-            "sum(cnt) OVER (PARTITION BY tile ORDER BY v) AS cdf, "
-            "sum(cnt) OVER (PARTITION BY tile) AS n FROM hist), "
-            "c2 AS (SELECT tile, v, cnt, cdf, n, "
-            "min(cdf) OVER (PARTITION BY tile) AS cdf_min FROM c) "
-            "SELECT tile, v, cnt, "
-            "cast(CASE WHEN n = cdf_min THEN 0 ELSE "
-            "floor((cdf - cdf_min) * 255 / (n - cdf_min)) END "
-            "as bigint) AS new_v "
-            "FROM c2 ORDER BY tile, v"
-        ),
-        "anomaly_mad": (
-            "WITH e AS (SELECT event_type, "
-            "cast(floor(value * 100) as bigint) AS y FROM events), "
-            "m AS (SELECT event_type, "
-            "cast(quantile_cont(y, 0.5) * 2 as bigint) AS m2 "
-            "FROM e GROUP BY event_type), "
-            "d AS (SELECT e.event_type, y, m2, abs(2 * y - m2) AS dev "
-            "FROM e JOIN m USING (event_type)), "
-            "md AS (SELECT event_type, "
-            "cast(quantile_cont(dev, 0.5) * 2 as bigint) AS mad2 "
-            "FROM d GROUP BY event_type) "
-            "SELECT d.event_type, count(*) AS n, max(m2) AS m2, "
-            "max(mad2) AS mad2, "
-            "sum(CASE WHEN 2 * dev > 3 * mad2 THEN 1 ELSE 0 END) "
-            "AS n_out FROM d JOIN md USING (event_type) "
-            "GROUP BY d.event_type ORDER BY d.event_type"
-        ),
-        # MERGE INTO resolution replayed over the same synth changes.
-        "merge_upsert": (
-            "WITH base AS (SELECT doc_id AS key, sha256(text) AS sig, "
-            "1 AS version FROM documents), "
-            "chg AS (SELECT doc_id AS key, sha256(text || '#v2') AS "
-            "sig, 2 AS version, 'u' AS op FROM documents "
-            "WHERE doc_id % 3 = 0 "
-            "UNION ALL SELECT doc_id + 10000, "
-            "sha256('new:' || cast(doc_id as varchar)), 2, 'i' "
-            "FROM documents WHERE doc_id % 11 = 0 "
-            "UNION ALL SELECT doc_id, NULL, 2, 'd' FROM documents "
-            "WHERE doc_id % 13 = 5), "
-            "j AS (SELECT b.key AS bkey, b.sig AS bsig, "
-            "b.version AS bver, c.key AS ckey, c.sig AS csig, "
-            "c.version AS cver, c.op FROM base b "
-            "FULL OUTER JOIN chg c ON b.key = c.key), "
-            "m AS (SELECT coalesce(ckey, bkey) AS key, "
-            "coalesce(csig, bsig) AS sig, "
-            "coalesce(cver, bver) AS version FROM j "
-            "WHERE op IS NULL OR op <> 'd') "
-            "SELECT "
-            "(SELECT count(*) FROM j WHERE op = 'u') AS n_updated, "
-            "(SELECT count(*) FROM j WHERE op = 'i') AS n_inserted, "
-            "(SELECT count(*) FROM j WHERE op = 'd' "
-            "AND bkey IS NOT NULL) AS n_deleted, "
-            "(SELECT count(*) FROM m) AS n_final, "
-            "(SELECT sha256(string_agg(cast(key as varchar) || '|' || "
-            "cast(version as varchar) || '|' || sig, ',' "
-            "ORDER BY key, version, sig)) FROM m) AS state_sha"
-        ),
         # BFS layers: 4 unrolled min-plus relaxations.
         "bfs_layers": _bfs_oracle_sql(),
         # Hygiene funnel: each stage's predicate lifted from its own
@@ -6686,21 +5175,6 @@ def oracle_sql() -> dict[str, str]:
             "list(doc_id ORDER BY doc_id), x -> cast(x as varchar)), "
             "',')) FROM s4) AS kept_sha"
         ),
-        # Polygon moments: shoelace with an index join.
-        "polygon_moments": (
-            "WITH v AS (SELECT doc_id, i, "
-            "(doc_id * 7 + i * 13) % 200 AS x, "
-            "(doc_id * 11 + i * 17) % 200 AS y "
-            "FROM documents, unnest(range(0, 6)) AS u(i)), "
-            "e AS (SELECT a.doc_id, "
-            "a.x * b.y - b.x * a.y AS cr, "
-            "(a.x + b.x) AS sx, (a.y + b.y) AS sy "
-            "FROM v a JOIN v b ON a.doc_id = b.doc_id "
-            "AND b.i = (a.i + 1) % 6) "
-            "SELECT doc_id, sum(cr) AS area2, "
-            "sum(sx * cr) AS cx_num, sum(sy * cr) AS cy_num "
-            "FROM e GROUP BY doc_id ORDER BY doc_id"
-        ),
         # HLL merge: both paths (halves-merged and whole) replayed.
         "hll_merge": (
             r"WITH toks AS (SELECT doc_id, source, unnest(list_filter("
@@ -6728,36 +5202,6 @@ def oracle_sql() -> dict[str, str]:
             "AS whole_sha FROM m GROUP BY source) "
             "SELECT source, merged_sha, whole_sha, "
             "merged_sha = whole_sha AS merge_ok FROM mg ORDER BY source"
-        ),
-        # Change detect: relational FULL OUTER rollup vs the cogroup.
-        "change_detect": (
-            "WITH e1 AS (SELECT doc_id % 10 AS tile, doc_id // 10 AS px,"
-            " (doc_id * doc_id) % 97 AS v FROM documents "
-            "WHERE doc_id % 7 <> 0), "
-            "e2 AS (SELECT doc_id % 10 AS tile, doc_id // 10 AS px, "
-            "(doc_id * 3 + 11) % 97 AS v FROM documents "
-            "WHERE doc_id % 5 <> 0), "
-            "j AS (SELECT coalesce(e1.tile, e2.tile) AS tile, "
-            "e1.v AS v1, e2.v AS v2 FROM e1 FULL OUTER JOIN e2 "
-            "ON e1.tile = e2.tile AND e1.px = e2.px) "
-            "SELECT tile, "
-            "sum(CASE WHEN v2 IS NULL THEN 1 ELSE 0 END) AS n_only1, "
-            "sum(CASE WHEN v1 IS NULL THEN 1 ELSE 0 END) AS n_only2, "
-            "sum(CASE WHEN v1 IS NOT NULL AND v2 IS NOT NULL "
-            "AND v1 <> v2 THEN 1 ELSE 0 END) AS n_changed, "
-            "sum(CASE WHEN v1 = v2 THEN 1 ELSE 0 END) AS n_same, "
-            "coalesce(sum(CASE WHEN v1 IS NOT NULL AND v2 IS NOT NULL "
-            "THEN abs(v1 - v2) END), 0) AS sum_abs "
-            "FROM j GROUP BY tile ORDER BY tile"
-        ),
-        # Star join: plain 3-way join rollup.
-        "star_join": (
-            "SELECT n_name, count(*) AS n_orders, "
-            "sum(cast(floor(o_totalprice * 100) as bigint)) "
-            "AS total_cents FROM orders "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation ON c_nationkey = n_nationkey "
-            "GROUP BY n_name ORDER BY n_name"
         ),
         # Exact quantiles: the naive full-sort plan.
         "dist_quantile": (

@@ -156,9 +156,7 @@ def main() -> None:
                   # long composed DAG (robots parse + 4 chained stages)
                   "hygiene_funnel",
                   # r5d iterative peel / CC-composed rows
-                  "kcore", "grid_cluster", "bfs_layers", "dag_layers",
-                  # write-then-read-back lakehouse semantics rows
-                  "dyn_overwrite", "nested_shred", "stream_upsert"}
+                  "kcore", "grid_cluster", "bfs_layers"}
     rep_walls: dict[str, list[float]] = {}
     if not os.environ.get("SPARK_GRAFT_BENCH_FLAGSHIP_ONLY"):
         battery_reps = int(os.environ.get("SPARK_GRAFT_BATTERY_REPS", "2"))

@@ -25,7 +25,6 @@ __all__ = [
     "polygon_area",
     "envelope",
     "envelopes_intersect",
-    "points_in_ring",
     "points_in_polygon",
     "does_cross_180",
     "wrap_geometry_180",
@@ -131,11 +130,6 @@ def _winding_number(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndar
     upward = (y0 <= py) & (y1 > py) & (cross > 0)
     downward = (y0 > py) & (y1 <= py) & (cross < 0)
     return (upward.sum(axis=1) - downward.sum(axis=1)).astype(np.int64)
-
-
-def points_in_ring(px, py, ring: np.ndarray) -> np.ndarray:
-    return _winding_number(np.asarray(px, dtype=np.float64),
-                           np.asarray(py, dtype=np.float64), ring) != 0
 
 
 def points_in_polygon(px, py, coords: np.ndarray, offsets: np.ndarray | None = None,

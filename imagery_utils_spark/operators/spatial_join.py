@@ -4,9 +4,8 @@ The reference's spatial join is an OGR index scan
 (``lyr.SetSpatialFilter(tile_geom)``, /root/reference/pgc_mosaic_query_index.py:261-301)
 followed by an exact ``Intersects`` refine (:315-322). Spark has no spatial
 index, so both sides are tagged with discrete-global-grid cells and the join
-becomes a plain equi-join Catalyst can plan (broadcast-hash for a small
-polygon side, sort-merge + AQE skew splitting otherwise), then an exact
-predicate removes cover false-positives.
+becomes a plain equi-join Catalyst plans as a broadcast-hash join of the
+small polygon side, then an exact predicate removes cover false-positives.
 
 Scale design (100 TB / 10^12 pages):
 * the point side is tagged with ONE cell per point by pure column arithmetic
@@ -112,18 +111,14 @@ def _cover_cols(res: int, xmin: str, ymin: str, xmax: str,
 
 
 def points_in_rects(points: DataFrame, rects: DataFrame, res: int,
-                    lon="lon", lat="lat", refine: bool = True,
-                    broadcast_rects: bool = True) -> DataFrame:
+                    lon="lon", lat="lat", refine: bool = True) -> DataFrame:
     """Inner join: every (point, rect) pair whose rect contains the point.
 
     Containment is closed on the lower/left edge and open on the upper/right
     (a partition for grid tiles — each point lands in exactly one tile).
     """
     pts = tag_points(points, res, lon, lat)
-    cov = cover_rects(rects, res)
-    if broadcast_rects:
-        cov = F.broadcast(cov)
-    joined = pts.join(cov, "cell")
+    joined = pts.join(F.broadcast(cover_rects(rects, res)), "cell")
     if refine:
         joined = joined.filter(
             (F.col(lon) >= F.col("xmin")) & (F.col(lon) < F.col("xmax"))
@@ -181,8 +176,7 @@ def polygons_to_rect_cover(polys: DataFrame, wkt_col: str = "geom_wkt") -> DataF
 
 
 def points_in_polygons(points: DataFrame, polys: DataFrame, res: int,
-                       lon="lon", lat="lat", wkt_col="geom_wkt",
-                       broadcast_polys: bool = True) -> DataFrame:
+                       lon="lon", lat="lat", wkt_col="geom_wkt") -> DataFrame:
     """Filter-and-refine point-in-polygon join (J1 + J2).
 
     1. polygons -> 180-split parts -> envelope rects -> cell cover (broadcast)
@@ -192,9 +186,7 @@ def points_in_polygons(points: DataFrame, polys: DataFrame, res: int,
        parsed once per batch, cached by wkt)
     """
     parts = polygons_to_rect_cover(polys, wkt_col)
-    cov = cover_rects(parts, res)
-    if broadcast_polys:
-        cov = F.broadcast(cov)
+    cov = F.broadcast(cover_rects(parts, res))
     pts = tag_points(points, res, lon, lat)
     cand = pts.join(cov, "cell").filter(_in_envelope(lon, lat))
 

@@ -49,7 +49,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
                order_cols: list[str] | None = None) -> DataFrame:
     """Per-user session ids: a new session starts when the gap since the
     previous event exceeds ``gap_minutes`` (batch formulation via window
-    functions; the streaming formulation would use session_window).
+    functions; the streaming formulation would use a session window).
     ``order_cols`` must be a total order for determinism under ts ties."""
     from pyspark.sql import Window
 

@@ -301,45 +301,6 @@ def test_hillshade_gather_is_single_shuffle_no_python(spark, sf_dir):
     assert "PythonUDF" not in body
 
 
-def test_partition_prune_resolves_at_file_listing(spark, sf_dir):
-    import __spark_entry__ as entry
-    df = entry.queries()["partition_prune"](spark, sf_dir)
-    plan = plan_of(df)
-    seg = plan.split("PartitionFilters")[1][:160]
-    assert "lang" in seg and "IN" in seg.upper()
-    # the pruned column never appears as a post-scan data filter
-    if "PushedFilters" in plan:
-        assert "lang" not in plan.split("PushedFilters")[1][:80]
-    # and never re-enters as a scan column (it lives in the dir layout)
-    assert "lang" not in plan.split("ReadSchema")[1].splitlines()[0]
-
-
-def test_bucketed_join_has_zero_exchange(spark, sf_dir):
-    import __spark_entry__ as entry
-    df = entry.queries()["bucketed_join"](spark, sf_dir)
-    body = df._jdf.queryExecution().executedPlan().toString()
-    join_part = body.split("SortMergeJoin")
-    assert len(join_part) >= 2, body[:400]
-    # no shuffle anywhere below the join: bucket metadata co-locates
-    # both sides; the only exchanges allowed are the post-join agg's
-    # and the final orderBy's
-    below = join_part[-1]
-    assert "Exchange" not in below
-    assert "SelectedBucketsCount" in body
-
-
-def test_star_join_broadcasts_both_dims(spark, sf_dir):
-    import __spark_entry__ as entry
-    df = entry.queries()["star_join"](spark, sf_dir)
-    body = df._jdf.queryExecution().executedPlan().toString()
-    assert body.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in body
-    # fact never shuffles on a join key: the only hash exchange is the
-    # final rollup's n_name aggregate
-    ex = [l for l in body.splitlines() if "Exchange hashpartitioning" in l]
-    assert all("n_name" in l for l in ex), ex
-
-
 def test_temporal_join_is_asof_window_not_interval_join(spark, sf_dir):
     import __spark_entry__ as E
 
@@ -374,57 +335,6 @@ def test_feature_hash_has_partial_aggregation(spark, sf_dir):
     assert "BatchEvalPython" not in plan  # zero Python in the hot path
 
 
-def test_compaction_plan_single_shuffle_on_source(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["compaction_plan"](spark, sf_dir)
-    plan = plan_of(df)
-    shuffles = {l.strip() for l in plan.splitlines()
-                if "Arguments" in l and "hashpartitioning(" in l}
-    # window + re-aggregation reuse the same source partitioning where
-    # possible; every shuffle must be keyed on source
-    assert shuffles and all("source" in s for s in shuffles), shuffles
-
-
-def test_hist_eq_collapses_before_window(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["hist_eq"](spark, sf_dir)
-    plan = plan_of(df)
-    # HashAggregate (the per-(tile,v) collapse) must appear BELOW the
-    # Window in the tree: text order lists Window above its child agg
-    assert "Window" in plan and "HashAggregate" in plan
-
-
-def test_dict_encode_joins_broadcast(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["dict_encode"](spark, sf_dir)
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
-    # the only hash shuffle allowed is the dictionary's own distinct
-    shuffles = [l for l in plan.splitlines()
-                if "Arguments" in l and "hashpartitioning(" in l]
-    assert all("source" in s for s in shuffles), shuffles
-
-
-def test_grouping_sets_is_single_expand(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["grouping_sets"](spark, sf_dir)
-    plan = plan_of(df)
-    assert plan.count("Expand") >= 1
-    assert "Union" not in plan  # not a 4-pass union rewrite
-
-
-def test_subquery_exists_decorrelates_to_semi_join(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["subquery_surface"](spark, sf_dir)
-    plan = plan_of(df)
-    assert "LeftSemi" in plan or "SemiJoin" in plan
-
-
 def test_salted_agg_two_phase_shuffles(spark, sf_dir):
     import __spark_entry__ as E
 
@@ -436,15 +346,6 @@ def test_salted_agg_two_phase_shuffles(spark, sf_dir):
     assert any("_salt" in s for s in shuffles), shuffles
     assert any("_salt" not in s and "source" in s for s in shuffles), \
         shuffles
-
-
-def test_presence_bitmap_partial_aggregation(spark, sf_dir):
-    import __spark_entry__ as E
-
-    df = E.queries()["presence_bitmap"](spark, sf_dir)
-    plan = plan_of(df)
-    assert "partial" in plan.lower()  # bit_or combines map-side
-    assert "BatchEvalPython" not in plan
 
 
 def test_geokeys_are_pure_jvm_projections(spark, sf_dir):

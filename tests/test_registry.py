@@ -17,6 +17,9 @@ stdlib ``ast`` only (no Spark session, no import of the module):
   behind for its tests alone;
 * every name in a package module's ``__all__`` is bound at that module's top
   level, so deleting a function cannot leave its name exported;
+* every public top-level function or class of a package module is named
+  somewhere in the repo's Python (an ``__all__`` string does not count), so
+  deleting a function's last caller cannot leave the function behind;
 * no package module calls Spark's ``decode``, which fails the whole query
   on one row of invalid UTF-8 (a cast to string wraps the bytes instead);
 * every backticked name in the battery column of a ``COVERAGE.md`` table is
@@ -236,6 +239,40 @@ def test_every_all_name_is_bound():
     assert stale == []
 
 
+def _named_anywhere():
+    """Every name the repo's Python loads, reads as an attribute or imports
+    with ``from ... import``."""
+    named = set()
+    for path in _python_files():
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                named |= {a.name for a in node.names}
+    return named
+
+
+def test_every_public_package_function_is_named():
+    named = _named_anywhere()
+    files = glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+    checked, unnamed = 0, []
+    for path in sorted(files):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) \
+                    and not stmt.name.startswith("_"):
+                checked += 1
+                if stmt.name not in named:
+                    unnamed.append(f"{os.path.relpath(path, REPO)}:{stmt.lineno}: {stmt.name}")
+    assert checked > 100, checked  # the scan must see the package
+    assert unnamed == []
+
+
 def _spark_decode_calls(path):
     """(lineno, text) of each use of ``pyspark.sql.functions.decode`` in a
     file: a call through a module alias, or an import of the name."""
@@ -353,24 +390,11 @@ def _rows_reaching_the_package(tree):
 
 
 # Rows that neither reach a package operator nor stand for a SURVEY §2
-# operator: statistics, SQL-surface and string exercises of Spark itself.
-# ROADMAP item 3 deletes them in later cuts of under ~10% of the tier-1 ids
-# each; the hash trio goes together with tests/test_hash_internals.py, which
-# pins its oracles. A new row must exercise the package to join the battery.
-OFF_PAPER_ROWS = {
-    "leakage_split", "cohort_retention", "rollup_counts", "pivot_counts",
-    "moving_window", "funnel_steps", "crawl_schedule", "cube_counts",
-    "partition_prune", "bucketed_join", "star_join", "change_detect",
-    "polygon_moments", "merge_upsert", "sql_surface", "session_window",
-    "schema_evolution", "jsonl_roundtrip", "anomaly_mad", "hist_eq",
-    "ntile_bins", "simpson_diversity", "gini_concentration", "compaction_plan",
-    "udtf_sentences", "variant_json", "arrow_group_stats", "unpivot_melt",
-    "rank_functions", "twap", "dag_layers", "presence_bitmap",
-    "embed_quantize", "log2_hist", "calendar_math", "dict_encode",
-    "grouping_sets", "subquery_surface", "range_frame", "set_ops",
-    "json_quarantine", "arrow_bytes", "dyn_overwrite", "nested_shred",
-    "hash_partition", "xxhash_shard", "crc32_digest",
-}
+# operator: the hash trio, whose murmur3/xxh64/crc oracles
+# tests/test_hash_internals.py pins. ROADMAP item 3 deletes the three rows
+# together with that test file. A new row must exercise the package to join
+# the battery.
+OFF_PAPER_ROWS = {"hash_partition", "xxhash_shard", "crc32_digest"}
 
 
 def test_every_row_exercises_the_package():
